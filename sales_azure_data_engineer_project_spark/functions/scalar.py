@@ -84,8 +84,11 @@ def dense_surrogate_key(
     NOTE: unlike a pure plan builder, this function runs TWO eager
     Spark jobs at call time (the checkpoint materialization and the
     P-row count collect) — the unavoidable price of the driver-side
-    prefix-sum.  Callers that only need a plan (EXPLAIN tooling)
-    still execute them.
+    prefix-sum.  Its callers pay them only where the delta can be
+    large: the initial load of ``dimensions.build_scd1_dimension``,
+    ``scd2`` and the ``queries_core`` dense-key query.  The incremental
+    SCD-1 build keys its small new-key delta with a single window
+    instead and stays lazy.
     """
     cols = [F.col(c) for c in order_cols]
     # Phase 1: range-partition and pin.  Rows with equal keys land in

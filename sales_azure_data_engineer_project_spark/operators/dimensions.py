@@ -22,17 +22,24 @@ reference's exact operator chain stays tested.
 Scale notes:
 - The semi/anti joins broadcast the *existing-dimension key set* when it
   is small, else shuffle on the natural key — Catalyst/AQE decides.
-- Surrogate assignment windows ONLY over the new-keys delta (small by
-  definition), never the full dimension.
+- The incremental build is a pure plan builder: it starts no Spark job.
+  The whole dimension — existing ∪ new ∪ vanished — is evaluated once,
+  by the action that commits it.
+- Incremental surrogate assignment is one ``row_number`` window over the
+  new-keys delta (small by definition), never the full dimension, offset
+  by an in-plan ``max`` over the sink.  The initial load, where the delta
+  is the whole dimension, keys with the two-phase ``dense_surrogate_key``
+  instead (two eager jobs, no single-reducer window).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
 
-from ..functions.scalar import dense_surrogate_key, next_key_offset
+from ..functions.scalar import dense_surrogate_key
 
 __all__ = ["DimensionSpec", "build_scd1_dimension"]
 
@@ -71,7 +78,8 @@ def build_scd1_dimension(
     Returns the full new dimension: existing rows keep their surrogate
     keys but take CURRENT attribute values from silver (SCD-1 update,
     reference behavior per hazard H3); new natural keys get dense keys
-    starting at max(existing)+1.
+    starting at max(existing)+1.  That already is the MERGE result, so
+    callers commit it as a snapshot (``VersionedTable.overwrite``).
     """
     nk = spec.nk_cols
     src = silver.select(*spec.natural_cols).distinct()  # P1
@@ -89,16 +97,19 @@ def build_scd1_dimension(
     # Incremental edge case, also reference parity: when a batch carries
     # a NEW attribute variant of a natural key that already exists in
     # the sink, the nk-join below hands both variants the sink's one
-    # surrogate, and the downstream merge aborts on the duplicate key —
-    # the same "multiple source rows matched" failure Delta's MERGE
-    # raises in the reference.  Fail-fast is the contract; callers that
-    # want collapse-to-one-variant semantics should pre-aggregate silver.
+    # surrogate, and the commit aborts on the duplicate key
+    # (``upsert.guard_unique`` in the write plan) — the same "multiple
+    # source rows matched" failure Delta's MERGE raises in the reference.
+    # Fail-fast is the contract; callers that want collapse-to-one-variant
+    # semantics should pre-aggregate silver.
     order_cols = spec.natural_cols
 
-    if sink is None or not sink.take(1):  # S9 tableExists branch
+    if sink is None:  # S9 tableExists branch: the table was never committed
         keyed = dense_surrogate_key(src, spec.key_col, order_cols, offset=0)
         return keyed.select(spec.key_col, *spec.natural_cols)
 
+    # A committed sink, possibly empty: every branch below is a lazy
+    # plan, and an empty sink simply keys every source row as new from 1.
     sink_keys = sink.select(spec.key_col, *nk)
 
     # Existing natural keys: surrogate from sink, attributes from src
@@ -107,12 +118,12 @@ def build_scd1_dimension(
         spec.key_col, *spec.natural_cols
     )
 
-    # New natural keys (== isNull branch :102): dense keys from max+1.
+    # New natural keys (== isNull branch :102): dense keys from max+1, in
+    # the order dense_surrogate_key uses (natural cols asc, nulls first).
     new = src.join(sink_keys, on=nk, how="left_anti")
-    offset = next_key_offset(sink, spec.key_col)
-    new_keyed = dense_surrogate_key(new, spec.key_col, order_cols, offset).select(
-        spec.key_col, *spec.natural_cols
-    )
+    offset = F.coalesce(sink.select(F.max(spec.key_col)).scalar(), F.lit(0))
+    new_key = F.row_number().over(Window.orderBy(*order_cols)) + offset
+    new_keyed = new.select(new_key.cast("long").alias(spec.key_col), *spec.natural_cols)
 
     # Keep sink rows whose natural key vanished from this batch's source:
     # MERGE never deletes (no whenNotMatchedBySource in the reference).

@@ -14,9 +14,12 @@ delta-spark is not on this classpath, so we implement the same
 - every non-matching target row is kept.
 
 Hazard H4 (SURVEY §4.3): Delta MERGE *fails* when multiple source rows
-match one target key.  We surface the same contract via
-``assert_unique`` (default on for dimensions, handled by pre-aggregation
-for facts).
+match one target key.  We surface the same contract two ways:
+``merge_upsert(assert_unique=True)`` checks eagerly, with one job before
+the merge plan is returned (the streaming writers), and ``guard_unique``
+checks inside the plan that writes the table, so the check costs no job
+of its own and a violation still fails the write before it is published
+(the gold tables).
 
 Scale notes:
 - The anti-join shuffles on the merge keys — unavoidable for a keyed
@@ -34,10 +37,18 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-__all__ = ["merge_upsert", "merge_write_parquet", "merge_write_partitioned"]
+__all__ = ["merge_upsert", "guard_unique", "merge_write_parquet", "merge_write_partitioned"]
+
+
+def _duplicate_keys_message(keys: list[str]) -> str:
+    return (
+        f"merge source has duplicate merge keys {keys}; Delta MERGE "
+        "would raise 'multiple source rows matched' (SURVEY H4). "
+        "Aggregate to the merge grain first."
+    )
 
 
 def merge_upsert(
@@ -67,11 +78,7 @@ def merge_upsert(
             .count()
         )
         if dup:
-            raise ValueError(
-                f"merge source has duplicate merge keys {keys}; Delta MERGE "
-                "would raise 'multiple source rows matched' (SURVEY H4). "
-                "Aggregate to the merge grain first."
-            )
+            raise ValueError(_duplicate_keys_message(keys))
     if target is None:
         return source
     if evolve_schema:
@@ -81,6 +88,25 @@ def merge_upsert(
         source = source.select(*target.columns)  # align column order (H7)
     kept = target.join(source.select(*keys), on=keys, how="left_anti")
     return source.unionByName(kept)
+
+
+def guard_unique(df: DataFrame, keys: list[str]) -> DataFrame:
+    """``df`` unchanged, but evaluating it raises if two rows share
+    ``keys`` — the lazy twin of ``merge_upsert(assert_unique=True)``.
+
+    The check is a per-key count window under a filter whose only
+    false branch is ``raise_error``, so it runs inside whatever action
+    evaluates ``df`` (the commit's write) instead of as a job of its
+    own.  On a frame already hash-partitioned on ``keys`` (an aggregate
+    to the merge grain) the window adds no exchange.
+    """
+    n = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    fail = F.raise_error(F.lit(_duplicate_keys_message(keys)))
+    return (
+        df.withColumn("__n", n)
+        .filter(F.when(F.col("__n") > 1, fail).otherwise(F.lit(True)))
+        .drop("__n")
+    )
 
 
 def _align_evolved(df: DataFrame, other: DataFrame) -> DataFrame:

@@ -5,6 +5,8 @@ Layout:
 
     table_root/
       v=1/  v=2/  ...      immutable version directories (parquet)
+        _schema.json        the committed frame's schema (read without inference)
+        _manifest.json      optional per-file min/max (``stats_columns``)
       _VERSION              text file holding the current version number
 
 Writers stage a full new version directory, then flip ``_VERSION`` with
@@ -23,14 +25,18 @@ retention knob.
 
 from __future__ import annotations
 
+import json
 import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-from .upsert import merge_upsert
+from .upsert import guard_unique, merge_upsert
 
 __all__ = ["VersionedTable", "ConcurrentWriteError"]
+
+_SCHEMA = "_schema.json"
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -58,11 +64,25 @@ class VersionedTable:
         return os.path.join(self.root, f"v={version}")
 
     def read(self, version: int | None = None) -> DataFrame | None:
-        """Current snapshot, or time-travel to ``version``."""
+        """Current snapshot, or time-travel to ``version``.  A pure plan
+        builder: the schema committed with the version replaces parquet
+        schema inference, which would run a Spark job per read."""
         v = self.current_version() if version is None else version
         if v <= 0 or not os.path.isdir(self._vdir(v)):
             return None
-        return self.spark.read.parquet(self._vdir(v))
+        return self._scan(self._vdir(v))
+
+    def _scan(self, vdir: str) -> DataFrame:
+        """Parquet scan of a version directory with its committed schema;
+        versions committed before the schema file existed fall back to
+        inference."""
+        reader = self.spark.read
+        try:
+            with open(os.path.join(vdir, _SCHEMA)) as f:
+                reader = reader.schema(StructType.fromJson(json.load(f)))
+        except FileNotFoundError:
+            pass
+        return reader.parquet(vdir)
 
     def _commit(
         self,
@@ -144,6 +164,9 @@ class VersionedTable:
                 from .skipping import write_manifest
 
                 write_manifest(staged, stats_columns)
+            # the schema publishes with the data, by the same rename
+            with open(os.path.join(staged, _SCHEMA), "w") as f:
+                f.write(df.schema.json())
         except BaseException:
             import shutil
 
@@ -174,15 +197,20 @@ class VersionedTable:
         self,
         df: DataFrame,
         *,
+        base_version: int | None = None,
         stats_columns: list[str] | None = None,
         zorder: list[str] | None = None,
     ) -> int:
-        """Commit a full snapshot.  ``stats_columns`` records per-file
+        """Commit a full snapshot.  ``base_version`` is the version the
+        caller derived ``df`` from (conflict detection, as in ``merge``).
+        ``stats_columns`` records per-file
         min/max in a version-local manifest (file-skipping reads via
         ``read_where``); ``zorder`` additionally re-clusters the data on
         the interleaved z-value of those columns first so skipping works
         on every listed column."""
-        return self._commit(df, stats_columns=stats_columns, zorder=zorder)
+        return self._commit(
+            df, base_version=base_version, stats_columns=stats_columns, zorder=zorder
+        )
 
     def read_where(self, col: str, lo, hi, version: int | None = None) -> DataFrame | None:
         """Range scan of a snapshot that opens only the files whose
@@ -196,17 +224,20 @@ class VersionedTable:
         if v <= 0 or not os.path.isdir(self._vdir(v)):
             return None
         if read_manifest(self._vdir(v)) is None:
-            return self.spark.read.parquet(self._vdir(v)).filter(
-                F.col(col).between(lo, hi)
-            )
+            return self._scan(self._vdir(v)).filter(F.col(col).between(lo, hi))
         return read_pruned(self.spark, self._vdir(v), col, lo, hi)
 
     def merge(self, source: DataFrame, keys: list[str], *, assert_unique: bool = True) -> int:
         """SCD-1 MERGE as a new committed version, with optimistic
-        conflict detection against the version the merge read."""
+        conflict detection against the version the merge read.
+        ``assert_unique`` checks the source's keys inside the write plan
+        (``guard_unique``): a duplicate fails the write, so no version is
+        published, and no separate job runs before it."""
         base = self.current_version()
-        target = self.read()
-        merged = merge_upsert(target, source, keys, assert_unique=assert_unique)
+        target = self.read(base)
+        if assert_unique:
+            source = guard_unique(source, keys)
+        merged = merge_upsert(target, source, keys, assert_unique=False)
         return self._commit(merged, base_version=base)
 
     def diff(self, from_version: int, to_version: int | None = None):

@@ -8,8 +8,8 @@ incremental loads idempotently.
 The reference parameterizes runs with a Databricks widget
 (`3(1)_Gold_dim_model.py:13-18` ``Incremental_Flag``); here run mode is
 inferred from sink existence (S9 ``tableExists``) — the flag's only
-real effect, key seeding, is subsumed by ``next_key_offset`` which is
-correct in both modes (hazard H2).
+real effect, key seeding, is subsumed by seeding new keys from the
+sink's max key, which is correct in both modes (hazard H2).
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ from ..io import read_csv, read_parquet, write_parquet
 from ..operators.dimensions import DimensionSpec, build_scd1_dimension
 from ..operators.fact import aggregate_to_grain
 from ..operators.fact import build_fact as assemble_fact
-from ..operators.upsert import merge_write_parquet
+from ..operators.upsert import guard_unique
 from ..operators.versioned import VersionedTable
 from ..schemas import RAW_SALES_SCHEMA
 
@@ -86,16 +86,21 @@ class SalesPipeline:
 
     - silver is hive-partitioned on ``Year`` so calendar-filtered scans
       prune whole directories (the first-order optimization at scale).
-    - gold tables are :class:`VersionedTable`s by default: every MERGE
-      is an atomic versioned commit (Delta-``_delta_log`` semantics —
-      readers see old or new, never partial; history queryable).
-      ``versioned=False`` falls back to the directory-swap writer.
+    - gold tables are :class:`VersionedTable`s: every commit is an
+      atomic versioned commit (Delta-``_delta_log`` semantics — readers
+      see old or new, never partial; history queryable).
+    - each gold table's plan is evaluated once per batch, by its commit.
+      A dimension is committed as the snapshot ``build_scd1_dimension``
+      returns (it already is the SCD-1 MERGE result); the fact is
+      merged on its grain.  The duplicate-key check runs inside each
+      commit's write, so a violation fails that commit and publishes
+      nothing.  Later stages read the committed versions, which start
+      no Spark job before their own write.
     """
 
-    def __init__(self, spark: SparkSession, root: str, *, versioned: bool = True):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.versioned = versioned
         self.bronze = os.path.join(root, "bronze")
         self.silver = os.path.join(root, "silver", "carsales")
         self.gold = os.path.join(root, "gold")
@@ -110,18 +115,7 @@ class SalesPipeline:
         return VersionedTable(self.spark, self.gold_path(table))
 
     def read_gold(self, table: str, version: int | None = None) -> DataFrame | None:
-        if self.versioned:
-            return self.gold_table(table).read(version)
-        p = self.gold_path(table)
-        if os.path.isdir(p):
-            return self.spark.read.parquet(p)
-        return None
-
-    def _write_gold(self, df: DataFrame, table: str, keys: list[str]) -> None:
-        if self.versioned:
-            self.gold_table(table).merge(df, keys)
-        else:
-            merge_write_parquet(self.spark, df, self.gold_path(table), keys=keys)
+        return self.gold_table(table).read(version)
 
     # -- stages -----------------------------------------------------------
     def ingest_bronze(self, csv_path: str) -> DataFrame:
@@ -138,10 +132,11 @@ class SalesPipeline:
     def build_dimensions(self, silver: DataFrame) -> dict[str, DataFrame]:
         dims: dict[str, DataFrame] = {}
         for name, spec in DIM_SPECS.items():
-            sink = self.read_gold(name)
-            dim = build_scd1_dimension(silver, sink, spec)
-            self._write_gold(dim, name, keys=[spec.key_col])
-            dims[name] = self.read_gold(name)
+            table = self.gold_table(name)
+            base = table.current_version()
+            dim = build_scd1_dimension(silver, table.read(base), spec)
+            new_v = table.overwrite(guard_unique(dim, [spec.key_col]), base_version=base)
+            dims[name] = table.read(new_v)
         return dims
 
     def build_fact(self, silver: DataFrame, dims: dict[str, DataFrame]) -> DataFrame:
@@ -149,20 +144,18 @@ class SalesPipeline:
             silver, {n: (df, DIM_SPECS[n]) for n, df in dims.items()}
         )
         fact = aggregate_to_grain(fact, FACT_GRAIN)
-        self._write_gold(fact, "factsales", keys=FACT_GRAIN)
-        return self.read_gold("factsales")
+        table = self.gold_table("factsales")
+        return table.read(table.merge(fact, keys=FACT_GRAIN))
 
     def run(self, csv_path: str) -> dict[str, DataFrame]:
         """One full load (initial or incremental — same code path)."""
         self.ingest_bronze(csv_path)
         silver = self.build_silver()
         dims = self.build_dimensions(silver)
-        fact = self.build_fact(silver, dims)
-        for t in [*dims, "factsales"]:  # S3: SQL-addressable gold
-            self.read_gold(t).createOrReplaceTempView(
-                self.catalog.view_name("gold", t)
-            )
-        return {**dims, "factsales": fact, "silver": silver}
+        gold = {**dims, "factsales": self.build_fact(silver, dims)}
+        for t, df in gold.items():  # S3: SQL-addressable gold
+            df.createOrReplaceTempView(self.catalog.view_name("gold", t))
+        return {**gold, "silver": silver}
 
     # -- data-quality surface ---------------------------------------------
     def quality_report(self) -> dict[str, dict[str, int]]:

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -22,6 +23,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_smoke() -> str:
     return SF_SMOKE
+
+
+def count_jobs(spark, fn):
+    """``(fn(), number of Spark jobs fn started)``, read back from the
+    status tracker under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def write_sales_csv(path: str, rows: list[str], bom: bool = True) -> str:

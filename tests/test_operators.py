@@ -74,6 +74,32 @@ def test_scd1_dimension_initial_and_incremental(spark):
     got2 = {r["nk"]: (r["dim_x_key"], r["attr"]) for r in d2.collect()}
     assert got2 == {"a": (1, "A2"), "b": (2, "B"), "c": (3, "C")}
 
+    # a committed but empty sink takes the incremental path: keys from 1
+    empty = spark.createDataFrame([], "dim_x_key long, nk string, attr string")
+    d3 = build_scd1_dimension(s2, empty, spec)
+    got3 = {r["nk"]: (r["dim_x_key"], r["attr"]) for r in d3.collect()}
+    assert got3 == {"a": (1, "A2"), "c": (2, "C")}
+
+
+def test_incremental_dimension_and_gold_read_start_no_job(spark, tmp_path):
+    """Over a committed, non-empty sink, reading the snapshot and
+    building the next dimension are pure plan builders: the dimension's
+    plan runs once, in the commit that writes it."""
+    from conftest import count_jobs
+
+    from sales_azure_data_engineer_project_spark.operators.versioned import VersionedTable
+
+    spec = DimensionSpec("dim_x", "dim_x_key", "nk", ("attr",))
+    table = VersionedTable(spark, str(tmp_path / "dim_x"))
+    s1 = spark.createDataFrame([("b", "B"), ("a", "A")], ["nk", "attr"])
+    table.overwrite(build_scd1_dimension(s1, None, spec))
+    s2 = spark.createDataFrame([("a", "A2"), ("c", "C")], ["nk", "attr"])
+
+    dim, jobs = count_jobs(spark, lambda: build_scd1_dimension(s2, table.read(), spec))
+    assert jobs == 0
+    got = {r["nk"]: (r["dim_x_key"], r["attr"]) for r in dim.collect()}
+    assert got == {"a": (1, "A2"), "b": (2, "B"), "c": (3, "C")}
+
 
 def test_scd1_dimension_keys_dense_unique(spark):
     spec = DimensionSpec("d", "key", "nk", ())

@@ -4,7 +4,8 @@ from __future__ import annotations
 
 import os
 
-from conftest import INCREMENTAL_ROWS, INITIAL_ROWS, write_sales_csv
+import pytest
+from conftest import INCREMENTAL_ROWS, INITIAL_ROWS, count_jobs, write_sales_csv
 
 from sales_azure_data_engineer_project_spark.plans import SalesPipeline, transform_silver
 
@@ -125,3 +126,46 @@ def test_silver_partition_pruning(spark, tmp_path):
     plan = scan._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "Year" in plan.split("PartitionFilters")[1][:80]
     assert scan.count() == 3
+
+
+def test_new_attribute_variant_of_existing_key_aborts_the_commit(spark, tmp_path):
+    """Two DealerName variants of a Dealer_ID already in dim_dealer map
+    to its one surrogate key: the batch fails loudly (Delta's "multiple
+    source rows matched"), dim_dealer publishes no version and no staged
+    directory is left behind."""
+    init = write_sales_csv(str(tmp_path / "init.csv"), INITIAL_ROWS)
+    variants = write_sales_csv(str(tmp_path / "variants.csv"), [
+        "BR0001,DLR0001,BMW-M1,1000,1,DT00001,1,1,2017,Chandler BMW,Chandler Motors,M1",
+        "BR0002,DLR0001,BMW-M2,2000,1,DT00002,2,1,2017,Mesa BMW,Chandler Motors II,M2",
+    ])
+    pipe = SalesPipeline(spark, str(tmp_path / "zones"))
+    pipe.run(init)
+    dealer = pipe.gold_table("dim_dealer")
+    v_before = dealer.current_version()
+
+    with pytest.raises(Exception, match="multiple source rows"):
+        pipe.run(variants)
+
+    assert dealer.current_version() == v_before
+    leftovers = [
+        name
+        for table in os.listdir(pipe.gold)
+        for name in os.listdir(pipe.gold_path(table))
+        if name.startswith("._staged_")
+    ]
+    assert leftovers == []
+
+
+# Jobs one incremental batch of the fixtures starts (measured: 70):
+# five dimension commits, the fact merge, bronze and silver.  Every gold
+# table's plan runs once, in its commit; the margin absorbs AQE re-planning.
+INCREMENTAL_RUN_JOB_BUDGET = 75
+
+
+def test_incremental_run_job_budget(spark, tmp_path):
+    init = write_sales_csv(str(tmp_path / "init.csv"), INITIAL_ROWS)
+    incr = write_sales_csv(str(tmp_path / "incr.csv"), INCREMENTAL_ROWS)
+    pipe = SalesPipeline(spark, str(tmp_path / "zones"))
+    pipe.run(init)
+    _, jobs = count_jobs(spark, lambda: pipe.run(incr))
+    assert jobs <= INCREMENTAL_RUN_JOB_BUDGET
