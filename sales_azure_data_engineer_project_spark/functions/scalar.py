@@ -87,8 +87,8 @@ def dense_surrogate_key(
     prefix-sum.  Its callers pay them only where the delta can be
     large: the initial load of ``dimensions.build_scd1_dimension``,
     ``scd2`` and the ``queries_core`` dense-key query.  The incremental
-    SCD-1 build keys its small new-key delta with a single window
-    instead and stays lazy.
+    SCD-1 build keys its new rows in the one single-partition window it
+    runs over the (broadcast-sized) dimension instead, and stays lazy.
     """
     cols = [F.col(c) for c in order_cols]
     # Phase 1: range-partition and pin.  Rows with equal keys land in

@@ -33,13 +33,18 @@ __all__ = [
 ]
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+def read_parquet(spark: SparkSession, path: str, schema=None) -> DataFrame:
     """S1: parquet directory scan (`2_Silver_Notebook.py:7-9`).
 
     The reference passes ``inferSchema`` — a no-op for self-describing
-    Parquet (hazard H6); we drop it.
+    Parquet (hazard H6); we drop it.  Without ``schema`` Spark infers it
+    from the files' footers, which runs a job; a caller that wrote the
+    directory passes the schema it reads back as instead.
     """
-    return spark.read.parquet(path)
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(path)
 
 
 def read_csv(spark: SparkSession, path: str, schema=None) -> DataFrame:

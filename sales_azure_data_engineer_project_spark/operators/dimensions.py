@@ -12,24 +12,37 @@ each) that each do:
   6. union old+new                                          (:146, U1/H7)
   7. Delta MERGE or initial saveAsTable                     (:163-176, S7/S6)
 
-This module is the idiomatic-Spark generalization: one parameterized
-function, left_semi/left_anti instead of the hand-rolled join+null-split,
-dense deterministic ``row_number`` surrogate keys (hazard H2), and
-``unionByName`` (hazard H7).  The hand-rolled variant is preserved in
-``queries_core`` as an oracle-checked query so parity with the
-reference's exact operator chain stays tested.
+This module is the idiomatic-Spark generalization, one parameterized
+function whose incremental branch takes three steps:
+
+  a. DISTINCT-project natural key + attributes from silver (step 1)
+  b. FULL OUTER JOIN source→sink on the natural key: existing ∪ new ∪
+     vanished in one join, with no null-split and no union (steps 2-4, 6)
+  c. one window keys the new rows densely from max(existing)+1, in
+     natural-column order (step 5; hazard H2)
+
+and leaves step 7 to the caller, which commits the result as a
+snapshot.  The hand-rolled variant is preserved in ``queries_core`` as
+an oracle-checked query so parity with the reference's exact operator
+chain stays tested.
 
 Scale notes:
-- The semi/anti joins broadcast the *existing-dimension key set* when it
-  is small, else shuffle on the natural key — Catalyst/AQE decides.
 - The incremental build is a pure plan builder: it starts no Spark job.
   The whole dimension — existing ∪ new ∪ vanished — is evaluated once,
-  by the action that commits it.
-- Incremental surrogate assignment is one ``row_number`` window over the
-  new-keys delta (small by definition), never the full dimension, offset
-  by an in-plan ``max`` over the sink.  The initial load, where the delta
-  is the whole dimension, keys with the two-phase ``dense_surrogate_key``
-  instead (two eager jobs, no single-reducer window).
+  by the action that commits it, from one scan of silver and one scan
+  of the sink joined by one full outer join on the natural key
+  (shuffled on that key: a full outer join cannot broadcast).
+- The key offset (the sink's max key) and the running count of new
+  rows come from one un-partitioned window, so every row of the
+  resulting dimension — existing, new and vanished — passes through a
+  single partition.  That assumes a dimension fits the broadcast
+  threshold, the same assumption ``fact.build_fact`` makes when it
+  broadcasts every dimension.  The commit's key-uniqueness window
+  (``upsert.guard_unique``) then needs no exchange of its own: a single
+  partition already holds each key's rows together.
+- The initial load, where the delta is the whole dimension and may be
+  large, keys with the two-phase ``dense_surrogate_key`` instead (two
+  eager jobs, no single-reducer window).
 """
 
 from __future__ import annotations
@@ -101,33 +114,51 @@ def build_scd1_dimension(
     # (``upsert.guard_unique`` in the write plan) — the same "multiple
     # source rows matched" failure Delta's MERGE raises in the reference.
     # Fail-fast is the contract; callers that want collapse-to-one-variant
-    # semantics should pre-aggregate silver.
+    # semantics should pre-aggregate silver.  The converse — a sink
+    # holding several keys for one natural key (initial-load variants)
+    # and a batch with one variant — keeps every key, each taking the
+    # batch's attributes.
     order_cols = spec.natural_cols
 
     if sink is None:  # S9 tableExists branch: the table was never committed
         keyed = dense_surrogate_key(src, spec.key_col, order_cols, offset=0)
         return keyed.select(spec.key_col, *spec.natural_cols)
 
-    # A committed sink, possibly empty: every branch below is a lazy
-    # plan, and an empty sink simply keys every source row as new from 1.
-    sink_keys = sink.select(spec.key_col, *nk)
-
-    # Existing natural keys: surrogate from sink, attributes from src
-    # (== reference's isNotNull branch :92 + whenMatchedUpdateAll :167).
-    existing = src.join(sink_keys, on=nk, how="inner").select(
-        spec.key_col, *spec.natural_cols
+    # A committed sink, possibly empty: the rest is one lazy plan.  The
+    # full outer join on the natural key yields existing (both sides),
+    # new (source only) and vanished (sink only — MERGE never deletes,
+    # no whenNotMatchedBySource in the reference) rows at once.  Null
+    # natural keys never match, as in the reference's join.
+    in_src = "__in_src"
+    sink_attr = {a: f"__sink_{a}" for a in spec.attrs}
+    joined = src.withColumn(in_src, F.lit(True)).join(
+        sink.select(
+            spec.key_col, *nk, *(F.col(a).alias(sink_attr[a]) for a in spec.attrs)
+        ),
+        on=nk,
+        how="full",
     )
-
-    # New natural keys (== isNull branch :102): dense keys from max+1, in
-    # the order dense_surrogate_key uses (natural cols asc, nulls first).
-    new = src.join(sink_keys, on=nk, how="left_anti")
-    offset = F.coalesce(sink.select(F.max(spec.key_col)).scalar(), F.lit(0))
-    new_key = F.row_number().over(Window.orderBy(*order_cols)) + offset
-    new_keyed = new.select(new_key.cast("long").alias(spec.key_col), *spec.natural_cols)
-
-    # Keep sink rows whose natural key vanished from this batch's source:
-    # MERGE never deletes (no whenNotMatchedBySource in the reference).
-    vanished = sink.join(src.select(*nk), on=nk, how="left_anti")
-    vanished = vanished.select(spec.key_col, *spec.natural_cols)
-
-    return existing.unionByName(new_keyed).unionByName(vanished)  # U1, H7
+    # Attributes come from the source row when there is one (SCD-1
+    # update, whenMatchedUpdateAll :167), otherwise from the sink.
+    from_src = F.col(in_src).isNotNull()
+    joined = joined.select(
+        spec.key_col,
+        *nk,
+        *(F.when(from_src, F.col(a)).otherwise(F.col(sink_attr[a])).alias(a)
+          for a in spec.attrs),
+    )
+    # New natural keys (no sink key) get max(sink key) plus a running
+    # count of new rows in natural-column order (asc, nulls first, as in
+    # dense_surrogate_key).  Both come from the same un-partitioned
+    # window; an empty sink keys from 1.
+    is_new = F.col(spec.key_col).isNull()
+    w = Window.orderBy(*order_cols)
+    offset = F.max(spec.key_col).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
+    n_new = F.sum(is_new.cast("long")).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    new_key = F.coalesce(offset, F.lit(0)) + n_new
+    key = F.when(is_new, new_key).otherwise(F.col(spec.key_col))
+    return joined.select(key.cast("long").alias(spec.key_col), *spec.natural_cols)

@@ -6,25 +6,29 @@ whenNotMatchedInsertAll``; `4_Gold_fact_sales_table.py:68-74`).
 delta-spark is not on this classpath, so we implement the same
 *semantics* relationally and commit with an atomic directory swap:
 
-    merged = source ∪ (target ⟕anti source on merge keys)
+    merged = σ_keep(source ∪ target), one window partitioned by the merge keys
 
 - every target row whose key matches a source row is replaced by the
   source row (== whenMatchedUpdateAll),
 - every non-matching source row is appended (== whenNotMatchedInsertAll),
-- every non-matching target row is kept.
+- every non-matching target row is kept.  A key with a NULL column never
+  matches, exactly as in an equi-join, so such target rows are kept too.
 
 Hazard H4 (SURVEY §4.3): Delta MERGE *fails* when multiple source rows
-match one target key.  We surface the same contract two ways:
-``merge_upsert(assert_unique=True)`` checks eagerly, with one job before
-the merge plan is returned (the streaming writers), and ``guard_unique``
-checks inside the plan that writes the table, so the check costs no job
-of its own and a violation still fails the write before it is published
-(the gold tables).
+match one target key.  The merge window counts the source rows of each
+key, and a count of two or more hits ``raise_error`` in that same
+window: the action that writes the merge result fails before anything
+is published, at no job of its own.  ``guard_unique`` is the same check
+for a frame with no target (an initial load, a snapshot commit).
+``merge_upsert(assert_unique=True)`` additionally checks eagerly, with
+one job before the merge plan is returned, so the streaming writers
+fail before they stage anything.
 
 Scale notes:
-- The anti-join shuffles on the merge keys — unavoidable for a keyed
-  upsert; at cluster scale target AND source should be bucketed on the
-  merge keys so the anti-join is shuffle-free.  Delta/Iceberg would add
+- The source plan is evaluated once: source and target are unioned and
+  shuffled once on the merge keys, then one sorted window decides every
+  row.  At cluster scale, target AND source should be bucketed on the
+  merge keys so that shuffle disappears.  Delta/Iceberg would add
   file-level pruning; the relational core is identical.
 - The swap rewrites the whole table.  That is also what Delta MERGE does
   in the worst case (all files touched); partition the gold table on a
@@ -62,7 +66,11 @@ def merge_upsert(
     """Relational SCD-1 merge: source wins on key match, others kept.
 
     ``target=None`` means initial load (`tableExists` false branch,
-    `3(1)_Gold_dim_model.py:171-176`): result is just the source.
+    `3(1)_Gold_dim_model.py:171-176`): the result is the source rows.
+
+    Either way, evaluating the result raises if two source rows share
+    ``keys`` (inside the plan); ``assert_unique`` also checks eagerly,
+    before the plan is returned.
 
     ``evolve_schema=True`` = Delta's ``mergeSchema``/autoMerge: columns
     new in the source are added to the table (NULL for untouched target
@@ -80,33 +88,48 @@ def merge_upsert(
         if dup:
             raise ValueError(_duplicate_keys_message(keys))
     if target is None:
-        return source
+        return guard_unique(source, keys)
     if evolve_schema:
         source = _align_evolved(source, target)
         target = _align_evolved(target, source)
     else:
         source = source.select(*target.columns)  # align column order (H7)
-    kept = target.join(source.select(*keys), on=keys, how="left_anti")
-    return source.unionByName(kept)
+    return _merge_window(
+        source.withColumn("__src", F.lit(1)).unionByName(
+            target.withColumn("__src", F.lit(0))
+        ),
+        keys,
+    )
 
 
 def guard_unique(df: DataFrame, keys: list[str]) -> DataFrame:
     """``df`` unchanged, but evaluating it raises if two rows share
-    ``keys`` — the lazy twin of ``merge_upsert(assert_unique=True)``.
+    ``keys``: the merge window with no target to merge into.
 
-    The check is a per-key count window under a filter whose only
-    false branch is ``raise_error``, so it runs inside whatever action
-    evaluates ``df`` (the commit's write) instead of as a job of its
-    own.  On a frame already hash-partitioned on ``keys`` (an aggregate
-    to the merge grain) the window adds no exchange.
+    The check runs inside whatever action evaluates ``df`` (the
+    commit's write) instead of as a job of its own.  On a frame already
+    partitioned on ``keys`` (an aggregate to the merge grain, or a
+    single partition) the window adds no exchange.
     """
-    n = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    return _merge_window(df.withColumn("__src", F.lit(1)), keys)
+
+
+def _merge_window(rows: DataFrame, keys: list[str]) -> DataFrame:
+    """Source rows (``__src`` = 1) and target rows (0) decided per key
+    by one window: two or more source rows raise; a source row
+    survives; a target row survives unless a source row matches its
+    key, and a key with a NULL column matches nothing."""
+    n_src = F.sum("__src").over(Window.partitionBy(*keys))
+    unmatched = F.col("__n_src") == 0
+    for k in keys:
+        unmatched = unmatched | F.col(k).isNull()
     fail = F.raise_error(F.lit(_duplicate_keys_message(keys)))
-    return (
-        df.withColumn("__n", n)
-        .filter(F.when(F.col("__n") > 1, fail).otherwise(F.lit(True)))
-        .drop("__n")
+    keep = (
+        F.when(F.col("__n_src") > 1, fail)
+        .when(F.col("__src") == 1, F.lit(True))
+        .otherwise(unmatched)
     )
+    return rows.withColumn("__n_src", n_src).filter(keep).drop("__src", "__n_src")
 
 
 def _align_evolved(df: DataFrame, other: DataFrame) -> DataFrame:

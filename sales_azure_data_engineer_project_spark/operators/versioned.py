@@ -32,7 +32,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from .upsert import guard_unique, merge_upsert
+from .upsert import merge_upsert
 
 __all__ = ["VersionedTable", "ConcurrentWriteError"]
 
@@ -227,17 +227,14 @@ class VersionedTable:
             return self._scan(self._vdir(v)).filter(F.col(col).between(lo, hi))
         return read_pruned(self.spark, self._vdir(v), col, lo, hi)
 
-    def merge(self, source: DataFrame, keys: list[str], *, assert_unique: bool = True) -> int:
+    def merge(self, source: DataFrame, keys: list[str]) -> int:
         """SCD-1 MERGE as a new committed version, with optimistic
-        conflict detection against the version the merge read.
-        ``assert_unique`` checks the source's keys inside the write plan
-        (``guard_unique``): a duplicate fails the write, so no version is
-        published, and no separate job runs before it."""
+        conflict detection against the version the merge read.  The
+        merged plan (``merge_upsert``) evaluates ``source`` once and
+        checks its keys in the same window: a duplicate fails the write,
+        so no version is published, and no separate job runs before it."""
         base = self.current_version()
-        target = self.read(base)
-        if assert_unique:
-            source = guard_unique(source, keys)
-        merged = merge_upsert(target, source, keys, assert_unique=False)
+        merged = merge_upsert(self.read(base), source, keys, assert_unique=False)
         return self._commit(merged, base_version=base)
 
     def diff(self, from_version: int, to_version: int | None = None):

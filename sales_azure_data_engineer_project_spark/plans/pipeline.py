@@ -27,7 +27,7 @@ from ..operators.fact import aggregate_to_grain
 from ..operators.fact import build_fact as assemble_fact
 from ..operators.upsert import guard_unique
 from ..operators.versioned import VersionedTable
-from ..schemas import RAW_SALES_SCHEMA
+from ..schemas import RAW_SALES_SCHEMA, SILVER_SALES_SCHEMA
 
 __all__ = ["SalesPipeline", "transform_silver", "DIM_SPECS"]
 
@@ -89,13 +89,19 @@ class SalesPipeline:
     - gold tables are :class:`VersionedTable`s: every commit is an
       atomic versioned commit (Delta-``_delta_log`` semantics — readers
       see old or new, never partial; history queryable).
-    - each gold table's plan is evaluated once per batch, by its commit.
-      A dimension is committed as the snapshot ``build_scd1_dimension``
-      returns (it already is the SCD-1 MERGE result); the fact is
-      merged on its grain.  The duplicate-key check runs inside each
-      commit's write, so a violation fails that commit and publishes
-      nothing.  Later stages read the committed versions, which start
-      no Spark job before their own write.
+    - bronze and silver are read back with their declared schemas
+      (``RAW_SALES_SCHEMA``, ``SILVER_SALES_SCHEMA``), so no read runs a
+      schema-inference job.
+    - each gold table is written in one pass over its inputs, by its
+      commit.  A dimension is committed as the snapshot
+      ``build_scd1_dimension`` returns (one full outer join of silver
+      and the sink, keyed in one window; it already is the SCD-1 MERGE
+      result); the fact is merged on its grain by ``VersionedTable.merge``
+      (one window over fact ∪ committed fact, so the fact's plan runs
+      once).  The duplicate-key check runs inside each commit's write,
+      so a violation fails that commit and publishes nothing.  Later
+      stages read the committed versions, which start no Spark job
+      before their own write.
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -122,12 +128,12 @@ class SalesPipeline:
         """S4: land raw CSV as bronze parquet with the explicit schema."""
         raw = read_csv(self.spark, csv_path, schema=RAW_SALES_SCHEMA)
         write_parquet(raw, self.bronze)
-        return read_parquet(self.spark, self.bronze)
+        return read_parquet(self.spark, self.bronze, schema=RAW_SALES_SCHEMA)
 
     def build_silver(self) -> DataFrame:
-        silver = transform_silver(read_parquet(self.spark, self.bronze))
-        write_parquet(silver, self.silver, partition_by=["Year"])
-        return read_parquet(self.spark, self.silver)
+        bronze = read_parquet(self.spark, self.bronze, schema=RAW_SALES_SCHEMA)
+        write_parquet(transform_silver(bronze), self.silver, partition_by=["Year"])
+        return read_parquet(self.spark, self.silver, schema=SILVER_SALES_SCHEMA)
 
     def build_dimensions(self, silver: DataFrame) -> dict[str, DataFrame]:
         dims: dict[str, DataFrame] = {}
@@ -166,7 +172,7 @@ class SalesPipeline:
         not_null(DealerName) 31 times)."""
         from ..operators import quality as Q
 
-        silver = read_parquet(self.spark, self.silver)
+        silver = read_parquet(self.spark, self.silver, schema=SILVER_SALES_SCHEMA)
         fact = self.read_gold("factsales")
         report = {
             "silver": Q.check(
@@ -192,7 +198,8 @@ class SalesPipeline:
     def units_by_branch_year(self, silver: DataFrame | None = None) -> DataFrame:
         """`2_Silver_Notebook.py:63`: groupBy(BranchName, Year).sum(Units)
         sorted by Year asc, total desc (A1 + O1)."""
-        silver = silver if silver is not None else read_parquet(self.spark, self.silver)
+        if silver is None:
+            silver = read_parquet(self.spark, self.silver, schema=SILVER_SALES_SCHEMA)
         return (
             silver.groupBy("BranchName", "Year")
             .agg(F.sum("Units_Sold").alias("Total_Units_Sold"))

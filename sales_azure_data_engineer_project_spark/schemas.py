@@ -7,8 +7,8 @@ hazard H6).  We declare every schema so ingest is deterministic and
 testable.
 
 Types follow SURVEY §1.2: the raw sales table is flat
-string/long/double; silver adds ``model_category`` (string) and
-``Rev_Per_unit`` (double, long/long division).
+string/long/double; silver adds ``model_category`` (string),
+``Rev_Per_unit`` (double, long/long division) and ``date_iso`` (string).
 """
 
 from __future__ import annotations
@@ -19,8 +19,6 @@ __all__ = [
     "RAW_SALES_SCHEMA",
     "SILVER_SALES_SCHEMA",
     "TESTDATA_TABLES",
-    "dim_schema",
-    "FACT_SALES_SCHEMA",
 ]
 
 # ---------------------------------------------------------------------------
@@ -44,36 +42,15 @@ RAW_SALES_SCHEMA = T.StructType(
     ]
 )
 
+# Silver as read back from its Year-partitioned directory: partition
+# discovery moves ``Year`` to the end and types it int.
 SILVER_SALES_SCHEMA = T.StructType(
-    list(RAW_SALES_SCHEMA.fields)
+    [f for f in RAW_SALES_SCHEMA.fields if f.name != "Year"]
     + [
         T.StructField("model_category", T.StringType(), True),
         T.StructField("Rev_Per_unit", T.DoubleType(), True),
-    ]
-)
-
-
-def dim_schema(key_col: str, natural_cols: list[tuple[str, T.DataType]]) -> T.StructType:
-    """Gold dimension schema: surrogate key + natural-key/attribute columns.
-
-    Mirrors the shape produced at `3(1)_Gold_dim_model.py:133` (key appended
-    by withColumn) but with the key FIRST for readability.
-    """
-    return T.StructType(
-        [T.StructField(key_col, T.LongType(), False)]
-        + [T.StructField(n, t, True) for n, t in natural_cols]
-    )
-
-
-FACT_SALES_SCHEMA = T.StructType(
-    [
-        T.StructField("Revenue", T.LongType(), True),
-        T.StructField("Units_Sold", T.LongType(), True),
-        T.StructField("Rev_Per_Unit", T.DoubleType(), True),
-        T.StructField("dim_model_key", T.LongType(), True),
-        T.StructField("dim_branch_key", T.LongType(), True),
-        T.StructField("dim_dealer_key", T.LongType(), True),
-        T.StructField("dim_date_key", T.LongType(), True),
+        T.StructField("date_iso", T.StringType(), True),
+        T.StructField("Year", T.IntegerType(), True),
     ]
 )
 

@@ -53,6 +53,12 @@ def test_merge_upsert_semantics(spark):
     # matched updated, unmatched-source inserted, unmatched-target kept
     assert got == {1: "old1", 2: "new2", 3: "new3"}
 
+    # a NULL key never matches: the target's and the source's rows both stay
+    target = spark.createDataFrame([(1, "old1"), (None, "oldnull")], "k long, v string")
+    source = spark.createDataFrame([(None, "newnull")], "k long, v string")
+    got = sorted(map(tuple, merge_upsert(target, source, ["k"]).collect()), key=str)
+    assert got == sorted([(1, "old1"), (None, "oldnull"), (None, "newnull")], key=str)
+
 
 def test_merge_upsert_duplicate_source_raises(spark):
     target = spark.createDataFrame([(1, "x")], ["k", "v"])
@@ -79,6 +85,15 @@ def test_scd1_dimension_initial_and_incremental(spark):
     d3 = build_scd1_dimension(s2, empty, spec)
     got3 = {r["nk"]: (r["dim_x_key"], r["attr"]) for r in d3.collect()}
     assert got3 == {"a": (1, "A2"), "c": (2, "C")}
+
+    # a sink holding two keys for one natural key (initial-load variants)
+    # and a batch with one variant: both keys stay, both take its attr
+    s4 = spark.createDataFrame([("v", "V1"), ("v", "V2")], ["nk", "attr"])
+    d4 = build_scd1_dimension(s4, None, spec)
+    s5 = spark.createDataFrame([("v", "V3")], ["nk", "attr"])
+    d5 = build_scd1_dimension(s5, d4, spec)
+    got5 = sorted((r["dim_x_key"], r["nk"], r["attr"]) for r in d5.collect())
+    assert got5 == [(1, "v", "V3"), (2, "v", "V3")]
 
 
 def test_incremental_dimension_and_gold_read_start_no_job(spark, tmp_path):
