@@ -85,9 +85,9 @@ def dense_surrogate_key(
     Spark jobs at call time (the checkpoint materialization and the
     P-row count collect) — the unavoidable price of the driver-side
     prefix-sum.  Its callers pay them only where the delta can be
-    large: the initial load of ``dimensions.build_scd1_dimension``,
-    ``scd2`` and the ``queries_core`` dense-key query.  The incremental
-    SCD-1 build keys its new rows in the one single-partition window it
+    large: ``scd2`` and the ``queries_core`` dense-key query.  The
+    SCD-1 build (``dimensions.build_scd1_dimension``), initial load
+    included, keys its new rows in the one single-partition window it
     runs over the (broadcast-sized) dimension instead, and stays lazy.
     """
     cols = [F.col(c) for c in order_cols]

@@ -13,11 +13,14 @@ each) that each do:
   7. Delta MERGE or initial saveAsTable                     (:163-176, S7/S6)
 
 This module is the idiomatic-Spark generalization, one parameterized
-function whose incremental branch takes three steps:
+function that takes three steps on the initial load and on every later
+one alike:
 
   a. DISTINCT-project natural key + attributes from silver (step 1)
   b. FULL OUTER JOIN source→sink on the natural key: existing ∪ new ∪
-     vanished in one join, with no null-split and no union (steps 2-4, 6)
+     vanished in one join, with no null-split and no union (steps 2-4, 6);
+     with no committed sink, the sink is the source's own empty typed
+     frame (step 2's ``where 1=0``)
   c. one window keys the new rows densely from max(existing)+1, in
      natural-column order (step 5; hazard H2)
 
@@ -27,8 +30,8 @@ an oracle-checked query so parity with the reference's exact operator
 chain stays tested.
 
 Scale notes:
-- The incremental build is a pure plan builder: it starts no Spark job.
-  The whole dimension — existing ∪ new ∪ vanished — is evaluated once,
+- The build is a pure plan builder: it starts no Spark job.  The
+  whole dimension — existing ∪ new ∪ vanished — is evaluated once,
   by the action that commits it, from one scan of silver and one scan
   of the sink joined by one full outer join on the natural key
   (shuffled on that key: a full outer join cannot broadcast).
@@ -39,10 +42,8 @@ Scale notes:
   threshold, the same assumption ``fact.build_fact`` makes when it
   broadcasts every dimension.  The commit's key-uniqueness window
   (``upsert.guard_unique``) then needs no exchange of its own: a single
-  partition already holds each key's rows together.
-- The initial load, where the delta is the whole dimension and may be
-  large, keys with the two-phase ``dense_surrogate_key`` instead (two
-  eager jobs, no single-reducer window).
+  partition already holds each key's rows together.  The initial load
+  makes the same assumption: there the new rows are the whole dimension.
 """
 
 from __future__ import annotations
@@ -51,8 +52,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from ..functions.scalar import dense_surrogate_key
 
 __all__ = ["DimensionSpec", "build_scd1_dimension"]
 
@@ -121,10 +120,12 @@ def build_scd1_dimension(
     order_cols = spec.natural_cols
 
     if sink is None:  # S9 tableExists branch: the table was never committed
-        keyed = dense_surrogate_key(src, spec.key_col, order_cols, offset=0)
-        return keyed.select(spec.key_col, *spec.natural_cols)
+        # an empty typed sink (`3(1)_Gold_dim_model.py:59-68` ``where 1=0``)
+        sink = src.where(F.lit(False)).select(
+            F.lit(None).cast("long").alias(spec.key_col), *spec.natural_cols
+        )
 
-    # A committed sink, possibly empty: the rest is one lazy plan.  The
+    # The rest is one lazy plan, for an empty sink as for any other.  The
     # full outer join on the natural key yields existing (both sides),
     # new (source only) and vanished (sink only — MERGE never deletes,
     # no whenNotMatchedBySource in the reference) rows at once.  Null

@@ -7,29 +7,39 @@ Layout:
       v=1/  v=2/  ...      immutable version directories (parquet)
         _schema.json        the committed frame's schema (read without inference)
         _manifest.json      optional per-file min/max (``stats_columns``)
+        col=value/          hive partition dirs when the table has ``partition_by``
       _VERSION              text file holding the current version number
 
 Writers stage a full new version directory, then flip ``_VERSION`` with
 an atomic rename — readers either see the old or the new version, never
 a partial write, and historical versions stay readable (time travel).
-This replaces the delete-and-swap in ``merge_write_parquet`` with a
-protocol that (a) never has a window where the table is missing,
-(b) keeps history, (c) maps 1:1 onto what Delta's ``_delta_log`` does
-with JSON commits.
+The table is never missing, history is kept, and each commit maps 1:1
+onto a JSON commit in Delta's ``_delta_log``.
 
-Scale note: each MERGE rewrites one new version — same worst case as
-Delta compaction; combine with hive-partitioned version dirs to bound
-the rewrite to touched partitions.  Vacuuming old versions is the
-retention knob.
+A partitioned table's MERGE reads only the partitions its source
+touches (an IN-list the scan turns into ``PartitionFilters``), writes
+the merged slice, and hardlinks every file of the base version's
+untouched partition dirs into the staged version before it publishes.
+A version therefore stays a self-contained directory — read, time
+travel, vacuum, compact and conflict detection are the same as for an
+unpartitioned table — while the bytes a merge writes scale with the
+partitions it touches, not the table.
+
+Scale note: an unpartitioned MERGE rewrites the whole table as one new
+version, the same worst case as Delta's.  Vacuuming old versions is the
+retention knob; a hardlinked file's bytes are freed only when the last
+version holding it is vacuumed.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from .upsert import merge_upsert
@@ -44,9 +54,13 @@ class ConcurrentWriteError(RuntimeError):
 
 
 class VersionedTable:
-    def __init__(self, spark: SparkSession, root: str):
+    """A table of immutable version dirs under ``root``; ``partition_by``
+    names the hive partition columns every commit writes."""
+
+    def __init__(self, spark: SparkSession, root: str, partition_by: tuple[str, ...] = ()):
         self.spark = spark
         self.root = root
+        self.partition_by = list(partition_by)
         os.makedirs(root, exist_ok=True)
 
     @property
@@ -91,6 +105,7 @@ class VersionedTable:
         base_version: int | None = None,
         stats_columns: list[str] | None = None,
         zorder: list[str] | None = None,
+        carry_from: str | None = None,
     ) -> int:
         """Commit a new version.  ``base_version`` enables optimistic
         concurrency: if another writer committed since the caller read
@@ -106,7 +121,13 @@ class VersionedTable:
         writers could interleave into the SAME directory; with
         rename-publish the loser's data never becomes visible and it
         gets ConcurrentWriteError instead.  A crashed writer leaves only
-        an invisible ``._staged_*`` dir (removed by ``vacuum``)."""
+        an invisible ``._staged_*`` dir (removed by ``vacuum``).
+
+        ``carry_from`` is a version dir whose partitions ``df`` does not
+        hold: their files are hardlinked into the staged version."""
+        if self.partition_by and (stats_columns or zorder):
+            # manifests list a version dir's top-level files only
+            raise ValueError("stats_columns and zorder need an unpartitioned table")
         cur = self.current_version()
         if base_version is not None and cur != base_version:
             raise ConcurrentWriteError(
@@ -150,12 +171,14 @@ class VersionedTable:
             prev_tt = self.spark.conf.get(tt_key, None)
             self.spark.conf.set(tt_key, "TIMESTAMP_MICROS")
             try:
-                df.write.mode("overwrite").parquet(staged)
+                df.write.mode("overwrite").partitionBy(*self.partition_by).parquet(staged)
             finally:
                 if prev_tt is None:
                     self.spark.conf.unset(tt_key)
                 else:
                     self.spark.conf.set(tt_key, prev_tt)
+            if carry_from is not None:
+                _link_untouched_partitions(carry_from, staged, len(self.partition_by))
             if stats_columns:
                 # footer-only stats for THIS commit's files, written
                 # inside the staged dir so the manifest publishes
@@ -216,8 +239,6 @@ class VersionedTable:
         """Range scan of a snapshot that opens only the files whose
         manifest min/max overlap [lo, hi] (falls back to a full scan +
         filter when the version has no manifest)."""
-        from pyspark.sql import functions as F
-
         from .skipping import read_manifest, read_pruned
 
         v = self.current_version() if version is None else version
@@ -232,10 +253,28 @@ class VersionedTable:
         conflict detection against the version the merge read.  The
         merged plan (``merge_upsert``) evaluates ``source`` once and
         checks its keys in the same window: a duplicate fails the write,
-        so no version is published, and no separate job runs before it."""
+        so no version is published, and no separate job runs before it.
+
+        On a partitioned table the merge reads, and rewrites, only the
+        partitions ``source`` touches; one collect of the source's
+        distinct partition values builds the target's partition filter.
+        The other partitions carry forward as hardlinks.  Every
+        partition column must be a merge key: otherwise a source row
+        could move a key to another partition while the untouched one
+        kept the old row."""
+        if not set(self.partition_by) <= set(keys):
+            raise ValueError(
+                f"partition columns {self.partition_by} must all be merge keys {keys}"
+            )
         base = self.current_version()
-        merged = merge_upsert(self.read(base), source, keys, assert_unique=False)
-        return self._commit(merged, base_version=base)
+        target = self.read(base)
+        carry_from = None
+        if self.partition_by and target is not None:
+            touched = source.select(*self.partition_by).distinct().collect()
+            target = target.filter(_in_partitions(self.partition_by, touched))
+            carry_from = self._vdir(base)
+        merged = merge_upsert(target, source, keys)
+        return self._commit(merged, base_version=base, carry_from=carry_from)
 
     def diff(self, from_version: int, to_version: int | None = None):
         """Change-data read between two committed versions: what rows
@@ -275,3 +314,33 @@ class VersionedTable:
                 # abandoned claim from a crashed writer — never visible
                 shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
         return sorted(dropped)
+
+
+def _in_partitions(cols: list[str], touched: list) -> Column:
+    """Partition filter keeping every partition whose values appear in
+    the ``touched`` rows, column by column (a superset for several
+    columns; the merge rewrites whatever it reads).  A NULL partition
+    value matches ``IS NULL``: ``IN`` never matches it."""
+    cond = F.lit(True)
+    for i, c in enumerate(cols):
+        values = {row[i] for row in touched}
+        hit = F.col(c).isin([v for v in values if v is not None])
+        if None in values:
+            hit = hit | F.col(c).isNull()
+        cond = cond & hit
+    return cond
+
+
+def _link_untouched_partitions(base: str, staged: str, depth: int) -> None:
+    """Hardlink into ``staged`` every file of each leaf partition dir of
+    ``base`` that the staged write did not produce.  A partition the
+    merge read has at least one row, and keeps it, so it is always
+    rewritten: a leaf missing from ``staged`` is one the merge never
+    touched."""
+    for part in glob.glob(os.path.join(glob.escape(base), *["*=*"] * depth)):
+        dst = os.path.join(staged, os.path.relpath(part, base))
+        if not os.path.isdir(part) or os.path.isdir(dst):
+            continue
+        os.makedirs(dst)
+        for name in os.listdir(part):
+            os.link(os.path.join(part, name), os.path.join(dst, name))

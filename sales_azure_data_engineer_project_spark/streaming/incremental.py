@@ -4,9 +4,10 @@ The reference's "incremental" capability is rerunnable batch — an ADF
 trigger re-executes the notebooks with new bronze files and a widget
 flag (`3(1)_Gold_dim_model.py:13-18`, SURVEY §2.9).  Structured
 Streaming's ``foreachBatch`` is the idiomatic Spark generalization of
-exactly that contract: each micro-batch runs the same MERGE the batch
-pipeline uses, with checkpointed exactly-once file tracking replacing
-the manual re-trigger.
+exactly that contract: each micro-batch runs the batch pipeline's
+MERGE and commits it through the same ``VersionedTable`` as its gold
+tables, with checkpointed exactly-once file tracking replacing the
+manual re-trigger.
 
 Also provided: event-time windowed aggregation and session windows with
 watermarked late-data handling — the streaming twins of the batch
@@ -19,11 +20,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.upsert import merge_write_parquet, merge_write_partitioned
+from ..operators.versioned import VersionedTable
 
 __all__ = [
     "stream_incremental_merge",
-    "stream_incremental_merge_partitioned",
     "windowed_event_counts",
     "sessionized_stream",
 ]
@@ -37,10 +37,17 @@ def stream_incremental_merge(
     schema: T.StructType,
     checkpoint_dir: str,
     *,
-    assert_unique: bool = True,
+    partition_by: tuple[str, ...] = (),
 ) -> None:
-    """Drain all available files from ``source_dir`` into ``target_path``
-    with SCD-1 MERGE semantics, exactly once per file (checkpointed).
+    """Drain all available files from ``source_dir`` into the
+    ``VersionedTable`` at ``target_path`` with SCD-1 MERGE semantics,
+    exactly once per file (checkpointed).  Each non-empty micro-batch
+    commits one table version.
+
+    ``partition_by`` partitions the table: a micro-batch then rewrites
+    only the partitions it touches (``VersionedTable.merge``).  The
+    merge is idempotent on the keys, so a batch replayed after a crash
+    between its commit and the checkpoint converges to the same state.
 
     ``trigger(availableNow=True)`` processes the backlog and stops —
     the streaming equivalent of one reference pipeline run; schedule it
@@ -51,56 +58,9 @@ def stream_incremental_merge(
     def upsert_batch(batch_df: DataFrame, _epoch: int) -> None:
         if batch_df.isEmpty():
             return
+        table = VersionedTable(batch_df.sparkSession, target_path, partition_by)
         # dedup within the micro-batch so MERGE keys are unique (H4)
-        deduped = batch_df.dropDuplicates(keys)
-        merge_write_parquet(
-            batch_df.sparkSession, deduped, target_path, keys, assert_unique=assert_unique
-        )
-
-    (
-        stream.writeStream.foreachBatch(upsert_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def stream_incremental_merge_partitioned(
-    spark: SparkSession,
-    source_dir: str,
-    target_path: str,
-    keys: list[str],
-    partition_col: str,
-    schema: T.StructType,
-    checkpoint_dir: str,
-    *,
-    assert_unique: bool = True,
-) -> None:
-    """Streaming ingest into a hive-partitioned gold table with
-    partition-pruned MERGE per micro-batch.
-
-    The 100 TB streaming-ingest shape: a micro-batch of events touches a
-    handful of date partitions, so each ``foreachBatch`` rewrites only
-    those (``merge_write_partitioned``) instead of swapping the whole
-    table (``stream_incremental_merge``'s behavior).  Checkpointed file
-    tracking keeps exactly-once across restarts; the merge itself is
-    idempotent on the keys, so a replayed batch converges to the same
-    state."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-
-    def upsert_batch(batch_df: DataFrame, _epoch: int) -> None:
-        if batch_df.isEmpty():
-            return
-        deduped = batch_df.dropDuplicates(keys)
-        merge_write_partitioned(
-            batch_df.sparkSession,
-            deduped,
-            target_path,
-            keys,
-            partition_col,
-            assert_unique=assert_unique,
-        )
+        table.merge(batch_df.dropDuplicates(keys), keys)
 
     (
         stream.writeStream.foreachBatch(upsert_batch)

@@ -63,8 +63,9 @@ def test_merge_upsert_semantics(spark):
 def test_merge_upsert_duplicate_source_raises(spark):
     target = spark.createDataFrame([(1, "x")], ["k", "v"])
     source = spark.createDataFrame([(1, "a"), (1, "b")], ["k", "v"])
-    with pytest.raises(ValueError, match="multiple source rows"):
-        merge_upsert(target, source, ["k"])
+    merged = merge_upsert(target, source, ["k"])  # a plan: the check runs in it
+    with pytest.raises(Exception, match="multiple source rows"):
+        merged.collect()
 
 
 def test_scd1_dimension_initial_and_incremental(spark):

@@ -204,3 +204,15 @@ def test_incremental_run_job_budget(spark, tmp_path):
     pipe.run(init)
     _, jobs = count_jobs(spark, lambda: pipe.run(incr))
     assert jobs <= INCREMENTAL_RUN_JOB_BUDGET
+
+
+# Jobs the fixtures' initial load starts (measured: 24): the same plans
+# as an incremental batch, each dimension built over an empty typed sink.
+INITIAL_LOAD_JOB_BUDGET = 29
+
+
+def test_initial_load_job_budget(spark, tmp_path):
+    init = write_sales_csv(str(tmp_path / "init.csv"), INITIAL_ROWS)
+    pipe = SalesPipeline(spark, str(tmp_path / "zones"))
+    _, jobs = count_jobs(spark, lambda: pipe.run(init))
+    assert jobs <= INITIAL_LOAD_JOB_BUDGET

@@ -8,6 +8,7 @@ import os
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sales_azure_data_engineer_project_spark.operators.versioned import VersionedTable
 from sales_azure_data_engineer_project_spark.streaming import (
     sessionized_stream,
     stream_incremental_merge,
@@ -27,12 +28,13 @@ def test_stream_incremental_merge_exactly_once(spark, tmp_path):
     tgt = str(tmp_path / "tgt")
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(src)
+    table = VersionedTable(spark, tgt)
 
     spark.createDataFrame([(1, "a"), (2, "b")], SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(src)
     stream_incremental_merge(spark, src, tgt, ["k"], SCHEMA, ckpt)
-    got = {r["k"]: r["v"] for r in spark.read.parquet(tgt).collect()}
+    got = {r["k"]: r["v"] for r in table.read().collect()}
     assert got == {1: "a", 2: "b"}
 
     # second drop: update k=2, insert k=3; old file must NOT be reprocessed
@@ -40,12 +42,16 @@ def test_stream_incremental_merge_exactly_once(spark, tmp_path):
         "append"
     ).parquet(src)
     stream_incremental_merge(spark, src, tgt, ["k"], SCHEMA, ckpt)
-    got = {r["k"]: r["v"] for r in spark.read.parquet(tgt).collect()}
+    got = {r["k"]: r["v"] for r in table.read().collect()}
     assert got == {1: "a", 2: "b2", 3: "c"}
+    # each drain committed a version: the first one is still readable
+    assert {r["k"]: r["v"] for r in table.read(1).collect()} == {1: "a", 2: "b"}
+    version = table.current_version()
 
     # re-run with no new files: no-op (checkpoint exactly-once)
     stream_incremental_merge(spark, src, tgt, ["k"], SCHEMA, ckpt)
-    assert {r["k"]: r["v"] for r in spark.read.parquet(tgt).collect()} == got
+    assert {r["k"]: r["v"] for r in table.read().collect()} == got
+    assert table.current_version() == version
 
 
 def _event_rows(spark):
@@ -376,59 +382,65 @@ def test_stateful_sessionize_timeout_emission(spark, tmp_path):
     assert len(got) == 3  # 19:00 session still open, not emitted
 
 
-def test_merge_write_partitioned_bounded_rewrite(spark, tmp_path):
+def _partition_files(table: VersionedTable, version: int) -> dict[str, dict[str, int]]:
+    """Partition dir -> {parquet file name: inode} of one table version."""
+    vdir = table._vdir(version)
+    return {
+        part: {
+            f: os.stat(os.path.join(vdir, part, f)).st_ino
+            for f in os.listdir(os.path.join(vdir, part))
+            if f.endswith(".parquet")
+        }
+        for part in os.listdir(vdir)
+        if "=" in part
+    }
+
+
+def test_partitioned_merge_bounded_rewrite(spark, tmp_path):
     """Partition-pruned MERGE: only partitions present in the source are
-    rewritten; untouched partition directories keep their files."""
-    import glob
-
-    from sales_azure_data_engineer_project_spark.operators.upsert import (
-        merge_write_partitioned,
-    )
-
-    path = str(tmp_path / "fact")
+    rewritten; the new version's untouched partition dirs hold the base
+    version's files (hardlinks: the same inodes)."""
+    table = VersionedTable(spark, str(tmp_path / "fact"), partition_by=("pday",))
     schema = "k long, pday string, v string"
     initial = spark.createDataFrame(
-        [(1, "A", "a1"), (2, "B", "b1"), (3, "C", "c1")], schema
+        [(1, "A", "a1"), (2, "B", "b1"), (3, "C", "c1"), (5, None, "n1")], schema
     )
-    touched = merge_write_partitioned(
-        spark, initial, path, ["k", "pday"], "pday"
-    )
-    assert touched == ["A", "B", "C"]
-
-    files_before = {
-        p: sorted(glob.glob(f"{path}/pday={p}/*.parquet")) for p in "ABC"
-    }
+    v1 = table.merge(initial, ["k", "pday"])
+    files_before = _partition_files(table, v1)
+    null_part = "pday=__HIVE_DEFAULT_PARTITION__"
+    assert sorted(files_before) == ["pday=A", "pday=B", "pday=C", null_part]
 
     # merge touches only B: update k=2, insert k=4
     batch = spark.createDataFrame([(2, "B", "b2"), (4, "B", "b-new")], schema)
-    touched = merge_write_partitioned(spark, batch, path, ["k", "pday"], "pday")
-    assert touched == ["B"]
+    v2 = table.merge(batch, ["k", "pday"])
+    files_after = _partition_files(table, v2)
+    rewritten = sorted(p for p in files_after if files_after[p] != files_before[p])
+    assert rewritten == ["pday=B"]
 
-    got = {
-        (r["k"], r["pday"]): r["v"] for r in spark.read.parquet(path).collect()
-    }
+    got = {(r["k"], r["pday"]): r["v"] for r in table.read().collect()}
     assert got == {
         (1, "A"): "a1",
         (2, "B"): "b2",
         (3, "C"): "c1",
         (4, "B"): "b-new",
+        (5, None): "n1",
     }
-    # A and C directories were not rewritten (same physical files)
-    for p in "AC":
-        assert sorted(glob.glob(f"{path}/pday={p}/*.parquet")) == files_before[p]
-    assert sorted(glob.glob(f"{path}/pday=B/*.parquet")) != files_before["B"]
+    # A and C were not rewritten (same physical files); B's files are new
+    for p in ("pday=A", "pday=C"):
+        assert files_after[p] == files_before[p] and files_after[p]
+    assert not set(files_after["pday=B"].values()) & set(files_before["pday=B"].values())
+
+    # a NULL partition value is touched like any other: the merge reads
+    # that partition too, so its old rows stay
+    table.merge(spark.createDataFrame([(6, None, "n2")], schema), ["k", "pday"])
+    got = {(r["k"], r["pday"]): r["v"] for r in table.read().collect()}
+    assert got[(5, None)] == "n1" and got[(6, None)] == "n2" and len(got) == 6
 
 
 def test_stream_incremental_merge_partitioned(spark, tmp_path):
     """Streaming foreachBatch ingest into a partitioned gold table:
     each drained batch rewrites only the partitions it touches, replays
     converge (exactly-once via checkpoint + idempotent merge)."""
-    import glob
-
-    from sales_azure_data_engineer_project_spark.streaming.incremental import (
-        stream_incremental_merge_partitioned,
-    )
-
     src = str(tmp_path / "pm_src")
     tgt = str(tmp_path / "pm_tgt")
     ckpt = str(tmp_path / "pm_ckpt")
@@ -440,10 +452,11 @@ def test_stream_incremental_merge_partitioned(spark, tmp_path):
             T.StructField("v", T.StringType()),
         ]
     )
+    table = VersionedTable(spark, tgt)
 
     def run():
-        stream_incremental_merge_partitioned(
-            spark, src, tgt, ["k", "pday"], "pday", schema, ckpt
+        stream_incremental_merge(
+            spark, src, tgt, ["k", "pday"], schema, ckpt, partition_by=("pday",)
         )
 
     spark.createDataFrame(
@@ -451,29 +464,29 @@ def test_stream_incremental_merge_partitioned(spark, tmp_path):
     ).coalesce(1).write.mode("append").parquet(src)
     run()
     assert {
-        (r["k"], r["pday"], r["v"]) for r in spark.read.parquet(tgt).collect()
+        (r["k"], r["pday"], r["v"]) for r in table.read().collect()
     } == {(1, "A", "a1"), (2, "B", "b1"), (3, "C", "c1")}
 
-    files_a = sorted(glob.glob(f"{tgt}/pday=A/*.parquet"))
+    files_a = _partition_files(table, table.current_version())["pday=A"]
 
     # second drop touches only B; A's physical files must survive
     spark.createDataFrame([(2, "B", "b2"), (4, "B", "b-new")], schema).coalesce(
         1
     ).write.mode("append").parquet(src)
     run()
-    got = {(r["k"], r["pday"]): r["v"] for r in spark.read.parquet(tgt).collect()}
+    got = {(r["k"], r["pday"]): r["v"] for r in table.read().collect()}
     assert got == {
         (1, "A"): "a1",
         (2, "B"): "b2",
         (3, "C"): "c1",
         (4, "B"): "b-new",
     }
-    assert sorted(glob.glob(f"{tgt}/pday=A/*.parquet")) == files_a
+    assert _partition_files(table, table.current_version())["pday=A"] == files_a
 
     # no new files: checkpoint makes the re-run a no-op
     run()
     assert {
-        (r["k"], r["pday"]): r["v"] for r in spark.read.parquet(tgt).collect()
+        (r["k"], r["pday"]): r["v"] for r in table.read().collect()
     } == got
 
 
