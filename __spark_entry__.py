@@ -1,9 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is the smoke query.  ``queries()`` maps each
+registered query name to its builder, in registration order, and
+``oracle_sql()`` gives the DuckDB twin of every SQL-expressible one;
+``tools/check_oracle.py`` runs each query at sf=0.01 and compares it
+against its twin (row count + schema + order-insensitive values).
 """
 
 from __future__ import annotations
@@ -17,87 +18,6 @@ from sales_azure_data_engineer_project_spark import queries_core
 from sales_azure_data_engineer_project_spark import queries_extensions  # noqa: F401  (registers)
 
 _SMOKE_SF_DIR = "/root/testdata/sf0.001"
-
-# The driver verifies the FIRST 50 registered queries.  After round 7
-# the ledger is fully closed — every one of the 252 registered queries
-# has a green driver CORRECTNESS row and the latest row is green for
-# all of them (LEDGER.json) — so windows are now pure staleness
-# rotation: changed code first, then oldest evidence.
-_PRIORITY = [
-    # ---- ROUND-11 WINDOW ---------------------------------------------
-    # VERDICT r10 "Next" #1: the round-10 optimization session changed
-    # five queries' implementations AFTER the round-9 window was set, so
-    # their oracle-green status rested on builder-side check_oracle runs
-    # only.  Slots 1-5 give them the driver row they are owed.
-    "dedup_clusters",
-    "dedup_graph_kcore",
-    "dedup_graph_label_propagation",
-    "dedup_graph_pagerank",
-    "dedup_minhash_multiband_sweep",
-    # Slots 6-9: round-11 changed code — the stats_ks_two_sample pivot
-    # rewrite (VERDICT r10 "Next" #3), the linkage-loop lineage
-    # truncation (#4, both linkage tiers share min_label_rounds), and
-    # the staged-funnel barrier merge (#6; staged path is gated above
-    # 1M docs so oracle SFs are unchanged by design — canary pins that).
-    "stats_ks_two_sample",
-    "customers_linkage_clusters_capped",
-    "customers_linkage_clusters",
-    "pipeline_full_train_prep",
-    # Slots 10-50: 41 of the 44 rows whose latest driver evidence is r4
-    # — the oldest in the fleet (LEDGER.json stale_4plus list, ranked
-    # oldest-first).  The 3 that don't fit (quality_functional_
-    # dependencies, spatial_neighbor_pairs, fuzzy_name_pairs_symspell)
-    # lead the r12 rotation.
-    "flagship_revenue_by_nation_year",
-    "pricing_summary",
-    "customers_with_orders",
-    "union_segments",
-    "max_order_key",
-    "derived_columns",
-    "top_orders",
-    "dim_dense_keys",
-    "q3_shipping_priority",
-    "q5_supplier_volume_by_region",
-    "grouping_sets_revenue",
-    "q19_disjunctive_predicates",
-    "json_functions",
-    "pivot_returnflag_status",
-    "events_sessionization",
-    "events_asof_last_purchase",
-    "events_funnel",
-    "window_rank_suite",
-    "stats_aggregates_exact",
-    "null_safe_equality",
-    "text_quality_stats",
-    "dedup_exact",
-    "multimodal_features",
-    "approx_distinct_stats",
-    "text_span_dup_stats",
-    "pipeline_decontaminate",
-    "similarity_ann_ivf_kmeans",
-    "similarity_ann_pq",
-    "vocab_bpe_merges",
-    "interval_overlap_sweep",
-    "tokens_heavy_hitters_cms",
-    "approx_distinct_kmv",
-    "events_distribution_drift",
-    "pipeline_split_train_val_test",
-    "sample_domain_quota",
-    "similarity_ann_lsh_multiprobe",
-    "market_basket_pairs",
-    "events_transition_matrix",
-    "events_cohort_retention",
-    "parts_pareto_frontier",
-    "profile_lineitem_columns",
-]
-
-
-def _ordered(mapping: dict) -> dict:
-    missing = [n for n in _PRIORITY if n not in mapping]
-    if missing:
-        raise KeyError(f"priority list names unregistered queries: {missing}")
-    rest = [n for n in mapping if n not in set(_PRIORITY)]
-    return {n: mapping[n] for n in [*_PRIORITY, *rest]}
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -113,7 +33,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return _ordered(dict(queries_core.QUERIES))
+    return dict(queries_core.QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:

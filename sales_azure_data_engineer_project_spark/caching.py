@@ -9,7 +9,7 @@ back-to-back would otherwise accumulate cached partitions until
 eviction pressure (ADVICE r2).
 
 Contract: builders call :func:`tracked_persist` instead of
-``df.persist``; harness code (bench.py, tools/check_oracle.py, the CLI)
+``df.persist``; harness code (perfbench, tools/check_oracle.py, the CLI)
 calls :func:`release_caches` after each query's results are
 materialized.  Library users embedding queries in their own session own
 the same lifetime decision: call ``release_caches()`` whenever the

@@ -2,9 +2,9 @@
 
 Two packing strategies ship in the engine:
 
-- **concat-and-chop** (``pipeline_sequence_packing`` in
+- **concat-and-chop** (``pipeline_pack_sequences`` in
   ``queries_extensions``): pure windows, zero Python — documents are
-  concatenated in deterministic hash order and cut every ``budget``
+  concatenated in doc_id order within each shard and cut every 512
   tokens.  Maximum fill, but documents straddle cut boundaries.
 - **first-fit-decreasing** (this module): no document is ever split —
   each shard packs its documents into the fewest bins a greedy FFD

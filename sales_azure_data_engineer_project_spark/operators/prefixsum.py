@@ -54,6 +54,10 @@ def bucketed_cumsum(
     row per distinct value with its count).  ``bucket_width`` sets the
     coarse key; pick it so #buckets ≈ √(#distinct order values) or
     simply so the per-bucket row count fits a task comfortably.
+
+    The input is always repartitioned by (group, bucket), even when it
+    already arrives partitioned that way; a caller that has that
+    distribution pays one extra exchange.
     """
     gcols = list(group_cols)
     df = df.withColumn("__bucket", F.floor(F.col(order_col) / F.lit(bucket_width)))

@@ -45,14 +45,11 @@ def _fan_out(df: DataFrame) -> DataFrame:
     shuffle of the small table.
 
     Width = the session's configured shuffle partitions, NOT
-    ``defaultParallelism`` (round 11): the two agree at bench/oracle
-    SFs (session.py sizes both from $SPARK_GRAFT_CPUS), but the scale
-    harness raises ``spark.sql.shuffle.partitions`` per blow-up tier
-    precisely so per-task state shrinks — a hardcoded cores-width here
-    overrode that, and at 3000× the quantizer's wide-cache build
-    unrolled ~190 MB of rows per task × 32 concurrent tasks and
-    heap-OOM'd a stock 8 GB JVM (guide §2.2 "scale-adaptive, not a
-    constant tuned for local mode")."""
+    ``defaultParallelism``: the two agree on a ``session.get_spark``
+    session (both sized from $SPARK_GRAFT_CPUS), and a caller that
+    raises ``spark.sql.shuffle.partitions`` to shrink per-task state on
+    a larger corpus gets that width here instead of a cores-width
+    constant tuned for local mode."""
     spark = df.sparkSession
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(width)
@@ -2830,111 +2827,6 @@ def dedup_tf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "similarity_ann_ivf_nprobe2",
-    """
-    WITH n AS (
-        SELECT vec_id, embedding::DOUBLE[] AS v,
-               sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-        FROM embeddings
-    ),
-    cadc AS (SELECT GREATEST(61, CAST(ceil(sqrt(COUNT(*))) AS BIGINT))
-             AS cad FROM n),
-    cents AS (SELECT vec_id AS cid, v AS cv FROM n, cadc WHERE vec_id % cad = 0),
-    assigned AS (
-        SELECT n.vec_id, n.v, n.nrm, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY n.vec_id
-                   ORDER BY list_dot_product(n.v, c.cv) DESC, c.cid) AS crk
-        FROM n CROSS JOIN cents c
-    ),
-    cells AS (SELECT vec_id, v, nrm, cid FROM assigned WHERE crk = 1),
-    probes AS (SELECT vec_id, cid FROM assigned WHERE crk <= 2 AND vec_id < 10),
-    scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               list_dot_product(q.v, c.v) / (q.nrm * c.nrm) AS cos_raw
-        FROM probes p
-        JOIN n q ON q.vec_id = p.vec_id
-        JOIN cells c ON c.cid = p.cid AND c.vec_id != p.vec_id
-    ),
-    ranked AS (
-        SELECT query_id, neighbor_id, cos_raw,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY cos_raw DESC, neighbor_id) AS INTEGER) AS rk
-        FROM scored
-    )
-    SELECT CAST(query_id AS BIGINT) AS query_id,
-           CAST(neighbor_id AS BIGINT) AS neighbor_id,
-           CAST(CAST(ROUND(cos_raw, 6) AS DECIMAL(10,6)) AS DOUBLE) AS cos_sim, rk
-    FROM ranked WHERE rk <= 5
-    ORDER BY query_id, rk
-    """,
-)
-def similarity_ann_ivf_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF with nprobe=2: queries probe their two nearest cells —
-    the recall/cost knob of inverted-file ANN (recall ↑ with probes,
-    candidates ∝ nprobe/|cells|)."""
-    from pyspark.sql import Window
-
-    emb = S.with_norm(_fan_out(load_testdata(spark, sf_dir, "embeddings")))
-    n = emb.select("vec_id", F.col("_v").alias("v"), F.col("_norm").alias("nrm"))
-    cents = _ivf_centroids(n)  # √N cadence derived in-plan (ADVICE r7)
-    # Cell assignment WITHOUT a ranking window: argmax-by-struct in a
-    # partial-aggregated groupBy.  max(struct(d, -cid)) picks the
-    # best-scoring cell with smallest-cid tie-break — identical
-    # semantics to row_number()=1 over (d DESC, cid ASC) — but plans as
-    # a map-side-combined HashAggregate over the broadcast-join output:
-    # no full-corpus sort exchange, and nothing wider than (vec_id,
-    # cid, d) ever shuffles (the round-2 regression shuffled and cached
-    # 64-dim vectors through the window).  The top-2 probe ranking DOES
-    # still use a window, but only over the |Q|·|cells| probe rows.
-    scored_cells = n.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "cid", S.dot(F.col("v"), F.col("cv")).alias("d")
-    )
-    cellmap = (
-        scored_cells.groupBy("vec_id")
-        .agg(F.max(F.struct(F.col("d"), (-F.col("cid")).alias("nc"))).alias("m"))
-        .select("vec_id", (-F.col("m.nc")).alias("cid"))
-    )
-    cells = cellmap.join(n, "vec_id")
-    crk_w = Window.partitionBy("vec_id").orderBy(F.col("d").desc(), F.col("cid"))
-    probes = (
-        n.filter(F.col("vec_id") < 10)
-        .crossJoin(F.broadcast(cents))
-        .select("vec_id", "cid", S.dot(F.col("v"), F.col("cv")).alias("d"))
-        .withColumn("crk", F.row_number().over(crk_w))
-        .filter(F.col("crk") <= 2)
-        .select(F.col("vec_id").alias("query_id"), F.col("cid").alias("pcid"))
-    )
-    # broadcast only the PROBING vectors (vec_id < 10), not the whole
-    # corpus — the round-2 version broadcast all N query-side rows with
-    # their vectors, which at scale is a full-corpus driver collect
-    q = n.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
-    )
-    cand = cells.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"), F.col("cid").alias("ccid"),
-    )
-    scored = (
-        probes.join(F.broadcast(q), "query_id")
-        .join(cand, (F.col("ccid") == F.col("pcid")) & (F.col("neighbor_id") != F.col("query_id")))
-        .withColumn("cos_raw", S.dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")))
-        .select("query_id", "neighbor_id", "cos_raw")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_raw").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= 5)
-        .select(
-            F.col("query_id").cast("bigint"),
-            F.col("neighbor_id").cast("bigint"),
-            F.round("cos_raw", 6).cast("decimal(10,6)").cast("double").alias("cos_sim"),
-            "rk",
-        )
-        .orderBy("query_id", "rk")
-    )
-
-
-@register(
     "text_repetition_ratios",
     r"""
     WITH t AS (
@@ -4293,11 +4185,10 @@ def dedup_semantic_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     and since round 5 it SCALES with the corpus: k = max(8,
     ceil(N / 64)) on both engines (``_scaled_quantizer_k`` /
     ``_K_SCALED_SQL``), holding cluster sizes ~constant so the pair
-    join is linear in N — the paper's regime, measured sub-quadratic in
-    ``tools/scale_experiment.py``.  Vectors are projected to
-    (vec_id, cluster, v, nrm) BEFORE the pair exchange so the code
-    vectors used in training never shuffle (round-3 ANN-regression
-    lesson)."""
+    join is linear in N — the paper's regime (SCALING.md).  Vectors are
+    projected to (vec_id, cluster, v, nrm) BEFORE the pair exchange so
+    the code vectors used in training never shuffle (round-3
+    ANN-regression lesson)."""
     return semdedup_drops(spark, sf_dir, k=None, iters=3)
 
 
@@ -4306,9 +4197,9 @@ def semdedup_drops(
 ) -> DataFrame:
     """Parameterized SemDeDup body — ``k`` is the scale knob (cluster
     count grows ∝ N to hold cluster sizes, and thus the Σ|cluster|²
-    pair join, linear; see ``tools/scale_experiment.py`` which measures
-    both regimes).  ``k=None`` (the default and the registered query's
-    setting) derives k from the corpus size."""
+    pair join, linear; SCALING.md records both regimes).  ``k=None``
+    (the default and the registered query's setting) derives k from the
+    corpus size."""
     cells = _sq8_kmeans_cells(spark, sf_dir, k=k, iters=iters)
     slim = cells.select("vec_id", "cluster", "v", "nrm")
     a = slim.select(
@@ -9338,112 +9229,6 @@ def sample_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "pipeline_sequence_packing",
-    rf"""
-    WITH keyed AS (
-        SELECT doc_id,
-               len(string_split_regex(text, '\s+')) AS n_tok,
-               md5(CAST(doc_id AS VARCHAR)) AS h
-        FROM documents
-    ),
-    sharded AS (
-        SELECT doc_id, n_tok, h, CAST({{hex12}} AS BIGINT) % 8 AS shard
-        FROM keyed
-    ),
-    run AS (
-        SELECT shard, doc_id, n_tok,
-               SUM(n_tok) OVER (PARTITION BY shard ORDER BY h, doc_id
-                   ROWS UNBOUNDED PRECEDING) AS cum
-        FROM sharded
-    ),
-    marked AS (
-        SELECT shard, n_tok, cum,
-               CASE WHEN (cum - n_tok) // 256 != (cum - 1) // 256
-                    THEN 1 ELSE 0 END AS is_split
-        FROM run
-    )
-    SELECT CAST(shard AS BIGINT) AS shard,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
-           CAST((SUM(n_tok) + 255) // 256 AS BIGINT) AS n_seqs,
-           CAST(SUM(is_split) AS BIGINT) AS n_split_docs,
-           CAST((1000 * SUM(n_tok)) // (256 * ((SUM(n_tok) + 255) // 256))
-                AS BIGINT) AS fill_permille
-    FROM marked
-    GROUP BY shard
-    ORDER BY shard
-    """.format(hex12=_HEX12),
-)
-def pipeline_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing (concat-and-chop, the GPT pretraining layout):
-    documents are concatenated in deterministic hash order within each
-    shard and cut into fixed 256-token training sequences.  Reports,
-    per shard, the sequence count, the docs that straddle a cut
-    boundary (the cross-document-attention contamination a packer
-    trades against padding waste), and the fill rate — the numbers
-    that decide between plain chopping, best-fit packing, and masking
-    strategies for a given corpus length profile.
-
-    Scale shape: ONE hash-partition Exchange(shard) feeds a per-shard
-    running-sum window (shards sort independently in parallel — no
-    global sort), then a map-side-combined groupBy(shard) collapses to
-    8 report rows.  Boundary math is pure non-negative integer
-    division, identical under Spark's truncating div and DuckDB's
-    flooring //."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    keyed = docs.select(
-        "doc_id",
-        F.size(F.split("text", X.TOKEN_RE)).cast("long").alias("n_tok"),
-        F.md5(F.col("doc_id").cast("string").cast("binary")).alias("h"),
-    )
-    sharded = keyed.select(
-        "doc_id",
-        "n_tok",
-        "h",
-        (F.expr("cast(conv(substring(h, 1, 12), 16, 10) as bigint)") % 8).alias(
-            "shard"
-        ),
-    )
-    w = (
-        Window.partitionBy("shard")
-        .orderBy("h", "doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    run = sharded.withColumn("cum", F.sum("n_tok").over(w))
-    marked = run.select(
-        "shard",
-        "n_tok",
-        F.when(
-            F.expr("div(cum - n_tok, 256)") != F.expr("div(cum - 1, 256)"), 1
-        )
-        .otherwise(0)
-        .alias("is_split"),
-    )
-    return (
-        marked.groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tok").alias("n_tokens"),
-            F.sum("is_split").alias("n_split_docs"),
-        )
-        .select(
-            F.col("shard").cast("bigint"),
-            F.col("n_docs").cast("bigint"),
-            F.col("n_tokens").cast("bigint"),
-            F.expr("div(n_tokens + 255, 256)").cast("bigint").alias("n_seqs"),
-            F.col("n_split_docs").cast("bigint"),
-            F.expr("div(1000 * n_tokens, 256 * div(n_tokens + 255, 256))")
-            .cast("bigint")
-            .alias("fill_permille"),
-        )
-        .select(
-            "shard", "n_docs", "n_tokens", "n_seqs", "n_split_docs", "fill_permille"
-        )
-        .orderBy("shard")
-    )
-
-
 def _bm25_ctes(topn: int) -> str:
     """DuckDB CTE chain for the shared BM25 lexical-retrieval tier
     (arithmetic contract documented on ``text_bm25_topk``); terminates
@@ -12280,10 +12065,10 @@ def similarity_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell count) scales with N in the SemDeDup regime to hold cluster
     sizes: the registered query uses the corpus-scaled k
     (``_scaled_quantizer_k`` / ``_K_SCALED_SQL``, the SemDeDup
-    contract) — a fixed k=8 measured exponent ~0.96 at 10x in
-    tools/scale_experiment.py, the quadratic creep the scaled k
-    removes.  Cross-cell true mutual pairs are the recall trade the
-    IVF recall gates measure."""
+    contract) — a fixed k=8 measured exponent ~0.96 at 10x
+    (SCALING.md), the quadratic creep the scaled k removes.  Cross-cell
+    true mutual pairs are the recall trade the IVF recall gates
+    measure."""
     cells = _sq8_kmeans_cells(spark, sf_dir, k=None, iters=3)
     slim = cells.select("vec_id", "cluster", "v", "nrm")
     a = slim.select(
@@ -13554,8 +13339,8 @@ def events_value_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     regression runs over (day, daily-mean) points, so every magnitude
     is bounded by the VALUE DOMAIN and the day count — never by corpus
     size: an earlier per-event formulation overflowed bigint at the
-    10x blow-up because 10^6·(nΣxy − ΣxΣy) grows ∝ N² (caught by
-    tools/scale_experiment.py, NOTES.md round-6) — the daily-mean form
+    10x blow-up because 10^6·(nΣxy − ΣxΣy) grows ∝ N² (NOTES.md
+    round-6) — the daily-mean form
     keeps n ≤ |days| ≈ 31 and y ≤ max value forever.  The slope is one
     floor division over integer cross-moments, bit-identical on both
     engines (both truncate toward zero, verified for negative slopes).

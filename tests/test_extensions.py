@@ -1367,44 +1367,41 @@ def test_temperature_mixture_exact_isqrt_and_flattening(spark, sf_smoke):
 
 
 def test_sequence_packing_python_differential(spark, sf_smoke):
-    """Full Python replay of the packer on the same corpus: shard by
-    md5(doc_id) 48-bit prefix mod 8, concat in (hash, doc_id) order,
-    chop at 256 — every reported number must match exactly."""
-    import hashlib
+    """Full Python replay of ``pipeline_pack_sequences`` on the same
+    corpus: shard by doc_id mod 8, concat in doc_id order, chop at 512
+    — every reported number must match exactly."""
     import re
 
     from sales_azure_data_engineer_project_spark.io import load_testdata
     from sales_azure_data_engineer_project_spark.queries_extensions import (
-        pipeline_sequence_packing,
+        pipeline_pack_sequences,
     )
 
     docs = load_testdata(spark, sf_smoke, "documents").select("doc_id", "text").collect()
     per_shard: dict = {}
     for r in docs:
-        h = hashlib.md5(str(r["doc_id"]).encode()).hexdigest()
-        shard = int(h[:12], 16) % 8
         n_tok = len(re.split(r"\s+", r["text"]))
-        per_shard.setdefault(shard, []).append((h, r["doc_id"], n_tok))
+        per_shard.setdefault(r["doc_id"] % 8, []).append((r["doc_id"], n_tok))
     expect = {}
     for shard, items in per_shard.items():
         items.sort()
         cum = 0
-        splits = 0
-        for _, _, n in items:
+        straddling = 0
+        for _, n in items:
             start, end = cum, cum + n
-            if start // 256 != (end - 1) // 256:
-                splits += 1
+            if n > 0 and start // 512 != (end - 1) // 512:
+                straddling += 1
             cum = end
-        n_seqs = (cum + 255) // 256
+        n_seqs = (cum + 511) // 512
         expect[shard] = (
-            len(items), cum, n_seqs, splits, 1000 * cum // (256 * n_seqs)
+            len(items), cum, n_seqs, straddling, 1000 * cum // (512 * n_seqs)
         )
     got = {
         r["shard"]: (
-            r["n_docs"], r["n_tokens"], r["n_seqs"], r["n_split_docs"],
+            r["n_docs"], r["n_tokens"], r["n_sequences"], r["n_straddling"],
             r["fill_permille"],
         )
-        for r in pipeline_sequence_packing(spark, sf_smoke).collect()
+        for r in pipeline_pack_sequences(spark, sf_smoke).collect()
     }
     assert got == expect
 

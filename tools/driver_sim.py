@@ -1,132 +1,15 @@
-"""Driver-faithful rehearsal + CORRECTNESS-ledger bookkeeping.
+"""Driver-faithful rehearsal of the sf0.01 oracle gate.
 
-Two entry points:
-
-- ``python tools/driver_sim.py [names...]`` — vanilla-session, non-UTC-TZ
-  replay of the driver's oracle gate over every registered query (or the
-  named subset), printing ``FAILS: ...``.
-- ``python tools/driver_sim.py --ledger`` — rebuild ``LEDGER.json`` from
-  the recorded ``CORRECTNESS_r*.json`` rounds (VERDICT r6 "Next" #5): per
-  query the latest driver round, whether that row was green, and how many
-  rounds stale it is; plus the never-driver-checked list.  The pytest gate
-  (`tests/test_scale_ops.py::test_ledger_never_checked_scheduled`) asserts
-  every never-checked query sits inside the driver's next 50-slot window.
-
-``build_ledger()`` is import-safe (no SparkSession) so the pytest gate and
-the rotation planning can call it directly.
+``python tools/driver_sim.py [names...]`` replays the oracle check over
+every registered query (or the named subset) on a vanilla session in a
+non-UTC time zone, printing ``FAILS: ...``.
 """
 
-import glob
-import json
 import os
-import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-# The driver verifies the FIRST N registered queries per round.
-DRIVER_WINDOW = 50
-
-
-def _registered_names() -> list[str]:
-    import __spark_entry__ as m
-
-    return list(m.queries())
-
-
-def build_ledger(names: list[str] | None = None) -> dict:
-    """Per-query driver-CORRECTNESS history summary.
-
-    Returns {"latest_round": R, "queries": {name: {round, green,
-    verdict, rounds_stale}}, "never_checked": [...],
-    "stale_4plus_rounds": [...], "rows_only_green": [...]}.
-    Verdicts: "green" = rows+schema+hash all matched; "green_rows_only"
-    = rows+schema matched but the row carried no hash_match key (the
-    driver's weaker gate for non-SQL-expressible queries) — listed
-    separately in rows_only_green so a rows-only round can't silently
-    satisfy the all-green gate; "red" = anything else.
-    """
-    names = names if names is not None else _registered_names()
-    rounds: dict[int, dict] = {}
-    covers: list[str] = []
-    for f in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        rn = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
-        with open(f) as fh:
-            rounds[rn] = json.load(fh)
-        covers.append(os.path.basename(f))
-    latest_round = max(rounds) if rounds else 0
-    latest: dict[str, tuple[int, str | None]] = {}
-    for rn in sorted(rounds):
-        for q, rec in rounds[rn].items():
-            ok = (
-                bool(rec.get("rows_match"))
-                and bool(rec.get("schema_match"))
-                and rec.get("err") is None
-            )
-            # ADVICE r7: a row with no hash_match key is a rows-only
-            # check (the weaker gate for non-SQL-expressible queries) —
-            # track it as its own verdict instead of silently counting
-            # it hash-green, so a rows-only driver round can't satisfy
-            # the all-green gate unnoticed.
-            if not ok:
-                verdict = "red"
-            elif rec.get("hash_match") is True:
-                verdict = "green"
-            elif rec.get("hash_match") is None:
-                verdict = "green_rows_only"
-            else:
-                verdict = "red"
-            latest[q] = (rn, verdict)
-    queries = {}
-    for n in names:
-        if n in latest:
-            rn, verdict = latest[n]
-            queries[n] = {
-                "round": rn,
-                "green": verdict in ("green", "green_rows_only"),
-                "verdict": verdict,
-                "rounds_stale": latest_round - rn,
-            }
-        else:
-            queries[n] = {
-                "round": None, "green": None, "verdict": None,
-                "rounds_stale": None,
-            }
-    never = [n for n in names if queries[n]["round"] is None]
-    stale = sorted(
-        (n for n in names if queries[n]["round"] is not None
-         and queries[n]["rounds_stale"] is not None
-         and queries[n]["rounds_stale"] >= 4),
-        key=lambda n: (queries[n]["round"], n),
-    )
-    return {
-        "latest_round": latest_round,
-        # which raw CORRECTNESS files this ledger summarizes (VERDICT r9:
-        # make staleness self-describing — a ledger generated before the
-        # round's driver row lands visibly lacks that file)
-        "covers": covers,
-        "registered": len(names),
-        "with_driver_row": len(names) - len(never),
-        "all_latest_rows_green": all(
-            q["green"] for q in queries.values() if q["round"] is not None
-        ),
-        # hash-unverified greens surfaced explicitly (ADVICE r7): empty
-        # means every latest row carried hash_match=True
-        "rows_only_green": sorted(
-            n for n, q in queries.items() if q["verdict"] == "green_rows_only"
-        ),
-        "never_checked": never,
-        "stale_4plus_rounds": stale,
-        "queries": queries,
-    }
-
-
-def write_ledger() -> str:
-    path = os.path.join(REPO, "LEDGER.json")
-    with open(path, "w") as f:
-        json.dump(build_ledger(), f, indent=1, sort_keys=False)
-    return path
 
 
 def simulate(only: list[str] | None = None) -> list[tuple[str, str]]:
@@ -204,16 +87,5 @@ def simulate(only: list[str] | None = None) -> list[tuple[str, str]]:
 
 
 if __name__ == "__main__":
-    args = sys.argv[1:]
-    if args and args[0] == "--ledger":
-        path = write_ledger()
-        led = build_ledger()
-        print(
-            f"wrote {path}: {led['registered']} registered, "
-            f"{led['with_driver_row']} with driver rows, "
-            f"{len(led['never_checked'])} never checked, "
-            f"latest round r{led['latest_round']}"
-        )
-    else:
-        fails = simulate(args or None)
-        print("FAILS:", fails if fails else "none", flush=True)
+    fails = simulate(sys.argv[1:] or None)
+    print("FAILS:", fails if fails else "none", flush=True)

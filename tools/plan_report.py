@@ -44,67 +44,6 @@ def audit(plan: str) -> dict[str, int]:
     return row
 
 
-def strip_cached_lineage(plan: str) -> str:
-    """Keep only what this execution actually ran: drop (a) the subtree
-    printed UNDER every InMemoryRelation node — the cached relation's
-    build lineage, the artifact that made kcore's initial plan read as
-    864 scans — and (b) every AQE ``== Initial Plan ==`` section (the
-    executed string of an AdaptiveSparkPlan prints the pre-adaptive
-    tree after the final one, once per nested adaptive block).
-
-    Depth = index of the first char outside the tree-drawing prefix
-    (spaces, ':', '+', '-').  An InMemoryRelation's children print
-    strictly deeper.  An ``== Initial Plan ==`` section re-bases its
-    subtree at the header's own depth, so its contents print at >= the
-    header depth — but an equal-depth content line is always the
-    re-based section root with an ALL-SPACE prefix, whereas a genuine
-    sibling of the header (the next ``+- == ... ==`` header, or a real
-    operator branch of the enclosing tree) carries branch glyphs
-    (':'/'+') in its prefix.  The inclusive skip therefore terminates
-    on any equal-depth line whose prefix contains a branch glyph
-    (ADVICE r7: depth alone swallowed real executed operators that
-    follow the section at equal indentation)."""
-    prefix = re.compile(r"^[ :+\-]*")
-    out = []
-    skip: tuple[int, bool] | None = None  # (threshold, inclusive)
-    for line in plan.splitlines():
-        if not line.strip():
-            continue
-        m = prefix.match(line)
-        depth = m.end()
-        if skip is not None:
-            thr, inclusive = skip
-            if depth > thr or (
-                inclusive and depth == thr and m.group().strip() == ""
-            ):
-                continue
-            skip = None
-        if "== Initial Plan ==" in line:
-            skip = (depth, True)
-            continue
-        if "InMemoryRelation" in line:
-            skip = (depth, False)
-            continue
-        out.append(line)
-    return "\n".join(out)
-
-
-def executed_audit(df) -> dict[str, int | bool]:
-    """Post-materialization plan shape (VERDICT r6 "Next" #7): execute
-    the query, then read the SAME QueryExecution's plan — now the
-    AQE-final shape with InMemoryTableScan where caches were hit — and
-    count operators with cached-relation lineage stripped, so the
-    numbers are what actually ran, not printed cache definitions."""
-    df.collect()
-    plan = strip_cached_lineage(
-        df._jdf.queryExecution().executedPlan().toString()
-    )
-    row = {k: len(p.findall(plan)) for k, p in PATTERNS.items()}
-    row["imts"] = plan.count("InMemoryTableScan")
-    row["aqe_final"] = "isFinalPlan=true" in plan
-    return row
-
-
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     import __spark_entry__ as m
@@ -120,38 +59,6 @@ def main() -> None:
         rows.append((name, audit(plan)))
         release_caches()
 
-    # Executed (post-materialization) shapes for the most expensive
-    # queries per the latest bench detail — the column that separates
-    # printed lineage from runtime cost.
-    # Since the bench went stratified (1/3 of the fleet per round) the
-    # latest BENCH_DETAIL alone misses known-expensive queries in other
-    # strata, so union it with the newest full-coverage baseline
-    # snapshot (stratified timing wins where both exist — it's fresher).
-    repo_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    detail_path = os.path.join(repo_dir, "BENCH_DETAIL.json")
-    executed: list[tuple[str, float, dict]] = []
-    if os.path.exists(detail_path):
-        import glob
-        import json
-
-        timings: dict[str, float] = {}
-        baselines = sorted(
-            glob.glob(os.path.join(repo_dir, "bench_baseline_r*.json")),
-            key=lambda p: int(p.rsplit("_r", 1)[1].split(".")[0]),
-        )
-        if baselines:
-            with open(baselines[-1]) as f:
-                timings.update(json.load(f).get("queries", {}))
-        with open(detail_path) as f:
-            timings.update(json.load(f).get("queries", {}))
-        qs = m.queries()
-        top = sorted(
-            ((t, n) for n, t in timings.items() if n in qs), reverse=True
-        )[:10]
-        for t_sec, name in top:
-            executed.append((name, t_sec, executed_audit(qs[name](spark, sf_dir))))
-            release_caches()
-            spark.catalog.clearCache()
     cols = [
         "exchange", "bhj", "smj", "shj", "bnlj", "cartesian",
         "window", "wgl_partial", "scan", "pushed_scans",
@@ -187,31 +94,6 @@ def main() -> None:
         out.append(
             f"| {name} | " + " | ".join(str(r[c]) for c in cols) + " |"
         )
-    if executed:
-        out += [
-            "",
-            "## Executed shapes — 10 most expensive queries "
-            "(post-materialization, AQE-final)",
-            "",
-            "The main table prints INITIAL plans, whose lineage is "
-            "re-printed inside every cached-relation reference (an "
-            "iterative query shows hundreds of 'scans' that never run). "
-            "This table re-runs the bench's most expensive queries and "
-            "reads the same QueryExecution AFTER the action: "
-            "InMemoryTableScan (IMTS) counts show cache hits replacing "
-            "that lineage, and join columns show the AQE-final "
-            "strategies.",
-            "",
-            "| query | bench s (sf0.1) | IMTS | Exchange | BHJ | SMJ | "
-            "SHJ | BNLJ | scans | AQE-final |",
-            "|---|---|---|---|---|---|---|---|---|---|",
-        ]
-        for name, t_sec, r in executed:
-            out.append(
-                f"| {name} | {t_sec:.2f} | {r['imts']} | {r['exchange']} "
-                f"| {r['bhj']} | {r['smj']} | {r['shj']} | {r['bnlj']} "
-                f"| {r['scan']} | {'yes' if r['aqe_final'] else 'no'} |"
-            )
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     path = os.path.join(repo, "PLAN_AUDIT.md")
     with open(path, "w") as f:
