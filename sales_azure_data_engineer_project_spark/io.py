@@ -21,15 +21,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .schemas import TESTDATA_TABLES
-
 __all__ = [
     "read_parquet",
     "read_csv",
     "write_parquet",
     "write_bucketed_table",
     "load_testdata",
-    "register_testdata_views",
 ]
 
 
@@ -171,11 +168,3 @@ def _ensure_session_confs(spark: SparkSession) -> None:
             spark.conf.set(k, v)
         except Exception:  # noqa: BLE001 — a locked-down conf is non-fatal
             pass
-
-
-def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:
-    """S2-equivalent: make every corpus table SQL-addressable by name."""
-    for t in TESTDATA_TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            load_testdata(spark, sf_dir, t).createOrReplaceTempView(t)

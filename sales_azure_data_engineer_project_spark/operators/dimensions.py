@@ -21,8 +21,9 @@ one alike:
      vanished in one join, with no null-split and no union (steps 2-4, 6);
      with no committed sink, the sink is the source's own empty typed
      frame (step 2's ``where 1=0``)
-  c. one window keys the new rows densely from max(existing)+1, in
-     natural-column order (step 5; hazard H2)
+  c. ``assign_surrogate_keys`` keys the new rows densely from
+     max(existing)+1, in natural-column order, in one window (step 5;
+     hazard H2)
 
 and leaves step 7 to the caller, which commits the result as a
 snapshot.  The hand-rolled variant is preserved in ``queries_core`` as
@@ -44,6 +45,10 @@ Scale notes:
   (``upsert.guard_unique``) then needs no exchange of its own: a single
   partition already holds each key's rows together.  The initial load
   makes the same assumption: there the new rows are the whole dimension.
+- ``assign_surrogate_keys`` is the engine's one surrogate-key
+  algorithm.  ``scd2.build_scd2_dimension`` keys its opened versions
+  with it too, and so shares the single-partition assumption, history
+  rows included.
 """
 
 from __future__ import annotations
@@ -53,7 +58,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["DimensionSpec", "build_scd1_dimension"]
+__all__ = ["DimensionSpec", "assign_surrogate_keys", "build_scd1_dimension"]
 
 
 @dataclass(frozen=True)
@@ -148,18 +153,30 @@ def build_scd1_dimension(
         *(F.when(from_src, F.col(a)).otherwise(F.col(sink_attr[a])).alias(a)
           for a in spec.attrs),
     )
-    # New natural keys (no sink key) get max(sink key) plus a running
-    # count of new rows in natural-column order (asc, nulls first, as in
-    # dense_surrogate_key).  Both come from the same un-partitioned
-    # window; an empty sink keys from 1.
-    is_new = F.col(spec.key_col).isNull()
+    # New natural keys (no sink key) are keyed after the sink's max key.
+    return assign_surrogate_keys(joined, spec.key_col, order_cols)
+
+
+def assign_surrogate_keys(df: DataFrame, key_col: str, order_cols: list[str]) -> DataFrame:
+    """Key the rows of ``df`` whose ``key_col`` is NULL (hazard H2).
+
+    Each gets max(``key_col``) over the keyed rows plus a running count
+    of NULL-key rows in ``order_cols`` order (asc, nulls first), so new
+    keys are dense from max+1 and reproducible; with no keyed row they
+    key from 1.  Keyed rows keep their keys.  Both come from the same
+    un-partitioned window, so every row passes through one partition:
+    ``df`` must be dimension-sized.  ``key_col`` comes first in the
+    result, the other columns follow in ``df``'s order.
+    """
+    is_new = F.col(key_col).isNull()
     w = Window.orderBy(*order_cols)
-    offset = F.max(spec.key_col).over(
+    offset = F.max(key_col).over(
         w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
     n_new = F.sum(is_new.cast("long")).over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     new_key = F.coalesce(offset, F.lit(0)) + n_new
-    key = F.when(is_new, new_key).otherwise(F.col(spec.key_col))
-    return joined.select(key.cast("long").alias(spec.key_col), *spec.natural_cols)
+    key = F.when(is_new, new_key).otherwise(F.col(key_col))
+    rest = [c for c in df.columns if c != key_col]
+    return df.select(key.cast("long").alias(key_col), *rest)

@@ -6,21 +6,24 @@ SCD-2 is the standard next tier: attribute changes CLOSE the current
 row (valid_to = batch ts, is_current = false) and open a new row, so
 facts can join "as of" any point in time.
 
-Relational formulation (one pass, no Delta needed):
+Relational formulation — one lazy plan, no Delta needed:
 
-    changed   = current ⋈ src where attrs differ     → close these
-    unchanged = current rows not changed              → keep
-    new_rows  = src rows that are new keys OR changed → open (new version)
-    closed    = changed with valid_to=ts, is_current=false
-    result    = unchanged ∪ closed ∪ new_rows ∪ history
+    joined = current ⟗ src on the natural key         (one full outer join)
+    per joined row: the kept row (closed if its attrs changed, else
+                    unchanged or vanished, still current) and, for a new
+                    or changed key, the opened row with a NULL key
+    result = history ∪ those rows, keyed by ``assign_surrogate_keys``
 
 Surrogate keys stay dense across versions (a new version of an existing
-natural key gets a NEW surrogate — the point of SCD-2).
+natural key gets a NEW surrogate — the point of SCD-2): opened rows key
+from max(key)+1 in natural-column order, in the same window the SCD-1
+build uses.  With no sink the build starts from an empty typed one, as
+the SCD-1 build does.
 
-Scale: two hash joins on the natural key + the same dense-key window
-over the (small) opened-rows delta; history rows pass through untouched
-— at 100 TB pair with partitioning on is_current so current-state scans
-skip history.
+The build is a pure plan builder: it starts no Spark job.  Like the
+SCD-1 build it assumes a dimension-sized frame, since the key window is
+un-partitioned and every row — history included — passes through one
+partition.
 """
 
 from __future__ import annotations
@@ -28,8 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.scalar import dense_surrogate_key, next_key_offset
-from .dimensions import DimensionSpec
+from .dimensions import DimensionSpec, assign_surrogate_keys
 
 __all__ = ["build_scd2_dimension"]
 
@@ -55,97 +57,60 @@ def build_scd2_dimension(
     """
     nk = spec.nk_cols
     ts = F.lit(batch_ts)
+    no_ts = F.lit(None).cast("string")
     src = src.select(*spec.natural_cols).distinct()
 
-    if sink is None or not sink.take(1):
-        opened = dense_surrogate_key(src, spec.key_col, spec.natural_cols, 0)
-        return opened.select(
-            spec.key_col,
+    if sink is None:  # an empty typed sink, as build_scd1_dimension's
+        sink = src.where(F.lit(False)).select(
+            F.lit(None).cast("long").alias(spec.key_col),
             *spec.natural_cols,
             ts.alias("valid_from"),
-            F.lit(None).cast("string").alias("valid_to"),
+            no_ts.alias("valid_to"),
             F.lit(True).alias("is_current"),
         )
-
-    history = sink.filter(~F.col("is_current"))
-    current = sink.filter(F.col("is_current"))
-
-    attr_neq = F.lit(False)
-    for a in spec.attrs:
-        attr_neq = attr_neq | ~F.col(f"cur_{a}").eqNullSafe(F.col(a))
-
-    src_marked = src.withColumn("__src_present", F.lit(True))
-    joined = current.select(
-        spec.key_col,
-        *nk,
-        *[F.col(a).alias(f"cur_{a}") for a in spec.attrs],
-        "valid_from",
-    ).join(src_marked, on=nk, how="full_outer")
-    joined = joined.withColumn(
-        "__src_present", F.coalesce(F.col("__src_present"), F.lit(False))
-    )
-
-    # rows to close: key existed in current AND in this batch, attrs changed
-    closed = (
-        joined.filter(F.col(spec.key_col).isNotNull() & _present(src, nk) & attr_neq)
-        .select(
-            spec.key_col,
-            *nk,
-            *[F.col(f"cur_{a}").alias(a) for a in spec.attrs],
-            "valid_from",
-            ts.alias("valid_to"),
-            F.lit(False).alias("is_current"),
-        )
-    )
-    # rows to keep as-is: key existed, attrs identical
-    unchanged = (
-        joined.filter(F.col(spec.key_col).isNotNull() & ~attr_neq & _present(src, nk))
-        .select(
-            spec.key_col,
-            *nk,
-            *[F.col(f"cur_{a}").alias(a) for a in spec.attrs],
-            "valid_from",
-            F.lit(None).cast("string").alias("valid_to"),
-            F.lit(True).alias("is_current"),
-        )
-    )
-    # keys that vanished from this batch stay current (merge never deletes)
-    vanished = (
-        joined.filter(F.col(spec.key_col).isNotNull() & ~_present(src, nk))
-        .select(
-            spec.key_col,
-            *nk,
-            *[F.col(f"cur_{a}").alias(a) for a in spec.attrs],
-            "valid_from",
-            F.lit(None).cast("string").alias("valid_to"),
-            F.lit(True).alias("is_current"),
-        )
-    )
-    # rows to open: brand-new keys, or changed keys (new version)
-    to_open = joined.filter(
-        _present(src, nk) & (F.col(spec.key_col).isNull() | attr_neq)
-    ).select(*spec.natural_cols)
-    offset = next_key_offset(sink, spec.key_col)
-    opened = dense_surrogate_key(to_open, spec.key_col, spec.natural_cols, offset).select(
-        spec.key_col,
-        *spec.natural_cols,
-        ts.alias("valid_from"),
-        F.lit(None).cast("string").alias("valid_to"),
-        F.lit(True).alias("is_current"),
-    )
 
     out_cols = [spec.key_col, *spec.natural_cols, *_META]
-    return (
-        history.select(*out_cols)
-        .unionByName(closed.select(*out_cols))
-        .unionByName(unchanged.select(*out_cols))
-        .unionByName(vanished.select(*out_cols))
-        .unionByName(opened.select(*out_cols))
+    history = sink.filter(~F.col("is_current")).select(*out_cols)
+    cur_attr = {a: f"__cur_{a}" for a in spec.attrs}
+    joined = (
+        sink.filter(F.col("is_current"))
+        .select(
+            spec.key_col,
+            *nk,
+            *(F.col(a).alias(cur_attr[a]) for a in spec.attrs),
+            "valid_from",
+        )
+        .join(src.withColumn("__in_src", F.lit(True)), on=nk, how="full")
     )
+    # Null natural keys never match, so they are always new or vanished.
+    in_cur = F.col(spec.key_col).isNotNull()
+    in_src = F.col("__in_src").isNotNull()
+    same = F.lit(True)
+    for a in spec.attrs:
+        same = same & F.col(cur_attr[a]).eqNullSafe(F.col(a))
+    changed = in_cur & in_src & ~same
 
-
-def _present(src: DataFrame, nk: list[str]):
-    """src-side presence after the full outer join, via the
-    ``__src_present`` marker added before joining (the join coalesces
-    the natural-key columns, so they can't signal side presence)."""
-    return F.col("__src_present")
+    # A current row is kept: closed if the batch changed it, otherwise
+    # unchanged or vanished (MERGE never deletes) and still current.
+    kept = F.when(in_cur, F.struct(
+        spec.key_col,
+        *nk,
+        *(F.col(cur_attr[a]).alias(a) for a in spec.attrs),
+        "valid_from",
+        F.when(changed, ts).alias("valid_to"),
+        (~changed).alias("is_current"),
+    ))
+    # A new or changed natural key opens a version, keyed below.
+    opened = F.when(in_src & (~in_cur | changed), F.struct(
+        F.lit(None).cast("long").alias(spec.key_col),
+        *spec.natural_cols,
+        ts.alias("valid_from"),
+        no_ts.alias("valid_to"),
+        F.lit(True).alias("is_current"),
+    ))
+    rows = joined.select(
+        F.inline(F.filter(F.array(kept, opened), lambda r: r.isNotNull()))
+    )
+    return assign_surrogate_keys(
+        history.unionByName(rows), spec.key_col, spec.natural_cols
+    )

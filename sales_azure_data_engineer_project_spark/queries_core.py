@@ -363,36 +363,6 @@ def top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# H2 pattern: deterministic dense surrogate keys via row_number — the
-# idiomatic replacement for `3(1)_Gold_dim_model.py:120-133`.
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "dim_dense_keys",
-    """
-    SELECT CAST(ROW_NUMBER() OVER (ORDER BY p_brand) AS BIGINT) AS dim_brand_key,
-           p_brand
-    FROM (SELECT DISTINCT p_brand FROM part)
-    ORDER BY dim_brand_key
-    """,
-)
-def dim_dense_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """H2 dense keys via the two-phase ``dense_surrogate_key`` (round-4:
-    replaces the raw un-partitioned ``row_number`` window — same global
-    ``ROW_NUMBER() OVER (ORDER BY p_brand)`` result, but P parallel
-    reducers instead of one, so the same code path survives an
-    initial-load-sized dimension)."""
-    from .functions.scalar import dense_surrogate_key
-
-    part = load_testdata(spark, sf_dir, "part")
-    keyed = dense_surrogate_key(part.select("p_brand").distinct(), "dim_brand_key", ["p_brand"])
-    return keyed.select(
-        F.col("dim_brand_key").cast("bigint"), "p_brand"
-    ).orderBy("dim_brand_key")
-
-
-# ---------------------------------------------------------------------------
 # Subquery shapes + HAVING + exact percentiles (none appear in the
 # reference — §2 notes their absence — but a complete engine needs them)
 # ---------------------------------------------------------------------------

@@ -5,14 +5,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from sales_azure_data_engineer_project_spark.functions import (
-    dense_surrogate_key,
-    next_key_offset,
-    safe_div,
-    split_part,
-)
+from sales_azure_data_engineer_project_spark.functions import safe_div, split_part
 from sales_azure_data_engineer_project_spark.operators.dimensions import (
     DimensionSpec,
+    assign_surrogate_keys,
     build_scd1_dimension,
 )
 from sales_azure_data_engineer_project_spark.operators.upsert import merge_upsert
@@ -32,18 +28,20 @@ def test_safe_div_types_and_null(spark):
     assert vals[0] == 2.5 and vals[1] is None  # long/long → double; x/0 → NULL
 
 
-def test_dense_surrogate_key_deterministic(spark):
-    df = spark.createDataFrame([("b",), ("a",), ("c",)], ["k"]).repartition(3)
-    out1 = {r["k"]: r["id"] for r in dense_surrogate_key(df, "id", ["k"], 10).collect()}
-    out2 = {r["k"]: r["id"] for r in dense_surrogate_key(df, "id", ["k"], 10).collect()}
-    assert out1 == out2 == {"a": 11, "b": 12, "c": 13}
+def test_assign_surrogate_keys_deterministic(spark):
+    def keyed(rows):
+        df = spark.createDataFrame(rows, "id long, k string").repartition(3)
+        return {r["k"]: r["id"] for r in assign_surrogate_keys(df, "id", ["k"]).collect()}
 
-
-def test_next_key_offset_empty_and_nonempty(spark):
-    empty = spark.createDataFrame([], "k long")
-    assert next_key_offset(empty, "k") == 0
-    df = spark.createDataFrame([(5,), (9,)], "k long")
-    assert next_key_offset(df, "k") == 9
+    # a keyed row holding 10 keys the new rows from 11, on every call
+    rows = [(None, "b"), (None, "a"), (10, "z"), (None, "c")]
+    assert keyed(rows) == keyed(rows) == {"a": 11, "b": 12, "c": 13, "z": 10}
+    # no keyed row: keys start at 1
+    assert keyed([(None, "b"), (None, "a")]) == {"a": 1, "b": 2}
+    # keys 5 and 9 held: new rows key from 10 whatever their order
+    assert keyed([(5, "b"), (None, "a"), (9, "c"), (None, "d")]) == {
+        "a": 10, "b": 5, "c": 9, "d": 11
+    }
 
 
 def test_merge_upsert_semantics(spark):
@@ -161,22 +159,22 @@ def test_resize_raw_tensor_exact(spark):
     assert down == t.tobytes()
 
 
-def test_dense_surrogate_key_initial_load_scale(spark):
-    """Round-4: the two-phase path must produce the identical dense
-    global sequence a single ORDER BY window would, at initial-load
-    size (every key new — the case the old single-reducer window
-    choked on), including key order and determinism across calls."""
-    from pyspark.sql import functions as F
-
+def test_assign_surrogate_keys_initial_load_scale(spark):
+    """At initial-load size (every key new) the window yields the dense
+    global sequence in key order, identical across calls."""
     df = spark.range(0, 50_000).select(
-        ((F.col("id") * 2654435761) % 1_000_003).alias("nk")
-    ).distinct()
-    out = dense_surrogate_key(df, "sk", ["nk"], offset=100)
-    rows = sorted((r["nk"], r["sk"]) for r in out.collect())
+        F.lit(None).cast("long").alias("sk"),
+        ((F.col("id") * 2654435761) % 1_000_003).alias("nk"),
+    ).distinct().union(spark.createDataFrame([(100, -1)], "sk long, nk long"))
+
+    def keyed():  # the keyed row at nk = -1 holds key 100: new keys from 101
+        return assign_surrogate_keys(df, "sk", ["nk"]).where("nk >= 0").collect()
+
+    rows = sorted((r["nk"], r["sk"]) for r in keyed())
     n = len(rows)
     assert [sk for _, sk in rows] == list(range(101, 101 + n)), "keys not dense"
     assert all(rows[i][0] < rows[i + 1][0] for i in range(n - 1))
-    again = {r["nk"]: r["sk"] for r in dense_surrogate_key(df, "sk", ["nk"], offset=100).collect()}
+    again = {r["nk"]: r["sk"] for r in keyed()}
     assert again == dict(rows), "not deterministic across invocations"
 
 

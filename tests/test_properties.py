@@ -9,9 +9,9 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from sales_azure_data_engineer_project_spark.functions import dense_surrogate_key
 from sales_azure_data_engineer_project_spark.operators.dimensions import (
     DimensionSpec,
+    assign_surrogate_keys,
     build_scd1_dimension,
 )
 from sales_azure_data_engineer_project_spark.operators.upsert import merge_upsert
@@ -30,8 +30,9 @@ keys = st.lists(
 @SLOW
 @given(nks=keys)
 def test_dense_keys_always_dense_and_unique(spark, nks):
-    df = spark.createDataFrame([(k,) for k in nks], ["nk"]).repartition(4)
-    out = dense_surrogate_key(df, "key", ["nk"], offset=3)
+    rows = [(None, k) for k in nks] + [(3, None)]  # a keyed row: offset 3
+    df = spark.createDataFrame(rows, "key long, nk string").repartition(4)
+    out = assign_surrogate_keys(df, "key", ["nk"]).where("nk IS NOT NULL")
     got = sorted(r["key"] for r in out.collect())
     assert got == list(range(4, 4 + len(nks)))
 
@@ -72,6 +73,54 @@ def test_scd1_two_batches_keys_stable_and_dense(spark, batch1, batch2):
     assert sorted(k2.values()) == list(range(1, len(k2) + 1))
     for nk, key in k1.items():
         assert k2[nk] == key
+
+
+def _scd2_fold(rows, batch, ts):
+    """Pure-Python SCD-2 fold of one batch (``{nk: attr}``) into rows
+    ``(key, nk, attr, valid_from, valid_to, is_current)``."""
+    out, opened = [], []
+    matched = set()
+    for key, nk, attr, vf, vt, cur in rows:
+        if cur and nk is not None and nk in batch:  # NULL never matches
+            matched.add(nk)
+            if batch[nk] != attr:  # changed: close, then open a new version
+                out.append((key, nk, attr, vf, ts, False))
+                opened.append((nk, batch[nk]))
+                continue
+        out.append((key, nk, attr, vf, vt, cur))  # kept, vanished or history
+    opened += [(nk, a) for nk, a in batch.items() if nk is None or nk not in matched]
+    next_key = max((r[0] for r in rows), default=0) + 1
+    nulls_first = lambda r: tuple((v is not None, v or "") for v in r)  # noqa: E731
+    for i, (nk, attr) in enumerate(sorted(opened, key=nulls_first)):
+        out.append((next_key + i, nk, attr, ts, None, True))
+    return out
+
+
+nk_or_null = st.sampled_from(["a", "b", "c", None])
+attr_or_null = st.sampled_from(["x", "y", None])
+
+
+@SLOW
+@given(batches=st.lists(st.dictionaries(nk_or_null, attr_or_null, max_size=4),
+                        min_size=2, max_size=3))
+def test_scd2_matches_python_fold(spark, batches):
+    """Differential: folding batches through ``build_scd2_dimension``
+    yields exactly the rows of a pure-Python SCD-2 fold — changed keys
+    close and reopen, vanished keys stay current, NULL natural keys never
+    match, and new versions key densely from max+1 in natural-column
+    order, nulls first."""
+    from sales_azure_data_engineer_project_spark.operators.scd2 import build_scd2_dimension
+
+    spec = DimensionSpec("d", "key", "nk", ("attr",))
+    dim, want = None, []
+    for i, batch in enumerate(batches):
+        ts = f"2024-0{i + 1}-01"
+        src = spark.createDataFrame(list(batch.items()), "nk string, attr string")
+        dim = build_scd2_dimension(src, dim, spec, batch_ts=ts)
+        want = _scd2_fold(want, batch, ts)
+    cols = ["key", "nk", "attr", "valid_from", "valid_to", "is_current"]
+    got = [tuple(r) for r in dim.select(*cols).collect()]
+    assert sorted(got, key=str) == sorted(want, key=str)
 
 
 @SLOW

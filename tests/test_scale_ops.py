@@ -3,6 +3,7 @@ co-located joins (with physical-plan assertions)."""
 
 from __future__ import annotations
 
+from conftest import count_jobs
 from pyspark.sql import functions as F
 
 from sales_azure_data_engineer_project_spark.io import write_bucketed_table
@@ -114,13 +115,21 @@ def test_scd2_dimension_lifecycle(spark):
 
     spec = DimensionSpec("d", "key", "nk", ("attr",))
     b1 = spark.createDataFrame([("a", "A1"), ("b", "B1")], ["nk", "attr"])
-    d1 = build_scd2_dimension(b1, None, spec, batch_ts="2024-01-01")
+    # a pure plan builder: neither the initial nor an incremental build
+    # starts a Spark job
+    d1, jobs = count_jobs(
+        spark, lambda: build_scd2_dimension(b1, None, spec, batch_ts="2024-01-01")
+    )
+    assert jobs == 0
     rows1 = {(r["nk"], r["attr"]): r for r in d1.collect()}
     assert len(rows1) == 2 and all(r["is_current"] for r in rows1.values())
 
     # batch 2: a changes (close+open), b unchanged, c new
     b2 = spark.createDataFrame([("a", "A2"), ("b", "B1"), ("c", "C1")], ["nk", "attr"])
-    d2 = build_scd2_dimension(b2, d1, spec, batch_ts="2024-02-01")
+    d2, jobs = count_jobs(
+        spark, lambda: build_scd2_dimension(b2, d1, spec, batch_ts="2024-02-01")
+    )
+    assert jobs == 0
     rows = d2.collect()
     by = {(r["nk"], r["attr"]): r for r in rows}
     assert len(rows) == 4  # a:2 versions, b:1, c:1
@@ -810,16 +819,18 @@ def test_iterative_graph_queries_reuse_persisted_edges(spark):
         # ADVICE r10: getRDDStorageInfo also lists localCheckpoint blocks
         # (each graph query materializes ≥2 per run), which made the
         # min_cached floor vacuous — removing the static tracked_persists
-        # no longer failed.  Checkpoint blocks report the bare RDD class
-        # name ('MapPartitionsRDD'); real SQL cache buffers report the
-        # cached plan string.  Count only the latter.
+        # no longer failed.  Checkpoint blocks report exactly the bare RDD
+        # class name ('MapPartitionsRDD'); real SQL cache buffers report
+        # the cached plan string, which may contain that name as a
+        # substring (a persist over a checkpointed frame).  Count only
+        # the latter.
         infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
         cached = sum(
             1
             for r in infos
             if r.numCachedPartitions() > 0
             and r.name() is not None
-            and "MapPartitionsRDD" not in r.name()
+            and r.name() != "MapPartitionsRDD"
         )
         assert cached >= min_cached, f"{name}: only {cached} real persists"
         release_caches()
