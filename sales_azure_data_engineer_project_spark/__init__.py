@@ -10,7 +10,6 @@ re-derives those semantics as a clean, testable, locally-runnable library:
 - ``io``         — sources/sinks: CSV (BOM/quoted-comma/null-safe), Parquet
 - ``operators``  — SCD-1 dimension builder, star fact builder, MERGE
                    fallback, dedup family, similarity search, text analysis
-- ``functions``  — scalar helpers (split_part, safe_div, surrogate keys)
 - ``plans``      — pipeline orchestration (bronze→silver→gold DAG)
 - ``streaming``  — Structured Streaming incremental upsert (foreachBatch)
 """

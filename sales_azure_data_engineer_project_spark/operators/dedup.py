@@ -130,7 +130,7 @@ def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     return (
         sh.groupBy(id_col)
         .agg(F.collect_list(F.xxhash64("sh")).alias("shingles"))
-        .transform(lambda d: tracked_persist(d, batch_rows=2000))
+        .transform(tracked_persist)
     )
 
 
@@ -163,7 +163,7 @@ def _shingled_with_sig(
                 for i in range(n_hashes)
             ],
         )
-        .transform(lambda d: tracked_persist(d, batch_rows=2000))
+        .transform(tracked_persist)
     )
 
 
@@ -518,7 +518,7 @@ def minhash_signatures(
             ).alias(f"h{i}")
             for i in range(n_hashes)
         ]
-    ).transform(lambda d: tracked_persist(d, batch_rows=2000))
+    ).transform(tracked_persist)
 
 
 def _bands_from_sig(

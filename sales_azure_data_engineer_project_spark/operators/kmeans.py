@@ -13,33 +13,29 @@ Iterative Spark formulation:
 
 Only the k×d centroid matrix ever reaches the driver (it must: it is
 broadcast back).  Cost per iteration = one scan emitting ≤ k rows per
-partition — the textbook scalable layout.
+batch — the textbook scalable layout.
 
 Two assignment tiers: the built-in-function fold (oracle-exact,
 interpreted — higher-order lambdas skip codegen) and an Arrow-batched
 numpy pass that fuses assignment with the iteration's partial sums
-(~3× faster per pass on 64-dim vectors; used automatically in the fit
-loop when numpy imports).  Both tiers accumulate distances in the SAME
-index order, so they are bitwise interchangeable — which is what lets
-a SQL oracle replay Arrow-trained codebooks exactly when the inputs
-are integer-valued (exact partial sums).
+(~3× faster per pass on 64-dim vectors; the fit loop always uses it).
+Both tiers accumulate distances in the SAME index order, so they are
+bitwise interchangeable — which is what lets a SQL oracle replay
+Arrow-trained codebooks exactly when the inputs are integer-valued
+(exact partial sums).  The fit is flat: every corpus in the repository
+derives k ≤ 32, so each point is compared with every centroid.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .similarity import as_double_vec
 
-__all__ = [
-    "kmeans_fit",
-    "assign_clusters",
-    "assign_clusters_routed",
-    "subcluster_cells",
-]
+__all__ = ["kmeans_fit", "assign_clusters"]
 
 
 def _centroid_struct(centroids: list[list[float]]):
@@ -80,12 +76,8 @@ def _dists_fold_order(X, C):
     N×k, just sequential over d.)
 
     Cost note: the d-sequential loop streams ~3 full (N×k) float64
-    arrays per dimension — memory-traffic-bound, and it degrades hard
-    when many Python workers contend for bandwidth (round-9 measured
-    the 32-worker subcluster fit at ~10× a single-process run of the
-    same flops).  Use it ONLY where a DuckDB oracle replays the exact
-    fold (``kmeans_fit`` / ``assign_clusters_arrow``, i.e. the flat
-    quantizer path); oracle-free local refinement uses ``_dists_gemm``.
+    arrays per dimension — memory-traffic-bound, which is cheap at the
+    k ≤ 32 every corpus derives and is the price of oracle replay.
     """
     import numpy as np
 
@@ -94,150 +86,6 @@ def _dists_fold_order(X, C):
         diff = X[:, j, None] - C[None, :, j]
         D += diff * diff
     return D
-
-
-def _dists_gemm(X, C):
-    """Squared-L2 distances via the ‖x‖² − 2x·Cᵀ + ‖c‖² expansion — ONE
-    GEMM instead of d bandwidth-bound passes (~d/3× less memory
-    traffic).  Rounding differs from the SQL fold in the last ulp, so
-    this kernel is reserved for the HIERARCHICAL refinement tier, which
-    has no DuckDB twin (the gate keeps every oracle SF on the flat
-    fold-order path).  Determinism holds only for a FIXED BLAS build
-    AND thread configuration: multithreaded GEMM reduction order varies
-    with thread count/CPU dispatch, so near-tie argmins can flip across
-    differently-configured runs (ADVICE r9) — acceptable here because
-    the tier is oracle-free and label identity is not part of any
-    verified contract."""
-    import numpy as np
-
-    D = X @ C.T
-    D *= -2.0
-    D += (X * X).sum(1)[:, None]
-    D += (C * C).sum(1)[None, :]
-    return D
-
-
-# Below this k the √√k routing's two-stage overhead (g super-distances
-# + nprobe member scans) stops paying for itself: at k = 32 the routed
-# per-point cost ≈ isqrt(32) + 2·32/isqrt(32) ≈ 18 vs 32 flat — barely
-# 2×, and the supercell build adds a driver step.  Every oracle SF sits
-# far below this (flat-path gate fires at k_fit ≤ √128 ≈ 11), so the
-# constant only tunes the oracle-free hierarchical tier.
-_ROUTE_MIN_K = 32
-
-
-def _fit_supercells(C, iters: int = 4):
-    """Driver-side Lloyd over the k×d COARSE-CENTROID matrix: groups
-    the k centroids into g = max(2, ⌊√k⌋) super-cells and returns
-    (SC, members) with SC the g'×d super-centroid matrix (empty cells
-    dropped, g' ≤ g) and members[s] the int array of coarse-centroid
-    indices in super-cell s — a partition of range(k).
-
-    This is the √√k routing structure (VERDICT r9 Next #3 / FAISS
-    IMI-style two-level search): in the SemDeDup k ∝ N regime the
-    coarse level already holds √k centroids, so routing a point
-    through √√k super-cells costs ~g + nprobe·k/g ≈ 3√k evals instead
-    of k — N·k^¼ total instead of the designed N^1.5.  Runs entirely
-    on the driver: k ≤ a few thousand rows even at the 1000× tier
-    (k_fit = √31k ≈ 176), microseconds of numpy.  Strided seeds,
-    fixed iteration count — deterministic for a fixed BLAS config
-    (same caveat as _dists_gemm; this helper is oracle-free by
-    construction since only the hierarchical tier calls it)."""
-    import numpy as np
-
-    k = C.shape[0]
-    g = max(2, math.isqrt(k))
-    SC = C[:: max(1, k // g)][:g].copy()
-    for _ in range(iters):
-        a = _dists_gemm(C, SC).argmin(1)
-        sums = np.zeros_like(SC)
-        cnts = np.zeros(SC.shape[0], dtype=np.int64)
-        np.add.at(cnts, a, 1)
-        np.add.at(sums, a, C)
-        nz = cnts > 0
-        SC[nz] = sums[nz] / cnts[nz, None]
-    a = _dists_gemm(C, SC).argmin(1)
-    members = [np.nonzero(a == s)[0] for s in range(SC.shape[0])]
-    keep = [s for s, m in enumerate(members) if m.size]
-    return SC[keep], [members[s] for s in keep]
-
-
-def _routed_argmin(X, C, SC, members, nprobe: int = 2):
-    """Two-stage approximate argmin over centroids C: nearest ``nprobe``
-    super-cells per point (N×g GEMM), then exact search within those
-    cells' members only.  Returns int64 labels indexing into C.
-
-    Approximation contract: the true nearest centroid is found whenever
-    it lives in one of the point's nprobe nearest super-cells — the
-    standard IVF recall trade, ~99% at nprobe=2 on the blow-up corpora
-    (pinned by test_routed_argmin_agreement).  A miss assigns the
-    nearest centroid among the probed cells, which only shifts a vector
-    to an adjacent quantizer cell; downstream ``subcluster_cells``
-    re-bounds any cell the shift oversizes, so the quantizer's size
-    contract survives routing errors.  Work: Σ_s |probe⁻¹(s)|·|members
-    [s]| ≈ nprobe·N·k/g — the per-super-cell loop keeps every distance
-    computation a dense GEMM instead of a ragged per-point gather."""
-    import numpy as np
-
-    n = X.shape[0]
-    g = SC.shape[0]
-    nprobe = min(nprobe, g)
-    Ds = _dists_gemm(X, SC)
-    probe = np.argpartition(Ds, nprobe - 1, axis=1)[:, :nprobe]
-    best = np.full(n, np.inf)
-    lab = np.zeros(n, dtype=np.int64)
-    for s in range(g):
-        pts = np.nonzero((probe == s).any(axis=1))[0]
-        if not pts.size:
-            continue
-        mem = members[s]
-        D = _dists_gemm(X[pts], C[mem])
-        j = D.argmin(1)
-        d = D[np.arange(pts.size), j]
-        upd = d < best[pts]
-        sel = pts[upd]
-        best[sel] = d[upd]
-        lab[sel] = mem[j[upd]]
-    return lab
-
-
-def assign_clusters_routed(
-    df: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-    nprobe: int = 2,
-) -> DataFrame:
-    """√√k-routed variant of ``assign_clusters_arrow`` for the
-    oracle-free hierarchical tier: same (… + cluster int) contract,
-    ~k^¼ distance evals per point instead of k.  Falls back to the
-    exact GEMM argmin below ``_ROUTE_MIN_K`` centroids, where routing
-    overhead exceeds its savings.  NEVER use on an oracle path — both
-    the supercell fit and the member GEMMs accumulate in GEMM order,
-    not the SQL fold order."""
-    import numpy as np
-
-    C = np.asarray(centroids, dtype=np.float64)
-    routed = C.shape[0] >= _ROUTE_MIN_K
-    SC, members = _fit_supercells(C) if routed else (None, None)
-    out_schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
-        + ", cluster int"
-    )
-
-    def part(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.array(pdf[vec_col].to_list(), dtype=np.float64)
-            if routed:
-                a = _routed_argmin(X, C, SC, members, nprobe)
-            else:
-                a = _dists_gemm(X, C).argmin(1)
-            pdf = pdf.copy()
-            pdf["cluster"] = a.astype("int32")
-            yield pdf
-
-    return df.mapInPandas(part, out_schema)
 
 
 def assign_clusters_arrow(
@@ -299,248 +147,6 @@ def _iteration_sums_arrow(
     return df.mapInPandas(part, "cluster int, n long, s array<double>")
 
 
-def _iteration_sums_routed(
-    df: DataFrame, centroids: list[list[float]], vec_col: str, nprobe: int = 2
-) -> DataFrame:
-    """``_iteration_sums_arrow`` with the assignment routed through √√k
-    super-cells (see ``_routed_argmin``) and GEMM distance kernels —
-    the hierarchical coarse fit's per-iteration pass.  The super-cell
-    structure is rebuilt from the CURRENT centroids on the driver each
-    call (centroids move between Lloyd iterations; the rebuild is a
-    k×d numpy fit, noise next to the N-row pass it routes).  Oracle-
-    free tier only: both routing approximation and GEMM rounding break
-    the SQL fold-order replay that ``_iteration_sums_arrow``
-    guarantees."""
-    import numpy as np
-    import pandas as pd
-
-    C = np.asarray(centroids, dtype=np.float64)
-    k = C.shape[0]
-    SC, members = _fit_supercells(C)
-
-    def part(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.array(pdf[vec_col].to_list(), dtype=np.float64)
-            a = _routed_argmin(X, C, SC, members, nprobe)
-            rows = [
-                (c, int((a == c).sum()), X[a == c].sum(axis=0).tolist())
-                for c in range(k)
-                if (a == c).any()
-            ]
-            yield pd.DataFrame(rows, columns=["cluster", "n", "s"])
-
-    return df.mapInPandas(part, "cluster int, n long, s array<double>")
-
-
-def subcluster_cells(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    coarse_col: str = "cluster",
-    vec_col: str = "cvec",
-    target_cell: int = 64,
-    iters: int = 3,
-    k2_cap: int = 128,
-    slack: int = 3,
-    max_levels: int = 6,
-) -> DataFrame:
-    """Recursive local refinement for the SemDeDup regime: split every
-    cell larger than ``slack · target_cell`` with a LOCAL Lloyd fit
-    (numpy, entirely executor-side, k₂ = min(⌈|cell|/target_cell⌉,
-    ``k2_cap``)), relabel ``cluster ← cluster · k2_cap + sub`` (LONG
-    path labels — every level multiplies EVERY label, so depths never
-    collide), and repeat until all cells are bounded or ``max_levels``.
-    Returns (``id_col``, ``coarse_col`` BIGINT) ONLY — the vector
-    column is consumed by the fit and dropped (see ``tagged``).
-
-    Why this exists: SemDeDup holds cluster sizes ~constant (so the
-    Σ|cluster|² pair join stays ∝ N), which forces k ∝ N — and a FLAT
-    Lloyd fit then costs N·k = N²/target_cell distance evaluations per
-    iteration (measured: the fleet's worst 100× row, 102 s, α 0.83).
-    A single fixed second level is NOT enough: the coarse √k Lloyd can
-    leave a mega-cell (measured at 300×: one coarse cell held ~⅓ of
-    the corpus, making the one-shot local fit's n×k₂ distance matrix
-    ~5 GB and pinning one worker for 10+ minutes).  Recursion with a
-    bounded k₂ caps per-level work at |cell|·k2_cap — O(N·k2_cap) per
-    level, ≤ max_levels levels ⇒ linear with a log-ish constant —
-    regardless of how skewed any level's split comes out.
-
-    Scale shape: one (cluster-keyed) shuffle of the corpus at level 1,
-    then FINISHED cells exit — only the oversized tail (a few skewed
-    cells, measured ~4 levels deep on the 300× blow-up) reshuffles at
-    deeper levels; exit-depth is folded into the label's low 3 bits so
-    depths can't collide.  The level-end driver check reads one
-    (MAX, #oversized) row off the persisted level output.  Inside a
-    group the distance matrix is row-chunked (2¹⁶ × k2_cap ≈ 67 MB
-    float64), so even a corpus-sized degenerate cell streams instead
-    of materializing n×k₂.  Nothing reaches the driver; sub-centroids
-    live and die inside their group.
-
-    Determinism: rows sort by ``id_col`` inside the group, seeds are
-    STRIDED over the sorted rows (every ⌊n/k₂⌋-th — a prefix rule
-    collapses on duplicate-storm cells whose leading rows are
-    near-identical), chunk boundaries are fixed, and numpy float64
-    arithmetic is reproducible — two runs yield identical labels.
-
-    Honest limits: a cell of IDENTICAL vectors cannot split (all
-    distances tie → argmin 0) and exits via the no-progress check —
-    the same all-duplicates hazard the LSH hot-bucket cap exists for;
-    the pair join downstream still pays Σ|cell|² on it (an exact-dedup
-    stage upstream, as in ``pipeline_full_train_prep``, is the real
-    valve).  Path labels stay under 2⁶² (coarse · k2_cap^max_levels ·
-    8 ≈ 2¹⁷·2⁴²·2³) but exceed int32 from level 2 — consumers join on
-    the LONG column and output it as BIGINT.
-    """
-    import numpy as np
-
-    from ..caching import tracked_persist
-
-    if not 1 <= max_levels <= 6:
-        # exit depth is folded into the label's low 3 bits as level+1,
-        # with 7 reserved for still-oversized leftovers — a deeper
-        # recursion would silently collide path labels across depths
-        raise ValueError(
-            f"max_levels must be in [1, 6] (3-bit exit tag, 7 reserved"
-            f" for leftovers); got {max_levels}"
-        )
-
-    fields = ", ".join(
-        f"{f.name} {'bigint' if f.name == coarse_col else f.dataType.simpleString()}"
-        for f in df.schema
-    )
-    chunk = 1 << 16
-    bound = slack * target_cell
-
-    def fit_level(pdf):
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        n = len(pdf)
-        parent = int(pdf[coarse_col].iloc[0])
-        k2 = min(-(-n // target_cell), k2_cap)
-        if k2 <= 1 or n <= bound:
-            pdf[coarse_col] = np.int64(parent) * k2_cap
-            return pdf
-        X = np.array(pdf[vec_col].to_list(), dtype=np.float64)
-        # STRIDED deterministic seeds (round-9): the first k₂ rows of
-        # an id-sorted cell are routinely near-identical at web scale —
-        # duplicate storms quantize to the same code vector — and
-        # identical seeds collapse Lloyd into one mega-child that
-        # re-pays a full level per split (measured at 1000×: a 146k-row
-        # child survived level 1 and 802 children stayed oversized).
-        # Striding spreads the seeds across the cell's id-range at zero
-        # cost and is exactly as deterministic as the prefix rule.
-        C = X[:: max(1, n // k2)][:k2].copy()
-        for _ in range(iters):
-            sums = np.zeros_like(C)
-            cnts = np.zeros(k2, dtype=np.int64)
-            for s in range(0, n, chunk):
-                xs = X[s : s + chunk]
-                a = _dists_gemm(xs, C).argmin(1)
-                np.add.at(cnts, a, 1)
-                np.add.at(sums, a, xs)
-            nz = cnts > 0
-            C[nz] = sums[nz] / cnts[nz, None]
-        labels = np.empty(n, dtype=np.int64)
-        for s in range(0, n, chunk):
-            labels[s : s + chunk] = _dists_gemm(X[s : s + chunk], C).argmin(1)
-        pdf[coarse_col] = np.int64(parent) * k2_cap + labels
-        return pdf
-
-    def tagged(frame: DataFrame, tag: int) -> DataFrame:
-        # 3-bit exit-level tag in the low bits: labels from different
-        # recursion depths live in disjoint spaces without the
-        # depth-padding relabel pass the naive scheme would need.
-        # Done parts project to (id, label) HERE: the fit column is
-        # dead weight from the moment a cell exits — keeping it dragged
-        # ~512 B/row of vector through every level cache read, the
-        # final union, AND the eager checkpoint (measured round-9 at
-        # the 1000× tier: the recursion-dominated quantizer phase was
-        # ~34× the coarse fit).  The columnar level cache prunes the
-        # vector column away from these reads for free.
-        return frame.select(
-            F.col(id_col), (F.col(coarse_col) * 8 + tag).alias(coarse_col)
-        )
-
-    out = df.withColumn(coarse_col, F.col(coarse_col).cast("long"))
-    done_parts: list[DataFrame] = []
-    level_caches: list[DataFrame] = []
-    prev_shape = None
-    for level in range(max_levels):
-        # batch_rows: the level cache carries the vector ARRAY column —
-        # the same batch-build allocation spike class measured on the
-        # dedup caches (caching.tracked_persist docstring)
-        out = tracked_persist(
-            out.groupBy(coarse_col).applyInPandas(fit_level, fields),
-            batch_rows=2000,
-        )
-        level_caches.append(out)
-        sizes = out.groupBy(coarse_col).count()
-        over_size = F.when(F.col("count") > bound, F.col("count"))
-        stats = sizes.agg(
-            F.max("count").alias("m"),
-            F.sum((F.col("count") > bound).cast("int")).alias("over"),
-            F.sum(over_size).alias("over_rows"),
-            # decimal(38,0): a sum of int64 hashes overflows LONG under
-            # ANSI mode; 38 digits hold ~10¹⁹ cells' worth of terms.
-            # The hash sits INSIDE the when: xxhash64(NULL) is the seed
-            # (42), not NULL, so hashing the when-column would add 42
-            # per non-oversized cell and the signature would no longer
-            # be the oversized-size multiset (ADVICE r9).
-            F.sum(
-                F.when(F.col("count") > bound, F.xxhash64(F.col("count")))
-                .cast("decimal(38,0)")
-            ).alias("over_sig"),
-        ).first()
-        # stop on success OR no progress: a cell of identical vectors
-        # can never split (all distances tie), and re-running levels on
-        # it only reshuffles its rows and inflates path labels.
-        # "Progress" must mean the MULTISET of oversized cell sizes
-        # changed — (max, #oversized) alone is not enough: a non-max
-        # cell splitting into exactly one still-oversized child leaves
-        # both static and would break the loop early, leaking a cell
-        # above the bound.  Splits never grow a cell, so the multiset
-        # is static iff every oversized parent passed all its rows to
-        # one identically-sized child (the genuine dead end); compare
-        # it via (count, row-sum, commutative xxhash64-of-sizes sum).
-        shape = (stats["over"], stats["over_rows"], stats["over_sig"])
-        if stats["m"] is None or stats["m"] <= bound or shape == prev_shape:
-            done_parts.append(tagged(out, level + 1))
-            break
-        prev_shape = shape
-        # FINISHED cells exit the loop here — only the oversized tail
-        # reshuffles at deeper levels (at level 1 that is typically a
-        # few skewed cells, not the corpus; both reads hit the persist)
-        over = sizes.filter(F.col("count") > bound).select(coarse_col)
-        done_parts.append(tagged(out.join(over, coarse_col, "left_anti"), level + 1))
-        out = out.join(over, coarse_col, "left_semi")
-        if level == max_levels - 1:
-            done_parts.append(tagged(out, 7))  # still-oversized leftovers
-    result = done_parts[0]
-    for part in done_parts[1:]:
-        result = result.unionByName(part)
-    # localCheckpoint (eager): the union's lineage — per-level
-    # applyInPandas chains referenced from every exit branch — renders
-    # exponentially when a downstream plan prints it from several
-    # consumers (the composed-funnel lesson; same per-round pattern as
-    # graph.connected_components).  The checkpointed frame is tiny —
-    # (id, label) only, ~16 B/row — and the level caches feeding it are
-    # already materialized by the size checks, so this is one cheap
-    # block write that makes the quantizer a LEAF for all consumers.
-    ckpt = result.localCheckpoint(eager=True)
-    # Stage-scoped release (VERDICT r9 Next #4): the eager checkpoint
-    # was every level cache's LAST consumer — level N+1's fit read
-    # level N during its own size check, and the done-part reads all
-    # flowed through the checkpoint build.  Level 1 alone caches the
-    # full (id, vector, label) corpus (~1 GB at the 1000× tier), and
-    # holding it to the harness-level release_caches() is exactly the
-    # residency that summed the composed funnel past one 8 GB heap.
-    # Double-unpersist at release_caches() is harmless (no-op).
-    for fr in level_caches:
-        fr.unpersist(blocking=False)
-    return ckpt
-
-
 def kmeans_fit(
     df: DataFrame,
     *,
@@ -550,7 +156,6 @@ def kmeans_fit(
     tol: float = 1e-6,
     seeds: list[list[float]] | None = None,
     compute_inertia: bool = True,
-    routed: bool = False,
 ) -> tuple[list[list[float]], float]:
     """Fit k-means; returns (centroids, inertia).
 
@@ -561,15 +166,10 @@ def kmeans_fit(
     ``compute_inertia=False`` the final quality scan is skipped (one
     job) and inertia returns as ``nan``.
 
-    ``routed=True`` routes each iteration's assignment through √√k
-    super-cells (``_iteration_sums_routed``) when k ≥ ``_ROUTE_MIN_K``
-    — ~k^¼ distance evals per point instead of k, for the hierarchical
-    coarse fit where k ∝ √N makes the exact pass the designed N^1.5
-    component (VERDICT r9 Next #3).  Approximate assignment inside
-    Lloyd only perturbs the centroid trajectory (mini-batch-style);
-    the downstream size contract is enforced by ``subcluster_cells``
-    regardless.  NEVER set on an oracle-replayed fit: routing + GEMM
-    rounding break the fold-order replay.
+    Each iteration is one Arrow pass (``_iteration_sums_arrow``):
+    assignment and per-batch partial sums fused, ≤ k rows per batch to
+    the driver.  Its fold-order distances keep the fit replayable by
+    an unrolled SQL oracle.
     """
     if seeds is None:
         first = df.limit(k).select(as_double_vec(vec_col).alias("v")).collect()
@@ -587,42 +187,13 @@ def kmeans_fit(
         "spark.sql.shuffle.partitions", str(max(1, min(int(prev_conf), 4)))
     )
     try:
-        try:
-            import numpy  # noqa: F401
-
-            have_numpy = True
-        except ImportError:  # pragma: no cover - numpy is baked in
-            have_numpy = False
         for _ in range(max_iter):
             counts = [0] * k
             acc = [[0.0] * dim for _ in range(k)]
-            if have_numpy:
-                # Arrow tier: assignment + per-batch partial sums fused
-                # into one vectorized pass; ≤ k rows per batch reach the
-                # driver (vs k·d posexplode rows through a shuffle)
-                iter_sums = (
-                    _iteration_sums_routed(df, centroids, vec_col)
-                    if routed and k >= _ROUTE_MIN_K
-                    else _iteration_sums_arrow(df, centroids, vec_col)
-                )
-                for r in iter_sums.collect():
-                    c = r["cluster"]
-                    counts[c] += r["n"]
-                    acc[c] = [a + x for a, x in zip(acc[c], r["s"])]
-            else:
-                assigned = assign_clusters(df, centroids, vec_col)
-                # element-wise sums via posexplode: (cluster, dim) partials
-                exploded = assigned.select(
-                    "cluster", F.posexplode(as_double_vec(vec_col)).alias("i", "x")
-                )
-                sums = (
-                    exploded.groupBy("cluster", "i")
-                    .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
-                    .collect()
-                )
-                for r in sums:
-                    acc[r["cluster"]][r["i"]] = r["s"]
-                    counts[r["cluster"]] = r["n"]
+            for r in _iteration_sums_arrow(df, centroids, vec_col).collect():
+                c = r["cluster"]
+                counts[c] += r["n"]
+                acc[c] = [a + x for a, x in zip(acc[c], r["s"])]
             new_centroids = [list(c) for c in centroids]
             for c in range(k):
                 if counts[c]:

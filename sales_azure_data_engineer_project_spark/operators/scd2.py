@@ -24,11 +24,18 @@ The build is a pure plan builder: it starts no Spark job.  Like the
 SCD-1 build it assumes a dimension-sized frame, since the key window is
 un-partitioned and every row — history included — passes through one
 partition.
+
+The batch must hold one row per natural key.  Two attribute variants
+of one non-NULL key would close its current row twice and open two
+current versions, so a count window over the batch raises inside the
+plan instead (the ``raise_error`` pattern of ``upsert.merge_upsert``):
+the action that evaluates the dimension fails, at no job of its own.
+NULL natural keys are exempt, because they never match.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dimensions import DimensionSpec, assign_surrogate_keys
@@ -48,9 +55,10 @@ def build_scd2_dimension(
     """Fold one batch into an SCD-2 dimension.
 
     ``src``: natural key + attrs (one row per natural key — aggregate
-    first).  ``sink``: prior SCD-2 state or None.  ``batch_ts``: the
-    effective timestamp (string, caller-provided so runs are
-    deterministic/replayable — never wall-clock inside the plan).
+    first; evaluating the result raises otherwise).  ``sink``: prior
+    SCD-2 state or None.  ``batch_ts``: the effective timestamp
+    (string, caller-provided so runs are deterministic/replayable —
+    never wall-clock inside the plan).
 
     Output columns: key, natural cols, valid_from, valid_to (NULL =
     open), is_current.
@@ -58,7 +66,7 @@ def build_scd2_dimension(
     nk = spec.nk_cols
     ts = F.lit(batch_ts)
     no_ts = F.lit(None).cast("string")
-    src = src.select(*spec.natural_cols).distinct()
+    src = _one_row_per_key(src.select(*spec.natural_cols).distinct(), nk)
 
     if sink is None:  # an empty typed sink, as build_scd1_dimension's
         sink = src.where(F.lit(False)).select(
@@ -113,4 +121,23 @@ def build_scd2_dimension(
     )
     return assign_surrogate_keys(
         history.unionByName(rows), spec.key_col, spec.natural_cols
+    )
+
+
+def _one_row_per_key(src: DataFrame, nk: list[str]) -> DataFrame:
+    """``src`` unchanged, but evaluating it raises if two rows share a
+    natural key with no NULL column."""
+    dup = F.col("__n") > 1
+    for c in nk:
+        dup = dup & F.col(c).isNotNull()
+    fail = F.raise_error(
+        F.lit(
+            f"SCD-2 batch has two rows for one natural key {nk}; "
+            "aggregate to one row per key first."
+        )
+    )
+    return (
+        src.withColumn("__n", F.count(F.lit(1)).over(Window.partitionBy(*nk)))
+        .filter(F.when(dup, fail).otherwise(F.lit(True)))
+        .drop("__n")
     )

@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import PathCatalog
-from ..functions.scalar import safe_div, split_part
 from ..io import read_csv, read_parquet, write_parquet
 from ..operators.dimensions import DimensionSpec, build_scd1_dimension
 from ..operators.fact import aggregate_to_grain
@@ -60,15 +59,19 @@ def transform_silver(df: DataFrame) -> DataFrame:
     """Bronze → silver enrichment (`2_Silver_Notebook.py:33,49`).
 
     - ``model_category`` = prefix of ``Model_ID`` before '-'
-    - ``Rev_Per_unit``   = Revenue / Units_Sold (long/long → double)
+      (``split(col('Model_ID'),'-')[0]``)
+    - ``Rev_Per_unit``   = Revenue / Units_Sold (long/long → double).
+      The reference ran Spark 3 non-ANSI, where x/0 is NULL; Spark 4
+      defaults to ANSI, where ``/`` throws, so ``try_divide`` keeps
+      the reference's NULL without turning ANSI off.
 
     The reference's display-only string cast of Units_Sold
     (`2_Silver_Notebook.py:45`) is deliberately NOT applied — it never
     reaches the persisted silver table (SURVEY §1.3).
     """
     return (
-        df.withColumn("model_category", split_part("Model_ID", "-", 0))
-        .withColumn("Rev_Per_unit", safe_div("Revenue", "Units_Sold"))
+        df.withColumn("model_category", F.split("Model_ID", "-").getItem(0))
+        .withColumn("Rev_Per_unit", F.try_divide("Revenue", "Units_Sold"))
         # engine enrichment (not in the reference): a true calendar date
         # assembled from the pre-split Day/Month/Year ints, feeding
         # dim_calendar (hazard H1); try_to_date → NULL on invalid dates

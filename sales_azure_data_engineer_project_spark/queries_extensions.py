@@ -3813,15 +3813,6 @@ def pipeline_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ceil-division.
 _QUANTIZER_TARGET_CELL = 64
 _QUANTIZER_K_FLOOR = 8
-# Above this derived k the quantizer switches to the two-level
-# hierarchical fit (coarse √k Lloyd + per-cell local refinement,
-# operators/kmeans.subcluster_cells) — the flat N·k assignment is
-# N²/64 in the SemDeDup k ∝ N regime, measured as the fleet's worst
-# 100× row (102 s, α 0.83) before this gate.  128 keeps every
-# oracle-verified SF (k ≤ 32 at sf0.1) and the k=8 fixed-k callers on
-# the flat path, so the DuckDB flat-Lloyd replays stay bit-exact —
-# the same gate pattern as the IVF cadence floor of 61.
-_HIER_QUANTIZER_K = 128
 _K_SCALED_SQL = (
     f"(SELECT GREATEST({_QUANTIZER_K_FLOOR}, "
     f"(COUNT(*) + {_QUANTIZER_TARGET_CELL - 1}) // {_QUANTIZER_TARGET_CELL}) "
@@ -3842,27 +3833,16 @@ def _sq8_kmeans_cells(
     spark: SparkSession, sf_dir: str, k: int | None = 8, iters: int = 3
 ) -> DataFrame:
     """Train the SQ8-domain k-means quantizer and assign every vector
-    to its cell.  Two output schemas: the flat path (explicit ``k``, or
-    corpus-scaled k ≤ ``_HIER_QUANTIZER_K``) returns a persisted frame
-    (vec_id, v, nrm, cvec, cluster INT); the hierarchical path
-    (``k=None`` AND k > ``_HIER_QUANTIZER_K``) returns (vec_id, v, nrm,
-    cluster BIGINT) — ``cvec`` is consumed by the recursive refinement
-    and dropped, and ``cluster`` is a composite path label (see
-    ``subcluster_cells``).  Consumers must treat cluster as an opaque
-    join key and not read cvec unless they pinned the flat path.
+    to its cell: a persisted frame (vec_id, v, nrm, cvec, cluster INT).
     Shared by ``similarity_ann_ivf_kmeans`` (probe routing) and
     ``dedup_semantic_semdedup`` (cluster-scoped dedup).
 
     ``k=None`` derives k from the corpus size (``_scaled_quantizer_k``,
     one cheap parquet count) — the SemDeDup regime where cluster sizes
-    stay ~constant as N grows.  Seeds are the lowest-k vec_ids (dense
-    ids in the testdata; at production scale you'd seed from a bounded
-    sample instead).  Above ``_HIER_QUANTIZER_K`` the corpus-scaled fit
-    goes TWO-LEVEL (coarse √k Lloyd here + local per-cell refinement in
-    ``operators/kmeans.subcluster_cells``): flat N·k assignment is
-    N²/64 once k ∝ N — the round-8 100× sweep measured it at 102 s /
-    α 0.83 before the gate — and the two balanced levels cut it to
-    ~N^1.5 with the driver holding only √k×d doubles.
+    stay ~constant as N grows; the corpora here derive k ≤ 32 (2,000
+    vectors at sf0.1), and the fit is the flat Lloyd the DuckDB twins
+    replay.  Seeds are the lowest-k vec_ids (dense ids in the testdata;
+    at production scale you'd seed from a bounded sample instead).
 
     ONE scan derives v, norm AND the SQ8 code vector (quantization
     stats broadcast in) — round-3's first cut joined a second
@@ -3871,20 +3851,10 @@ def _sq8_kmeans_cells(
     iteration: one narrow assignment pass (broadcast k×d centroids)
     fused with the (k·d)-row partial-sum shuffle — only the centroid
     matrix ever reaches the driver."""
-    from .operators.kmeans import (
-        assign_clusters_arrow,
-        assign_clusters_routed,
-        kmeans_fit,
-        subcluster_cells,
-    )
+    from .operators.kmeans import assign_clusters_arrow, kmeans_fit
 
-    hier = False
     if k is None:
         k = _scaled_quantizer_k(load_testdata(spark, sf_dir, "embeddings").count())
-        # corpus-scaled k only: the flat N·k assignment is N²/64 once
-        # k tracks N — gate to the two-level fit above the
-        # oracle-verified range (constant note on _HIER_QUANTIZER_K)
-        hier = k > _HIER_QUANTIZER_K
     emb = S.with_norm(_fan_out(load_testdata(spark, sf_dir, "embeddings")))
     stats = S.sq8_stats(load_testdata(spark, sf_dir, "embeddings"))
     base = (
@@ -3897,91 +3867,28 @@ def _sq8_kmeans_cells(
                 S.sq8_quant_expr(F.col("_v")), lambda x: x.cast("double")
             ).alias("cvec"),
         )
-        # batch_rows (round 11): this is the quantizer's ONE wide cache
-        # (v + cvec ≈ 1 KB/row of ARRAY columns) — its per-batch
-        # builders grow by buffer doubling between memory checks, and
-        # at the 3000× tier (15M vectors, 32 concurrent builders) the
-        # build's transient spike heap-OOM'd a stock 8 GB JVM inside
-        # ArrayTransform eval while the cache itself would have spilled
-        # fine (same class as the r9 minhash-cache fix; stacks in
-        # OPTIMIZATION_r11.md)
-        .transform(lambda d: tracked_persist(d, batch_rows=2000))
+        .transform(tracked_persist)
     )
     # deterministic seeds = lowest-k vec_ids, fetched once — sorting the
     # whole frame inside the fit would re-run the sort on every
-    # iteration's scan.  Hierarchical tier fits √k COARSE cells with the
-    # same JVM loop (N·√k work), then refines each coarse cell locally
-    # (operators/kmeans.subcluster_cells) — final cell sizes stay
-    # ~_QUANTIZER_TARGET_CELL, so Σ|cluster|² consumers are unchanged.
-    from math import isqrt
-
-    k_fit = max(2, isqrt(k)) if hier else k
+    # iteration's scan
     seed_rows = (
-        base.filter(F.col("vec_id") < k_fit).orderBy("vec_id").select("cvec").collect()
+        base.filter(F.col("vec_id") < k).orderBy("vec_id").select("cvec").collect()
     )
     # column pruning does NOT reach through mapInPandas: the Arrow fit
     # passes transfer every column of their input, so hand them the
     # (vec_id, cvec) projection — v/nrm are dead weight in every Lloyd
     # iteration's batch stream (half the transferred bytes at 64 dims)
-    fit_in = base.select("vec_id", "cvec")
-    # hier tier: both the coarse fit's per-iteration assignment and the
-    # final assignment route through √√k_fit super-cells (VERDICT r9
-    # Next #3) — the exact N·√k pass was the quantizer's designed N^1.5
-    # component, phase-attributed at 1000× (predicted 6.05× vs measured
-    # 6.08 over a 3.33× step); routing cuts it to ~N·k^¼.  The flat
-    # (oracle-replayed) path keeps the fold-order kernels untouched —
-    # kmeans_fit only routes when routed=True AND k ≥ _ROUTE_MIN_K,
-    # and every oracle SF fits flat (k ≤ 128 ⇒ hier is False).
     centroids, _ = kmeans_fit(
-        fit_in,
-        k=k_fit,
+        base.select("vec_id", "cvec"),
+        k=k,
         vec_col="cvec",
         max_iter=iters,
         tol=0.0,
         seeds=[list(r["cvec"]) for r in seed_rows],
         compute_inertia=False,
-        routed=hier,
     )
-    assigned = (
-        assign_clusters_routed(fit_in, centroids, "cvec")
-        if hier
-        else assign_clusters_arrow(base, centroids, "cvec")
-    )
-    if hier:
-        # the recursion shuffles and persists per level — feed it the
-        # SLIM (id, cvec, label) projection (v/nrm are dead weight in
-        # every level's exchange and cache; measured half the level
-        # bytes at 300×), then join the final labels back to the one
-        # persisted base.  cvec itself is dropped from the output: the
-        # k=None consumers (SemDeDup, the funnel, mutual-kNN) read only
-        # (vec_id, v, nrm, cluster) — the code vectors served the fit.
-        labels = subcluster_cells(
-            assigned,  # already the slim (vec_id, cvec, cluster)
-            id_col="vec_id",
-            coarse_col="cluster",
-            vec_col="cvec",
-            target_cell=_QUANTIZER_TARGET_CELL,
-            iters=iters,
-        ).select("vec_id", "cluster")
-        out = (
-            base.select("vec_id", "v", "nrm")
-            .join(labels, "vec_id")
-            # v is a 64-double ARRAY column — bound the batch builders
-            # (same transient-spike class as the base cache above)
-            .transform(lambda d: tracked_persist(d, batch_rows=2000))
-        )
-        # Stage-scoped release (VERDICT r9 Next #4): one eager count
-        # materializes the slim output, after which the WIDE internal
-        # SQ8 cache (v + cvec ≈ 1 KB/row — ~2 GB at the 1000× tier) has
-        # no remaining consumer: seeds collected, fit iterations done,
-        # labels checkpointed, and the (vec_id, v, nrm) projection just
-        # cached.  Holding it through the downstream Σ|cell|² pair join
-        # was dead residency on the shared heap.  Hier tier only — the
-        # flat (oracle/bench) path keeps its lazy single-action shape.
-        out.count()
-        base.unpersist(blocking=False)
-        return out
-    return assigned.transform(tracked_persist)
+    return assign_clusters_arrow(base, centroids, "cvec").transform(tracked_persist)
 
 
 def _kmeans_cells_cte(
@@ -4223,8 +4130,8 @@ def semdedup_drops(
         .filter(F.col("rk") == 1)
         .select(
             F.col("vec_id").cast("bigint"),
-            # BIGINT: hierarchical path labels exceed int32 above the
-            # gate (ANSI cast would throw); lossless at oracle SFs
+            # BIGINT: the oracle twin casts cluster to BIGINT, so both
+            # pandas paths see int64
             F.col("cluster").cast("bigint"),
             F.col("id_a").cast("bigint").alias("rep_id"),
             F.round("cos_raw", 6)
@@ -4363,22 +4270,6 @@ def _full_train_prep_oracle_sql() -> str:
     """
 
 
-# Above this corpus size the composed funnel switches to STAGED
-# execution: each stage's survivor stats are collected eagerly and
-# every cache is unpersisted right after its last consumer stage —
-# without it, the funnel's CONCURRENT stage caches (text + survivor
-# frames + LSH bands + quantizer state) sum past a single 8 GB heap at
-# the 1000× tier even though every component passes standalone
-# (SCALING.md round-9; VERDICT r9 Next #4).  Below the gate the funnel
-# keeps its measured-faster lazy one-action shape (the sf0.1 A/B: 24 s
-# eager vs 18 s lazy — barrier count, not data), so every oracle/bench
-# SF is untouched; test_funnel_staged_mode_matches_lazy pins value
-# equality across the gate.  1M docs ≈ the 200× tier on this corpus.
-_FUNNEL_STAGE_RELEASE_DOCS = 1_000_000
-# breadcrumb for the pytest that pins staged mode actually firing
-_FUNNEL_LAST_MODE: str | None = None
-
-
 @register("pipeline_full_train_prep", _full_train_prep_oracle_sql())
 def pipeline_full_train_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CAPSTONE composed pipeline (round-4, VERDICT r3 "Next" #8):
@@ -4414,11 +4305,11 @@ def pipeline_full_train_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     are eagerly count()-ed anyway: at 300× the union branches raced to
     first-build them concurrently (getOrCompute has no cross-task
     build dedup) and the duplicated in-flight builds OOM'd the shared
-    heap.  Round-10: in LAZY mode the slim survivor frames (ex, nd,
-    sd, dc) are ``localCheckpoint(eager=False)`` rather than persists
-    — see the ``_hold`` comment in the body (sf0.1 24.0→8.6 s, output
-    identical); STAGED mode keeps real persists for the stage-release
-    machinery.
+    heap.  Round-10: the slim survivor frames (ex, nd, sd, dc) are
+    ``localCheckpoint(eager=False)`` rather than persists — see the
+    survivor-frame comment in the body (sf0.1 24.0→8.6 s, output
+    identical).  This is the one execution shape at every corpus size
+    in the repository (at most 5,000 documents).
 
     Known sf0.1 cost profile (round-5 stage audit): of a ~16 s wall
     only ~9 s is task time spread over ~67 stages whose LARGEST is
@@ -4431,27 +4322,14 @@ def pipeline_full_train_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     a thread overlapping quantizer training with the text chain was
     A/B'd and removed (±0 — the wall is barrier count, not overlap)."""
     corpus = _dedup_corpus(spark, sf_dir)
-    # staged-vs-lazy gate: one metadata-only parquet count-star (the
-    # same cheap hint the corpus-scaled quantizer already pays on
-    # embeddings) — see _FUNNEL_STAGE_RELEASE_DOCS
-    staged = (
-        load_testdata(spark, sf_dir, "documents").count()
-        >= _FUNNEL_STAGE_RELEASE_DOCS
-    )
-    # Survivor-frame holder (round-10 optimization; guide §3.3/§5 —
-    # truncate the plan).  LAZY mode: ``localCheckpoint(eager=False)``
-    # — the slim (doc_id, n_tokens) frames chain dc→sd→nd→ex and SEVEN
-    # report branches re-render that nested lineage (93.5M plan chars
-    # at sf0.01, truncated at the 20M cap, re-rendered per execution),
-    # so Catalyst/AQE orchestration owned the one-action wall: sf0.1
-    # A/B 24.0→8.6 s with collect-identical output — the lazy path now
-    # matches the round-5 "AQE off" floor (8.2 s) WITH AQE on.  STAGED
-    # mode keeps tracked persists: the stage-release machinery below
-    # unpersists each frame after its last consumer, which is the whole
-    # 1000×-tier fix — checkpoint blocks would outlive their stage.
-    _hold = tracked_persist if staged else (
-        lambda d: d.localCheckpoint(eager=False)
-    )
+    # Survivor frames (round-10 optimization; guide §3.3/§5 — truncate
+    # the plan) are ``localCheckpoint(eager=False)``: the slim
+    # (doc_id, n_tokens) frames chain dc→sd→nd→ex and SEVEN report
+    # branches re-render that nested lineage (93.5M plan chars at
+    # sf0.01, truncated at the 20M cap, re-rendered per execution), so
+    # Catalyst/AQE orchestration owned the one-action wall: sf0.1 A/B
+    # 24.0→8.6 s with collect-identical output — this matches the
+    # round-5 "AQE off" floor (8.2 s) WITH AQE on.
     tk = corpus.select(
         "doc_id", "text", F.split(F.col("text"), X.TOKEN_RE).alias("toks")
     )
@@ -4462,25 +4340,8 @@ def pipeline_full_train_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("stop_hits"),
     ]
-    if staged:
-        # STAGED tier (round 11, VERDICT r10 "Next" #5): cache only the
-        # per-doc SCALAR stats — at 15M docs (3000×) the raw-text cache
-        # build is a genuine heap OOM on a stock 8 GB JVM (32 concurrent
-        # batch builders over ~200 B texts; measured, stacks in
-        # OPTIMIZATION_r11.md).  The three text consumers (exact-dedup
-        # window, LSH bands, contamination shingles) re-scan the corpus
-        # parquet and attach their survivor stats by equi-join instead —
-        # at 100 TB a sequential re-scan is the cheap side of that trade
-        # (guide §5: cache only when recompute beats memory pressure).
-        base = tk.select("doc_id", *stat_cols).transform(tracked_persist)
-    else:
-        # LAZY tier: one wide (raw-text) cache, all consumers share it.
-        # batch_rows: the string column's per-batch builder has the same
-        # doubling-allocation spike the 1000× tier measured on the
-        # dedup array caches (caching.tracked_persist docstring)
-        base = tk.select("doc_id", "text", *stat_cols).transform(
-            lambda d: tracked_persist(d, batch_rows=2000)
-        )
+    # one wide (raw-text) cache, all consumers share it
+    base = tk.select("doc_id", "text", *stat_cols).transform(tracked_persist)
     # Materialize the base cache EAGERLY (one count job): the
     # final report is ONE action whose union branches (stage counts,
     # bands, contamination) otherwise race to build this cache
@@ -4492,22 +4353,14 @@ def pipeline_full_train_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_pass = (F.col("n_tokens") >= 20) & (F.col("ttr") >= 300)
     l_pass = q_pass & (F.col("stop_hits") * 20 >= F.col("n_tokens"))
     lang = base.filter(l_pass)
-    # exact-dedup input: (doc_id, text, n_tokens) of lang survivors —
-    # from the text cache directly in LAZY mode, by re-scan + equi-join
-    # in STAGED mode (same rows either way)
-    ex_in = (
-        corpus.join(lang.select("doc_id", "n_tokens"), "doc_id")
-        if staged
-        else lang
-    )
     ex = (
-        ex_in.withColumn(
+        lang.withColumn(
             "keep",
             F.min("doc_id").over(Window.partitionBy(F.md5(F.col("text").cast("binary")))),
         )
         .filter(F.col("doc_id") == F.col("keep"))
         .select("doc_id", "n_tokens")
-        .transform(_hold)
+        .localCheckpoint(eager=False)
     )
     # Stage survivor frames persist (doc_id, n_tokens) ONLY — two
     # bigints per doc.  Round-8: the pre-r8 funnel persisted the full
@@ -4522,10 +4375,7 @@ def pipeline_full_train_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dedup) and the multiplied sort memory OOMs the shared heap —
     # every stage fits with GBs to spare when built once
     ex.count()
-    # text source for the survivor semi-joins: the wide cache in LAZY
-    # mode, a fresh corpus scan in STAGED mode (no text cache exists)
-    txt_src = corpus if staged else base
-    ex_txt = txt_src.join(ex.select("doc_id"), "doc_id", "left_semi")
+    ex_txt = base.join(ex.select("doc_id"), "doc_id", "left_semi")
     bands = D.minhash_bands(ex_txt, "doc_id", "text", n_hashes=8, band_size=4)
     # Production-shaped LSH config (VERDICT r5 "Next" #4): the hot-bucket
     # star-emission valve is ON in the composed funnel.  The drop set is
@@ -4543,7 +4393,7 @@ def pipeline_full_train_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # drop sets are data-dependent (duplicate/contamination volume):
     # no hard broadcast hints anywhere in the funnel — AQE decides
-    nd = ex.join(lsh_drops, "doc_id", "left_anti").transform(_hold)
+    nd = ex.join(lsh_drops, "doc_id", "left_anti").localCheckpoint(eager=False)
     # SemDeDup restricted to the docs still IN the pipeline: the
     # quantizer is trained on the full embedding space (reusable across
     # runs), but the Σ|cluster|² pair join only pays for near-dedup
@@ -4557,9 +4407,7 @@ def pipeline_full_train_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     slv = (
         cells.select("vec_id", "cluster", "v", "nrm")
         .join(nd.select(F.col("doc_id").alias("vec_id")), "vec_id")
-        # v is a 64-double ARRAY column — bound the batch builders
-        # (same transient-spike class as the quantizer's wide cache)
-        .transform(lambda d: tracked_persist(d, batch_rows=2000))
+        .transform(tracked_persist)
     )
     a_side = slv.select(
         F.col("vec_id").alias("id_a"),
@@ -4577,14 +4425,14 @@ def pipeline_full_train_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("vec_id").alias("doc_id"))
         .distinct()
     )
-    sd = nd.join(sem_drops, "doc_id", "left_anti").transform(_hold)
+    sd = nd.join(sem_drops, "doc_id", "left_anti").localCheckpoint(eager=False)
     is_eval = (F.col("doc_id") % 10 == 0) & (F.col("doc_id") < 100000)
     ev_spans = (
         D.shingle_explode(corpus.filter(is_eval), "doc_id", "text", 8)
         .select(F.xxhash64("sh").alias("h"))
         .distinct()
     )
-    sd_txt = txt_src.join(sd.select("doc_id"), "doc_id", "left_semi")
+    sd_txt = base.join(sd.select("doc_id"), "doc_id", "left_semi")
     contam = (
         D.shingle_explode(sd_txt.filter(~is_eval), "doc_id", "text", 8)
         .select("doc_id", F.xxhash64("sh").alias("h"))
@@ -4592,7 +4440,7 @@ def pipeline_full_train_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .distinct()
     )
-    dc = sd.join(contam, "doc_id", "left_anti").transform(_hold)
+    dc = sd.join(contam, "doc_id", "left_anti").localCheckpoint(eager=False)
     wsh = (
         Window.partitionBy("shard")
         .orderBy("doc_id")
@@ -4682,48 +4530,6 @@ def pipeline_full_train_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     s4 = nd.agg(F.inline(F.array(_row(4, "near_dedup", _cnt(true), _tok(true)))))
     s5 = sd.agg(F.inline(F.array(_row(5, "semantic_dedup", _cnt(true), _tok(true)))))
     s6 = dc.agg(F.inline(F.array(_row(6, "decontaminate", _cnt(true), _tok(true)))))
-    global _FUNNEL_LAST_MODE
-    if staged:
-        # STAGED tier (≥ _FUNNEL_STAGE_RELEASE_DOCS): run the stage
-        # aggregates eagerly IN DEPENDENCY ORDER and unpersist each
-        # cache right after its last consumer completes.  Values are
-        # identical to the lazy union — same frames, same expressions —
-        # only materialization timing and cache lifetime change.
-        _FUNNEL_LAST_MODE = "staged"
-        # Round 11 (VERDICT r10 "Next" #6): s012/s3/s4 merged into ONE
-        # action — base and ex are already eagerly built (the count()
-        # barriers above), so the merged job's branches read caches
-        # instead of racing to build them, and neither frame's cache
-        # lifetime moves (ex is released after s4 either way; base
-        # lives to s6 regardless).  6 serial stage barriers → 4.
-        # s5/s6 stay separate: merging them would force nd+slv (s5's
-        # inputs) to stay cached until dc completes — exactly the
-        # working-set growth the staged mode exists to avoid — and
-        # their union would race to first-build the slim sd cache.
-        lit_rows = list(
-            s012.unionByName(s3).unionByName(s4).collect()
-        )                                        # base+ex stats, builds nd
-        # round 11: the slim base cache's LAST consumer is s012 (the
-        # text semi-joins read fresh corpus scans in staged mode), so
-        # it is released here instead of after s6
-        base.unpersist(blocking=False)
-        ex.unpersist(blocking=False)             # nd built, ex_txt consumed
-        slv.count()                              # survivor cells cached
-        cells.unpersist(blocking=False)          # slv was its only consumer
-        lit_rows += s5.collect()                 # materializes sd (pair join)
-        nd.unpersist(blocking=False)
-        slv.unpersist(blocking=False)
-        lit_rows += s6.collect()                 # materializes dc (contam)
-        sd.unpersist(blocking=False)
-        lit_df = spark.createDataFrame(
-            lit_rows, "stage_idx int, stage string, n_units bigint, n_tokens bigint"
-        )
-        # pack + splits read dc, the ONE cache the final action needs —
-        # the harness-level release_caches() frees it after collection
-        return (
-            lit_df.unionByName(pack).unionByName(splits).orderBy("stage_idx")
-        )
-    _FUNNEL_LAST_MODE = "lazy"
     return (
         s012.unionByName(s3)
         .unionByName(s4)
@@ -12103,8 +11909,8 @@ def similarity_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("src").cast("bigint").alias("vec_a"),
             F.col("dst").cast("bigint").alias("vec_b"),
-            # BIGINT: hierarchical path labels exceed int32 above the
-            # gate (ANSI cast would throw); lossless at oracle SFs
+            # BIGINT: the oracle twin casts cluster to BIGINT, so both
+            # pandas paths see int64
             F.col("cluster").cast("bigint"),
             F.round("cos_raw", 6).cast("decimal(10,6)").cast("double").alias("cos_sim"),
             F.col("rk").alias("rk_ab"),

@@ -472,243 +472,6 @@ def test_semdedup_drop_list_vs_brute(spark, sf_smoke):
     assert out, "expected a non-empty drop list on the smoke corpus"
 
 
-def test_hierarchical_quantizer_partition_contract(spark, monkeypatch):
-    """Round-8 scale fix: above _HIER_QUANTIZER_K the corpus-scaled
-    quantizer goes hierarchical (coarse √k Lloyd + RECURSIVE bounded
-    local refinement, ~linear total work vs the flat N²/64; the
-    recursion is what survives coarse-Lloyd skew — the 300× probe
-    measured a one-shot second level dying on a ⅓-corpus mega-cell).
-    Forced on at sf0.01 via a lowered gate, the hierarchical cells must
-    still satisfy every contract the SemDeDup pair join relies on:
-
-    - exact partition: every vector labeled exactly once;
-    - bounded cells: max |cell| ≤ slack·target_cell so Σ|cluster|²
-      remains ∝ N (identical-vector cells are the documented escape);
-    - identical vectors co-locate (argmin ties break identically), so
-      planted exact duplicates stay catchable;
-    - deterministic across runs.
-    """
-    from collections import Counter
-
-    import sales_azure_data_engineer_project_spark.queries_extensions as QE
-    from sales_azure_data_engineer_project_spark.queries_extensions import (
-        _QUANTIZER_TARGET_CELL,
-        _sq8_kmeans_cells,
-    )
-
-    monkeypatch.setattr(QE, "_HIER_QUANTIZER_K", 4)  # derived k=8 > 4 → hier
-    sf = "/root/testdata/sf0.01"
-    rows = _sq8_kmeans_cells(spark, sf, k=None, iters=3).select(
-        "vec_id", "cluster", "v"
-    ).collect()
-
-    n_emb = spark.read.parquet(f"{sf}/embeddings.parquet").count()
-    assert len(rows) == n_emb
-    assert len({r["vec_id"] for r in rows}) == n_emb
-
-    sizes = Counter(r["cluster"] for r in rows)
-    assert max(sizes.values()) <= 3 * _QUANTIZER_TARGET_CELL
-    assert len(sizes) > 1
-
-    # identical vectors must share a final cell (deterministic argmin)
-    by_vec: dict[tuple, set] = {}
-    for r in rows:
-        by_vec.setdefault(tuple(r["v"]), set()).add(r["cluster"])
-    assert all(len(cells) == 1 for cells in by_vec.values())
-
-    rows2 = _sq8_kmeans_cells(spark, sf, k=None, iters=3).select(
-        "vec_id", "cluster"
-    ).collect()
-    assert sorted((r["vec_id"], r["cluster"]) for r in rows2) == sorted(
-        (r["vec_id"], r["cluster"]) for r in rows
-    )
-
-
-def test_subcluster_cells_recursion_splits_mega_cell(spark):
-    """The recursive splitter must take a single degenerate coarse cell
-    (everything labeled 0, k₂ forced tiny by a low cap) down to bounded
-    cells across MULTIPLE levels — the 300× mega-cell scenario in
-    miniature — while preserving the exact-partition contract."""
-    from collections import Counter
-
-    import numpy as np
-
-    from sales_azure_data_engineer_project_spark.operators.kmeans import (
-        subcluster_cells,
-    )
-
-    n, d = 2000, 8
-    rng = np.random.RandomState(7)
-    data = [
-        (i, [float(x) for x in rng.rand(d)], 0) for i in range(n)
-    ]
-    df = spark.createDataFrame(data, "vec_id long, cvec array<double>, cluster int")
-
-    out = subcluster_cells(
-        df,
-        id_col="vec_id",
-        coarse_col="cluster",
-        vec_col="cvec",
-        target_cell=16,
-        iters=2,
-        k2_cap=4,  # forces ⌈2000/16⌉=125 ≫ 4 → recursion depth ≥ 4
-        slack=3,
-        max_levels=6,
-    ).collect()
-
-    assert len(out) == n
-    assert len({r["vec_id"] for r in out}) == n
-    sizes = Counter(r["cluster"] for r in out)
-    assert max(sizes.values()) <= 3 * 16
-    # depth actually recursed: with cap 4 one level can only make 4
-    # cells of ~500 rows — far above the bound — so multiple levels ran
-    assert len(sizes) > 16
-
-
-def test_subcluster_cells_rejects_depth_beyond_tag_space(spark):
-    """max_levels > 6 would overflow the 3-bit exit tag (7 is reserved
-    for still-oversized leftovers) and collide path labels across
-    recursion depths — the call must fail loudly at entry."""
-    import pytest as _pytest
-
-    from sales_azure_data_engineer_project_spark.operators.kmeans import (
-        subcluster_cells,
-    )
-
-    df = spark.createDataFrame(
-        [(0, [0.0, 1.0], 0)], "vec_id long, cvec array<double>, cluster int"
-    )
-    for bad in (0, 7):
-        with _pytest.raises(ValueError, match="max_levels"):
-            subcluster_cells(
-                df, id_col="vec_id", coarse_col="cluster", vec_col="cvec",
-                max_levels=bad,
-            )
-
-
-def test_routed_argmin_agreement():
-    """√√k routing contract (VERDICT r9 Next #3): the two-stage argmin
-    must (a) partition the centroid set exactly across super-cells,
-    (b) agree with the exact argmin on ≥97% of clustered points at
-    nprobe=2 — the IVF recall trade the hierarchical tier accepts —
-    and (c) never report a distance smaller than the exact minimum
-    (it searches a subset, so its best is ≥ the true best), with every
-    miss assigning a probed cell's genuine nearest member.  Numpy-only:
-    the kernels run inside mapInPandas workers; clustered data mirrors
-    the SQ8-coded embedding geometry the tier actually sees."""
-    import numpy as np
-
-    from sales_azure_data_engineer_project_spark.operators.kmeans import (
-        _dists_gemm,
-        _fit_supercells,
-        _routed_argmin,
-    )
-
-    rng = np.random.default_rng(7)
-    k, d, per = 64, 16, 60
-    centers = rng.normal(size=(k, d)) * 4.0
-    X = np.repeat(centers, per, axis=0) + rng.normal(size=(k * per, d)) * 0.6
-    C = centers + rng.normal(size=(k, d)) * 0.05
-
-    SC, members = _fit_supercells(C)
-    covered = np.sort(np.concatenate(members))
-    assert covered.tolist() == list(range(k))  # exact partition
-    assert 2 <= SC.shape[0] <= int(np.sqrt(k)) + 1
-
-    exact = _dists_gemm(X, C)
-    exact_lab = exact.argmin(1)
-    routed_lab = _routed_argmin(X, C, SC, members, nprobe=2)
-    agree = (routed_lab == exact_lab).mean()
-    assert agree >= 0.97, f"routed/exact agreement {agree:.3f}"
-    # subset-search property: routed distance ≥ exact minimum, always
-    n = np.arange(len(X))
-    assert (exact[n, routed_lab] >= exact[n, exact_lab] - 1e-12).all()
-    # determinism: same inputs, same labels
-    assert (routed_lab == _routed_argmin(X, C, SC, members, nprobe=2)).all()
-
-
-def test_assign_clusters_routed_spark_contract(spark):
-    """Spark-side routed assignment: same schema contract as
-    assign_clusters_arrow, high agreement with the exact assignment on
-    clustered data, deterministic across runs, and the k <
-    _ROUTE_MIN_K fallback is the EXACT GEMM argmin (no routing layer
-    at small k, where every oracle-SF fit lives)."""
-    import numpy as np
-
-    from sales_azure_data_engineer_project_spark.operators.kmeans import (
-        _ROUTE_MIN_K,
-        assign_clusters_arrow,
-        assign_clusters_routed,
-    )
-
-    rng = np.random.default_rng(11)
-    k, d, per = 48, 8, 25
-    assert k >= _ROUTE_MIN_K
-    centers = rng.normal(size=(k, d)) * 4.0
-    pts = np.repeat(centers, per, axis=0) + rng.normal(size=(k * per, d)) * 0.5
-    df = spark.createDataFrame(
-        [(i, row.tolist()) for i, row in enumerate(pts)],
-        "vec_id long, embedding array<double>",
-    ).repartition(4)
-    cents = [c.tolist() for c in centers]
-
-    routed = dict(
-        (r["vec_id"], r["cluster"])
-        for r in assign_clusters_routed(df, cents).collect()
-    )
-    exact = dict(
-        (r["vec_id"], r["cluster"])
-        for r in assign_clusters_arrow(df, cents).collect()
-    )
-    assert set(routed) == set(exact) and len(routed) == len(pts)
-    agree = sum(routed[i] == exact[i] for i in routed) / len(routed)
-    assert agree >= 0.95, f"routed/exact agreement {agree:.3f}"
-    routed2 = dict(
-        (r["vec_id"], r["cluster"])
-        for r in assign_clusters_routed(df, cents).collect()
-    )
-    assert routed == routed2
-
-    # below the gate the routed entry point IS the exact argmin
-    few = [c.tolist() for c in centers[: _ROUTE_MIN_K - 1]]
-    small_routed = dict(
-        (r["vec_id"], r["cluster"])
-        for r in assign_clusters_routed(df, few).collect()
-    )
-    small_exact = dict(
-        (r["vec_id"], r["cluster"])
-        for r in assign_clusters_arrow(df, few).collect()
-    )
-    assert small_routed == small_exact
-
-
-def test_funnel_staged_mode_matches_lazy(spark):
-    """VERDICT r9 Next #4: above _FUNNEL_STAGE_RELEASE_DOCS the funnel
-    collects stage stats eagerly and releases each cache after its last
-    consumer (the 1000× tier OOM'd one 8 GB heap only because the
-    CONCURRENT stage caches summed past it).  Staged execution must be
-    a pure materialization-order change: identical rows to the lazy
-    one-action shape, and the breadcrumb must prove the staged branch
-    actually fired."""
-    import sales_azure_data_engineer_project_spark.queries_extensions as QE
-
-    sf = "/root/testdata/sf0.001"
-
-    def rows():
-        out = QE.pipeline_full_train_prep(spark, sf).collect()
-        return sorted(tuple(r) for r in out)
-
-    lazy = rows()
-    assert QE._FUNNEL_LAST_MODE == "lazy"
-    try:
-        QE._FUNNEL_STAGE_RELEASE_DOCS, saved = 0, QE._FUNNEL_STAGE_RELEASE_DOCS
-        staged = rows()
-        assert QE._FUNNEL_LAST_MODE == "staged"
-    finally:
-        QE._FUNNEL_STAGE_RELEASE_DOCS = saved
-    assert staged == lazy
-
-
 def test_bpe_merges_vs_python_reference(spark, sf_smoke):
     """Third formulation cross-check: the registered BPE query (Spark
     F.aggregate fold; DuckDB replays it as windows) must equal a plain
@@ -1050,7 +813,6 @@ def test_ccnet_buckets_partition_and_order(spark, sf_smoke):
     are score ranges, so ordering is structural — a violation means the
     cutoff extraction is wrong)."""
     import __spark_entry__ as entry_mod
-    from sales_azure_data_engineer_project_spark import functions as _  # noqa: F401
     from sales_azure_data_engineer_project_spark.io import load_testdata
     from pyspark.sql import functions as F
 

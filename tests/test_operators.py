@@ -5,27 +5,35 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from sales_azure_data_engineer_project_spark.functions import safe_div, split_part
 from sales_azure_data_engineer_project_spark.operators.dimensions import (
     DimensionSpec,
     assign_surrogate_keys,
     build_scd1_dimension,
 )
 from sales_azure_data_engineer_project_spark.operators.upsert import merge_upsert
+from sales_azure_data_engineer_project_spark.plans.pipeline import transform_silver
+
+
+def _silver(spark, rows):
+    """``transform_silver`` over raw rows of (Model_ID, Revenue, Units_Sold)."""
+    raw = spark.createDataFrame(rows, "Model_ID string, Revenue long, Units_Sold long")
+    return transform_silver(
+        raw.select("*", *(F.lit(1).alias(c) for c in ("Day", "Month", "Year")))
+    )
 
 
 def test_split_part(spark):
-    df = spark.createDataFrame([("BMW-M1",), ("KIA-M9",), ("NODELIM",)], ["m"])
-    got = {r["m"]: r["cat"] for r in df.select("m", split_part("m", "-", 0).alias("cat")).collect()}
+    rows = [(m, 1, 1) for m in ("BMW-M1", "KIA-M9", "NODELIM")]
+    out = _silver(spark, rows)
+    got = {r["Model_ID"]: r["model_category"] for r in out.collect()}
     assert got == {"BMW-M1": "BMW", "KIA-M9": "KIA", "NODELIM": "NODELIM"}
 
 
 def test_safe_div_types_and_null(spark):
-    df = spark.createDataFrame([(10, 4), (3, 0)], ["a", "b"])
-    out = df.select(safe_div("a", "b").alias("q"))
-    assert dict(out.dtypes)["q"] == "double"
-    vals = [r["q"] for r in out.collect()]
-    assert vals[0] == 2.5 and vals[1] is None  # long/long → double; x/0 → NULL
+    out = _silver(spark, [("A-1", 10, 4), ("B-1", 3, 0)])
+    assert dict(out.dtypes)["Rev_Per_unit"] == "double"
+    vals = {r["Model_ID"]: r["Rev_Per_unit"] for r in out.collect()}
+    assert vals == {"A-1": 2.5, "B-1": None}  # long/long → double; x/0 → NULL
 
 
 def test_assign_surrogate_keys_deterministic(spark):

@@ -3,6 +3,7 @@ co-located joins (with physical-plan assertions)."""
 
 from __future__ import annotations
 
+import pytest
 from conftest import count_jobs
 from pyspark.sql import functions as F
 
@@ -151,6 +152,35 @@ def test_scd2_dimension_lifecycle(spark):
     d3 = build_scd2_dimension(b3, d2, spec, batch_ts="2024-03-01")
     cur = {r["nk"]: r["attr"] for r in d3.filter("is_current").collect()}
     assert cur == {"a": "A2", "b": "B1", "c": "C1"}
+
+
+def test_scd2_rejects_two_variants_of_one_key(spark):
+    """A batch with two attribute variants of one current natural key
+    would close that row twice and open two current versions; the
+    build must raise when the plan runs instead.  NULL natural keys
+    never match, so two of them are not a violation."""
+    from sales_azure_data_engineer_project_spark.operators.dimensions import (
+        DimensionSpec,
+    )
+    from sales_azure_data_engineer_project_spark.operators.scd2 import (
+        build_scd2_dimension,
+    )
+
+    spec = DimensionSpec("d", "key", "nk", ("attr",))
+    b1 = spark.createDataFrame([("a", "A1"), ("b", "B1")], ["nk", "attr"])
+    d1 = build_scd2_dimension(b1, None, spec, batch_ts="2024-01-01")
+    b2 = spark.createDataFrame([("a", "A2"), ("b", "B1"), ("c", "C1")], ["nk", "attr"])
+    sink = build_scd2_dimension(b2, d1, spec, batch_ts="2024-02-01")
+    assert [r["key"] for r in sink.filter("nk = 'a' AND is_current").collect()] == [3]
+
+    bad = spark.createDataFrame([("a", "A3"), ("a", "A4")], ["nk", "attr"])
+    out = build_scd2_dimension(bad, sink, spec, batch_ts="2024-03-01")
+    with pytest.raises(Exception, match="two rows for one natural key"):
+        out.collect()
+
+    nulls = spark.createDataFrame([(None, "N1"), (None, "N2")], "nk string, attr string")
+    out = build_scd2_dimension(nulls, sink, spec, batch_ts="2024-03-01").collect()
+    assert sum(r["nk"] is None and r["is_current"] for r in out) == 2
 
 
 def test_merge_schema_evolution(spark):
