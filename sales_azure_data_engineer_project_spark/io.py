@@ -19,7 +19,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .schemas import TESTDATA_SCHEMAS, TESTDATA_TABLES
 
 __all__ = [
     "read_parquet",
@@ -113,51 +114,40 @@ def write_bucketed_table(
 
 
 def load_testdata(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Load one driver-corpus table (TESTDATA.md).
+    """Load one test-corpus table (TESTDATA.md) with its declared
+    schema (``schemas.TESTDATA_SCHEMAS``), so building the read starts
+    no Spark job: parquet schema inference would run a footer job per
+    call.
 
-    ``events.ts`` has shipped in two parquet encodings across driver
-    rounds, both normalized here to TIMESTAMP (instant) in UTC — the
-    type every downstream query (unix_micros, window, date_trunc) and
-    the zone-naive DuckDB oracle agree on:
-
-    - TIMESTAMP(NANOS): illegal for Spark's reader, so the session
-      reads nanos as long (``spark.sql.legacy.parquet.nanosAsLong``)
-      and we rebuild a microsecond timestamp (truncation, matching
-      DuckDB's CAST(ts_ns AS TIMESTAMP)).
-    - naive timestamp[us] (isAdjustedToUTC=false): Spark 4 infers
-      TIMESTAMP_NTZ by default; ``_ensure_session_confs`` disables the
-      inference so the wall-clock values read as UTC instants, with a
-      cast fallback below if that conf is locked down (cast interprets
-      NTZ in the session zone, which we force to UTC — same instants).
+    A name outside ``TESTDATA_TABLES`` raises rather than falling back
+    to inference.  A file whose column types disagree with the declared
+    schema fails when the scan runs; a declared column the file lacks
+    reads as NULL, so the declared schemas are pinned to every shipped
+    corpus by test.  ``events.ts`` (naive timestamp[us]) is declared
+    TIMESTAMP and reads as a UTC instant — the type every downstream
+    query (unix_micros, window, date_trunc) and the zone-naive DuckDB
+    oracle agree on.
     """
+    schema = TESTDATA_SCHEMAS.get(table)
+    if schema is None:
+        raise ValueError(f"unknown corpus table {table!r}; expected one of {TESTDATA_TABLES}")
     _ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
-    if table == "events":
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            # integer division — double division would lose precision on
-            # 1.7e18-scale nanosecond epochs (doubles carry 53 bits)
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    return spark.read.schema(schema).parquet(os.path.join(sf_dir, f"{table}.parquet"))
 
 
 def _ensure_session_confs(spark: SparkSession) -> None:
     """Make corpus queries correct on ANY caller-provided session.
 
     The driver contract hands our queries an externally-built
-    SparkSession, so the two session settings correctness depends on are
-    (re)applied at runtime — both are dynamic SQL confs:
+    SparkSession, so the session settings correctness depends on are
+    (re)applied at runtime — all are dynamic SQL confs:
 
     - UTC session timezone: year()/date_trunc() etc. render instants in
       the session zone; the DuckDB oracle is zone-naive (UTC).
-    - nanosAsLong: round-1 events parquet stored TIMESTAMP(NANOS),
-      which the reader otherwise rejects outright.
-    - inferTimestampNTZ off: round-2 events parquet stores naive
-      timestamp[us]; without inference it reads as a UTC instant
-      (TIMESTAMP), the type unix_micros()/window() require and the
-      semantics the zone-naive oracle assumes.
+    - nanosAsLong on, inferTimestampNTZ off: the reader confs
+      ``TESTDATA_SCHEMAS`` was inferred under.  A declared-schema read
+      does not consult them; a parquet read in the same session that
+      does infer types naive timestamps as the corpus schemas do.
     """
     for k, v in (
         ("spark.sql.session.timeZone", "UTC"),

@@ -36,7 +36,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -188,13 +188,15 @@ def pruned_files(vdir: str, col: str, lo, hi) -> tuple[list[str], int]:
     return [os.path.join(vdir, f) for f in keep], len(manifest["files"])
 
 
-def read_pruned(spark: SparkSession, vdir: str, col: str, lo, hi) -> DataFrame:
+def read_pruned(reader: DataFrameReader, vdir: str, col: str, lo, hi) -> DataFrame:
     """Range scan that opens only manifest-surviving files.  The filter
-    is re-applied — skipping must never change semantics."""
+    is re-applied — skipping must never change semantics.  ``reader``
+    carries the version's schema (``VersionedTable._reader``), so the
+    scan runs no schema-inference job."""
     files, _total = pruned_files(vdir, col, lo, hi)
     if not files:
-        return spark.read.parquet(vdir).filter(F.lit(False))
-    return spark.read.parquet(*files).filter(F.col(col).between(lo, hi))
+        return reader.parquet(vdir).filter(F.lit(False))
+    return reader.parquet(*files).filter(F.col(col).between(lo, hi))
 
 
 def _bucket_expr(col: str, boundaries: list, *, as_string: bool = False):

@@ -38,7 +38,7 @@ import json
 import os
 import tempfile
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -82,21 +82,22 @@ class VersionedTable:
         builder: the schema committed with the version replaces parquet
         schema inference, which would run a Spark job per read."""
         v = self.current_version() if version is None else version
-        if v <= 0 or not os.path.isdir(self._vdir(v)):
+        vdir = self._vdir(v)
+        if v <= 0 or not os.path.isdir(vdir):
             return None
-        return self._scan(self._vdir(v))
+        return self._reader(vdir).parquet(vdir)
 
-    def _scan(self, vdir: str) -> DataFrame:
-        """Parquet scan of a version directory with its committed schema;
-        versions committed before the schema file existed fall back to
-        inference."""
+    def _reader(self, vdir: str) -> DataFrameReader:
+        """A parquet reader for a version directory, carrying its
+        committed schema; versions committed before the schema file
+        existed fall back to inference."""
         reader = self.spark.read
         try:
             with open(os.path.join(vdir, _SCHEMA)) as f:
                 reader = reader.schema(StructType.fromJson(json.load(f)))
         except FileNotFoundError:
             pass
-        return reader.parquet(vdir)
+        return reader
 
     def _commit(
         self,
@@ -242,11 +243,13 @@ class VersionedTable:
         from .skipping import read_manifest, read_pruned
 
         v = self.current_version() if version is None else version
-        if v <= 0 or not os.path.isdir(self._vdir(v)):
+        vdir = self._vdir(v)
+        if v <= 0 or not os.path.isdir(vdir):
             return None
-        if read_manifest(self._vdir(v)) is None:
-            return self._scan(self._vdir(v)).filter(F.col(col).between(lo, hi))
-        return read_pruned(self.spark, self._vdir(v), col, lo, hi)
+        reader = self._reader(vdir)
+        if read_manifest(vdir) is None:
+            return reader.parquet(vdir).filter(F.col(col).between(lo, hi))
+        return read_pruned(reader, vdir, col, lo, hi)
 
     def merge(self, source: DataFrame, keys: list[str]) -> int:
         """SCD-1 MERGE as a new committed version, with optimistic

@@ -68,19 +68,20 @@ def transform_silver(df: DataFrame) -> DataFrame:
     The reference's display-only string cast of Units_Sold
     (`2_Silver_Notebook.py:45`) is deliberately NOT applied — it never
     reaches the persisted silver table (SURVEY §1.3).
+
+    One projection appends all three columns, so the plan is analyzed
+    once instead of once per ``withColumn``.
     """
-    return (
-        df.withColumn("model_category", F.split("Model_ID", "-").getItem(0))
-        .withColumn("Rev_Per_unit", F.try_divide("Revenue", "Units_Sold"))
+    return df.select(
+        "*",
+        F.split("Model_ID", "-").getItem(0).alias("model_category"),
+        F.try_divide("Revenue", "Units_Sold").alias("Rev_Per_unit"),
         # engine enrichment (not in the reference): a true calendar date
         # assembled from the pre-split Day/Month/Year ints, feeding
         # dim_calendar (hazard H1); try_to_date → NULL on invalid dates
-        .withColumn(
-            "date_iso",
-            F.expr(
-                "try_to_date(concat_ws('-', Year, Month, Day), 'y-M-d')"
-            ).cast("string"),
-        )
+        F.expr("try_to_date(concat_ws('-', Year, Month, Day), 'y-M-d')")
+        .cast("string")
+        .alias("date_iso"),
     )
 
 

@@ -4307,18 +4307,20 @@ def pipeline_full_train_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     build dedup) and the duplicated in-flight builds OOM'd the shared
     heap.  Round-10: the slim survivor frames (ex, nd, sd, dc) are
     ``localCheckpoint(eager=False)`` rather than persists — see the
-    survivor-frame comment in the body (sf0.1 24.0→8.6 s, output
-    identical).  This is the one execution shape at every corpus size
-    in the repository (at most 5,000 documents).
+    survivor-frame comment in the body (output identical).  This is the
+    one execution shape at every corpus size in the repository (at
+    most 5,000 documents).
 
-    Known sf0.1 cost profile (round-5 stage audit): of a ~16 s wall
-    only ~9 s is task time spread over ~67 stages whose LARGEST is
-    0.65 s — the rest is AQE per-exchange orchestration (materialize,
-    re-plan, resubmit × ~30 exchanges; the same run measures 8.2 s
-    with AQE off, 6.8 s with AQE off + 8 shuffle partitions).  That
-    fixed cost amortizes to noise once stages carry real data, and AQE
-    is what right-sizes the funnel's data-dependent drop-set joins at
-    100 TB, so the query keeps AQE on and accepts the small-SF floor;
+    Measured sf0.1 cost: 112 s for one run through
+    ``tools/check_oracle.py`` (query, toPandas and the oracle compare)
+    on a 4-vCPU host — far above the 8.6 s the round-10 A/B recorded;
+    the slowdown is not yet profiled.  The round-5 stage audit found
+    most of the wall outside task time, spread over ~67 stages: AQE
+    per-exchange orchestration (materialize, re-plan, resubmit × ~30
+    exchanges).  That fixed cost amortizes once stages carry real
+    data, and AQE is what right-sizes the funnel's data-dependent
+    drop-set joins at 100 TB, so the query keeps AQE on and accepts the
+    small-SF floor;
     a thread overlapping quantizer training with the text chain was
     A/B'd and removed (±0 — the wall is barrier count, not overlap)."""
     corpus = _dedup_corpus(spark, sf_dir)

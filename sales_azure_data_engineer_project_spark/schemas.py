@@ -19,6 +19,7 @@ __all__ = [
     "RAW_SALES_SCHEMA",
     "SILVER_SALES_SCHEMA",
     "TESTDATA_TABLES",
+    "TESTDATA_SCHEMAS",
 ]
 
 # ---------------------------------------------------------------------------
@@ -70,3 +71,88 @@ TESTDATA_TABLES: tuple[str, ...] = (
     "documents",
     "embeddings",
 )
+
+
+def _fields(*cols: tuple[str, T.DataType]) -> T.StructType:
+    return T.StructType([T.StructField(name, dtype, True) for name, dtype in cols])
+
+
+# The corpus as Spark infers it from the parquet footers under the
+# engine's session confs: the naive timestamp[us] columns (orders,
+# lineitem, events.ts) read as TimestampType because
+# ``spark.sql.parquet.inferTimestampNTZ.enabled`` is off.  Reading with
+# these schemas skips the footer-inference job every read would run;
+# ``tests/test_catalog_sources.py`` pins them to the inferred ones.
+TESTDATA_SCHEMAS: dict[str, T.StructType] = {
+    "region": _fields(
+        ("r_regionkey", T.IntegerType()),
+        ("r_name", T.StringType()),
+    ),
+    "nation": _fields(
+        ("n_nationkey", T.IntegerType()),
+        ("n_name", T.StringType()),
+        ("n_regionkey", T.IntegerType()),
+    ),
+    "customer": _fields(
+        ("c_custkey", T.LongType()),
+        ("c_name", T.StringType()),
+        ("c_nationkey", T.IntegerType()),
+        ("c_acctbal", T.DoubleType()),
+        ("c_mktsegment", T.StringType()),
+    ),
+    "supplier": _fields(
+        ("s_suppkey", T.LongType()),
+        ("s_name", T.StringType()),
+        ("s_nationkey", T.IntegerType()),
+        ("s_acctbal", T.DoubleType()),
+    ),
+    "part": _fields(
+        ("p_partkey", T.LongType()),
+        ("p_name", T.StringType()),
+        ("p_brand", T.StringType()),
+        ("p_type", T.StringType()),
+        ("p_size", T.IntegerType()),
+        ("p_retailprice", T.DoubleType()),
+    ),
+    "orders": _fields(
+        ("o_orderkey", T.LongType()),
+        ("o_custkey", T.LongType()),
+        ("o_orderstatus", T.StringType()),
+        ("o_totalprice", T.DoubleType()),
+        ("o_orderdate", T.TimestampType()),
+        ("o_orderpriority", T.StringType()),
+    ),
+    "lineitem": _fields(
+        ("l_orderkey", T.LongType()),
+        ("l_partkey", T.LongType()),
+        ("l_suppkey", T.LongType()),
+        ("l_linenumber", T.IntegerType()),
+        ("l_quantity", T.DoubleType()),
+        ("l_extendedprice", T.DoubleType()),
+        ("l_discount", T.DoubleType()),
+        ("l_tax", T.DoubleType()),
+        ("l_returnflag", T.StringType()),
+        ("l_linestatus", T.StringType()),
+        ("l_shipdate", T.TimestampType()),
+    ),
+    "events": _fields(
+        ("event_id", T.LongType()),
+        ("ts", T.TimestampType()),
+        ("user_id", T.LongType()),
+        ("event_type", T.StringType()),
+        ("value", T.DoubleType()),
+        ("props", T.StringType()),
+    ),
+    "documents": _fields(
+        ("doc_id", T.LongType()),
+        ("text", T.StringType()),
+        ("lang", T.StringType()),
+        ("source", T.StringType()),
+        ("n_chars", T.LongType()),
+    ),
+    "embeddings": _fields(
+        ("vec_id", T.LongType()),
+        ("embedding", T.ArrayType(T.FloatType(), True)),
+        ("label", T.IntegerType()),
+    ),
+}

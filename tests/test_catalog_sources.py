@@ -3,11 +3,15 @@ calendar dimension)."""
 
 from __future__ import annotations
 
-from conftest import INITIAL_ROWS, write_sales_csv
+import os
+
+import pytest
+from conftest import INITIAL_ROWS, SF_SMOKE, count_jobs, write_sales_csv
 
 from sales_azure_data_engineer_project_spark import sources
 from sales_azure_data_engineer_project_spark.catalog import PathCatalog
 from sales_azure_data_engineer_project_spark.plans import SalesPipeline
+from sales_azure_data_engineer_project_spark.schemas import TESTDATA_SCHEMAS, TESTDATA_TABLES
 
 
 def test_catalog_lifecycle(spark, tmp_path):
@@ -105,6 +109,41 @@ def test_load_testdata_self_defends_session_confs(spark, sf_smoke):
         assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+CORPUS_DIRS = [
+    *(os.path.join(os.path.dirname(SF_SMOKE), sf) for sf in ("sf0.001", "sf0.01", "sf0.1")),
+    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench", "corpus"),
+]
+
+
+@pytest.mark.parametrize("sf_dir", CORPUS_DIRS, ids=os.path.basename)
+def test_declared_corpus_schemas_equal_the_inferred_ones(spark, sf_dir):
+    """``TESTDATA_SCHEMAS`` is what parquet inference gives under the
+    engine's session confs, for every table of every shipped corpus."""
+    from sales_azure_data_engineer_project_spark.io import _ensure_session_confs
+
+    _ensure_session_confs(spark)
+    for table in TESTDATA_TABLES:
+        inferred = spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet")).schema
+        assert TESTDATA_SCHEMAS[table] == inferred, table
+
+
+def test_load_testdata_starts_no_job(spark, sf_smoke):
+    """Building a corpus read starts no schema-inference job."""
+    from sales_azure_data_engineer_project_spark.io import load_testdata
+
+    for table in TESTDATA_TABLES:
+        df, jobs = count_jobs(spark, lambda: load_testdata(spark, sf_smoke, table))
+        assert jobs == 0, table
+        assert df.schema == TESTDATA_SCHEMAS[table]
+
+
+def test_load_testdata_rejects_unknown_table(spark, sf_smoke):
+    from sales_azure_data_engineer_project_spark.io import load_testdata
+
+    with pytest.raises(ValueError, match="unknown corpus table"):
+        load_testdata(spark, sf_smoke, "lineitems")
 
 
 def test_unity_path_catalog_three_level(spark, tmp_path):

@@ -5,11 +5,13 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from sales_azure_data_engineer_project_spark.operators import dedup as D
 from sales_azure_data_engineer_project_spark.operators import multimodal as M
 from sales_azure_data_engineer_project_spark.operators import similarity as S
 from sales_azure_data_engineer_project_spark.operators import text as X
+from sales_azure_data_engineer_project_spark.schemas import TESTDATA_SCHEMAS
 
 
 @pytest.fixture(scope="module")
@@ -1097,9 +1099,9 @@ def test_k_anonymity_planted_small_groups(spark):
         (4, "d", 2, 8000.00, "SEG_B"),
     ]
     with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(
-            rows, ["c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"]
-        ).write.parquet(os.path.join(d, "customer.parquet"))
+        spark.createDataFrame(rows, TESTDATA_SCHEMAS["customer"]).write.parquet(
+            os.path.join(d, "customer.parquet")
+        )
         out = {r["k"]: r for r in quality_k_anonymity(spark, d).collect()}
     assert out[2]["n_groups"] == 2 and out[2]["min_group_size"] == 1
     assert out[2]["groups_below_k"] == 1 and out[2]["records_below_k"] == 1
@@ -1251,7 +1253,7 @@ def test_knn_label_noise_flags_planted_mislabel(spark):
     # planted mislabel: sits in cluster 0's region but labeled 1
     rows.append((30, vec(0, 0.45), 1))
     with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(rows, ["vec_id", "embedding", "label"]).write.parquet(
+        spark.createDataFrame(rows, TESTDATA_SCHEMAS["embeddings"]).write.parquet(
             os.path.join(d, "embeddings.parquet")
         )
         out = {r["label"]: r for r in quality_knn_label_noise(spark, d).collect()}
@@ -1340,7 +1342,10 @@ def test_bootstrap_ci_python_differential(spark):
         )
 
     with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(rows, cols).write.parquet(
+        schema = T.StructType(
+            [f for f in TESTDATA_SCHEMAS["lineitem"].fields if f.name in cols]
+        )
+        spark.createDataFrame(rows, schema).write.parquet(
             os.path.join(d, "lineitem.parquet")
         )
         got = {

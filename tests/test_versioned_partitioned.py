@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+from conftest import count_jobs
 from pyspark.sql import functions as F
 
 from sales_azure_data_engineer_project_spark.io import write_parquet
@@ -473,6 +474,25 @@ def test_lakehouse_maintenance_e2e(spark, tmp_path):
     dropped = vt.vacuum(keep_last=2)
     assert dropped and max(dropped) <= v5 - 2
     assert content(vt.read()) == full
+
+
+def test_read_where_builds_without_a_job(spark, tmp_path):
+    """A pruned range scan reads with the version's committed schema, so
+    building it — surviving files or none — starts no schema-inference
+    job."""
+    orders = spark.range(400).select(
+        F.col("id").alias("o_orderkey"), (F.col("id") % 40).alias("o_custkey")
+    )
+    vt = VersionedTable(spark, str(tmp_path / "t"))
+    lin = orders.repartitionByRange(4, "o_custkey").sortWithinPartitions("o_custkey")
+    vt.overwrite(lin, stats_columns=["o_custkey"])
+
+    hit, jobs = count_jobs(spark, lambda: vt.read_where("o_custkey", 10, 20))
+    assert jobs == 0
+    miss, jobs = count_jobs(spark, lambda: vt.read_where("o_custkey", 100, 200))
+    assert jobs == 0
+    assert hit.schema == vt.read().schema == miss.schema
+    assert hit.count() == 110 and miss.count() == 0
 
 
 def test_read_where_falls_back_without_manifest(spark, tmp_path):
