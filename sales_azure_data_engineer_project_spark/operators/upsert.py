@@ -53,8 +53,6 @@ def merge_upsert(
     target: DataFrame | None,
     source: DataFrame,
     keys: list[str],
-    *,
-    evolve_schema: bool = False,
 ) -> DataFrame:
     """Relational SCD-1 merge: source wins on key match, others kept.
 
@@ -64,18 +62,12 @@ def merge_upsert(
     Either way, evaluating the result raises if two source rows share
     ``keys``: the check runs inside the plan, not as a job of its own.
 
-    ``evolve_schema=True`` = Delta's ``mergeSchema``/autoMerge: columns
-    new in the source are added to the table (NULL for untouched target
-    rows); columns missing from the source stay, NULL on inserted rows.
-    Off by default — silent schema drift should be an explicit opt-in.
+    The source is projected onto the target's columns (H7), so a column
+    new in the source is dropped, as in Delta without ``mergeSchema``.
     """
     if target is None:
         return guard_unique(source, keys)
-    if evolve_schema:
-        source = _align_evolved(source, target)
-        target = _align_evolved(target, source)
-    else:
-        source = source.select(*target.columns)  # align column order (H7)
+    source = source.select(*target.columns)
     return _merge_window(
         source.withColumn("__src", F.lit(1)).unionByName(
             target.withColumn("__src", F.lit(0))
@@ -113,11 +105,3 @@ def _merge_window(rows: DataFrame, keys: list[str]) -> DataFrame:
     )
     return rows.withColumn("__n_src", n_src).filter(keep).drop("__src", "__n_src")
 
-
-def _align_evolved(df: DataFrame, other: DataFrame) -> DataFrame:
-    """Add ``other``'s missing columns to ``df`` as typed NULLs."""
-    have = set(df.columns)
-    extra = [f for f in other.schema.fields if f.name not in have]
-    for f in extra:
-        df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-    return df

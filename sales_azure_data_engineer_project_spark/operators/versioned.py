@@ -279,18 +279,6 @@ class VersionedTable:
         merged = merge_upsert(target, source, keys)
         return self._commit(merged, base_version=base, carry_from=carry_from)
 
-    def diff(self, from_version: int, to_version: int | None = None):
-        """Change-data read between two committed versions: what rows
-        were added and removed (multiset semantics via exceptAll).
-        Returns (added_df, removed_df) — the CDC feed downstream
-        incremental consumers (e.g. ``matview.IncrementalSummary``)
-        read instead of re-scanning snapshots."""
-        older = self.read(from_version)
-        newer = self.read(to_version)
-        if older is None or newer is None:
-            raise ValueError("both versions must exist for a diff")
-        return newer.exceptAll(older), older.exceptAll(newer)
-
     def compact(self, target_partitions: int = 1) -> int:
         """Small-file compaction: rewrite the current snapshot into
         ``target_partitions`` files as a new commit.  The lakehouse

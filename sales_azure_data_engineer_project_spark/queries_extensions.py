@@ -17,7 +17,7 @@ Engine-parity contracts used throughout:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .io import load_testdata
@@ -55,45 +55,34 @@ def _fan_out(df: DataFrame) -> DataFrame:
     return df.repartition(width)
 
 
-def _ivf_cadence(n_vectors: int) -> int:
+def _ivf_cadence(n: Column) -> Column:
     """Centroid cadence for the inline-IVF coarse quantizers (the
     ``vec_id % cadence == 0`` stand-in that keeps the oracle
-    deterministic): ``max(61, ceil(sqrt(N)))``, i.e. k = N/cadence ≈ √N
-    once the corpus outgrows 61² vectors — the standard FAISS sizing
-    rule.  Round-7 measurement (SCALING.md): the historical FIXED
-    cadence 61 means k ∝ N, and the broadcast coarse-assignment's N·k
-    dot products go quadratic — similarity_ann_ivf_sq8 measured decade
-    α 0.78 with a 10×→30× segment of ~1.7.  √N-scaled k caps assignment
-    at N^1.5 (and at true 100 TB the assignment itself goes
-    hierarchical — route through √k super-cells first; same contract
-    note as the kmeans seeding in ``_sq8_kmeans_cells``).  At every
-    oracle SF (N ≤ 3721) the floor keeps cadence = 61, bit-identical to
-    the historical behavior; both engines compute the same expression.
+    deterministic) from the corpus count ``n``: ``greatest(61,
+    ceil(sqrt(n)))``, i.e. k = N/cadence ≈ √N once the corpus outgrows
+    61² vectors — the standard FAISS sizing rule.  A FIXED cadence 61
+    means k ∝ N, and the broadcast coarse-assignment's N·k dot products
+    go quadratic; √N-scaled k caps assignment at N^1.5.  At every
+    oracle SF (N ≤ 3721) the floor keeps cadence = 61; the oracle SQL
+    computes the same expression (``GREATEST(61, ceil(sqrt(N)))``).
     """
-    import math
-
-    return max(61, math.ceil(math.sqrt(n_vectors)))
+    return F.greatest(F.lit(61).cast("bigint"), F.ceil(F.sqrt(n)).cast("bigint"))
 
 
 def _ivf_centroids(n: DataFrame) -> DataFrame:
     """Centroid frame (cid, cv) for the inline-IVF coarse quantizers,
-    with the ``_ivf_cadence`` √N rule derived INSIDE the plan (ADVICE
-    r7): the corpus count is a 1-row aggregate broadcast-cross-joined
+    with the ``_ivf_cadence`` √N rule derived INSIDE the plan: the corpus count is a 1-row aggregate broadcast-cross-joined
     under the centroid filter — the same shape as the oracle's ``cadc``
     CTE — instead of an eager ``.count()`` driver action that cost a
     separate full-scan job per IVF query even at oracle SFs where the
     floor pins the cadence to 61.  ``n`` must expose (vec_id, v)."""
     cnt = n.agg(F.count(F.lit(1)).alias("_n"))
-    cad = F.greatest(
-        F.lit(61).cast("bigint"),
-        F.ceil(F.sqrt(F.col("_n"))).cast("bigint"),
-    )
+    cad = _ivf_cadence(F.col("_n"))
     return (
         n.crossJoin(F.broadcast(cnt))
         .filter(F.col("vec_id") % cad == 0)
         .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
     )
-
 
 
 def _dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -161,47 +150,6 @@ def text_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "text_lang_id",
-    r"""
-    WITH tok AS (
-        SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok
-        FROM documents
-    ), agg AS (
-        SELECT doc_id,
-               CAST(COUNT(*) AS BIGINT) AS n_tokens,
-               CAST(SUM(CASE WHEN tok IN ('the','a','an','of','and','to','is','in','it','for')
-                        THEN 1 ELSE 0 END) AS BIGINT) AS stop_hits
-        FROM tok GROUP BY doc_id
-    )
-    SELECT doc_id, n_tokens, stop_hits,
-           CASE WHEN stop_hits * 20 >= n_tokens THEN 'en-like' ELSE 'other' END AS predicted
-    FROM agg
-    ORDER BY doc_id
-    """,
-)
-def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """N-gram/stopword-ratio language heuristic (≥5% stopword tokens →
-    'en-like').  A real lang-id model would be a Pandas UDF; the
-    heuristic keeps the operator oracle-checkable."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(X.tokens("text")).alias("tok"))
-    agg = tok.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.sum(F.when(F.col("tok").isin(*X.EN_STOPWORDS), 1).otherwise(0))
-        .cast("bigint")
-        .alias("stop_hits"),
-    )
-    return agg.select(
-        "doc_id",
-        "n_tokens",
-        "stop_hits",
-        F.when(F.col("stop_hits") * 20 >= F.col("n_tokens"), "en-like")
-        .otherwise("other")
-        .alias("predicted"),
-    ).orderBy("doc_id")
-
-
-@register(
     "text_fingerprints",
     r"""
     SELECT doc_id,
@@ -243,33 +191,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "dedup_ngram_jaccard",
-    f"""
-    WITH {_CORPUS_SQL}, {_SHINGLE_SQL},
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    common AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
-    SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
-           CAST(c AS BIGINT) AS common,
-           CAST((1000 * c) // (sa.sz + sb.sz - c) AS BIGINT) AS jac_permille
-    FROM common
-    JOIN sizes sa ON sa.doc_id = id_a
-    JOIN sizes sb ON sb.doc_id = id_b
-    WHERE (1000 * c) // (sa.sz + sb.sz - c) >= 300
-    ORDER BY id_a, id_b
-    """,
-)
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    corpus = _dedup_corpus(spark, sf_dir)
-    return D.jaccard_pairs(corpus, "doc_id", "text", min_permille=300).orderBy(
-        "id_a", "id_b"
-    )
-
-
-@register(
     "dedup_ngram_jaccard_capped",
     f"""
     WITH {_CORPUS_SQL}, {_SHINGLE_SQL},
@@ -294,7 +215,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact n-gram tier with its ``posting_freq_cap`` valve ON —
-    the 100 TB form of ``dedup_ngram_jaccard`` (VERDICT r8 "Next" #4):
+    the 100 TB form of the exact n-gram Jaccard tier:
     shingles whose document frequency exceeds 4 are treated as
     boilerplate and excluded, with per-doc sizes recomputed over the
     retained shingles, so the score is integer-exact Jaccard over the
@@ -310,150 +231,6 @@ def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.jaccard_pairs(
         corpus, "doc_id", "text", min_permille=300, posting_freq_cap=4
     ).orderBy("id_a", "id_b")
-
-
-@register(
-    "pipeline_filter_ablation",
-    r"""
-    WITH t AS (
-        SELECT doc_id, string_split_regex(text, '\s+') AS toks
-        FROM documents
-    ),
-    m AS (
-        SELECT doc_id,
-               len(toks) AS n_tokens,
-               (1000 * len(list_distinct(toks))) // len(toks) AS ttr_permille,
-               (1000 * len(list_filter(toks,
-                    x -> contains(x, '#') OR contains(x, '...'))))
-                    // len(toks) AS symbol_permille,
-               len(list_distinct(list_filter(toks, x -> x IN
-                   ('the','a','an','of','and','to','is','in','it','for'))))
-                   AS n_stop_distinct
-        FROM t WHERE len(toks) > 0
-    ),
-    fl AS (
-        SELECT doc_id,
-               CASE WHEN n_tokens BETWEEN 50 AND 100000 THEN 0 ELSE 1 END AS f_len,
-               CASE WHEN ttr_permille >= 300 THEN 0 ELSE 1 END AS f_ttr,
-               CASE WHEN symbol_permille < 100 THEN 0 ELSE 1 END AS f_sym,
-               CASE WHEN n_stop_distinct >= 2 THEN 0 ELSE 1 END AS f_stop
-        FROM m
-    ),
-    agg AS (
-        SELECT COUNT(*) AS n_docs,
-               SUM(f_len) AS len_fail,
-               SUM(CASE WHEN f_len = 1 AND f_ttr + f_sym + f_stop = 0
-                        THEN 1 ELSE 0 END) AS len_uniq,
-               SUM(f_ttr) AS ttr_fail,
-               SUM(CASE WHEN f_ttr = 1 AND f_len + f_sym + f_stop = 0
-                        THEN 1 ELSE 0 END) AS ttr_uniq,
-               SUM(f_sym) AS sym_fail,
-               SUM(CASE WHEN f_sym = 1 AND f_len + f_ttr + f_stop = 0
-                        THEN 1 ELSE 0 END) AS sym_uniq,
-               SUM(f_stop) AS stop_fail,
-               SUM(CASE WHEN f_stop = 1 AND f_len + f_ttr + f_sym = 0
-                        THEN 1 ELSE 0 END) AS stop_uniq,
-               SUM(CASE WHEN f_len + f_ttr + f_sym + f_stop = 0
-                        THEN 1 ELSE 0 END) AS pass_all
-        FROM fl
-    )
-    SELECT filter_name,
-           CAST(n_fail AS BIGINT) AS n_fail,
-           CAST(n_unique_fail AS BIGINT) AS n_unique_fail,
-           CAST((1000 * n_fail) // n_docs AS BIGINT) AS fail_permille,
-           CAST(pass_all AS BIGINT) AS n_pass_all
-    FROM (
-        SELECT 'length' AS filter_name, len_fail AS n_fail,
-               len_uniq AS n_unique_fail, n_docs, pass_all FROM agg
-        UNION ALL
-        SELECT 'stopwords', stop_fail, stop_uniq, n_docs, pass_all FROM agg
-        UNION ALL
-        SELECT 'symbol', sym_fail, sym_uniq, n_docs, pass_all FROM agg
-        UNION ALL
-        SELECT 'ttr', ttr_fail, ttr_uniq, n_docs, pass_all FROM agg
-    )
-    ORDER BY filter_name
-    """,
-)
-def pipeline_filter_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Filter-ablation report — the observability query every corpus
-    pipeline runs before tuning thresholds: for each quality filter
-    (length bounds, type-token-ratio floor, symbol-ratio ceiling,
-    stopword-diversity floor), how many documents it kills in total
-    and how many it UNIQUELY kills (fails it while passing all
-    others).  Unique-kill counts are what tell you a filter is pulling
-    its weight vs merely shadowing another — the standard ablation
-    framing in Gopher §A1.1 / Dolma's filter analyses.
-
-    Scale shape: ONE narrow pass binds the token array and derives all
-    four flags per document, then ONE map-side-combined global
-    aggregate computes every count; the 4-row report is produced by a
-    union over that single aggregate row (Spark: ``stack``) — no
-    second scan, no join, no per-filter pass."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    t = docs.select("doc_id", F.split("text", X.TOKEN_RE).alias("toks"))
-    m = t.filter(F.size("toks") > 0).select(
-        "doc_id",
-        F.size("toks").alias("n_tokens"),
-        F.expr("div(1000 * size(array_distinct(toks)), size(toks))").alias(
-            "ttr_permille"
-        ),
-        F.expr(
-            "div(1000 * size(filter(toks, x -> contains(x, '#')"
-            " OR contains(x, '...'))), size(toks))"
-        ).alias("symbol_permille"),
-        F.size(
-            F.array_distinct(F.filter(F.col("toks"), lambda x: x.isin(*X.EN_STOPWORDS)))
-        ).alias("n_stop_distinct"),
-    )
-    fl = m.select(
-        F.when(F.col("n_tokens").between(50, 100000), 0).otherwise(1).alias("f_len"),
-        F.when(F.col("ttr_permille") >= 300, 0).otherwise(1).alias("f_ttr"),
-        F.when(F.col("symbol_permille") < 100, 0).otherwise(1).alias("f_sym"),
-        F.when(F.col("n_stop_distinct") >= 2, 0).otherwise(1).alias("f_stop"),
-    )
-    others = {
-        "len": "f_ttr + f_sym + f_stop",
-        "ttr": "f_len + f_sym + f_stop",
-        "sym": "f_len + f_ttr + f_stop",
-        "stop": "f_len + f_ttr + f_sym",
-    }
-    aggs = [F.count(F.lit(1)).alias("n_docs")]
-    for k, rest in others.items():
-        aggs.append(F.sum(f"f_{k}").alias(f"{k}_fail"))
-        aggs.append(
-            F.sum(F.expr(f"CASE WHEN f_{k} = 1 AND {rest} = 0 THEN 1 ELSE 0 END")).alias(
-                f"{k}_uniq"
-            )
-        )
-    aggs.append(
-        F.sum(
-            F.expr("CASE WHEN f_len + f_ttr + f_sym + f_stop = 0 THEN 1 ELSE 0 END")
-        ).alias("pass_all")
-    )
-    agg = fl.agg(*aggs)
-    return (
-        agg.select(
-            F.expr(
-                "stack(4,"
-                " 'length', len_fail, len_uniq,"
-                " 'stopwords', stop_fail, stop_uniq,"
-                " 'symbol', sym_fail, sym_uniq,"
-                " 'ttr', ttr_fail, ttr_uniq"
-                ") AS (filter_name, n_fail, n_unique_fail)"
-            ),
-            "n_docs",
-            "pass_all",
-        )
-        .select(
-            "filter_name",
-            F.col("n_fail").cast("bigint"),
-            F.col("n_unique_fail").cast("bigint"),
-            F.expr("div(1000 * n_fail, n_docs)").cast("bigint").alias("fail_permille"),
-            F.col("pass_all").cast("bigint").alias("n_pass_all"),
-        )
-        .orderBy("filter_name")
-    )
 
 
 @register(
@@ -1089,58 +866,6 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "dedup_embedding_cosine",
-    """
-    WITH n AS (
-        SELECT vec_id, vec_id // 512 AS blk, embedding::DOUBLE[] AS v,
-               sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-        FROM embeddings
-    )
-    SELECT CAST(a.vec_id AS BIGINT) AS id_a, CAST(b.vec_id AS BIGINT) AS id_b,
-           CAST(CAST(ROUND(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) AS DECIMAL(10,6)) AS DOUBLE) AS cos_sim
-    FROM n a JOIN n b ON a.blk = b.blk AND a.vec_id < b.vec_id
-    WHERE list_dot_product(a.v, b.v) / (a.nrm * b.nrm) >= 0.45
-    ORDER BY id_a, id_b
-    """,
-)
-def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs within id-blocks of 512
-    (threshold 0.45, exact doubles).
-
-    Blocked brute-force tier: the self-join is an EQUI-join on the
-    block id, so total work is (N/512)·512² = 512·N — linear in N, and
-    each block's pair set fits one task.  An UNBOUNDED all-pairs join
-    (round 1's version) is O(N²): at 100× data that is 10,000× work, a
-    scale-killer for a registered headline query (VERDICT r1 item 6).
-    Full-coverage near-dup at scale is the LSH tier
-    (``dedup_embedding_lsh``); the unblocked brute force survives as a
-    pytest cross-validation at sf0.001
-    (tests/test_extensions.py::test_embedding_lsh_vs_blocked_brute)."""
-    emb = S.with_norm(_fan_out(load_testdata(spark, sf_dir, "embeddings")))
-    blk = F.expr("vec_id div 512")
-    a = emb.select(
-        F.col("vec_id").alias("id_a"), blk.alias("blk_a"),
-        F.col("_v").alias("va"), F.col("_norm").alias("na"),
-    )
-    b = emb.select(
-        F.col("vec_id").alias("id_b"), blk.alias("blk_b"),
-        F.col("_v").alias("vb"), F.col("_norm").alias("nb"),
-    )
-    cos = S.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    return (
-        a.join(b, (F.col("blk_a") == F.col("blk_b")) & (F.col("id_a") < F.col("id_b")))
-        .withColumn("cos_raw", cos)
-        .filter(F.col("cos_raw") >= 0.45)
-        .select(
-            F.col("id_a").cast("bigint"),
-            F.col("id_b").cast("bigint"),
-            F.round("cos_raw", 6).cast("decimal(10,6)").cast("double").alias("cos_sim"),
-        )
-        .orderBy("id_a", "id_b")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Similarity search
 # ---------------------------------------------------------------------------
@@ -1431,143 +1156,10 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return M.extract_features(packed, fake_decode=True)
 
 
-@register(
-    "dedup_embedding_lsh",
-    """
-    WITH n AS (
-        SELECT vec_id, embedding::DOUBLE[] AS v,
-               sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm,
-               (CASE WHEN embedding[1] >= 0 THEN '1' ELSE '0' END) ||
-               (CASE WHEN embedding[2] >= 0 THEN '1' ELSE '0' END) ||
-               (CASE WHEN embedding[3] >= 0 THEN '1' ELSE '0' END) ||
-               (CASE WHEN embedding[4] >= 0 THEN '1' ELSE '0' END) AS bkt
-        FROM embeddings
-    )
-    SELECT CAST(a.vec_id AS BIGINT) AS id_a, CAST(b.vec_id AS BIGINT) AS id_b,
-           CAST(CAST(ROUND(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) AS DECIMAL(10,6)) AS DOUBLE) AS cos_sim
-    FROM n a JOIN n b ON a.bkt = b.bkt AND a.vec_id < b.vec_id
-    WHERE list_dot_product(a.v, b.v) / (a.nrm * b.nrm) >= 0.4
-    ORDER BY id_a, id_b
-    """,
-)
-def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale-path embedding near-dup: candidate pairs restricted to the
-    same sign-LSH bucket (equi-join on the bucket key instead of the
-    brute N² nested loop; recall < 1 by design — similar vectors agree
-    on leading-coordinate signs with high probability)."""
-    emb = S.with_norm(_fan_out(load_testdata(spark, sf_dir, "embeddings"))).withColumn(
-        "bkt", S.sign_bucket("embedding", bits=4)
-    )
-    a = emb.select(
-        F.col("vec_id").alias("id_a"), F.col("_v").alias("va"),
-        F.col("_norm").alias("na"), F.col("bkt").alias("ba"),
-    )
-    b = emb.select(
-        F.col("vec_id").alias("id_b"), F.col("_v").alias("vb"),
-        F.col("_norm").alias("nb"), F.col("bkt").alias("bb"),
-    )
-    cos = S.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    return (
-        a.join(b, (F.col("ba") == F.col("bb")) & (F.col("id_a") < F.col("id_b")))
-        .withColumn("cos_raw", cos)
-        .filter(F.col("cos_raw") >= 0.4)
-        .select(
-            F.col("id_a").cast("bigint"),
-            F.col("id_b").cast("bigint"),
-            F.round("cos_raw", 6).cast("decimal(10,6)").cast("double").alias("cos_sim"),
-        )
-        .orderBy("id_a", "id_b")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Training-data pipeline staples: chunking, deterministic sampling,
 # vocabulary statistics
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "text_chunking",
-    r"""
-    WITH t AS (SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM documents),
-    chunks AS (
-        SELECT doc_id,
-               CAST(i AS INTEGER) AS chunk_idx,
-               array_to_string(toks[(i*24 + 1):least((i*24 + 32), len(toks))], ' ') AS chunk_text
-        FROM t, unnest(generate_series(0, CAST(greatest(ceil((len(toks) - 8) / 24.0), 1) AS BIGINT) - 1)) AS u(i)
-    )
-    SELECT doc_id, chunk_idx, chunk_text,
-           CAST(len(string_split_regex(chunk_text, '\s+')) AS BIGINT) AS chunk_tokens
-    FROM chunks
-    ORDER BY doc_id, chunk_idx
-    """,
-)
-def text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-size token chunking with overlap (window 32, stride 24 →
-    8-token overlap) — the standard pre-tokenization step for LLM
-    training corpora.  Pure narrow ops: split → sequence → transform →
-    explode; no shuffle until the presentation sort."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.split(F.col("text"), X.TOKEN_RE).alias("toks"))
-    n_chunks = F.greatest(
-        F.ceil((F.size("toks") - F.lit(8)) / F.lit(24.0)), F.lit(1)
-    ).cast("long")
-    chunks = toks.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("i"),
-        "toks",
-    ).select(
-        "doc_id",
-        F.col("i").cast("int").alias("chunk_idx"),
-        F.concat_ws(
-            " ",
-            F.slice(
-                F.col("toks"),
-                F.col("i") * 24 + 1,
-                F.least(
-                    F.lit(32),
-                    F.size("toks") - F.col("i") * 24,
-                ),
-            ),
-        ).alias("chunk_text"),
-    )
-    return chunks.select(
-        "doc_id",
-        "chunk_idx",
-        "chunk_text",
-        F.size(F.split(F.col("chunk_text"), X.TOKEN_RE)).cast("bigint").alias("chunk_tokens"),
-    ).orderBy("doc_id", "chunk_idx")
-
-
-@register(
-    "sample_stratified_deterministic",
-    """
-    SELECT lang,
-           CAST(COUNT(*) AS BIGINT) AS n_sampled,
-           CAST(MIN(doc_id) AS BIGINT) AS first_doc
-    FROM documents
-    WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '1a'
-    GROUP BY lang
-    ORDER BY lang
-    """,
-)
-def sample_stratified_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic ~10% sample via content-hash thresholding
-    (md5 prefix < '1a' ≈ 26/256) — reproducible across engines and
-    runs, unlike rand()-based sampling; the pattern training pipelines
-    use for held-out splits."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    return (
-        docs.filter(
-            F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 2) < "1a"
-        )
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_sampled"),
-            F.min("doc_id").cast("bigint").alias("first_doc"),
-        )
-        .orderBy("lang")
-    )
 
 
 _HEX12 = (
@@ -1578,242 +1170,6 @@ _HEX12 = (
     )
     + ")"
 )
-
-
-@register(
-    "sample_weighted_poisson",
-    f"""
-    WITH u AS (
-        SELECT doc_id, n_chars,
-               md5(CAST(doc_id AS VARCHAR)) AS h
-        FROM documents
-    ),
-    keyed AS (
-        SELECT doc_id, n_chars,
-               CAST({_HEX12} AS DOUBLE) / n_chars AS priority
-        FROM u
-    )
-    SELECT CAST(doc_id AS BIGINT) AS doc_id,
-           CAST(n_chars AS BIGINT) AS weight,
-           priority
-    FROM keyed
-    ORDER BY priority, doc_id
-    LIMIT 100
-    """,
-)
-def sample_weighted_poisson(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequential Poisson sampling (Ohlsson 1998): weighted sample of
-    100 docs where selection probability ∝ weight (here n_chars —
-    length-weighted subset selection, the way training pipelines bias
-    a sample toward longer documents without dropping short ones
-    entirely).  Priority = u/w with u a deterministic 48-bit content
-    hash; smallest-k priorities win.
-
-    Cross-engine exactness: u is an INTEGER (md5-prefix parsed to 48
-    bits — Spark ``conv``, DuckDB nibble-sum, identical values) and
-    u/w is ONE correctly-rounded IEEE division of exact integers, so
-    both engines produce bit-identical priorities.  Plan: a map pass +
-    TakeOrderedAndProject — no full sort at any scale."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    u = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 12),
-        16,
-        10,
-    ).cast("long")
-    return (
-        docs.select(
-            F.col("doc_id").cast("bigint"),
-            F.col("n_chars").cast("bigint").alias("weight"),
-            (u.cast("double") / F.col("n_chars")).alias("priority"),
-        )
-        .orderBy("priority", "doc_id")
-        .limit(100)
-    )
-
-
-@register(
-    "pipeline_pack_sequences",
-    r"""
-    WITH t AS (
-        SELECT doc_id, doc_id % 8 AS shard,
-               len(string_split_regex(text, '\s+')) AS n_tok
-        FROM documents
-    ),
-    c AS (
-        SELECT doc_id, shard, n_tok,
-               SUM(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
-                                ROWS UNBOUNDED PRECEDING) AS cum
-        FROM t
-    ),
-    b AS (
-        SELECT shard, n_tok, cum,
-               (cum - n_tok) // 512 AS first_bin,
-               CASE WHEN n_tok > 0 THEN (cum - 1) // 512 ELSE (cum - n_tok) // 512 END AS last_bin
-        FROM c
-    )
-    SELECT CAST(shard AS BIGINT) AS shard,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
-           CAST((MAX(cum) + 511) // 512 AS BIGINT) AS n_sequences,
-           CAST(SUM(CASE WHEN n_tok > 0 AND first_bin != last_bin
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_straddling,
-           CAST((1000 * SUM(n_tok)) // (512 * ((MAX(cum) + 511) // 512)) AS BIGINT)
-               AS fill_permille
-    FROM b
-    GROUP BY shard
-    ORDER BY shard
-    """,
-)
-def pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing — the step that turns a filtered corpus into
-    fixed-length training sequences: documents are concatenated in
-    deterministic order within hash shards and split every 512 tokens
-    (document-concatenation packing, the GPT/T5 default).  Reports the
-    packing profile per shard: sequence count, docs straddling a
-    sequence boundary (candidates for attention-mask resets), and fill
-    rate (how close packing gets to zero padding).
-
-    Scale shape: the cumulative count is a window PARTITIONED by shard
-    — at 100 TB each shard's running sum is independent, so the plan is
-    one hash Exchange(shard) + per-shard sort, never a global
-    single-partition window; everything after is a per-shard aggregate
-    over scalars (doc text itself is never shuffled — only token
-    counts)."""
-    from pyspark.sql import Window
-
-    docs = load_testdata(spark, sf_dir, "documents")
-    t = docs.select(
-        "doc_id",
-        (F.col("doc_id") % 8).alias("shard"),
-        F.size(F.split(F.col("text"), X.TOKEN_RE)).alias("n_tok"),
-    )
-    w = (
-        Window.partitionBy("shard")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    c = t.withColumn("cum", F.sum("n_tok").over(w))
-    # div() truncates toward zero in Spark but DuckDB's // floors —
-    # identical on the non-negative operands here; the n_tok = 0 guard
-    # keeps (cum - 1) from ever going negative on a leading empty doc
-    b = c.select(
-        "shard",
-        "n_tok",
-        "cum",
-        F.expr("div(cum - n_tok, 512)").alias("first_bin"),
-        F.when(F.col("n_tok") > 0, F.expr("div(cum - 1, 512)"))
-        .otherwise(F.expr("div(cum - n_tok, 512)"))
-        .alias("last_bin"),
-    )
-    return (
-        b.groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum("n_tok").cast("bigint").alias("n_tokens"),
-            F.expr("div(max(cum) + 511, 512)").cast("bigint").alias("n_sequences"),
-            F.sum(
-                F.when(
-                    (F.col("n_tok") > 0) & (F.col("first_bin") != F.col("last_bin")),
-                    1,
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_straddling"),
-            F.expr("div(1000 * sum(n_tok), 512 * div(max(cum) + 511, 512))")
-            .cast("bigint")
-            .alias("fill_permille"),
-        )
-        .select(
-            F.col("shard").cast("bigint"),
-            "n_docs",
-            "n_tokens",
-            "n_sequences",
-            "n_straddling",
-            "fill_permille",
-        )
-        .orderBy("shard")
-    )
-
-
-@register(
-    "sample_mixture_weighted",
-    f"""
-    WITH t AS (
-        SELECT doc_id, doc_id % 5 AS source,
-               md5(CAST(doc_id AS VARCHAR)) AS h
-        FROM documents
-    ),
-    rates(source, rate) AS (VALUES (0, 1000), (1, 800), (2, 600), (3, 400), (4, 200)),
-    keyed AS (
-        SELECT t.doc_id, t.source, r.rate,
-               {_HEX12} % 1000 AS u
-        FROM t JOIN rates r ON r.source = t.source
-    )
-    SELECT CAST(source AS BIGINT) AS source,
-           CAST(ANY_VALUE(rate) AS BIGINT) AS target_permille,
-           CAST(COUNT(*) AS BIGINT) AS n_total,
-           CAST(SUM(CASE WHEN u < rate THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-           CAST((1000 * SUM(CASE WHEN u < rate THEN 1 ELSE 0 END)) // COUNT(*) AS BIGINT)
-               AS realized_permille
-    FROM keyed
-    GROUP BY source
-    ORDER BY source
-    """,
-)
-def sample_mixture_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mixture sampling across sources — the per-corpus rate control of
-    training-data mixing (the Pile / DoReMi pattern: each source gets a
-    target inclusion rate; documents are kept by a deterministic hash
-    Bernoulli, so the mixture is reproducible and resumable with no RNG
-    state).  Source here is ``doc_id % 5`` as a 5-corpus stand-in;
-    rates 1000/800/600/400/200‰.  Output compares realized vs target
-    rate per source — the drift check a mixing job alerts on.
-
-    Scale shape: map-only keep decision (48-bit md5 prefix mod 1000 <
-    rate, broadcast rate table) + one per-source aggregate; nothing
-    shuffles but the counts."""
-    rates = spark.createDataFrame(
-        [(0, 1000), (1, 800), (2, 600), (3, 400), (4, 200)],
-        "source bigint, rate bigint",
-    )
-    docs = load_testdata(spark, sf_dir, "documents")
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 12
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1000
-    )
-    keyed = (
-        docs.select("doc_id", (F.col("doc_id") % 5).alias("source"), u.alias("u"))
-        .join(F.broadcast(rates), "source")
-    )
-    return (
-        keyed.groupBy("source")
-        .agg(
-            F.any_value("rate").cast("bigint").alias("target_permille"),
-            F.count(F.lit(1)).cast("bigint").alias("n_total"),
-            F.sum(F.when(F.col("u") < F.col("rate"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_kept"),
-            F.expr(
-                "div(1000 * sum(case when u < rate then 1 else 0 end), count(1))"
-            )
-            .cast("bigint")
-            .alias("realized_permille"),
-        )
-        .select(
-            F.col("source").cast("bigint"),
-            "target_permille",
-            "n_total",
-            "n_kept",
-            "realized_permille",
-        )
-        .orderBy("source")
-    )
 
 
 @register(
@@ -1864,79 +1220,6 @@ def vocab_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "dedup_clusters",
-    f"""
-    WITH RECURSIVE {_CORPUS_SQL}, {_SHINGLE_SQL},
-    dfreq AS (SELECT sh, COUNT(*) AS df FROM sh GROUP BY sh),
-    kept AS (SELECT s.doc_id, s.sh FROM sh s JOIN dfreq d ON s.sh = d.sh
-             WHERE d.df <= 16),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM kept GROUP BY doc_id),
-    common AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-        FROM kept a JOIN kept b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    pairs AS (
-        SELECT id_a, id_b
-        FROM common JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
-        WHERE (1000 * c) // (sa.sz + sb.sz - c) >= 300
-    ),
-    edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-              UNION ALL SELECT id_b AS u, id_a AS v FROM pairs),
-    reach(u, v) AS (
-        SELECT u, v FROM edges
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    )
-    SELECT CAST(c.doc_id AS BIGINT) AS doc_id,
-           CAST(least(c.doc_id, coalesce(MIN(r.v), c.doc_id)) AS BIGINT) AS component
-    FROM corpus c LEFT JOIN reach r ON r.u = c.doc_id
-    GROUP BY c.doc_id
-    ORDER BY doc_id
-    """,
-)
-def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup CLUSTERS: Jaccard pairs (≥0.3) → connected components →
-    every corpus doc labeled with its duplicate-group id (min member).
-    The keep-one-per-cluster step of a production dedup pipeline; see
-    operators/graph.py for the iterative formulation.  Oracle: DuckDB
-    recursive CTE computing the same transitive closure.
-
-    Round-10 default-path swap (VERDICT r9 "Next" #6): pairs now come
-    from the ``posting_freq_cap=16`` exact tier — the same df-filtered
-    integer-exact Jaccard as ``dedup_ngram_jaccard_capped``, whose
-    self-join output is ≤ cap·|postings|/2 (linear in the corpus) —
-    because the UNCAPPED Σ bucket² posting join made exact-pairs CC
-    the family's α ceiling (0.67 at 300×, 196.6 s).  The oracle
-    replays the identical filtered semantics (dfreq/kept CTEs), so the
-    gate stays hash-exact.  The cap is 16, NOT the capped tier's 4:
-    an old-oracle-vs-new-oracle DuckDB differential showed cap=4
-    CHANGES the cluster labels at sf0.001 and sf0.1 (max shingle df
-    there is 14/32 — docs legitimately linked through df∈(4,16]
-    shingles lose their edge), while cap=16 reproduces the uncapped
-    components EXACTLY at sf0.001, sf0.01 and sf0.1 — so the swap
-    keeps every oracle-SF result bit-identical to the r1–r9 history
-    while the join output stays ≤ 16·|postings|/2, linear in the
-    corpus.  The uncapped pair tier remains registered as
-    ``dedup_ngram_jaccard``; the LSH candidate tier as
-    ``dedup_clusters_minhash``."""
-    from .operators.graph import connected_components
-
-    corpus = _dedup_corpus(spark, sf_dir)
-    pairs = D.jaccard_pairs(
-        corpus, "doc_id", "text", min_permille=300, posting_freq_cap=16
-    )
-    nodes = corpus.select(F.col("doc_id").alias("id"))
-    labels = connected_components(
-        nodes, pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    )
-    return labels.select(
-        F.col("id").cast("bigint").alias("doc_id"),
-        F.col("component").cast("bigint").alias("component"),
-    ).orderBy("doc_id")
-
-
 _MINHASH_BANDS_SQL = f"""
     seeds AS (SELECT unnest(generate_series(0, 7)) AS seed),
     hashed AS (
@@ -1954,75 +1237,6 @@ _MINHASH_BANDS_SQL = f"""
         SELECT doc_id, 1 AS band_idx, md5(concat_ws('|', h4, h5, h6, h7)) AS band_sig FROM sig
     )
 """
-
-
-@register(
-    "dedup_clusters_minhash",
-    f"""
-    WITH RECURSIVE {_CORPUS_SQL}, {_SHINGLE_SQL}, {_MINHASH_BANDS_SQL},
-    cand AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a
-        JOIN bands b ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig
-                    AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    common AS (
-        SELECT c.id_a, c.id_b, COUNT(*) AS c
-        FROM cand c
-        JOIN sh a ON a.doc_id = c.id_a
-        JOIN sh b ON b.doc_id = c.id_b AND b.sh = a.sh
-        GROUP BY 1, 2
-    ),
-    pairs AS (
-        SELECT id_a, id_b
-        FROM common JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
-        WHERE (1000 * c) // (sa.sz + sb.sz - c) >= 300
-    ),
-    edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-              UNION ALL SELECT id_b AS u, id_a AS v FROM pairs),
-    reach(u, v) AS (
-        SELECT u, v FROM edges
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    )
-    SELECT CAST(c.doc_id AS BIGINT) AS doc_id,
-           CAST(least(c.doc_id, coalesce(MIN(r.v), c.doc_id)) AS BIGINT) AS component
-    FROM corpus c LEFT JOIN reach r ON r.u = c.doc_id
-    GROUP BY c.doc_id
-    ORDER BY doc_id
-    """,
-)
-def dedup_clusters_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup clusters with LSH candidate generation — the 100 TB
-    clustering path.
-
-    ``dedup_clusters`` generates pairs from the full shingle
-    posting-list join (Σ bucket² work over every shingle in the
-    corpus); here candidates come from banded minhash signatures
-    (constant-size per doc — the shuffle is |docs|·2 band rows no
-    matter how long the documents are), each candidate is verified
-    with exact Jaccard over just that pair's shingle arrays, and the
-    verified edges feed the same connected-components loop.  Recall
-    is bounded by the banding probability (recall < 1 by design);
-    precision matches ``dedup_clusters`` exactly, since verification
-    recomputes true Jaccard.  Oracle: DuckDB recursive CTE over the
-    identically-banded, identically-verified edge set."""
-    from .operators.graph import connected_components
-
-    corpus = _dedup_corpus(spark, sf_dir)
-    pairs = D.minhash_verified_pairs(
-        corpus, "doc_id", "text", n_hashes=8, band_size=4, min_permille=300
-    )
-    nodes = corpus.select(F.col("doc_id").alias("id"))
-    labels = connected_components(
-        nodes, pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    )
-    return labels.select(
-        F.col("id").cast("bigint").alias("doc_id"),
-        F.col("component").cast("bigint").alias("component"),
-    ).orderBy("doc_id")
 
 
 @register(
@@ -2089,7 +1303,7 @@ def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
     the HIGHEST-QUALITY member (here: most tokens, doc_id tiebreak),
     not the arbitrary min-id.  Clusters come from the 100 TB path
     (banded minhash candidates → exact-Jaccard verification →
-    connected components, exactly ``dedup_clusters_minhash``); output
+    connected components); output
     is one row per real duplicate group: component id, member count,
     the chosen representative with its token count, and the group's
     total token mass (= how much the dedup saves).
@@ -2272,8 +1486,7 @@ def pandas_udaf_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def approx_distinct_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch surface: HyperLogLog distinct + approximate median — now
-    with a BOUNDED-ERROR oracle (round-4, VERDICT r3 "Next" #4; the
-    pattern ``approx_distinct_kmv`` established).  The raw sketch
+    with a BOUNDED-ERROR oracle.  The raw sketch
     values are engine-private (Spark's HLL++ and GK-quantile internals
     have no DuckDB twin), so the query emits the EXACT aggregates plus
     two booleans asserting each sketch landed inside its documented
@@ -2471,210 +1684,6 @@ def tfidf_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "bigram_stats",
-    r"""
-    WITH t AS (SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM documents),
-    bi AS (
-        SELECT toks[i] AS w1, toks[i+1] AS w2
-        FROM t, unnest(generate_series(1, len(toks) - 1)) AS u(i)
-    ),
-    counts AS (SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS n FROM bi GROUP BY w1, w2),
-    uni AS (SELECT w1, CAST(SUM(n) AS BIGINT) AS n1 FROM counts GROUP BY w1)
-    SELECT c.w1, c.w2, c.n,
-           CAST((1000 * c.n) // u.n1 AS BIGINT) AS p_cond_permille
-    FROM counts c JOIN uni u ON c.w1 = u.w1
-    WHERE c.n >= 20
-    ORDER BY c.w1, c.w2
-    """,
-)
-def bigram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bigram conditional probabilities (×1000, integer-exact) — the
-    n-gram language-model statistic behind perplexity-style quality
-    filters.  Narrow shingle generation, one aggregation shuffle."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    toks = docs.select(F.split(F.col("text"), X.TOKEN_RE).alias("toks"))
-    idx = F.sequence(F.lit(0), F.size("toks") - 2)
-    bi = (
-        toks.filter(F.size("toks") >= 2)
-        .select(
-            F.explode(
-                F.transform(
-                    idx,
-                    lambda i: F.struct(
-                        F.element_at("toks", i + 1).alias("w1"),
-                        F.element_at("toks", i + 2).alias("w2"),
-                    ),
-                )
-            ).alias("b")
-        )
-        .select("b.w1", "b.w2")
-    )
-    counts = bi.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n"))
-    uni = counts.groupBy("w1").agg(F.sum("n").cast("bigint").alias("n1"))
-    return (
-        counts.join(uni, "w1")
-        .filter(F.col("n") >= 20)
-        .select(
-            "w1", "w2", F.col("n").cast("bigint").alias("n"),
-            F.expr("div(1000 * n, n1)").cast("bigint").alias("p_cond_permille"),
-        )
-        .orderBy("w1", "w2")
-    )
-
-
-@register(
-    "ann_recall_at_k",
-    """
-    WITH n AS (
-        SELECT vec_id, embedding::DOUBLE[] AS v,
-               sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm,
-               (CASE WHEN embedding[1] >= 0 THEN '1' ELSE '0' END) ||
-               (CASE WHEN embedding[2] >= 0 THEN '1' ELSE '0' END) ||
-               (CASE WHEN embedding[3] >= 0 THEN '1' ELSE '0' END) ||
-               (CASE WHEN embedding[4] >= 0 THEN '1' ELSE '0' END) AS bkt
-        FROM embeddings
-    ),
-    q AS (SELECT * FROM n WHERE vec_id < 20),
-    brute AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                       ORDER BY list_dot_product(q.v, c.v) / (q.nrm * c.nrm) DESC,
-                                c.vec_id) AS rk
-            FROM q JOIN n c ON c.vec_id != q.vec_id
-        ) WHERE rk <= 5
-    ),
-    approx AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id
-        FROM q JOIN n c ON q.bkt = c.bkt AND c.vec_id != q.vec_id
-    ),
-    hits AS (
-        SELECT b.query_id,
-               CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit
-        FROM brute b LEFT JOIN approx a
-          ON b.query_id = a.query_id AND b.neighbor_id = a.neighbor_id
-        GROUP BY b.query_id
-    )
-    SELECT CAST(query_id AS BIGINT) AS query_id, n_hit,
-           CAST((1000 * n_hit) // 5 AS BIGINT) AS recall_permille
-    FROM hits
-    ORDER BY query_id
-    """,
-)
-def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 of the sign-LSH candidate set against exact brute-force
-    top-5, computed entirely in-engine — the evaluation loop an ANN
-    deployment needs (approximation quality as a first-class query, not
-    a notebook afterthought)."""
-    from pyspark.sql import Window
-
-    emb = S.with_norm(_fan_out(load_testdata(spark, sf_dir, "embeddings"))).withColumn(
-        "bkt", S.sign_bucket("embedding", bits=4)
-    )
-    # ONE scoring pass: a brute-top-5 pair (q, n) is an LSH candidate
-    # iff the two sign buckets are equal, so the "did the approximate
-    # index retrieve it" flag rides the exact-ranking join directly —
-    # no second N×|Q| scan, no cached intermediate, and no join-back
-    # (the round-2 version ran brute and bucketed passes separately off
-    # a persisted frame and left-joined them: half the fold work and a
-    # cache materialization saved).  Vectors are projected away before
-    # the ranking exchange — the window shuffles (ids, cos, hit) only.
-    n = emb.select(
-        "vec_id", F.col("_v").alias("v"), F.col("_norm").alias("nrm"), "bkt"
-    )
-    q = n.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"), F.col("bkt").alias("qbkt"),
-    )
-    cos = S.dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    pairs = (
-        n.join(F.broadcast(q), F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            cos.alias("cos"),
-            (F.col("qbkt") == F.col("bkt")).cast("int").alias("hit"),
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-    )
-    hits = pairs.groupBy("query_id").agg(
-        F.sum("hit").cast("bigint").alias("n_hit")
-    )
-    return hits.select(
-        F.col("query_id").cast("bigint"),
-        "n_hit",
-        F.expr("div(1000 * n_hit, 5)").cast("bigint").alias("recall_permille"),
-    ).orderBy("query_id")
-
-
-@register(
-    "text_winnowing_fingerprints",
-    r"""
-    WITH t AS (SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM documents),
-    grams AS (
-        SELECT doc_id, i AS pos,
-               md5(concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3], toks[i+4])) AS h
-        FROM t, unnest(generate_series(1, len(toks) - 4)) AS u(i)
-        WHERE len(toks) >= 5
-    ),
-    winnowed AS (
-        SELECT doc_id,
-               MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-                            ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS sel
-        FROM grams
-    ),
-    sel AS (SELECT DISTINCT doc_id, sel FROM winnowed)
-    SELECT doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_fingerprints,
-           md5(string_agg(sel, '|' ORDER BY sel)) AS doc_fingerprint
-    FROM sel
-    GROUP BY doc_id
-    ORDER BY doc_id
-    """,
-)
-def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling-hash document fingerprinting (winnowing, à la MOSS):
-    hash every 5-gram, keep the window-of-4 minimum at each position,
-    fingerprint = digest of the selected hash set.  Guarantees any
-    shared run of ≥8 tokens yields a shared selected hash — the
-    plagiarism/near-dup detector that survives local edits."""
-    from pyspark.sql import Window
-
-    docs = load_testdata(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.split(F.col("text"), X.TOKEN_RE).alias("toks"))
-    idx = F.sequence(F.lit(0), F.size("toks") - 5)
-    grams = (
-        toks.filter(F.size("toks") >= 5)
-        .select(
-            "doc_id",
-            F.posexplode(
-                F.transform(
-                    idx,
-                    lambda i: F.concat_ws(
-                        " ", *[F.element_at("toks", i + j + 1) for j in range(5)]
-                    ),
-                )
-            ).alias("pos", "gram"),
-        )
-        .select("doc_id", "pos", F.md5(F.col("gram").cast("binary")).alias("h"))
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, 3)
-    sel = grams.select("doc_id", F.min("h").over(w).alias("sel")).distinct()
-    return (
-        sel.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_fingerprints"),
-            F.md5(
-                F.concat_ws("|", F.array_sort(F.collect_list("sel"))).cast("binary")
-            ).alias("doc_fingerprint"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-@register(
     "skew_salted_aggregation",
     """
     SELECT l_returnflag,
@@ -2707,35 +1716,6 @@ def skew_salted_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("total_qty").cast("bigint"),
         F.col("total_cents").cast("bigint"),
     ).orderBy("l_returnflag")
-
-
-@register(
-    "crossmodal_doc_embedding_join",
-    r"""
-    SELECT d.doc_id,
-           CAST(len(string_split_regex(d.text, '\s+')) AS BIGINT) AS n_tokens,
-           e.label,
-           CAST(CAST(ROUND(sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[])), 6) AS DECIMAL(12,6)) AS DOUBLE) AS vec_norm
-    FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
-    ORDER BY d.doc_id
-    """,
-)
-def crossmodal_doc_embedding_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal record assembly: text features joined to the embedding
-    modality by id — the join every multimodal training pipeline runs to
-    build (text, vector, label) examples."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    emb = S.with_norm(load_testdata(spark, sf_dir, "embeddings"))
-    return (
-        docs.join(emb, docs.doc_id == emb.vec_id, "inner")
-        .select(
-            "doc_id",
-            F.size(F.split(F.col("text"), X.TOKEN_RE)).cast("bigint").alias("n_tokens"),
-            "label",
-            F.round("_norm", 6).cast("decimal(12,6)").cast("double").alias("vec_norm"),
-        )
-        .orderBy("doc_id")
-    )
 
 
 @register(
@@ -2976,7 +1956,7 @@ def text_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed strides (the rsync/LBFS trick): a token opens a new chunk
     when its hash lands in a 1/8 target band, so chunk boundaries are
     determined by CONTENT and survive insertions/deletions that shift
-    every fixed-window frame (``text_chunking``'s weakness as a dedup
+    every fixed-window frame (a fixed window's weakness as a dedup
     unit).  Per doc: how many chunks, and how many also appear verbatim
     in another document — the storage-dedup / near-dup signal.
 
@@ -3505,133 +2485,6 @@ def pipeline_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 @register(
-    "text_pii_scrub",
-    r"""
-    WITH seeded AS (
-        SELECT doc_id,
-               text || ' contact user' || doc_id || '@example.com or +1-555-01' ||
-               lpad(CAST(doc_id % 100 AS VARCHAR), 2, '0') || '-' ||
-               lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS text
-        FROM documents
-    ),
-    scrubbed AS (
-        SELECT doc_id, text,
-               regexp_replace(
-                   regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-                   '\+?\d[\d-]{7,}\d', '<PHONE>', 'g') AS clean
-        FROM seeded
-    )
-    SELECT doc_id,
-           CAST(length(text) - length(clean) AS BIGINT) AS len_delta,
-           CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-           CAST(len(regexp_extract_all(text, '\+?\d[\d-]{7,}\d')) AS BIGINT) AS n_phones,
-           substr(clean, length(clean) - 29, 30) AS clean_tail
-    FROM scrubbed
-    ORDER BY doc_id
-    """,
-)
-def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrubbing (emails + phone numbers → typed placeholder
-    tokens) — a mandatory pass in any web-scale training pipeline.  The
-    corpus is synthetic and PII-free, so both sides SEED one
-    deterministic email + phone per doc before scrubbing; the query then
-    proves detection (n_emails/n_phones), redaction (len_delta) and
-    exact output bytes (clean_tail) all match.
-
-    Pure ``regexp_replace``/``regexp_extract_all`` — JVM-side codegen,
-    no UDF; at 100 TB this runs as a map-only pass over the text
-    column with zero shuffle."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    email_re = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-    phone_re = r"\+?\d[\d-]{7,}\d"
-    seeded = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"),
-            F.col("doc_id").cast("string"),
-            F.lit("@example.com or +1-555-01"),
-            F.lpad((F.col("doc_id") % 100).cast("string"), 2, "0"),
-            F.lit("-"),
-            F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-        ).alias("text"),
-    )
-    clean = F.regexp_replace(
-        F.regexp_replace(F.col("text"), email_re, "<EMAIL>"), phone_re, "<PHONE>"
-    )
-    return (
-        seeded.withColumn("clean", clean)
-        .select(
-            "doc_id",
-            (F.length("text") - F.length("clean")).cast("bigint").alias("len_delta"),
-            F.size(F.regexp_extract_all("text", F.lit(email_re), 0))
-            .cast("bigint")
-            .alias("n_emails"),
-            F.size(F.regexp_extract_all("text", F.lit(phone_re), 0))
-            .cast("bigint")
-            .alias("n_phones"),
-            F.substring(F.col("clean"), F.length("clean") - 29, 30).alias("clean_tail"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-@register(
-    "text_token_counts",
-    r"""
-    WITH t AS (
-        SELECT doc_id, text,
-               regexp_extract_all(text,
-                   '''(?:[sdmt]|ll|ve|re)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+'
-               ) AS bpe
-        FROM documents
-    )
-    SELECT doc_id,
-           CAST(length(text) AS BIGINT) AS n_chars,
-           CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-           CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS ws_tokens,
-           CAST(len(bpe) AS BIGINT) AS bpe_tokens,
-           CAST((1000 * length(text)) // len(bpe) AS BIGINT) AS chars_per_bpe_milli
-    FROM t
-    ORDER BY doc_id
-    """,
-)
-def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document token counting, the budget currency of every LLM
-    training pipeline: whitespace tokens AND a BPE-ish pre-tokenizer
-    count (the GPT-2 split regex — contraction suffixes, letter runs,
-    digit runs, punctuation runs, whitespace — which upper-bounds real
-    BPE merge counts and is deterministic without a vocab file).
-    chars/token (milli) is the packing-density signal used to filter
-    boilerplate/code-like shards.  Verified engine-exact: the Java and
-    RE2 dialects agree on this pattern over the whole corpus (no
-    lookarounds, which RE2 lacks).
-
-    Scale shape: map-only over the text column — no shuffle, no UDF;
-    the regex runs inside whole-stage codegen.  ``_fan_out`` spreads
-    the small local file so the regex work uses every core; a real
-    multi-GB input partitions naturally."""
-    docs = _fan_out(load_testdata(spark, sf_dir, "documents"))
-    bpe_pat = r"'(?:[sdmt]|ll|ve|re)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+"
-    bpe = F.regexp_extract_all(F.col("text"), F.lit(bpe_pat), F.lit(0))
-    counted = docs.select(
-        "doc_id",
-        F.length("text").cast("bigint").alias("n_chars"),
-        F.octet_length("text").cast("bigint").alias("n_bytes"),
-        F.size(F.split(F.trim(F.col("text")), r"\s+"))
-        .cast("bigint")
-        .alias("ws_tokens"),
-        F.size(bpe).cast("bigint").alias("bpe_tokens"),
-    )
-    return counted.select(
-        "*",
-        F.expr("div(1000 * n_chars, bpe_tokens)")
-        .cast("bigint")
-        .alias("chars_per_bpe_milli"),
-    ).orderBy("doc_id")
-
-
-@register(
     "pipeline_training_prep",
     f"""
     WITH {_CORPUS_SQL},
@@ -3834,7 +2687,7 @@ def _sq8_kmeans_cells(
 ) -> DataFrame:
     """Train the SQ8-domain k-means quantizer and assign every vector
     to its cell: a persisted frame (vec_id, v, nrm, cvec, cluster INT).
-    Shared by ``similarity_ann_ivf_kmeans`` (probe routing) and
+    Shared by ``ann_recall_ivf`` (probe routing) and
     ``dedup_semantic_semdedup`` (cluster-scoped dedup).
 
     ``k=None`` derives k from the corpus size (``_scaled_quantizer_k``,
@@ -3897,9 +2750,7 @@ def _kmeans_cells_cte(
     """Shared unrolled-Lloyd CTE prefix: trains the SQ8-domain k-means
     quantizer and ends at the ``cells`` CTE (vec_id → cluster), with
     ``e`` (full-precision vectors + norms) still in scope.  Used by the
-    ``similarity_ann_ivf_kmeans`` and ``dedup_semantic_semdedup``
-    oracles — the replayability argument lives on
-    ``_ivf_kmeans_oracle_sql``.  ``k_sql`` (a scalar-subquery string)
+    ``ann_recall_ivf`` and ``dedup_semantic_semdedup`` oracles.  ``k_sql`` (a scalar-subquery string)
     replaces the literal k for corpus-scaled quantizers
     (``_K_SCALED_SQL``); only the SEED selection depends on k — the
     Lloyd unrolling itself is k-agnostic (centroids are rows)."""
@@ -3964,87 +2815,6 @@ def _kmeans_cells_cte(
         ) WHERE rk = 1
     )""")
     return "".join(parts)
-
-
-def _ivf_kmeans_oracle_sql(k: int = 8, dim: int = 64, iters: int = 3) -> str:
-    """Unrolled-Lloyd DuckDB twin of ``similarity_ann_ivf_kmeans`` —
-    same replayability argument as ``_pq_oracle_sql``: the quantizer
-    trains on integer-valued SQ8 code vectors (exact partial sums, one
-    rounded division per centroid mean) with index-order distance folds
-    and a pinned iteration count, so cells match bitwise; in-cell
-    scoring is the full-precision cosine both engines compute with the
-    same fold."""
-    return _kmeans_cells_cte(k, dim, iters) + """,
-    scored AS (
-        SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-               list_dot_product(qe.v, n.v) / (qe.nrm * n.nrm) AS cos_raw
-        FROM cells q
-        JOIN e qe ON qe.vec_id = q.vec_id
-        JOIN cells kc ON kc.cluster = q.cluster AND kc.vec_id != q.vec_id
-        JOIN e n ON n.vec_id = kc.vec_id
-        WHERE q.vec_id < 10
-    ),
-    ranked AS (
-        SELECT query_id, neighbor_id, cos_raw,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY cos_raw DESC, neighbor_id) AS INTEGER) AS rk
-        FROM scored
-    )
-    SELECT CAST(query_id AS BIGINT) AS query_id,
-           CAST(neighbor_id AS BIGINT) AS neighbor_id,
-           CAST(CAST(ROUND(cos_raw, 6) AS DECIMAL(10,6)) AS DOUBLE) AS cos_sim, rk
-    FROM ranked WHERE rk <= 5
-    ORDER BY query_id, rk
-    """
-
-
-@register("similarity_ann_ivf_kmeans", _ivf_kmeans_oracle_sql())
-def similarity_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF with a TRAINED coarse quantizer: Lloyd's k-means (k=8,
-    deterministic first-k seeding over vec_id order, 3 pinned
-    iterations) fits the centroid set, then the inverted file and
-    probing work exactly like ``similarity_ann_ivf``.  The quantizer
-    trains on the SQ8 code vectors — the production FAISS shape where
-    the coarse index lives in the compressed domain — which is also
-    what makes training SQL-replayable (integer-exact partial sums;
-    see ``_pq_oracle_sql``): this query graduated from rows-only to a
-    full DuckDB oracle in round 3.  In-cell scoring stays
-    full-precision cosine.
-
-    Scale shape: per k-means iteration one narrow assignment pass
-    (broadcast k×d centroids) + one (k·d)-row partial-sum shuffle —
-    only the centroid matrix ever reaches the driver.  The probe join
-    is a broadcast equi-join on the cell id, identical to the stride
-    IVF.
-    """
-    cells = _sq8_kmeans_cells(spark, sf_dir, k=8, iters=3)
-    q = cells.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-        F.col("cluster").alias("qcluster"),
-    )
-    scored = cells.join(
-        F.broadcast(q),
-        (F.col("qcluster") == F.col("cluster")) & (F.col("query_id") != F.col("vec_id")),
-    ).withColumn(
-        "cos_raw", S.dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_raw").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= 5)
-        .select(
-            F.col("query_id").cast("bigint"),
-            F.col("vec_id").cast("bigint").alias("neighbor_id"),
-            F.round("cos_raw", 6)
-            .cast("decimal(10,6)")
-            .cast("double")
-            .alias("cos_sim"),
-            "rk",
-        )
-        .orderBy("query_id", "rk")
-    )
 
 
 def _semdedup_oracle_sql(tau: float = 0.45) -> str:
@@ -4695,8 +3465,7 @@ def _pq_recall_oracle_sql() -> str:
 @register("ann_recall_pq", _pq_recall_oracle_sql())
 def ann_recall_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the PQ-ADC tier against exact cosine brute force —
-    completes the recall-gate family (sign-LSH: ``ann_recall_at_k``,
-    IVF: ``ann_recall_ivf``, multiprobe: ``ann_recall_multiprobe``):
+    completes the recall-gate family (IVF: ``ann_recall_ivf``):
     PQ is the LOSSY-COMPRESSION tier (SQ8 then 4×16 codebooks), so its
     approximation error comes from quantization, not candidate
     pruning, and deserves its own measured gate rather than an assumed
@@ -5039,106 +3808,6 @@ def similarity_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "rk")
 
 
-@register(
-    "text_trigram_lm_score",
-    r"""
-    WITH lowered AS (SELECT doc_id, lower(text) AS t FROM documents),
-    pos AS (
-        SELECT doc_id, t,
-               unnest(generate_series(1, greatest(length(t) - 2, 0))) AS i
-        FROM lowered WHERE length(t) >= 3
-    ),
-    tg AS (SELECT doc_id, substr(t, i, 3) AS tg FROM pos),
-    counts AS (SELECT tg, COUNT(*) AS n FROM tg GROUP BY tg),
-    scored AS (
-        SELECT g.doc_id,
-               COUNT(*) AS n_trigrams,
-               SUM(length(format('{:b}', c.n)) - 1) AS bucket_sum
-        FROM tg g JOIN counts c ON c.tg = g.tg
-        GROUP BY g.doc_id
-    )
-    SELECT CAST(doc_id AS BIGINT) AS doc_id,
-           CAST(n_trigrams AS BIGINT) AS n_trigrams,
-           CAST((1000 * bucket_sum) // n_trigrams AS BIGINT) AS familiarity_permille
-    FROM scored
-    ORDER BY doc_id
-    """,
-)
-def text_trigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Char-trigram language-model familiarity score — the
-    integer-exact stand-in for CCNet's KenLM perplexity filter: a
-    document whose character trigrams are all corpus-frequent scores
-    high; gibberish / boilerplate-free rare text scores low.  Score =
-    per-doc mean of floor(log2(corpus_count(trigram))) in permille.
-
-    floor(log2 n) is computed as ``length(bin(n)) - 1`` — an INTEGER
-    derivation on both engines, because float log2 may round a hair
-    differently across libm implementations and flip a floor.
-
-    Scale shape: the LOWERED TEXT is persisted (compact, ~1× input)
-    and each consumer re-derives the char array in one streamed O(len)
-    split per row, so every emitted trigram is three O(1) array reads —
-    the first cut evaluated ``substring(lower(text), i, 3)`` inside the
-    explode lambda, an O(len) lower + O(i) UTF8 seek PER TRIGRAM =
-    O(len²) per doc, measured 8.1 s vs 3.0 s at sf0.1; a later cut
-    persisted the char ARRAY itself, whose ~56-bytes-per-char columnar
-    cache batches OOM'd the 100× blow-up.  The count table's key space
-    is bounded by charset³ regardless of corpus size, so it aggregates
-    with map-side partial combine and BROADCASTS back to the stream —
-    per-doc scoring is then a map-side join + one groupBy(doc_id)
-    shuffle.  Nothing here grows faster than the char stream itself."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    # length filter runs on the LOWERED text (size(cs) counts it) so it
-    # agrees with the oracle's WHERE length(lower(text)) even for
-    # Unicode chars whose lowercase expands (e.g. U+0130).
-    # PERSIST THE COMPACT FORM: caching the char ARRAY inflates every
-    # character to a ~56-byte UTF8String inside the columnar cache
-    # builder (10k-row batches held on-heap per task) — the 100×
-    # blow-up OOM'd exactly there.  Persist lower(text) (~1× the
-    # input) and re-derive cs per consumer: the split is O(len) per
-    # row, streamed and GC-able, and the two consumers pay 2× split
-    # CPU instead of a memory-bound cache of the inflated form.
-    lowered = docs.select(
-        "doc_id", F.lower("text").alias("lt")
-    ).transform(tracked_persist)
-    chars = lowered.select(
-        "doc_id", F.split("lt", "(?!^)").alias("cs")
-    ).filter(F.size("cs") >= 4)
-    tg = chars.select(
-        "doc_id",
-        # split("(?!^)") leaves one trailing "" element, so the char
-        # count is size(cs) - 1 and valid trigram starts are 1..n-2 =
-        # 1..size(cs)-3 (0-based reads below)
-        F.expr(
-            "explode(transform(sequence(1, size(cs) - 3),"
-            " i -> concat(cs[i-1], cs[i], cs[i+1])))"
-        ).alias("tg"),
-    )
-    counts = tg.groupBy("tg").agg(F.count("*").alias("n"))
-    bucket = F.length(F.expr("bin(n)")) - 1
-    # counts is charset³-BOUNDED (char trigrams saturate; it does NOT
-    # grow ∝ corpus the way word-vocab tables do), so the explicit
-    # broadcast is sound at any corpus size — and load-bearing: the
-    # round-8 audit briefly demoted it to a plain join, which forced
-    # the corpus-sized trigram STREAM through a shuffle and OOM'd the
-    # 100× blow-up; map-side broadcast join keeps the stream shuffle-
-    # free all the way to the one groupBy(doc_id).
-    return (
-        tg.join(F.broadcast(counts), "tg")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").cast("bigint").alias("n_trigrams"),
-            F.sum(bucket).alias("bucket_sum"),
-        )
-        .select(
-            F.col("doc_id").cast("bigint"),
-            "n_trigrams",
-            F.expr("div(1000 * bucket_sum, n_trigrams)").alias("familiarity_permille"),
-        )
-        .orderBy("doc_id")
-    )
-
-
 def _bpe_apply_sql(src: str, dst: str, m: str, pre: str) -> str:
     """One gaps-and-islands merge-application block: apply merge ``m``
     to every symbol array in ``src``, emitting ``dst``.  Within every
@@ -5348,8 +4017,7 @@ def text_lang_classifier_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
     supervised classifier's role in CCNet/RefinedWeb pipelines),
     expressed entirely in integer arithmetic so both engines agree
     bitwise: per-class token weights are floor(log2(count))+1 =
-    ``length(bin(count))`` (the same libm-free derivation as
-    ``text_trigram_lm_score``), a doc's class score is the sum of its
+    ``length(bin(count))`` (a libm-free derivation), a doc's class score is the sum of its
     tokens' class weights, argmax with a (score DESC, class ASC)
     tiebreak.  Deterministic train/test split by doc_id % 5; output is
     the test-set confusion matrix.
@@ -5698,100 +4366,6 @@ def tokens_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "approx_distinct_kmv",
-    """
-    WITH pairs AS (
-        SELECT DISTINCT event_type, user_id FROM events
-    ),
-    hashed AS (
-        SELECT event_type, md5(CAST(user_id AS VARCHAR)) AS h FROM pairs
-    ),
-    ranked AS (
-        SELECT event_type, h,
-               ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY h) AS rk
-        FROM hashed
-    ),
-    kth AS (SELECT event_type, h AS h64 FROM ranked WHERE rk = 64),
-    exact AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS exact_distinct
-              FROM pairs GROUP BY event_type)
-    SELECT e.event_type AS event_type, e.exact_distinct,
-           CAST(CASE WHEN k.h64 IS NULL THEN e.exact_distinct
-                ELSE (63 * 4294967296)
-                     // greatest(CAST(concat('0x', substr(k.h64, 1, 8)) AS BIGINT), 1)
-                END AS BIGINT) AS kmv_estimate,
-           CAST(CASE WHEN k.h64 IS NULL THEN 0
-                ELSE (1000 * abs((63 * 4294967296)
-                     // greatest(CAST(concat('0x', substr(k.h64, 1, 8)) AS BIGINT), 1)
-                     - e.exact_distinct)) // e.exact_distinct END AS BIGINT)
-               AS err_permille
-    FROM exact e LEFT JOIN kth k ON k.event_type = e.event_type
-    ORDER BY event_type
-    """,
-)
-def approx_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K-minimum-values distinct-count sketch (Bar-Yossef et al. 2002)
-    — the deterministic cousin of HLL: hash every (event_type, user)
-    once, keep the k=64 smallest hashes per group, and estimate
-    |distinct| = (k−1) / h_(k) with h_(k) read as a 2³²-scaled integer
-    fraction of its first 8 md5 hex chars.  Groups with fewer than k
-    members fall back to the exact count (standard KMV).  Every step is
-    integer/md5-deterministic, so unlike ``approx_distinct_stats``
-    (HLL, engine-private internals, rows-only) this sketch has an EXACT
-    DuckDB oracle — the approximate-distinct family's differential
-    gate, with ``err_permille`` showing the sketch error against the
-    exact count it sits next to.
-
-    Scale shape: one distinct (shuffle on the pair), one md5 map, then
-    a per-group sort to rank the k smallest (fixed-width hex ⇒ lexical
-    = numeric order).  At 100 TB the refinement is partial top-k per
-    map task before the merge; the estimate itself only ever moves k
-    hashes per group."""
-    pairs = (
-        load_testdata(spark, sf_dir, "events")
-        .select("event_type", "user_id")
-        .distinct()
-        .transform(tracked_persist)
-    )
-    hashed = pairs.select(
-        "event_type", F.md5(F.col("user_id").cast("string").cast("binary")).alias("h")
-    )
-    w = Window.partitionBy("event_type").orderBy("h")
-    kth = (
-        hashed.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 64)
-        .select("event_type", F.col("h").alias("h64"))
-    )
-    exact = pairs.groupBy("event_type").agg(
-        F.count("*").cast("bigint").alias("exact_distinct")
-    )
-    hexval = F.greatest(
-        F.conv(F.substring("h64", 1, 8), 16, 10).cast("bigint"), F.lit(1)
-    )
-    # integer floor division via div() to match DuckDB's //
-    return (
-        exact.join(F.broadcast(kth), "event_type", "left")
-        .withColumn("hexval", hexval)
-        .withColumn(
-            "kmv_estimate",
-            F.when(F.col("h64").isNull(), F.col("exact_distinct")).otherwise(
-                F.expr("div(63 * 4294967296, hexval)")
-            ).cast("bigint"),
-        )
-        .withColumn(
-            "err_permille",
-            F.when(F.col("h64").isNull(), F.lit(0)).otherwise(
-                F.expr(
-                    "div(1000 * abs(div(63 * 4294967296, hexval) - exact_distinct),"
-                    " exact_distinct)"
-                )
-            ).cast("bigint"),
-        )
-        .select("event_type", "exact_distinct", "kmv_estimate", "err_permille")
-        .orderBy("event_type")
-    )
-
-
-@register(
     "events_distribution_drift",
     """
     WITH span AS (
@@ -5903,308 +4477,6 @@ def events_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "pipeline_split_train_val_test",
-    r"""
-    WITH d AS (
-        SELECT doc_id, lang,
-               CAST(concat('0x', substr(md5(concat('split:', doc_id)), 1, 4))
-                    AS BIGINT) AS hv,
-               len(string_split_regex(text, '\s+')) AS n_toks
-        FROM documents
-    ),
-    tagged AS (
-        SELECT lang,
-               CASE WHEN hv < 58982 THEN 'train'
-                    WHEN hv < 62258 THEN 'val'
-                    ELSE 'test' END AS split,
-               n_toks
-        FROM d
-    )
-    SELECT lang, split,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_toks) AS BIGINT) AS n_tokens
-    FROM tagged
-    GROUP BY lang, split
-    ORDER BY lang, split
-    """,
-)
-def pipeline_split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 90/5/5 train/val/test split — hash-of-id
-    thresholds (md5 16-bit prefix: train < 0.9·2¹⁶ = 58982, val <
-    0.95·2¹⁶ = 62258), so membership is a pure function of doc_id:
-    stable under re-runs, additions, and repartitioning — the property
-    random() splits lack and the reason leakage audits can re-derive
-    any doc's split offline.  Output: per-(lang, split) doc/token
-    stats, the table you eyeball to confirm the split is stratified
-    enough before training.
-
-    Scale shape: one map-side hash + one bounded groupBy — nothing
-    else."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    hv = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string")).cast("binary")),
-            1,
-            4,
-        ),
-        16,
-        10,
-    ).cast("bigint")
-    tagged = docs.select(
-        "lang",
-        F.when(hv < 58982, "train").when(hv < 62258, "val").otherwise("test").alias("split"),
-        F.size(F.split("text", r"\s+")).alias("n_toks"),
-    )
-    return (
-        tagged.groupBy("lang", "split")
-        .agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.sum("n_toks").cast("bigint").alias("n_tokens"),
-        )
-        .orderBy("lang", "split")
-    )
-
-
-@register(
-    "sample_domain_quota",
-    r"""
-    WITH d AS (
-        SELECT doc_id, source,
-               md5(concat('quota:', doc_id)) AS pri,
-               len(string_split_regex(text, '\s+')) AS n_toks
-        FROM documents
-    ),
-    ranked AS (
-        SELECT source, n_toks,
-               ROW_NUMBER() OVER (PARTITION BY source ORDER BY pri, doc_id) AS rk
-        FROM d
-    )
-    SELECT source,
-           CAST(COUNT(*) AS BIGINT) AS n_total,
-           CAST(SUM(CASE WHEN rk <= 15 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-           CAST(SUM(CASE WHEN rk <= 15 THEN n_toks ELSE 0 END) AS BIGINT)
-               AS kept_tokens
-    FROM ranked
-    GROUP BY source
-    ORDER BY source
-    """,
-)
-def sample_domain_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain quota capping (RefinedWeb §3.2 caps any single
-    domain's contribution): each source keeps at most 15 documents,
-    chosen by deterministic hash priority (md5, doc_id tiebreak) so the
-    survivors are a stable pseudo-random sample — re-running or
-    re-sharding the corpus keeps the same docs.  Output: per-source
-    total vs kept with kept token mass.
-
-    Scale shape: rank-within-group via a window partitioned on the
-    domain — the partition IS the bounded unit (a domain too large for
-    one task's sort is past any sane quota anyway, and WindowGroupLimit
-    pushes the rk ≤ quota cut into the per-partition sort)."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id",
-        "source",
-        F.md5(F.concat(F.lit("quota:"), F.col("doc_id").cast("string")).cast("binary")).alias("pri"),
-        F.size(F.split("text", r"\s+")).alias("n_toks"),
-    )
-    w = Window.partitionBy("source").orderBy("pri", "doc_id")
-    ranked = d.withColumn("rk", F.row_number().over(w))
-    return (
-        ranked.groupBy("source")
-        .agg(
-            F.count("*").cast("bigint").alias("n_total"),
-            F.sum(F.when(F.col("rk") <= 15, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_kept"),
-            F.sum(F.when(F.col("rk") <= 15, F.col("n_toks")).otherwise(0))
-            .cast("bigint")
-            .alias("kept_tokens"),
-        )
-        .orderBy("source")
-    )
-
-
-@register(
-    "similarity_ann_lsh_multiprobe",
-    """
-    WITH n AS (
-        SELECT vec_id, embedding::DOUBLE[] AS v,
-               sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm,
-               (CASE WHEN embedding[1] >= 0 THEN '1' ELSE '0' END) ||
-               (CASE WHEN embedding[2] >= 0 THEN '1' ELSE '0' END) ||
-               (CASE WHEN embedding[3] >= 0 THEN '1' ELSE '0' END) ||
-               (CASE WHEN embedding[4] >= 0 THEN '1' ELSE '0' END) AS bkt
-        FROM embeddings
-    ),
-    probes AS (
-        SELECT vec_id, v, nrm,
-               CASE WHEN i = 0 THEN bkt
-                    ELSE substr(bkt, 1, i - 1)
-                         || (CASE substr(bkt, i, 1) WHEN '1' THEN '0' ELSE '1' END)
-                         || substr(bkt, i + 1)
-               END AS pbkt
-        FROM n, (SELECT unnest([0, 1, 2, 3, 4]) AS i)
-        WHERE vec_id < 10
-    ),
-    scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               list_dot_product(q.v, c.v) / (q.nrm * c.nrm) AS cos_raw
-        FROM probes q JOIN n c ON q.pbkt = c.bkt AND c.vec_id != q.vec_id
-    ),
-    ranked AS (
-        SELECT query_id, neighbor_id, cos_raw,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY cos_raw DESC, neighbor_id) AS INTEGER) AS rk
-        FROM scored
-    )
-    SELECT CAST(query_id AS BIGINT) AS query_id,
-           CAST(neighbor_id AS BIGINT) AS neighbor_id,
-           CAST(CAST(ROUND(cos_raw, 6) AS DECIMAL(10,6)) AS DOUBLE) AS cos_sim, rk
-    FROM ranked WHERE rk <= 5
-    ORDER BY query_id, rk
-    """,
-)
-def similarity_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-probe sign-LSH (Lv et al. 2007): each query searches its
-    own bucket PLUS the four 1-bit-flip neighbor buckets — the standard
-    recall lever that costs probes, not index memory (the alternative,
-    more hash tables, multiplies stored signatures).  A near-dup that
-    straddles one coordinate hyperplane — the miss class of
-    ``similarity_ann_sign_lsh`` — is recovered here; only multi-bit
-    straddles remain unseen.
-
-    Scale shape: the probe set explodes QUERY-side only (5 rows per
-    query, broadcast); candidates stay an equi-join on the bucket id,
-    and the 5 probe buckets are distinct so no candidate is scored
-    twice.  Corpus-side cost is identical to single-probe."""
-    emb = S.with_norm(_fan_out(load_testdata(spark, sf_dir, "embeddings"))).withColumn(
-        "bkt", S.sign_bucket("embedding", bits=4)
-    )
-
-    def flip(i: int):
-        return F.concat(
-            F.substring("qbkt", 1, i - 1),
-            F.when(F.substring("qbkt", i, 1) == "1", "0").otherwise("1"),
-            F.substring("qbkt", i + 1, 4 - i),
-        )
-
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("_v").alias("qv"),
-        F.col("_norm").alias("qn"),
-        F.col("bkt").alias("qbkt"),
-    )
-    qp = q.select(
-        "query_id", "qv", "qn",
-        F.explode(F.array(F.col("qbkt"), *[flip(i) for i in range(1, 5)])).alias("pbkt"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("_v").alias("cv"),
-        F.col("_norm").alias("cn"),
-        "bkt",
-    )
-    scored = c.join(
-        F.broadcast(qp),
-        (F.col("pbkt") == F.col("bkt")) & (F.col("query_id") != F.col("neighbor_id")),
-    ).withColumn("cos_raw", S.dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= 5)
-        .select(
-            F.col("query_id").cast("bigint"),
-            F.col("neighbor_id").cast("bigint"),
-            F.round("cos_raw", 6).cast("decimal(10,6)").cast("double").alias("cos_sim"),
-            "rk",
-        )
-        .orderBy("query_id", "rk")
-    )
-
-
-@register(
-    "ann_recall_multiprobe",
-    """
-    WITH n AS (
-        SELECT vec_id, embedding::DOUBLE[] AS v,
-               sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm,
-               (CASE WHEN embedding[1] >= 0 THEN '1' ELSE '0' END) ||
-               (CASE WHEN embedding[2] >= 0 THEN '1' ELSE '0' END) ||
-               (CASE WHEN embedding[3] >= 0 THEN '1' ELSE '0' END) ||
-               (CASE WHEN embedding[4] >= 0 THEN '1' ELSE '0' END) AS bkt
-        FROM embeddings
-    ),
-    q AS (SELECT * FROM n WHERE vec_id < 20),
-    pairs AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               CASE WHEN (CASE WHEN substr(q.bkt,1,1) != substr(c.bkt,1,1) THEN 1 ELSE 0 END)
-                       + (CASE WHEN substr(q.bkt,2,1) != substr(c.bkt,2,1) THEN 1 ELSE 0 END)
-                       + (CASE WHEN substr(q.bkt,3,1) != substr(c.bkt,3,1) THEN 1 ELSE 0 END)
-                       + (CASE WHEN substr(q.bkt,4,1) != substr(c.bkt,4,1) THEN 1 ELSE 0 END)
-                       <= 1 THEN 1 ELSE 0 END AS hit,
-               ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                   ORDER BY list_dot_product(q.v, c.v) / (q.nrm * c.nrm) DESC,
-                            c.vec_id) AS rk
-        FROM q JOIN n c ON c.vec_id != q.vec_id
-    )
-    SELECT CAST(query_id AS BIGINT) AS query_id,
-           CAST(SUM(hit) AS BIGINT) AS n_hit,
-           CAST((1000 * SUM(hit)) // 5 AS BIGINT) AS recall_permille
-    FROM pairs WHERE rk <= 5
-    GROUP BY query_id
-    ORDER BY query_id
-    """,
-)
-def ann_recall_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 of the MULTI-PROBE sign-LSH candidate set against exact
-    brute-force top-5 (VERDICT r4 "Next" #7) — calibrates
-    ``similarity_ann_lsh_multiprobe``'s probe count the same way
-    ``ann_recall_at_k`` gates the single-probe index.  A brute-top-5
-    pair is a multiprobe candidate iff the two 4-bit sign buckets differ
-    in at most ONE position (own bucket + the four 1-bit flips), so the
-    retrieved flag is a per-pair Hamming test riding the exact-ranking
-    join — one scoring pass, no second scan, no candidate
-    materialization.  Comparing this query's recall against
-    ``ann_recall_at_k`` measures exactly what the extra 4 probes buy."""
-    from pyspark.sql import Window
-
-    emb = S.with_norm(_fan_out(load_testdata(spark, sf_dir, "embeddings"))).withColumn(
-        "bkt", S.sign_bucket("embedding", bits=4)
-    )
-    n = emb.select(
-        "vec_id", F.col("_v").alias("v"), F.col("_norm").alias("nrm"), "bkt"
-    )
-    q = n.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"), F.col("bkt").alias("qbkt"),
-    )
-    cos = S.dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm"))
-    ham = sum(
-        (F.substring("qbkt", i, 1) != F.substring("bkt", i, 1)).cast("int")
-        for i in range(1, 5)
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    pairs = (
-        n.join(F.broadcast(q), F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id", "vec_id", cos.alias("cos"),
-            (ham <= 1).cast("int").alias("hit"),
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-    )
-    hits = pairs.groupBy("query_id").agg(F.sum("hit").cast("bigint").alias("n_hit"))
-    return hits.select(
-        F.col("query_id").cast("bigint"),
-        "n_hit",
-        F.expr("div(1000 * n_hit, 5)").cast("bigint").alias("recall_permille"),
-    ).orderBy("query_id")
-
-
 def _ivf_recall_oracle_sql() -> str:
     """DuckDB twin of ``ann_recall_ivf``: replay the trained coarse
     cells (``_kmeans_cells_cte``), rank exact cosine top-5 per query,
@@ -6233,10 +4505,8 @@ def _ivf_recall_oracle_sql() -> str:
 @register("ann_recall_ivf", _ivf_recall_oracle_sql())
 def ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the TRAINED-IVF candidate set (nprobe=1) against
-    exact brute-force top-5 — completes the recall-gate family across
-    the index tiers (sign-LSH single-probe ``ann_recall_at_k``,
-    multiprobe ``ann_recall_multiprobe``, and now the k-means coarse
-    quantizer behind ``similarity_ann_ivf_kmeans`` / the IVF-PQ
+    exact brute-force top-5 — the recall gate for the k-means coarse
+    quantizer behind the IVF-PQ
     composite).  A brute-top-5 pair is retrieved iff both vectors
     landed in the SAME trained cell, so the flag rides the exact
     ranking join — one scoring pass over the cells frame, which is
@@ -6990,97 +5260,6 @@ def quality_functional_dependencies(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 @register(
-    "spatial_neighbor_pairs",
-    """
-    WITH pts AS (
-        SELECT user_id,
-               CAST(concat('0x', substr(md5(concat('x:', user_id)), 1, 4)) AS BIGINT)
-                   % 1024 AS x,
-               CAST(concat('0x', substr(md5(concat('y:', user_id)), 1, 4)) AS BIGINT)
-                   % 1024 AS y
-        FROM (SELECT DISTINCT user_id FROM events)
-    )
-    SELECT CAST(a.user_id AS BIGINT) AS id_a, CAST(b.user_id AS BIGINT) AS id_b,
-           CAST((a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS BIGINT)
-               AS dist2
-    FROM pts a JOIN pts b ON a.user_id < b.user_id
-    WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) <= 1024
-    ORDER BY id_a, id_b
-    """,
-)
-def spatial_neighbor_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spatial neighbor pairs (distance ≤ 32 on a 1024² integer grid)
-    via GRID-CELL bucketing — the 2-D instance of the bucket-join
-    pattern every dedup tier here uses: assign each point its 32×32
-    cell, explode ONE side to its 3×3 cell neighborhood, equi-join on
-    the cell id, verify exact integer distance.  A true neighbor pair
-    is never missed (r = cell size ⇒ the partner is in the 3×3 box)
-    and never duplicated (the partner's cell appears once in the
-    neighborhood).  The ORACLE runs the O(n²) distance join this
-    replaces.  Coordinates are md5-derived integers, so both engines
-    compute identical points and exact distances.
-
-    Scale shape: Σ cell² work like every banding join — cell size is
-    the skew knob; never an all-pairs comparison."""
-    users = (
-        load_testdata(spark, sf_dir, "events")
-        .select("user_id")
-        .distinct()
-    )
-
-    def coord(axis):
-        return F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(axis + ":"), F.col("user_id").cast("string")).cast("binary")),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint") % 1024
-
-    pts = users.select(
-        "user_id", coord("x").alias("x"), coord("y").alias("y")
-    ).transform(tracked_persist)
-    a = pts.select(
-        F.col("user_id").alias("id_a"),
-        F.col("x").alias("xa"),
-        F.col("y").alias("ya"),
-        F.expr(
-            "explode(flatten(transform(sequence(-1, 1), dx ->"
-            " transform(sequence(-1, 1), dy ->"
-            " named_struct('cx', div(x, 32) + dx, 'cy', div(y, 32) + dy)))))"
-        ).alias("c"),
-    ).select("id_a", "xa", "ya", "c.cx", "c.cy")
-    b = pts.select(
-        F.col("user_id").alias("id_b"),
-        F.col("x").alias("xb"),
-        F.col("y").alias("yb"),
-        F.expr("div(x, 32)").alias("cxb"),
-        F.expr("div(y, 32)").alias("cyb"),
-    )
-    d2 = (F.col("xa") - F.col("xb")) * (F.col("xa") - F.col("xb")) + (
-        F.col("ya") - F.col("yb")
-    ) * (F.col("ya") - F.col("yb"))
-    return (
-        a.join(
-            b,
-            (F.col("cx") == F.col("cxb"))
-            & (F.col("cy") == F.col("cyb"))
-            & (F.col("id_a") < F.col("id_b")),
-        )
-        .withColumn("dist2", d2)
-        .filter(F.col("dist2") <= 1024)
-        .select(
-            F.col("id_a").cast("bigint"),
-            F.col("id_b").cast("bigint"),
-            F.col("dist2").cast("bigint"),
-        )
-        .orderBy("id_a", "id_b")
-    )
-
-
-@register(
     "fuzzy_name_pairs_symspell",
     """
     WITH n AS (SELECT c_custkey AS id, c_name AS nm FROM customer)
@@ -7207,87 +5386,9 @@ def pipeline_data_mixture_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "text_gopher_quality_rules",
-    r"""
-    WITH t AS (
-        SELECT doc_id,
-               string_split_regex(text, '\s+') AS toks,
-               string_split(text, chr(10)) AS lines
-        FROM documents
-    ),
-    m AS (
-        SELECT doc_id,
-               len(toks) AS n_tokens,
-               (10 * len(list_filter(toks, x -> x != ''))) AS n_words10,
-               CASE WHEN len(toks) > 0
-                    THEN (10 * list_sum(list_transform(toks, x -> length(x))))
-                         // len(toks)
-                    ELSE 0 END AS mean_len_deci,
-               CASE WHEN len(toks) > 0
-                    THEN (1000 * len(list_filter(toks,
-                         x -> contains(x, '#') OR contains(x, '...'))))
-                         // len(toks)
-                    ELSE 0 END AS symbol_permille,
-               CASE WHEN len(lines) > 0
-                    THEN (1000 * len(list_filter(lines,
-                         x -> starts_with(x, '-') OR starts_with(x, '*'))))
-                         // len(lines)
-                    ELSE 0 END AS bullet_permille,
-               CASE WHEN len(lines) > 0
-                    THEN (1000 * len(list_filter(lines, x -> ends_with(x, '...'))))
-                         // len(lines)
-                    ELSE 0 END AS ellipsis_permille,
-               len(list_distinct(list_filter(toks, x -> x IN
-                   ('the','a','an','of','and','to','is','in','it','for'))))
-                   AS n_stop_distinct
-        FROM t
-    )
-    SELECT doc_id,
-           CAST(n_tokens AS BIGINT) AS n_tokens,
-           CAST(mean_len_deci AS BIGINT) AS mean_len_deci,
-           CAST(symbol_permille AS BIGINT) AS symbol_permille,
-           CAST(bullet_permille AS BIGINT) AS bullet_permille,
-           CAST(ellipsis_permille AS BIGINT) AS ellipsis_permille,
-           CAST(n_stop_distinct AS BIGINT) AS n_stop_distinct,
-           (n_tokens BETWEEN 50 AND 100000)
-               AND (mean_len_deci BETWEEN 30 AND 100)
-               AND symbol_permille < 100
-               AND bullet_permille < 900
-               AND ellipsis_permille < 300
-               AND n_stop_distinct >= 2 AS passes
-    FROM m ORDER BY doc_id
-    """,
-)
-def text_gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Gopher quality-rule battery (Rae et al. 2021 §A1.1, reused
-    by Dolma/FineWeb): per-document token count bounds, mean word
-    length in [3, 10], symbol-to-word ratio (# and ...), bullet-line
-    and ellipsis-line fractions, and ≥2 distinct stopwords — the
-    document-level heuristic filter that runs before any model-based
-    scoring.  All metrics are integer-scaled (deci/permille) so both
-    engines agree exactly; ``passes`` is the conjunctive verdict.
-
-    Scale shape: one scan, all metrics from two split() arrays bound
-    once per row; no shuffle at all (the ORDER BY is the driver's
-    display sort, dropped by a downstream filter consumer)."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    m = _gopher_doc_metrics(docs)
-    return m.select(
-        "doc_id",
-        "n_tokens",
-        "mean_len_deci",
-        "symbol_permille",
-        "bullet_permille",
-        "ellipsis_permille",
-        "n_stop_distinct",
-        "passes",
-    ).orderBy("doc_id")
-
-
 def _gopher_doc_metrics(docs: DataFrame) -> DataFrame:
     """Per-doc Gopher rule metrics + conjunctive ``passes`` flag —
-    shared by ``text_gopher_quality_rules`` and the calibration query
+    shared by the calibration query
     (one scan, all metrics from two split() arrays bound per row)."""
     t = docs.select(
         "doc_id",
@@ -7361,75 +5462,6 @@ def _gopher_doc_metrics(docs: DataFrame) -> DataFrame:
             & (F.col("ellipsis_permille") < 300)
             & (F.col("n_stop_distinct") >= 2)
         ).alias("passes"),
-    )
-
-
-@register(
-    "events_watermark_late_stats",
-    r"""
-    WITH o AS (
-        SELECT event_type, event_id,
-               CAST(epoch(ts) AS BIGINT) AS es,
-               MAX(CAST(epoch(ts) AS BIGINT)) OVER (
-                   PARTITION BY event_type ORDER BY event_id
-                   ROWS UNBOUNDED PRECEDING) AS hwm
-        FROM events
-    ),
-    l AS (SELECT event_type, hwm - es AS late_sec FROM o)
-    SELECT event_type,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM(CASE WHEN late_sec > 0 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_out_of_order,
-           CAST(SUM(CASE WHEN late_sec > 300 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_late_5min,
-           CAST(SUM(CASE WHEN late_sec > 600 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_dropped_10min_watermark,
-           CAST(MAX(late_sec) AS BIGINT) AS max_late_sec
-    FROM l GROUP BY event_type ORDER BY event_type
-    """,
-)
-def events_watermark_late_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of Structured Streaming's watermark accounting: with
-    ``event_id`` as arrival order, each event's lateness is the
-    high-water-mark timestamp seen so far in its event_type stream
-    minus its own timestamp; the query reports how many events a 5-min
-    allowed-lateness window would mark late and a 10-min watermark
-    would DROP — exactly the sizing analysis you run before choosing
-    ``withWatermark`` bounds on the streaming pipeline
-    (``streaming/stateful.py`` implements the live side).
-
-    Scale shape: one hash Exchange(event_type) + per-partition sort for
-    the running max — the same distribution the streaming operator's
-    state store uses; the aggregate is map-side combinable."""
-    ev = load_testdata(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    es = F.unix_timestamp("ts").cast("bigint")
-    o = ev.select(
-        "event_type",
-        "event_id",
-        es.alias("es"),
-    ).withColumn("hwm", F.max("es").over(w))
-    late = o.select("event_type", (F.col("hwm") - F.col("es")).alias("late_sec"))
-    return (
-        late.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            F.sum(F.when(F.col("late_sec") > 0, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_out_of_order"),
-            F.sum(F.when(F.col("late_sec") > 300, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_late_5min"),
-            F.sum(F.when(F.col("late_sec") > 600, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_dropped_10min_watermark"),
-            F.max("late_sec").cast("bigint").alias("max_late_sec"),
-        )
-        .orderBy("event_type")
     )
 
 
@@ -7608,127 +5640,6 @@ def embedding_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "dedup_graph_pagerank",
-    f"""
-    WITH {_CORPUS_SQL}, {_SHINGLE_SQL},
-    seeds AS (SELECT unnest(generate_series(0, 7)) AS seed),
-    hashed AS (
-        SELECT doc_id, seed, md5(CAST(seed AS VARCHAR) || ':' || sh) AS h
-        FROM sh CROSS JOIN seeds
-    ),
-    sig AS (
-        SELECT doc_id,
-               {', '.join(f"MIN(CASE WHEN seed = {i} THEN h END) AS h{i}" for i in range(8))}
-        FROM hashed GROUP BY doc_id
-    ),
-    bands AS (
-        SELECT doc_id, 0 AS band_idx, md5(concat_ws('|', h0, h1, h2, h3)) AS band_sig FROM sig
-        UNION ALL
-        SELECT doc_id, 1 AS band_idx, md5(concat_ws('|', h4, h5, h6, h7)) AS band_sig FROM sig
-    ),
-    e AS (
-        SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
-        FROM bands a JOIN bands b ON a.band_idx = b.band_idx
-            AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id
-    ),
-    ed AS (SELECT u AS src, v AS dst FROM e UNION ALL SELECT v, u FROM e),
-    deg AS (SELECT src AS node, COUNT(*) AS d FROM ed GROUP BY src),
-    i1 AS (SELECT ed.dst AS node, SUM(1000000 // dg.d) AS inc
-           FROM ed JOIN deg dg ON dg.node = ed.src GROUP BY ed.dst),
-    s1 AS (SELECT n.node, 150000 + (850 * COALESCE(i.inc, 0)) // 1000 AS s
-           FROM deg n LEFT JOIN i1 i ON i.node = n.node),
-    i2 AS (SELECT ed.dst AS node, SUM(s1.s // dg.d) AS inc
-           FROM ed JOIN deg dg ON dg.node = ed.src
-                   JOIN s1 ON s1.node = ed.src GROUP BY ed.dst),
-    s2 AS (SELECT n.node, 150000 + (850 * COALESCE(i.inc, 0)) // 1000 AS s
-           FROM deg n LEFT JOIN i2 i ON i.node = n.node),
-    i3 AS (SELECT ed.dst AS node, SUM(s2.s // dg.d) AS inc
-           FROM ed JOIN deg dg ON dg.node = ed.src
-                   JOIN s2 ON s2.node = ed.src GROUP BY ed.dst),
-    s3 AS (SELECT n.node, n.d, 150000 + (850 * COALESCE(i.inc, 0)) // 1000 AS s
-           FROM deg n LEFT JOIN i3 i ON i.node = n.node)
-    SELECT CAST(node AS BIGINT) AS doc_id,
-           CAST(d AS BIGINT) AS degree,
-           CAST(s AS BIGINT) AS pagerank_micro
-    FROM s3 ORDER BY pagerank_micro DESC, doc_id LIMIT 20
-    """,
-)
-def dedup_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank over the near-dup candidate graph — 3 power iterations,
-    damping 0.85, INTEGER micro-unit arithmetic (initial score 10⁶ per
-    node; every contribution is a floor division), so the iterative
-    fixpoint replays bit-for-bit in the unrolled DuckDB twin.  High-PR
-    nodes are the "hub" documents many near-dups orbit — the doc a
-    dedup pipeline keeps as the cluster representative (or audits
-    first).  Top-20 by score.
-
-    Scale shape: the canonical distributed PageRank — each iteration is
-    ONE equi-join of the edge list with the score vector plus one
-    groupBy(dst) partial-sum shuffle; the degree table joins broadcast.
-    Per-iteration cost is O(|E|) with no driver involvement; the
-    iteration COUNT is fixed (3).  Top-k is TakeOrderedAndProject,
-    never a global sort.
-
-    Round-10 (optimization; guide §3.3/§5): the per-iteration score
-    vector is ``localCheckpoint(eager=False)``.  Unlike kcore's
-    3-way-per-round fanout this chain nests only linearly (each round
-    references ``s`` once), so the win is smaller but real — sf0.1
-    A/B 5.8→5.2 s, identical output (collect-compared) — and the
-    per-round plan stays O(1) at any iteration count."""
-    corpus = _dedup_corpus(spark, sf_dir)
-    bands = D.minhash_bands(corpus, "doc_id", "text", n_hashes=8, band_size=4)
-    e = (
-        D.lsh_candidate_pairs(bands, "doc_id")
-        .select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .distinct()
-    )
-    ed = (
-        e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        # round 11: sliver fix + partitioning reuse, same as kcore —
-        # hash(src) feeds the degree groupBy and the edd pre-join with
-        # no further exchange on the edge side (guide §2.4)
-        .repartition("src")
-        .transform(tracked_persist)
-    )
-    deg = ed.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("d")).transform(
-        tracked_persist
-    )
-    # edge list pre-joined with source degree once; reused by all iters
-    edd = ed.join(
-        # O(|V|) degree table: no hard broadcast hint — AQE sizes it
-        deg.select(F.col("node").alias("src"), F.col("d").alias("d_src")),
-        "src",
-    ).transform(tracked_persist)
-    s = deg.select("node", F.lit(1000000).cast("bigint").alias("s"))
-    for _ in range(3):
-        inc = (
-            edd.join(
-                s.select(F.col("node").alias("src"), F.col("s").alias("s_src")), "src"
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.expr("div(s_src, d_src)")).alias("inc"))
-        )
-        s = deg.join(inc, "node", "left").select(
-            "node",
-            "d",
-            (
-                F.lit(150000)
-                + F.expr("div(850 * coalesce(inc, 0L), 1000)")
-            ).cast("bigint").alias("s"),
-        ).localCheckpoint(eager=False)
-    return (
-        s.select(
-            F.col("node").cast("bigint").alias("doc_id"),
-            F.col("d").cast("bigint").alias("degree"),
-            F.col("s").alias("pagerank_micro"),
-        )
-        .orderBy(F.col("pagerank_micro").desc(), "doc_id")
-        .limit(20)
-    )
-
-
-@register(
     "events_robust_anomalies_mad",
     """
     WITH med AS (
@@ -7803,125 +5714,6 @@ def events_robust_anomalies_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "events_value_histogram",
-    """
-    WITH b AS (
-        SELECT event_type,
-               least(CAST(floor(value / 50.0) AS INTEGER), 19) AS bucket
-        FROM events WHERE value >= 0
-    )
-    SELECT event_type, CAST(bucket AS INTEGER) AS bucket,
-           CAST(bucket * 50 AS BIGINT) AS lo,
-           CAST(COUNT(*) AS BIGINT) AS n
-    FROM b GROUP BY event_type, bucket
-    ORDER BY event_type, bucket
-    """,
-)
-def events_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-width histogram of event values per type (width 50, final
-    bucket open-ended) — the profiling staple behind every dashboard
-    distribution plot and the input to histogram-equalization joins.
-
-    Scale shape: pure map-side bucketing + one combinable groupBy over
-    (type, bucket) — cardinality is types × 20 regardless of row
-    count."""
-    ev = load_testdata(spark, sf_dir, "events").filter(F.col("value") >= 0)
-    b = ev.select(
-        "event_type",
-        F.least(F.floor(F.col("value") / 50.0).cast("int"), F.lit(19)).alias("bucket"),
-    )
-    return (
-        b.groupBy("event_type", "bucket")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .select(
-            "event_type",
-            F.col("bucket").cast("int"),
-            (F.col("bucket").cast("bigint") * 50).alias("lo"),
-            "n",
-        )
-        .orderBy("event_type", "bucket")
-    )
-
-
-@register(
-    "text_ngram_novelty",
-    rf"""
-    WITH t AS (SELECT doc_id, string_split_regex(text, '\s+') AS toks
-               FROM documents),
-    sh AS (
-        SELECT doc_id, unnest(list_distinct(
-            CASE WHEN len(toks) >= 3
-                 THEN list_transform(generate_series(1, len(toks)-2),
-                      i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))
-                 ELSE []::VARCHAR[] END)) AS sh
-        FROM t
-    ),
-    owner AS (SELECT sh, MIN(doc_id) AS first_doc FROM sh GROUP BY sh),
-    j AS (
-        SELECT s.doc_id,
-               CASE WHEN o.first_doc = s.doc_id THEN 1 ELSE 0 END AS novel
-        FROM sh s JOIN owner o ON o.sh = s.sh
-    )
-    SELECT doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_shingles,
-           CAST(SUM(novel) AS BIGINT) AS n_novel,
-           CAST((1000 * SUM(novel)) // COUNT(*) AS BIGINT) AS novelty_permille
-    FROM j GROUP BY doc_id
-    ORDER BY doc_id
-    """,
-)
-def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document 3-gram novelty: the fraction of a doc's distinct
-    shingles whose FIRST corpus occurrence (min doc_id) is the doc
-    itself — the duplication/memorization-risk profile a data curator
-    reads next to the dedup reports (low novelty ⇒ the doc mostly
-    restates earlier text even when no single pair crosses a Jaccard
-    threshold; the document-level view of what exact-substring dedup
-    removes span-by-span).
-
-    Scale shape: one shingle explode, one groupBy(shingle) MIN — the
-    same posting-list distribution every dedup operator here rides.
-    NO join of the posting list back onto itself: because each (doc,
-    shingle) pair is unique, per-doc novel counts fall straight out of
-    the owner aggregate (groupBy first_doc) and per-doc totals out of a
-    groupBy(doc) — two doc-cardinality tables joined at the end
-    (measured 8.4 s → ~2 s at sf0.1; the join-back formulation
-    shuffled the full posting list twice).  Shingle identity travels as
-    xxhash64 longs; the oracle intersects raw strings, so a collision
-    fails the gate."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    sh = D.shingle_explode(docs, "doc_id", "text", 3).select(
-        "doc_id", F.xxhash64("sh").alias("h")
-    ).transform(tracked_persist)
-    totals = sh.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_shingles")
-    )
-    novel = (
-        sh.groupBy("h")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_novel"))
-    )
-    return (
-        totals.join(novel, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_shingles",
-            F.coalesce("n_novel", F.lit(0)).cast("bigint").alias("n_novel"),
-        )
-        .select(
-            "doc_id",
-            "n_shingles",
-            "n_novel",
-            F.expr("div(1000 * n_novel, n_shingles)")
-            .cast("bigint")
-            .alias("novelty_permille"),
-        )
-        .orderBy("doc_id")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Round-5 session-3 additions: CCNet perplexity buckets, mergeable
 # bottom-k quantile sketch, deterministic global training shuffle,
@@ -7981,8 +5773,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style head/middle/tail perplexity bucketing per language
     (Wenzek et al. 2020): score every document with the char-trigram
-    LM familiarity (the integer-exact KenLM stand-in shared with
-    ``text_trigram_lm_score``), then split each language into terciles
+    LM familiarity (an integer-exact KenLM stand-in), then split each language into terciles
     and report per-bucket mass — the op CCNet uses to keep 'head'
     (fluent) text and drop or down-sample the 'tail'.
 
@@ -8003,7 +5794,7 @@ def text_ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame
     docs = load_testdata(spark, sf_dir, "documents")
     # persist the compact lowered text, not the char array — caching
     # the inflated form OOMs the columnar cache builder at large
-    # blow-ups (see text_trigram_lm_score); cs re-derives streamed.
+    # blow-ups; cs re-derives streamed.
     lowered = docs.select(
         "doc_id", "lang", F.lower("text").alias("lt")
     ).transform(tracked_persist)
@@ -8189,80 +5980,6 @@ def quantile_sketch_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("est_p99_cents").cast("bigint"),
         )
         .orderBy("l_returnflag")
-    )
-
-
-@register(
-    "pipeline_global_shuffle",
-    f"""
-    WITH keyed AS (
-        SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS h FROM documents
-    ),
-    sharded AS (
-        SELECT doc_id, h, CAST({_HEX12} AS BIGINT) % 16 AS shard
-        FROM keyed
-    ),
-    per AS (
-        SELECT shard, COUNT(*) AS n_docs,
-               arg_min(doc_id, h) AS first_doc_id,
-               MIN(substr(h, 1, 8)) AS min_h8
-        FROM sharded GROUP BY shard
-    )
-    SELECT CAST(shard AS BIGINT) AS shard,
-           CAST(n_docs AS BIGINT) AS n_docs,
-           CAST((1000 * 16 * n_docs) // SUM(n_docs) OVER () AS BIGINT)
-               AS load_permille,
-           CAST(first_doc_id AS BIGINT) AS first_doc_id,
-           min_h8
-    FROM per
-    ORDER BY shard
-    """,
-)
-def pipeline_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic global training shuffle: the op that materializes
-    'shuffle the corpus once, reproducibly' before training.  Shard =
-    48-bit content hash mod 16; within a shard the training order is
-    the hash order.  Content hashing (not rand()) makes the shuffle
-    reproducible across reruns and engines, and re-shuffling for a new
-    epoch is just salting the hash input.
-
-    Scale shape: sharding is ONE hash-partition exchange — no global
-    sort; the within-shard order is sorted per shard at write time
-    (embarrassingly parallel, 1/16th of the data each).  The report
-    here aggregates per-shard occupancy map-side and checks balance:
-    load_permille = 1000 · n_shard · 16 / N (1000 = perfectly
-    uniform), the skew diagnostic a real pipeline alerts on.  The
-    final window runs over exactly 16 rows."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    keyed = docs.select(
-        "doc_id",
-        F.md5(F.col("doc_id").cast("string").cast("binary")).alias("h"),
-    )
-    sharded = keyed.select(
-        "doc_id",
-        "h",
-        (F.expr("cast(conv(substring(h, 1, 12), 16, 10) as bigint)") % 16).alias(
-            "shard"
-        ),
-    )
-    per = sharded.groupBy("shard").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.min_by("doc_id", "h").alias("first_doc_id"),
-        F.min(F.substring("h", 1, 8)).alias("min_h8"),
-    )
-    wall = Window.partitionBy()
-    return (
-        per.withColumn("total", F.sum("n_docs").over(wall))
-        .select(
-            F.col("shard").cast("bigint"),
-            F.col("n_docs").cast("bigint"),
-            F.expr("div(1000 * 16 * n_docs, total)")
-            .cast("bigint")
-            .alias("load_permille"),
-            F.col("first_doc_id").cast("bigint"),
-            "min_h8",
-        )
-        .orderBy("shard")
     )
 
 
@@ -8725,9 +6442,9 @@ def quality_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     The diagnostic a pipeline runs before trusting a trained filter:
     if pass rate doesn't rise with classifier score, the model and
     the heuristics disagree and the cutoff needs review.  Reuses the
-    exact per-doc chains of ``text_quality_classifier_hashed`` and
-    ``text_gopher_quality_rules`` via shared helpers, so this query
-    and those can never drift apart.
+    exact per-doc chains of ``text_quality_classifier_hashed`` and the
+    Gopher rules via shared helpers, so this query and those can never
+    drift apart.
 
     Scale shape: the gopher flags are a narrow no-shuffle projection;
     the classifier margin is explode → 256-row broadcast join →
@@ -8771,270 +6488,6 @@ def quality_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-5 session-4 additions: hard-negative mining, k-anonymity audit,
 # temperature-scaled mixture sampling.
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "similarity_hard_negatives",
-    """
-    WITH n AS (
-        SELECT vec_id, label, embedding::DOUBLE[] AS v,
-               sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-        FROM embeddings
-    ),
-    scored AS (
-        SELECT q.vec_id AS query_id, q.label AS query_label,
-               c.vec_id AS neighbor_id, c.label AS neighbor_label,
-               list_dot_product(q.v, c.v) / (q.nrm * c.nrm) AS cos_raw
-        FROM n q JOIN n c ON c.vec_id != q.vec_id AND c.label != q.label
-        WHERE q.vec_id < 10
-    ),
-    ranked AS (
-        SELECT query_id, query_label, neighbor_id, neighbor_label, cos_raw,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY cos_raw DESC, neighbor_id) AS INTEGER) AS rk
-        FROM scored
-    )
-    SELECT CAST(query_id AS BIGINT) AS query_id,
-           CAST(query_label AS INTEGER) AS query_label,
-           CAST(neighbor_id AS BIGINT) AS neighbor_id,
-           CAST(neighbor_label AS INTEGER) AS neighbor_label,
-           CAST(CAST(ROUND(cos_raw, 6) AS DECIMAL(10,6)) AS DOUBLE) AS cos_sim, rk
-    FROM ranked WHERE rk <= 5
-    ORDER BY query_id, rk
-    """,
-)
-def similarity_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hard-negative mining for contrastive / embedding training: for
-    each query vector, the top-k most-similar vectors carrying a
-    DIFFERENT label.  These near-boundary negatives are what makes
-    bi-encoder training data effective (DPR / Contriever recipe); the
-    mining op is exactly the ANN scan with a label-disagreement
-    predicate fused into the join condition.
-
-    Scale shape: identical to ``similarity_cosine_topk`` — bounded
-    query set broadcast against the corpus scan, the label filter
-    rides the join condition so disqualified candidates never reach
-    the ranking window.  At production scale the brute scan swaps for
-    any of the cell-restricted tiers (IVF/PQ) with the same label
-    predicate pushed into the candidate join; the gate queries
-    (``ann_recall_*``) calibrate that swap.  Double fold in index
-    order == DuckDB list_dot_product bitwise (NOTES recipe), so exact
-    threshold compares are safe."""
-    emb = _fan_out(load_testdata(spark, sf_dir, "embeddings"))
-    nv = S.with_norm(emb)
-    cand = nv.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("neighbor_label"),
-        F.col("_v").alias("cv"),
-        F.col("_norm").alias("cn"),
-    )
-    q = nv.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("query_label"),
-        F.col("_v").alias("qv"),
-        F.col("_norm").alias("qn"),
-    )
-    scored = (
-        cand.join(
-            F.broadcast(q),
-            (F.col("query_id") != F.col("neighbor_id"))
-            & (F.col("query_label") != F.col("neighbor_label")),
-        )
-        .withColumn("cos_sim", S.dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")))
-        .select("query_id", "query_label", "neighbor_id", "neighbor_label", "cos_sim")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= 5)
-        .select(
-            F.col("query_id").cast("bigint"),
-            F.col("query_label").cast("int"),
-            F.col("neighbor_id").cast("bigint"),
-            F.col("neighbor_label").cast("int"),
-            F.round("cos_sim", 6).cast("decimal(10,6)").cast("double").alias("cos_sim"),
-            "rk",
-        )
-        .orderBy("query_id", "rk")
-    )
-
-
-@register(
-    "quality_k_anonymity",
-    """
-    WITH qi AS (
-        SELECT c_nationkey, c_mktsegment,
-               (CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) + 100000000)
-                   // 100000 AS acct_band
-        FROM customer
-    ),
-    grp AS (
-        SELECT c_nationkey, c_mktsegment, acct_band, COUNT(*) AS sz
-        FROM qi GROUP BY 1, 2, 3
-    ),
-    ks AS (SELECT unnest([2, 5, 10]) AS k)
-    SELECT CAST(k AS INTEGER) AS k,
-           CAST((SELECT COUNT(*) FROM grp) AS BIGINT) AS n_groups,
-           CAST((SELECT MIN(sz) FROM grp) AS BIGINT) AS min_group_size,
-           CAST((SELECT SUM(CASE WHEN sz < k THEN 1 ELSE 0 END) FROM grp)
-                AS BIGINT) AS groups_below_k,
-           CAST((SELECT SUM(CASE WHEN sz < k THEN sz ELSE 0 END) FROM grp)
-                AS BIGINT) AS records_below_k,
-           CAST((1000 * (SELECT SUM(CASE WHEN sz < k THEN sz ELSE 0 END) FROM grp))
-                // (SELECT SUM(sz) FROM grp) AS BIGINT) AS at_risk_permille
-    FROM ks
-    ORDER BY k
-    """,
-)
-def quality_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-anonymity audit over a quasi-identifier set — the privacy
-    gate a dataset release (or a training corpus carrying user
-    metadata) runs before publication: group by the QI tuple
-    (nation, market segment, $1000 account-balance band) and report,
-    for k ∈ {2, 5, 10}, how many equivalence classes and records fall
-    below k.  Records in small QI classes are re-identifiable by
-    linkage (Sweeney 2002); the fix is coarsening bands or suppressing
-    rows, both of which re-run this same audit.
-
-    Scale shape: ONE map-side-combined groupBy over the QI tuple
-    (group count bounded by the QI domain, not the table), then a
-    3×|k| conditional aggregate over the tiny group-size relation —
-    the k rows come from a literal array explode, never a second table
-    scan.  The balance band is computed in exact DECIMAL cents and
-    shifted non-negative so Spark's truncating div and DuckDB's
-    flooring // agree."""
-    cust = load_testdata(spark, sf_dir, "customer")
-    qi = cust.select(
-        "c_nationkey",
-        "c_mktsegment",
-        F.expr(
-            "div(CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT)"
-            " + 100000000, 100000)"
-        ).alias("acct_band"),
-    )
-    grp = qi.groupBy("c_nationkey", "c_mktsegment", "acct_band").agg(
-        F.count(F.lit(1)).alias("sz")
-    )
-    stats = grp.agg(
-        F.count(F.lit(1)).alias("n_groups"),
-        F.min("sz").alias("min_group_size"),
-        F.sum("sz").alias("n_records"),
-        *[
-            F.sum(F.when(F.col("sz") < k, 1).otherwise(0)).alias(f"gb{k}")
-            for k in (2, 5, 10)
-        ],
-        *[
-            F.sum(F.when(F.col("sz") < k, F.col("sz")).otherwise(0)).alias(f"rb{k}")
-            for k in (2, 5, 10)
-        ],
-    )
-    ks = stats.select(
-        F.explode(F.array(*[F.lit(k) for k in (2, 5, 10)])).alias("k"), "*"
-    )
-    return ks.select(
-        F.col("k").cast("int"),
-        F.col("n_groups").cast("bigint"),
-        F.col("min_group_size").cast("bigint"),
-        F.when(F.col("k") == 2, F.col("gb2"))
-        .when(F.col("k") == 5, F.col("gb5"))
-        .otherwise(F.col("gb10"))
-        .cast("bigint")
-        .alias("groups_below_k"),
-        F.when(F.col("k") == 2, F.col("rb2"))
-        .when(F.col("k") == 5, F.col("rb5"))
-        .otherwise(F.col("rb10"))
-        .cast("bigint")
-        .alias("records_below_k"),
-        F.expr(
-            "div(1000 * (CASE WHEN k = 2 THEN rb2 WHEN k = 5 THEN rb5"
-            " ELSE rb10 END), n_records)"
-        )
-        .cast("bigint")
-        .alias("at_risk_permille"),
-    ).orderBy("k")
-
-
-@register(
-    "sample_temperature_mixture",
-    r"""
-    WITH per AS (
-        SELECT source,
-               CAST(SUM(len(string_split_regex(text, '\s+'))) AS BIGINT) AS n_tokens,
-               COUNT(*) AS n_docs
-        FROM documents GROUP BY source
-    ),
-    w AS (
-        SELECT source, n_tokens, n_docs,
-               (CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT)
-                + CASE WHEN (CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT) + 1)
-                            * (CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT) + 1)
-                            <= n_tokens THEN 1 ELSE 0 END
-                - CASE WHEN CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT)
-                            * CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT)
-                            > n_tokens THEN 1 ELSE 0 END) AS wt
-        FROM per
-    ),
-    tot AS (SELECT SUM(wt) AS sw, SUM(n_tokens) AS st FROM w)
-    SELECT w.source,
-           w.n_tokens, CAST(w.n_docs AS BIGINT) AS n_docs,
-           CAST(w.wt AS BIGINT) AS wt,
-           CAST((1000 * w.n_tokens) // tot.st AS BIGINT) AS prop_permille,
-           CAST((1000 * w.wt) // tot.sw AS BIGINT) AS temp_permille,
-           CAST((1000000 * w.wt) // (tot.sw * w.n_tokens) AS BIGINT)
-               AS epochs_per_token_micro
-    FROM w, tot
-    ORDER BY source
-    """,
-)
-def sample_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-scaled mixture sampling (the T5/mT5 recipe, α=0.5):
-    each source's sampling weight is n_tokens^α, flattening the
-    head-heavy natural distribution so low-resource sources are not
-    starved.  Reports, per source, the natural (proportional) and
-    temperature-scaled sampling rates plus the implied per-token
-    repetition rate — the number a data-constrained run checks against
-    the ~4-epoch diminishing-returns bar (Muennighoff et al. 2023).
-
-    Scale shape: ONE map-side-combined groupBy(source) over the corpus
-    (token counting is a narrow codegen'd split), then all allocation
-    math runs on the |sources|-row relation against a 1-row total
-    broadcast — the same two-tier shape as the UniMax budget query.
-    α=0.5 is computed as an EXACT integer sqrt on both engines: the
-    double sqrt is corrected by ±1 with integer square compares, so a
-    1-ulp libm disagreement cannot flip the weight."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    per = docs.groupBy("source").agg(
-        F.sum(F.size(F.split("text", X.TOKEN_RE))).cast("bigint").alias("n_tokens"),
-        F.count(F.lit(1)).alias("n_docs"),
-    )
-    s0 = "CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT)"
-    w = per.withColumn(
-        "wt",
-        F.expr(
-            f"{s0} + (CASE WHEN ({s0} + 1) * ({s0} + 1) <= n_tokens THEN 1 ELSE 0 END)"
-            f" - (CASE WHEN {s0} * {s0} > n_tokens THEN 1 ELSE 0 END)"
-        ),
-    ).transform(tracked_persist)
-    tot = w.agg(
-        F.sum("wt").alias("sw"), F.sum("n_tokens").alias("st")
-    )
-    return (
-        w.crossJoin(F.broadcast(tot))
-        .select(
-            "source",
-            "n_tokens",
-            F.col("n_docs").cast("bigint"),
-            F.col("wt").cast("bigint"),
-            F.expr("div(1000 * n_tokens, st)").cast("bigint").alias("prop_permille"),
-            F.expr("div(1000 * wt, sw)").cast("bigint").alias("temp_permille"),
-            F.expr("div(1000000 * wt, sw * n_tokens)")
-            .cast("bigint")
-            .alias("epochs_per_token_micro"),
-        )
-        .orderBy("source")
-    )
 
 
 def _bm25_ctes(topn: int) -> str:
@@ -9195,89 +6648,6 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rk",
         )
         .orderBy("query_id", "rk")
-    )
-
-
-@register(
-    "text_tokenizer_fertility",
-    r"""
-    WITH t AS (
-        SELECT lang,
-               length(text) AS n_chars,
-               octet_length(encode(text)) AS n_bytes,
-               len(string_split_regex(trim(text), '\s+')) AS ws_tokens,
-               len(regexp_extract_all(text,
-                   '''(?:[sdmt]|ll|ve|re)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+'
-               )) AS bpe_tokens
-        FROM documents
-    )
-    SELECT lang,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(ws_tokens) AS BIGINT) AS ws_tokens,
-           CAST(SUM(bpe_tokens) AS BIGINT) AS bpe_tokens,
-           CAST((1000 * SUM(bpe_tokens)) // SUM(ws_tokens) AS BIGINT)
-               AS fertility_milli,
-           CAST((1000 * SUM(n_bytes)) // SUM(bpe_tokens) AS BIGINT)
-               AS bytes_per_piece_milli,
-           CAST((1000 * SUM(n_chars)) // SUM(bpe_tokens) AS BIGINT)
-               AS chars_per_piece_milli
-    FROM t
-    GROUP BY lang
-    ORDER BY lang
-    """,
-)
-def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer fertility by language — pieces emitted per whitespace
-    word, the equity metric multilingual pipelines audit (a tokenizer
-    with 3× fertility on one language triples its effective sequence
-    cost and silently shrinks its compute share; cf. the UniMax /
-    NLLB tokenizer analyses).  Also reports bytes-per-piece — the
-    compression view that decides vocab-size trades.  Uses the GPT-2
-    pre-tokenizer split (verified Java/RE2-identical over this corpus,
-    same pattern as ``text_token_counts``) as the piece counter.
-
-    Scale shape: a narrow map-only projection (regex + split inside
-    whole-stage codegen, no UDF) followed by ONE map-side-combined
-    groupBy(lang) — output is |languages| rows; nothing else
-    shuffles."""
-    docs = _fan_out(load_testdata(spark, sf_dir, "documents"))
-    bpe_pat = r"'(?:[sdmt]|ll|ve|re)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+"
-    t = docs.select(
-        "lang",
-        F.length("text").cast("long").alias("n_chars"),
-        F.octet_length("text").cast("long").alias("n_bytes"),
-        F.size(F.split(F.trim(F.col("text")), X.TOKEN_RE)).cast("long").alias(
-            "ws_tokens"
-        ),
-        F.size(F.regexp_extract_all(F.col("text"), F.lit(bpe_pat), F.lit(0)))
-        .cast("long")
-        .alias("bpe_tokens"),
-    )
-    return (
-        t.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("ws_tokens").alias("ws_tokens"),
-            F.sum("bpe_tokens").alias("bpe_tokens"),
-            F.sum("n_bytes").alias("sum_bytes"),
-            F.sum("n_chars").alias("sum_chars"),
-        )
-        .select(
-            "lang",
-            F.col("n_docs").cast("bigint"),
-            F.col("ws_tokens").cast("bigint"),
-            F.col("bpe_tokens").cast("bigint"),
-            F.expr("div(1000 * bpe_tokens, ws_tokens)")
-            .cast("bigint")
-            .alias("fertility_milli"),
-            F.expr("div(1000 * sum_bytes, bpe_tokens)")
-            .cast("bigint")
-            .alias("bytes_per_piece_milli"),
-            F.expr("div(1000 * sum_chars, bpe_tokens)")
-            .cast("bigint")
-            .alias("chars_per_piece_milli"),
-        )
-        .orderBy("lang")
     )
 
 
@@ -9492,8 +6862,6 @@ def _pois1_weight_sql(u: str) -> str:
     return f"(CASE {branches} ELSE 5 END)"
 
 
-
-
 def _boot_u_sql(r: int, engine: str) -> str:
     """The r-th replica's uniform 32-bit draw: an 8-hex window of one
     of four per-row md5 hashes (4 disjoint windows per hash — 16
@@ -9511,15 +6879,6 @@ def _boot_sum_cols_sql(engine: str) -> str:
         w = _pois1_weight_sql(_boot_u_sql(r, engine))
         cols.append(f"SUM({w} * cents) AS swc{r}, SUM({w}) AS sw{r}")
     return ",\n               ".join(cols)
-
-
-def _boot_sum_exprs_spark() -> list:
-    out = []
-    for r in range(16):
-        w = _pois1_weight_sql(_boot_u_sql(r, "spark"))
-        out.append((f"swc{r}", f"sum({w} * cents)"))
-        out.append((f"sw{r}", f"sum({w})"))
-    return out
 
 
 def _boot_mean_cols_sql() -> str:
@@ -9651,71 +7010,6 @@ def stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("spread_milli"),
     ).orderBy("flag")
-
-
-@register(
-    "quality_metadata_consistency",
-    """
-    WITH t AS (
-        SELECT source, length(text) AS actual, n_chars
-        FROM documents
-    )
-    SELECT source,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(CASE WHEN actual != n_chars THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_mismatch,
-           CAST(MAX(abs(actual - n_chars)) AS BIGINT) AS max_abs_drift,
-           CAST((1000 * SUM(CASE WHEN actual != n_chars THEN 1 ELSE 0 END))
-                // COUNT(*) AS BIGINT) AS mismatch_permille,
-           CAST(MIN(actual) AS BIGINT) AS min_len,
-           CAST(MAX(actual) AS BIGINT) AS max_len
-    FROM t
-    GROUP BY source
-    ORDER BY source
-    """,
-)
-def quality_metadata_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Metadata-consistency audit: recompute a derived column
-    (``n_chars``) from the payload and reconcile against the stored
-    metadata, per source.  Stale or drifted metadata is how length
-    filters, pricing, and dedup keys silently rot after upstream
-    re-encodes; this is the freshness check a lakehouse runs on every
-    ingest batch (the same contract as the pipeline's quality
-    expectations, expressed as a registered audit).
-
-    Scale shape: narrow map-only reconcile in whole-stage codegen +
-    ONE map-side-combined groupBy(source) — |sources| output rows,
-    nothing else shuffles."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    t = docs.select(
-        "source",
-        F.length("text").cast("long").alias("actual"),
-        F.col("n_chars").cast("long").alias("meta"),
-    )
-    return (
-        t.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.when(F.col("actual") != F.col("meta"), 1).otherwise(0)).alias(
-                "n_mismatch"
-            ),
-            F.max(F.abs(F.col("actual") - F.col("meta"))).alias("max_abs_drift"),
-            F.min("actual").alias("min_len"),
-            F.max("actual").alias("max_len"),
-        )
-        .select(
-            "source",
-            F.col("n_docs").cast("bigint"),
-            F.col("n_mismatch").cast("bigint"),
-            F.col("max_abs_drift").cast("bigint"),
-            F.expr("div(1000 * n_mismatch, n_docs)")
-            .cast("bigint")
-            .alias("mismatch_permille"),
-            F.col("min_len").cast("bigint"),
-            F.col("max_len").cast("bigint"),
-        )
-        .orderBy("source")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -10226,7 +7520,7 @@ def approx_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact count to report realized error: m=256 registers indexed
     by the first md5 hex byte, rank = leading-zero count of the next
     48 hash bits, register state = max rank.  Complements the KMV
-    sketch (``approx_distinct_kmv``): HLL is the constant-memory
+    sketch (``approx_set_ops_kmv``): HLL is the constant-memory
     (m · 6 bits), mergeable, union-able production sketch.
 
     Engine parity: rank derives from ``49 − length(bin(v48))`` —
@@ -10404,7 +7698,7 @@ def approx_set_ops_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     |S_∩|·2³²/θ — the estimator that lets a 100 TB curation run answer
     "how much does source A overlap source B" from two constant-size
     summaries instead of a corpus-scale join.  Hash = first 8 md5 hex
-    chars as a 2³²-scaled integer (the ``approx_distinct_kmv``
+    chars as a 2³²-scaled integer (the KMV sketch's
     convention), all arithmetic integer floor-div, so both engines
     produce bit-identical estimates; sets smaller than k fall back to
     θ=2³² (the sketch is exact there).
@@ -11011,88 +8305,6 @@ def stats_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("l_returnflag", "l_linestatus")
 
 
-@register(
-    "events_decayed_engagement",
-    """
-    WITH mx AS (SELECT MAX(CAST(ts AS DATE)) AS mxd FROM events),
-    ev AS (
-        SELECT event_type,
-               greatest(CAST(round(value * 1000) AS BIGINT), 0) AS v_milli,
-               least(datediff('day', CAST(ts AS DATE), mxd), 210) AS age_days
-        FROM events, mx
-    ),
-    dec AS (
-        SELECT event_type,
-               v_milli // (1::BIGINT << CAST(age_days // 7 AS INTEGER))
-                   AS w7,
-               v_milli // (1::BIGINT << CAST(age_days // 30 AS INTEGER))
-                   AS w30
-        FROM ev
-    )
-    SELECT event_type,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM(w7) AS BIGINT) AS decayed_7d_milli,
-           CAST(SUM(w30) AS BIGINT) AS decayed_30d_milli,
-           CAST(SUM(CASE WHEN w7 > 0 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_alive_7d
-    FROM dec GROUP BY event_type ORDER BY event_type
-    """,
-)
-def events_decayed_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-decayed engagement scoring — the recency-weighted
-    aggregate behind feature stores and freshness-aware mixture
-    weights (yesterday's signal counts more than last quarter's).
-    Each event's value decays by halving per half-life elapsed
-    (dyadic decay: weight = v ≫ ⌊age/halflife⌋ — integer-exact on
-    both engines, no libm; v_milli is clamped non-negative so
-    Spark's truncating div() and DuckDB's flooring // agree by
-    construction, not by data invariant), reported at 7-day and
-    30-day half-lives
-    per event type, with the count of events still contributing at
-    the 7-day rate.  Ages cap at 210 days so the shift stays in
-    bigint range; a production variant uses the standard
-    exp(−λ·age) in double.
-
-    Scale shape: one 1-row max-date aggregate broadcast into a
-    map-only decay projection, then ONE map-side-combined
-    groupBy(event_type) — combinable all the way down, streaming- and
-    incremental-friendly (the decayed sum re-bases by one more shift
-    per elapsed half-life)."""
-    ev0 = _fan_out(load_testdata(spark, sf_dir, "events").select("event_type", "value", "ts"))
-    mx = ev0.agg(F.max(F.to_date("ts")).alias("mxd"))
-    dec = (
-        ev0.crossJoin(F.broadcast(mx))
-        .select(
-            "event_type",
-            F.expr("greatest(cast(round(value * 1000) as bigint), 0)").alias("v_milli"),
-            F.expr("least(datediff(mxd, cast(ts as date)), 210)").alias("age_days"),
-        )
-        .select(
-            "event_type",
-            F.expr(
-                "div(v_milli, shiftleft(cast(1 as bigint),"
-                " cast(div(age_days, 7) as int)))"
-            ).alias("w7"),
-            F.expr(
-                "div(v_milli, shiftleft(cast(1 as bigint),"
-                " cast(div(age_days, 30) as int)))"
-            ).alias("w30"),
-        )
-    )
-    return (
-        dec.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            F.sum("w7").cast("bigint").alias("decayed_7d_milli"),
-            F.sum("w30").cast("bigint").alias("decayed_30d_milli"),
-            F.sum(F.when(F.col("w7") > 0, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_alive_7d"),
-        )
-        .orderBy("event_type")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Round-5 session-5 batch 5: Mann-Whitney rank test, source-drift TVD
 # ---------------------------------------------------------------------------
@@ -11584,240 +8796,6 @@ def orders_benford_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "text_token_burstiness",
-    r"""
-    WITH tk AS (
-        SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok
-        FROM documents
-    ),
-    dt AS (SELECT doc_id, tok, COUNT(*) AS x FROM tk GROUP BY doc_id, tok),
-    dd AS (SELECT COUNT(DISTINCT doc_id) AS d FROM tk),
-    ts AS (
-        SELECT tok, SUM(x) AS total, COUNT(*) AS docfreq,
-               SUM(x * x) AS sumsq
-        FROM dt GROUP BY tok
-    ),
-    top AS (
-        SELECT tok, total, docfreq, sumsq
-        FROM ts ORDER BY total DESC, tok LIMIT 50
-    )
-    SELECT t.tok,
-           CAST(t.total AS BIGINT) AS total,
-           CAST(t.docfreq AS BIGINT) AS docfreq,
-           CAST((1000 * (d.d * t.sumsq - t.total * t.total))
-                // (t.total * d.d) AS BIGINT) AS fano_milli
-    FROM top t, dd d
-    ORDER BY total DESC, tok
-    """,
-)
-def text_token_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token burstiness via the Fano factor (variance-to-mean ratio of
-    per-document counts, zeros included) for the 50 highest-mass
-    tokens — the Church-Gale observation that content words "burst"
-    (fano ≫ 1: a doc that uses the token uses it repeatedly) while
-    function words spread uniformly (fano ≈ 1, Poisson-like).
-    Curation uses it to separate topical keywords from glue when
-    building quality lexicons and stopword lists.  Integer-exact:
-    fano_milli = 1000·(D·Σx² − T²) // (T·D) — the population
-    variance/mean in common-denominator form; absent-doc zeros enter
-    through D without being materialized.
-
-    Scale shape: ONE map-side-combined groupBy(doc, token), ONE
-    groupBy(token) over it, a 50-row TakeOrderedAndProject (never a
-    global sort), and a 1-row doc-count broadcast."""
-    tk = (
-        _fan_out(load_testdata(spark, sf_dir, "documents").select("doc_id", "text"))
-        .select("doc_id", F.explode(F.split("text", X.TOKEN_RE)).alias("tok"))
-        .transform(tracked_persist)
-    )
-    dt = tk.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("x"))
-    dd = tk.agg(F.countDistinct("doc_id").alias("d"))
-    ts = dt.groupBy("tok").agg(
-        F.sum("x").alias("total"),
-        F.count(F.lit(1)).alias("docfreq"),
-        F.sum(F.col("x") * F.col("x")).alias("sumsq"),
-    )
-    top = ts.orderBy(F.col("total").desc(), "tok").limit(50)
-    return (
-        top.crossJoin(F.broadcast(dd))
-        .select(
-            "tok",
-            F.col("total").cast("bigint"),
-            F.col("docfreq").cast("bigint"),
-            F.expr("div(1000 * (d * sumsq - total * total), total * d)")
-            .cast("bigint")
-            .alias("fano_milli"),
-        )
-        .orderBy(F.col("total").desc(), "tok")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Round-5 session-5 batch 8: rater agreement, CUBE completion
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "quality_rater_agreement_kappa",
-    r"""
-    WITH tok AS (
-        SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok
-        FROM documents
-    ),
-    pred AS (
-        SELECT doc_id,
-               CASE WHEN SUM(CASE WHEN tok IN ('the','a','an','of','and','to',
-                                               'is','in','it','for')
-                             THEN 1 ELSE 0 END) * 20 >= COUNT(*)
-                    THEN 1 ELSE 0 END AS b
-        FROM tok GROUP BY doc_id
-    ),
-    pair AS (
-        SELECT CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS a, p.b
-        FROM documents d JOIN pred p ON p.doc_id = d.doc_id
-    ),
-    cm AS (
-        SELECT COUNT(*) AS n,
-               SUM(a * b) AS both_en,
-               SUM((1 - a) * (1 - b)) AS both_other,
-               SUM(a * (1 - b)) AS meta_only,
-               SUM((1 - a) * b) AS pred_only
-        FROM pair
-    )
-    SELECT CAST(n AS BIGINT) AS n_docs,
-           CAST(both_en AS BIGINT) AS both_en,
-           CAST(both_other AS BIGINT) AS both_other,
-           CAST(meta_only AS BIGINT) AS meta_only,
-           CAST(pred_only AS BIGINT) AS pred_only,
-           CAST((1000 * (both_en + both_other)) // n AS BIGINT) AS po_milli,
-           CAST((1000 * ((both_en + meta_only) * (both_en + pred_only)
-                 + (both_other + pred_only) * (both_other + meta_only)))
-                // (n * n) AS BIGINT) AS pe_milli,
-           CAST((1000000 * (n * (both_en + both_other)
-                 - ((both_en + meta_only) * (both_en + pred_only)
-                    + (both_other + pred_only) * (both_other + meta_only))))
-                // (n * n - ((both_en + meta_only) * (both_en + pred_only)
-                    + (both_other + pred_only) * (both_other + meta_only)))
-               AS BIGINT) AS kappa_micro
-    FROM cm
-    """,
-)
-def quality_rater_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's kappa between two labelers of the same corpus — here
-    the stored ``lang`` metadata (rater A: lang = 'en') and the
-    stopword-ratio heuristic (rater B: ``text_lang_id``'s predicate) —
-    the chance-corrected agreement metric every labeling/weak-
-    supervision pipeline reports before trusting a cheap labeler as a
-    stand-in for an expensive one.  Exact integers in common-
-    denominator form: p_o·n = a+d, p_e·n² = (a+b)(a+c)+(c+d)(b+d),
-    κ_micro = ⌊10⁶·(n(a+d) − pe·n²)/(n² − pe·n²)⌋ — no float division
-    anywhere, bit-identical on both engines.  The full confusion
-    matrix ships alongside so the reader can recompute any agreement
-    metric.
-
-    Scale shape: the corpus-scale work is the ``text_lang_id``
-    per-doc aggregate (one map-side-combined groupBy) + one equi-join
-    back to metadata; everything after is a single 1-row confusion
-    aggregate.  Kappa itself is O(1)."""
-    docs = _fan_out(
-        load_testdata(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    )
-    tok = docs.select("doc_id", F.explode(F.split("text", X.TOKEN_RE)).alias("tok"))
-    pred = tok.groupBy("doc_id").agg(
-        F.when(
-            F.sum(F.when(F.col("tok").isin(*X.EN_STOPWORDS), 1).otherwise(0)) * 20
-            >= F.count(F.lit(1)),
-            1,
-        )
-        .otherwise(0)
-        .alias("b")
-    )
-    pair = docs.select(
-        "doc_id", F.when(F.col("lang") == "en", 1).otherwise(0).alias("a")
-    ).join(pred, "doc_id")
-    cm = pair.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("a") * F.col("b")).alias("both_en"),
-        F.sum((1 - F.col("a")) * (1 - F.col("b"))).alias("both_other"),
-        F.sum(F.col("a") * (1 - F.col("b"))).alias("meta_only"),
-        F.sum((1 - F.col("a")) * F.col("b")).alias("pred_only"),
-    )
-    pe_num = (
-        "((both_en + meta_only) * (both_en + pred_only)"
-        " + (both_other + pred_only) * (both_other + meta_only))"
-    )
-    return cm.select(
-        F.col("n").cast("bigint").alias("n_docs"),
-        F.col("both_en").cast("bigint"),
-        F.col("both_other").cast("bigint"),
-        F.col("meta_only").cast("bigint"),
-        F.col("pred_only").cast("bigint"),
-        F.expr("div(1000 * (both_en + both_other), n)")
-        .cast("bigint")
-        .alias("po_milli"),
-        F.expr(f"div(1000 * {pe_num}, n * n)").cast("bigint").alias("pe_milli"),
-        F.expr(
-            f"div(1000000 * (n * (both_en + both_other) - {pe_num}),"
-            f" n * n - {pe_num})"
-        )
-        .cast("bigint")
-        .alias("kappa_micro"),
-    )
-
-
-@register(
-    "cube_revenue_by_flag_status",
-    """
-    SELECT COALESCE(l_returnflag, 'ALL') AS l_returnflag,
-           COALESCE(l_linestatus, 'ALL') AS l_linestatus,
-           CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus)
-               AS INTEGER) AS grouping_id,
-           CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-               AS revenue_centi
-    FROM lineitem
-    GROUP BY CUBE (l_returnflag, l_linestatus)
-    ORDER BY grouping_id, l_returnflag, l_linestatus
-    """,
-)
-def cube_revenue_by_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE aggregation — the remaining member of the grouped-
-    aggregation family next to ``rollup_revenue`` and
-    ``grouping_sets_revenue``: all 2² margin combinations of
-    (returnflag, linestatus) in one pass, with the GROUPING() bitmask
-    distinguishing real NULL-like margins from data values (the
-    ``'ALL'`` coalesce is presentation; grouping_id is the truth).
-    Revenue in exact centi-units (per-row rounding before the integer
-    sum — order-independent on both engines).
-
-    Scale shape: Spark expands CUBE into a single Expand + one
-    map-side-combinable aggregate — one shuffle for all four grouping
-    sets, output bounded by the category-domain product; the same
-    Expand-based plan AQE-sizes at any N."""
-    return (
-        _fan_out(load_testdata(spark, sf_dir, "lineitem"))
-        .cube("l_returnflag", "l_linestatus")
-        .agg(
-            (F.grouping("l_returnflag") * 2 + F.grouping("l_linestatus"))
-            .cast("int")
-            .alias("grouping_id"),
-            F.count(F.lit(1)).cast("bigint").alias("n_items"),
-            F.sum(F.expr("cast(round(l_extendedprice * 100) as bigint)"))
-            .cast("bigint")
-            .alias("revenue_centi"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("l_returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("l_linestatus"),
-            "grouping_id",
-            "n_items",
-            "revenue_centi",
-        )
-        .orderBy("grouping_id", "l_returnflag", "l_linestatus")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Round-5 session-5 batch 9: mutual-kNN paraphrase mining
 # ---------------------------------------------------------------------------
@@ -12134,212 +9112,6 @@ def similarity_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> Data
 
 
 # ---------------------------------------------------------------------------
-# Round-5 session-5 batch 12: one-row dataset card
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "pipeline_dataset_card",
-    r"""
-    WITH d AS (
-        SELECT doc_id, text, lang, source,
-               len(string_split_regex(text, '\s+')) AS n_toks,
-               md5(text) AS h
-        FROM documents
-    ),
-    agg AS (
-        SELECT COUNT(*) AS n_docs,
-               SUM(n_toks) AS n_tokens,
-               COUNT(DISTINCT source) AS n_sources,
-               COUNT(DISTINCT lang) AS n_langs,
-               COUNT(DISTINCT h) AS n_unique_texts,
-               SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS n_en,
-               MIN(n_toks) AS min_doc_tokens,
-               MAX(n_toks) AS max_doc_tokens
-        FROM d
-    )
-    SELECT CAST(n_docs AS BIGINT) AS n_docs,
-           CAST(n_tokens AS BIGINT) AS n_tokens,
-           CAST(n_sources AS BIGINT) AS n_sources,
-           CAST(n_langs AS BIGINT) AS n_langs,
-           CAST(n_docs - n_unique_texts AS BIGINT) AS n_exact_dup_docs,
-           CAST((1000 * (n_docs - n_unique_texts)) // n_docs AS BIGINT)
-               AS dup_rate_milli,
-           CAST((1000 * n_en) // n_docs AS BIGINT) AS en_share_milli,
-           CAST((1000 * n_tokens) // n_docs AS BIGINT) AS mean_doc_tokens_milli,
-           CAST(min_doc_tokens AS BIGINT) AS min_doc_tokens,
-           CAST(max_doc_tokens AS BIGINT) AS max_doc_tokens
-    FROM agg
-    """,
-)
-def pipeline_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-row dataset card — the summary block a curated release
-    ships (HuggingFace dataset cards, Datasheets for Datasets, Gebru
-    et al. 2021): corpus size in docs/tokens, source and language
-    breadth, exact-duplicate mass (docs minus distinct content
-    hashes), English share, and doc-length extremes/mean — every
-    number integer-exact.  The detailed per-dimension reports are the
-    sibling queries (quality stats, lang distribution, dup tiers,
-    mixture plans); this is the cover sheet a reviewer reads first.
-
-    Scale shape: ONE scan, ONE aggregate — the distinct-counts are
-    Spark partial-aggregated (Expand for multi-distinct), everything
-    else is map-side-combined; output is a single row."""
-    d = _fan_out(
-        load_testdata(spark, sf_dir, "documents").select(
-            "doc_id", "lang", "source", "text"
-        )
-    ).select(
-        "lang",
-        "source",
-        F.size(F.split("text", X.TOKEN_RE)).alias("n_toks"),
-        F.md5(F.col("text").cast("binary")).alias("h"),
-    )
-    return d.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("n_toks").cast("bigint").alias("n_tokens"),
-        F.countDistinct("source").cast("bigint").alias("n_sources"),
-        F.countDistinct("lang").cast("bigint").alias("n_langs"),
-        (F.count(F.lit(1)) - F.countDistinct("h"))
-        .cast("bigint")
-        .alias("n_exact_dup_docs"),
-        F.expr("div(1000 * (count(1) - count(distinct h)), count(1))")
-        .cast("bigint")
-        .alias("dup_rate_milli"),
-        F.expr("div(1000 * sum(case when lang = 'en' then 1 else 0 end), count(1))")
-        .cast("bigint")
-        .alias("en_share_milli"),
-        F.expr("div(1000 * sum(n_toks), count(1))")
-        .cast("bigint")
-        .alias("mean_doc_tokens_milli"),
-        F.min("n_toks").cast("bigint").alias("min_doc_tokens"),
-        F.max("n_toks").cast("bigint").alias("max_doc_tokens"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Round-5 session-5 batch 13: sketch-based join-size estimation
-# ---------------------------------------------------------------------------
-
-
-def _cms_bucket_sql(row: int, keycol: str, w: int) -> str:
-    h = f"md5(concat('{row}#', CAST({keycol} AS VARCHAR)))"
-    return f"({_hexat(h, 1, 8)} % {w})"
-
-
-@register(
-    "stats_join_size_estimate",
-    f"""
-    WITH keys AS (
-        SELECT 'l_partkey' AS column_name, l_partkey AS k FROM lineitem
-        UNION ALL
-        SELECT 'l_suppkey', l_suppkey FROM lineitem
-    ),
-    exact AS (
-        SELECT column_name, SUM(f * f) AS exact_selfjoin
-        FROM (SELECT column_name, k, COUNT(*) AS f FROM keys GROUP BY 1, 2)
-        GROUP BY column_name
-    ),
-    probes AS (
-        SELECT column_name, r,
-               CASE r {" ".join(f"WHEN {i} THEN {_cms_bucket_sql(i, 'k', 4096)}" for i in range(4))} END AS bucket
-        FROM keys, (SELECT unnest([0, 1, 2, 3]) AS r)
-    ),
-    cnt AS (
-        SELECT column_name, r, bucket, COUNT(*) AS c
-        FROM probes GROUP BY 1, 2, 3
-    ),
-    inner_prod AS (
-        SELECT column_name, r, SUM(c * c) AS ip FROM cnt GROUP BY 1, 2
-    ),
-    est AS (
-        SELECT column_name, MIN(ip) AS cms_estimate FROM inner_prod
-        GROUP BY column_name
-    )
-    SELECT e.column_name,
-           CAST(x.exact_selfjoin AS BIGINT) AS exact_selfjoin,
-           CAST(e.cms_estimate AS BIGINT) AS cms_estimate,
-           CAST((1000 * (e.cms_estimate - x.exact_selfjoin))
-                // x.exact_selfjoin AS BIGINT) AS overcount_permille
-    FROM est e JOIN exact x ON x.column_name = e.column_name
-    ORDER BY e.column_name
-    """,
-)
-def stats_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch-based equi-join cardinality estimation (Alon-Matias-
-    Szegedy lineage; the CMS inner-product form of Cormode-
-    Muthukrishnan) — the planner-side question "how big will this
-    self-join on key k get?" answered from two constant-size
-    summaries: |A ⋈_k B| = Σ_k f_A(k)·f_B(k), estimated by the
-    inner product of the sides' count-min rows (min over d=4
-    independent rows of Σ_b cntA[b]·cntB[b]), which NEVER
-    underestimates — exactly the conservatism a skew-aware planner
-    wants before choosing salting or a broadcast.  Run here for the
-    lineitem self-join on partkey and suppkey next to the exact
-    Σf², with the realized overcount.  All md5-bucket integer
-    arithmetic, bit-identical on both engines.
-
-    Scale shape: the sketch build is ONE map-side-combined
-    groupBy(column, row, bucket) — ≤ d·w = 16,384 counters per column
-    out of the heavy aggregate regardless of N — and the inner
-    product runs on the counter relation.  The exact Σf² twin is the
-    sf-bounded calibrator.  At 100 TB the per-side sketches persist
-    with table stats and any join's size estimate is a 16k-element
-    dot product."""
-    keys = _fan_out(
-        load_testdata(spark, sf_dir, "lineitem").selectExpr(
-            "stack(2, 'l_partkey', l_partkey, 'l_suppkey', l_suppkey)"
-            " as (column_name, k)"
-        )
-    ).transform(tracked_persist)
-    exact = (
-        keys.groupBy("column_name", "k")
-        .agg(F.count(F.lit(1)).alias("f"))
-        .groupBy("column_name")
-        .agg(F.sum(F.col("f") * F.col("f")).alias("exact_selfjoin"))
-    )
-    probes = keys.select(
-        "column_name",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("r"),
-                        F.expr(
-                            f"pmod(cast(conv(substring(md5(cast(concat('{i}#',"
-                            f" cast(k as string)) as binary)), 1, 8), 16, 10)"
-                            f" as bigint), 4096)"
-                        ).alias("bucket"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("p"),
-    ).select("column_name", F.col("p.r").alias("r"), F.col("p.bucket").alias("bucket"))
-    cnt = probes.groupBy("column_name", "r", "bucket").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    est = (
-        cnt.groupBy("column_name", "r")
-        .agg(F.sum(F.col("c") * F.col("c")).alias("ip"))
-        .groupBy("column_name")
-        .agg(F.min("ip").alias("cms_estimate"))
-    )
-    return (
-        est.join(F.broadcast(exact), "column_name")
-        .select(
-            "column_name",
-            F.col("exact_selfjoin").cast("bigint"),
-            F.col("cms_estimate").cast("bigint"),
-            F.expr("div(1000 * (cms_estimate - exact_selfjoin), exact_selfjoin)")
-            .cast("bigint")
-            .alias("overcount_permille"),
-        )
-        .orderBy("column_name")
-    )
-
-
-# ---------------------------------------------------------------------------
 # Round-5 session-5 batch 14: RFM segmentation
 # ---------------------------------------------------------------------------
 
@@ -12618,96 +9390,6 @@ def dedup_lsh_hot_bucket_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-6 batch 2: shard reproducibility checksums
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "pipeline_shard_checksum",
-    f"""
-    WITH keyed AS (
-        SELECT doc_id, text, length(text) AS n_chars,
-               md5(CAST(doc_id AS VARCHAR)) AS h
-        FROM documents
-    ),
-    sharded AS (
-        SELECT doc_id, n_chars,
-               {_HEX12} % 16 AS shard,
-               md5(CAST(doc_id AS VARCHAR) || ':' || text) AS ch
-        FROM keyed
-    ),
-    dig AS (
-        SELECT shard, doc_id, n_chars,
-               ({_HEX12.replace("substr(h,", "substr(ch,")}) % 4294967296 AS d32
-        FROM sharded
-    )
-    SELECT CAST(shard AS BIGINT) AS shard,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_chars) AS BIGINT) AS n_chars_total,
-           CAST(SUM(d32) AS BIGINT) AS checksum_sum,
-           CAST(MIN(doc_id) AS BIGINT) AS min_doc_id,
-           CAST(MAX(doc_id) AS BIGINT) AS max_doc_id
-    FROM dig GROUP BY shard ORDER BY shard
-    """,
-)
-def pipeline_shard_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-shard content checksums — the reproducibility audit a
-    training pipeline runs after every rerun/migration: two shard sets
-    are byte-identical iff their (count, char mass, content checksum)
-    triples match, WITHOUT sorting or pairwise comparison.  The
-    checksum is the SUM of per-doc 32-bit digests (md5 of id:text), a
-    commutative aggregate — order-independent by construction, exact
-    bigint on both engines (2^32 · rows stays far under 2^63), and
-    duplicate-sensitive where plain XOR would silently cancel repeated
-    rows.
-
-    Scale shape: pure map (md5 per doc) + ONE map-side-combinable
-    groupBy(shard) with O(|shards|) output.  At 100 TB this is the
-    cheapest possible full-corpus integrity pass — one scan, no
-    shuffle beyond 16 partial rows per task."""
-    docs = load_testdata(spark, sf_dir, "documents").select("doc_id", "text")
-    keyed = docs.select(
-        "doc_id",
-        F.length("text").cast("bigint").alias("n_chars"),
-        F.md5(F.col("doc_id").cast("string").cast("binary")).alias("h"),
-        F.md5(
-            F.concat(F.col("doc_id").cast("string"), F.lit(":"), F.col("text")).cast(
-                "binary"
-            )
-        ).alias("ch"),
-    )
-    dig = keyed.select(
-        "doc_id",
-        "n_chars",
-        (F.expr("cast(conv(substring(h, 1, 12), 16, 10) as bigint)") % 16).alias(
-            "shard"
-        ),
-        (
-            F.expr("cast(conv(substring(ch, 1, 12), 16, 10) as bigint)") % 4294967296
-        ).alias("d32"),
-    )
-    return (
-        dig.groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum("n_chars").cast("bigint").alias("n_chars_total"),
-            F.sum("d32").cast("bigint").alias("checksum_sum"),
-            F.min("doc_id").cast("bigint").alias("min_doc_id"),
-            F.max("doc_id").cast("bigint").alias("max_doc_id"),
-        )
-        .select(
-            F.col("shard").cast("bigint"),
-            "n_docs",
-            "n_chars_total",
-            "checksum_sum",
-            "min_doc_id",
-            "max_doc_id",
-        )
-        .orderBy("shard")
-    )
-
-
-# ---------------------------------------------------------------------------
 # Round-6 batch 3: incremental snapshot manifest
 # ---------------------------------------------------------------------------
 
@@ -12834,73 +9516,6 @@ def pipeline_incremental_manifest(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 @register(
-    "quality_simpson_diversity",
-    r"""
-    WITH tok AS (
-        SELECT source, unnest(string_split_regex(text, '\s+')) AS tok
-        FROM documents
-    ),
-    c AS (SELECT source, tok, COUNT(*) AS c FROM tok GROUP BY source, tok),
-    agg AS (
-        SELECT source,
-               SUM(c) AS n_tokens,
-               COUNT(*) AS n_types,
-               SUM(c * (c - 1)) AS coll2
-        FROM c GROUP BY source
-    )
-    SELECT source,
-           CAST(n_tokens AS BIGINT) AS n_tokens,
-           CAST(n_types AS BIGINT) AS n_types,
-           CAST((1000000 * coll2) // (n_tokens * (n_tokens - 1)) AS BIGINT)
-               AS simpson_micro,
-           CAST(1000000 - (1000000 * coll2) // (n_tokens * (n_tokens - 1))
-               AS BIGINT) AS diversity_micro
-    FROM agg ORDER BY source
-    """,
-)
-def quality_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source lexical diversity via the Simpson index — the
-    probability two tokens drawn without replacement from a source are
-    the SAME type (Σc(c−1)/N(N−1), the unbiased collision estimator),
-    and its complement (Gini–Simpson diversity).  A source whose
-    diversity collapses is template/boilerplate-heavy — the
-    mixture-weighting signal TTR misses because TTR ignores the shape
-    of the frequency tail.  Exact integer micro-units on both engines
-    (N ≤ 10⁶ tokens/source at test SF keeps 10⁶·Σc(c−1) far inside
-    bigint; production keeps the same integers per shard and merges
-    numerators/denominators — both are plain sums).
-
-    Scale shape: explode → ONE map-side-combinable groupBy(source,
-    token) → ONE groupBy(source) over the per-type counts; output
-    |sources| rows.  No window, no join, combinable end-to-end (the
-    same two-level aggregate pattern as the burstiness query)."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    tok = docs.select(
-        "source", F.explode(F.split("text", X.TOKEN_RE)).alias("tok")
-    )
-    c = tok.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("c"))
-    agg = c.groupBy("source").agg(
-        F.sum("c").alias("n_tokens"),
-        F.count(F.lit(1)).alias("n_types"),
-        F.sum(F.col("c") * (F.col("c") - 1)).alias("coll2"),
-    )
-    return agg.select(
-        "source",
-        F.col("n_tokens").cast("bigint"),
-        F.col("n_types").cast("bigint"),
-        F.expr("div(1000000 * coll2, n_tokens * (n_tokens - 1))")
-        .cast("bigint")
-        .alias("simpson_micro"),
-        (
-            F.lit(1000000)
-            - F.expr("div(1000000 * coll2, n_tokens * (n_tokens - 1))")
-        )
-        .cast("bigint")
-        .alias("diversity_micro"),
-    ).orderBy("source")
-
-
-@register(
     "pipeline_skew_report",
     """
     WITH c AS (
@@ -12977,69 +9592,6 @@ def pipeline_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "vocab_oov_rate_by_source",
-    r"""
-    WITH tok AS (
-        SELECT source, unnest(string_split_regex(text, '\s+')) AS tok
-        FROM documents
-    ),
-    gtok AS (SELECT tok, COUNT(*) AS c FROM tok GROUP BY tok),
-    vocab AS (
-        SELECT tok FROM gtok ORDER BY c DESC, tok ASC LIMIT 256
-    ),
-    per_src AS (SELECT source, tok, COUNT(*) AS c FROM tok GROUP BY source, tok),
-    m AS (
-        SELECT p.source, p.c,
-               CASE WHEN v.tok IS NULL THEN 0 ELSE 1 END AS in_vocab
-        FROM per_src p LEFT JOIN vocab v ON v.tok = p.tok
-    )
-    SELECT source,
-           CAST(SUM(c) AS BIGINT) AS n_tokens,
-           CAST(SUM(CASE WHEN in_vocab = 0 THEN c ELSE 0 END) AS BIGINT) AS n_oov,
-           CAST((1000 * SUM(CASE WHEN in_vocab = 0 THEN c ELSE 0 END)) // SUM(c)
-               AS BIGINT) AS oov_permille
-    FROM m GROUP BY source ORDER BY source
-    """,
-)
-def vocab_oov_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Out-of-vocabulary rate per source against the corpus top-256
-    vocabulary (count-desc, token-asc tie-break — deterministic on both
-    engines) — the mixture diagnostic that flags a source whose token
-    distribution the shared tokenizer/vocab serves poorly (high OOV =
-    fertility blowup for that slice).
-
-    Scale shape: the vocab is a TakeOrderedAndProject over the global
-    token counts (top-k, never a full sort); per-source counts are ONE
-    combinable groupBy; membership is an equi-join against the ≤256-row
-    broadcast vocab.  Everything is bounded by vocab size or |sources|
-    after the two token aggregates."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    tok = docs.select("source", F.explode(F.split("text", X.TOKEN_RE)).alias("tok"))
-    glob = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
-    vocab = glob.orderBy(F.col("c").desc(), F.col("tok").asc()).limit(256).select("tok")
-    per_src = tok.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("c"))
-    m = per_src.join(
-        F.broadcast(vocab.withColumn("in_vocab", F.lit(1))), "tok", "left"
-    )
-    return (
-        m.groupBy("source")
-        .agg(
-            F.sum("c").cast("bigint").alias("n_tokens"),
-            F.sum(F.when(F.col("in_vocab").isNull(), F.col("c")).otherwise(0))
-            .cast("bigint")
-            .alias("n_oov"),
-        )
-        .select(
-            "source",
-            "n_tokens",
-            "n_oov",
-            F.expr("div(1000 * n_oov, n_tokens)").cast("bigint").alias("oov_permille"),
-        )
-        .orderBy("source")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Round-6 batch 5: hopping-window rollup (F.window slide semantics, batch twin)
 # ---------------------------------------------------------------------------
@@ -13101,90 +9653,6 @@ def events_hopping_window_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_events").cast("bigint"),
         F.col("total_value_milli").cast("bigint"),
     ).orderBy("win_start_us", "event_type")
-
-
-# ---------------------------------------------------------------------------
-# Round-6 batch 6: exact OLS trend per event type
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "events_value_trend_ols",
-    """
-    WITH e AS (
-        SELECT event_type,
-               datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS x,
-               CAST(round(value * 1000) AS BIGINT) AS y
-        FROM events
-    ),
-    daily AS (
-        SELECT event_type, x,
-               SUM(y) // COUNT(*) AS ybar,
-               COUNT(*) AS n_ev
-        FROM e GROUP BY event_type, x
-    ),
-    m AS (
-        SELECT event_type,
-               COUNT(*) AS n,
-               SUM(n_ev) AS n_events,
-               SUM(x) AS sx, SUM(ybar) AS sy,
-               SUM(x * x) AS sxx, SUM(x * ybar) AS sxy
-        FROM daily GROUP BY event_type
-    )
-    SELECT event_type,
-           CAST(n AS BIGINT) AS n_days,
-           CAST(n_events AS BIGINT) AS n_events,
-           CAST((1000000 * (n * sxy - sx * sy))
-                // (n * sxx - sx * sx) AS BIGINT) AS slope_micro_per_day
-    FROM m ORDER BY event_type
-    """,
-)
-def events_value_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-type value trend via exact ordinary least squares over the
-    DAILY MEAN series — the drift detector that reads as a rate
-    (milli-value change per day), complementing CUSUM (which finds
-    WHEN a shift happened) with HOW FAST the level is moving.  The
-    regression runs over (day, daily-mean) points, so every magnitude
-    is bounded by the VALUE DOMAIN and the day count — never by corpus
-    size: an earlier per-event formulation overflowed bigint at the
-    10x blow-up because 10^6·(nΣxy − ΣxΣy) grows ∝ N² (NOTES.md
-    round-6) — the daily-mean form
-    keeps n ≤ |days| ≈ 31 and y ≤ max value forever.  The slope is one
-    floor division over integer cross-moments, bit-identical on both
-    engines (both truncate toward zero, verified for negative slopes).
-    x is days since a fixed anchor (2024-01-01, near the data): slopes
-    are shift-invariant, the anchor only bounds x.
-
-    Scale shape: ONE map-side-combinable groupBy(event_type, day)
-    collapses the corpus to ≤ |types|·|days| rows; the five cross-
-    moment sums are a second combinable groupBy over that bounded
-    relation — the canonical distributed-regression shape with a
-    bounded second stage."""
-    ev = load_testdata(spark, sf_dir, "events").select(
-        "event_type",
-        F.expr("datediff(cast(ts as date), date'2024-01-01')").alias("x"),
-        F.expr("cast(round(value * 1000) as bigint)").alias("y"),
-    )
-    daily = ev.groupBy("event_type", "x").agg(
-        F.expr("div(sum(y), count(1))").alias("ybar"),
-        F.count(F.lit(1)).alias("n_ev"),
-    )
-    m = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("n_ev").alias("n_events"),
-        F.sum("x").alias("sx"),
-        F.sum("ybar").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("x") * F.col("ybar")).alias("sxy"),
-    )
-    return m.select(
-        "event_type",
-        F.col("n").cast("bigint").alias("n_days"),
-        F.col("n_events").cast("bigint").alias("n_events"),
-        F.expr("div(1000000 * (n * sxy - sx * sy), n * sxx - sx * sx)")
-        .cast("bigint")
-        .alias("slope_micro_per_day"),
-    ).orderBy("event_type")
 
 
 # ---------------------------------------------------------------------------
@@ -13282,117 +9750,6 @@ def _fs_score():
         F.when(F.col("name") == F.col("b_name"), wn[0]).otherwise(wn[1])
         + F.when(F.col("bal_c") == F.col("b_bal_c"), wb[0]).otherwise(wb[1])
         + F.when(F.col("seg") == F.col("b_seg"), ws[0]).otherwise(ws[1])
-    )
-
-
-@register(
-    "customers_record_linkage_fs",
-    f"""
-    WITH a AS (
-        SELECT c_custkey AS id, c_name AS name, c_nationkey AS nat,
-               CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c,
-               c_mktsegment AS seg
-        FROM customer
-    ),
-    b AS (
-        SELECT id + 1000000 AS id,
-               CASE WHEN id % 7 = 0 THEN substr(name, 1, length(name) - 1) || 'X'
-                    ELSE name END AS name,
-               nat,
-               CASE WHEN id % 5 = 0 THEN bal_c + 1 ELSE bal_c END AS bal_c,
-               CASE WHEN id % 11 = 0 THEN 'AUTOMOBILE' ELSE seg END AS seg
-        FROM a
-    ),
-    cand AS (
-        SELECT a.id AS id_a, b.id AS id_b,
-               CASE WHEN a.name = b.name THEN 1 ELSE 0 END AS g_name,
-               CASE WHEN a.bal_c = b.bal_c THEN 1 ELSE 0 END AS g_bal,
-               CASE WHEN a.seg = b.seg THEN 1 ELSE 0 END AS g_seg
-        FROM a JOIN b
-          ON a.nat = b.nat
-         AND substr(a.name, 1, 17) = substr(b.name, 1, 17)
-    ),
-    scored AS (
-        SELECT g_name, g_bal, g_seg,
-               (CASE WHEN g_name = 1 THEN {_FS_W['name'][0]} ELSE {_FS_W['name'][1]} END
-              + CASE WHEN g_bal = 1 THEN {_FS_W['bal'][0]} ELSE {_FS_W['bal'][1]} END
-              + CASE WHEN g_seg = 1 THEN {_FS_W['seg'][0]} ELSE {_FS_W['seg'][1]} END)
-                   AS score
-        FROM cand
-    )
-    SELECT CAST(g_name AS BIGINT) AS g_name,
-           CAST(g_bal AS BIGINT) AS g_bal,
-           CAST(g_seg AS BIGINT) AS g_seg,
-           CAST(score AS BIGINT) AS score,
-           CASE WHEN score >= {_FS_MATCH} THEN 'match'
-                WHEN score >= {_FS_POSSIBLE} THEN 'possible'
-                ELSE 'non_match' END AS class,
-           CAST(COUNT(*) AS BIGINT) AS n_pairs
-    FROM scored
-    GROUP BY g_name, g_bal, g_seg, score
-    ORDER BY g_name, g_bal, g_seg
-    """,
-)
-def customers_record_linkage_fs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fellegi–Sunter probabilistic record linkage — the multi-field
-    entity-resolution tier above single-field fuzzy matching
-    (`fuzzy_name_pairs_symspell`): a planted registry B (every 7th name
-    perturbed, every 5th balance off by a cent, every 11th segment
-    wrong) is linked back to A through a blocking key, each candidate
-    pair scored by summing fixed integer agreement/disagreement weights
-    (the log(m/u)-shaped deci-bans a production linker fits via EM),
-    and classified match / possible / non-match by the two FS
-    thresholds.  Output is the agreement-pattern histogram with its
-    score and class — the table a linkage analyst reads to set
-    thresholds.
-
-    Scale shape: blocking = ONE equi-join on (nation, 17-char
-    name-prefix) — the prefix pins 8 of 9 key digits, so block size is
-    ≤10 ids at ANY corpus size (block count grows ∝ N, sizes don't) and
-    candidate count stays ∝ N, never |A|·|B|; scoring is a map;
-    the histogram is a map-side-combinable groupBy over ≤2³ patterns.
-    The quadratic failure mode (block skew) is the same hazard the LSH
-    hot-bucket valve addresses — blocking keys here are near-unique by
-    construction, and a production run would audit them with
-    `pipeline_skew_report` first.  ``hot_block_cap=None`` keeps exact
-    all-pairs blocking (one equi-join, the oracle-checked semantics);
-    the repeat-heavy variant with the cap engaged is
-    ``customers_linkage_clusters_capped``."""
-    cust = load_testdata(spark, sf_dir, "customer")
-    aa, bb = _fs_sides(cust)
-    cand = LK.blocked_bipartite_pairs(
-        aa, bb, ["nat", "blk"], "id", "b_id", hot_block_cap=None
-    )
-    wn, wb, ws = _FS_W["name"], _FS_W["bal"], _FS_W["seg"]
-    scored = cand.select(
-        F.when(F.col("name") == F.col("b_name"), 1).otherwise(0).alias("g_name"),
-        F.when(F.col("bal_c") == F.col("b_bal_c"), 1).otherwise(0).alias("g_bal"),
-        F.when(F.col("seg") == F.col("b_seg"), 1).otherwise(0).alias("g_seg"),
-    ).select(
-        "g_name",
-        "g_bal",
-        "g_seg",
-        (
-            F.when(F.col("g_name") == 1, wn[0]).otherwise(wn[1])
-            + F.when(F.col("g_bal") == 1, wb[0]).otherwise(wb[1])
-            + F.when(F.col("g_seg") == 1, ws[0]).otherwise(ws[1])
-        ).alias("score"),
-    )
-    return (
-        scored.groupBy("g_name", "g_bal", "g_seg", "score")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
-        .select(
-            F.col("g_name").cast("bigint"),
-            F.col("g_bal").cast("bigint"),
-            F.col("g_seg").cast("bigint"),
-            F.col("score").cast("bigint"),
-            F.when(F.col("score") >= _FS_MATCH, "match")
-            .when(F.col("score") >= _FS_POSSIBLE, "possible")
-            .otherwise("non_match")
-            .alias("class"),
-            "n_pairs",
-        )
-        .orderBy("g_name", "g_bal", "g_seg")
     )
 
 
@@ -13653,123 +10010,6 @@ def events_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-6 batch 10: label-propagation communities over the near-dup graph
-# ---------------------------------------------------------------------------
-
-_LPA_STEP_SQL = """
-    nl{i} AS (
-        SELECT e.u AS node, l.lbl AS lbl, COUNT(*) AS c
-        FROM edges_self e JOIN lab{p} l ON l.node = e.v
-        GROUP BY e.u, l.lbl
-    ),
-    mx{i} AS (SELECT node, MAX(c) AS mc FROM nl{i} GROUP BY node),
-    pick{i} AS (
-        SELECT n.node, MIN(n.lbl) AS lbl
-        FROM nl{i} n JOIN mx{i} m ON m.node = n.node AND n.c = m.mc
-        GROUP BY n.node
-    ),
-    lab{i} AS (
-        SELECT l.node, COALESCE(p.lbl, l.lbl) AS lbl
-        FROM lab{p} l LEFT JOIN pick{i} p ON p.node = l.node
-    )"""
-
-
-@register(
-    "dedup_graph_label_propagation",
-    f"""
-    WITH {_CORPUS_SQL}, {_SHINGLE_SQL}, {_MINHASH_BANDS_SQL},
-    cand AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a
-        JOIN bands b ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig
-                    AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    edges AS (SELECT id_a AS u, id_b AS v FROM cand
-              UNION ALL SELECT id_b AS u, id_a AS v FROM cand),
-    edges_self AS (SELECT u, v FROM edges
-                   UNION ALL SELECT doc_id, doc_id FROM corpus),
-    lab0 AS (SELECT doc_id AS node, doc_id AS lbl FROM corpus),
-    {_LPA_STEP_SQL.format(i=1, p=0)},
-    {_LPA_STEP_SQL.format(i=2, p=1)}
-    SELECT CAST(node AS BIGINT) AS doc_id,
-           CAST(lbl AS BIGINT) AS community
-    FROM lab2 ORDER BY doc_id
-    """,
-)
-def dedup_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synchronous label propagation (2 unrolled rounds) over the LSH
-    candidate graph — community detection, the graph tier between
-    connected components (pure reachability — `dedup_clusters_minhash`)
-    and PageRank (centrality): every node adopts the most frequent
-    label among its neighbors AND itself each round (self-inclusive
-    voting — the standard fix for sync-LPA's two-node label-swap
-    oscillation), ties to the SMALLEST label (the determinism rule
-    that makes sync LPA replayable — vanilla LPA with arbitrary
-    tie-breaks is non-deterministic by construction).  Isolated nodes
-    keep their own id via their self-vote.  Two rounds label dense
-    cores without bleeding across weak bridges the way full transitive
-    closure does.
-
-    Scale shape: each round is ONE equi-join of the undirected edge
-    list with the label vector + two combinable aggregates (per-(node,
-    label) counts, then max-count pick with MIN tie-break — the argmax
-    expressed as aggregate+filter, no window, no sort).  Per-round cost
-    O(|E|), fixed round count, the same static-unroll pattern as the
-    PageRank query; the edge list is persisted once and reused by both
-    rounds (pinned at runtime by the iterative-graph cache test
-    pattern).
-
-    Round-10 (optimization; guide §3.3/§5): the per-round label frame
-    is ``localCheckpoint(eager=False)`` — the round's plan references
-    ``lab`` twice (the neighbor join and the coalesce join-back), so
-    the unrolled plan doubled per round and Catalyst/AQE orchestration
-    of the nested tree dominated: sf0.1 A/B 9.6→5.9 s, identical
-    output (collect-compared).  Same contract as
-    ``connected_components``."""
-    corpus = _dedup_corpus(spark, sf_dir)
-    bands = D.minhash_bands(corpus, "doc_id", "text", n_hashes=8, band_size=4)
-    cand = D.lsh_candidate_pairs(bands, "doc_id").select("id_a", "id_b")
-    edges = (
-        cand.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .unionByName(cand.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
-        .unionByName(
-            corpus.select(F.col("doc_id").alias("u"), F.col("doc_id").alias("v"))
-        )
-        # round 11: repartition before the persist — the 3-branch union
-        # otherwise caches 3× the upstream plan's output partitions as
-        # slivers (measured 160 at sf0.1) and every round's join
-        # re-scans them all; hash(v) is the per-round join key
-        .repartition("v")
-        .transform(tracked_persist)
-    )
-    lab = corpus.select(F.col("doc_id").alias("node"), F.col("doc_id").alias("lbl"))
-    for _ in range(2):
-        nl = (
-            edges.join(lab.select(F.col("node").alias("v"), F.col("lbl").alias("nlbl")), "v")
-            .groupBy(F.col("u").alias("node"), F.col("nlbl").alias("cand_lbl"))
-            .agg(F.count(F.lit(1)).alias("c"))
-            # round 11: nl feeds BOTH mx and pick — without this hold
-            # the edge⋈label join and its aggregate ran twice per round
-            .localCheckpoint(eager=False)
-        )
-        mx = nl.groupBy("node").agg(F.max("c").alias("mc"))
-        pick = (
-            nl.join(mx, "node")
-            .filter(F.col("c") == F.col("mc"))
-            .groupBy("node")
-            .agg(F.min("cand_lbl").alias("plbl"))
-        )
-        lab = lab.join(pick, "node", "left").select(
-            "node", F.coalesce("plbl", "lbl").alias("lbl")
-        ).localCheckpoint(eager=False)
-    return lab.select(
-        F.col("node").cast("bigint").alias("doc_id"),
-        F.col("lbl").cast("bigint").alias("community"),
-    ).orderBy("doc_id")
-
-
-# ---------------------------------------------------------------------------
 # Round-6 batch 8: audience set-overlap, series autocorrelation
 # ---------------------------------------------------------------------------
 
@@ -13927,7 +10167,7 @@ def events_audience_overlap_jaccard(spark: SparkSession, sf_dir: str) -> DataFra
 def events_autocorr_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lag-1 / lag-7 autocorrelation of each event type's DAILY COUNT
     series — the periodicity detector (is traffic weekly-seasonal?)
-    that complements the trend (``events_value_trend_ols``) and
+    that complements the trend (``stats_theil_sen_trend``) and
     change-point (``events_cusum_changepoint``) monitors.
 
     Overflow-proof by construction: daily counts are first normalized
@@ -14139,8 +10379,7 @@ def stats_spearman_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stats_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil–Sen robust trend per event type — the median of all
     pairwise slopes over the DAILY MEAN value series, the estimator
-    that shrugs off the outlier days that drag OLS
-    (``events_value_trend_ols``) around: a 29.3% breakdown point for
+    that shrugs off the outlier days that drag an OLS fit around: a 29.3% breakdown point for
     the cost of |days|² bounded pairs.
 
     Parity contract: each slope is one exact integer subtraction pair
@@ -14598,145 +10837,9 @@ def quality_tukey_fences_by_source(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@register(
-    "events_journey_trigrams",
-    """
-    WITH seq AS (
-        SELECT user_id, event_type,
-               lead(event_type, 1) OVER (PARTITION BY user_id
-                                         ORDER BY ts, event_id) AS t2,
-               lead(event_type, 2) OVER (PARTITION BY user_id
-                                         ORDER BY ts, event_id) AS t3
-        FROM events
-    )
-    SELECT event_type || '>' || t2 || '>' || t3 AS journey,
-           CAST(COUNT(*) AS BIGINT) AS n
-    FROM seq WHERE t2 IS NOT NULL AND t3 IS NOT NULL
-    GROUP BY 1
-    ORDER BY n DESC, journey
-    LIMIT 20
-    """,
-)
-def events_journey_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 three-step user journeys (event-type trigrams in strict
-    per-user time order) — the sequence view of behavior that the
-    first-order ``events_transition_matrix`` cannot see: a high
-    view>click>purchase count versus view>click>error separates a
-    working funnel from a broken checkout, and anomalous
-    signup>signup>signup loops expose bot registration.
-
-    Parity contract: ordering ties (same user, same timestamp) are
-    broken by event_id on both engines; journeys with fewer than two
-    successors are dropped (no NULL-padded partial trigrams).
-
-    Scale shape: the double-lead runs in ONE user-partitioned window
-    pass (natural key partitioning — the same shuffle sessionization
-    pays); the trigram count is a map-side-combinable groupBy over
-    ≤|types|³ keys, and top-20 plans as TakeOrderedAndProject — per-
-    partition heaps, never a global sort."""
-    ev = load_testdata(spark, sf_dir, "events").select(
-        "user_id", "event_id", "ts", "event_type"
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "event_type",
-        F.lead("event_type", 1).over(w).alias("t2"),
-        F.lead("event_type", 2).over(w).alias("t3"),
-    )
-    return (
-        seq.filter(F.col("t2").isNotNull() & F.col("t3").isNotNull())
-        .select(
-            F.concat_ws(">", "event_type", "t2", "t3").alias("journey")
-        )
-        .groupBy("journey")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select("journey", F.col("n").cast("bigint"))
-        .orderBy(F.col("n").desc(), "journey")
-        .limit(20)
-    )
-
-
 # ---------------------------------------------------------------------------
 # Round-6 batch 12: deseasonalized anomalies, balanced downsample, DAU/WAU
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "events_weekday_deseasonalized_anomalies",
-    """
-    WITH daily AS (
-        SELECT event_type,
-               datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS x,
-               COUNT(*) AS cnt
-        FROM events GROUP BY 1, 2
-    ),
-    wk AS (
-        SELECT event_type, x % 7 AS wd,
-               SUM(cnt) // COUNT(*) AS wmean
-        FROM daily GROUP BY 1, 2
-    )
-    SELECT d.event_type, CAST(d.x AS INTEGER) AS day_idx,
-           CAST(d.cnt AS BIGINT) AS cnt,
-           CAST(w.wmean AS BIGINT) AS weekday_mean,
-           CAST((1000 * (d.cnt - w.wmean)) // w.wmean AS BIGINT)
-               AS excess_permille
-    FROM daily d JOIN wk w
-      ON w.event_type = d.event_type AND w.wd = d.x % 7
-    ORDER BY abs((1000 * (d.cnt - w.wmean)) // w.wmean) DESC,
-             d.event_type, d.x
-    LIMIT 20
-    """,
-)
-def events_weekday_deseasonalized_anomalies(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Top-20 daily volume anomalies AFTER removing the weekly cycle:
-    each (type, day) is scored against its weekday's own mean
-    (Monday vs Mondays), so a quiet Sunday stops masquerading as an
-    incident and a Tuesday spike stops hiding inside the weekly swing
-    — the deseasonalized complement to the raw-level CUSUM
-    (events_cusum_changepoint) and MAD (events_robust_anomalies_mad)
-    detectors.  Day 0 (2024-01-01) is a Monday, so weekday = x mod 7.
-
-    Parity: weekday means are truncated integer division; excess is
-    permille by truncating division (negative numerators truncate
-    toward zero identically on both engines); the top-20 order is
-    total (|excess| desc, type, day).
-
-    Scale shape: one combinable groupBy(type, day) collapses the
-    corpus; weekday means are a second groupBy over the ≤|types|·|days|
-    grid; the score join is grid × (|types|·7) — bounded both sides;
-    top-20 is TakeOrderedAndProject.  No window, no BNLJ."""
-    daily = (
-        load_testdata(spark, sf_dir, "events")
-        .select(
-            "event_type",
-            F.expr("datediff(cast(ts as date), date'2024-01-01')").alias("x"),
-        )
-        .groupBy("event_type", "x")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    wk = (
-        daily.select("event_type", (F.col("x") % 7).alias("wd"), "cnt")
-        .groupBy("event_type", "wd")
-        .agg(F.expr("div(sum(cnt), count(1))").alias("wmean"))
-    )
-    scored = (
-        daily.withColumn("wd", F.col("x") % 7)
-        .join(wk, ["event_type", "wd"])
-        .select(
-            "event_type",
-            F.col("x").cast("int").alias("day_idx"),
-            F.col("cnt").cast("bigint"),
-            F.col("wmean").cast("bigint").alias("weekday_mean"),
-            F.expr("cast(div(1000 * (cnt - wmean), wmean) as bigint)").alias(
-                "excess_permille"
-            ),
-        )
-    )
-    return scored.orderBy(
-        F.abs(F.col("excess_permille")).desc(), "event_type", "day_idx"
-    ).limit(20)
 
 
 @register(
@@ -14932,7 +11035,7 @@ def events_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def customers_linkage_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity clusters from the Fellegi–Sunter match decisions: the
-    'match'-class pairs of ``customers_record_linkage_fs`` become an
+    'match'-class pairs of the Fellegi–Sunter scoring become an
     undirected graph, THREE unrolled min-label propagation rounds
     collapse it into entities, and the output is the entity-size
     histogram — the deliverable an ER pipeline actually ships (dedup
@@ -14947,9 +11050,9 @@ def customers_linkage_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: blocking keeps candidates ∝ N (17-char prefix pins
     block size ≤10 at any scale); each propagation round is one
     edge⋈label equi-join plus a combinable MIN groupBy — the same
-    O(|E|)-per-round contract as dedup_clusters, with |E| here the
-    MATCH set (≪ N·avg-block).  Histogram is two tiny groupBys.  No
-    window, no BNLJ, no driver loop.  Blocking runs through
+    O(|E|)-per-round contract as ``graph.connected_components``, with
+    |E| here the MATCH set (≪ N·avg-block).  Histogram is two tiny
+    groupBys.  No window, no BNLJ, no driver loop.  Blocking runs through
     ``operators.linkage.blocked_bipartite_pairs`` with
     ``hot_block_cap=None`` (exact all-pairs per block — one equi-join,
     same plan); the capped sibling over the planted repeat-heavy
@@ -15241,7 +11344,7 @@ def customers_linkage_clusters_capped(spark: SparkSession, sf_dir: str) -> DataF
 )
 def pipeline_split_leakage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/val/test LEAKAGE audit: because the 90/5/5 split
-    (``pipeline_split_train_val_test``) hashes each doc_id
+    (the ``split`` stage of ``pipeline_full_train_prep``) hashes each doc_id
     independently, two near-duplicate documents can land in DIFFERENT
     splits — the eval-contamination failure that inflates held-out
     metrics.  This query re-derives the split assignment (pure
@@ -15528,66 +11631,6 @@ def dedup_minhash_multiband_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 @register(
-    "events_user_lifetime_stats",
-    """
-    WITH ul AS (
-        SELECT user_id,
-               MAX(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)))
-                 - MIN(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)))
-                 AS lifetime_days,
-               COUNT(*) AS n_events
-        FROM events GROUP BY user_id
-    )
-    SELECT CAST(lifetime_days // 7 AS INTEGER) AS lifetime_weeks,
-           CAST(COUNT(*) AS BIGINT) AS n_users,
-           CAST(SUM(n_events) AS BIGINT) AS total_events,
-           CAST(SUM(n_events) // COUNT(*) AS BIGINT) AS events_per_user
-    FROM ul GROUP BY 1 ORDER BY 1
-    """,
-)
-def events_user_lifetime_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """User-lifetime histogram: days between each user's first and
-    last event, bucketed by week, with cohort mass and per-user
-    intensity — the churn-shape summary (is the base long-lived or a
-    spike of one-week tourists?) that complements the cohort-retention
-    matrix (events_cohort_retention tracks WHEN users return; this
-    tracks HOW LONG they stay at all).
-
-    Scale shape: ONE map-side-combinable groupBy(user) computes
-    min/max/count per user; the week histogram is a second combinable
-    groupBy over the per-user relation.  Two shuffles total, both on
-    natural keys; no window, no BNLJ, no broadcast."""
-    ul = (
-        load_testdata(spark, sf_dir, "events")
-        .select(
-            "user_id",
-            F.expr("datediff(cast(ts as date), date'2024-01-01')").alias("x"),
-        )
-        .groupBy("user_id")
-        .agg(
-            (F.max("x") - F.min("x")).alias("lifetime_days"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-    )
-    return (
-        ul.groupBy(F.expr("cast(div(lifetime_days, 7) as int)").alias("lifetime_weeks"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_users"),
-            F.sum("n_events").cast("bigint").alias("total_events"),
-        )
-        .select(
-            "lifetime_weeks",
-            "n_users",
-            "total_events",
-            F.expr("cast(div(total_events, n_users) as bigint)").alias(
-                "events_per_user"
-            ),
-        )
-        .orderBy("lifetime_weeks")
-    )
-
-
-@register(
     "crossmodal_coverage_report",
     """
     WITH cov AS (
@@ -15606,8 +11649,7 @@ def events_user_lifetime_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def crossmodal_coverage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Modality-coverage audit: per source, how many documents have a
-    paired embedding row (id-join convention doc_id = vec_id, as
-    crossmodal_doc_embedding_join) — the data-completeness gate a
+    paired embedding row (id-join convention doc_id = vec_id) — the data-completeness gate a
     multimodal training run checks BEFORE sampling, because a source
     whose vectors are missing silently vanishes from contrastive
     batches built by inner joins.
@@ -15859,364 +11901,9 @@ def orders_repeat_purchase_intervals(spark: SparkSession, sf_dir: str) -> DataFr
     ).orderBy("segment")
 
 
-@register(
-    "text_hash_collision_audit",
-    r"""
-    WITH tok AS (
-        SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM documents
-    ),
-    tri AS (
-        SELECT DISTINCT unnest(
-            CASE WHEN len(toks) >= 3
-                 THEN list_transform(generate_series(1, len(toks)-2),
-                      i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))
-                 ELSE []::VARCHAR[] END) AS feat
-        FROM tok
-    ),
-    bucketed AS (
-        SELECT CAST(concat('0x', substr(md5(feat), 1, 4)) AS BIGINT) AS bucket
-        FROM tri
-    ),
-    bc AS (SELECT bucket, COUNT(*) AS c FROM bucketed GROUP BY bucket)
-    SELECT CAST(SUM(c) AS BIGINT) AS n_features,
-           CAST(COUNT(*) AS BIGINT) AS n_buckets_used,
-           CAST(SUM(c - 1) AS BIGINT) AS n_collided_features,
-           CAST(MAX(c) AS BIGINT) AS max_bucket,
-           CAST((1000 * SUM(c - 1)) // SUM(c) AS BIGINT)
-               AS collision_permille
-    FROM bc
-    """,
-)
-def text_hash_collision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hashing-trick collision audit for a 2¹⁶-bucket feature space:
-    how many DISTINCT trigram features collide when hashed to 16 bits
-    (md5 prefix — the same feature hashing text_quality_classifier_
-    hashed trains over)?  The birthday arithmetic says ~38% of 2¹⁶
-    buckets collide at ~65k features; this measures the actual rate
-    on the corpus vocabulary, the number an ML engineer checks before
-    trusting hashed-feature model weights (collisions alias gradients
-    between unrelated n-grams).
-
-    Scale shape: trigram explode → DISTINCT (one combinable shuffle,
-    vocabulary-bounded ≪ corpus at web scale); bucket histogram is a
-    second combinable groupBy over ≤2¹⁶ keys; the report is one
-    5-column aggregate row.  No window, no BNLJ, no join at all."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    tri = (
-        docs.select(F.split(F.col("text"), X.TOKEN_RE).alias("toks"))
-        .select(
-            F.explode(
-                F.when(
-                    F.size("toks") >= 3,
-                    F.expr(
-                        "transform(sequence(1, size(toks) - 2),"
-                        " i -> concat_ws(' ', toks[i-1], toks[i], toks[i+1]))"
-                    ),
-                ).otherwise(F.array().cast("array<string>"))
-            ).alias("feat")
-        )
-        .distinct()
-    )
-    bc = (
-        tri.select(
-            F.expr("cast(conv(substring(md5(feat), 1, 4), 16, 10) as bigint)").alias(
-                "bucket"
-            )
-        )
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    return bc.agg(
-        F.sum("c").cast("bigint").alias("n_features"),
-        F.count(F.lit(1)).cast("bigint").alias("n_buckets_used"),
-        F.sum(F.col("c") - 1).cast("bigint").alias("n_collided_features"),
-        F.max("c").cast("bigint").alias("max_bucket"),
-        F.expr("cast(div(1000 * sum(c - 1), sum(c)) as bigint)").alias(
-            "collision_permille"
-        ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Round-6 batch 16: Wilson interval, runs test
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "events_wilson_ci_error_rate",
-    """
-    WITH daily AS (
-        SELECT datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS x,
-               COUNT(*) AS n,
-               SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS e
-        FROM events GROUP BY 1
-    )
-    SELECT CAST(x AS INTEGER) AS day_idx,
-           CAST(n AS BIGINT) AS n_events,
-           CAST(e AS BIGINT) AS n_errors,
-           CAST((1000 * e) // n AS BIGINT) AS rate_permille,
-           CAST(floor(1000000.0 *
-                ((CAST(e AS DOUBLE) / CAST(n AS DOUBLE)
-                  + (1.96 * 1.96) / (2.0 * CAST(n AS DOUBLE))
-                  - 1.96 * sqrt((CAST(e AS DOUBLE) / CAST(n AS DOUBLE)
-                       * (1.0 - CAST(e AS DOUBLE) / CAST(n AS DOUBLE))
-                       + (1.96 * 1.96) / (4.0 * CAST(n AS DOUBLE)))
-                      / CAST(n AS DOUBLE)))
-                 / (1.0 + (1.96 * 1.96) / CAST(n AS DOUBLE)))) AS BIGINT)
-               AS wilson_lo_micro,
-           CAST(floor(1000000.0 *
-                ((CAST(e AS DOUBLE) / CAST(n AS DOUBLE)
-                  + (1.96 * 1.96) / (2.0 * CAST(n AS DOUBLE))
-                  + 1.96 * sqrt((CAST(e AS DOUBLE) / CAST(n AS DOUBLE)
-                       * (1.0 - CAST(e AS DOUBLE) / CAST(n AS DOUBLE))
-                       + (1.96 * 1.96) / (4.0 * CAST(n AS DOUBLE)))
-                      / CAST(n AS DOUBLE)))
-                 / (1.0 + (1.96 * 1.96) / CAST(n AS DOUBLE)))) AS BIGINT)
-               AS wilson_hi_micro
-    FROM daily ORDER BY day_idx
-    """,
-)
-def events_wilson_ci_error_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-day error-rate with the WILSON 95% confidence interval —
-    the proportion CI that stays inside [0,1] and behaves at small n
-    (unlike the normal approximation), i.e. the correct error-budget
-    arithmetic for an SRE daily report: a day is statistically bad
-    only if its whole interval clears the SLO line.  Complements
-    stats_bootstrap_ci (resampled CI for MEANS) with the closed-form
-    CI for PROPORTIONS.
-
-    Float-parity note (the fleet's transcendental rule): the Wilson
-    bound uses ONLY +,−,×,÷,√ — every one IEEE-754 correctly rounded,
-    so identical integer inputs give bit-identical doubles on both
-    engines, and the final micro-unit floor transports exactly.  The
-    1.96 literal parses to the same double everywhere.  (ln/exp-based
-    intervals would NOT have this property; that is why the fleet has
-    no Poisson/Jeffreys query.)
-
-    Scale shape: ONE map-side-combinable groupBy(day) — the CI math
-    is a projection over the ≤|days| aggregate.  Nothing else."""
-    daily = (
-        load_testdata(spark, sf_dir, "events")
-        .select(
-            F.expr("datediff(cast(ts as date), date'2024-01-01')").alias("x"),
-            F.when(F.col("event_type") == "error", 1).otherwise(0).alias("is_err"),
-        )
-        .groupBy("x")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("is_err").alias("e"))
-    )
-    wilson = (
-        "((cast(e as double) / cast(n as double)"
-        " + (1.96 * 1.96) / (2.0D * cast(n as double))"
-        " {sign} 1.96 * sqrt((cast(e as double) / cast(n as double)"
-        " * (1.0D - cast(e as double) / cast(n as double))"
-        " + (1.96 * 1.96) / (4.0D * cast(n as double)))"
-        " / cast(n as double)))"
-        " / (1.0D + (1.96 * 1.96) / cast(n as double)))"
-    )
-    return daily.select(
-        F.col("x").cast("int").alias("day_idx"),
-        F.col("n").cast("bigint").alias("n_events"),
-        F.col("e").cast("bigint").alias("n_errors"),
-        F.expr("cast(div(1000 * e, n) as bigint)").alias("rate_permille"),
-        F.expr(
-            f"cast(floor(1000000.0D * {wilson.format(sign='-')}) as bigint)"
-        ).alias("wilson_lo_micro"),
-        F.expr(
-            f"cast(floor(1000000.0D * {wilson.format(sign='+')}) as bigint)"
-        ).alias("wilson_hi_micro"),
-    ).orderBy("day_idx")
-
-
-@register(
-    "stats_runs_test_daily",
-    """
-    WITH daily AS (
-        SELECT event_type,
-               datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS x,
-               COUNT(*) AS cnt
-        FROM events GROUP BY 1, 2
-    ),
-    dx AS (
-        SELECT event_type, x,
-               cnt - lag(cnt) OVER (PARTITION BY event_type ORDER BY x) AS d
-        FROM daily
-    ),
-    sgn AS (
-        SELECT event_type, x,
-               CASE WHEN d > 0 THEN 1 ELSE -1 END AS s
-        FROM dx WHERE d IS NOT NULL AND d <> 0
-    ),
-    flips AS (
-        SELECT event_type, s,
-               CASE WHEN s <> lag(s) OVER (PARTITION BY event_type ORDER BY x)
-                    THEN 1 ELSE 0 END AS flip
-        FROM sgn
-    ),
-    m AS (
-        SELECT event_type,
-               CAST(1 + SUM(CASE WHEN flip = 1 THEN 1 ELSE 0 END) AS BIGINT) AS runs,
-               CAST(SUM(CASE WHEN s = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_up,
-               CAST(SUM(CASE WHEN s = -1 THEN 1 ELSE 0 END) AS BIGINT) AS n_down
-        FROM flips GROUP BY 1
-    )
-    SELECT event_type, runs, n_up, n_down,
-           CASE WHEN n_up = 0 OR n_down = 0 OR n_up + n_down < 2
-                     OR (2.0 * n_up * n_down)
-                        * (2.0 * n_up * n_down - n_up - n_down) <= 0.0
-                THEN NULL
-                ELSE CAST(floor(1000000.0 *
-                     (CAST(runs AS DOUBLE)
-                      - (1.0 + (2.0 * n_up * n_down)
-                               / (CAST(n_up AS DOUBLE) + n_down)))
-                     / sqrt(((2.0 * n_up * n_down)
-                             * (2.0 * n_up * n_down - n_up - n_down))
-                            / ((CAST(n_up AS DOUBLE) + n_down)
-                               * (CAST(n_up AS DOUBLE) + n_down)
-                               * (CAST(n_up AS DOUBLE) + n_down - 1.0))))
-                     AS BIGINT)
-           END AS z_micro
-    FROM m ORDER BY event_type
-    """,
-)
-def stats_runs_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wald–Wolfowitz runs test on each event type's daily up/down
-    moves — are consecutive day-over-day changes independent, or does
-    the series trend/oscillate?  Too FEW runs ⇒ momentum (a level
-    shift the CUSUM will localize); too MANY ⇒ oscillation (e.g. a
-    batch job alternating load).  Zero deltas are dropped (standard
-    treatment); z is the normal approximation in micro-units.
-
-    Float parity: like the Wilson query, the statistic touches only
-    IEEE-correctly-rounded ops (×,÷,+,−,√) on integer inputs —
-    bit-identical across engines; degenerate sign sequences yield
-    NULL on both sides.
-
-    Scale shape: one combinable groupBy(type, day); the delta and
-    flip passes are type-PARTITIONED windows over the bounded daily
-    grid; the test statistic is a projection over ≤|types| aggregate
-    rows.  No global window, no BNLJ."""
-    daily = (
-        load_testdata(spark, sf_dir, "events")
-        .select(
-            "event_type",
-            F.expr("datediff(cast(ts as date), date'2024-01-01')").alias("x"),
-        )
-        .groupBy("event_type", "x")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    wd = Window.partitionBy("event_type").orderBy("x")
-    sgn = (
-        daily.select(
-            "event_type", "x", (F.col("cnt") - F.lag("cnt").over(wd)).alias("d")
-        )
-        .filter(F.col("d").isNotNull() & (F.col("d") != 0))
-        .select(
-            "event_type",
-            "x",
-            F.when(F.col("d") > 0, 1).otherwise(-1).alias("s"),
-        )
-    )
-    flips = sgn.select(
-        "event_type",
-        "s",
-        F.when(F.col("s") != F.lag("s").over(wd), 1).otherwise(0).alias("flip"),
-    )
-    m = flips.groupBy("event_type").agg(
-        (1 + F.sum(F.when(F.col("flip") == 1, 1).otherwise(0)))
-        .cast("bigint")
-        .alias("runs"),
-        F.sum(F.when(F.col("s") == 1, 1).otherwise(0)).cast("bigint").alias("n_up"),
-        F.sum(F.when(F.col("s") == -1, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_down"),
-    )
-    return m.select(
-        "event_type",
-        "runs",
-        "n_up",
-        "n_down",
-        F.expr(
-            "case when n_up = 0 or n_down = 0 or n_up + n_down < 2"
-            " or (2.0D * n_up * n_down)"
-            " * (2.0D * n_up * n_down - n_up - n_down) <= 0.0D"
-            " then null"
-            " else cast(floor(1000000.0D *"
-            " (cast(runs as double)"
-            " - (1.0D + (2.0D * n_up * n_down)"
-            " / (cast(n_up as double) + n_down)))"
-            " / sqrt(((2.0D * n_up * n_down)"
-            " * (2.0D * n_up * n_down - n_up - n_down))"
-            " / ((cast(n_up as double) + n_down)"
-            " * (cast(n_up as double) + n_down)"
-            " * (cast(n_up as double) + n_down - 1.0D))))"
-            " as bigint) end"
-        ).alias("z_micro"),
-    ).orderBy("event_type")
-
-
 # ---------------------------------------------------------------------------
 # Round-6 batch 17: Good-Turing unseen mass, weekly type-mix drift
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "vocab_good_turing_unseen_mass",
-    r"""
-    WITH tok AS (
-        SELECT unnest(string_split_regex(text, '\s+')) AS tok FROM documents
-    ),
-    tc AS (SELECT tok, COUNT(*) AS c FROM tok GROUP BY tok)
-    SELECT CAST(SUM(c) AS BIGINT) AS n_tokens,
-           CAST(COUNT(*) AS BIGINT) AS vocab_size,
-           CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax,
-           CAST(SUM(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_dis_legomena,
-           CAST((1000 * SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END)) // SUM(c)
-               AS BIGINT) AS unseen_mass_permille,
-           CAST((1000 * SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END)) // COUNT(*)
-               AS BIGINT) AS hapax_vocab_permille
-    FROM tc
-    """,
-)
-def vocab_good_turing_unseen_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Good–Turing unseen-probability-mass estimate: P(next token is
-    NOVEL) ≈ N₁/N (hapax count over token count) — the language-model
-    smoothing number that says how much probability a model trained
-    on this corpus must reserve for words it has never seen, and the
-    leading indicator for 'will more data still help the tokenizer'
-    (falling hapax share = saturating vocabulary — the same signal
-    vocab_heaps_growth reads as a curve, here as the classical point
-    estimate).  Dis-legomena (c=2) ride along for the GT confidence
-    heuristic (N₁ should ≈ 2·N₂ under Zipf).
-
-    Scale shape: explode → ONE map-side-combinable groupBy(token),
-    then a single global aggregate projection — no join, no window,
-    no broadcast, nothing else.  The vocabulary relation is the same
-    one every tokenizer-build query already pays for."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    tc = (
-        docs.select(F.explode(X.tokens("text")).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    return tc.agg(
-        F.sum("c").cast("bigint").alias("n_tokens"),
-        F.count(F.lit(1)).cast("bigint").alias("vocab_size"),
-        F.sum(F.when(F.col("c") == 1, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_hapax"),
-        F.sum(F.when(F.col("c") == 2, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_dis_legomena"),
-        F.expr(
-            "cast(div(1000 * sum(case when c = 1 then 1 else 0 end), sum(c))"
-            " as bigint)"
-        ).alias("unseen_mass_permille"),
-        F.expr(
-            "cast(div(1000 * sum(case when c = 1 then 1 else 0 end), count(1))"
-            " as bigint)"
-        ).alias("hapax_vocab_permille"),
-    )
 
 
 @register(
@@ -16367,7 +12054,7 @@ def dedup_token_savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     does keeping one representative per verified near-dup cluster
     save?  Composes the production clustering path (banded MinHash
     candidates → exact-Jaccard verification ≥ 0.3 → connected
-    components, all identical to ``dedup_clusters_minhash``) with the
+    components) with the
     min-id representative policy (the CC label IS the cluster's min
     doc_id) and a token-mass rollup — one row: docs, clusters,
     removed docs, token totals, and the permille of corpus tokens a
@@ -16512,72 +12199,6 @@ def events_time_to_convert_quantiles(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-@register(
-    "events_new_vs_returning_daily",
-    """
-    WITH ud AS (
-        SELECT DISTINCT user_id,
-               datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS x
-        FROM events
-    ),
-    first_day AS (SELECT user_id, MIN(x) AS fd FROM ud GROUP BY user_id)
-    SELECT CAST(ud.x AS INTEGER) AS day_idx,
-           CAST(COUNT(*) AS BIGINT) AS active_users,
-           CAST(SUM(CASE WHEN f.fd = ud.x THEN 1 ELSE 0 END) AS BIGINT)
-               AS new_users,
-           CAST(SUM(CASE WHEN f.fd < ud.x THEN 1 ELSE 0 END) AS BIGINT)
-               AS returning_users,
-           CAST((1000 * SUM(CASE WHEN f.fd = ud.x THEN 1 ELSE 0 END))
-                // COUNT(*) AS BIGINT) AS new_share_permille
-    FROM ud JOIN first_day f ON f.user_id = ud.user_id
-    GROUP BY ud.x ORDER BY day_idx
-    """,
-)
-def events_new_vs_returning_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily active users split into NEW (first-ever active day) vs
-    RETURNING — the growth-accounting decomposition behind every DAU
-    chart: flat DAU with a rising new-share means churn is eating
-    acquisition; the cohort-retention matrix
-    (events_cohort_retention) explains WHERE the returners come from,
-    this gives the daily topline split.
-
-    Scale shape: one groupBy(user, day) dedup, one combinable
-    groupBy(user) MIN for first-day, one key equi-join back, one
-    groupBy(day) — all natural-key shuffles, no window, no BNLJ."""
-    ud = (
-        load_testdata(spark, sf_dir, "events")
-        .select(
-            "user_id",
-            F.expr("datediff(cast(ts as date), date'2024-01-01')").alias("x"),
-        )
-        .distinct()
-    )
-    first_day = ud.groupBy("user_id").agg(F.min("x").alias("fd"))
-    return (
-        ud.join(first_day, "user_id")
-        .groupBy("x")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("active_users"),
-            F.sum(F.when(F.col("fd") == F.col("x"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("new_users"),
-            F.sum(F.when(F.col("fd") < F.col("x"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("returning_users"),
-        )
-        .select(
-            F.col("x").cast("int").alias("day_idx"),
-            "active_users",
-            "new_users",
-            "returning_users",
-            F.expr("cast(div(1000 * new_users, active_users) as bigint)").alias(
-                "new_share_permille"
-            ),
-        )
-        .orderBy("day_idx")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Round-6 batch 20: hour-of-week heatmap, trailing-7d revenue MA
 # ---------------------------------------------------------------------------
@@ -16632,73 +12253,6 @@ def events_hour_weekday_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .orderBy("weekday", "hour_utc")
-    )
-
-
-@register(
-    "orders_daily_revenue_7d_ma",
-    """
-    WITH daily AS (
-        SELECT datediff('day', DATE '1992-01-01', o_orderdate) AS x,
-               SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS rev_c
-        FROM orders GROUP BY 1
-    ),
-    contrib AS (
-        SELECT d AS x, rev_c
-        FROM daily CROSS JOIN unnest(generate_series(daily.x, daily.x + 6)) t(d)
-    ),
-    ma AS (
-        SELECT x, SUM(rev_c) AS s, COUNT(*) AS k
-        FROM contrib GROUP BY x
-    )
-    SELECT CAST(d.x AS INTEGER) AS day_idx,
-           CAST(d.rev_c AS BIGINT) AS revenue_cents,
-           CAST(m.s // m.k AS BIGINT) AS ma7_cents,
-           CAST(m.k AS INTEGER) AS window_days
-    FROM daily d JOIN ma m ON m.x = d.x
-    ORDER BY day_idx
-    """,
-)
-def orders_daily_revenue_7d_ma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily revenue with its trailing-7-day moving average — the
-    smoothed topline read alongside the raw series (the MA crossing
-    under the daily line flags a slowdown earlier than eyeballing
-    noise).  Partial windows at the series head average over the
-    days actually present (window_days reports the divisor).
-
-    Scale shape: the SCALABLE moving-average spelling — each daily
-    aggregate row EMITS its 7 trailing membership days (constant ×7
-    map-side sequence-explode of the ALREADY-collapsed daily
-    relation, the events_dau_wau_stickiness trick), then one
-    combinable groupBy(day) — instead of an unpartitioned range
-    window over the series (the single-task shape the fleet bans).
-    At 100 TB the daily relation is |days| rows either way; the same
-    spelling keeps working when the grain drops to minutes."""
-    daily = (
-        load_testdata(spark, sf_dir, "orders")
-        .select(
-            F.expr("datediff(o_orderdate, date'1992-01-01')").alias("x"),
-            F.expr("cast(round(o_totalprice * 100) as bigint)").alias("rc"),
-        )
-        .groupBy("x")
-        .agg(F.sum("rc").alias("rev_c"))
-    )
-    contrib = daily.select(
-        F.explode(F.sequence(F.col("x"), F.col("x") + 6)).alias("x"),
-        "rev_c",
-    )
-    ma = contrib.groupBy("x").agg(
-        F.sum("rev_c").alias("s"), F.count(F.lit(1)).alias("k")
-    )
-    return (
-        daily.join(ma, "x")
-        .select(
-            F.col("x").cast("int").alias("day_idx"),
-            F.col("rev_c").cast("bigint").alias("revenue_cents"),
-            F.expr("cast(div(s, k) as bigint)").alias("ma7_cents"),
-            F.col("k").cast("int").alias("window_days"),
-        )
-        .orderBy("day_idx")
     )
 
 
@@ -16884,8 +12438,7 @@ def dedup_lsh_precision_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the standard banded candidate join (never
     all-pairs), verification re-reads only candidate pairs' persisted
-    shingle arrays (|pairs| ≪ N — the dedup_clusters_minhash
-    contract), and the report is one ≤2-row groupBy.  No BNLJ, no
+    shingle arrays (|pairs| ≪ N), and the report is one ≤2-row groupBy.  No BNLJ, no
     window."""
     corpus = _dedup_corpus(spark, sf_dir)
     bands = D.minhash_bands(corpus, "doc_id", "text", n_hashes=8, band_size=4)

@@ -48,6 +48,8 @@ def stream_incremental_merge(
     only the partitions it touches (``VersionedTable.merge``).  The
     merge is idempotent on the keys, so a batch replayed after a crash
     between its commit and the checkpoint converges to the same state.
+    A micro-batch holding two rows for one key fails the drain (the
+    merge window's H4 check) and commits nothing.
 
     ``trigger(availableNow=True)`` processes the backlog and stops —
     the streaming equivalent of one reference pipeline run; schedule it
@@ -59,8 +61,7 @@ def stream_incremental_merge(
         if batch_df.isEmpty():
             return
         table = VersionedTable(batch_df.sparkSession, target_path, partition_by)
-        # dedup within the micro-batch so MERGE keys are unique (H4)
-        table.merge(batch_df.dropDuplicates(keys), keys)
+        table.merge(batch_df, keys)
 
     (
         stream.writeStream.foreachBatch(upsert_batch)

@@ -251,61 +251,6 @@ def test_multimodal_extract_features(spark):
     assert out["width"] == 11 % 640 and out["height"] == (7 * 11) % 480
 
 
-def test_embedding_lsh_vs_blocked_brute(spark, sf_smoke):
-    """The UNBLOCKED all-pairs cosine join (O(N²) — demoted from the
-    registered query surface per VERDICT r1 item 6) survives here at
-    sf0.001 as the ground truth that cross-validates both scale tiers:
-
-    - the registered blocked brute force (`dedup_embedding_cosine`,
-      equi-join on vec_id//512) must equal ground truth restricted to
-      within-block pairs — i.e. it trades COVERAGE, never correctness;
-    - the sign-LSH tier's candidate pairs must be a subset of the
-      all-pairs universe with recall > 0 on this corpus (recall < 1 is
-      by design; exactness of the scores is oracle-checked separately).
-    """
-    import __spark_entry__ as entry_mod
-
-    from sales_azure_data_engineer_project_spark.io import load_testdata
-
-    emb = S.with_norm(load_testdata(spark, sf_smoke, "embeddings"))
-    a = emb.select(
-        F.col("vec_id").alias("id_a"), F.col("_v").alias("va"), F.col("_norm").alias("na")
-    )
-    b = emb.select(
-        F.col("vec_id").alias("id_b"), F.col("_v").alias("vb"), F.col("_norm").alias("nb")
-    )
-    cos = S.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-
-    def all_pairs(threshold: float) -> set[tuple[int, int]]:
-        return {
-            (r["id_a"], r["id_b"])
-            for r in a.join(b, F.col("id_a") < F.col("id_b"))
-            .filter(cos >= threshold)
-            .select("id_a", "id_b")
-            .collect()
-        }
-
-    qs = entry_mod.queries()
-    blocked = {
-        (r["id_a"], r["id_b"])
-        for r in qs["dedup_embedding_cosine"](spark, sf_smoke).collect()
-    }
-    within_block_truth = {
-        (x, y) for x, y in all_pairs(0.45) if x // 512 == y // 512
-    }
-    assert blocked == within_block_truth
-
-    # the LSH tier runs at its own threshold (0.4)
-    truth_lsh = all_pairs(0.4)
-    lsh = {
-        (r["id_a"], r["id_b"])
-        for r in qs["dedup_embedding_lsh"](spark, sf_smoke).collect()
-    }
-    assert lsh <= truth_lsh
-    if truth_lsh:
-        assert len(lsh) > 0
-
-
 def test_arrow_assignment_matches_sql_fold(spark, sf_smoke):
     """Differential: the Arrow/numpy cluster assignment must agree with
     the interpreted SQL-fold assignment everywhere the argmin is
@@ -351,19 +296,6 @@ def test_training_prep_funnel_invariants(spark, sf_smoke):
     assert docs[-1] > 0
 
 
-def test_token_count_invariants(spark, sf_smoke):
-    """BPE-ish pre-tokenization splits at least as fine as whitespace:
-    bpe_tokens >= ws_tokens for every doc, and the density ratio is
-    consistent with the counts it was derived from."""
-    import __spark_entry__ as entry_mod
-
-    rows = entry_mod.queries()["text_token_counts"](spark, sf_smoke).collect()
-    assert rows
-    for r in rows:
-        assert r["bpe_tokens"] >= r["ws_tokens"] > 0
-        assert r["chars_per_bpe_milli"] == 1000 * r["n_chars"] // r["bpe_tokens"]
-
-
 def test_decontaminate_flags_planted_eval_clones(spark, sf_smoke):
     """Every planted near-dup clone of an eval doc (doc_id%10==0 →
     clone at +100000) must be flagged as contaminated — the clone
@@ -391,35 +323,6 @@ def test_decontaminate_flags_planted_eval_clones(spark, sf_smoke):
         d for d in corpus_ids if d >= 200000 and (d - 200000) % 10 == 0
     }
     assert exact_eval_copies <= flagged
-
-
-def test_pack_sequences_invariants(spark, sf_smoke):
-    """Packing arithmetic: sequences = ceil(tokens/512) per shard, fill
-    can never exceed 1000 permille, and straddling docs are bounded by
-    doc count."""
-    import __spark_entry__ as entry_mod
-
-    rows = entry_mod.queries()["pipeline_pack_sequences"](spark, sf_smoke).collect()
-    assert rows, "expected shards"
-    for r in rows:
-        assert r["n_sequences"] == -(-r["n_tokens"] // 512)
-        assert 0 < r["fill_permille"] <= 1000
-        assert 0 <= r["n_straddling"] <= r["n_docs"]
-
-
-def test_mixture_weighted_tracks_targets(spark, sf_smoke):
-    """Deterministic hash-Bernoulli mixture: kept ⊆ total, and realized
-    rates track targets (loose bound — smoke corpus has ~100 docs per
-    source, so sampling noise is material)."""
-    import __spark_entry__ as entry_mod
-
-    rows = entry_mod.queries()["sample_mixture_weighted"](spark, sf_smoke).collect()
-    assert [r["source"] for r in rows] == [0, 1, 2, 3, 4]
-    for r in rows:
-        assert 0 <= r["n_kept"] <= r["n_total"]
-        assert abs(r["realized_permille"] - r["target_permille"]) <= 250
-    # the full-rate source keeps everything
-    assert rows[0]["n_kept"] == rows[0]["n_total"]
 
 
 def test_incremental_matches_planted_copies(spark, sf_smoke):
@@ -537,29 +440,6 @@ def test_exact_substring_dedup_removes_planted_copies(spark, sf_smoke):
         assert r["n_remove_intervals"] == 1
         assert r["tokens_removed"] == r["tokens_total"]
         assert r["kept_permille"] == 0
-
-
-def test_multiprobe_dominates_single_probe(spark, sf_smoke):
-    """The 1-bit-flip probe set is a strict superset of the single
-    bucket, so per query the multiprobe rank-1 cosine can never be
-    worse than single-probe's — and some query should see strictly
-    more candidates on this corpus."""
-    import __spark_entry__ as entry_mod
-
-    qs = entry_mod.queries()
-    sp = {
-        r["query_id"]: r["cos_sim"]
-        for r in qs["similarity_ann_sign_lsh"](spark, sf_smoke).collect()
-        if r["rk"] == 1
-    }
-    mp_rows = qs["similarity_ann_lsh_multiprobe"](spark, sf_smoke).collect()
-    mp = {r["query_id"]: r["cos_sim"] for r in mp_rows if r["rk"] == 1}
-    assert set(sp) <= set(mp), "multiprobe must serve every single-probe query"
-    for qid, c in sp.items():
-        assert mp[qid] >= c - 1e-9
-    assert len(mp_rows) >= sum(
-        1 for r in qs["similarity_ann_sign_lsh"](spark, sf_smoke).collect()
-    )
 
 
 def test_lsh_recall_exact_matches_oracle(spark, sf_smoke):
@@ -908,26 +788,6 @@ def test_bottomk_estimates_are_sane(spark, sf_smoke):
             assert r[c] in cents_by_flag[flag], (flag, c, r[c])
 
 
-def test_global_shuffle_partitions_and_balances(spark, sf_smoke):
-    """Shards partition the corpus (Σ n_docs == N), shard ids live in
-    [0, 16), and the report is deterministic across reruns (content
-    hashing, not rand())."""
-    import __spark_entry__ as entry_mod
-    from sales_azure_data_engineer_project_spark.io import load_testdata
-
-    fn = entry_mod.queries()["pipeline_global_shuffle"]
-    rows1 = [tuple(r) for r in fn(spark, sf_smoke).collect()]
-    rows2 = [tuple(r) for r in fn(spark, sf_smoke).collect()]
-    assert rows1 == rows2
-
-    n = load_testdata(spark, sf_smoke, "documents").count()
-    assert sum(r[1] for r in rows1) == n
-    assert all(0 <= r[0] < 16 for r in rows1)
-    # md5 is uniform: no shard should be empty or >3x fair share even
-    # at the smoke SF
-    assert all(0 < r[1] < 3 * (n / 16) + 16 for r in rows1)
-
-
 def test_curriculum_phases_partition_and_escalate(spark, sf_smoke):
     """Phases 1..4 partition the tokenized docs and mean difficulty is
     strictly ordered phase1 < ... < phase4 (structural: phases are
@@ -1050,126 +910,6 @@ def test_unimax_closed_form_equals_sequential_waterfill(spark, sf_smoke):
 # ---------------------------------------------------------------------------
 
 
-def test_hard_negatives_labels_differ_and_bounded_by_unrestricted(spark, sf_smoke):
-    """Every mined negative carries a label different from its query's,
-    ranks are consecutive with non-increasing similarity, and the top
-    hard negative can never be MORE similar than the unrestricted
-    top-1 neighbor (the label filter only removes candidates)."""
-    from sales_azure_data_engineer_project_spark.queries_extensions import (
-        similarity_cosine_topk,
-        similarity_hard_negatives,
-    )
-
-    hard = similarity_hard_negatives(spark, sf_smoke).collect()
-    assert hard
-    by_q: dict = {}
-    for r in hard:
-        assert r["neighbor_label"] != r["query_label"]
-        by_q.setdefault(r["query_id"], []).append(r)
-    for q, rows in by_q.items():
-        rows.sort(key=lambda r: r["rk"])
-        assert [r["rk"] for r in rows] == list(range(1, len(rows) + 1))
-        sims = [r["cos_sim"] for r in rows]
-        assert sims == sorted(sims, reverse=True)
-    top_any = {
-        r["query_id"]: r["cos_sim"]
-        for r in similarity_cosine_topk(spark, sf_smoke).collect()
-        if r["rk"] == 1
-    }
-    for q, rows in by_q.items():
-        assert rows[0]["cos_sim"] <= top_any[q] + 1e-9
-
-
-def test_k_anonymity_planted_small_groups(spark):
-    """A fixture with one 3-record QI class and one singleton: k=2
-    flags exactly the singleton; k=5 flags all 4 records."""
-    import os
-    import tempfile
-
-    from sales_azure_data_engineer_project_spark.queries_extensions import (
-        quality_k_anonymity,
-    )
-
-    rows = [
-        # three customers sharing (nation 1, SEG_A, same $1000 band)
-        (1, "a", 1, 1500.00, "SEG_A"),
-        (2, "b", 1, 1600.00, "SEG_A"),
-        (3, "c", 1, 1999.99, "SEG_A"),
-        # one re-identifiable singleton
-        (4, "d", 2, 8000.00, "SEG_B"),
-    ]
-    with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(rows, TESTDATA_SCHEMAS["customer"]).write.parquet(
-            os.path.join(d, "customer.parquet")
-        )
-        out = {r["k"]: r for r in quality_k_anonymity(spark, d).collect()}
-    assert out[2]["n_groups"] == 2 and out[2]["min_group_size"] == 1
-    assert out[2]["groups_below_k"] == 1 and out[2]["records_below_k"] == 1
-    assert out[2]["at_risk_permille"] == 250
-    assert out[5]["groups_below_k"] == 2 and out[5]["records_below_k"] == 4
-    assert out[10]["records_below_k"] == 4
-
-
-def test_temperature_mixture_exact_isqrt_and_flattening(spark, sf_smoke):
-    """The weight must equal math.isqrt(n_tokens) exactly (the ±1
-    correction defends the libm sqrt), and temperature scaling must
-    flatten the mixture: the temp share spread across sources is no
-    wider than the proportional spread."""
-    import math
-
-    from sales_azure_data_engineer_project_spark.queries_extensions import (
-        sample_temperature_mixture,
-    )
-
-    rows = sample_temperature_mixture(spark, sf_smoke).collect()
-    assert len(rows) == 20
-    for r in rows:
-        assert r["wt"] == math.isqrt(r["n_tokens"])
-    prop = [r["prop_permille"] for r in rows]
-    temp = [r["temp_permille"] for r in rows]
-    assert max(temp) - min(temp) <= max(prop) - min(prop)
-
-
-def test_sequence_packing_python_differential(spark, sf_smoke):
-    """Full Python replay of ``pipeline_pack_sequences`` on the same
-    corpus: shard by doc_id mod 8, concat in doc_id order, chop at 512
-    — every reported number must match exactly."""
-    import re
-
-    from sales_azure_data_engineer_project_spark.io import load_testdata
-    from sales_azure_data_engineer_project_spark.queries_extensions import (
-        pipeline_pack_sequences,
-    )
-
-    docs = load_testdata(spark, sf_smoke, "documents").select("doc_id", "text").collect()
-    per_shard: dict = {}
-    for r in docs:
-        n_tok = len(re.split(r"\s+", r["text"]))
-        per_shard.setdefault(r["doc_id"] % 8, []).append((r["doc_id"], n_tok))
-    expect = {}
-    for shard, items in per_shard.items():
-        items.sort()
-        cum = 0
-        straddling = 0
-        for _, n in items:
-            start, end = cum, cum + n
-            if n > 0 and start // 512 != (end - 1) // 512:
-                straddling += 1
-            cum = end
-        n_seqs = (cum + 511) // 512
-        expect[shard] = (
-            len(items), cum, n_seqs, straddling, 1000 * cum // (512 * n_seqs)
-        )
-    got = {
-        r["shard"]: (
-            r["n_docs"], r["n_tokens"], r["n_sequences"], r["n_straddling"],
-            r["fill_permille"],
-        )
-        for r in pipeline_pack_sequences(spark, sf_smoke).collect()
-    }
-    assert got == expect
-
-
 def test_bm25_planted_relevant_doc_ranks_first(spark):
     """A doc stuffed with the query's rare terms must outrank docs that
     share only a corpus-universal term (df == N ⇒ idf 0 ⇒ the
@@ -1198,34 +938,6 @@ def test_bm25_planted_relevant_doc_ranks_first(spark):
     for r in q0:
         if r["doc_id"] == 10:
             assert r["score_milli"] == 0
-
-
-def test_tokenizer_fertility_hand_counted(spark):
-    """GPT-2 piece counts on hand-tokenizable strings: contraction
-    splits and punctuation runs raise fertility above 1000 exactly as
-    the regex defines."""
-    import os
-    import tempfile
-
-    from sales_azure_data_engineer_project_spark.queries_extensions import (
-        text_tokenizer_fertility,
-    )
-
-    # 'hello world' -> ['hello', ' world'] (2 pieces, 2 ws tokens)
-    # "don't stop!" -> ['don', "'t", ' stop', '!'] (4 pieces, 2 ws tokens)
-    rows = [
-        (1, "hello world", "aa", "s", 11),
-        (2, "don't stop!", "bb", "s", 11),
-    ]
-    with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(
-            rows, ["doc_id", "text", "lang", "source", "n_chars"]
-        ).write.parquet(os.path.join(d, "documents.parquet"))
-        out = {r["lang"]: r for r in text_tokenizer_fertility(spark, d).collect()}
-    assert out["aa"]["bpe_tokens"] == 2 and out["aa"]["ws_tokens"] == 2
-    assert out["aa"]["fertility_milli"] == 1000
-    assert out["bb"]["bpe_tokens"] == 4 and out["bb"]["ws_tokens"] == 2
-    assert out["bb"]["fertility_milli"] == 2000
 
 
 def test_knn_label_noise_flags_planted_mislabel(spark):
@@ -1356,31 +1068,6 @@ def test_bootstrap_ci_python_differential(spark):
             for r in stats_bootstrap_ci(spark, d).collect()
         }
     assert got == expect
-
-
-def test_metadata_consistency_flags_planted_drift(spark):
-    """A doc whose stored n_chars disagrees with its payload by 7 must
-    be the only mismatch, with the drift magnitude reported."""
-    import os
-    import tempfile
-
-    from sales_azure_data_engineer_project_spark.queries_extensions import (
-        quality_metadata_consistency,
-    )
-
-    rows = [
-        (1, "hello world", "en", "sA", 11),
-        (2, "goodbye", "en", "sA", 14),   # planted: off by 7
-        (3, "ok then", "en", "sB", 7),
-    ]
-    with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(
-            rows, ["doc_id", "text", "lang", "source", "n_chars"]
-        ).write.parquet(os.path.join(d, "documents.parquet"))
-        out = {r["source"]: r for r in quality_metadata_consistency(spark, d).collect()}
-    assert out["sA"]["n_mismatch"] == 1 and out["sA"]["max_abs_drift"] == 7
-    assert out["sA"]["mismatch_permille"] == 500
-    assert out["sB"]["n_mismatch"] == 0 and out["sB"]["max_abs_drift"] == 0
 
 
 def test_hybrid_rrf_fuses_both_tiers(spark, sf_smoke):
@@ -1646,41 +1333,6 @@ def test_chi2_independence_differential(spark, sf_smoke):
         assert r["contrib_micro"] == want
 
 
-def test_decayed_engagement_differential(spark, sf_smoke):
-    """Dyadic decay sums recomputed exactly in Python."""
-    import os
-
-    import pyarrow.parquet as pq
-    from sales_azure_data_engineer_project_spark import queries_core as Q
-    from sales_azure_data_engineer_project_spark import queries_extensions  # noqa: F401 (registers)
-
-    got = {
-        r["event_type"]: r
-        for r in Q.QUERIES["events_decayed_engagement"](spark, sf_smoke).collect()
-    }
-    t = pq.read_table(
-        os.path.join(sf_smoke, "events.parquet"),
-        columns=["event_type", "value", "ts"],
-    ).to_pandas()
-    days = t["ts"].dt.normalize()
-    mx = days.max()
-    age = (mx - days).dt.days.clip(upper=210)
-    vm = (t["value"] * 1000).round().astype(int)
-    w7 = vm // (2 ** (age // 7))
-    w30 = vm // (2 ** (age // 30))
-    agg = {}
-    for et, a, b in zip(t["event_type"], w7, w30):
-        d = agg.setdefault(et, [0, 0, 0, 0])
-        d[0] += 1
-        d[1] += int(a)
-        d[2] += int(b)
-        d[3] += 1 if a > 0 else 0
-    assert set(agg) == set(got)
-    for et, (ne, s7, s30, alive) in agg.items():
-        r = got[et]
-        assert (r["n_events"], r["decayed_7d_milli"], r["decayed_30d_milli"], r["n_alive_7d"]) == (ne, s7, s30, alive)
-
-
 def test_mannwhitney_auc_differential(spark, sf_smoke):
     """Doubled midranks, U, and AUC recomputed exactly in Python."""
     import os
@@ -1862,103 +1514,6 @@ def test_benford_deviation_differential(spark, sf_smoke):
         assert r["dev_milli"] == (1000 * c) // n - QE._BENFORD_MILLI[d]
 
 
-def test_token_burstiness_differential(spark, sf_smoke):
-    """Fano factors recomputed from dense per-doc count vectors
-    (zeros included) — proves the common-denominator shortcut."""
-    import os
-    import re
-    from collections import Counter, defaultdict
-
-    import pyarrow.parquet as pq
-    from sales_azure_data_engineer_project_spark import queries_core as Q
-    from sales_azure_data_engineer_project_spark import queries_extensions  # noqa: F401 (registers)
-    from sales_azure_data_engineer_project_spark.operators.text import TOKEN_RE
-
-    rows = Q.QUERIES["text_token_burstiness"](spark, sf_smoke).collect()
-    t = pq.read_table(
-        os.path.join(sf_smoke, "documents.parquet"), columns=["doc_id", "text"]
-    ).to_pandas()
-    per_tok: dict = defaultdict(list)
-    for _, (doc, text) in enumerate(zip(t["doc_id"], t["text"])):
-        for tok, x in Counter(re.split(TOKEN_RE, text)).items():
-            per_tok[tok].append(x)
-    d = len(t)
-    for r in rows:
-        xs = per_tok[r["tok"]]
-        total, sumsq = sum(xs), sum(x * x for x in xs)
-        assert r["total"] == total and r["docfreq"] == len(xs)
-        # dense check: mean/var over ALL docs including zeros
-        mean_num, mean_den = total, d
-        var_num = d * sumsq - total * total  # d² · population variance
-        assert r["fano_milli"] == (1000 * var_num) // (total * d)
-        # glue words ~Poisson: at least one token should exceed fano 1.0
-    assert any(r["fano_milli"] > 1000 for r in rows), "no bursty token found"
-
-
-def test_kappa_differential(spark, sf_smoke):
-    """Confusion matrix and κ recomputed exactly in Python."""
-    import os
-    import re
-    from collections import Counter
-
-    import pyarrow.parquet as pq
-    from sales_azure_data_engineer_project_spark import queries_core as Q
-    from sales_azure_data_engineer_project_spark import queries_extensions  # noqa: F401 (registers)
-    from sales_azure_data_engineer_project_spark.operators.text import (
-        EN_STOPWORDS,
-        TOKEN_RE,
-    )
-
-    r = Q.QUERIES["quality_rater_agreement_kappa"](spark, sf_smoke).collect()[0]
-    t = pq.read_table(
-        os.path.join(sf_smoke, "documents.parquet"),
-        columns=["doc_id", "lang", "text"],
-    ).to_pandas()
-    sw = set(EN_STOPWORDS)
-    cm = Counter()
-    for lang, text in zip(t["lang"], t["text"]):
-        toks = re.split(TOKEN_RE, text)
-        a = 1 if lang == "en" else 0
-        b = 1 if sum(tok in sw for tok in toks) * 20 >= len(toks) else 0
-        cm[(a, b)] += 1
-    n = len(t)
-    a_, b_, c_, d_ = cm[(1, 1)], cm[(1, 0)], cm[(0, 1)], cm[(0, 0)]
-    assert (r["n_docs"], r["both_en"], r["meta_only"], r["pred_only"], r["both_other"]) == (n, a_, b_, c_, d_)
-    pe_n2 = (a_ + b_) * (a_ + c_) + (d_ + c_) * (d_ + b_)
-    assert r["po_milli"] == (1000 * (a_ + d_)) // n
-    assert r["pe_milli"] == (1000 * pe_n2) // (n * n)
-
-    def tdiv(x: int, y: int) -> int:
-        # both engines' integer div truncates toward zero (κ can be
-        # negative — Python's // floors, so mirror truncation here)
-        q = abs(x) // abs(y)
-        return q if (x >= 0) == (y >= 0) else -q
-
-    assert r["kappa_micro"] == tdiv(1_000_000 * (n * (a_ + d_) - pe_n2), n * n - pe_n2)
-    assert -1_000_000 <= r["kappa_micro"] <= 1_000_000
-
-
-def test_cube_margins_consistent(spark, sf_smoke):
-    """All four grouping sets must be internally consistent: cell rows
-    sum to each margin and to the grand total."""
-    from sales_azure_data_engineer_project_spark import queries_core as Q
-    from sales_azure_data_engineer_project_spark import queries_extensions  # noqa: F401 (registers)
-
-    rows = Q.QUERIES["cube_revenue_by_flag_status"](spark, sf_smoke).collect()
-    cells = [r for r in rows if r["grouping_id"] == 0]
-    by_flag = {r["l_returnflag"]: r for r in rows if r["grouping_id"] == 1}
-    by_stat = {r["l_linestatus"]: r for r in rows if r["grouping_id"] == 2}
-    grand = [r for r in rows if r["grouping_id"] == 3]
-    assert len(grand) == 1
-    for margin, key in ((by_flag, "l_returnflag"), (by_stat, "l_linestatus")):
-        for val, m in margin.items():
-            sub = [c for c in cells if c[key] == val]
-            assert m["n_items"] == sum(c["n_items"] for c in sub)
-            assert m["revenue_centi"] == sum(c["revenue_centi"] for c in sub)
-    assert grand[0]["n_items"] == sum(c["n_items"] for c in cells)
-    assert grand[0]["revenue_centi"] == sum(c["revenue_centi"] for c in cells)
-
-
 def test_mutual_knn_reciprocity_invariants(spark, sf_smoke):
     """Every pair must be reciprocal within rank 3, symmetric-unique,
     within-cluster, and cosine-consistent with a direct recompute."""
@@ -2070,69 +1625,6 @@ def test_maxsim_differential(spark, sf_smoke):
             [s for (q_, c_), s in want.items() if q_ == qd], reverse=True
         )[:5]
         assert scores == top5
-
-
-def test_dataset_card_differential(spark, sf_smoke):
-    import hashlib
-    import os
-    import re
-
-    import pyarrow.parquet as pq
-    from sales_azure_data_engineer_project_spark import queries_core as Q
-    from sales_azure_data_engineer_project_spark import queries_extensions  # noqa: F401 (registers)
-    from sales_azure_data_engineer_project_spark.operators.text import TOKEN_RE
-
-    r = Q.QUERIES["pipeline_dataset_card"](spark, sf_smoke).collect()[0]
-    t = pq.read_table(os.path.join(sf_smoke, "documents.parquet")).to_pandas()
-    toks = [len(re.split(TOKEN_RE, x)) for x in t["text"]]
-    hashes = {hashlib.md5(x.encode()).hexdigest() for x in t["text"]}
-    n = len(t)
-    assert r["n_docs"] == n
-    assert r["n_tokens"] == sum(toks)
-    assert r["n_sources"] == t["source"].nunique()
-    assert r["n_langs"] == t["lang"].nunique()
-    assert r["n_exact_dup_docs"] == n - len(hashes)
-    assert r["dup_rate_milli"] == (1000 * (n - len(hashes))) // n
-    assert r["en_share_milli"] == (1000 * int((t["lang"] == "en").sum())) // n
-    assert r["mean_doc_tokens_milli"] == (1000 * sum(toks)) // n
-    assert (r["min_doc_tokens"], r["max_doc_tokens"]) == (min(toks), max(toks))
-
-
-def test_join_size_estimate_differential(spark, sf_smoke):
-    """Exact Σf², the CMS inner product (min over 4 md5 rows), and the
-    never-underestimates guarantee recomputed in Python."""
-    import hashlib
-    import os
-    from collections import Counter
-
-    import pyarrow.parquet as pq
-    from sales_azure_data_engineer_project_spark import queries_core as Q
-    from sales_azure_data_engineer_project_spark import queries_extensions  # noqa: F401 (registers)
-
-    got = {
-        r["column_name"]: r
-        for r in Q.QUERIES["stats_join_size_estimate"](spark, sf_smoke).collect()
-    }
-    t = pq.read_table(
-        os.path.join(sf_smoke, "lineitem.parquet"),
-        columns=["l_partkey", "l_suppkey"],
-    ).to_pandas()
-    for col in ("l_partkey", "l_suppkey"):
-        ks = [int(x) for x in t[col]]
-        f = Counter(ks)
-        exact = sum(v * v for v in f.values())
-        ips = []
-        for row in range(4):
-            buckets = Counter(
-                int(hashlib.md5(f"{row}#{k}".encode()).hexdigest()[:8], 16) % 4096
-                for k in ks
-            )
-            ips.append(sum(c * c for c in buckets.values()))
-        r = got[col]
-        assert r["exact_selfjoin"] == exact
-        assert r["cms_estimate"] == min(ips)
-        assert r["cms_estimate"] >= exact, "CMS inner product must not underestimate"
-        assert r["overcount_permille"] == (1000 * (min(ips) - exact)) // exact
 
 
 def test_rfm_segments_differential(spark, sf_smoke):
@@ -2256,47 +1748,6 @@ def test_registered_capped_lsh_star_shape(spark):
     assert all(r["id_a"] < r["id_b"] for r in rows)
 
 
-def test_shard_checksum_differential_and_rerun_invariance(spark):
-    """pipeline_shard_checksum vs hashlib on the real sf0.001 corpus,
-    plus the property the operator exists for: the checksum triple is
-    identical across reruns and insensitive to input row order."""
-    import hashlib
-
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    got = {r["shard"]: r for r in m.queries()["pipeline_shard_checksum"](spark, sf).collect()}
-    docs = duckdb.sql(
-        f"SELECT doc_id, text FROM '{sf}/documents.parquet'"
-    ).fetchall()
-    exp: dict = {}
-    for doc_id, text in docs:
-        h = hashlib.md5(str(doc_id).encode()).hexdigest()
-        shard = int(h[:12], 16) % 16
-        d32 = int(hashlib.md5(f"{doc_id}:{text}".encode()).hexdigest()[:12], 16) % 4294967296
-        s = exp.setdefault(shard, [0, 0, 0, None, None])
-        s[0] += 1
-        s[1] += len(text)
-        s[2] += d32
-        s[3] = doc_id if s[3] is None else min(s[3], doc_id)
-        s[4] = doc_id if s[4] is None else max(s[4], doc_id)
-    assert set(got) == set(exp)
-    for shard, (n, chars, ck, mn, mx) in exp.items():
-        r = got[shard]
-        assert (r["n_docs"], r["n_chars_total"], r["checksum_sum"]) == (n, chars, ck)
-        assert (r["min_doc_id"], r["max_doc_id"]) == (mn, mx)
-    # rerun invariance (the audit contract): second run, same triples
-    again = {
-        r["shard"]: (r["n_docs"], r["n_chars_total"], r["checksum_sum"])
-        for r in m.queries()["pipeline_shard_checksum"](spark, sf).collect()
-    }
-    assert again == {
-        s: (r["n_docs"], r["n_chars_total"], r["checksum_sum"]) for s, r in got.items()
-    }
-
-
 def test_incremental_manifest_accounts_for_every_doc(spark):
     """pipeline_incremental_manifest totals must reconcile exactly with
     the planted edit rates: removed = multiples of 31, added = multiples
@@ -2322,31 +1773,6 @@ def test_incremental_manifest_accounts_for_every_doc(spark):
     assert by_status.get("changed", 0) == n13s
     assert by_status.get("unchanged", 0) == n - n31 - n13s
     assert sum(by_status.values()) == n + n41
-
-
-def test_simpson_diversity_differential(spark):
-    """quality_simpson_diversity vs collections.Counter on sf0.001."""
-    import collections
-    import re as _re
-
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    got = {r["source"]: r for r in m.queries()["quality_simpson_diversity"](spark, sf).collect()}
-    rows = duckdb.sql(f"SELECT source, text FROM '{sf}/documents.parquet'").fetchall()
-    per: dict = {}
-    for source, text in rows:
-        per.setdefault(source, collections.Counter()).update(_re.split(r"\s+", text))
-    assert set(got) == set(per)
-    for source, cnt in per.items():
-        n = sum(cnt.values())
-        coll2 = sum(c * (c - 1) for c in cnt.values())
-        r = got[source]
-        assert r["n_tokens"] == n and r["n_types"] == len(cnt)
-        assert r["simpson_micro"] == (1000000 * coll2) // (n * (n - 1))
-        assert r["diversity_micro"] == 1000000 - r["simpson_micro"]
 
 
 def test_skew_report_differential(spark):
@@ -2382,104 +1808,6 @@ def test_skew_report_differential(spark):
     assert r["p99_cnt"] == q_at(99, 100)
     assert r["top_share_micro"] == (1000000 * mx) // n_rows
     assert r["skew_ratio_milli"] == (1000 * mx) // r["p50_cnt"]
-
-
-def test_oov_rate_differential(spark):
-    """vocab_oov_rate_by_source vs Counter-based top-256 vocab."""
-    import collections
-    import re as _re
-
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    got = {r["source"]: r for r in m.queries()["vocab_oov_rate_by_source"](spark, sf).collect()}
-    rows = duckdb.sql(f"SELECT source, text FROM '{sf}/documents.parquet'").fetchall()
-    glob: collections.Counter = collections.Counter()
-    per: dict = {}
-    for source, text in rows:
-        toks = _re.split(r"\s+", text)
-        glob.update(toks)
-        per.setdefault(source, collections.Counter()).update(toks)
-    vocab = {t for t, _ in sorted(glob.items(), key=lambda kv: (-kv[1], kv[0]))[:256]}
-    for source, cnt in per.items():
-        n = sum(cnt.values())
-        oov = sum(c for t, c in cnt.items() if t not in vocab)
-        r = got[source]
-        assert (r["n_tokens"], r["n_oov"]) == (n, oov)
-        assert r["oov_permille"] == (1000 * oov) // n
-
-
-def test_ols_trend_differential(spark):
-    """events_value_trend_ols vs a plain-Python daily-mean OLS on the
-    real sf0.001 events: exact integer identity for the slope, plus a
-    float sanity bound vs numpy.polyfit over the same daily points."""
-    import datetime as dt
-
-    import duckdb
-    import numpy as np
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    got = {r["event_type"]: r for r in m.queries()["events_value_trend_ols"](spark, sf).collect()}
-    rows = duckdb.sql(
-        f"SELECT event_type, CAST(ts AS DATE), CAST(round(value * 1000) AS BIGINT) FROM '{sf}/events.parquet'"
-    ).fetchall()
-    anchor = dt.date(2024, 1, 1)
-    per: dict = {}
-    for ty, d, y in rows:
-        per.setdefault(ty, {}).setdefault((d - anchor).days, []).append(int(y))
-    assert set(got) == set(per)
-
-    def trunc_div(a, b):
-        q = abs(a) // abs(b)
-        return -q if (a < 0) != (b < 0) else q
-
-    for ty, days in per.items():
-        pts = [(x, trunc_div(sum(ys), len(ys))) for x, ys in sorted(days.items())]
-        n = len(pts)
-        sx = sum(p[0] for p in pts); sy = sum(p[1] for p in pts)
-        sxx = sum(p[0] * p[0] for p in pts); sxy = sum(p[0] * p[1] for p in pts)
-        expect = trunc_div(1000000 * (n * sxy - sx * sy), n * sxx - sx * sx)
-        r = got[ty]
-        assert r["slope_micro_per_day"] == expect
-        assert r["n_days"] == n
-        assert r["n_events"] == sum(len(ys) for ys in days.values())
-        xs = np.array([p[0] for p in pts], dtype=float)
-        ys_ = np.array([p[1] for p in pts], dtype=float)
-        assert abs(r["slope_micro_per_day"] - 1e6 * np.polyfit(xs, ys_, 1)[0]) <= 1.0
-
-
-def test_record_linkage_fs_plants_are_recovered(spark):
-    """customers_record_linkage_fs: the planted truth must land where
-    FS theory says — untouched copies score all-agree 'match'; a
-    single perturbed field drops to its expected pattern/class; and
-    every one of the N true pairs appears in exactly one pattern cell."""
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    rows = m.queries()["customers_record_linkage_fs"](spark, sf).collect()
-    by_pat = {(r["g_name"], r["g_bal"], r["g_seg"]): r for r in rows}
-    n = duckdb.sql(
-        f"SELECT count(*) FROM '{sf}/customer.parquet'"
-    ).fetchone()[0]
-    # every true pair lands somewhere; blocking loses none (prefix-17
-    # survives the last-char perturbation) and admits few false pairs
-    assert sum(r["n_pairs"] for r in rows) >= n
-    # all-agree pattern: ids untouched by all three perturbations
-    clean = sum(
-        1 for i in range(n) if i % 7 != 0 and i % 5 != 0 and i % 11 != 0
-    )
-    assert by_pat[(1, 1, 1)]["n_pairs"] >= clean
-    assert by_pat[(1, 1, 1)]["class"] == "match"
-    assert by_pat[(1, 1, 1)]["score"] == 40 + 22 + 8
-    # name-only disagreement is still a (weaker) match; all-disagree is not
-    assert by_pat[(0, 1, 1)]["score"] == -12 + 22 + 8
-    assert by_pat[(0, 0, 0)]["class"] == "non_match"
 
 
 def test_source_length_emd_differential(spark):
@@ -2565,35 +1893,6 @@ def test_touch_attribution_differential(spark):
         "error": (1, 3000, 1, 3000),
         "view": (2, 15000, 0, 0),
     }
-
-
-def test_label_propagation_invariants(spark):
-    """dedup_graph_label_propagation: labels are node ids; communities
-    refine connected components (two nodes in different CCs can never
-    share a label — propagation only crosses edges); isolated docs keep
-    their own id; planted exact dups adopt a shared label."""
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    lpa = {r["doc_id"]: r["community"] for r in m.queries()["dedup_graph_label_propagation"](spark, sf).collect()}
-    cc = {r["doc_id"]: r["component"] for r in m.queries()["dedup_clusters_minhash"](spark, sf).collect()}
-    assert set(lpa) == set(cc)
-    # refinement: same LPA label -> same CC component
-    by_lbl: dict = {}
-    for d, l in lpa.items():
-        by_lbl.setdefault(l, set()).add(cc[d])
-    assert all(len(comps) == 1 for comps in by_lbl.values())
-    # isolated docs (singleton components) keep their own id
-    from collections import Counter
-
-    comp_sizes = Counter(cc.values())
-    for d, comp in cc.items():
-        if comp_sizes[comp] == 1:
-            assert lpa[d] == d
-    # planted exact dups (doc_id + 200000, every 17th) share a label
-    # with their original after 2 rounds of a direct edge
-    planted = [d for d in lpa if d >= 200000]
-    assert planted and all(lpa[d] == lpa[d - 200000] for d in planted)
 
 
 def test_audience_overlap_jaccard_differential(spark):
@@ -2915,81 +2214,6 @@ def test_tukey_fences_differential(spark):
         assert (r["n_low"], r["n_high"]) == (n_low, n_high)
 
 
-def test_journey_trigrams_differential(spark):
-    """events_journey_trigrams vs a plain-Python per-user sequence
-    walk with (ts, event_id) ordering on the real sf0.001 events."""
-    from collections import Counter
-
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    rows = duckdb.sql(
-        f"SELECT user_id, ts, event_id, event_type FROM '{sf}/events.parquet'"
-    ).fetchall()
-    per: dict = {}
-    for u, ts, eid, ty in rows:
-        per.setdefault(u, []).append((ts, eid, ty))
-    cnt: Counter = Counter()
-    for seq in per.values():
-        seq.sort()
-        types = [t[2] for t in seq]
-        for i in range(len(types) - 2):
-            cnt[">".join(types[i : i + 3])] += 1
-    expect = sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[:20]
-    got = [
-        (r["journey"], r["n"])
-        for r in m.queries()["events_journey_trigrams"](spark, sf).collect()
-    ]
-    assert got == expect
-
-
-def test_weekday_deseasonalized_differential(spark):
-    """events_weekday_deseasonalized_anomalies vs plain-Python weekday
-    means and permille scoring on the real sf0.001 events."""
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    rows = duckdb.sql(
-        f"""SELECT event_type,
-                   datediff('day', DATE '2024-01-01', CAST(ts AS DATE)),
-                   COUNT(*)
-            FROM '{sf}/events.parquet' GROUP BY 1, 2"""
-    ).fetchall()
-    daily = {(ty, int(x)): int(c) for ty, x, c in rows}
-    wk: dict = {}
-    for (ty, x), c in daily.items():
-        wk.setdefault((ty, x % 7), []).append(c)
-    wmean = {k: sum(v) // len(v) for k, v in wk.items()}
-
-    def trunc_div(a, b):
-        q = abs(a) // abs(b)
-        return -q if (a < 0) != (b < 0) else q
-
-    scored = [
-        (
-            ty,
-            x,
-            c,
-            wmean[(ty, x % 7)],
-            trunc_div(1000 * (c - wmean[(ty, x % 7)]), wmean[(ty, x % 7)]),
-        )
-        for (ty, x), c in daily.items()
-    ]
-    scored.sort(key=lambda t: (-abs(t[4]), t[0], t[1]))
-    expect = scored[:20]
-    got = [
-        (r["event_type"], r["day_idx"], r["cnt"], r["weekday_mean"], r["excess_permille"])
-        for r in m.queries()["events_weekday_deseasonalized_anomalies"](
-            spark, sf
-        ).collect()
-    ]
-    assert got == expect
-
-
 def test_balanced_downsample_differential(spark):
     """sample_balanced_class_downsample vs plain-Python md5-ordered
     selection: identical kept SET per label (checksummed), minority
@@ -3238,42 +2462,6 @@ def test_multiband_sweep_differential(spark):
     assert flagged_by_r[4] <= flagged_by_r[2] <= flagged_by_r[1]
 
 
-def test_user_lifetime_differential(spark):
-    """events_user_lifetime_stats vs plain-Python per-user min/max."""
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    rows = duckdb.sql(
-        f"""SELECT user_id,
-                   datediff('day', DATE '2024-01-01', CAST(ts AS DATE)),
-                   COUNT(*)
-            FROM '{sf}/events.parquet' GROUP BY 1, 2"""
-    ).fetchall()
-    per: dict = {}
-    for u, x, c in rows:
-        lo, hi, n = per.get(u, (10**9, -(10**9), 0))
-        per[u] = (min(lo, x), max(hi, x), n + c)
-    from collections import defaultdict
-
-    agg = defaultdict(lambda: [0, 0])
-    for lo, hi, n in per.values():
-        wk = (hi - lo) // 7
-        agg[wk][0] += 1
-        agg[wk][1] += n
-    got = {
-        r["lifetime_weeks"]: r
-        for r in m.queries()["events_user_lifetime_stats"](spark, sf).collect()
-    }
-    assert set(got) == set(agg)
-    for wk, (nu, te) in agg.items():
-        r = got[wk]
-        assert r["n_users"] == nu
-        assert r["total_events"] == te
-        assert r["events_per_user"] == te // nu
-
-
 def test_crossmodal_coverage_differential(spark):
     """crossmodal_coverage_report vs plain-Python id-set coverage."""
     import duckdb
@@ -3392,144 +2580,6 @@ def test_repeat_purchase_intervals_differential(spark):
         assert r["p90_days"] == gs[(90 * n + 99) // 100 - 1]
 
 
-def test_hash_collision_audit_differential(spark):
-    """text_hash_collision_audit vs plain-Python 16-bit bucketing of
-    the distinct trigram set."""
-    import hashlib
-    import re
-    from collections import Counter
-
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    feats = set()
-    for (text,) in duckdb.sql(
-        f"SELECT text FROM '{sf}/documents.parquet'"
-    ).fetchall():
-        toks = re.split(r"\s+", text)
-        for i in range(len(toks) - 2):
-            feats.add(" ".join(toks[i : i + 3]))
-    buckets = Counter(
-        int(hashlib.md5(f.encode()).hexdigest()[:4], 16) for f in feats
-    )
-    [r] = m.queries()["text_hash_collision_audit"](spark, sf).collect()
-    assert r["n_features"] == len(feats)
-    assert r["n_buckets_used"] == len(buckets)
-    assert r["n_collided_features"] == sum(c - 1 for c in buckets.values())
-    assert r["max_bucket"] == max(buckets.values())
-    assert r["collision_permille"] == (1000 * sum(c - 1 for c in buckets.values())) // len(feats)
-
-
-def test_wilson_ci_differential(spark):
-    """events_wilson_ci_error_rate vs the same IEEE double arithmetic
-    in Python (CPython floats are IEEE-754 doubles; identical op order
-    gives bit-identical results), plus interval sanity."""
-    import math
-
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    rows = duckdb.sql(
-        f"""SELECT datediff('day', DATE '2024-01-01', CAST(ts AS DATE)),
-                   COUNT(*),
-                   SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-            FROM '{sf}/events.parquet' GROUP BY 1"""
-    ).fetchall()
-    got = {
-        r["day_idx"]: r
-        for r in m.queries()["events_wilson_ci_error_rate"](spark, sf).collect()
-    }
-    assert set(got) == {int(x) for x, _, _ in rows}
-    for x, n, e in rows:
-        n_f, e_f = float(n), float(e)
-        p = e_f / n_f
-        z2 = 1.96 * 1.96
-        half = 1.96 * math.sqrt((p * (1.0 - p) + z2 / (4.0 * n_f)) / n_f)
-        lo = math.floor(1e6 * ((p + z2 / (2.0 * n_f) - half) / (1.0 + z2 / n_f)))
-        hi = math.floor(1e6 * ((p + z2 / (2.0 * n_f) + half) / (1.0 + z2 / n_f)))
-        r = got[int(x)]
-        assert (r["n_events"], r["n_errors"]) == (n, e)
-        assert r["wilson_lo_micro"] == lo
-        assert r["wilson_hi_micro"] == hi
-        # interval sanity: lo ≤ point rate ≤ hi, and inside [0, 1e6]
-        assert 0 <= r["wilson_lo_micro"] <= 1000 * r["rate_permille"] + 1
-        assert 1000 * r["rate_permille"] <= r["wilson_hi_micro"] <= 1000000
-
-
-def test_runs_test_differential(spark):
-    """stats_runs_test_daily vs a plain-Python runs count and the same
-    IEEE z computation on the real sf0.001 events."""
-    import math
-
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    rows = duckdb.sql(
-        f"""SELECT event_type,
-                   datediff('day', DATE '2024-01-01', CAST(ts AS DATE)),
-                   COUNT(*)
-            FROM '{sf}/events.parquet' GROUP BY 1, 2"""
-    ).fetchall()
-    per: dict = {}
-    for ty, x, c in rows:
-        per.setdefault(ty, {})[int(x)] = int(c)
-    got = {
-        r["event_type"]: r
-        for r in m.queries()["stats_runs_test_daily"](spark, sf).collect()
-    }
-    for ty, days in per.items():
-        xs = sorted(days)
-        signs = []
-        for i in range(1, len(xs)):
-            d = days[xs[i]] - days[xs[i - 1]]
-            if d != 0:
-                signs.append(1 if d > 0 else -1)
-        runs = 1 + sum(1 for i in range(1, len(signs)) if signs[i] != signs[i - 1])
-        n_up = sum(1 for s in signs if s == 1)
-        n_dn = len(signs) - n_up
-        r = got[ty]
-        assert (r["runs"], r["n_up"], r["n_down"]) == (runs, n_up, n_dn)
-        if n_up and n_dn and n_up + n_dn >= 2:
-            nf = float(n_up) + n_dn
-            two_nn = 2.0 * n_up * n_dn
-            var = (two_nn * (two_nn - n_up - n_dn)) / (nf * nf * (nf - 1.0))
-            if var > 0:
-                z = math.floor(1e6 * (float(runs) - (1.0 + two_nn / nf)) / math.sqrt(var))
-                assert r["z_micro"] == z
-
-
-def test_good_turing_differential(spark):
-    """vocab_good_turing_unseen_mass vs plain-Python token counting."""
-    import re
-    from collections import Counter
-
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    cnt: Counter = Counter()
-    for (text,) in duckdb.sql(
-        f"SELECT text FROM '{sf}/documents.parquet'"
-    ).fetchall():
-        cnt.update(re.split(r"\s+", text))
-    n = sum(cnt.values())
-    v = len(cnt)
-    n1 = sum(1 for c in cnt.values() if c == 1)
-    n2 = sum(1 for c in cnt.values() if c == 2)
-    [r] = m.queries()["vocab_good_turing_unseen_mass"](spark, sf).collect()
-    assert (r["n_tokens"], r["vocab_size"]) == (n, v)
-    assert (r["n_hapax"], r["n_dis_legomena"]) == (n1, n2)
-    assert r["unseen_mass_permille"] == (1000 * n1) // n
-    assert r["hapax_vocab_permille"] == (1000 * n1) // v
-
-
 def test_type_mix_drift_differential(spark):
     """events_type_mix_drift_weekly vs plain-Python weekly TVD."""
     from collections import Counter
@@ -3640,39 +2690,6 @@ def test_time_to_convert_differential(spark):
         assert r[f"p{p}_min"] == gaps[(p * n + 99) // 100 - 1]
 
 
-def test_new_vs_returning_differential(spark):
-    """events_new_vs_returning_daily vs plain-Python first-day sets,
-    including the identity new + returning = active."""
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    rows = duckdb.sql(
-        f"""SELECT DISTINCT user_id,
-                   datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
-            FROM '{sf}/events.parquet'"""
-    ).fetchall()
-    per_day: dict = {}
-    first: dict = {}
-    for u, x in rows:
-        per_day.setdefault(int(x), set()).add(u)
-        first[u] = min(first.get(u, int(x)), int(x))
-    got = {
-        r["day_idx"]: r
-        for r in m.queries()["events_new_vs_returning_daily"](spark, sf).collect()
-    }
-    assert set(got) == set(per_day)
-    for d, users in per_day.items():
-        new = sum(1 for u in users if first[u] == d)
-        r = got[d]
-        assert r["active_users"] == len(users)
-        assert r["new_users"] == new
-        assert r["returning_users"] == len(users) - new
-        assert r["new_users"] + r["returning_users"] == r["active_users"]
-        assert r["new_share_permille"] == (1000 * new) // len(users)
-
-
 def test_hour_weekday_heatmap_differential(spark):
     """events_hour_weekday_heatmap vs plain-Python epoch bucketing."""
     from collections import Counter
@@ -3699,33 +2716,6 @@ def test_hour_weekday_heatmap_differential(spark):
     for (w, h), r in got.items():
         assert r["n_events"] == cells[(w, h)]
         assert r["weekday_share_permille"] == (1000 * cells[(w, h)]) // wt[w]
-
-
-def test_revenue_ma7_differential(spark):
-    """orders_daily_revenue_7d_ma vs plain-Python trailing average
-    over present days, including partial head windows."""
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    rows = duckdb.sql(
-        f"""SELECT datediff('day', DATE '1992-01-01', o_orderdate),
-                   SUM(CAST(round(o_totalprice * 100) AS BIGINT))
-            FROM '{sf}/orders.parquet' GROUP BY 1"""
-    ).fetchall()
-    daily = {int(x): int(r) for x, r in rows}
-    got = {
-        r["day_idx"]: r
-        for r in m.queries()["orders_daily_revenue_7d_ma"](spark, sf).collect()
-    }
-    assert set(got) == set(daily)
-    for x, rev in daily.items():
-        window = [daily[d] for d in range(x - 6, x + 1) if d in daily]
-        r = got[x]
-        assert r["revenue_cents"] == rev
-        assert r["window_days"] == len(window)
-        assert r["ma7_cents"] == sum(window) // len(window)
 
 
 def test_soft_dedup_weights_differential(spark):
@@ -3990,11 +2980,11 @@ def test_blocked_bipartite_pairs_edges(spark):
     assert hot == {(1, 101), (1, 102), (2, 101), (3, 101), (10, 110)}
 
 
-def test_ivf_cadence_engine_parity():
-    """The sqrt(N) centroid cadence must compute identically in Python
-    (_ivf_cadence) and the oracle SQL (GREATEST(61, ceil(sqrt(N)))) for
-    any corpus size — including the perfect-square boundary (61^2) and
-    the oracle-SF floor region."""
+def test_ivf_cadence_engine_parity(spark):
+    """The sqrt(N) centroid cadence must compute identically in the
+    Spark plan (_ivf_cadence) and the oracle SQL (GREATEST(61,
+    ceil(sqrt(N)))) for any corpus size — including the perfect-square
+    boundary (61^2) and the oracle-SF floor region."""
     import duckdb
 
     from sales_azure_data_engineer_project_spark.queries_extensions import (
@@ -4003,40 +2993,16 @@ def test_ivf_cadence_engine_parity():
 
     sizes = [1, 60, 61, 150, 1500, 3720, 3721, 3722, 15000, 15360,
              150000, 460800, 460801, 10**9]
+    got = {
+        r["n"]: r["c"]
+        for r in spark.createDataFrame([(n,) for n in sizes], "n bigint")
+        .select("n", _ivf_cadence(F.col("n")).alias("c"))
+        .collect()
+    }
     for n in sizes:
         sql = duckdb.sql(
             f"SELECT GREATEST(61, CAST(ceil(sqrt({n})) AS BIGINT))"
         ).fetchone()[0]
-        assert _ivf_cadence(n) == sql, n
+        assert got[n] == sql, n
 
 
-def test_dedup_clusters_cap16_reproduces_uncapped_components():
-    """The round-10 default-path swap (capped pair tier feeding CC) must
-    NOT change what `dedup_clusters` computes at oracle SFs: cap=16 was
-    chosen precisely because an old-vs-new oracle differential showed
-    cap=4 drops real edges at sf0.001 (max shingle df 14) and sf0.1
-    (max df 32).  This pins (a) the registered cap value and (b) the
-    capped oracle == uncapped oracle equality at both small SFs, so a
-    future cap change re-triggers the verification instead of silently
-    altering the registered query's results."""
-    import duckdb
-
-    import os as _os
-
-    import __spark_entry__ as entry_mod
-
-    from sales_azure_data_engineer_project_spark.schemas import TESTDATA_TABLES
-
-    sql = entry_mod.oracle_sql()["dedup_clusters"]
-    assert "d.df <= 16" in sql, "registered cap changed - re-verify vs uncapped"
-    uncapped = sql.replace("d.df <= 16", "d.df <= 1000000000")
-    for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
-        con = duckdb.connect()
-        for t in TESTDATA_TABLES:
-            p = f"{sf}/{t}.parquet"
-            if _os.path.exists(p):
-                con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-        a = con.execute(sql).df().sort_values(["doc_id"]).reset_index(drop=True)
-        b = con.execute(uncapped).df().sort_values(["doc_id"]).reset_index(drop=True)
-        assert a.equals(b), f"cap=16 changes components at {sf}"
-        con.close()

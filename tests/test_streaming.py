@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -52,6 +54,31 @@ def test_stream_incremental_merge_exactly_once(spark, tmp_path):
     stream_incremental_merge(spark, src, tgt, ["k"], SCHEMA, ckpt)
     assert {r["k"]: r["v"] for r in table.read().collect()} == got
     assert table.current_version() == version
+
+
+def test_stream_incremental_merge_duplicate_keys_fail_the_drain(spark, tmp_path):
+    """Two rows for one key in a micro-batch: the drain raises the
+    merge's duplicate-keys error and commits no version, instead of
+    keeping an arbitrary row of the two."""
+    src = str(tmp_path / "src")
+    tgt = str(tmp_path / "tgt")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(src)
+    table = VersionedTable(spark, tgt)
+
+    spark.createDataFrame([(1, "a")], SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+    stream_incremental_merge(spark, src, tgt, ["k"], SCHEMA, ckpt)
+    version = table.current_version()
+
+    spark.createDataFrame([(2, "b"), (2, "b2")], SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+    with pytest.raises(Exception, match="duplicate merge keys"):
+        stream_incremental_merge(spark, src, tgt, ["k"], SCHEMA, ckpt)
+    assert table.current_version() == version
+    assert {r["k"]: r["v"] for r in table.read().collect()} == {1: "a"}
 
 
 def _event_rows(spark):

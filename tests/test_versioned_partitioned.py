@@ -66,40 +66,6 @@ def test_partitioned_write_prunes_scan(spark, tmp_path):
     assert "2018" in plan
 
 
-def test_incremental_summary_equals_full_recompute(spark, tmp_path):
-    from sales_azure_data_engineer_project_spark.operators.matview import (
-        IncrementalSummary,
-    )
-    from sales_azure_data_engineer_project_spark.operators.versioned import (
-        VersionedTable,
-    )
-
-    mv = IncrementalSummary(
-        VersionedTable(spark, str(tmp_path / "mv")), keys=["k"], measures=["v"]
-    )
-    batches = [
-        [("a", 1), ("b", 2), ("a", 3)],
-        [("b", 4), ("c", 5)],
-        [("a", 6), ("c", 7), ("c", 8)],
-    ]
-    all_rows = []
-    for b in batches:
-        mv.refresh(spark.createDataFrame(b, ["k", "v"]))
-        all_rows.extend(b)
-
-    got = {r["k"]: (r["sum_v"], r["n_rows"]) for r in mv.read().collect()}
-    full = (
-        spark.createDataFrame(all_rows, ["k", "v"])
-        .groupBy("k")
-        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
-    )
-    want = {r["k"]: (r["s"], r["n"]) for r in full.collect()}
-    assert got == want
-    # history: summary after batch 1 is still time-travelable
-    v1 = {r["k"]: r["sum_v"] for r in mv.table.read(version=1).collect()}
-    assert v1 == {"a": 4, "b": 2}
-
-
 def test_compact_reduces_files_preserves_rows(spark, tmp_path):
     import glob
 
@@ -217,19 +183,6 @@ def test_versioned_parallel_writers_serialize(spark, tmp_path):
         assert snap is not None and snap.count() >= 1
     # losers' staged dirs were cleaned up on the spot
     assert not [n for n in os.listdir(root) if n.startswith("._staged_")]
-
-
-def test_version_diff_cdc(spark, tmp_path):
-    from sales_azure_data_engineer_project_spark.operators.versioned import (
-        VersionedTable,
-    )
-
-    vt = VersionedTable(spark, str(tmp_path / "cdc"))
-    vt.overwrite(spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]))
-    vt.merge(spark.createDataFrame([(2, "b2"), (3, "c")], ["k", "v"]), ["k"])
-    added, removed = vt.diff(1, 2)
-    assert sorted((r["k"], r["v"]) for r in added.collect()) == [(2, "b2"), (3, "c")]
-    assert sorted((r["k"], r["v"]) for r in removed.collect()) == [(2, "b")]
 
 
 def test_merge_partitioned_target_scan_is_pruned(spark, tmp_path, monkeypatch):

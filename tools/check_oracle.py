@@ -1,6 +1,6 @@
 """Local replica of the driver's correctness gate — pandas-path faithful.
 
-Round-1 lesson (VERDICT.md "What's wrong" #1): the driver compares
+Why pandas-path faithful: the driver compares
 ``sdf.toPandas()`` against ``duckdb_con.execute(sql).df()`` and hashes a
 string canonicalization of the cells.  Spark's toPandas keeps DECIMAL
 columns as ``decimal.Decimal`` objects with scale preserved ('2547.40')

@@ -10,17 +10,28 @@ check-me artifact behind the repo's scale claims (the per-query prose
 lives in each query's docstring; this table is the part a reviewer can
 regenerate mechanically).
 
+Each builder runs under ``sys.settrace``, which records the package
+lines it executes on the driver.  The ``unique_lines`` column counts
+those lines, minus the query's own registered source, that no other
+query's builder executes: a query at 0 exercises no library code a
+sibling does not, so with a sibling of the same plan row it is
+redundant.
+
 Usage: python tools/plan_report.py [sf_dir]   (default sf0.01)
 """
 
 from __future__ import annotations
 
+import inspect
 import os
 import re
 import sys
 import time
+from collections import Counter
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+PACKAGE = os.path.join(REPO, "sales_azure_data_engineer_project_spark") + os.sep
 
 PATTERNS = {
     "exchange": re.compile(r"\bExchange (hash|range|SinglePartition)", re.I),
@@ -33,7 +44,9 @@ PATTERNS = {
     "wgl_partial": re.compile(r"\bWindowGroupLimit .*, Partial\b"),
     "scan": re.compile(r"\bFileScan parquet\b"),
     "py_eval": re.compile(r"\b(BatchEvalPython|ArrowEvalPython)\b"),
-    "pandas_grouped": re.compile(r"\b(FlatMapGroupsInPandas|MapInPandas)\b"),
+    "pandas_grouped": re.compile(
+        r"\b(FlatMapGroupsInPandas|MapInPandas|ArrowAggregatePython)\b"
+    ),
 }
 PUSHED_NONEMPTY = re.compile(r"PushedFilters: \[(?!\])")
 
@@ -44,6 +57,44 @@ def audit(plan: str) -> dict[str, int]:
     return row
 
 
+def traced_build(fn, spark, sf_dir):
+    """Build one query under ``sys.settrace``.  Returns the DataFrame and
+    the set of ``(file, line)`` package lines the builder executed."""
+    lines: set[tuple[str, int]] = set()
+
+    def local(frame, event, arg):
+        if event == "line":
+            lines.add((frame.f_code.co_filename, frame.f_lineno))
+        return local
+
+    def on_call(frame, event, arg):
+        return local if frame.f_code.co_filename.startswith(PACKAGE) else None
+
+    sys.settrace(on_call)
+    try:
+        df = fn(spark, sf_dir)
+    finally:
+        sys.settrace(None)
+    return df, lines
+
+
+def own_lines(fn) -> set[tuple[str, int]]:
+    """The query's registered source: decorator, signature and body."""
+    src, start = inspect.getsourcelines(fn)
+    path = inspect.getsourcefile(fn)
+    return {(path, n) for n in range(start, start + len(src))}
+
+
+def unique_lines(executed: dict, own: dict) -> dict[str, int]:
+    """Per query, the executed lines outside its own source that no
+    other query's builder executes."""
+    count = Counter(ln for lines in executed.values() for ln in lines)
+    return {
+        q: sum(1 for ln in lines - own[q] if count[ln] == 1)
+        for q, lines in executed.items()
+    }
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     import __spark_entry__ as m
@@ -52,12 +103,17 @@ def main() -> None:
 
     spark = get_spark("plan-report")
     rows = []
+    executed, own = {}, {}
     t0 = time.time()
     for name, fn in sorted(m.queries().items()):
-        df = fn(spark, sf_dir)
+        df, executed[name] = traced_build(fn, spark, sf_dir)
+        own[name] = own_lines(fn)
         plan = df._jdf.queryExecution().executedPlan().toString()
         rows.append((name, audit(plan)))
         release_caches()
+    uniq = unique_lines(executed, own)
+    for name, r in rows:
+        r["unique_lines"] = uniq[name]
 
     cols = [
         "exchange", "bhj", "smj", "shj", "bnlj", "cartesian",
@@ -84,18 +140,24 @@ def main() -> None:
         "filters), "
         f"{tot['py_eval']} row/batch Python evals, "
         f"{tot['pandas_grouped']} Arrow grouped/map-in-pandas operators "
-        "(multimodal + grouped-map surface only).",
+        "(multimodal, grouped-map and grouped-agg surface only).",
+        "",
+        "`unique_lines`: package lines the query's builder executes on "
+        "the driver, outside its own registered source, that no other "
+        "query's builder executes.",
         "",
         "| query | Exchange | BHJ | SMJ | SHJ | BNLJ | Cartesian | Window"
-        " | WGL(Partial) | scans | pushed | PyEval | ArrowPandas |",
-        "|---|---|---|---|---|---|---|---|---|---|---|---|---|",
+        " | WGL(Partial) | scans | pushed | PyEval | ArrowPandas"
+        " | unique_lines |",
+        "|---|---|---|---|---|---|---|---|---|---|---|---|---|---|",
     ]
     for name, r in rows:
         out.append(
-            f"| {name} | " + " | ".join(str(r[c]) for c in cols) + " |"
+            f"| {name} | "
+            + " | ".join(str(r[c]) for c in cols + ["unique_lines"])
+            + " |"
         )
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(repo, "PLAN_AUDIT.md")
+    path = os.path.join(REPO, "PLAN_AUDIT.md")
     with open(path, "w") as f:
         f.write("\n".join(out) + "\n")
     print(f"wrote {path}: {len(rows)} queries; totals {tot}")
