@@ -2,8 +2,8 @@
 
 Two packing strategies ship in the engine:
 
-- **concat-and-chop** (the ``pack`` stage of ``pipeline_full_train_prep``
-  in ``queries_extensions``): pure windows, zero Python — documents are
+- **concat-and-chop** (``pipeline_pack_sequences`` in
+  ``queries_extensions``): pure windows, zero Python — documents are
   concatenated in doc_id order within each shard and cut every 512
   tokens.  Maximum fill, but documents straddle cut boundaries.
 - **first-fit-decreasing** (this module): no document is ever split —

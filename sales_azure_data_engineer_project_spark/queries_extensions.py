@@ -1173,6 +1173,110 @@ _HEX12 = (
 
 
 @register(
+    "pipeline_pack_sequences",
+    r"""
+    WITH t AS (
+        SELECT doc_id, doc_id % 8 AS shard,
+               len(string_split_regex(text, '\s+')) AS n_tok
+        FROM documents
+    ),
+    c AS (
+        SELECT doc_id, shard, n_tok,
+               SUM(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
+                                ROWS UNBOUNDED PRECEDING) AS cum
+        FROM t
+    ),
+    b AS (
+        SELECT shard, n_tok, cum,
+               (cum - n_tok) // 512 AS first_bin,
+               CASE WHEN n_tok > 0 THEN (cum - 1) // 512 ELSE (cum - n_tok) // 512 END AS last_bin
+        FROM c
+    )
+    SELECT CAST(shard AS BIGINT) AS shard,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
+           CAST((MAX(cum) + 511) // 512 AS BIGINT) AS n_sequences,
+           CAST(SUM(CASE WHEN n_tok > 0 AND first_bin != last_bin
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_straddling,
+           CAST((1000 * SUM(n_tok)) // (512 * ((MAX(cum) + 511) // 512)) AS BIGINT)
+               AS fill_permille
+    FROM b
+    GROUP BY shard
+    ORDER BY shard
+    """,
+)
+def pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sequence packing — the step that turns a filtered corpus into
+    fixed-length training sequences: documents are concatenated in
+    deterministic order within hash shards and split every 512 tokens
+    (document-concatenation packing, the GPT/T5 default).  Reports the
+    packing profile per shard: sequence count, docs straddling a
+    sequence boundary (candidates for attention-mask resets), and fill
+    rate (how close packing gets to zero padding).
+
+    Scale shape: the cumulative count is a window PARTITIONED by shard
+    — at 100 TB each shard's running sum is independent, so the plan is
+    one hash Exchange(shard) + per-shard sort, never a global
+    single-partition window; everything after is a per-shard aggregate
+    over scalars (doc text itself is never shuffled — only token
+    counts)."""
+    from pyspark.sql import Window
+
+    docs = load_testdata(spark, sf_dir, "documents")
+    t = docs.select(
+        "doc_id",
+        (F.col("doc_id") % 8).alias("shard"),
+        F.size(F.split(F.col("text"), X.TOKEN_RE)).alias("n_tok"),
+    )
+    w = (
+        Window.partitionBy("shard")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    c = t.withColumn("cum", F.sum("n_tok").over(w))
+    # div() truncates toward zero in Spark but DuckDB's // floors —
+    # identical on the non-negative operands here; the n_tok = 0 guard
+    # keeps (cum - 1) from ever going negative on a leading empty doc
+    b = c.select(
+        "shard",
+        "n_tok",
+        "cum",
+        F.expr("div(cum - n_tok, 512)").alias("first_bin"),
+        F.when(F.col("n_tok") > 0, F.expr("div(cum - 1, 512)"))
+        .otherwise(F.expr("div(cum - n_tok, 512)"))
+        .alias("last_bin"),
+    )
+    return (
+        b.groupBy("shard")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.sum("n_tok").cast("bigint").alias("n_tokens"),
+            F.expr("div(max(cum) + 511, 512)").cast("bigint").alias("n_sequences"),
+            F.sum(
+                F.when(
+                    (F.col("n_tok") > 0) & (F.col("first_bin") != F.col("last_bin")),
+                    1,
+                ).otherwise(0)
+            )
+            .cast("bigint")
+            .alias("n_straddling"),
+            F.expr("div(1000 * sum(n_tok), 512 * div(max(cum) + 511, 512))")
+            .cast("bigint")
+            .alias("fill_permille"),
+        )
+        .select(
+            F.col("shard").cast("bigint"),
+            "n_docs",
+            "n_tokens",
+            "n_sequences",
+            "n_straddling",
+            "fill_permille",
+        )
+        .orderBy("shard")
+    )
+
+
+@register(
     "vocab_top_tokens",
     r"""
     WITH tok AS (SELECT unnest(string_split_regex(text, '\s+')) AS tok FROM documents),
@@ -2482,6 +2586,61 @@ def pipeline_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .orderBy("eval_doc_id")
     )
+
+
+@register(
+    "text_token_counts",
+    r"""
+    WITH t AS (
+        SELECT doc_id, text,
+               regexp_extract_all(text,
+                   '''(?:[sdmt]|ll|ve|re)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+'
+               ) AS bpe
+        FROM documents
+    )
+    SELECT doc_id,
+           CAST(length(text) AS BIGINT) AS n_chars,
+           CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+           CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS ws_tokens,
+           CAST(len(bpe) AS BIGINT) AS bpe_tokens,
+           CAST((1000 * length(text)) // len(bpe) AS BIGINT) AS chars_per_bpe_milli
+    FROM t
+    ORDER BY doc_id
+    """,
+)
+def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document token counting, the budget currency of every LLM
+    training pipeline: whitespace tokens AND a BPE-ish pre-tokenizer
+    count (the GPT-2 split regex — contraction suffixes, letter runs,
+    digit runs, punctuation runs, whitespace — which upper-bounds real
+    BPE merge counts and is deterministic without a vocab file).
+    chars/token (milli) is the packing-density signal used to filter
+    boilerplate/code-like shards.  Verified engine-exact: the Java and
+    RE2 dialects agree on this pattern over the whole corpus (no
+    lookarounds, which RE2 lacks).
+
+    Scale shape: map-only over the text column — no shuffle, no UDF;
+    the regex runs inside whole-stage codegen.  ``_fan_out`` spreads
+    the small local file so the regex work uses every core; a real
+    multi-GB input partitions naturally."""
+    docs = _fan_out(load_testdata(spark, sf_dir, "documents"))
+    bpe_pat = r"'(?:[sdmt]|ll|ve|re)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+"
+    bpe = F.regexp_extract_all(F.col("text"), F.lit(bpe_pat), F.lit(0))
+    counted = docs.select(
+        "doc_id",
+        F.length("text").cast("bigint").alias("n_chars"),
+        F.octet_length("text").cast("bigint").alias("n_bytes"),
+        F.size(F.split(F.trim(F.col("text")), r"\s+"))
+        .cast("bigint")
+        .alias("ws_tokens"),
+        F.size(bpe).cast("bigint").alias("bpe_tokens"),
+    )
+    return counted.select(
+        "*",
+        F.expr("div(1000 * n_chars, bpe_tokens)")
+        .cast("bigint")
+        .alias("chars_per_bpe_milli"),
+    ).orderBy("doc_id")
 
 
 @register(
@@ -7012,6 +7171,71 @@ def stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("flag")
 
 
+@register(
+    "quality_metadata_consistency",
+    """
+    WITH t AS (
+        SELECT source, length(text) AS actual, n_chars
+        FROM documents
+    )
+    SELECT source,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM(CASE WHEN actual != n_chars THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_mismatch,
+           CAST(MAX(abs(actual - n_chars)) AS BIGINT) AS max_abs_drift,
+           CAST((1000 * SUM(CASE WHEN actual != n_chars THEN 1 ELSE 0 END))
+                // COUNT(*) AS BIGINT) AS mismatch_permille,
+           CAST(MIN(actual) AS BIGINT) AS min_len,
+           CAST(MAX(actual) AS BIGINT) AS max_len
+    FROM t
+    GROUP BY source
+    ORDER BY source
+    """,
+)
+def quality_metadata_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Metadata-consistency audit: recompute a derived column
+    (``n_chars``) from the payload and reconcile against the stored
+    metadata, per source.  Stale or drifted metadata is how length
+    filters, pricing, and dedup keys silently rot after upstream
+    re-encodes; this is the freshness check a lakehouse runs on every
+    ingest batch (the same contract as the pipeline's quality
+    expectations, expressed as a registered audit).
+
+    Scale shape: narrow map-only reconcile in whole-stage codegen +
+    ONE map-side-combined groupBy(source) — |sources| output rows,
+    nothing else shuffles."""
+    docs = load_testdata(spark, sf_dir, "documents")
+    t = docs.select(
+        "source",
+        F.length("text").cast("long").alias("actual"),
+        F.col("n_chars").cast("long").alias("meta"),
+    )
+    return (
+        t.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(F.when(F.col("actual") != F.col("meta"), 1).otherwise(0)).alias(
+                "n_mismatch"
+            ),
+            F.max(F.abs(F.col("actual") - F.col("meta"))).alias("max_abs_drift"),
+            F.min("actual").alias("min_len"),
+            F.max("actual").alias("max_len"),
+        )
+        .select(
+            "source",
+            F.col("n_docs").cast("bigint"),
+            F.col("n_mismatch").cast("bigint"),
+            F.col("max_abs_drift").cast("bigint"),
+            F.expr("div(1000 * n_mismatch, n_docs)")
+            .cast("bigint")
+            .alias("mismatch_permille"),
+            F.col("min_len").cast("bigint"),
+            F.col("max_len").cast("bigint"),
+        )
+        .orderBy("source")
+    )
+
+
 # ---------------------------------------------------------------------------
 # Round-5 session-5: hybrid retrieval fusion, Bloom decontamination
 # pre-filter, k-center coreset selection, HyperLogLog distinct sketch
@@ -8796,6 +9020,58 @@ def orders_benford_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@register(
+    "cube_revenue_by_flag_status",
+    """
+    SELECT COALESCE(l_returnflag, 'ALL') AS l_returnflag,
+           COALESCE(l_linestatus, 'ALL') AS l_linestatus,
+           CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus)
+               AS INTEGER) AS grouping_id,
+           CAST(COUNT(*) AS BIGINT) AS n_items,
+           CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
+               AS revenue_centi
+    FROM lineitem
+    GROUP BY CUBE (l_returnflag, l_linestatus)
+    ORDER BY grouping_id, l_returnflag, l_linestatus
+    """,
+)
+def cube_revenue_by_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CUBE aggregation — the remaining member of the grouped-
+    aggregation family next to ``rollup_revenue`` and
+    ``grouping_sets_revenue``: all 2² margin combinations of
+    (returnflag, linestatus) in one pass, with the GROUPING() bitmask
+    distinguishing real NULL-like margins from data values (the
+    ``'ALL'`` coalesce is presentation; grouping_id is the truth).
+    Revenue in exact centi-units (per-row rounding before the integer
+    sum — order-independent on both engines).
+
+    Scale shape: Spark expands CUBE into a single Expand + one
+    map-side-combinable aggregate — one shuffle for all four grouping
+    sets, output bounded by the category-domain product; the same
+    Expand-based plan AQE-sizes at any N."""
+    return (
+        _fan_out(load_testdata(spark, sf_dir, "lineitem"))
+        .cube("l_returnflag", "l_linestatus")
+        .agg(
+            (F.grouping("l_returnflag") * 2 + F.grouping("l_linestatus"))
+            .cast("int")
+            .alias("grouping_id"),
+            F.count(F.lit(1)).cast("bigint").alias("n_items"),
+            F.sum(F.expr("cast(round(l_extendedprice * 100) as bigint)"))
+            .cast("bigint")
+            .alias("revenue_centi"),
+        )
+        .select(
+            F.coalesce("l_returnflag", F.lit("ALL")).alias("l_returnflag"),
+            F.coalesce("l_linestatus", F.lit("ALL")).alias("l_linestatus"),
+            "grouping_id",
+            "n_items",
+            "revenue_centi",
+        )
+        .orderBy("grouping_id", "l_returnflag", "l_linestatus")
+    )
+
+
 # ---------------------------------------------------------------------------
 # Round-5 session-5 batch 9: mutual-kNN paraphrase mining
 # ---------------------------------------------------------------------------
@@ -9516,6 +9792,73 @@ def pipeline_incremental_manifest(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 @register(
+    "quality_simpson_diversity",
+    r"""
+    WITH tok AS (
+        SELECT source, unnest(string_split_regex(text, '\s+')) AS tok
+        FROM documents
+    ),
+    c AS (SELECT source, tok, COUNT(*) AS c FROM tok GROUP BY source, tok),
+    agg AS (
+        SELECT source,
+               SUM(c) AS n_tokens,
+               COUNT(*) AS n_types,
+               SUM(c * (c - 1)) AS coll2
+        FROM c GROUP BY source
+    )
+    SELECT source,
+           CAST(n_tokens AS BIGINT) AS n_tokens,
+           CAST(n_types AS BIGINT) AS n_types,
+           CAST((1000000 * coll2) // (n_tokens * (n_tokens - 1)) AS BIGINT)
+               AS simpson_micro,
+           CAST(1000000 - (1000000 * coll2) // (n_tokens * (n_tokens - 1))
+               AS BIGINT) AS diversity_micro
+    FROM agg ORDER BY source
+    """,
+)
+def quality_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source lexical diversity via the Simpson index — the
+    probability two tokens drawn without replacement from a source are
+    the SAME type (Σc(c−1)/N(N−1), the unbiased collision estimator),
+    and its complement (Gini–Simpson diversity).  A source whose
+    diversity collapses is template/boilerplate-heavy — the
+    mixture-weighting signal TTR misses because TTR ignores the shape
+    of the frequency tail.  Exact integer micro-units on both engines
+    (N ≤ 10⁶ tokens/source at test SF keeps 10⁶·Σc(c−1) far inside
+    bigint; production keeps the same integers per shard and merges
+    numerators/denominators — both are plain sums).
+
+    Scale shape: explode → ONE map-side-combinable groupBy(source,
+    token) → ONE groupBy(source) over the per-type counts; output
+    |sources| rows.  No window, no join, combinable end-to-end (the
+    same two-level aggregate pattern as the burstiness query)."""
+    docs = load_testdata(spark, sf_dir, "documents")
+    tok = docs.select(
+        "source", F.explode(F.split("text", X.TOKEN_RE)).alias("tok")
+    )
+    c = tok.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("c"))
+    agg = c.groupBy("source").agg(
+        F.sum("c").alias("n_tokens"),
+        F.count(F.lit(1)).alias("n_types"),
+        F.sum(F.col("c") * (F.col("c") - 1)).alias("coll2"),
+    )
+    return agg.select(
+        "source",
+        F.col("n_tokens").cast("bigint"),
+        F.col("n_types").cast("bigint"),
+        F.expr("div(1000000 * coll2, n_tokens * (n_tokens - 1))")
+        .cast("bigint")
+        .alias("simpson_micro"),
+        (
+            F.lit(1000000)
+            - F.expr("div(1000000 * coll2, n_tokens * (n_tokens - 1))")
+        )
+        .cast("bigint")
+        .alias("diversity_micro"),
+    ).orderBy("source")
+
+
+@register(
     "pipeline_skew_report",
     """
     WITH c AS (
@@ -9589,6 +9932,69 @@ def pipeline_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p99_cnt").cast("bigint"),
         F.expr("div(1000000 * max_cnt, n_rows)").cast("bigint").alias("top_share_micro"),
         F.expr("div(1000 * max_cnt, p50_cnt)").cast("bigint").alias("skew_ratio_milli"),
+    )
+
+
+@register(
+    "vocab_oov_rate_by_source",
+    r"""
+    WITH tok AS (
+        SELECT source, unnest(string_split_regex(text, '\s+')) AS tok
+        FROM documents
+    ),
+    gtok AS (SELECT tok, COUNT(*) AS c FROM tok GROUP BY tok),
+    vocab AS (
+        SELECT tok FROM gtok ORDER BY c DESC, tok ASC LIMIT 256
+    ),
+    per_src AS (SELECT source, tok, COUNT(*) AS c FROM tok GROUP BY source, tok),
+    m AS (
+        SELECT p.source, p.c,
+               CASE WHEN v.tok IS NULL THEN 0 ELSE 1 END AS in_vocab
+        FROM per_src p LEFT JOIN vocab v ON v.tok = p.tok
+    )
+    SELECT source,
+           CAST(SUM(c) AS BIGINT) AS n_tokens,
+           CAST(SUM(CASE WHEN in_vocab = 0 THEN c ELSE 0 END) AS BIGINT) AS n_oov,
+           CAST((1000 * SUM(CASE WHEN in_vocab = 0 THEN c ELSE 0 END)) // SUM(c)
+               AS BIGINT) AS oov_permille
+    FROM m GROUP BY source ORDER BY source
+    """,
+)
+def vocab_oov_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Out-of-vocabulary rate per source against the corpus top-256
+    vocabulary (count-desc, token-asc tie-break — deterministic on both
+    engines) — the mixture diagnostic that flags a source whose token
+    distribution the shared tokenizer/vocab serves poorly (high OOV =
+    fertility blowup for that slice).
+
+    Scale shape: the vocab is a TakeOrderedAndProject over the global
+    token counts (top-k, never a full sort); per-source counts are ONE
+    combinable groupBy; membership is an equi-join against the ≤256-row
+    broadcast vocab.  Everything is bounded by vocab size or |sources|
+    after the two token aggregates."""
+    docs = load_testdata(spark, sf_dir, "documents")
+    tok = docs.select("source", F.explode(F.split("text", X.TOKEN_RE)).alias("tok"))
+    glob = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
+    vocab = glob.orderBy(F.col("c").desc(), F.col("tok").asc()).limit(256).select("tok")
+    per_src = tok.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("c"))
+    m = per_src.join(
+        F.broadcast(vocab.withColumn("in_vocab", F.lit(1))), "tok", "left"
+    )
+    return (
+        m.groupBy("source")
+        .agg(
+            F.sum("c").cast("bigint").alias("n_tokens"),
+            F.sum(F.when(F.col("in_vocab").isNull(), F.col("c")).otherwise(0))
+            .cast("bigint")
+            .alias("n_oov"),
+        )
+        .select(
+            "source",
+            "n_tokens",
+            "n_oov",
+            F.expr("div(1000 * n_oov, n_tokens)").cast("bigint").alias("oov_permille"),
+        )
+        .orderBy("source")
     )
 
 
@@ -10837,6 +11243,64 @@ def quality_tukey_fences_by_source(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
+@register(
+    "events_journey_trigrams",
+    """
+    WITH seq AS (
+        SELECT user_id, event_type,
+               lead(event_type, 1) OVER (PARTITION BY user_id
+                                         ORDER BY ts, event_id) AS t2,
+               lead(event_type, 2) OVER (PARTITION BY user_id
+                                         ORDER BY ts, event_id) AS t3
+        FROM events
+    )
+    SELECT event_type || '>' || t2 || '>' || t3 AS journey,
+           CAST(COUNT(*) AS BIGINT) AS n
+    FROM seq WHERE t2 IS NOT NULL AND t3 IS NOT NULL
+    GROUP BY 1
+    ORDER BY n DESC, journey
+    LIMIT 20
+    """,
+)
+def events_journey_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-20 three-step user journeys (event-type trigrams in strict
+    per-user time order) — the sequence view of behavior that the
+    first-order ``events_transition_matrix`` cannot see: a high
+    view>click>purchase count versus view>click>error separates a
+    working funnel from a broken checkout, and anomalous
+    signup>signup>signup loops expose bot registration.
+
+    Parity contract: ordering ties (same user, same timestamp) are
+    broken by event_id on both engines; journeys with fewer than two
+    successors are dropped (no NULL-padded partial trigrams).
+
+    Scale shape: the double-lead runs in ONE user-partitioned window
+    pass (natural key partitioning — the same shuffle sessionization
+    pays); the trigram count is a map-side-combinable groupBy over
+    ≤|types|³ keys, and top-20 plans as TakeOrderedAndProject — per-
+    partition heaps, never a global sort."""
+    ev = load_testdata(spark, sf_dir, "events").select(
+        "user_id", "event_id", "ts", "event_type"
+    )
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = ev.select(
+        "event_type",
+        F.lead("event_type", 1).over(w).alias("t2"),
+        F.lead("event_type", 2).over(w).alias("t3"),
+    )
+    return (
+        seq.filter(F.col("t2").isNotNull() & F.col("t3").isNotNull())
+        .select(
+            F.concat_ws(">", "event_type", "t2", "t3").alias("journey")
+        )
+        .groupBy("journey")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select("journey", F.col("n").cast("bigint"))
+        .orderBy(F.col("n").desc(), "journey")
+        .limit(20)
+    )
+
+
 # ---------------------------------------------------------------------------
 # Round-6 batch 12: deseasonalized anomalies, balanced downsample, DAU/WAU
 # ---------------------------------------------------------------------------
@@ -11631,6 +12095,66 @@ def dedup_minhash_multiband_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 @register(
+    "events_user_lifetime_stats",
+    """
+    WITH ul AS (
+        SELECT user_id,
+               MAX(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)))
+                 - MIN(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)))
+                 AS lifetime_days,
+               COUNT(*) AS n_events
+        FROM events GROUP BY user_id
+    )
+    SELECT CAST(lifetime_days // 7 AS INTEGER) AS lifetime_weeks,
+           CAST(COUNT(*) AS BIGINT) AS n_users,
+           CAST(SUM(n_events) AS BIGINT) AS total_events,
+           CAST(SUM(n_events) // COUNT(*) AS BIGINT) AS events_per_user
+    FROM ul GROUP BY 1 ORDER BY 1
+    """,
+)
+def events_user_lifetime_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """User-lifetime histogram: days between each user's first and
+    last event, bucketed by week, with cohort mass and per-user
+    intensity — the churn-shape summary (is the base long-lived or a
+    spike of one-week tourists?) that complements the cohort-retention
+    matrix (events_cohort_retention tracks WHEN users return; this
+    tracks HOW LONG they stay at all).
+
+    Scale shape: ONE map-side-combinable groupBy(user) computes
+    min/max/count per user; the week histogram is a second combinable
+    groupBy over the per-user relation.  Two shuffles total, both on
+    natural keys; no window, no BNLJ, no broadcast."""
+    ul = (
+        load_testdata(spark, sf_dir, "events")
+        .select(
+            "user_id",
+            F.expr("datediff(cast(ts as date), date'2024-01-01')").alias("x"),
+        )
+        .groupBy("user_id")
+        .agg(
+            (F.max("x") - F.min("x")).alias("lifetime_days"),
+            F.count(F.lit(1)).alias("n_events"),
+        )
+    )
+    return (
+        ul.groupBy(F.expr("cast(div(lifetime_days, 7) as int)").alias("lifetime_weeks"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_users"),
+            F.sum("n_events").cast("bigint").alias("total_events"),
+        )
+        .select(
+            "lifetime_weeks",
+            "n_users",
+            "total_events",
+            F.expr("cast(div(total_events, n_users) as bigint)").alias(
+                "events_per_user"
+            ),
+        )
+        .orderBy("lifetime_weeks")
+    )
+
+
+@register(
     "crossmodal_coverage_report",
     """
     WITH cov AS (
@@ -11904,6 +12428,66 @@ def orders_repeat_purchase_intervals(spark: SparkSession, sf_dir: str) -> DataFr
 # ---------------------------------------------------------------------------
 # Round-6 batch 17: Good-Turing unseen mass, weekly type-mix drift
 # ---------------------------------------------------------------------------
+
+
+@register(
+    "vocab_good_turing_unseen_mass",
+    r"""
+    WITH tok AS (
+        SELECT unnest(string_split_regex(text, '\s+')) AS tok FROM documents
+    ),
+    tc AS (SELECT tok, COUNT(*) AS c FROM tok GROUP BY tok)
+    SELECT CAST(SUM(c) AS BIGINT) AS n_tokens,
+           CAST(COUNT(*) AS BIGINT) AS vocab_size,
+           CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax,
+           CAST(SUM(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_dis_legomena,
+           CAST((1000 * SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END)) // SUM(c)
+               AS BIGINT) AS unseen_mass_permille,
+           CAST((1000 * SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END)) // COUNT(*)
+               AS BIGINT) AS hapax_vocab_permille
+    FROM tc
+    """,
+)
+def vocab_good_turing_unseen_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Good–Turing unseen-probability-mass estimate: P(next token is
+    NOVEL) ≈ N₁/N (hapax count over token count) — the language-model
+    smoothing number that says how much probability a model trained
+    on this corpus must reserve for words it has never seen, and the
+    leading indicator for 'will more data still help the tokenizer'
+    (falling hapax share = saturating vocabulary — the same signal
+    vocab_heaps_growth reads as a curve, here as the classical point
+    estimate).  Dis-legomena (c=2) ride along for the GT confidence
+    heuristic (N₁ should ≈ 2·N₂ under Zipf).
+
+    Scale shape: explode → ONE map-side-combinable groupBy(token),
+    then a single global aggregate projection — no join, no window,
+    no broadcast, nothing else.  The vocabulary relation is the same
+    one every tokenizer-build query already pays for."""
+    docs = load_testdata(spark, sf_dir, "documents")
+    tc = (
+        docs.select(F.explode(X.tokens("text")).alias("tok"))
+        .groupBy("tok")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    return tc.agg(
+        F.sum("c").cast("bigint").alias("n_tokens"),
+        F.count(F.lit(1)).cast("bigint").alias("vocab_size"),
+        F.sum(F.when(F.col("c") == 1, 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_hapax"),
+        F.sum(F.when(F.col("c") == 2, 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_dis_legomena"),
+        F.expr(
+            "cast(div(1000 * sum(case when c = 1 then 1 else 0 end), sum(c))"
+            " as bigint)"
+        ).alias("unseen_mass_permille"),
+        F.expr(
+            "cast(div(1000 * sum(case when c = 1 then 1 else 0 end), count(1))"
+            " as bigint)"
+        ).alias("hapax_vocab_permille"),
+    )
 
 
 @register(
@@ -12199,6 +12783,72 @@ def events_time_to_convert_quantiles(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
+@register(
+    "events_new_vs_returning_daily",
+    """
+    WITH ud AS (
+        SELECT DISTINCT user_id,
+               datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS x
+        FROM events
+    ),
+    first_day AS (SELECT user_id, MIN(x) AS fd FROM ud GROUP BY user_id)
+    SELECT CAST(ud.x AS INTEGER) AS day_idx,
+           CAST(COUNT(*) AS BIGINT) AS active_users,
+           CAST(SUM(CASE WHEN f.fd = ud.x THEN 1 ELSE 0 END) AS BIGINT)
+               AS new_users,
+           CAST(SUM(CASE WHEN f.fd < ud.x THEN 1 ELSE 0 END) AS BIGINT)
+               AS returning_users,
+           CAST((1000 * SUM(CASE WHEN f.fd = ud.x THEN 1 ELSE 0 END))
+                // COUNT(*) AS BIGINT) AS new_share_permille
+    FROM ud JOIN first_day f ON f.user_id = ud.user_id
+    GROUP BY ud.x ORDER BY day_idx
+    """,
+)
+def events_new_vs_returning_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Daily active users split into NEW (first-ever active day) vs
+    RETURNING — the growth-accounting decomposition behind every DAU
+    chart: flat DAU with a rising new-share means churn is eating
+    acquisition; the cohort-retention matrix
+    (events_cohort_retention) explains WHERE the returners come from,
+    this gives the daily topline split.
+
+    Scale shape: one groupBy(user, day) dedup, one combinable
+    groupBy(user) MIN for first-day, one key equi-join back, one
+    groupBy(day) — all natural-key shuffles, no window, no BNLJ."""
+    ud = (
+        load_testdata(spark, sf_dir, "events")
+        .select(
+            "user_id",
+            F.expr("datediff(cast(ts as date), date'2024-01-01')").alias("x"),
+        )
+        .distinct()
+    )
+    first_day = ud.groupBy("user_id").agg(F.min("x").alias("fd"))
+    return (
+        ud.join(first_day, "user_id")
+        .groupBy("x")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("active_users"),
+            F.sum(F.when(F.col("fd") == F.col("x"), 1).otherwise(0))
+            .cast("bigint")
+            .alias("new_users"),
+            F.sum(F.when(F.col("fd") < F.col("x"), 1).otherwise(0))
+            .cast("bigint")
+            .alias("returning_users"),
+        )
+        .select(
+            F.col("x").cast("int").alias("day_idx"),
+            "active_users",
+            "new_users",
+            "returning_users",
+            F.expr("cast(div(1000 * new_users, active_users) as bigint)").alias(
+                "new_share_permille"
+            ),
+        )
+        .orderBy("day_idx")
+    )
+
+
 # ---------------------------------------------------------------------------
 # Round-6 batch 20: hour-of-week heatmap, trailing-7d revenue MA
 # ---------------------------------------------------------------------------
@@ -12253,6 +12903,73 @@ def events_hour_weekday_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .orderBy("weekday", "hour_utc")
+    )
+
+
+@register(
+    "orders_daily_revenue_7d_ma",
+    """
+    WITH daily AS (
+        SELECT datediff('day', DATE '1992-01-01', o_orderdate) AS x,
+               SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS rev_c
+        FROM orders GROUP BY 1
+    ),
+    contrib AS (
+        SELECT d AS x, rev_c
+        FROM daily CROSS JOIN unnest(generate_series(daily.x, daily.x + 6)) t(d)
+    ),
+    ma AS (
+        SELECT x, SUM(rev_c) AS s, COUNT(*) AS k
+        FROM contrib GROUP BY x
+    )
+    SELECT CAST(d.x AS INTEGER) AS day_idx,
+           CAST(d.rev_c AS BIGINT) AS revenue_cents,
+           CAST(m.s // m.k AS BIGINT) AS ma7_cents,
+           CAST(m.k AS INTEGER) AS window_days
+    FROM daily d JOIN ma m ON m.x = d.x
+    ORDER BY day_idx
+    """,
+)
+def orders_daily_revenue_7d_ma(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Daily revenue with its trailing-7-day moving average — the
+    smoothed topline read alongside the raw series (the MA crossing
+    under the daily line flags a slowdown earlier than eyeballing
+    noise).  Partial windows at the series head average over the
+    days actually present (window_days reports the divisor).
+
+    Scale shape: the SCALABLE moving-average spelling — each daily
+    aggregate row EMITS its 7 trailing membership days (constant ×7
+    map-side sequence-explode of the ALREADY-collapsed daily
+    relation, the events_dau_wau_stickiness trick), then one
+    combinable groupBy(day) — instead of an unpartitioned range
+    window over the series (the single-task shape the fleet bans).
+    At 100 TB the daily relation is |days| rows either way; the same
+    spelling keeps working when the grain drops to minutes."""
+    daily = (
+        load_testdata(spark, sf_dir, "orders")
+        .select(
+            F.expr("datediff(o_orderdate, date'1992-01-01')").alias("x"),
+            F.expr("cast(round(o_totalprice * 100) as bigint)").alias("rc"),
+        )
+        .groupBy("x")
+        .agg(F.sum("rc").alias("rev_c"))
+    )
+    contrib = daily.select(
+        F.explode(F.sequence(F.col("x"), F.col("x") + 6)).alias("x"),
+        "rev_c",
+    )
+    ma = contrib.groupBy("x").agg(
+        F.sum("rev_c").alias("s"), F.count(F.lit(1)).alias("k")
+    )
+    return (
+        daily.join(ma, "x")
+        .select(
+            F.col("x").cast("int").alias("day_idx"),
+            F.col("rev_c").cast("bigint").alias("revenue_cents"),
+            F.expr("cast(div(s, k) as bigint)").alias("ma7_cents"),
+            F.col("k").cast("int").alias("window_days"),
+        )
+        .orderBy("day_idx")
     )
 
 

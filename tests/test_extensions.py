@@ -296,6 +296,19 @@ def test_training_prep_funnel_invariants(spark, sf_smoke):
     assert docs[-1] > 0
 
 
+def test_token_count_invariants(spark, sf_smoke):
+    """BPE-ish pre-tokenization splits at least as fine as whitespace:
+    bpe_tokens >= ws_tokens for every doc, and the density ratio is
+    consistent with the counts it was derived from."""
+    import __spark_entry__ as entry_mod
+
+    rows = entry_mod.queries()["text_token_counts"](spark, sf_smoke).collect()
+    assert rows
+    for r in rows:
+        assert r["bpe_tokens"] >= r["ws_tokens"] > 0
+        assert r["chars_per_bpe_milli"] == 1000 * r["n_chars"] // r["bpe_tokens"]
+
+
 def test_decontaminate_flags_planted_eval_clones(spark, sf_smoke):
     """Every planted near-dup clone of an eval doc (doc_id%10==0 →
     clone at +100000) must be flagged as contaminated — the clone
@@ -323,6 +336,20 @@ def test_decontaminate_flags_planted_eval_clones(spark, sf_smoke):
         d for d in corpus_ids if d >= 200000 and (d - 200000) % 10 == 0
     }
     assert exact_eval_copies <= flagged
+
+
+def test_pack_sequences_invariants(spark, sf_smoke):
+    """Packing arithmetic: sequences = ceil(tokens/512) per shard, fill
+    can never exceed 1000 permille, and straddling docs are bounded by
+    doc count."""
+    import __spark_entry__ as entry_mod
+
+    rows = entry_mod.queries()["pipeline_pack_sequences"](spark, sf_smoke).collect()
+    assert rows, "expected shards"
+    for r in rows:
+        assert r["n_sequences"] == -(-r["n_tokens"] // 512)
+        assert 0 < r["fill_permille"] <= 1000
+        assert 0 <= r["n_straddling"] <= r["n_docs"]
 
 
 def test_incremental_matches_planted_copies(spark, sf_smoke):
@@ -905,6 +932,46 @@ def test_unimax_closed_form_equals_sequential_waterfill(spark, sf_smoke):
     assert got == alloc
 
 
+def test_sequence_packing_python_differential(spark, sf_smoke):
+    """Full Python replay of ``pipeline_pack_sequences`` on the same
+    corpus: shard by doc_id mod 8, concat in doc_id order, chop at 512
+    — every reported number must match exactly."""
+    import re
+
+    from sales_azure_data_engineer_project_spark.io import load_testdata
+    from sales_azure_data_engineer_project_spark.queries_extensions import (
+        pipeline_pack_sequences,
+    )
+
+    docs = load_testdata(spark, sf_smoke, "documents").select("doc_id", "text").collect()
+    per_shard: dict = {}
+    for r in docs:
+        n_tok = len(re.split(r"\s+", r["text"]))
+        per_shard.setdefault(r["doc_id"] % 8, []).append((r["doc_id"], n_tok))
+    expect = {}
+    for shard, items in per_shard.items():
+        items.sort()
+        cum = 0
+        straddling = 0
+        for _, n in items:
+            start, end = cum, cum + n
+            if n > 0 and start // 512 != (end - 1) // 512:
+                straddling += 1
+            cum = end
+        n_seqs = (cum + 511) // 512
+        expect[shard] = (
+            len(items), cum, n_seqs, straddling, 1000 * cum // (512 * n_seqs)
+        )
+    got = {
+        r["shard"]: (
+            r["n_docs"], r["n_tokens"], r["n_sequences"], r["n_straddling"],
+            r["fill_permille"],
+        )
+        for r in pipeline_pack_sequences(spark, sf_smoke).collect()
+    }
+    assert got == expect
+
+
 # ---------------------------------------------------------------------------
 # Round-5 session-4 additions
 # ---------------------------------------------------------------------------
@@ -1068,6 +1135,31 @@ def test_bootstrap_ci_python_differential(spark):
             for r in stats_bootstrap_ci(spark, d).collect()
         }
     assert got == expect
+
+
+def test_metadata_consistency_flags_planted_drift(spark):
+    """A doc whose stored n_chars disagrees with its payload by 7 must
+    be the only mismatch, with the drift magnitude reported."""
+    import os
+    import tempfile
+
+    from sales_azure_data_engineer_project_spark.queries_extensions import (
+        quality_metadata_consistency,
+    )
+
+    rows = [
+        (1, "hello world", "en", "sA", 11),
+        (2, "goodbye", "en", "sA", 14),   # planted: off by 7
+        (3, "ok then", "en", "sB", 7),
+    ]
+    with tempfile.TemporaryDirectory() as d:
+        spark.createDataFrame(
+            rows, ["doc_id", "text", "lang", "source", "n_chars"]
+        ).write.parquet(os.path.join(d, "documents.parquet"))
+        out = {r["source"]: r for r in quality_metadata_consistency(spark, d).collect()}
+    assert out["sA"]["n_mismatch"] == 1 and out["sA"]["max_abs_drift"] == 7
+    assert out["sA"]["mismatch_permille"] == 500
+    assert out["sB"]["n_mismatch"] == 0 and out["sB"]["max_abs_drift"] == 0
 
 
 def test_hybrid_rrf_fuses_both_tiers(spark, sf_smoke):
@@ -1514,6 +1606,27 @@ def test_benford_deviation_differential(spark, sf_smoke):
         assert r["dev_milli"] == (1000 * c) // n - QE._BENFORD_MILLI[d]
 
 
+def test_cube_margins_consistent(spark, sf_smoke):
+    """All four grouping sets must be internally consistent: cell rows
+    sum to each margin and to the grand total."""
+    from sales_azure_data_engineer_project_spark import queries_core as Q
+    from sales_azure_data_engineer_project_spark import queries_extensions  # noqa: F401 (registers)
+
+    rows = Q.QUERIES["cube_revenue_by_flag_status"](spark, sf_smoke).collect()
+    cells = [r for r in rows if r["grouping_id"] == 0]
+    by_flag = {r["l_returnflag"]: r for r in rows if r["grouping_id"] == 1}
+    by_stat = {r["l_linestatus"]: r for r in rows if r["grouping_id"] == 2}
+    grand = [r for r in rows if r["grouping_id"] == 3]
+    assert len(grand) == 1
+    for margin, key in ((by_flag, "l_returnflag"), (by_stat, "l_linestatus")):
+        for val, m in margin.items():
+            sub = [c for c in cells if c[key] == val]
+            assert m["n_items"] == sum(c["n_items"] for c in sub)
+            assert m["revenue_centi"] == sum(c["revenue_centi"] for c in sub)
+    assert grand[0]["n_items"] == sum(c["n_items"] for c in cells)
+    assert grand[0]["revenue_centi"] == sum(c["revenue_centi"] for c in cells)
+
+
 def test_mutual_knn_reciprocity_invariants(spark, sf_smoke):
     """Every pair must be reciprocal within rank 3, symmetric-unique,
     within-cluster, and cosine-consistent with a direct recompute."""
@@ -1775,6 +1888,31 @@ def test_incremental_manifest_accounts_for_every_doc(spark):
     assert sum(by_status.values()) == n + n41
 
 
+def test_simpson_diversity_differential(spark):
+    """quality_simpson_diversity vs collections.Counter on sf0.001."""
+    import collections
+    import re as _re
+
+    import duckdb
+
+    import __spark_entry__ as m
+
+    sf = "/root/testdata/sf0.001"
+    got = {r["source"]: r for r in m.queries()["quality_simpson_diversity"](spark, sf).collect()}
+    rows = duckdb.sql(f"SELECT source, text FROM '{sf}/documents.parquet'").fetchall()
+    per: dict = {}
+    for source, text in rows:
+        per.setdefault(source, collections.Counter()).update(_re.split(r"\s+", text))
+    assert set(got) == set(per)
+    for source, cnt in per.items():
+        n = sum(cnt.values())
+        coll2 = sum(c * (c - 1) for c in cnt.values())
+        r = got[source]
+        assert r["n_tokens"] == n and r["n_types"] == len(cnt)
+        assert r["simpson_micro"] == (1000000 * coll2) // (n * (n - 1))
+        assert r["diversity_micro"] == 1000000 - r["simpson_micro"]
+
+
 def test_skew_report_differential(spark):
     """pipeline_skew_report vs a plain-Python pass over the real key
     distribution (p50/p99 from the count-of-counts grid, ceiling-rank
@@ -1808,6 +1946,33 @@ def test_skew_report_differential(spark):
     assert r["p99_cnt"] == q_at(99, 100)
     assert r["top_share_micro"] == (1000000 * mx) // n_rows
     assert r["skew_ratio_milli"] == (1000 * mx) // r["p50_cnt"]
+
+
+def test_oov_rate_differential(spark):
+    """vocab_oov_rate_by_source vs Counter-based top-256 vocab."""
+    import collections
+    import re as _re
+
+    import duckdb
+
+    import __spark_entry__ as m
+
+    sf = "/root/testdata/sf0.001"
+    got = {r["source"]: r for r in m.queries()["vocab_oov_rate_by_source"](spark, sf).collect()}
+    rows = duckdb.sql(f"SELECT source, text FROM '{sf}/documents.parquet'").fetchall()
+    glob: collections.Counter = collections.Counter()
+    per: dict = {}
+    for source, text in rows:
+        toks = _re.split(r"\s+", text)
+        glob.update(toks)
+        per.setdefault(source, collections.Counter()).update(toks)
+    vocab = {t for t, _ in sorted(glob.items(), key=lambda kv: (-kv[1], kv[0]))[:256]}
+    for source, cnt in per.items():
+        n = sum(cnt.values())
+        oov = sum(c for t, c in cnt.items() if t not in vocab)
+        r = got[source]
+        assert (r["n_tokens"], r["n_oov"]) == (n, oov)
+        assert r["oov_permille"] == (1000 * oov) // n
 
 
 def test_source_length_emd_differential(spark):
@@ -2214,6 +2379,36 @@ def test_tukey_fences_differential(spark):
         assert (r["n_low"], r["n_high"]) == (n_low, n_high)
 
 
+def test_journey_trigrams_differential(spark):
+    """events_journey_trigrams vs a plain-Python per-user sequence
+    walk with (ts, event_id) ordering on the real sf0.001 events."""
+    from collections import Counter
+
+    import duckdb
+
+    import __spark_entry__ as m
+
+    sf = "/root/testdata/sf0.001"
+    rows = duckdb.sql(
+        f"SELECT user_id, ts, event_id, event_type FROM '{sf}/events.parquet'"
+    ).fetchall()
+    per: dict = {}
+    for u, ts, eid, ty in rows:
+        per.setdefault(u, []).append((ts, eid, ty))
+    cnt: Counter = Counter()
+    for seq in per.values():
+        seq.sort()
+        types = [t[2] for t in seq]
+        for i in range(len(types) - 2):
+            cnt[">".join(types[i : i + 3])] += 1
+    expect = sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[:20]
+    got = [
+        (r["journey"], r["n"])
+        for r in m.queries()["events_journey_trigrams"](spark, sf).collect()
+    ]
+    assert got == expect
+
+
 def test_balanced_downsample_differential(spark):
     """sample_balanced_class_downsample vs plain-Python md5-ordered
     selection: identical kept SET per label (checksummed), minority
@@ -2462,6 +2657,42 @@ def test_multiband_sweep_differential(spark):
     assert flagged_by_r[4] <= flagged_by_r[2] <= flagged_by_r[1]
 
 
+def test_user_lifetime_differential(spark):
+    """events_user_lifetime_stats vs plain-Python per-user min/max."""
+    import duckdb
+
+    import __spark_entry__ as m
+
+    sf = "/root/testdata/sf0.001"
+    rows = duckdb.sql(
+        f"""SELECT user_id,
+                   datediff('day', DATE '2024-01-01', CAST(ts AS DATE)),
+                   COUNT(*)
+            FROM '{sf}/events.parquet' GROUP BY 1, 2"""
+    ).fetchall()
+    per: dict = {}
+    for u, x, c in rows:
+        lo, hi, n = per.get(u, (10**9, -(10**9), 0))
+        per[u] = (min(lo, x), max(hi, x), n + c)
+    from collections import defaultdict
+
+    agg = defaultdict(lambda: [0, 0])
+    for lo, hi, n in per.values():
+        wk = (hi - lo) // 7
+        agg[wk][0] += 1
+        agg[wk][1] += n
+    got = {
+        r["lifetime_weeks"]: r
+        for r in m.queries()["events_user_lifetime_stats"](spark, sf).collect()
+    }
+    assert set(got) == set(agg)
+    for wk, (nu, te) in agg.items():
+        r = got[wk]
+        assert r["n_users"] == nu
+        assert r["total_events"] == te
+        assert r["events_per_user"] == te // nu
+
+
 def test_crossmodal_coverage_differential(spark):
     """crossmodal_coverage_report vs plain-Python id-set coverage."""
     import duckdb
@@ -2580,6 +2811,32 @@ def test_repeat_purchase_intervals_differential(spark):
         assert r["p90_days"] == gs[(90 * n + 99) // 100 - 1]
 
 
+def test_good_turing_differential(spark):
+    """vocab_good_turing_unseen_mass vs plain-Python token counting."""
+    import re
+    from collections import Counter
+
+    import duckdb
+
+    import __spark_entry__ as m
+
+    sf = "/root/testdata/sf0.001"
+    cnt: Counter = Counter()
+    for (text,) in duckdb.sql(
+        f"SELECT text FROM '{sf}/documents.parquet'"
+    ).fetchall():
+        cnt.update(re.split(r"\s+", text))
+    n = sum(cnt.values())
+    v = len(cnt)
+    n1 = sum(1 for c in cnt.values() if c == 1)
+    n2 = sum(1 for c in cnt.values() if c == 2)
+    [r] = m.queries()["vocab_good_turing_unseen_mass"](spark, sf).collect()
+    assert (r["n_tokens"], r["vocab_size"]) == (n, v)
+    assert (r["n_hapax"], r["n_dis_legomena"]) == (n1, n2)
+    assert r["unseen_mass_permille"] == (1000 * n1) // n
+    assert r["hapax_vocab_permille"] == (1000 * n1) // v
+
+
 def test_type_mix_drift_differential(spark):
     """events_type_mix_drift_weekly vs plain-Python weekly TVD."""
     from collections import Counter
@@ -2690,6 +2947,39 @@ def test_time_to_convert_differential(spark):
         assert r[f"p{p}_min"] == gaps[(p * n + 99) // 100 - 1]
 
 
+def test_new_vs_returning_differential(spark):
+    """events_new_vs_returning_daily vs plain-Python first-day sets,
+    including the identity new + returning = active."""
+    import duckdb
+
+    import __spark_entry__ as m
+
+    sf = "/root/testdata/sf0.001"
+    rows = duckdb.sql(
+        f"""SELECT DISTINCT user_id,
+                   datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
+            FROM '{sf}/events.parquet'"""
+    ).fetchall()
+    per_day: dict = {}
+    first: dict = {}
+    for u, x in rows:
+        per_day.setdefault(int(x), set()).add(u)
+        first[u] = min(first.get(u, int(x)), int(x))
+    got = {
+        r["day_idx"]: r
+        for r in m.queries()["events_new_vs_returning_daily"](spark, sf).collect()
+    }
+    assert set(got) == set(per_day)
+    for d, users in per_day.items():
+        new = sum(1 for u in users if first[u] == d)
+        r = got[d]
+        assert r["active_users"] == len(users)
+        assert r["new_users"] == new
+        assert r["returning_users"] == len(users) - new
+        assert r["new_users"] + r["returning_users"] == r["active_users"]
+        assert r["new_share_permille"] == (1000 * new) // len(users)
+
+
 def test_hour_weekday_heatmap_differential(spark):
     """events_hour_weekday_heatmap vs plain-Python epoch bucketing."""
     from collections import Counter
@@ -2716,6 +3006,33 @@ def test_hour_weekday_heatmap_differential(spark):
     for (w, h), r in got.items():
         assert r["n_events"] == cells[(w, h)]
         assert r["weekday_share_permille"] == (1000 * cells[(w, h)]) // wt[w]
+
+
+def test_revenue_ma7_differential(spark):
+    """orders_daily_revenue_7d_ma vs plain-Python trailing average
+    over present days, including partial head windows."""
+    import duckdb
+
+    import __spark_entry__ as m
+
+    sf = "/root/testdata/sf0.001"
+    rows = duckdb.sql(
+        f"""SELECT datediff('day', DATE '1992-01-01', o_orderdate),
+                   SUM(CAST(round(o_totalprice * 100) AS BIGINT))
+            FROM '{sf}/orders.parquet' GROUP BY 1"""
+    ).fetchall()
+    daily = {int(x): int(r) for x, r in rows}
+    got = {
+        r["day_idx"]: r
+        for r in m.queries()["orders_daily_revenue_7d_ma"](spark, sf).collect()
+    }
+    assert set(got) == set(daily)
+    for x, rev in daily.items():
+        window = [daily[d] for d in range(x - 6, x + 1) if d in daily]
+        r = got[x]
+        assert r["revenue_cents"] == rev
+        assert r["window_days"] == len(window)
+        assert r["ma7_cents"] == sum(window) // len(window)
 
 
 def test_soft_dedup_weights_differential(spark):
