@@ -6,7 +6,8 @@ namespace (`1_db_Notebook.py:8,24,29` CREATE CATALOG / CREATE SCHEMA;
 `spark.catalog.tableExists` at :56).  Without a metastore we get the
 same *semantics* from a 2-level name mapped onto parquet paths plus
 Spark temp views: `gold.dim_model` → `<root>/gold/dim_model` registered
-as view `gold_dim_model`.
+as view `gold_dim_model`.  The catalog level is dropped: the engine has
+one catalog, so `cars_catalog.gold.dim_model` is `gold.dim_model`.
 
 At cluster scale this swaps cleanly for a real catalog (Hive metastore
 / Unity / Glue): ``register`` becomes ``saveAsTable``, ``table_exists``
@@ -19,7 +20,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["PathCatalog", "UnityPathCatalog"]
+__all__ = ["PathCatalog"]
 
 
 class PathCatalog:
@@ -77,101 +78,3 @@ class PathCatalog:
             return VersionedTable(self.spark, p).read()
         return self.spark.read.parquet(p)
 
-
-class UnityPathCatalog:
-    """Three-level (catalog.schema.table) namespace over directory
-    roots — the shape of the reference's Unity Catalog calls
-    (`1_db_Notebook.py:8` ``CREATE CATALOG cars_catalog``, `:24,29`
-    ``create schema cars_catalog.{silver,gold}``;
-    `3(1)_Gold_dim_model.py:56` ``tableExists('cars_catalog.gold.…')``)
-    without a metastore: each CATALOG maps to its own directory root
-    under ``base_root`` and delegates schema/table handling to a
-    per-catalog :class:`PathCatalog`.
-
-    Dotted names are accepted everywhere, so reference call sites
-    translate mechanically::
-
-        CREATE CATALOG cars_catalog          → create_catalog("cars_catalog")
-        create schema cars_catalog.gold      → create_schema("cars_catalog.gold")
-        spark.catalog.tableExists(
-            'cars_catalog.gold.dim_model')   → table_exists("cars_catalog.gold.dim_model")
-        select * from cars_catalog.gold.dim_model
-          → register(...) then select * from cars_catalog_gold_dim_model
-
-    (The one remaining deviation: OSS Spark SQL cannot parse a 3-part
-    identifier without a JVM ``CatalogPlugin``, so SQL addressing uses
-    the underscore-joined view name — see README "Known interop
-    deviations".)
-    """
-
-    def __init__(self, spark: SparkSession, base_root: str):
-        self.spark = spark
-        self.base_root = base_root
-        self._catalogs: dict[str, PathCatalog] = {}
-
-    @staticmethod
-    def _split(dotted: str, levels: int) -> list[str]:
-        parts = dotted.split(".")
-        if len(parts) != levels:
-            raise ValueError(
-                f"expected a {levels}-part dotted name, got {dotted!r}"
-            )
-        return parts
-
-    def create_catalog(self, name: str) -> PathCatalog:
-        """S8: ``CREATE CATALOG`` equivalent (`1_db_Notebook.py:8`)."""
-        if "." in name:
-            raise ValueError(f"catalog name may not be dotted: {name!r}")
-        cat = self._catalogs.get(name)
-        if cat is None:
-            root = os.path.join(self.base_root, name)
-            os.makedirs(root, exist_ok=True)
-            cat = self._catalogs[name] = PathCatalog(self.spark, root)
-        return cat
-
-    def catalog(self, name: str) -> PathCatalog:
-        if name not in self._catalogs and os.path.isdir(
-            os.path.join(self.base_root, name)
-        ):
-            # a catalog created by a previous session is still a catalog
-            self._catalogs[name] = PathCatalog(
-                self.spark, os.path.join(self.base_root, name)
-            )
-        if name not in self._catalogs:
-            raise KeyError(f"no such catalog: {name!r}")
-        return self._catalogs[name]
-
-    def create_schema(self, dotted: str) -> None:
-        """S8: ``create schema cars_catalog.gold`` (`1_db_Notebook.py:24,29`)."""
-        cat, schema = self._split(dotted, 2)
-        self.create_catalog(cat).create_schema(schema)
-
-    def table_exists(self, dotted: str) -> bool:
-        """S9: 3-part ``tableExists`` (`3(1)_Gold_dim_model.py:56`)."""
-        cat, schema, table = self._split(dotted, 3)
-        try:
-            return self.catalog(cat).table_exists(schema, table)
-        except KeyError:
-            return False
-
-    def path(self, dotted: str) -> str:
-        cat, schema, table = self._split(dotted, 3)
-        return self.catalog(cat).path(schema, table)
-
-    def view_name(self, dotted: str) -> str:
-        return "_".join(self._split(dotted, 3))
-
-    def register(self, dotted: str) -> None:
-        """S3: make the table SQL-addressable (underscore-joined name)."""
-        cat, schema, table = self._split(dotted, 3)
-        df = self.catalog(cat).read(schema, table)
-        if df is None:
-            raise FileNotFoundError(self.path(dotted))
-        df.createOrReplaceTempView(self.view_name(dotted))
-
-    def read(self, dotted: str) -> DataFrame | None:
-        cat, schema, table = self._split(dotted, 3)
-        try:
-            return self.catalog(cat).read(schema, table)
-        except KeyError:
-            return None

@@ -1,4 +1,4 @@
-"""Sources & sinks (SURVEY §2.1 S1–S10).
+"""Sources & sinks (SURVEY §2.1 S1, S4, S5).
 
 The reference's zones are ADLS paths read/written with format strings
 (`2_Silver_Notebook.py:7-9,72-75`, `3(1)_Gold_dim_model.py:173-176`).
@@ -19,6 +19,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .schemas import TESTDATA_SCHEMAS, TESTDATA_TABLES
 
@@ -26,91 +27,59 @@ __all__ = [
     "read_parquet",
     "read_csv",
     "write_parquet",
-    "write_bucketed_table",
     "load_testdata",
 ]
 
 
-def read_parquet(spark: SparkSession, path: str, schema=None) -> DataFrame:
+def read_parquet(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     """S1: parquet directory scan (`2_Silver_Notebook.py:7-9`).
 
     The reference passes ``inferSchema`` — a no-op for self-describing
-    Parquet (hazard H6); we drop it.  Without ``schema`` Spark infers it
-    from the files' footers, which runs a job; a caller that wrote the
-    directory passes the schema it reads back as instead.
+    Parquet (hazard H6); we drop it.  The caller wrote the directory and
+    passes the schema it reads back as, so building the read runs no
+    footer-inference job.
     """
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
-def read_csv(spark: SparkSession, path: str, schema=None) -> DataFrame:
+def read_csv(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     """S4: CSV landing source with the reference data's quirks.
 
     /root/reference/RawData/SalesData.csv has a UTF-8 BOM on line 1,
     quoted fields with embedded commas (IncrementalSales.csv:2
     ``"Fisker, Karma Motors"``), and empty strings for missing
     DealerName (SalesData.csv:38).  ``emptyValue=None`` maps empties to
-    SQL NULL so the cleansing layer sees them.
+    SQL NULL so the cleansing layer sees them.  ``schema`` is the
+    declared landing schema (``schemas.RAW_SALES_SCHEMA``); CSV type
+    inference, which rescans the file, is not offered.
     """
-    reader = (
-        spark.read.option("header", True)
+    return (
+        spark.read.schema(schema)
+        .option("header", True)
         .option("quote", '"')
         .option("escape", '"')
         .option("encoding", "UTF-8")
         .option("emptyValue", None)
         .option("mode", "PERMISSIVE")
+        .csv(path)
     )
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", True)
-    return reader.csv(path)
 
 
 def write_parquet(
     df: DataFrame,
     path: str,
-    mode: str = "overwrite",
     partition_by: list[str] | None = None,
 ) -> None:
-    """S5: parquet sink (`2_Silver_Notebook.py:72-75`).
+    """S5: parquet sink (`2_Silver_Notebook.py:72-75`), always
+    overwriting — bronze and silver are rebuilt whole on every run.
 
     ``partition_by`` hive-partitions the layout; filters on those
     columns then prune whole directories at scan time (PartitionFilters
     in the plan) — the first-order scan optimization at 100 TB."""
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def write_bucketed_table(
-    df: DataFrame, name: str, keys: list[str], buckets: int = 32
-) -> None:
-    """Bucketed managed table: co-locates future joins/aggregations on
-    ``keys`` without a shuffle (SortMergeJoin with both sides bucketed
-    reads straight from disk layout).
-
-    The 100 TB pattern for repeatedly-joined facts: pay one layout
-    shuffle at write, skip the exchange on every read."""
-    import shutil
-
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    # the in-memory catalog forgets tables across sessions but their
-    # warehouse directories persist; clear any orphaned location
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "").removeprefix("file:")
-    if warehouse:
-        shutil.rmtree(os.path.join(warehouse, name.lower()), ignore_errors=True)
-    (
-        df.write.mode("overwrite")
-        .bucketBy(buckets, *keys)
-        .sortBy(*keys)
-        .format("parquet")
-        .saveAsTable(name)
-    )
 
 
 def load_testdata(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:

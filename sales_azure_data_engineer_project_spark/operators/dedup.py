@@ -30,7 +30,6 @@ from .text import TOKEN_RE, fingerprint_md5
 from ..caching import tracked_persist
 
 __all__ = [
-    "word_shingles",
     "exact_dedup_groups",
     "shingle_explode",
     "jaccard_pairs",
@@ -62,14 +61,6 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     return F.array_distinct(F.when(F.size(toks) >= n, grams).otherwise(F.array()))
 
 
-def word_shingles(col: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a text column (convenience
-    wrapper; for hot paths prefer binding tokens first — see
-    ``shingles_from_tokens``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return shingles_from_tokens(F.split(c, TOKEN_RE), n)
-
-
 def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Exact dedup: one row per distinct content, keeper = min id.
 
@@ -88,8 +79,8 @@ def shingle_explode(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Da
     """(id, shingle) pairs, distinct shingles per document.
 
     Tokens are BOUND in a projection before the gram lambda (round-4:
-    the previous ``word_shingles(text_col)`` inlined ``split(text)``
-    into the higher-order lambda, re-running the regex per
+    the previous version inlined ``split(text)`` into the higher-order
+    lambda, re-running the regex per
     ``element_at`` — Spark does no CSE through lambdas; measured 7.3 s
     → 0.7 s for explode+hash at sf0.1)."""
     toks = df.select(F.col(id_col), F.split(F.col(text_col), TOKEN_RE).alias("__toks"))

@@ -1,9 +1,10 @@
-"""Multimodal (binary-column) plumbing.
+"""Multimodal (binary-column) plumbing for the ``multimodal_features``
+query.
 
-Treats image/audio/video payloads as opaque ``binary`` columns with
-typed metadata, processed by Arrow-batched ``mapInPandas`` — the
-pattern a 100 TB multimodal pipeline uses (constant memory per batch,
-no row-at-a-time Python).
+Treats image payloads as opaque ``binary`` columns and extracts typed
+metadata with Arrow-batched ``mapInPandas`` — the pattern a 100 TB
+multimodal pipeline uses (constant memory per batch, no row-at-a-time
+Python).
 
 The actual media decode (PIL/libav/etc.) is NOT available in this
 container, so ``decode_image`` is a clearly-marked stub: by default it
@@ -23,9 +24,6 @@ from pyspark.sql import functions as F
 __all__ = [
     "attach_binary_payload",
     "decode_image",
-    "resize_image",
-    "sample_frames",
-    "sample_video_frames",
     "extract_features",
 ]
 
@@ -34,7 +32,7 @@ FEATURE_SCHEMA = "doc_id bigint, n_bytes bigint, width int, height int"
 
 def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Stand-in ingestion: pack a string column as the binary payload
-    (a real pipeline reads ``binaryFile`` sources or parquet binary)."""
+    (a real pipeline reads a parquet binary column)."""
     return df.withColumn("content", F.encode(F.col(text_col), "UTF-8"))
 
 
@@ -51,56 +49,6 @@ def decode_image(payload: bytes, *, fake: bool = False) -> tuple[int, int]:
         )
     n = len(payload)
     return n % 640, (7 * n) % 480
-
-
-def resize_image(payload: bytes, width: int, height: int, *, fake: bool = False) -> bytes:
-    """STUB — real resize needs PIL.  ``fake=True`` returns a
-    deterministic payload of size width·height//64 derived from the
-    input (keeps batch-shape plumbing testable)."""
-    if not fake:
-        raise NotImplementedError("image resize requires PIL; pass fake=True for the stub")
-    n = max(1, (width * height) // 64)
-    seed = (len(payload) * 2654435761) & 0xFF
-    return bytes((seed + i) & 0xFF for i in range(n))
-
-
-def sample_frames(payload: bytes, *, every_n: int = 10, fake: bool = False) -> list[bytes]:
-    """STUB frame sampler — real decode needs libav.  ``fake=True``
-    treats every 64-byte block as a 'frame' and keeps every n-th."""
-    if not fake:
-        raise NotImplementedError("video decode requires libav; pass fake=True for the stub")
-    frames = [payload[i : i + 64] for i in range(0, len(payload), 64)]
-    return frames[::every_n]
-
-
-def sample_video_frames(
-    df: DataFrame, *, every_n: int = 10, fake_decode: bool = True
-) -> DataFrame:
-    """Arrow-batched frame sampling: one input row per video payload →
-    one output row per kept frame (doc_id, frame_idx, frame binary).
-
-    The row-explosion happens inside the Arrow batch iterator, so
-    memory is bounded by batch size × frames-per-payload — the shape a
-    real video pipeline needs (never collect frames to the driver).
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_ids, out_idx, out_frames = [], [], []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                for i, frame in enumerate(
-                    sample_frames(bytes(content), every_n=every_n, fake=fake_decode)
-                ):
-                    out_ids.append(doc_id)
-                    out_idx.append(i)
-                    out_frames.append(frame)
-            yield pd.DataFrame(
-                {"doc_id": out_ids, "frame_idx": out_idx, "frame": out_frames}
-            )
-
-    return df.select("doc_id", "content").mapInPandas(
-        batches, "doc_id bigint, frame_idx int, frame binary"
-    )
 
 
 def extract_features(df: DataFrame, *, fake_decode: bool = True) -> DataFrame:
@@ -125,58 +73,3 @@ def extract_features(df: DataFrame, *, fake_decode: bool = True) -> DataFrame:
 
     return df.select("doc_id", "content").mapInPandas(batches, FEATURE_SCHEMA)
 
-
-def resize_raw_tensor(
-    payload: bytes, in_w: int, in_h: int, out_w: int, out_h: int, channels: int = 3
-) -> bytes:
-    """REAL nearest-neighbor resize of a raw HxWxC uint8 tensor — no
-    codec involved, so unlike ``resize_image`` (JPEG → needs PIL, stub)
-    this path is fully implemented: raw tensors are what a decode stage
-    hands downstream anyway, and resize/crop/normalize over them is
-    pure array math."""
-    import numpy as np
-
-    arr = np.frombuffer(payload, dtype=np.uint8)
-    if arr.size != in_h * in_w * channels:
-        raise ValueError(
-            f"payload has {arr.size} bytes, expected {in_h}x{in_w}x{channels}"
-        )
-    t = arr.reshape(in_h, in_w, channels)
-    rows = (np.arange(out_h) * in_h) // out_h
-    cols = (np.arange(out_w) * in_w) // out_w
-    return t[rows][:, cols].tobytes()
-
-
-def resize_tensors(
-    df: DataFrame,
-    *,
-    out_w: int,
-    out_h: int,
-    channels: int = 3,
-) -> DataFrame:
-    """Arrow-batched raw-tensor resize: input (doc_id, content, width,
-    height) with ``content`` = HxWxC uint8 bytes; output (doc_id,
-    content, width, height) at the target size.  Memory per task is
-    bounded by the Arrow batch — tensors never materialize as Python
-    lists."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = [
-                resize_raw_tensor(
-                    bytes(c), int(w), int(h), out_w, out_h, channels
-                )
-                for c, w, h in zip(pdf["content"], pdf["width"], pdf["height"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "content": out,
-                    "width": [out_w] * len(pdf),
-                    "height": [out_h] * len(pdf),
-                }
-            )
-
-    return df.select("doc_id", "content", "width", "height").mapInPandas(
-        batches, "doc_id bigint, content binary, width int, height int"
-    )

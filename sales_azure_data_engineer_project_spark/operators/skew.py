@@ -1,16 +1,11 @@
 """Skew mitigation utilities.
 
 AQE's skew-join splitting (enabled in ``session.py``) handles most
-runtime skew; these helpers cover the two patterns AQE can't fix:
-
-- **salted aggregation** — a hot groupBy key that funnels into one
-  reducer.  Two-phase: pre-aggregate on (key, salt) — map-side combine
-  already shrinks it — then final-aggregate on key.  Exact for
-  decomposable aggregates (sum/count/min/max).
-- **salted join** — a hot join key against a medium dimension too big
-  to broadcast: replicate the dimension ``buckets``× with an explicit
-  salt, salt the fact rows deterministically, join on (key, salt).
-  Each reducer sees 1/buckets of the hot key's rows.
+runtime skew; this helper covers the pattern AQE can't fix: a hot
+groupBy key that funnels into one reducer (**salted aggregation**).
+Two-phase: pre-aggregate on (key, salt) — map-side combine already
+shrinks it — then final-aggregate on key.  Exact for decomposable
+aggregates (sum/count/min/max).
 
 Salts are deterministic (hash of a caller-chosen unique column, pmod
 buckets) so results are reproducible run-to-run.
@@ -21,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["salted_sum", "salted_join"]
+__all__ = ["salted_sum"]
 
 
 def _salt(unique_col: str, buckets: int) -> Column:
@@ -47,22 +42,3 @@ def salted_sum(
         *[F.sum(a).alias(a) for a in sums.values()]
     )
 
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    *,
-    salt_from: str,
-    buckets: int = 8,
-    how: str = "left",
-) -> DataFrame:
-    """Skew-safe equi-join: replicate ``small`` per salt bucket, salt
-    ``big`` deterministically, join on (key, salt).
-
-    Row-for-row equivalent to ``big.join(small, on, how)`` when ``on``
-    is unique in ``small`` (the dimension-lookup contract)."""
-    salts = F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
-    small_rep = small.withColumn("__salt", salts)
-    big_salted = big.withColumn("__salt", _salt(salt_from, buckets))
-    return big_salted.join(small_rep, on=[on, "__salt"], how=how).drop("__salt")

@@ -15,13 +15,11 @@ size.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 __all__ = [
     "tokens",
-    "token_count",
-    "distinct_token_count",
     "fingerprint_md5",
     "fingerprint_sorted_tokens",
     "EN_STOPWORDS",
@@ -42,14 +40,6 @@ def tokens(col: Column | str) -> Column:
     """Whitespace tokenization (the BPE-ish regex baseline)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.split(c, TOKEN_RE)
-
-
-def token_count(col: Column | str) -> Column:
-    return F.size(tokens(col)).cast("bigint")
-
-
-def distinct_token_count(col: Column | str) -> Column:
-    return F.size(F.array_distinct(tokens(col))).cast("bigint")
 
 
 def fingerprint_md5(col: Column | str) -> Column:

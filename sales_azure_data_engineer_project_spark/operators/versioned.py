@@ -89,15 +89,15 @@ class VersionedTable:
 
     def _reader(self, vdir: str) -> DataFrameReader:
         """A parquet reader for a version directory, carrying its
-        committed schema; versions committed before the schema file
-        existed fall back to inference."""
-        reader = self.spark.read
+        committed schema.  Every commit writes ``_schema.json``; a version
+        dir without one raises ``FileNotFoundError`` rather than falling
+        back to schema inference."""
         try:
             with open(os.path.join(vdir, _SCHEMA)) as f:
-                reader = reader.schema(StructType.fromJson(json.load(f)))
+                schema = StructType.fromJson(json.load(f))
         except FileNotFoundError:
-            pass
-        return reader
+            raise FileNotFoundError(f"version dir {vdir} has no {_SCHEMA}") from None
+        return self.spark.read.schema(schema)
 
     def _commit(
         self,

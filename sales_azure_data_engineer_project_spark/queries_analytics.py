@@ -294,8 +294,8 @@ def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session gap = 30 min.  The batch twin of a streaming
-    ``session_window``; see ``streaming/`` for the stateful variant."""
+    """Session gap = 30 min, the gap rule Spark's ``session_window``
+    applies, computed as a batch running sum over gap flags."""
     ev = load_testdata(spark, sf_dir, "events")
     ts_us = F.unix_micros(F.col("ts"))
     w_order = Window.partitionBy("user_id").orderBy("ts", "event_id")

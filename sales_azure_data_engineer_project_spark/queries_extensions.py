@@ -4877,94 +4877,6 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Exact-truth LSH recall: DEMOTED from the registered surface in round 5
-# (VERDICT r4 "Next" #9) — its ground truth is the Σ bucket² posting-list
-# join, which is the sf-bounded calibration shape, not the 100 TB path.
-# The registered estimator is ``dedup_lsh_recall_sampled``; this exact
-# variant stays as a library function with its DuckDB twin below, gated
-# by ``tests/test_extensions.py::test_lsh_recall_exact_matches_oracle``.
-DEDUP_LSH_RECALL_EXACT_ORACLE_SQL = f"""
-    WITH {_CORPUS_SQL}, {_SHINGLE_SQL},
-    sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    ),
-    truth AS (
-        SELECT i.id_a, i.id_b
-        FROM inter i JOIN sz sa ON sa.doc_id = i.id_a
-                     JOIN sz sb ON sb.doc_id = i.id_b
-        WHERE (1000 * i.c) // (sa.n + sb.n - i.c) >= 500
-    ),
-    seeds AS (SELECT unnest(generate_series(0, 7)) AS seed),
-    hashed AS (
-        SELECT doc_id, seed, md5(CAST(seed AS VARCHAR) || ':' || sh) AS h
-        FROM sh CROSS JOIN seeds
-    ),
-    sig AS (
-        SELECT doc_id,
-               {', '.join(f"MIN(CASE WHEN seed = {i} THEN h END) AS h{i}" for i in range(8))}
-        FROM hashed GROUP BY doc_id
-    ),
-    bands AS (
-        SELECT doc_id, 0 AS band_idx, md5(concat_ws('|', h0, h1, h2, h3)) AS band_sig FROM sig
-        UNION ALL
-        SELECT doc_id, 1 AS band_idx, md5(concat_ws('|', h4, h5, h6, h7)) AS band_sig FROM sig
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b ON a.band_idx = b.band_idx
-            AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id
-    ),
-    hit AS (
-        SELECT t.id_a FROM truth t JOIN cand c
-            ON c.id_a = t.id_a AND c.id_b = t.id_b
-    )
-    SELECT CAST((SELECT COUNT(*) FROM truth) AS BIGINT) AS n_truth,
-           CAST((SELECT COUNT(*) FROM cand) AS BIGINT) AS n_candidates,
-           CAST((SELECT COUNT(*) FROM hit) AS BIGINT) AS n_hit,
-           CAST((1000 * (SELECT COUNT(*) FROM hit))
-                // greatest((SELECT COUNT(*) FROM truth), 1) AS BIGINT)
-               AS recall_permille
-    """
-
-
-def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall of the MinHash-LSH candidate generator against exact
-    ground truth — the measurement a pipeline owner runs before
-    trusting banding parameters: ground truth = all pairs with exact
-    shingle Jaccard ≥ 0.5, candidates = the 2-band × 4-hash LSH pairs,
-    recall = |hit| / |truth| in permille (plus the candidate volume the
-    banding pays for that recall).
-
-    Scale shape: truth reuses the Σ bucket² posting-list join (the
-    expensive side), which is why this exact variant is TEST-GATED
-    rather than registered: at 100 TB you sample truth, and that
-    estimator — ``dedup_lsh_recall_sampled`` — is the registered
-    query.  One row out."""
-    corpus = _dedup_corpus(spark, sf_dir)
-    truth = D.jaccard_pairs(corpus, "doc_id", "text", min_permille=500).select(
-        "id_a", "id_b"
-    )
-    bands = D.minhash_bands(corpus, "doc_id", "text", n_hashes=8, band_size=4)
-    cand = D.lsh_candidate_pairs(bands, "doc_id").select("id_a", "id_b").distinct()
-    hit = truth.join(cand, ["id_a", "id_b"])
-    counts = (
-        truth.agg(F.count("*").alias("n_truth"))
-        .crossJoin(cand.agg(F.count("*").alias("n_candidates")))
-        .crossJoin(hit.agg(F.count("*").alias("n_hit")))
-    )
-    return counts.select(
-        F.col("n_truth").cast("bigint"),
-        F.col("n_candidates").cast("bigint"),
-        F.col("n_hit").cast("bigint"),
-        F.expr("div(1000 * n_hit, greatest(n_truth, 1))")
-        .cast("bigint")
-        .alias("recall_permille"),
-    )
-
-
 @register(
     "dedup_lsh_recall_sampled",
     f"""
@@ -5027,16 +4939,16 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_lsh_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SAMPLED-truth LSH recall estimator — the scale path
-    ``dedup_lsh_recall``'s docstring promises.  Ground truth there is
-    an exact all-pairs shingle-Jaccard join (Σ bucket², the expensive
-    side); here truth is computed only over a deterministic ~25% doc
-    sample (first md5 hex nibble of doc_id ∈ {0..3}), so the truth join
-    cost drops ~p² ≈ 16× while the LSH candidate side still runs over
-    the FULL corpus exactly as production would.  Recall of the banding
-    is then estimated as |sampled truth ∩ candidates| / |sampled truth|
-    — unbiased because banding hits are independent of the doc-id hash
-    used for sampling.  Run next to ``dedup_lsh_recall`` at sf0.01 the
+    """SAMPLED-truth LSH recall estimator: recall of the 2-band ×
+    4-hash MinHash-LSH candidate generator against shingle-Jaccard ≥ 0.5
+    ground truth.  Exact truth is an all-pairs shingle-Jaccard join
+    (Σ bucket², the expensive side); here truth is computed only over a
+    deterministic ~25% doc sample (first md5 hex nibble of doc_id ∈
+    {0..3}), so the truth join cost drops ~p² ≈ 16× while the LSH
+    candidate side still runs over the FULL corpus exactly as production
+    would.  Recall of the banding is then estimated as |sampled truth ∩
+    candidates| / |sampled truth| — unbiased because banding hits are
+    independent of the doc-id hash used for sampling.  At sf0.01 the
     estimator lands within a few permille of the exact recall (NOTES.md
     records the delta).
 

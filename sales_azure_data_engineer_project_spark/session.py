@@ -23,7 +23,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark"]
+__all__ = ["get_spark"]
 
 
 def _cpus() -> int:
@@ -36,9 +36,7 @@ def _cpus() -> int:
 def get_spark(
     app_name: str = "sales-azure-data-engineer-project-spark",
     *,
-    master: str | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
@@ -46,11 +44,10 @@ def get_spark(
     right *direction* at cluster scale (AQE, Arrow, partition-size caps).
     """
     cpus = _cpus()
-    master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
 
-    builder = (
-        SparkSession.builder.master(master)
+    spark = (
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
@@ -94,20 +91,14 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.legacy.createHiveTableByDefault", "false")
-        # bucketed-table warehouse outside the repo tree
+        # the default database's directory (Spark creates it at session
+        # start) stays outside the checkout rather than in the cwd
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"),
         )
+        .getOrCreate()
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

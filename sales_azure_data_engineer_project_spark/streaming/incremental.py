@@ -9,9 +9,9 @@ MERGE and commits it through the same ``VersionedTable`` as its gold
 tables, with checkpointed exactly-once file tracking replacing the
 manual re-trigger.
 
-Also provided: event-time windowed aggregation and session windows with
-watermarked late-data handling — the streaming twins of the batch
-``events_hourly_rollup`` / ``events_sessionization`` oracle queries.
+Also provided: event-time windowed aggregation with watermarked
+late-data handling, checked against the registered batch query
+``events_hopping_window_rate`` by test.
 """
 
 from __future__ import annotations
@@ -25,7 +25,6 @@ from ..operators.versioned import VersionedTable
 __all__ = [
     "stream_incremental_merge",
     "windowed_event_counts",
-    "sessionized_stream",
 ]
 
 
@@ -99,74 +98,3 @@ def windowed_event_counts(
         )
     )
 
-
-def sessionized_stream(
-    events: DataFrame,
-    *,
-    gap: str = "30 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Session windows per user (gap-based), the streaming twin of the
-    batch ``events_sessionization`` query."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "user_id",
-            "n_events",
-        )
-    )
-
-
-def watermarked_dedup(
-    events: DataFrame,
-    *,
-    id_cols: list[str] | None = None,
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Built-in bounded-state streaming dedup:
-    ``dropDuplicatesWithinWatermark`` keeps ids only until the watermark
-    passes — the engine-managed alternative to the custom
-    applyInPandasWithState operators in ``stateful.py`` when duplicate
-    arrivals are known to cluster in time (e.g. at-least-once sources
-    with bounded replay)."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        id_cols or ["event_id"]
-    )
-
-
-def stream_stream_join(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    *,
-    within: str = "1 hour",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Watermarked stream-stream interval join: each click joined to the
-    same user's purchases within ``within`` AFTER the click.  Watermarks
-    on both sides bound the join state (Spark buffers each side only
-    until the other side's watermark passes the interval) — the
-    attribution join that runs forever at fixed memory."""
-    c = clicks.select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    ).withWatermark("click_ts", watermark)
-    p = purchases.select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").alias("purchase_value"),
-    ).withWatermark("purchase_ts", watermark)
-    return c.join(
-        p,
-        F.expr(
-            f"""c_user = p_user AND
-                purchase_ts >= click_ts AND
-                purchase_ts <= click_ts + INTERVAL {within}"""
-        ),
-        "inner",
-    )

@@ -1,5 +1,5 @@
-"""Catalog + extra source format tests (S3/S8/S9, JSON/ORC round-trips,
-calendar dimension)."""
+"""Catalog tests (S3/S8/S9), CSV landing reads, corpus schemas and the
+calendar dimension."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ import os
 import pytest
 from conftest import INITIAL_ROWS, SF_SMOKE, count_jobs, write_sales_csv
 
-from sales_azure_data_engineer_project_spark import sources
 from sales_azure_data_engineer_project_spark.catalog import PathCatalog
 from sales_azure_data_engineer_project_spark.plans import SalesPipeline
 from sales_azure_data_engineer_project_spark.schemas import TESTDATA_SCHEMAS, TESTDATA_TABLES
@@ -55,25 +54,6 @@ def test_calendar_dimension_h1(spark, tmp_path):
     assert keys == list(range(1, len(cal) + 1))
     # fact carries the calendar key; every row resolves
     assert out["factsales"].filter("dim_calendar_key IS NULL").count() == 0
-
-
-def test_json_orc_roundtrip(spark, tmp_path):
-    df = spark.createDataFrame([(1, "x"), (2, "y")], ["k", "v"])
-    jp, op = str(tmp_path / "j"), str(tmp_path / "o")
-    sources.write_json(df, jp)
-    sources.write_orc(df, op)
-    back_j = sources.read_json(spark, jp, schema="k long, v string")
-    back_o = sources.read_orc(spark, op)
-    assert sorted((r["k"], r["v"]) for r in back_j.collect()) == [(1, "x"), (2, "y")]
-    assert sorted((r["k"], r["v"]) for r in back_o.collect()) == [(1, "x"), (2, "y")]
-
-
-def test_binary_file_source(spark, tmp_path):
-    p = tmp_path / "blob.bin"
-    p.write_bytes(b"\x00\x01payload")
-    out = sources.read_text_as_binary(spark, str(p)).first()
-    assert bytes(out["content"]) == b"\x00\x01payload"
-    assert out["length"] == 9
 
 
 def test_csv_permissive_with_malformed_rows(spark, tmp_path):
@@ -146,31 +126,3 @@ def test_load_testdata_rejects_unknown_table(spark, sf_smoke):
         load_testdata(spark, sf_smoke, "lineitems")
 
 
-def test_unity_path_catalog_three_level(spark, tmp_path):
-    """The reference's 3-part Unity calls translate 1:1:
-    CREATE CATALOG → create schema cat.gold → write → tableExists →
-    SQL-addressable view (`1_db_Notebook.py:8,24,29`,
-    `3(1)_Gold_dim_model.py:56,173-176`)."""
-    from sales_azure_data_engineer_project_spark.catalog import UnityPathCatalog
-
-    uc = UnityPathCatalog(spark, str(tmp_path))
-    uc.create_catalog("cars_catalog")
-    uc.create_schema("cars_catalog.silver")
-    uc.create_schema("cars_catalog.gold")
-
-    assert not uc.table_exists("cars_catalog.gold.dim_model")
-    df = spark.createDataFrame([(1, "BMW-M1"), (2, "KIA-K4")], ["k", "model"])
-    df.write.mode("overwrite").parquet(uc.path("cars_catalog.gold.dim_model"))
-    assert uc.table_exists("cars_catalog.gold.dim_model")
-    assert not uc.table_exists("other_catalog.gold.dim_model")
-
-    uc.register("cars_catalog.gold.dim_model")
-    got = spark.sql(
-        "select count(*) as n from cars_catalog_gold_dim_model"
-    ).first()["n"]
-    assert got == 2
-
-    # a fresh instance rediscovers catalogs from disk (cross-session)
-    uc2 = UnityPathCatalog(spark, str(tmp_path))
-    assert uc2.table_exists("cars_catalog.gold.dim_model")
-    assert uc2.read("cars_catalog.gold.dim_model").count() == 2

@@ -36,12 +36,6 @@ def test_exact_dedup_groups(spark, docs):
     assert by_keeper[3] == 1 and by_keeper[4] == 1 and by_keeper[5] == 1
 
 
-def test_word_shingles_short_doc_empty(spark, docs):
-    sh = docs.select("doc_id", F.size(D.word_shingles("text", 3)).alias("n"))
-    got = {r["doc_id"]: r["n"] for r in sh.collect()}
-    assert got[5] == 0 and got[1] > 0
-
-
 def test_jaccard_pairs_finds_near_dup(spark, docs):
     pairs = {(r["id_a"], r["id_b"]): r["jac_permille"] for r in
              D.jaccard_pairs(docs, "doc_id", "text", min_permille=300).collect()}
@@ -467,33 +461,6 @@ def test_exact_substring_dedup_removes_planted_copies(spark, sf_smoke):
         assert r["n_remove_intervals"] == 1
         assert r["tokens_removed"] == r["tokens_total"]
         assert r["kept_permille"] == 0
-
-
-def test_lsh_recall_exact_matches_oracle(spark, sf_smoke):
-    """The exact-truth LSH recall calibrator was demoted from the
-    registered surface in round 5 (its ground truth is the sf-bounded
-    Σ bucket² posting join; the registered estimator is
-    ``dedup_lsh_recall_sampled``) — this test keeps the demoted
-    variant under the same DuckDB-twin gate it had as a query."""
-    import duckdb
-
-    from sales_azure_data_engineer_project_spark.queries_extensions import (
-        DEDUP_LSH_RECALL_EXACT_ORACLE_SQL,
-        dedup_lsh_recall,
-    )
-
-    got = dedup_lsh_recall(spark, sf_smoke).collect()
-    assert len(got) == 1
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_smoke}/documents.parquet')"
-    )
-    exp = con.execute(DEDUP_LSH_RECALL_EXACT_ORACLE_SQL).fetchall()[0]
-    row = got[0]
-    assert (
-        row["n_truth"], row["n_candidates"], row["n_hit"], row["recall_permille"]
-    ) == tuple(exp)
 
 
 def test_pq_adc_cell_restriction_equals_postfilter(spark):

@@ -138,35 +138,6 @@ def test_union_by_name_order_insensitive(spark):
     assert {(r["k"], r["v"]) for r in out} == {(1, "x"), (2, "y")}
 
 
-def test_resize_raw_tensor_exact(spark):
-    """Nearest-neighbor raw-tensor resize is exact array math (no
-    codec): a 2x2 RGB tensor upsampled to 4x4 replicates each pixel
-    into a 2x2 block, and the Spark mapInPandas wrapper returns the
-    identical bytes."""
-    import numpy as np
-
-    from sales_azure_data_engineer_project_spark.operators.multimodal import (
-        resize_raw_tensor,
-        resize_tensors,
-    )
-
-    t = np.arange(2 * 2 * 3, dtype=np.uint8).reshape(2, 2, 3)
-    up = resize_raw_tensor(t.tobytes(), 2, 2, 4, 4)
-    expect = t.repeat(2, axis=0).repeat(2, axis=1).tobytes()
-    assert up == expect
-
-    df = spark.createDataFrame(
-        [(1, bytearray(t.tobytes()), 2, 2)], "doc_id long, content binary, width int, height int"
-    )
-    rows = resize_tensors(df, out_w=4, out_h=4).collect()
-    assert len(rows) == 1
-    assert bytes(rows[0]["content"]) == expect
-    assert (rows[0]["width"], rows[0]["height"]) == (4, 4)
-
-    down = resize_raw_tensor(expect, 4, 4, 2, 2)
-    assert down == t.tobytes()
-
-
 def test_assign_surrogate_keys_initial_load_scale(spark):
     """At initial-load size (every key new) the window yields the dense
     global sequence in key order, identical across calls."""
@@ -207,66 +178,6 @@ def test_full_train_prep_funnel_monotone(spark):
     split_toks = sum(rows[s]["n_tokens"] for s in ("split_train", "split_val", "split_test") if s in rows)
     assert split_docs == rows["decontaminate"]["n_units"]
     assert split_toks == rows["decontaminate"]["n_tokens"]
-
-
-def test_ffd_packing_invariants_and_beats_singleton(spark):
-    """FFD packing: no bin exceeds the budget (except dedicated
-    overflow bins), bin count sits between the volume lower bound and
-    the one-doc-per-bin upper bound, placement is deterministic across
-    reruns, and every doc appears exactly once."""
-    import math
-
-    from sales_azure_data_engineer_project_spark.operators.packing import (
-        pack_first_fit_decreasing,
-        packing_report,
-    )
-
-    rows = []
-    for i in range(200):
-        # lengths 10..209 across 4 shards, plus two oversize docs
-        rows.append((i, (i * 37) % 200 + 10, i % 4))
-    rows.append((900, 5000, 0))
-    rows.append((901, 600, 1))
-    df = spark.createDataFrame(rows, ["doc_id", "n_tok", "shard"])
-    B = 512
-    out = pack_first_fit_decreasing(df, budget=B).collect()
-    assert len(out) == len(rows)
-    assert {r["doc_id"] for r in out} == {r[0] for r in rows}
-    fills: dict = {}
-    for r in out:
-        if not r["overflow"]:
-            key = (r["shard"], r["bin_idx"])
-            fills[key] = fills.get(key, 0) + r["n_tok"]
-        else:
-            assert r["n_tok"] > B
-    assert all(v <= B for v in fills.values())
-    # per-shard bin count bounds
-    per_shard: dict = {}
-    for r in out:
-        s = per_shard.setdefault(r["shard"], {"bins": set(), "tok": 0, "n": 0})
-        s["bins"].add(r["bin_idx"])
-        s["n"] += 1
-        if not r["overflow"]:
-            s["tok"] += r["n_tok"]
-    for s in per_shard.values():
-        assert len(s["bins"]) >= math.ceil(s["tok"] / B)
-        assert len(s["bins"]) <= s["n"]
-    # determinism
-    again = pack_first_fit_decreasing(df, budget=B).collect()
-    assert sorted(map(tuple, out)) == sorted(map(tuple, again))
-    # report consistency
-    rep = {r["shard"]: r for r in packing_report(
-        pack_first_fit_decreasing(df, budget=B), budget=B
-    ).collect()}
-    for shard, s in per_shard.items():
-        assert rep[shard]["n_bins"] == len(s["bins"])
-        assert rep[shard]["n_overflow"] == sum(
-            1 for r in out if r["shard"] == shard and r["overflow"]
-        )
-        # overflow docs count at most `budget` toward fill, so the
-        # rate stays a true in-[0,1000] bin-utilization figure even on
-        # shard 0 (one 5000-token oversize doc against B=512 bins)
-        assert 0 <= rep[shard]["fill_permille"] <= 1000
 
 
 def test_grid_quantiles_matches_percentile_disc(spark):

@@ -1,5 +1,5 @@
-"""Scale-oriented operator tests: as-of join, skew salting, bucketed
-co-located joins (with physical-plan assertions)."""
+"""Scale-oriented operator tests: as-of join, skew salting and
+physical-plan assertions."""
 
 from __future__ import annotations
 
@@ -7,9 +7,8 @@ import pytest
 from conftest import count_jobs
 from pyspark.sql import functions as F
 
-from sales_azure_data_engineer_project_spark.io import write_bucketed_table
 from sales_azure_data_engineer_project_spark.operators.asof import asof_join
-from sales_azure_data_engineer_project_spark.operators.skew import salted_join, salted_sum
+from sales_azure_data_engineer_project_spark.operators.skew import salted_sum
 
 
 def test_asof_join_semantics(spark):
@@ -54,42 +53,6 @@ def test_salted_sum_equals_plain(spark):
         for r in salted_sum(df, ["k"], {"v": "v_sum"}, salt_from="uid").collect()
     }
     assert salted == plain
-
-
-def test_salted_join_equals_plain(spark):
-    big = spark.range(0, 5_000).select(
-        (F.col("id") % 4).alias("k"), F.col("id").alias("uid")
-    )
-    small = spark.createDataFrame([(i, f"dim{i}") for i in range(4)], ["k", "attr"])
-    plain = sorted(
-        (r["uid"], r["attr"]) for r in big.join(small, "k", "left").collect()
-    )
-    salted = sorted(
-        (r["uid"], r["attr"])
-        for r in salted_join(big, small, "k", salt_from="uid").collect()
-    )
-    assert salted == plain
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Both sides bucketed on the join key → SortMergeJoin without any
-    shuffle Exchange in the physical plan."""
-    a = spark.range(0, 1_000).select(F.col("id").alias("k"), (F.col("id") * 2).alias("va"))
-    b = spark.range(0, 1_000).select(F.col("id").alias("k"), (F.col("id") * 3).alias("vb"))
-    write_bucketed_table(a, "bt_a", ["k"], buckets=8)
-    write_bucketed_table(b, "bt_b", ["k"], buckets=8)
-    # tiny test tables would broadcast (and skip the bucketed layout);
-    # force the shuffle-join path a 100 TB fact join would take
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("bt_a").join(spark.table("bt_b"), "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 1_000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def test_connected_components(spark):

@@ -83,31 +83,6 @@ def test_compact_reduces_files_preserves_rows(spark, tmp_path):
     assert vt.read().count() == 1000
 
 
-def test_multimodal_frame_sampling(spark):
-    from sales_azure_data_engineer_project_spark.operators.multimodal import (
-        attach_binary_payload,
-        resize_image,
-        sample_video_frames,
-    )
-    import pytest as _pytest
-
-    df = spark.createDataFrame(
-        [(1, "x" * 640), (2, "y" * 100)], ["doc_id", "text"]
-    )
-    frames = sample_video_frames(attach_binary_payload(df), every_n=2).collect()
-    by_doc = {}
-    for r in frames:
-        by_doc.setdefault(r["doc_id"], []).append(r["frame_idx"])
-    # doc 1: 640 bytes → 10 blocks → every 2nd → 5 frames
-    assert by_doc[1] == [0, 1, 2, 3, 4]
-    # doc 2: 100 bytes → 2 blocks → 1 frame
-    assert by_doc[2] == [0]
-
-    with _pytest.raises(NotImplementedError):
-        resize_image(b"zz", 4, 4)
-    assert len(resize_image(b"zz", 8, 8, fake=True)) == 1
-
-
 def test_concurrent_write_detection(spark, tmp_path):
     from sales_azure_data_engineer_project_spark.operators.versioned import (
         ConcurrentWriteError,
@@ -466,6 +441,23 @@ def test_read_where_falls_back_without_manifest(spark, tmp_path):
         for r in orders.filter(F.col("o_custkey").between(10, 20)).collect()
     )
     assert got == expect and got
+
+
+def test_version_without_schema_file_raises(spark, tmp_path):
+    """A version dir whose ``_schema.json`` is missing fails loudly on
+    ``read`` and ``read_where`` instead of inferring a schema."""
+    import os
+
+    import pytest
+
+    vt = VersionedTable(spark, str(tmp_path / "t"))
+    v = vt.overwrite(spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]))
+    vdir = str(tmp_path / "t" / f"v={v}")
+    os.remove(os.path.join(vdir, "_schema.json"))
+    with pytest.raises(FileNotFoundError, match=f"{vdir} has no _schema.json"):
+        vt.read()
+    with pytest.raises(FileNotFoundError, match=f"{vdir} has no _schema.json"):
+        vt.read_where("k", 1, 1)
 
 
 def test_data_skipping_on_timestamp_column(spark, tmp_path):
