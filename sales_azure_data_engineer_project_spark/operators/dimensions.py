@@ -13,15 +13,19 @@ each) that each do:
   7. Delta MERGE or initial saveAsTable                     (:163-176, S7/S6)
 
 This module is the idiomatic-Spark generalization, one parameterized
-function that takes three steps on the initial load and on every later
-one alike:
+function that takes the same steps on the initial load and on every
+later one:
 
-  a. DISTINCT-project natural key + attributes from silver (step 1)
-  b. FULL OUTER JOIN source→sink on the natural key: existing ∪ new ∪
-     vanished in one join, with no null-split and no union (steps 2-4, 6);
-     with no committed sink, the sink is the source's own empty typed
-     frame (step 2's ``where 1=0``)
-  c. ``assign_surrogate_keys`` keys the new rows densely from
+  a. project the batch's natural key + attributes from silver with a
+     NULL surrogate key, and union the sink's ``(key, natural cols)``
+     (steps 1-2; with no committed sink there is nothing to union, the
+     S9 ``tableExists`` branch)
+  b. ``coalesce(1)`` + DISTINCT: every row of the dimension in one
+     partition, each source variant once (step 1's DISTINCT, P1)
+  c. one window partitioned by the natural key decides every row:
+     existing, new and vanished at once, with no join, no null-split and
+     no union of the two halves (steps 3-4, 6)
+  d. ``assign_surrogate_keys`` keys the new rows densely from
      max(existing)+1, in natural-column order, in one window (step 5;
      hazard H2)
 
@@ -34,17 +38,19 @@ Scale notes:
 - The build is a pure plan builder: it starts no Spark job.  The
   whole dimension — existing ∪ new ∪ vanished — is evaluated once,
   by the action that commits it, from one scan of silver and one scan
-  of the sink joined by one full outer join on the natural key
-  (shuffled on that key: a full outer join cannot broadcast).
-- The key offset (the sink's max key) and the running count of new
-  rows come from one un-partitioned window, so every row of the
-  resulting dimension — existing, new and vanished — passes through a
-  single partition.  That assumes a dimension fits the broadcast
-  threshold, the same assumption ``fact.build_fact`` makes when it
-  broadcasts every dimension.  The commit's key-uniqueness window
-  (``upsert.guard_unique``) then needs no exchange of its own: a single
-  partition already holds each key's rows together.  The initial load
-  makes the same assumption: there the new rows are the whole dimension.
+  of the sink.
+- Every dimension is assumed to be broadcast-sized, the same
+  assumption ``fact.build_fact`` makes when it broadcasts every
+  dimension, so the plan moves it into one partition up front.  A
+  single-partition child already satisfies the DISTINCT, both windows
+  and the write, so the committed plan has no exchange: one dimension
+  commit is one stage, one job and one task per batch, and the silver
+  scan feeding it is that one task.  The initial load makes the same
+  assumption: there the new rows are the whole dimension.
+- Keys stay unique without a separate check: new keys are max + a
+  running count, sink keys were unique when committed, and the one
+  case that would hand a key to two rows (a new attribute variant of a
+  natural key the sink holds) raises inside step c's window.
 - ``assign_surrogate_keys`` is the engine's one surrogate-key
   algorithm.  ``scd2.build_scd2_dimension`` keys its opened versions
   with it too, and so shares the single-partition assumption, history
@@ -55,8 +61,9 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from .upsert import _duplicate_keys_message
 
 __all__ = ["DimensionSpec", "assign_surrogate_keys", "build_scd1_dimension"]
 
@@ -97,64 +104,66 @@ def build_scd1_dimension(
     reference behavior per hazard H3); new natural keys get dense keys
     starting at max(existing)+1.  That already is the MERGE result, so
     callers commit it as a snapshot (``VersionedTable.overwrite``).
+    Evaluating it raises if the batch holds two attribute variants of a
+    natural key the sink holds (H4), so that commit publishes nothing.
     """
-    nk = spec.nk_cols
-    src = silver.select(*spec.natural_cols).distinct()  # P1
-
-    # Reference parity: the src dedup is DISTINCT over (nk, attrs) —
+    # Each step is one select of SQL expressions: building a plan costs a
+    # py4j round trip per Column call, and a string costs one.
+    key = _ident(spec.key_col)
+    nk = [_ident(c) for c in spec.nk_cols]
+    attrs = [_ident(a) for a in spec.attrs]
+    cols = [key, *nk, *attrs]
+    # Source rows carry a NULL key; sink rows their committed one.
+    rows = silver.selectExpr(f"CAST(NULL AS BIGINT) AS {key}", *nk, *attrs)
+    if sink is not None:  # S9 tableExists: union the committed dimension
+        rows = rows.union(sink.selectExpr(*cols))
+    # One partition for the whole dimension, so nothing below shuffles.
+    # Reference parity: the source dedup is DISTINCT over (nk, attrs) —
     # `select Distinct Dealer_ID, DealerName` (`3(3)_Gold_dim_dealer.py:44`)
     # — NOT one row per natural key.  If the input violates the nk→attrs
     # FD, the initial load legitimately creates one dim row (and one
     # surrogate) per variant, exactly like the reference.  (The
     # reference's own CSVs do not violate the FD — every
     # Dealer_ID/Branch_ID maps to one name — but synthetic dirt can.)
-    # Key-assignment therefore orders by ALL natural cols so variants
+    # Key assignment therefore orders by ALL natural cols so variants
     # sort deterministically.
-    #
-    # Incremental edge case, also reference parity: when a batch carries
-    # a NEW attribute variant of a natural key that already exists in
-    # the sink, the nk-join below hands both variants the sink's one
-    # surrogate, and the commit aborts on the duplicate key
-    # (``upsert.guard_unique`` in the write plan) — the same "multiple
-    # source rows matched" failure Delta's MERGE raises in the reference.
-    # Fail-fast is the contract; callers that want collapse-to-one-variant
-    # semantics should pre-aggregate silver.  The converse — a sink
-    # holding several keys for one natural key (initial-load variants)
-    # and a batch with one variant — keeps every key, each taking the
-    # batch's attributes.
-    order_cols = spec.natural_cols
+    rows = rows.coalesce(1).distinct()  # P1
 
-    if sink is None:  # S9 tableExists branch: the table was never committed
-        # an empty typed sink (`3(1)_Gold_dim_model.py:59-68` ``where 1=0``)
-        sink = src.where(F.lit(False)).select(
-            F.lit(None).cast("long").alias(spec.key_col), *spec.natural_cols
-        )
-
-    # The rest is one lazy plan, for an empty sink as for any other.  The
-    # full outer join on the natural key yields existing (both sides),
-    # new (source only) and vanished (sink only — MERGE never deletes,
-    # no whenNotMatchedBySource in the reference) rows at once.  Null
-    # natural keys never match, as in the reference's join.
-    in_src = "__in_src"
-    sink_attr = {a: f"__sink_{a}" for a in spec.attrs}
-    joined = src.withColumn(in_src, F.lit(True)).join(
-        sink.select(
-            spec.key_col, *nk, *(F.col(a).alias(sink_attr[a]) for a in spec.attrs)
-        ),
-        on=nk,
-        how="full",
+    # One window per natural key decides every row.  A key the sink does
+    # not hold keeps all its source variants as new rows.  A key the sink
+    # holds keeps its sink rows (MERGE never deletes, no
+    # whenNotMatchedBySource in the reference); with exactly one source
+    # variant they take its attributes (whenMatchedUpdateAll :167).  Two
+    # or more source variants of such a key would hand its surrogate to
+    # each, so the commit aborts — the "multiple source rows matched"
+    # failure Delta's MERGE raises in the reference.  Fail-fast is the
+    # contract; callers that want collapse-to-one-variant semantics
+    # should pre-aggregate silver.  A sink holding several keys for one
+    # natural key (initial-load variants) and a batch with one variant
+    # keeps every key, each taking the batch's attributes.  A NULL
+    # natural-key column never matches, as in the reference's join, so
+    # both sides of such a key are kept as they are.
+    by_nk = f"OVER (PARTITION BY {', '.join(nk)})"
+    counted = rows.selectExpr(
+        *cols,
+        f"sum(CAST({key} IS NULL AS BIGINT)) {by_nk} AS __n_src",
+        f"count({key}) {by_nk} AS __n_sink",
+        *(f"max(CASE WHEN {key} IS NULL THEN {a} END) {by_nk} AS __src_{i}"
+          for i, a in enumerate(attrs)),
     )
-    # Attributes come from the source row when there is one (SCD-1
-    # update, whenMatchedUpdateAll :167), otherwise from the sink.
-    from_src = F.col(in_src).isNotNull()
-    joined = joined.select(
-        spec.key_col,
+    matched = " AND ".join(["__n_sink > 0", *(f"{c} IS NOT NULL" for c in nk)])
+    fail = f"raise_error({_string(_duplicate_keys_message(spec.nk_cols))})"
+    kept = counted.where(
+        f"CASE WHEN {matched} THEN CASE WHEN __n_src > 1 THEN {fail}"
+        f" ELSE {key} IS NOT NULL END ELSE true END"
+    ).selectExpr(
+        key,
         *nk,
-        *(F.when(from_src, F.col(a)).otherwise(F.col(sink_attr[a])).alias(a)
-          for a in spec.attrs),
+        *(f"CASE WHEN {matched} AND __n_src = 1 THEN __src_{i} ELSE {a} END AS {a}"
+          for i, a in enumerate(attrs)),
     )
     # New natural keys (no sink key) are keyed after the sink's max key.
-    return assign_surrogate_keys(joined, spec.key_col, order_cols)
+    return assign_surrogate_keys(kept, spec.key_col, spec.natural_cols)
 
 
 def assign_surrogate_keys(df: DataFrame, key_col: str, order_cols: list[str]) -> DataFrame:
@@ -168,15 +177,22 @@ def assign_surrogate_keys(df: DataFrame, key_col: str, order_cols: list[str]) ->
     ``df`` must be dimension-sized.  ``key_col`` comes first in the
     result, the other columns follow in ``df``'s order.
     """
-    is_new = F.col(key_col).isNull()
-    w = Window.orderBy(*order_cols)
-    offset = F.max(key_col).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    key = _ident(key_col)
+    order = ", ".join(_ident(c) for c in order_cols)
+    rows_from_first = f"ORDER BY {order} ROWS BETWEEN UNBOUNDED PRECEDING AND"
+    offset = f"coalesce(max({key}) OVER ({rows_from_first} UNBOUNDED FOLLOWING), 0)"
+    n_new = f"sum(CAST({key} IS NULL AS BIGINT)) OVER ({rows_from_first} CURRENT ROW)"
+    return df.selectExpr(
+        f"CAST(coalesce({key}, {offset} + {n_new}) AS BIGINT) AS {key}",
+        *(_ident(c) for c in df.columns if c != key_col),
     )
-    n_new = F.sum(is_new.cast("long")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    new_key = F.coalesce(offset, F.lit(0)) + n_new
-    key = F.when(is_new, new_key).otherwise(F.col(key_col))
-    rest = [c for c in df.columns if c != key_col]
-    return df.select(key.cast("long").alias(key_col), *rest)
+
+
+def _ident(col: str) -> str:
+    """``col`` as a SQL identifier."""
+    return "`" + col.replace("`", "``") + "`"
+
+
+def _string(text: str) -> str:
+    """``text`` as a SQL string literal."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"

@@ -17,8 +17,8 @@ Relational formulation — one lazy plan, no Delta needed:
 Surrogate keys stay dense across versions (a new version of an existing
 natural key gets a NEW surrogate — the point of SCD-2): opened rows key
 from max(key)+1 in natural-column order, in the same window the SCD-1
-build uses.  With no sink the build starts from an empty typed one, as
-the SCD-1 build does.
+build uses.  With no sink the build starts from an empty typed one, so
+the initial load runs the incremental plan.
 
 The build is a pure plan builder: it starts no Spark job.  Like the
 SCD-1 build it assumes a dimension-sized frame, since the key window is
@@ -68,7 +68,7 @@ def build_scd2_dimension(
     no_ts = F.lit(None).cast("string")
     src = _one_row_per_key(src.select(*spec.natural_cols).distinct(), nk)
 
-    if sink is None:  # an empty typed sink, as build_scd1_dimension's
+    if sink is None:  # an empty typed sink: the initial load takes the same plan
         sink = src.where(F.lit(False)).select(
             F.lit(None).cast("long").alias(spec.key_col),
             *spec.natural_cols,

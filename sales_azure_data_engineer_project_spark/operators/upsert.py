@@ -20,7 +20,10 @@ match one target key.  The merge window counts the source rows of each
 key, and a count of two or more hits ``raise_error`` in that same
 window: the action that writes the merge result fails before anything
 is published, at no job of its own.  ``guard_unique`` is the same check
-for a frame with no target (an initial load, a snapshot commit).
+for a frame with no target; it serves ``merge_upsert(target=None)``, a
+MERGE into a table not yet committed.  Dimension snapshots need no such
+check: ``dimensions.build_scd1_dimension`` raises the same message from
+its own natural-key window.
 
 Scale notes:
 - The source plan is evaluated once: source and target are unioned and

@@ -24,7 +24,6 @@ from ..io import read_csv, read_parquet, write_parquet
 from ..operators.dimensions import DimensionSpec, build_scd1_dimension
 from ..operators.fact import aggregate_to_grain
 from ..operators.fact import build_fact as assemble_fact
-from ..operators.upsert import guard_unique
 from ..operators.versioned import VersionedTable
 from ..schemas import RAW_SALES_SCHEMA, SILVER_SALES_SCHEMA
 
@@ -98,14 +97,16 @@ class SalesPipeline:
       schema-inference job.
     - each gold table is written in one pass over its inputs, by its
       commit.  A dimension is committed as the snapshot
-      ``build_scd1_dimension`` returns (one full outer join of silver
-      and the sink, keyed in one window; it already is the SCD-1 MERGE
-      result); the fact is merged on its grain by ``VersionedTable.merge``
-      (one window over fact ∪ committed fact, so the fact's plan runs
-      once).  The duplicate-key check runs inside each commit's write,
-      so a violation fails that commit and publishes nothing.  Later
-      stages read the committed versions, which start no Spark job
-      before their own write.
+      ``build_scd1_dimension`` returns (silver's natural columns ∪ the
+      sink in one partition, decided by one window per natural key and
+      keyed in one more: one stage with no exchange, and already the
+      SCD-1 MERGE result); the fact is merged on its grain by
+      ``VersionedTable.merge`` (one window over fact ∪ committed fact,
+      so the fact's plan runs once).  The duplicate-key check runs
+      inside each commit's write (the dimension's natural-key window,
+      the fact's merge window), so a violation fails that commit and
+      publishes nothing.  Later stages read the committed versions,
+      which start no Spark job before their own write.
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -145,7 +146,7 @@ class SalesPipeline:
             table = self.gold_table(name)
             base = table.current_version()
             dim = build_scd1_dimension(silver, table.read(base), spec)
-            new_v = table.overwrite(guard_unique(dim, [spec.key_col]), base_version=base)
+            new_v = table.overwrite(dim, base_version=base)
             dims[name] = table.read(new_v)
         return dims
 

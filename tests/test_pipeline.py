@@ -191,10 +191,40 @@ def test_fact_commit_evaluates_its_merge_source_once(spark, tmp_path, monkeypatc
     assert plan.count("BroadcastExchange") == 5
 
 
-# Jobs one incremental batch of the fixtures starts (measured: 34):
-# five dimension commits, the fact merge, bronze and silver.  Every gold
-# table's plan runs once, in its commit; the margin absorbs AQE re-planning.
-INCREMENTAL_RUN_JOB_BUDGET = 39
+def test_dimension_commits_have_no_exchange(spark, tmp_path, monkeypatch):
+    """Each dimension commit is one single-partition stage: the plan
+    that writes it, on the initial load and on a batch, has no
+    Exchange."""
+    from sales_azure_data_engineer_project_spark.operators.versioned import VersionedTable
+    from sales_azure_data_engineer_project_spark.plans.pipeline import DIM_SPECS
+
+    init = write_sales_csv(str(tmp_path / "init.csv"), INITIAL_ROWS)
+    incr = write_sales_csv(str(tmp_path / "incr.csv"), INCREMENTAL_ROWS)
+    pipe = SalesPipeline(spark, str(tmp_path / "zones"))
+    committed = []
+    commit = VersionedTable._commit
+
+    def spy(self, df, **kw):
+        committed.append((os.path.basename(self.root), df))
+        return commit(self, df, **kw)
+
+    monkeypatch.setattr(VersionedTable, "_commit", spy)
+    pipe.run(init)
+    pipe.run(incr)
+    plans = [
+        (table, df._jdf.queryExecution().executedPlan().toString())
+        for table, df in committed
+        if table in DIM_SPECS
+    ]
+    assert len(plans) == 2 * len(DIM_SPECS)
+    assert [(t, p.count("Exchange")) for t, p in plans] == [(t, 0) for t, _ in plans]
+
+
+# Jobs one incremental batch of the fixtures starts (measured: 15): one
+# per dimension commit (five), the fact merge, bronze and silver.  Every
+# gold table's plan runs once, in its commit; the margin absorbs AQE
+# re-planning.
+INCREMENTAL_RUN_JOB_BUDGET = 20
 
 
 def test_incremental_run_job_budget(spark, tmp_path):
@@ -206,9 +236,9 @@ def test_incremental_run_job_budget(spark, tmp_path):
     assert jobs <= INCREMENTAL_RUN_JOB_BUDGET
 
 
-# Jobs the fixtures' initial load starts (measured: 24): the same plans
-# as an incremental batch, each dimension built over an empty typed sink.
-INITIAL_LOAD_JOB_BUDGET = 29
+# Jobs the fixtures' initial load starts (measured: 14): the same plans
+# as an incremental batch, each dimension built with no sink to union.
+INITIAL_LOAD_JOB_BUDGET = 19
 
 
 def test_initial_load_job_budget(spark, tmp_path):

@@ -6,7 +6,8 @@ example count for structural diversity of the generated relations.
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+import pytest
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from sales_azure_data_engineer_project_spark.operators.dimensions import (
@@ -73,6 +74,98 @@ def test_scd1_two_batches_keys_stable_and_dense(spark, batch1, batch2):
     assert sorted(k2.values()) == list(range(1, len(k2) + 1))
     for nk, key in k1.items():
         assert k2[nk] == key
+
+
+def _nulls_first(row):
+    return tuple((0,) if v is None else (1, v) for v in row)
+
+
+def _scd1_fold(rows, batch, width):
+    """Pure-Python SCD-1 fold of one batch (a set of natural-column
+    tuples, the natural key first ``width``) into rows ``(key, *cols)``.
+    Raises when the batch holds two variants of a natural key the rows
+    hold."""
+    held = {r[1:1 + width] for r in rows}
+    variants = {}
+    for v in batch:
+        variants.setdefault(v[:width], []).append(v)
+    out = []
+    for key, *cols in rows:
+        nk = tuple(cols[:width])
+        src = [] if None in nk else variants.get(nk, [])
+        if len(src) > 1:
+            raise ValueError("multiple source rows")
+        out.append((key, *(src[0] if src else cols)))  # updated or vanished
+    new = [v for v in batch if None in v[:width] or v[:width] not in held]
+    next_key = max((r[0] for r in rows), default=0) + 1
+    out += [(next_key + i, *v) for i, v in enumerate(sorted(new, key=_nulls_first))]
+    return out
+
+
+_SCD1_SHAPES = {
+    # (spec, source schema): one natural-key column, or dim_calendar's
+    # (Year, Month, Day) composite with its date_iso attribute
+    "single": (DimensionSpec("d", "key", "nk", ("attr",)), "nk string, attr string"),
+    "calendar": (
+        DimensionSpec("d", "key", ("Year", "Month", "Day"), ("date_iso",)),
+        "Year int, Month int, Day int, date_iso string",
+    ),
+}
+_attr = st.sampled_from(["x", "y", None])
+_single_rows = st.lists(st.tuples(st.sampled_from(["a", "b", "c", None]), _attr), max_size=5)
+_calendar_rows = st.lists(
+    st.tuples(
+        st.sampled_from([2020, 2021]), st.sampled_from([1, None]), st.sampled_from([1, 2]), _attr
+    ),
+    max_size=5,
+)
+scd1_cases = st.one_of(
+    st.tuples(st.just("single"), _single_rows, _single_rows),
+    st.tuples(st.just("calendar"), _calendar_rows, _calendar_rows),
+)
+
+
+@SLOW
+@example(case=(  # FD-violating variants of a new key, then a sink holding
+    "single",    # two keys for one natural key, a vanished key and a NULL key
+    [("a", "x"), ("a", "y"), ("b", "x"), (None, "x")],
+    [("a", None), ("c", "x"), (None, "x"), (None, "y")],
+))
+@example(case=("single", [("a", "x")], [("a", "x"), ("a", "y")]))  # raises
+@example(case=(
+    "calendar",
+    [(2020, 1, 1, "x"), (2020, None, 1, "x"), (2021, 1, 2, "y")],
+    [(2020, 1, 1, "y"), (2020, None, 1, "y"), (2020, 1, 2, None)],
+))
+@given(case=scd1_cases)
+def test_scd1_matches_python_fold(spark, case):
+    """Differential: two batches through ``build_scd1_dimension`` yield
+    exactly the rows of a pure-Python SCD-1 fold — FD-violating variants
+    of a new key each get a key, a sink row takes the attributes of its
+    key's one source variant, vanished rows stay, NULL natural keys never
+    match, new keys are dense from max+1 in natural-column order (nulls
+    first) — and a new variant of a natural key the sink holds raises."""
+    shape, batch1, batch2 = case
+    spec, schema = _SCD1_SHAPES[shape]
+    width = len(spec.nk_cols)
+    dim_schema = f"key long, {schema}"
+    want = _scd1_fold([], set(batch1), width)
+    d1 = build_scd1_dimension(spark.createDataFrame(batch1, schema), None, spec)
+    got = [tuple(r) for r in d1.collect()]
+    assert sorted(got, key=_nulls_first) == sorted(want, key=_nulls_first)
+    assert sorted(r[0] for r in got) == list(range(1, len(got) + 1))
+
+    sink = spark.createDataFrame(got, dim_schema)
+    d2 = build_scd1_dimension(spark.createDataFrame(batch2, schema), sink, spec)
+    try:
+        want = _scd1_fold(want, set(batch2), width)
+    except ValueError:
+        with pytest.raises(Exception, match="multiple source rows"):
+            d2.collect()
+        return
+    got = [tuple(r) for r in d2.collect()]
+    assert sorted(got, key=_nulls_first) == sorted(want, key=_nulls_first)
+    assert sorted(r[0] for r in got) == list(range(1, len(got) + 1))
 
 
 def _scd2_fold(rows, batch, ts):

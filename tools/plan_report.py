@@ -11,11 +11,12 @@ lives in each query's docstring; this table is the part a reviewer can
 regenerate mechanically).
 
 Each builder runs under ``sys.settrace``, which records the package
-lines it executes on the driver.  The ``unique_lines`` column counts
-those lines, minus the query's own registered source, that no other
-query's builder executes: a query at 0 exercises no library code a
-sibling does not, so with a sibling of the same plan row it is
-redundant.
+lines it executes on the driver, except the import-time lines of a
+package module the builder imports lazily.  The ``unique_lines``
+column counts those lines, minus the query's own registered source,
+that no other query's builder executes: a query at 0 exercises no
+library code a sibling does not, so with a sibling of the same plan
+row it is redundant.
 
 Usage: python tools/plan_report.py [sf_dir]   (default sf0.01)
 """
@@ -59,7 +60,8 @@ def audit(plan: str) -> dict[str, int]:
 
 def traced_build(fn, spark, sf_dir):
     """Build one query under ``sys.settrace``.  Returns the DataFrame and
-    the set of ``(file, line)`` package lines the builder executed."""
+    the set of ``(file, line)`` package lines the builder executed,
+    leaving out code that runs while a package module is imported."""
     lines: set[tuple[str, int]] = set()
 
     def local(frame, event, arg):
@@ -68,7 +70,16 @@ def traced_build(fn, spark, sf_dir):
         return local
 
     def on_call(frame, event, arg):
-        return local if frame.f_code.co_filename.startswith(PACKAGE) else None
+        if not frame.f_code.co_filename.startswith(PACKAGE):
+            return None
+        # A lazy import runs the module's body (and the class bodies and
+        # decorators it calls) on first use only: not the builder's work.
+        f = frame
+        while f is not None:
+            if f.f_code.co_name == "<module>" and f.f_code.co_filename.startswith(PACKAGE):
+                return None
+            f = f.f_back
+        return local
 
     sys.settrace(on_call)
     try:
