@@ -1,18 +1,15 @@
 """Deduplication operator family for training-data pipelines.
 
-Four tiers, all shuffle-aware and expressed with built-in functions:
+Three tiers, all shuffle-aware and expressed with built-in functions:
 
 - **exact**        hash-groupBy on content digest — one shuffle on the
-                   digest; at 100 TB this is the cheapest possible dedup
-                   (shuffle of 16-byte keys, map-side combine).
-- **n-gram Jaccard**  shingle → explode → self-join on shingle →
-                   integer-exact Jaccard per candidate pair.  The
-                   explode/join is the scalable formulation (never a
-                   cross join): cost is Σ bucket² over shingle buckets.
+                   digest; the cheapest possible dedup (shuffle of
+                   16-byte keys, map-side combine).
 - **MinHash + LSH**  md5-based minhash signatures, banded; candidate
-                   pairs only where a band bucket collides.  This is the
-                   100 TB path: signature size is constant per doc and
-                   the band join shuffles only (doc, band-sig) pairs.
+                   pairs only where a band bucket collides, verified by
+                   exact shingle Jaccard.  Signature size is constant
+                   per doc and the band join shuffles only (doc,
+                   band-sig) pairs.
 - **SimHash**      16-bit vote fingerprint from md5 nibbles (the
                    SQL-exact variant; a 64/128-bit production variant
                    would swap the nibble trick for a Pandas UDF).
@@ -23,7 +20,7 @@ byte-for-byte; minhash "min" is lexicographic over hex strings.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .text import TOKEN_RE, fingerprint_md5
@@ -32,7 +29,6 @@ from ..caching import tracked_persist
 __all__ = [
     "exact_dedup_groups",
     "shingle_explode",
-    "jaccard_pairs",
     "minhash_bands",
     "minhash_signatures",
     "lsh_candidate_pairs",
@@ -89,42 +85,6 @@ def shingle_explode(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Da
     )
 
 
-def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """Per-doc distinct shingle HASH arrays (xxhash64 longs), persisted.
-
-    Every dedup pipeline below reuses the shingle set 2–3× (sizes,
-    left/right side of the self-join, intersect verification); without
-    persisting, Spark re-runs the regex tokenization + n-gram build per
-    use — the dominant cost at any scale.  MEMORY_AND_DISK so big
-    corpora spill instead of OOMing.
-
-    Round-8: this frame persists 8-byte LONGS, not the raw ~25-byte
-    shingle strings — the string-array columnar cache OOM'd the 300×
-    decade tier during batch build (same inflation class as the
-    char-array trigram fix).  Every consumer here needs shingle
-    IDENTITY only (posting equi-joins, sizes, array_intersect counts),
-    for which xxhash64 is the documented birthday-bounded stand-in the
-    posting joins already used.  The one consumer that needs the RAW
-    strings — the md5 minhash signature build, which must stay
-    engine-portable for the DuckDB oracles — streams them straight off
-    its own text scan instead (``minhash_signatures``), or shares ONE
-    scan via ``_shingled_with_sig`` when a caller needs both.
-
-    Built explode→hash→collect_list rather than a per-element
-    ``transform(…, xxhash64)``: higher-order lambdas are INTERPRETED
-    (the round-4 CSE lesson's sibling), and the measured 1× cost of
-    interpreting 0.5M hashes exceeded this one compact groupBy of
-    8-byte keys.  Array element ORDER is therefore shuffle-dependent;
-    every consumer treats the array as a SET (explode / size /
-    array_intersect), so results are order-invariant."""
-    sh = shingle_explode(df, id_col, text_col, n)
-    return (
-        sh.groupBy(id_col)
-        .agg(F.collect_list(F.xxhash64("sh")).alias("shingles"))
-        .transform(tracked_persist)
-    )
-
-
 def _shingled_with_sig(
     df: DataFrame,
     id_col: str,
@@ -136,7 +96,7 @@ def _shingled_with_sig(
     """(id, shingles array<long>, h0..h{n-1}) in ONE tokenization pass
     and ONE aggregate — for callers that need both the identity arrays
     (candidate verification) and the md5 minhash signature (banding).
-    Docs with zero shingles are absent, exactly as in ``_shingled`` /
+    Docs with zero shingles are absent, exactly as in
     ``minhash_signatures``."""
     sh = shingle_explode(df, id_col, text_col, n)
     return (
@@ -156,283 +116,6 @@ def _shingled_with_sig(
         )
         .transform(tracked_persist)
     )
-
-
-def _posting_rows(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    posting_freq_cap: int | None,
-) -> DataFrame:
-    """(id, sz, sh) posting rows for the exact-tier self-joins.
-
-    ``posting_freq_cap`` is the exact tier's skewed-shingle safety
-    valve (VERDICT r8 "Next" #4 — the sibling of ``hot_bucket_cap``):
-    a shingle appearing in m documents contributes C(m,2) rows to the
-    posting self-join, so a boilerplate shingle ("click here to read
-    more") with corpus-scale df makes Σ bucket² quadratic no matter
-    how the rest of the corpus is distributed.  With the cap, posting
-    rows whose shingle's DOCUMENT FREQUENCY exceeds it are dropped and
-    per-doc sizes are recomputed over the RETAINED shingles — the
-    result is integer-exact Jaccard/containment over the df-filtered
-    shingle universe (a boilerplate-removed measure, the same framing
-    as Broder's stop-shingle lists), fully SQL-expressible so the
-    capped variant keeps a hash-exact DuckDB oracle.  Every retained
-    bucket is ≤ cap rows, so join output is ≤ cap·|postings|/2 —
-    LINEAR in the corpus regardless of df skew.  ``None`` keeps the
-    exact-unfiltered behavior of the original oracle tier.
-
-    Both df and retained-size are WINDOW counts (partitioned, never
-    global) so neither needs a ∝-corpus aggregate joined back — the
-    same in-exchange trick as ``lsh_candidate_pairs``; the df window
-    shares its hash partitioning with the downstream self-join.
-
-    Cache shapes differ by path ON PURPOSE.  The uncapped path reads
-    the per-doc ARRAY cache (``_shingled``) — both join sides re-derive
-    their rows from it, and other pipeline stages share it.  The capped
-    path instead persists the post-filter NARROW posting rows and never
-    builds the array frame at all: its only consumer would explode the
-    arrays immediately, so the collect_list aggregate is wasted work —
-    and at the 1000× tier the array-column cache BUILD itself is the
-    heap killer (``ComplexColumnBuilder`` doubles a per-batch
-    ByteBuffer between memory-accounting checks; measured round-9: the
-    capped query OOM'd a stock 8 GB JVM at 5.8M docs inside
-    ``ColumnBuilder.ensureFreeSpace`` while every downstream stage
-    spills fine).  Scalar (long/int) column builders preallocate per
-    batch and the narrow cache spills to disk like any other."""
-    if posting_freq_cap is None:
-        shingled = _shingled(df, id_col, text_col, n)
-        return shingled.select(
-            F.col(id_col),
-            F.size("shingles").cast("int").alias("sz"),
-            F.explode("shingles").alias("sh"),
-        )
-    if posting_freq_cap < 1:
-        raise ValueError(f"posting_freq_cap must be >= 1; got {posting_freq_cap}")
-    exploded = shingle_explode(df, id_col, text_col, n).select(
-        F.col(id_col), F.xxhash64("sh").alias("sh")
-    )
-    return (
-        exploded.withColumn(
-            "_df", F.count(F.lit(1)).over(Window.partitionBy("sh"))
-        )
-        .filter(F.col("_df") <= posting_freq_cap)
-        .select(
-            F.col(id_col),
-            F.count(F.lit(1))
-            .over(Window.partitionBy(id_col))
-            .cast("int")
-            .alias("sz"),
-            "sh",
-        )
-        .transform(tracked_persist)
-    )
-
-
-def jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    n: int = 3,
-    min_permille: int = 300,
-    posting_freq_cap: int | None = None,
-) -> DataFrame:
-    """Candidate near-dup pairs with integer-exact Jaccard (×1000).
-
-    jac‰ = 1000·|A∩B| div (|A|+|B|−|A∩B|); pairs below ``min_permille``
-    are dropped.  Output: (id_a, id_b, common, jac_permille).
-
-    With ``posting_freq_cap``, shingles whose document frequency
-    exceeds the cap are excluded and sizes recomputed — exact Jaccard
-    over the df-filtered (boilerplate-removed) shingle universe; see
-    ``_posting_rows`` for the scale contract.
-    """
-    # the equality self-join only needs shingle IDENTITY, not the
-    # string: the persisted frame already carries xxhash64 longs
-    # (8 bytes vs ~25-byte strings through the shuffle).  Collision
-    # risk is birthday-bounded (~1e-9 at 1e5 distinct shingles, still
-    # <1e-4 at 1e8) and any collision is caught by the DuckDB oracle,
-    # which intersects the raw strings.
-    # Each posting row CARRIES its document's shingle count (4-byte
-    # int): the per-doc sizes relation grows ∝ corpus, so joining it
-    # back — let alone broadcasting it, as this ran until round 8 —
-    # is the one piece of this plan that would not survive 1e9 docs.
-    # min(sz) in the pair aggregate recovers the constant-per-doc
-    # value for free inside the existing partial aggregation.
-    sh = _posting_rows(df, id_col, text_col, n, posting_freq_cap)
-    r = sh.select(
-        F.col(id_col).alias("rid"), F.col("sz").alias("sz_r"), F.col("sh")
-    )
-    common = (
-        sh.join(r, on="sh")
-        .filter(F.col(id_col) < F.col("rid"))
-        .groupBy(F.col(id_col).alias("id_a"), F.col("rid").alias("id_b"))
-        .agg(
-            F.count(F.lit(1)).alias("common"),
-            F.min("sz").alias("sz_a"),
-            F.min("sz_r").alias("sz_b"),
-        )
-    )
-    return (
-        common.withColumn(
-            "jac_permille",
-            F.expr("div(1000 * common, sz_a + sz_b - common)").cast("bigint"),
-        )
-        .filter(F.col("jac_permille") >= min_permille)
-        .select(
-            F.col("id_a").cast("bigint"),
-            F.col("id_b").cast("bigint"),
-            F.col("common").cast("bigint"),
-            "jac_permille",
-        )
-    )
-
-
-def containment_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    n: int = 3,
-    min_permille: int = 800,
-    posting_freq_cap: int | None = None,
-) -> DataFrame:
-    """Asymmetric shingle containment C(A→B) = |A∩B| / |A| (×1000).
-
-    Jaccard is symmetric, so a short document quoted wholesale inside a
-    long one scores low (union is dominated by the long doc) and
-    symmetric dedup misses it.  Containment — the measure behind
-    suffix-array substring dedup (Lee et al. 2022, "Deduplicating
-    Training Data Makes Language Models Better") and Broder's original
-    resemblance/containment pair — is the right asymmetric test: the
-    shorter side's shingles nearly all appear in the longer side.
-
-    Same posting-list shape as ``jaccard_pairs`` (shingle-hash
-    equi-join, never all-pairs); one extra integer division per
-    surviving pair.  Emits one row per UNORDERED pair with BOTH
-    directions scored; ``cont_max_permille`` ≥ ``min_permille`` keeps
-    the pair.  Output: (id_a, id_b, common, cont_a_permille,
-    cont_b_permille, cont_max_permille) with id_a < id_b.
-
-    ``posting_freq_cap`` applies the same df-filtered exactness
-    contract as ``jaccard_pairs`` (see ``_posting_rows``).
-    """
-    # sizes carried through the posting rows exactly as in
-    # ``jaccard_pairs`` above — the per-doc size relation grows ∝
-    # corpus, so it must never be joined back (or broadcast).
-    sh = _posting_rows(df, id_col, text_col, n, posting_freq_cap)
-    r = sh.select(
-        F.col(id_col).alias("rid"), F.col("sz").alias("sz_r"), F.col("sh")
-    )
-    common = (
-        sh.join(r, on="sh")
-        .filter(F.col(id_col) < F.col("rid"))
-        .groupBy(F.col(id_col).alias("id_a"), F.col("rid").alias("id_b"))
-        .agg(
-            F.count(F.lit(1)).alias("common"),
-            F.min("sz").alias("sz_a"),
-            F.min("sz_r").alias("sz_b"),
-        )
-    )
-    return (
-        common.withColumn("cont_a_permille", F.expr("div(1000 * common, sz_a)").cast("bigint"))
-        .withColumn("cont_b_permille", F.expr("div(1000 * common, sz_b)").cast("bigint"))
-        .withColumn(
-            "cont_max_permille",
-            F.greatest("cont_a_permille", "cont_b_permille").cast("bigint"),
-        )
-        .filter(F.col("cont_max_permille") >= min_permille)
-        .select(
-            F.col("id_a").cast("bigint"),
-            F.col("id_b").cast("bigint"),
-            F.col("common").cast("bigint"),
-            "cont_a_permille",
-            "cont_b_permille",
-            "cont_max_permille",
-        )
-    )
-
-
-def incremental_jaccard_matches(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    n: int = 3,
-    min_permille: int = 300,
-) -> DataFrame:
-    """Near-dup matches of a NEW batch against an EXISTING corpus — the
-    incremental form of ``jaccard_pairs`` a continuous-ingest pipeline
-    runs per crawl batch: the posting-list join is new-shingles ×
-    old-shingles ONLY, so per-batch cost is proportional to the batch
-    (Σ over shingles of new_bucket·old_bucket), never a recompute of
-    old × old.  At 100 TB of accumulated corpus the old posting list is
-    a maintained table partitioned by shingle hash; each batch join
-    prunes to the buckets the batch actually touches.
-
-    Returns each new document's BEST match: (new_id, match_id,
-    common, jac_permille), highest Jaccard wins, smallest match_id on
-    ties; new docs with no match ≥ ``min_permille`` are absent (they
-    are the novel content that survives ingest).
-    """
-    sh_old = _shingled(old, id_col, text_col, n)
-    sh_new = _shingled(new, id_col, text_col, n)
-
-    def postings(sh_df, alias):
-        # shingles are already xxhash64 longs (see _shingled)
-        return sh_df.select(
-            F.col(id_col).alias(alias), F.explode("shingles").alias("sh")
-        )
-
-    po = postings(sh_old, "match_id")
-    pn = postings(sh_new, "new_id")
-    sz_old = sh_old.select(
-        F.col(id_col).alias("match_id"), F.size("shingles").alias("sz_o")
-    ).filter(F.col("sz_o") > 0)
-    sz_new = sh_new.select(
-        F.col(id_col).alias("new_id"), F.size("shingles").alias("sz_n")
-    ).filter(F.col("sz_n") > 0)
-    common = (
-        pn.join(po, "sh")
-        .groupBy("new_id", "match_id")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    # sz_new is BATCH-sized → broadcast; sz_old is CORPUS-sized → plain
-    # equi-join (AQE broadcasts it at small scale; at 100 TB it must
-    # shuffle-join against the match list, which is candidate-sized)
-    scored = (
-        common.join(F.broadcast(sz_new), "new_id")
-        .join(sz_old, "match_id")
-        .withColumn(
-            "jac_permille",
-            F.expr("div(1000 * common, sz_n + sz_o - common)").cast("bigint"),
-        )
-        .filter(F.col("jac_permille") >= min_permille)
-    )
-    # best match per new doc: argmax-by-struct (max jac, then smallest
-    # match id) — partial-aggregated, no ranking window
-    best = (
-        scored.groupBy("new_id")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("jac_permille"),
-                    (-F.col("match_id")).alias("nm"),
-                    F.col("common"),
-                )
-            ).alias("m")
-        )
-        .select(
-            F.col("new_id").cast("bigint"),
-            (-F.col("m.nm")).cast("bigint").alias("match_id"),
-            F.col("m.common").cast("bigint").alias("common"),
-            F.col("m.jac_permille").cast("bigint").alias("jac_permille"),
-        )
-    )
-    return best
 
 
 def minhash_bands(
@@ -470,12 +153,8 @@ def minhash_signatures(
     shingle→md5→min pipeline would re-run per consumer.
 
     The RAW shingle strings stream straight off this text scan into
-    the md5 mins and are never materialized or cached (round-8: the
-    string-array shingle cache OOM'd the 300× tier during columnar
-    batch build; ``_shingled`` now persists hash LONGS, which md5
-    signatures can't be built from without losing DuckDB-oracle
-    portability — so the signature build pays one extra tokenization
-    scan instead of sharing the inflated cache).
+    the md5 mins and are never materialized or cached: a string-array
+    shingle cache is the largest frame the dedup path could build.
 
     All n_hashes seeds evaluate as SIBLING expressions on each
     exploded shingle row — md5 count is unchanged (n per shingle),
@@ -496,9 +175,7 @@ def minhash_signatures(
     (they are grouped away into ids/counts), so outputs are unchanged.
     What it buys at scale: the corpus-proportional signature cache and
     the banded-join shuffle halve (16 B vs 32 B + string overhead per
-    value) — the 3000×-tier `dedup_minhash_lsh` OOM was pinned to
-    CachedRDDBuilder building the ~5 GB HEX signature cache on one
-    8 GB heap (SCALING.md round-10 addenda)."""
+    value)."""
     sh = shingle_explode(df, id_col, text_col, shingle_n)
     return sh.groupBy(id_col).agg(
         *[
@@ -577,9 +254,8 @@ def lsh_candidate_pairs(
         # bucket size + hub via a WINDOW over the exact partitioning the
         # self-join requires (hash by band_idx, band_sig): Spark computes
         # both on the join's own Exchange instead of paying a separate
-        # aggregate shuffle + join-back — measured ~9s of serial AQE
-        # stage cost inside the composed funnel at sf0.1 (NOTES.md
-        # round-6 A/B), and the window is partitioned (never global)
+        # aggregate shuffle + join-back, and the window is partitioned
+        # (never global)
         from pyspark.sql import Window as _W
 
         w = _W.partitionBy("band_idx", "band_sig")
@@ -620,10 +296,9 @@ def minhash_verified_pairs(
 ) -> DataFrame:
     """Near-dup pairs via LSH candidates + exact-Jaccard verification.
 
-    The 100 TB pair-generation path: ``jaccard_pairs`` joins the full
-    shingle posting lists (cost Σ bucket² over every shingle bucket in
-    the corpus), while this generates candidates from constant-size
-    banded minhash signatures — the shuffle is |docs|·n_bands rows of
+    An all-pairs shingle join costs Σ bucket² over every shingle bucket
+    in the corpus; this generates candidates from constant-size banded
+    minhash signatures — the shuffle is |docs|·n_bands rows of
     (id, 16-byte band-sig) regardless of document length — and then
     computes exact Jaccard ONLY for colliding pairs by intersecting the
     two candidates' shingle arrays (array_intersect, no posting-list
@@ -634,8 +309,7 @@ def minhash_verified_pairs(
     band AND verified Jaccard ≥ ``min_permille``.  Precision is exact —
     verification eliminates every false-positive collision.
 
-    Output: (id_a, id_b, common, jac_permille) — the same schema as
-    ``jaccard_pairs``, so downstream clustering is drop-in.
+    Output: (id_a, id_b, common, jac_permille).
 
     ``id_col`` must be integral: candidate pairs come back from
     ``lsh_candidate_pairs`` as BIGINT, and joining those back to a

@@ -24,7 +24,8 @@ widest shuffle is the original groupBy on (group, bucket).
 
 This generalizes the reference's running-total notebooks' semantics
 (cumulative measures over an ordered dimension) to a shape that holds
-at cluster scale.  Used by ``stats_ks_two_sample`` for exact ECDFs.
+at cluster scale.  Used by ``events_mannwhitney_auc`` for exact
+midranks and by the concentration and RFM queries.
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""File-level data skipping + Z-order clustering over plain parquet.
+"""File-level data skipping over plain parquet.
 
 The lakehouse trick the reference's gold zone gets from Delta
 (`3(1)_Gold_dim_model.py` writes Delta tables, whose transaction log
@@ -15,18 +15,8 @@ built directly on parquet footers —
   Spark only the overlapping files.  The predicate is STILL applied to
   the surviving rows — skipping is an optimization, never a semantics
   change (and parquet row-group pushdown then prunes within files).
-- **Z-order**: multi-column locality so pruning works on EVERY listed
-  column, not just a lead sort key.  Each column is bucketed by its
-  approximate quantiles (rank space — robust to skew, unlike linear
-  min/max bucketing) and the bucket bits are interleaved into one
-  BIGINT z-value; ``repartitionByRange(z)`` + ``sortWithinPartitions``
-  gives every output file a small hyper-rectangle of the key space.
 
-Scale shape: quantile boundaries come from ``approxQuantile``
-(Greenwald-Khanna sketch, one pass, driver gets O(buckets) numbers);
-bucketing + bit interleave are pure JVM column expressions; the only
-shuffle is the range partition that the write needs anyway.  Footer
-reads touch KB-sized metadata per file.  Everything here is
+Scale shape: footer reads touch KB-sized metadata per file.  Everything here is
 driver-coordinated metadata over executor-written data — the same
 division of labor as Delta's commit protocol.
 """
@@ -44,7 +34,6 @@ __all__ = [
     "read_manifest",
     "pruned_files",
     "read_pruned",
-    "zorder_frame",
 ]
 
 _MANIFEST = "_manifest.json"
@@ -198,115 +187,3 @@ def read_pruned(reader: DataFrameReader, vdir: str, col: str, lo, hi) -> DataFra
         return reader.parquet(vdir).filter(F.lit(False))
     return reader.parquet(*files).filter(F.col(col).between(lo, hi))
 
-
-def _bucket_expr(col: str, boundaries: list, *, as_string: bool = False):
-    """Rank-space bucket id 0..len(boundaries): count of quantile
-    boundaries ≤ value — a branch-free JVM expression over a literal
-    array (no UDF, no join).  String boundaries compare
-    lexicographically, matching parquet's string min/max order."""
-    arr = F.array(*[F.lit(b) for b in boundaries])
-    target = F.col(col) if as_string else F.col(col).cast("double")
-    return F.size(F.filter(arr, lambda b: b <= target))
-
-
-def _string_boundaries(
-    df: DataFrame, cols: list[str], n_buckets: int
-) -> dict[str, list[str]]:
-    """Lexicographic bucket boundaries for the STRING z-columns from
-    ONE bounded deterministic sample (seeded, capped at 100k rows —
-    one upstream-plan execution total, mirroring the single
-    multi-column approxQuantile call): per column, sort driver-side
-    and take n_buckets-1 evenly spaced cut points.  Boundary quality
-    only affects clustering BALANCE — correctness never depends on it
-    (manifests record each file's actual min/max and the read path
-    re-applies the predicate), so a skewed sample degrades skip rate,
-    not results."""
-    if not cols:
-        return {}
-    rows = (
-        df.select(*cols).sample(fraction=0.1, seed=42).limit(100_000).collect()
-    )
-    if not rows:
-        # small tables can sample to zero rows (review): fall back to a
-        # direct bounded collect so string clustering never silently
-        # no-ops on a dimension-sized input
-        rows = df.select(*cols).limit(100_000).collect()
-    out: dict[str, list[str]] = {}
-    for c in cols:
-        vals = sorted(r[c] for r in rows if r[c] is not None)
-        if not vals:
-            out[c] = []
-            continue
-        step = max(len(vals) // n_buckets, 1)
-        bounds = sorted({vals[i] for i in range(step, len(vals), step)})
-        out[c] = bounds[: n_buckets - 1]
-    return out
-
-
-def zorder_frame(
-    df: DataFrame,
-    cols: list[str],
-    *,
-    bits: int = 4,
-    num_files: int = 8,
-) -> DataFrame:
-    """Return ``df`` re-clustered on the interleaved z-value of ``cols``
-    (each bucketed into 2**bits rank-space buckets), partitioned into
-    ``num_files`` range slices and sorted within each — ready to write,
-    with every output file covering a tight min/max box on EVERY listed
-    column.
-
-    2 cols × 4 bits ⇒ an 8-bit z-value whose bit i alternates between
-    the columns: files slice the space into squares instead of stripes,
-    so a predicate on either column alone still skips ~(1 - 1/2**bits)
-    of the files (a lead-column linear sort skips nothing for the
-    second column).
-
-    Numeric columns bucket on approxQuantile boundaries; STRING
-    columns (round 4) on sampled lexicographic boundaries — same
-    rank-space idea, and parquet string min/max stats order matches
-    the comparison, so manifests prune string ranges too.  Dates and
-    timestamps must be cast to epoch integers by the caller.  Boundary
-    derivation costs ONE upstream execution for all numeric columns
-    (multi-column approxQuantile) plus one more for all string columns
-    (one sampled collect) — mixed-type z-orders pay two passes; cache
-    the input first if it is expensive to recompute."""
-    n_buckets = 1 << bits
-    qs = [i / n_buckets for i in range(1, n_buckets)]
-    types = {f.name: f.dataType.typeName() for f in df.schema}
-    numeric = {
-        c
-        for c, t in types.items()
-        if t in ("byte", "short", "integer", "long", "float", "double", "decimal")
-    }
-    stringy = {c for c, t in types.items() if t == "string"}
-    bad = [c for c in cols if c not in numeric and c not in stringy]
-    if bad:
-        raise TypeError(
-            f"zorder_frame needs numeric or string columns; "
-            f"cast dates to epoch days first: {bad}"
-        )
-    # ONE multi-column approxQuantile call for the numeric z-columns —
-    # per-column calls re-run the whole upstream plan once per z-column
-    # (review finding); string columns get sampled lexicographic
-    # boundaries (round 4 — parity with Delta's string z-order)
-    num_cols = [c for c in cols if c in numeric]
-    num_bounds = dict(
-        zip(num_cols, df.approxQuantile(num_cols, qs, 0.001) if num_cols else [])
-    )
-    str_bounds = _string_boundaries(df, [c for c in cols if c in stringy], n_buckets)
-    zval = F.lit(0).cast("bigint")
-    for ci, col in enumerate(cols):
-        bounds = num_bounds[col] if col in numeric else str_bounds[col]
-        if not bounds:  # all-NULL column: single bucket, contributes 0 bits
-            continue
-        b = _bucket_expr(col, bounds, as_string=col in stringy).cast("bigint")
-        for i in range(bits):
-            bit = F.shiftright(b, i).bitwiseAND(F.lit(1))
-            zval = zval + F.shiftleft(bit, i * len(cols) + ci)
-    return (
-        df.withColumn("_z", zval)
-        .repartitionByRange(num_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-    )

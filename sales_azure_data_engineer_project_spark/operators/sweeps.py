@@ -11,7 +11,7 @@ against Python brute force on random inputs
   two-phase distributed prefix-max — local running max per range
   partition, partition-boundary maxima stitched by a driver-side
   prefix over ≤ #partitions scalars; never a global no-partition
-  window (the round-2 ``vocab_top_tokens`` scale hazard).
+  window (which would sort every row in one task).
 """
 
 from __future__ import annotations

@@ -21,8 +21,6 @@ from pyspark.sql import functions as F
 __all__ = [
     "tokens",
     "fingerprint_md5",
-    "fingerprint_sorted_tokens",
-    "EN_STOPWORDS",
     "quality_columns",
 ]
 
@@ -30,10 +28,6 @@ TOKEN_RE = r"\s+"
 # Spark SQL string literals apply C-style escapes, so the regex needs a
 # doubled backslash when embedded in F.expr SQL text.
 TOKEN_RE_SQL = r"\\s+"
-
-# Small embedded stopword list for the language-ID heuristic (public
-# knowledge; the synthetic corpus vocabulary is English-ish).
-EN_STOPWORDS = ("the", "a", "an", "of", "and", "to", "is", "in", "it", "for")
 
 
 def tokens(col: Column | str) -> Column:
@@ -46,16 +40,6 @@ def fingerprint_md5(col: Column | str) -> Column:
     """Exact-content fingerprint: md5 of the raw text."""
     c = F.col(col) if isinstance(col, str) else col
     return F.md5(c.cast("binary"))
-
-
-def fingerprint_sorted_tokens(col: Column | str) -> Column:
-    """Order-insensitive content fingerprint: md5 over the sorted distinct
-    token multiset — robust to word reordering, the cheap cousin of
-    SimHash for shuffled near-dups."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.md5(
-        F.concat_ws(" ", F.array_sort(F.array_distinct(F.split(c, TOKEN_RE)))).cast("binary")
-    )
 
 
 def quality_columns(text_col: str = "text") -> list[Column]:

@@ -77,15 +77,31 @@ class VersionedTable:
     def _vdir(self, version: int) -> str:
         return os.path.join(self.root, f"v={version}")
 
-    def read(self, version: int | None = None) -> DataFrame | None:
-        """Current snapshot, or time-travel to ``version``.  A pure plan
-        builder: the schema committed with the version replaces parquet
-        schema inference, which would run a Spark job per read."""
-        v = self.current_version() if version is None else version
+    def _snapshot_dir(self, version: int | None) -> str | None:
+        """The directory of ``version`` (default: the current one), or
+        ``None`` when the table has no commit yet or ``version`` was
+        vacuumed.  A current version whose directory is gone raises
+        ``FileNotFoundError``: returning ``None`` there would make a
+        populated table look empty, and a caller that rebuilds from an
+        empty table would re-key every row."""
+        cur = self.current_version()
+        v = cur if version is None else version
         vdir = self._vdir(v)
-        if v <= 0 or not os.path.isdir(vdir):
+        if v <= 0:
             return None
-        return self._reader(vdir).parquet(vdir)
+        if not os.path.isdir(vdir):
+            if v == cur:
+                raise FileNotFoundError(f"{self._pointer} names v{v}, but {vdir} is gone")
+            return None
+        return vdir
+
+    def read(self, version: int | None = None) -> DataFrame | None:
+        """Current snapshot, or time-travel to ``version`` (``None`` as
+        in ``_snapshot_dir``).  A pure plan builder: the schema committed
+        with the version replaces parquet schema inference, which would
+        run a Spark job per read."""
+        vdir = self._snapshot_dir(version)
+        return None if vdir is None else self._reader(vdir).parquet(vdir)
 
     def _reader(self, vdir: str) -> DataFrameReader:
         """A parquet reader for a version directory, carrying its
@@ -105,7 +121,6 @@ class VersionedTable:
         *,
         base_version: int | None = None,
         stats_columns: list[str] | None = None,
-        zorder: list[str] | None = None,
         carry_from: str | None = None,
     ) -> int:
         """Commit a new version.  ``base_version`` enables optimistic
@@ -126,9 +141,9 @@ class VersionedTable:
 
         ``carry_from`` is a version dir whose partitions ``df`` does not
         hold: their files are hardlinked into the staged version."""
-        if self.partition_by and (stats_columns or zorder):
+        if self.partition_by and stats_columns:
             # manifests list a version dir's top-level files only
-            raise ValueError("stats_columns and zorder need an unpartitioned table")
+            raise ValueError("stats_columns needs an unpartitioned table")
         cur = self.current_version()
         if base_version is not None and cur != base_version:
             raise ConcurrentWriteError(
@@ -149,14 +164,6 @@ class VersionedTable:
             default=0,
         )
         new_v = max(cur, max_dir) + 1
-        # z-order plan construction (and its TypeError on non-numeric
-        # columns) runs BEFORE the staging dir exists, so a rejected
-        # frame can't leak an orphan ._staged_ dir (ADVICE r3)
-        if zorder:
-            from .skipping import zorder_frame
-
-            df = zorder_frame(df, zorder)
-            stats_columns = list(dict.fromkeys([*(stats_columns or []), *zorder]))
         staged = tempfile.mkdtemp(dir=self.root, prefix="._staged_")
         try:
             # Spark refuses to write into an existing dir without
@@ -223,18 +230,12 @@ class VersionedTable:
         *,
         base_version: int | None = None,
         stats_columns: list[str] | None = None,
-        zorder: list[str] | None = None,
     ) -> int:
         """Commit a full snapshot.  ``base_version`` is the version the
         caller derived ``df`` from (conflict detection, as in ``merge``).
-        ``stats_columns`` records per-file
-        min/max in a version-local manifest (file-skipping reads via
-        ``read_where``); ``zorder`` additionally re-clusters the data on
-        the interleaved z-value of those columns first so skipping works
-        on every listed column."""
-        return self._commit(
-            df, base_version=base_version, stats_columns=stats_columns, zorder=zorder
-        )
+        ``stats_columns`` records per-file min/max in a version-local
+        manifest (file-skipping reads via ``read_where``)."""
+        return self._commit(df, base_version=base_version, stats_columns=stats_columns)
 
     def read_where(self, col: str, lo, hi, version: int | None = None) -> DataFrame | None:
         """Range scan of a snapshot that opens only the files whose
@@ -242,9 +243,8 @@ class VersionedTable:
         filter when the version has no manifest)."""
         from .skipping import read_manifest, read_pruned
 
-        v = self.current_version() if version is None else version
-        vdir = self._vdir(v)
-        if v <= 0 or not os.path.isdir(vdir):
+        vdir = self._snapshot_dir(version)
+        if vdir is None:
             return None
         reader = self._reader(vdir)
         if read_manifest(vdir) is None:
@@ -290,9 +290,13 @@ class VersionedTable:
         return self._commit(cur.coalesce(target_partitions))
 
     def vacuum(self, keep_last: int = 2) -> list[int]:
-        """Drop version dirs older than the last ``keep_last``."""
+        """Drop version dirs older than the last ``keep_last``.  The
+        published version is always among them, so ``keep_last`` must be
+        at least 1."""
         import shutil
 
+        if keep_last < 1:
+            raise ValueError(f"keep_last={keep_last} would delete the published version")
         cur = self.current_version()
         dropped = []
         for name in os.listdir(self.root):

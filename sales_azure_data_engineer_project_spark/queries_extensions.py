@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from .io import load_testdata
 from .operators import dedup as D
-from .operators import linkage as LK
 from .operators import multimodal as M
 from .operators import similarity as S
 from .operators import text as X
@@ -149,25 +148,6 @@ def text_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", *X.quality_columns("text")).orderBy("doc_id")
 
 
-@register(
-    "text_fingerprints",
-    r"""
-    SELECT doc_id,
-           md5(text) AS content_md5,
-           md5(array_to_string(list_sort(list_distinct(string_split_regex(text, '\s+'))), ' ')) AS bag_md5
-    FROM documents
-    ORDER BY doc_id
-    """,
-)
-def text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_testdata(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        X.fingerprint_md5("text").alias("content_md5"),
-        X.fingerprint_sorted_tokens("text").alias("bag_md5"),
-    ).orderBy("doc_id")
-
-
 # ---------------------------------------------------------------------------
 # Dedup family (over the planted-duplicate corpus)
 # ---------------------------------------------------------------------------
@@ -188,49 +168,6 @@ def text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _dedup_corpus(spark, sf_dir)
     return D.exact_dedup_groups(corpus, "doc_id", "text").orderBy("text_md5")
-
-
-@register(
-    "dedup_ngram_jaccard_capped",
-    f"""
-    WITH {_CORPUS_SQL}, {_SHINGLE_SQL},
-    dfreq AS (SELECT sh, COUNT(*) AS df FROM sh GROUP BY sh),
-    kept AS (SELECT s.doc_id, s.sh FROM sh s JOIN dfreq d ON s.sh = d.sh
-             WHERE d.df <= 4),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM kept GROUP BY doc_id),
-    common AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-        FROM kept a JOIN kept b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
-    SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
-           CAST(c AS BIGINT) AS common,
-           CAST((1000 * c) // (sa.sz + sb.sz - c) AS BIGINT) AS jac_permille
-    FROM common
-    JOIN sizes sa ON sa.doc_id = id_a
-    JOIN sizes sb ON sb.doc_id = id_b
-    WHERE (1000 * c) // (sa.sz + sb.sz - c) >= 300
-    ORDER BY id_a, id_b
-    """,
-)
-def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The exact n-gram tier with its ``posting_freq_cap`` valve ON —
-    the 100 TB form of the exact n-gram Jaccard tier:
-    shingles whose document frequency exceeds 4 are treated as
-    boilerplate and excluded, with per-doc sizes recomputed over the
-    retained shingles, so the score is integer-exact Jaccard over the
-    df-filtered shingle universe.  Every retained posting bucket is
-    ≤ cap rows ⇒ the self-join output is ≤ cap·|postings|/2 — linear
-    in the corpus no matter how skewed the df head gets (the uncapped
-    tier is Σ bucket², the fleet's worst 300× exponent).  On this
-    corpus the cap fires on 463 shingles at sf0.01 yet preserves all
-    116 uncapped pairs: boilerplate shingles connect docs whose
-    pairwise Jaccard never clears 300‰ anyway — the precision framing
-    behind Broder's stop-shingle lists (SPIRE 2000)."""
-    corpus = _dedup_corpus(spark, sf_dir)
-    return D.jaccard_pairs(
-        corpus, "doc_id", "text", min_permille=300, posting_freq_cap=4
-    ).orderBy("id_a", "id_b")
 
 
 @register(
@@ -411,13 +348,6 @@ def text_quality_classifier_hashed(spark: SparkSession, sf_dir: str) -> DataFram
     wider than the per-doc aggregate; weight lookup never leaves the
     executor."""
     docs = load_testdata(spark, sf_dir, "documents")
-    return _hashed_classifier_scores(spark, docs).orderBy("doc_id")
-
-
-def _hashed_classifier_scores(spark: SparkSession, docs: DataFrame) -> DataFrame:
-    """Per-doc hashed-linear-classifier margin (doc_id, n_toks, wsum,
-    avg_w_milli, keep) — shared by ``text_quality_classifier_hashed``
-    and the calibration query."""
     toks = docs.select(
         "doc_id",
         F.explode(
@@ -451,7 +381,7 @@ def _hashed_classifier_scores(spark: SparkSession, docs: DataFrame) -> DataFrame
         F.col("wsum").cast("bigint"),
         avg_w.cast("bigint").alias("avg_w_milli"),
         (avg_w + 500 >= 0).alias("keep"),
-    )
+    ).orderBy("doc_id")
 
 
 @register(
@@ -550,59 +480,6 @@ def quality_adaptive_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "dedup_shingle_containment",
-    f"""
-    WITH {_CORPUS_SQL}, {_SHINGLE_SQL},
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    common AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    scored AS (
-        SELECT id_a, id_b, c,
-               (1000 * c) // sa.sz AS cont_a_permille,
-               (1000 * c) // sb.sz AS cont_b_permille
-        FROM common
-        JOIN sizes sa ON sa.doc_id = id_a
-        JOIN sizes sb ON sb.doc_id = id_b
-    )
-    SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
-           CAST(c AS BIGINT) AS common,
-           CAST(cont_a_permille AS BIGINT) AS cont_a_permille,
-           CAST(cont_b_permille AS BIGINT) AS cont_b_permille,
-           CAST(greatest(cont_a_permille, cont_b_permille) AS BIGINT)
-               AS cont_max_permille
-    FROM scored
-    WHERE greatest(cont_a_permille, cont_b_permille) >= 800
-    ORDER BY id_a, id_b
-    """,
-)
-def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric containment dedup — C(A→B) = |shingles(A) ∩
-    shingles(B)| / |shingles(A)|, the Broder containment measure and
-    the set-level analogue of suffix-array substring dedup (Lee et al.
-    2022): a short document wholly quoted inside a long one has
-    containment ≈ 1000‰ from the short side even though its symmetric
-    Jaccard is low (union dominated by the long doc).  The planted
-    truncated near-dups in ``_dedup_corpus`` are exactly this shape —
-    the cut copy's shingles are a subset of the original's — so every
-    planted pair must appear here at cont ≥ 800‰.
-
-    Scale shape: identical to ``jaccard_pairs`` — xxhash64'd shingle
-    posting-list equi-join (never all-pairs), per-doc sizes carried
-    through the posting rows (no size-table join or broadcast — that
-    relation grows ∝ corpus), one extra integer division per
-    surviving pair.  At 100 TB
-    the posting join is the same LSH-prunable bucket join as the
-    symmetric path; containment is a post-filter, not a new plan."""
-    corpus = _dedup_corpus(spark, sf_dir)
-    return D.containment_pairs(corpus, "doc_id", "text", min_permille=800).orderBy(
-        "id_a", "id_b"
-    )
-
-
-@register(
     "text_boilerplate_chunks",
     f"""
     WITH {_CORPUS_SQL},
@@ -686,58 +563,6 @@ def text_boilerplate_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_shared").cast("bigint"),
         F.expr("div(1000 * n_shared, n_chunks)").cast("bigint").alias("boiler_permille"),
     ).orderBy("doc_id")
-
-
-@register(
-    "dedup_incremental_batch",
-    f"""
-    WITH {_CORPUS_SQL}, {_SHINGLE_SQL},
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    common AS (
-        SELECT n.doc_id AS new_id, o.doc_id AS match_id, COUNT(*) AS c
-        FROM sh n JOIN sh o ON n.sh = o.sh
-        WHERE n.doc_id >= 100000 AND o.doc_id < 100000
-        GROUP BY 1, 2
-    ),
-    scored AS (
-        SELECT new_id, match_id, c,
-               (1000 * c) // (sn.sz + so.sz - c) AS jac_permille
-        FROM common
-        JOIN sizes sn ON sn.doc_id = new_id
-        JOIN sizes so ON so.doc_id = match_id
-        WHERE (1000 * c) // (sn.sz + so.sz - c) >= 300
-    ),
-    best AS (
-        SELECT new_id, match_id, c, jac_permille,
-               ROW_NUMBER() OVER (PARTITION BY new_id
-                   ORDER BY jac_permille DESC, match_id) AS rk
-        FROM scored
-    )
-    SELECT CAST(new_id AS BIGINT) AS new_id,
-           CAST(match_id AS BIGINT) AS match_id,
-           CAST(c AS BIGINT) AS common,
-           CAST(jac_permille AS BIGINT) AS jac_permille
-    FROM best WHERE rk = 1
-    ORDER BY new_id
-    """,
-)
-def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental (batch-vs-corpus) near-dup matching — the form a
-    continuous-ingest pipeline actually runs: each new crawl batch
-    (here the planted copies, ``doc_id >= 100000``) is matched against
-    the EXISTING corpus (``doc_id < 100000``) only, never old × old.
-    Per-batch cost is Σ over shingle buckets of new·old — proportional
-    to the batch — and each new doc reports its best existing match,
-    the provenance row an ingest job logs before dropping the
-    duplicate.  See ``operators/dedup.py::incremental_jaccard_matches``
-    for the 100 TB layout (maintained posting-list table, bucket
-    pruning per batch)."""
-    corpus = _dedup_corpus(spark, sf_dir)
-    old = corpus.filter(F.col("doc_id") < 100000)
-    new = corpus.filter(F.col("doc_id") >= 100000)
-    return D.incremental_jaccard_matches(
-        old, new, "doc_id", "text", min_permille=300
-    ).orderBy("new_id")
 
 
 @register(
@@ -961,110 +786,6 @@ def similarity_ann_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "similarity_ann_ivf_sq8",
-    """
-    WITH n AS (
-        SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-    ),
-    mm AS (SELECT MIN(x) AS mn, MAX(x) AS mx FROM (SELECT unnest(v) AS x FROM n)),
-    codes AS (
-        SELECT vec_id,
-               list_transform(v, x -> least(255, greatest(0,
-                   CAST(floor((x - mn) * 256.0 / greatest(mx - mn, 1e-12)) AS INTEGER)))) AS qv
-        FROM n, mm
-    ),
-    cadc AS (SELECT GREATEST(61, CAST(ceil(sqrt(COUNT(*))) AS BIGINT))
-             AS cad FROM n),
-    cents AS (SELECT vec_id AS cid, v AS cv FROM n, cadc WHERE vec_id % cad = 0),
-    assigned AS (
-        SELECT n.vec_id, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY n.vec_id
-                   ORDER BY list_dot_product(n.v, c.cv) DESC, c.cid) AS crk
-        FROM n CROSS JOIN cents c
-    ),
-    cells AS (
-        SELECT a.vec_id, a.cid, k.qv
-        FROM assigned a JOIN codes k ON k.vec_id = a.vec_id
-        WHERE a.crk = 1
-    ),
-    q AS (SELECT * FROM cells WHERE vec_id < 10),
-    scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               list_sum(list_transform(generate_series(1, len(q.qv)),
-                        i -> q.qv[i] * c.qv[i])) AS approx_dot
-        FROM q JOIN cells c ON q.cid = c.cid AND c.vec_id != q.vec_id
-    ),
-    ranked AS (
-        SELECT query_id, neighbor_id, approx_dot,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY approx_dot DESC, neighbor_id) AS INTEGER) AS rk
-        FROM scored
-    )
-    SELECT CAST(query_id AS BIGINT) AS query_id,
-           CAST(neighbor_id AS BIGINT) AS neighbor_id,
-           CAST(approx_dot AS BIGINT) AS approx_dot, rk
-    FROM ranked WHERE rk <= 5
-    ORDER BY query_id, rk
-    """,
-)
-def similarity_ann_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF × SQ8 — the production ANN composition (FAISS ``IVF,SQ8``):
-    the coarse quantizer routes each vector to a centroid cell (exact
-    double dot, broadcast centroids), and IN-cell scoring runs on 8-bit
-    codes with a BIGINT dot product.  At 100 TB the probe touches one
-    cell's worth of candidates AND scans them at a quarter of the
-    bytes; both reductions multiply.  Cell assignment and codes are
-    each computed once (persisted inverted file carries the codes)."""
-    emb = _fan_out(load_testdata(spark, sf_dir, "embeddings"))
-    n = emb.select("vec_id", S.as_double_vec("embedding").alias("v"))
-    cents = _ivf_centroids(n)  # √N cadence derived in-plan (ADVICE r7)
-    # argmax-by-struct cell assignment (≡ row_number()=1 over d DESC,
-    # cid ASC): partial-aggregated groupBy, no full-corpus sort
-    # exchange, nothing wider than (vec_id, cid, d) shuffles
-    assigned = (
-        n.crossJoin(F.broadcast(cents))
-        .select("vec_id", "cid", S.dot(F.col("v"), F.col("cv")).alias("d"))
-        .groupBy("vec_id")
-        .agg(F.max(F.struct(F.col("d"), (-F.col("cid")).alias("nc"))).alias("m"))
-        .select("vec_id", (-F.col("m.nc")).alias("cid"))
-    )
-    codes = S.sq8_codes(emb)
-    cells = (
-        assigned.join(codes, "vec_id")
-        .select("vec_id", "cid", "codes")
-        .transform(tracked_persist)
-    )
-    q = cells.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("cid").alias("qcid"),
-        F.col("codes").alias("qv"),
-    )
-    idot = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("codes"), lambda x, y: (x * y).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    scored = cells.join(
-        F.broadcast(q),
-        (F.col("qcid") == F.col("cid")) & (F.col("query_id") != F.col("vec_id")),
-    ).withColumn("approx_dot", idot)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_dot").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= 5)
-        .select(
-            F.col("query_id").cast("bigint"),
-            F.col("vec_id").cast("bigint").alias("neighbor_id"),
-            F.col("approx_dot").cast("bigint"),
-            "rk",
-        )
-        .orderBy("query_id", "rk")
-    )
-
-
-@register(
     "similarity_ann_sign_lsh",
     """
     WITH n AS (
@@ -1276,54 +997,6 @@ def pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "vocab_top_tokens",
-    r"""
-    WITH tok AS (SELECT unnest(string_split_regex(text, '\s+')) AS tok FROM documents),
-    counts AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS n FROM tok GROUP BY tok)
-    SELECT tok, n,
-           CAST(ROW_NUMBER() OVER (ORDER BY n DESC, tok) AS INTEGER) AS rk
-    FROM counts
-    ORDER BY rk
-    LIMIT 30
-    """,
-)
-def vocab_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus vocabulary top-k — explode → count (map-side combined) →
-    distributed top-k; the frequency table driving BPE-style tokenizer
-    builds.
-
-    Scale note: the top-30 is taken with ``orderBy().limit()`` which
-    plans as TakeOrderedAndProject (per-partition heap + driver merge of
-    30-row heads) — NOT a global-window sort.  At web-corpus scale the
-    vocabulary count table is 10⁷–10⁸ rows; a ``row_number`` over an
-    un-partitioned window would funnel all of it through one reducer
-    (the round-2 scale hazard).  The rank column is derived AFTER the
-    limit, over the 30 surviving rows only.  The partition key is
-    ``spark_partition_id()`` — constant 0 over the single-partition
-    limit result, but non-foldable, so Catalyst cannot strip it the way
-    it strips a ``lit()`` and WindowExec stays off its move-everything-
-    to-one-partition warning path (the input is ≤30 rows by
-    construction either way)."""
-    from pyspark.sql import Window
-
-    docs = load_testdata(spark, sf_dir, "documents")
-    counts = (
-        docs.select(F.explode(X.tokens("text")).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    top = counts.orderBy(F.col("n").desc(), F.col("tok")).limit(30)
-    w = Window.partitionBy(F.spark_partition_id()).orderBy(
-        F.col("n").desc(), F.col("tok")
-    )
-    return (
-        top.withColumn("rk", F.row_number().over(w).cast("int"))
-        .select("tok", "n", "rk")
-        .orderBy("rk")
-    )
-
-
 _MINHASH_BANDS_SQL = f"""
     seeds AS (SELECT unnest(generate_series(0, 7)) AS seed),
     hashed AS (
@@ -1343,300 +1016,10 @@ _MINHASH_BANDS_SQL = f"""
 """
 
 
-@register(
-    "dedup_cluster_representatives",
-    f"""
-    WITH RECURSIVE {_CORPUS_SQL}, {_SHINGLE_SQL}, {_MINHASH_BANDS_SQL},
-    cand AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a
-        JOIN bands b ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig
-                    AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    common AS (
-        SELECT c.id_a, c.id_b, COUNT(*) AS c
-        FROM cand c
-        JOIN sh a ON a.doc_id = c.id_a
-        JOIN sh b ON b.doc_id = c.id_b AND b.sh = a.sh
-        GROUP BY 1, 2
-    ),
-    pairs AS (
-        SELECT id_a, id_b
-        FROM common JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
-        WHERE (1000 * c) // (sa.sz + sb.sz - c) >= 300
-    ),
-    edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-              UNION ALL SELECT id_b AS u, id_a AS v FROM pairs),
-    reach(u, v) AS (
-        SELECT u, v FROM edges
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    ),
-    members AS (SELECT DISTINCT u AS doc_id FROM edges),
-    labeled AS (
-        SELECT m.doc_id,
-               least(m.doc_id, MIN(r.v)) AS component
-        FROM members m JOIN reach r ON r.u = m.doc_id
-        GROUP BY m.doc_id
-    ),
-    toks AS (
-        SELECT c.doc_id, len(string_split_regex(c.text, '\\s+')) AS n_tokens
-        FROM corpus c
-    ),
-    ranked AS (
-        SELECT l.component, l.doc_id, t.n_tokens,
-               ROW_NUMBER() OVER (PARTITION BY l.component
-                   ORDER BY t.n_tokens DESC, l.doc_id) AS rk
-        FROM labeled l JOIN toks t ON t.doc_id = l.doc_id
-    )
-    SELECT CAST(component AS BIGINT) AS component,
-           CAST(COUNT(*) AS BIGINT) AS n_members,
-           CAST(MIN(CASE WHEN rk = 1 THEN doc_id END) AS BIGINT) AS rep_doc_id,
-           CAST(MIN(CASE WHEN rk = 1 THEN n_tokens END) AS BIGINT) AS rep_n_tokens,
-           CAST(SUM(n_tokens) AS BIGINT) AS total_tokens
-    FROM ranked
-    GROUP BY component
-    ORDER BY component
-    """,
-)
-def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical-document selection per near-dup cluster (round-5) —
-    the step production pipelines actually run after clustering: keep
-    the HIGHEST-QUALITY member (here: most tokens, doc_id tiebreak),
-    not the arbitrary min-id.  Clusters come from the 100 TB path
-    (banded minhash candidates → exact-Jaccard verification →
-    connected components); output
-    is one row per real duplicate group: component id, member count,
-    the chosen representative with its token count, and the group's
-    total token mass (= how much the dedup saves).
-
-    Scale shape: everything up to labels is the proven clusters
-    pipeline; representative selection is one window over (component)
-    — group sizes are duplicate-cluster sizes, bounded by the dedup
-    semantics themselves — plus a single conditional aggregate.
-    Singleton docs never enter (members = pair endpoints only), so the
-    window input is |dup docs|, not |corpus|."""
-    from .operators.graph import connected_components
-
-    corpus = _dedup_corpus(spark, sf_dir)
-    pairs = D.minhash_verified_pairs(
-        corpus, "doc_id", "text", n_hashes=8, band_size=4, min_permille=300
-    ).transform(tracked_persist)
-    members = (
-        pairs.select(F.col("id_a").alias("id"))
-        .unionByName(pairs.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
-    labels = connected_components(
-        members, pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    )
-    # join BEFORE tokenizing: the member join prunes corpus rows first
-    # (labels = dup members only, ≪ N — AQE broadcasts it), so the
-    # tokenize cost is O(|dup docs|), not O(corpus).  Tokenizing in a
-    # projection above the scan would run for every corpus row —
-    # Catalyst prunes columns, it does not defer expensive expressions
-    # past a join.
-    ranked = (
-        corpus.join(
-            labels.select(F.col("id").alias("doc_id"), "component"), "doc_id"
-        )
-        .select(
-            "doc_id",
-            "component",
-            F.size(F.split(F.col("text"), X.TOKEN_RE)).alias("n_tokens"),
-        )
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("component").orderBy(
-                    F.col("n_tokens").desc(), F.col("doc_id")
-                )
-            ),
-        )
-    )
-    return (
-        ranked.groupBy("component")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_members"),
-            F.min(F.when(F.col("rk") == 1, F.col("doc_id")))
-            .cast("bigint")
-            .alias("rep_doc_id"),
-            F.min(F.when(F.col("rk") == 1, F.col("n_tokens")))
-            .cast("bigint")
-            .alias("rep_n_tokens"),
-            F.sum("n_tokens").cast("bigint").alias("total_tokens"),
-        )
-        .select(
-            F.col("component").cast("bigint"),
-            "n_members",
-            "rep_doc_id",
-            "rep_n_tokens",
-            "total_tokens",
-        )
-        .orderBy("component")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Pandas-UDF tier (Arrow-batched Python): grouped-map, grouped-agg.
 # Integer arithmetic inside pandas keeps them oracle-exact.
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "grouped_map_normalize",
-    """
-    SELECT user_id, event_id,
-           CAST(CAST(floor(value * 100) AS BIGINT) -
-                MIN(CAST(floor(value * 100) AS BIGINT)) OVER (PARTITION BY user_id)
-                AS BIGINT) AS value_rel_cents
-    FROM events
-    WHERE user_id < 20
-    ORDER BY user_id, event_id
-    """,
-)
-def grouped_map_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """applyInPandas grouped-map: per-user min-normalization done in
-    pandas (integer cents, so Python arithmetic is oracle-exact).  The
-    grouped-map escape hatch for per-group logic Spark SQL can't
-    express — here deliberately something it CAN, so DuckDB verifies
-    the plumbing end-to-end."""
-    import pandas as pd
-
-    ev = (
-        load_testdata(spark, sf_dir, "events")
-        .filter(F.col("user_id") < 20)
-        .select(
-            "user_id",
-            "event_id",
-            (F.col("value") * 100).cast("bigint").alias("cents"),
-        )
-    )
-
-    def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = pdf[["user_id", "event_id"]].copy()
-        out["value_rel_cents"] = pdf["cents"] - pdf["cents"].min()
-        return out
-
-    return (
-        ev.groupBy("user_id")
-        .applyInPandas(normalize, "user_id long, event_id long, value_rel_cents long")
-        .orderBy("user_id", "event_id")
-    )
-
-
-@register(
-    "pandas_udaf_weighted",
-    """
-    WITH ev AS (
-        SELECT event_type, CAST(floor(value * 100) AS BIGINT) AS cents,
-               CAST(json_extract_string(props, '$.k') AS BIGINT) AS w
-        FROM events
-    )
-    SELECT event_type,
-           CAST(SUM(cents * w) AS BIGINT) AS weighted_cents,
-           CAST(SUM(w) AS BIGINT) AS total_w
-    FROM ev
-    GROUP BY event_type
-    ORDER BY event_type
-    """,
-)
-def pandas_udaf_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped-aggregate pandas UDF (vectorized UDAF): weighted sums in
-    integer space — numpy int64 accumulation is order-independent and
-    exact, so the DuckDB oracle matches bit-for-bit."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    # no type hints: `from __future__ import annotations` stringizes
-    # them, which pandas_udf's signature inference rejects — declare
-    # GROUPED_AGG explicitly instead
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def wsum(cents, w):
-        return int((cents * w).sum())
-
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def swsum(w):
-        return int(w.sum())
-
-    ev = load_testdata(spark, sf_dir, "events").select(
-        "event_type",
-        (F.col("value") * 100).cast("bigint").alias("cents"),
-        F.get_json_object("props", "$.k").cast("bigint").alias("w"),
-    )
-    return (
-        ev.groupBy("event_type")
-        .agg(
-            wsum("cents", "w").alias("weighted_cents"),
-            swsum("w").alias("total_w"),
-        )
-        .orderBy("event_type")
-    )
-
-
-@register(
-    "approx_distinct_stats",
-    """
-    SELECT l_returnflag,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS exact_parts,
-           TRUE AS hll_within_3rsd,
-           TRUE AS median_within_band
-    FROM lineitem
-    GROUP BY l_returnflag
-    ORDER BY l_returnflag
-    """,
-)
-def approx_distinct_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch surface: HyperLogLog distinct + approximate median — now
-    with a BOUNDED-ERROR oracle.  The raw sketch
-    values are engine-private (Spark's HLL++ and GK-quantile internals
-    have no DuckDB twin), so the query emits the EXACT aggregates plus
-    two booleans asserting each sketch landed inside its documented
-    accuracy contract; the oracle computes the exact columns and claims
-    ``TRUE`` for the bounds.  A sketch drifting outside its bound flips
-    the boolean and fails the driver's hash — a real gate, not
-    rows-only.
-
-    Bounds: ``approx_count_distinct`` default rsd = 0.05 ⇒ 3·rsd = 15%
-    (≈3σ; floor of 5 absolute for tiny groups where HLL sparse mode is
-    exact anyway).  ``percentile_approx`` default accuracy 10⁴ ⇒ rank
-    error ≤ n/10⁴, far inside the exact 49th–51st percentile band it is
-    checked against."""
-    li = load_testdata(spark, sf_dir, "lineitem")
-    # TWO aggregates joined on the 3-row group key, NOT one: mixing
-    # countDistinct with four non-distinct aggregates makes Catalyst
-    # plan an Expand (one row copy per aggregate class) — measured
-    # 9.5 s vs 3.2 s split at sf0.1.  The join is |groups| rows.
-    counts = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.countDistinct("l_partkey").cast("bigint").alias("exact_parts"),
-    )
-    sketches = li.groupBy("l_returnflag").agg(
-        F.approx_count_distinct("l_partkey").alias("_hll"),
-        F.percentile_approx("l_extendedprice", 0.5).alias("_amed"),
-        # one percentile(col, array(...)) call — the exact aggregate
-        # buffers the group's values once per CALL (price_percentiles
-        # lesson)
-        F.expr("percentile(l_extendedprice, array(0.49D, 0.51D))").alias("_band"),
-    )
-    agg = counts.join(F.broadcast(sketches), "l_returnflag")
-    return agg.select(
-        "l_returnflag",
-        "n",
-        "exact_parts",
-        (
-            F.abs(F.col("_hll") - F.col("exact_parts"))
-            <= F.greatest(F.ceil(F.col("exact_parts") * 0.15), F.lit(5))
-        ).alias("hll_within_3rsd"),
-        (
-            (F.col("_amed") >= F.element_at("_band", 1))
-            & (F.col("_amed") <= F.element_at("_band", 2))
-        ).alias(
-            "median_within_band"
-        ),
-    ).orderBy("l_returnflag")
 
 
 @register(
@@ -1737,57 +1120,6 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "tfidf_distinctive_terms",
-    r"""
-    WITH tok AS (
-        SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok
-        FROM documents WHERE doc_id < 50
-    ),
-    tf AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf
-           FROM tok GROUP BY doc_id, tok),
-    df AS (SELECT tok, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df FROM tok GROUP BY tok),
-    scored AS (
-        SELECT tf.doc_id, tf.tok, tf.tf, df.df,
-               CAST((1000 * tf.tf) // df.df AS BIGINT) AS tfidf_milli
-        FROM tf JOIN df ON tf.tok = df.tok
-    )
-    SELECT doc_id, tok, tf, df, tfidf_milli
-    FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-                   ORDER BY tfidf_milli DESC, tok) AS rk
-        FROM scored
-    )
-    WHERE rk <= 3
-    ORDER BY doc_id, tfidf_milli DESC, tok
-    """,
-)
-def tfidf_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TF-IDF-style distinctive-term extraction with EXACT integer
-    scoring (tf·1000 div df — the rank-equivalent of tf/df; a float idf
-    log would not oracle-match across engines' libm)."""
-    from pyspark.sql import Window
-
-    docs = load_testdata(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
-    tok = docs.select("doc_id", F.explode(X.tokens("text")).alias("tok"))
-    tf = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
-    # df from a WINDOW over the tf aggregate: tf has exactly one row
-    # per (doc, tok), so count-over-partition(tok) IS the document
-    # frequency — no second tokenize+explode pass and no join (the
-    # aggregate-and-join-back form re-scanned and re-exploded the
-    # corpus for the df side)
-    scored = tf.withColumn(
-        "df", F.count(F.lit(1)).over(Window.partitionBy("tok"))
-    ).withColumn("tfidf_milli", F.expr("div(1000 * tf, df)").cast("bigint"))
-    w = Window.partitionBy("doc_id").orderBy(F.col("tfidf_milli").desc(), F.col("tok"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("doc_id", "tok", "tf", "df", "tfidf_milli")
-        .orderBy("doc_id", F.col("tfidf_milli").desc(), "tok")
-    )
-
-
-@register(
     "skew_salted_aggregation",
     """
     SELECT l_returnflag,
@@ -1822,381 +1154,7 @@ def skew_salted_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("l_returnflag")
 
 
-@register(
-    "dedup_tf_cosine",
-    f"""
-    WITH {_CORPUS_SQL},
-    tok AS (
-        SELECT doc_id, unnest(
-            CASE WHEN len(toks) >= 3
-                 THEN list_transform(generate_series(1, len(toks)-2),
-                      i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))
-                 ELSE []::VARCHAR[] END) AS tok
-        FROM (SELECT doc_id, string_split_regex(text, '\\s+') AS toks FROM corpus)
-    ),
-    tf AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf FROM tok GROUP BY doc_id, tok),
-    norms AS (SELECT doc_id, CAST(SUM(tf * tf) AS BIGINT) AS norm2 FROM tf GROUP BY doc_id),
-    dots AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(SUM(a.tf * b.tf) AS BIGINT) AS dot
-        FROM tf a JOIN tf b ON a.tok = b.tok AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT id_a, id_b, dot,
-           CAST(na.norm2 AS BIGINT) AS norm2_a, CAST(nb.norm2 AS BIGINT) AS norm2_b
-    FROM dots
-    JOIN norms na ON na.doc_id = id_a
-    JOIN norms nb ON nb.doc_id = id_b
-    WHERE dot * dot * 100 >= 81 * na.norm2 * nb.norm2
-    ORDER BY id_a, id_b
-    """,
-)
-def dedup_tf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sparse term-frequency cosine near-dup over 3-gram shingle terms:
-    cos(a,b) ≥ 0.9 expressed ENTIRELY in integers
-    (dot²·100 ≥ 81·‖a‖²·‖b‖²) — no floats, no boundary risk.  The
-    explode-join sparse dot product is THE scalable sparse-vector
-    similarity: cost Σ posting-list².  Terms are shingles, not unigrams
-    — this corpus has a ~31-word vocabulary, so unigram posting lists
-    are nearly the whole corpus (measured 600M join rows at sf0.1);
-    trigram terms keep lists short (df-pruning is the other standard
-    fix)."""
-    corpus = _dedup_corpus(spark, sf_dir)
-    toks = corpus.select(
-        F.col("doc_id"), F.split(F.col("text"), X.TOKEN_RE).alias("toks")
-    )
-    grams = F.when(
-        F.size("toks") >= 3,
-        F.transform(
-            F.sequence(F.lit(0), F.size("toks") - 3),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at("toks", i + j + 1) for j in range(3)]
-            ),
-        ),
-    ).otherwise(F.array())
-    # trigram identity, not content, drives the tf/dot pipeline —
-    # xxhash64 to longs before the groupBy/self-join (same trick as
-    # operators/dedup.jaccard_pairs: ~4× smaller shuffles, long
-    # compares; the DuckDB oracle intersects raw strings, so any
-    # collision would surface as a hash mismatch there)
-    tok = toks.select("doc_id", F.explode(grams).alias("tok_raw")).select(
-        "doc_id", F.xxhash64("tok_raw").alias("tok")
-    )
-    tf = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
-    tf = tf.transform(tracked_persist)
-    norms = tf.groupBy("doc_id").agg(F.sum(F.col("tf") * F.col("tf")).alias("norm2"))
-    b = tf.select(F.col("doc_id").alias("id_b"), "tok", F.col("tf").alias("tf_b"))
-    dots = (
-        tf.join(b, on="tok")
-        .filter(F.col("doc_id") < F.col("id_b"))
-        .groupBy(F.col("doc_id").alias("id_a"), "id_b")
-        .agg(F.sum(F.col("tf") * F.col("tf_b")).alias("dot"))
-    )
-    na = norms.select(F.col("doc_id").alias("id_a"), F.col("norm2").alias("norm2_a"))
-    nb = norms.select(F.col("doc_id").alias("id_b"), F.col("norm2").alias("norm2_b"))
-    return (
-        dots.join(na, "id_a")
-        .join(nb, "id_b")
-        .filter(
-            F.col("dot") * F.col("dot") * 100 >= 81 * F.col("norm2_a") * F.col("norm2_b")
-        )
-        .select(
-            F.col("id_a").cast("bigint"),
-            F.col("id_b").cast("bigint"),
-            F.col("dot").cast("bigint"),
-            F.col("norm2_a").cast("bigint"),
-            F.col("norm2_b").cast("bigint"),
-        )
-        .orderBy("id_a", "id_b")
-    )
-
-
-@register(
-    "text_repetition_ratios",
-    r"""
-    WITH t AS (
-        SELECT doc_id, string_split_regex(text, '\s+') AS toks
-        FROM documents
-    ),
-    uni AS (
-        SELECT doc_id, CAST(MAX(c) AS BIGINT) AS top_tok_count
-        FROM (
-            SELECT doc_id, tok, COUNT(*) AS c
-            FROM (SELECT doc_id, unnest(toks) AS tok FROM t)
-            GROUP BY doc_id, tok
-        )
-        GROUP BY doc_id
-    ),
-    bi AS (
-        SELECT doc_id,
-               CAST(len(toks) AS BIGINT) AS n_tokens,
-               CASE WHEN len(toks) >= 2
-                    THEN list_transform(range(1, len(toks)),
-                                        i -> toks[i] || ' ' || toks[i + 1])
-                    ELSE [] END AS bigrams
-        FROM t
-    )
-    SELECT bi.doc_id AS doc_id,
-           bi.n_tokens,
-           CAST((1000 * uni.top_tok_count) // bi.n_tokens AS BIGINT) AS top_unigram_permille,
-           CAST(CASE WHEN len(bi.bigrams) > 0
-                     THEN (1000 * (len(bi.bigrams) - len(list_distinct(bi.bigrams)))) // len(bi.bigrams)
-                     ELSE 0 END AS BIGINT) AS dup_bigram_permille
-    FROM bi JOIN uni ON bi.doc_id = uni.doc_id
-    ORDER BY doc_id
-    """,
-)
-def text_repetition_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition quality signals (Rae et al. 2021 §A1.1):
-    fraction of tokens taken by the single most-frequent token, and
-    fraction of duplicated 2-grams — the two cheapest high-precision
-    filters for boilerplate/spam in a training corpus.
-
-    Spark-first shapes: the top-unigram count is explode → two map-side-
-    combined aggregations keyed by doc_id (never a per-doc UDF); the
-    bigram list is a pure array expression (``transform`` over
-    ``sequence``) so it stays in whole-stage codegen.  Ratios are
-    integer permille (``div``) for cross-engine hash stability.
-    Empty/1-token docs guard the ``sequence`` (Spark counts DOWN for
-    sequence(1,0) — NOTES pitfall)."""
-    from pyspark.sql import Window
-
-    # ONE posexplode pass feeds BOTH aggregation grains via GROUPING
-    # SETS ((doc,tok),(doc,bigram)) — the naive form tokenized the
-    # corpus twice (explode branch for unigrams, array branch for
-    # bigrams).  The bigram is lead(tok) over the in-doc position
-    # window, whose Exchange(doc_id) is the same partitioning the
-    # grouping-sets aggregate and the final per-doc rollup reuse.
-    docs = load_testdata(spark, sf_dir, "documents")
-    pe = docs.select(
-        "doc_id", F.posexplode(X.tokens("text")).alias("pos", "tok")
-    )
-    wd = Window.partitionBy("doc_id").orderBy("pos")
-    pe = pe.withColumn(
-        "bg", F.concat_ws(" ", F.col("tok"), F.lead("tok").over(wd))
-    ).withColumn(
-        "bg", F.when(F.lead("tok").over(wd).isNotNull(), F.col("bg"))
-    )
-    g = pe.groupingSets(
-        [["doc_id", "tok"], ["doc_id", "bg"]], "doc_id", "tok", "bg"
-    ).agg(
-        F.count(F.lit(1)).alias("c"),
-        F.grouping("bg").alias("is_tok_grain"),
-        F.count("bg").alias("c_bg"),
-    )
-    per_doc = g.groupBy("doc_id").agg(
-        F.max(F.when(F.col("is_tok_grain") == 1, F.col("c"))).alias("top_tok_count"),
-        F.sum(F.when(F.col("is_tok_grain") == 1, F.col("c"))).cast("bigint").alias("n_tokens"),
-        # bigram grain, NULL-bg group excluded: c_bg==0 there
-        F.sum(
-            F.when((F.col("is_tok_grain") == 0) & (F.col("c_bg") > 0), F.col("c"))
-        ).cast("bigint").alias("n_bigrams"),
-        F.count(
-            F.when((F.col("is_tok_grain") == 0) & (F.col("c_bg") > 0), F.lit(1))
-        ).cast("bigint").alias("n_distinct_bigrams"),
-    )
-    return (
-        per_doc.withColumn(
-            "n_dup_bigrams", F.col("n_bigrams") - F.col("n_distinct_bigrams")
-        )
-        .select(
-            "doc_id",
-            "n_tokens",
-            F.expr("div(1000 * top_tok_count, n_tokens)")
-            .cast("bigint")
-            .alias("top_unigram_permille"),
-            F.when(
-                F.col("n_bigrams") > 0,
-                F.expr("div(1000 * n_dup_bigrams, n_bigrams)"),
-            )
-            .otherwise(F.lit(0))
-            .cast("bigint")
-            .alias("dup_bigram_permille"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-@register(
-    "text_cdc_chunks",
-    rf"""
-    WITH {_CORPUS_SQL},
-    t AS (SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM corpus),
-    pe AS (
-        SELECT doc_id, u.pos AS pos, u.tok AS tok
-        FROM (SELECT doc_id,
-                     unnest(list_transform(generate_series(1, len(toks)),
-                            i -> {{'pos': i, 'tok': toks[i]}})) AS u
-              FROM t)
-    ),
-    cid AS (
-        SELECT doc_id, pos, tok,
-               SUM(CASE WHEN substr(md5(tok), 1, 1) IN ('0', '1') THEN 1 ELSE 0 END)
-                   OVER (PARTITION BY doc_id ORDER BY pos
-                         ROWS UNBOUNDED PRECEDING) AS chunk_id
-        FROM pe
-    ),
-    chunks AS (
-        SELECT doc_id, chunk_id,
-               md5(string_agg(tok, ' ' ORDER BY pos)) AS fp
-        FROM cid GROUP BY doc_id, chunk_id
-    ),
-    cnt AS (SELECT fp, COUNT(*) AS n_docs FROM chunks GROUP BY fp),
-    per_doc AS (
-        SELECT c.doc_id, COUNT(*) AS n_chunks,
-               SUM(CASE WHEN t.n_docs >= 2 THEN 1 ELSE 0 END) AS n_shared
-        FROM chunks c JOIN cnt t ON t.fp = c.fp
-        GROUP BY c.doc_id
-    )
-    SELECT CAST(doc_id AS BIGINT) AS doc_id,
-           CAST(n_chunks AS BIGINT) AS n_chunks,
-           CAST(n_shared AS BIGINT) AS n_shared_chunks,
-           CAST((1000 * n_shared) // n_chunks AS BIGINT) AS shared_permille
-    FROM per_doc
-    ORDER BY doc_id
-    """,
-)
-def text_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-defined chunking — rolling-hash boundaries instead of
-    fixed strides (the rsync/LBFS trick): a token opens a new chunk
-    when its hash lands in a 1/8 target band, so chunk boundaries are
-    determined by CONTENT and survive insertions/deletions that shift
-    every fixed-window frame (a fixed window's weakness as a dedup
-    unit).  Per doc: how many chunks, and how many also appear verbatim
-    in another document — the storage-dedup / near-dup signal.
-
-    Spark-first shape: posexplode → one Exchange(doc_id) where the
-    boundary cumsum window AND the per-chunk grouping both live →
-    chunk fingerprints → cross-doc count via groupBy(fp) joined back
-    (same reused-exchange pattern as ``text_span_dup_stats``) → per-doc
-    aggregate.  Chunk text is rebuilt with an order-struct sort inside
-    the aggregate (collect_list alone is order-nondeterministic)."""
-    corpus = _dedup_corpus(spark, sf_dir)
-    pe = corpus.select(
-        "doc_id", F.posexplode(F.split(F.col("text"), X.TOKEN_RE)).alias("pos", "tok")
-    )
-    flag = F.when(
-        F.substring(F.md5(F.col("tok").cast("binary")), 1, 1).isin("0", "1"), 1
-    ).otherwise(0)
-    w = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cid = pe.withColumn("chunk_id", F.sum(flag).over(w))
-    chunks = cid.groupBy("doc_id", "chunk_id").agg(
-        F.md5(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "tok"))),
-                    lambda x: x.tok,
-                ),
-            ).cast("binary")
-        ).alias("fp")
-    )
-    cnt = chunks.groupBy("fp").agg(F.count(F.lit(1)).alias("n_docs"))
-    per_doc = (
-        chunks.join(cnt, "fp")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_chunks"),
-            F.sum(F.when(F.col("n_docs") >= 2, 1).otherwise(0)).alias("n_shared"),
-        )
-    )
-    return per_doc.select(
-        F.col("doc_id").cast("bigint"),
-        F.col("n_chunks").cast("bigint"),
-        F.col("n_shared").cast("bigint").alias("n_shared_chunks"),
-        F.expr("div(1000 * n_shared, n_chunks)").cast("bigint").alias("shared_permille"),
-    ).orderBy("doc_id")
-
-
 _SPAN8 = ", ".join(f"toks[i+{j}]" for j in range(8))
-
-
-@register(
-    "text_span_dup_stats",
-    rf"""
-    WITH {_CORPUS_SQL},
-    t AS (SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM corpus),
-    spans AS (
-        SELECT doc_id, unnest(list_distinct(
-            CASE WHEN len(toks) >= 8
-                 THEN list_transform(generate_series(1, len(toks)-7),
-                      i -> concat_ws(' ', {_SPAN8}))
-                 ELSE []::VARCHAR[] END)) AS span
-        FROM t
-    ),
-    cnt AS (SELECT span, COUNT(*) AS n_docs FROM spans GROUP BY span),
-    per_doc AS (
-        SELECT s.doc_id, COUNT(*) AS n_spans,
-               SUM(CASE WHEN c.n_docs >= 2 THEN 1 ELSE 0 END) AS n_dup
-        FROM spans s JOIN cnt c ON s.span = c.span
-        GROUP BY s.doc_id
-    )
-    SELECT CAST(c.doc_id AS BIGINT) AS doc_id,
-           CAST(coalesce(p.n_spans, 0) AS BIGINT) AS n_spans,
-           CAST(coalesce(p.n_dup, 0) AS BIGINT) AS n_dup_spans,
-           CAST(CASE WHEN coalesce(p.n_spans, 0) > 0
-                     THEN (1000 * p.n_dup) // p.n_spans ELSE 0 END AS BIGINT)
-               AS dup_span_permille
-    FROM corpus c LEFT JOIN per_doc p ON p.doc_id = c.doc_id
-    ORDER BY doc_id
-    """,
-)
-def text_span_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicated-span profile per document — the C4-style span-dedup
-    signal (Raffel et al. 2020 §2.2 removed repeated three-sentence
-    spans; here the span is a fixed 8-token window since the corpus has
-    no sentence structure).  A doc whose spans mostly appear in other
-    docs is boilerplate or a near-copy; ``dup_span_permille`` is the
-    filter column a training pipeline thresholds on.
-
-    Spark-first shape: distinct 8-gram spans per doc (array expression,
-    codegen), explode, cross-doc span frequency via groupBy(span hash)
-    joined back to the posting list — the grouped side and the probe
-    side are the IDENTICAL subtree, so Catalyst reuses one Exchange(h)
-    for both (measured 4.8 s vs 6.6 s for a window-count form: ~260k
-    one-row window partitions pay per-group sort overhead the hash
-    aggregate doesn't) — then one per-doc aggregate.  Span identity
-    travels as xxhash64 longs (8 bytes vs ~50-byte strings in the wide
-    shuffle); the oracle groups raw strings, so a collision would fail
-    the hash gate at sf0.01.  Skew bound: a span's posting list tracks
-    its duplicate-group size, not corpus size."""
-    corpus = _dedup_corpus(spark, sf_dir)
-    # Explode the INLINE generator expression: binding the span array as
-    # a named projection column first makes GenerateExec re-evaluate the
-    # whole transform per OUTPUT row under codegen — O(spans²) per doc,
-    # measured 31.9 s vs 2.1 s at sf0.1.  (The "bind tokens first" rule
-    # from NOTES applies to multi-consumer projections, not to a single
-    # explode; persisted `_shingled` consumers are unaffected.)
-    sp = D.shingle_explode(corpus, "doc_id", "text", 8).select(
-        "doc_id", F.xxhash64("sh").alias("h")
-    )
-    cnt = sp.groupBy("h").agg(F.count(F.lit(1)).alias("n_docs"))
-    per_doc = (
-        sp.join(cnt, "h")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_spans"),
-            F.sum(F.when(F.col("n_docs") >= 2, 1).otherwise(0)).alias("n_dup"),
-        )
-    )
-    return (
-        corpus.select("doc_id")
-        .join(per_doc, "doc_id", "left")
-        .select(
-            F.col("doc_id").cast("bigint"),
-            F.coalesce("n_spans", F.lit(0)).cast("bigint").alias("n_spans"),
-            F.coalesce("n_dup", F.lit(0)).cast("bigint").alias("n_dup_spans"),
-            F.when(
-                F.coalesce("n_spans", F.lit(0)) > 0,
-                F.expr("div(1000 * n_dup, n_spans)"),
-            )
-            .otherwise(F.lit(0))
-            .cast("bigint")
-            .alias("dup_span_permille"),
-        )
-        .orderBy("doc_id")
-    )
 
 
 @register(
@@ -2257,149 +1215,6 @@ def pipeline_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("bigint"),
         F.col("n_shared_spans").cast("bigint"),
     ).orderBy("doc_id")
-
-
-@register(
-    "dedup_minhash_containment_estimate",
-    f"""
-    WITH {_CORPUS_SQL}, {_SHINGLE_SQL}, {_MINHASH_BANDS_SQL},
-    cand AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a
-        JOIN bands b ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig
-                    AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    bg AS (
-        SELECT a.doc_id AS id_a, a.doc_id + 1 AS id_b
-        FROM sizes a JOIN sizes b ON b.doc_id = a.doc_id + 1
-    ),
-    cand2 AS (SELECT id_a, id_b FROM cand UNION SELECT id_a, id_b FROM bg),
-    common AS (
-        SELECT c.id_a, c.id_b, COUNT(*) AS c
-        FROM cand2 c
-        JOIN sh a ON a.doc_id = c.id_a
-        JOIN sh b ON b.doc_id = c.id_b AND b.sh = a.sh
-        GROUP BY 1, 2
-    ),
-    cp AS (
-        SELECT c2.id_a, c2.id_b, COALESCE(cm.c, 0) AS c,
-               sa.sz AS sz_a, sb.sz AS sz_b,
-               (1000 * COALESCE(cm.c, 0)) // least(sa.sz, sb.sz)
-                   AS cont_permille
-        FROM cand2 c2
-        LEFT JOIN common cm ON cm.id_a = c2.id_a AND cm.id_b = c2.id_b
-        JOIN sizes sa ON sa.doc_id = c2.id_a
-        JOIN sizes sb ON sb.doc_id = c2.id_b
-    ),
-    est AS (
-        SELECT cp.cont_permille,
-               least(1000,
-                   (1000 * ({' + '.join(f'CASE WHEN a.h{i} = b.h{i} THEN 1 ELSE 0 END' for i in range(8))})
-                    * (cp.sz_a + cp.sz_b))
-                   // ((8 + ({' + '.join(f'CASE WHEN a.h{i} = b.h{i} THEN 1 ELSE 0 END' for i in range(8))}))
-                       * least(cp.sz_a, cp.sz_b))) AS est_permille
-        FROM cp JOIN sig a ON a.doc_id = cp.id_a JOIN sig b ON b.doc_id = cp.id_b
-    )
-    SELECT CAST(cont_permille // 100 AS BIGINT) AS cont_decile,
-           CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           CAST(SUM(est_permille) // COUNT(*) AS BIGINT) AS avg_est_permille,
-           CAST(SUM(abs(est_permille - cont_permille)) // COUNT(*) AS BIGINT)
-               AS avg_abs_err_permille
-    FROM est
-    GROUP BY cont_decile
-    ORDER BY cont_decile
-    """,
-)
-def dedup_minhash_containment_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Containment ESTIMATOR calibration — the asymmetric companion of
-    ``dedup_minhash_estimate_calibration``: MinHash agreement m/8
-    estimates Jaccard, and with the (cheaply known) shingle-set sizes
-    the containment follows algebraically — C_max = J·(|A|+|B|) /
-    ((1+J)·min(|A|,|B|)), here in integer permille with m/(8+m)
-    substituted for J/(1+J) and clamped at 1000.  Per exact-containment
-    decile: pair count, mean estimate, mean absolute error.  This is
-    what lets the LSH tier flag quote-inclusion pairs
-    (``dedup_shingle_containment`` semantics) WITHOUT a posting-list
-    join — signatures + sizes only — so its error profile must be
-    measured, not assumed.
-
-    The decile spread needs NEGATIVES as well as the LSH positives, so
-    the scored pair set is the banded candidates UNION a deterministic
-    background set (each doc paired with doc_id+1 where present) —
-    the low-containment pairs an evaluation would otherwise never see.
-
-    Scale shape: candidates from the banded join (never all-pairs)
-    plus an O(N) background set; sizes and signatures are
-    constant-size per doc; the estimate is 8 column equalities + one
-    division per candidate pair; output ≤ 11 decile rows from one
-    map-side-combinable aggregate."""
-    corpus = _dedup_corpus(spark, sf_dir)
-    # arrays + signature from ONE tokenization pass; zero-shingle docs
-    # absent, exactly the old nonempty filter's survivors
-    sig = D._shingled_with_sig(corpus, "doc_id", "text", 3, n_hashes=8)
-    nonempty = sig
-    bands = D._bands_from_sig(sig, "doc_id", n_hashes=8, band_size=4)
-    cand = D.lsh_candidate_pairs(bands, "doc_id").select("id_a", "id_b")
-    ids = nonempty.select("doc_id")
-    bg = ids.select(
-        F.col("doc_id").alias("id_a"), (F.col("doc_id") + 1).alias("id_b")
-    ).join(ids.select(F.col("doc_id").alias("id_b")), "id_b", "left_semi")
-    cand2 = cand.unionByName(bg).distinct()
-    a_sh = nonempty.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("shingles").alias("sh_a"),
-        F.size("shingles").alias("sz_a"),
-    )
-    b_sh = nonempty.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("shingles").alias("sh_b"),
-        F.size("shingles").alias("sz_b"),
-    )
-    cp = (
-        cand2.join(a_sh, "id_a")
-        .join(b_sh, "id_b")
-        .withColumn("common", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "cont_permille", F.expr("div(1000 * common, least(sz_a, sz_b))")
-        )
-        .select("id_a", "id_b", "sz_a", "sz_b", "cont_permille")
-    )
-    a = sig.select(
-        F.col("doc_id").alias("id_a"), *[F.col(f"h{i}").alias(f"a{i}") for i in range(8)]
-    )
-    b = sig.select(
-        F.col("doc_id").alias("id_b"), *[F.col(f"h{i}").alias(f"b{i}") for i in range(8)]
-    )
-    agree = sum((F.col(f"a{i}") == F.col(f"b{i}")).cast("int") for i in range(8))
-    est = (
-        cp.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("m", agree)
-        .select(
-            "cont_permille",
-            F.least(
-                F.lit(1000),
-                F.expr("div(1000 * m * (sz_a + sz_b), (8 + m) * least(sz_a, sz_b))"),
-            ).alias("est_permille"),
-        )
-    )
-    return (
-        est.groupBy(
-            F.expr("div(cont_permille, 100)").cast("bigint").alias("cont_decile")
-        )
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-            F.expr("div(sum(est_permille), count(1))")
-            .cast("bigint")
-            .alias("avg_est_permille"),
-            F.expr("div(sum(abs(est_permille - cont_permille)), count(1))")
-            .cast("bigint")
-            .alias("avg_abs_err_permille"),
-        )
-        .orderBy("cont_decile")
-    )
 
 
 @register(
@@ -2499,96 +1314,6 @@ def dedup_minhash_estimate_calibration(spark: SparkSession, sf_dir: str) -> Data
 
 
 @register(
-    "pipeline_contamination_report",
-    rf"""
-    WITH {_CORPUS_SQL},
-    t AS (SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM corpus),
-    spans AS (
-        SELECT doc_id, unnest(list_distinct(
-            CASE WHEN len(toks) >= 8
-                 THEN list_transform(generate_series(1, len(toks)-7),
-                      i -> concat_ws(' ', {_SPAN8}))
-                 ELSE []::VARCHAR[] END)) AS span
-        FROM t
-    ),
-    ev AS (SELECT doc_id AS eval_doc_id, span FROM spans
-           WHERE doc_id % 10 = 0 AND doc_id < 100000),
-    tr AS (SELECT doc_id, span FROM spans
-           WHERE NOT (doc_id % 10 = 0 AND doc_id < 100000)),
-    pairs AS (
-        SELECT ev.eval_doc_id, tr.doc_id, ev.span
-        FROM tr JOIN ev ON ev.span = tr.span
-    )
-    SELECT CAST(eval_doc_id AS BIGINT) AS eval_doc_id,
-           CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_contaminating_docs,
-           CAST(COUNT(DISTINCT span) AS BIGINT) AS n_leaked_spans,
-           CAST(COUNT(*) AS BIGINT) AS n_span_hits
-    FROM pairs
-    GROUP BY eval_doc_id
-    ORDER BY eval_doc_id
-    """,
-)
-def pipeline_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EVAL-side contamination report (round-5) — the inverse view of
-    ``pipeline_decontaminate``: instead of flagging training docs to
-    drop, report per EVAL document how compromised it is — how many
-    distinct training docs share an 8-token span with it, how many of
-    its spans leaked, and the total hit count.  This is the benchmark-
-    integrity table an eval owner reads to decide whether a benchmark
-    is still trustworthy against a given corpus (the
-    GPT-3/Llama-style "dirty eval" audit).
-
-    Scale shape: same as the decontaminate pass — the eval span set is
-    benchmark-sized and BROADCASTS (with eval doc ids retained this
-    time); the training side is one linear span scan; only true
-    contamination pairs survive the join, so the aggregate input is
-    bounded by leak volume, not corpus size.  The two DISTINCT counts
-    are computed as separate joined aggregates over the persisted pair
-    frame rather than one multi-distinct agg (the
-    ``approx_distinct_stats`` Expand lesson).  Span identity travels
-    as xxhash64 longs; the oracle joins raw strings, so a collision
-    would fail the sf0.01 gate."""
-    corpus = _dedup_corpus(spark, sf_dir)
-    is_eval = (F.col("doc_id") % 10 == 0) & (F.col("doc_id") < 100000)
-    sp = D.shingle_explode(corpus, "doc_id", "text", 8).select(
-        "doc_id", F.xxhash64("sh").alias("h")
-    )
-    ev = sp.filter(is_eval).select(F.col("doc_id").alias("eval_doc_id"), "h")
-    pairs = (
-        sp.filter(~is_eval)
-        .join(F.broadcast(ev), "h")
-        .select("eval_doc_id", "doc_id", "h")
-        .transform(tracked_persist)
-    )
-    docs_ct = (
-        pairs.select("eval_doc_id", "doc_id")
-        .distinct()
-        .groupBy("eval_doc_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_contaminating_docs"))
-    )
-    spans_ct = (
-        pairs.select("eval_doc_id", "h")
-        .distinct()
-        .groupBy("eval_doc_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_leaked_spans"))
-    )
-    hits_ct = pairs.groupBy("eval_doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_span_hits")
-    )
-    return (
-        docs_ct.join(spans_ct, "eval_doc_id")
-        .join(hits_ct, "eval_doc_id")
-        .select(
-            F.col("eval_doc_id").cast("bigint"),
-            "n_contaminating_docs",
-            "n_leaked_spans",
-            "n_span_hits",
-        )
-        .orderBy("eval_doc_id")
-    )
-
-
-@register(
     "text_token_counts",
     r"""
     WITH t AS (
@@ -2641,178 +1366,6 @@ def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("chars_per_bpe_milli"),
     ).orderBy("doc_id")
-
-
-@register(
-    "pipeline_training_prep",
-    f"""
-    WITH {_CORPUS_SQL},
-    tk AS (SELECT doc_id, text, string_split_regex(text, '\\s+') AS toks
-           FROM corpus),
-    scored AS (
-        SELECT doc_id, text,
-               len(toks) AS n_tokens,
-               (1000 * len(list_distinct(toks))) // len(toks) AS ttr,
-               len(list_filter(toks, x -> x IN
-                   ('the','a','an','of','and','to','is','in','it','for')))
-                   AS stop_hits
-        FROM tk
-    ),
-    quality AS (SELECT * FROM scored WHERE n_tokens >= 20 AND ttr >= 300),
-    lang AS (SELECT * FROM quality WHERE stop_hits * 20 >= n_tokens),
-    exd AS (SELECT * FROM lang
-           QUALIFY doc_id = MIN(doc_id) OVER (PARTITION BY md5(text))),
-    exsh AS (
-        SELECT doc_id, unnest(list_distinct(
-            CASE WHEN len(toks) >= 3
-                 THEN list_transform(generate_series(1, len(toks)-2),
-                      i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))
-                 ELSE []::VARCHAR[] END)) AS sh
-        FROM (SELECT doc_id, string_split_regex(text, '\\s+') AS toks FROM exd)
-    ),
-    seeds AS (SELECT unnest(generate_series(0, 7)) AS seed),
-    hashed AS (
-        SELECT doc_id, seed, md5(CAST(seed AS VARCHAR) || ':' || sh) AS h
-        FROM exsh CROSS JOIN seeds
-    ),
-    sig AS (
-        SELECT doc_id,
-               {', '.join(f"MIN(CASE WHEN seed = {i} THEN h END) AS h{i}" for i in range(8))}
-        FROM hashed GROUP BY doc_id
-    ),
-    bands AS (
-        SELECT doc_id, 0 AS band_idx, md5(concat_ws('|', h0, h1, h2, h3)) AS band_sig FROM sig
-        UNION ALL
-        SELECT doc_id, 1 AS band_idx, md5(concat_ws('|', h4, h5, h6, h7)) AS band_sig FROM sig
-    ),
-    drops AS (
-        SELECT DISTINCT b.doc_id
-        FROM bands a
-        JOIN bands b ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig
-                    AND a.doc_id < b.doc_id
-    ),
-    nd AS (SELECT * FROM exd WHERE doc_id NOT IN (SELECT doc_id FROM drops)),
-    samp AS (SELECT * FROM nd
-             WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) <= 'c'),
-    funnel AS (
-        SELECT 0 AS stage_idx, 'raw' AS stage, COUNT(*) AS n_docs, SUM(n_tokens) AS n_tokens FROM scored
-        UNION ALL SELECT 1, 'quality', COUNT(*), SUM(n_tokens) FROM quality
-        UNION ALL SELECT 2, 'lang', COUNT(*), SUM(n_tokens) FROM lang
-        UNION ALL SELECT 3, 'exact_dedup', COUNT(*), SUM(n_tokens) FROM exd
-        UNION ALL SELECT 4, 'near_dedup', COUNT(*), SUM(n_tokens) FROM nd
-        UNION ALL SELECT 5, 'sample', COUNT(*), SUM(n_tokens) FROM samp
-    )
-    SELECT CAST(stage_idx AS INT) AS stage_idx, stage,
-           CAST(n_docs AS BIGINT) AS n_docs,
-           CAST(n_tokens AS BIGINT) AS n_tokens
-    FROM funnel ORDER BY stage_idx
-    """,
-)
-def pipeline_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end training-data prep funnel — the composed pipeline every
-    stage in this module exists to serve, as ONE query: quality filter
-    (length + lexical diversity) → language filter (stopword heuristic)
-    → exact dedup (keep min doc id per content digest) → near-dup
-    removal (MinHash-LSH candidates, drop the higher id of every
-    candidate pair) → deterministic hash sample (md5 first nibble,
-    ~13/16 keep rate).  Output: per-stage surviving document and
-    token counts, the shape of a pipeline-health dashboard.
-
-    Scale shape: the scored corpus is ONE scan, persisted and reused by
-    every stage; exact dedup is a window-min over the 16-byte digest
-    (one shuffle); near-dup reuses the banded-minhash machinery
-    (constant-size signatures, band-bucket equi-join — the 100 TB
-    path).  The six stage counts come from THREE conditional-aggregate
-    jobs, not six: quality/lang are per-row flags of the scored corpus
-    (stages 0-2 in one pass), the sample predicate is a per-row flag of
-    the near-dedup survivors (stages 4-5 in one pass) — a row-level
-    filter never deserves its own scan.  Every boundary is a built-in
-    function — no Python anywhere.
-    """
-    corpus = _dedup_corpus(spark, sf_dir)
-    # bind the token array ONCE before deriving from it: Spark does no
-    # CSE through higher-order lambdas, so inlining split() into each
-    # derived column re-runs the regex tokenization per use (measured
-    # 3× slowdown on this very stage)
-    tk = corpus.select("doc_id", "text", F.split(F.col("text"), X.TOKEN_RE).alias("toks"))
-    base = (
-        tk.select(
-            "doc_id",
-            "text",
-            F.size("toks").cast("bigint").alias("n_tokens"),
-            F.expr("div(1000 * size(array_distinct(toks)), size(toks))").alias("ttr"),
-            F.size(F.filter(F.col("toks"), lambda t: t.isin(*X.EN_STOPWORDS)))
-            .cast("bigint")
-            .alias("stop_hits"),
-        )
-        .transform(tracked_persist)
-    )
-    q_pass = (F.col("n_tokens") >= 20) & (F.col("ttr") >= 300)
-    l_pass = q_pass & (F.col("stop_hits") * 20 >= F.col("n_tokens"))
-    lang = base.filter(l_pass)
-    ex = (
-        lang.withColumn(
-            "keep",
-            F.min("doc_id").over(Window.partitionBy(F.md5(F.col("text").cast("binary")))),
-        )
-        .filter(F.col("doc_id") == F.col("keep"))
-        # persist (doc_id, n_tokens) only — text re-reads base's ONE
-        # cache through the id semi-join (round-8 funnel memory fix,
-        # same shape as pipeline_full_train_prep)
-        .select("doc_id", "n_tokens")
-        .transform(tracked_persist)
-    )
-    ex_txt = base.join(ex.select("doc_id"), "doc_id", "left_semi")
-    bands = D.minhash_bands(ex_txt, "doc_id", "text", n_hashes=8, band_size=4)
-    drops = (
-        D.lsh_candidate_pairs(bands, "doc_id")
-        .select(F.col("id_b").alias("doc_id"))
-        .distinct()
-    )
-    # no broadcast hint: the drop set grows with duplicate volume —
-    # AQE broadcasts when it fits, shuffles when it doesn't (the
-    # fuzzy_name_pairs_symspell r4 lesson)
-    nd = ex.join(drops, "doc_id", "left_anti").transform(tracked_persist)
-    s_pass = (
-        F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 1) <= "c"
-    )
-
-    def _cnt(flag):
-        return F.count(F.when(flag, F.lit(1)))
-
-    def _tok(flag):
-        return F.coalesce(F.sum(F.when(flag, F.col("n_tokens"))), F.lit(0)).cast(
-            "bigint"
-        )
-
-    def _row(idx: int, name: str, c, t):
-        return F.struct(
-            F.lit(idx).alias("stage_idx"),
-            F.lit(name).alias("stage"),
-            c.alias("n_docs"),
-            t.alias("n_tokens"),
-        )
-
-    true = F.lit(True)
-    s012 = base.agg(
-        F.inline(
-            F.array(
-                _row(0, "raw", _cnt(true), _tok(true)),
-                _row(1, "quality", _cnt(q_pass), _tok(q_pass)),
-                _row(2, "lang", _cnt(l_pass), _tok(l_pass)),
-            )
-        )
-    )
-    s3 = ex.agg(F.inline(F.array(_row(3, "exact_dedup", _cnt(true), _tok(true)))))
-    s45 = nd.agg(
-        F.inline(
-            F.array(
-                _row(4, "near_dedup", _cnt(true), _tok(true)),
-                _row(5, "sample", _cnt(s_pass), _tok(s_pass)),
-            )
-        )
-    )
-    return s012.unionByName(s3).unionByName(s45).orderBy("stage_idx")
 
 
 # SemDeDup's scale contract: cluster count grows with corpus size so the
@@ -3021,22 +1574,10 @@ def dedup_semantic_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     and since round 5 it SCALES with the corpus: k = max(8,
     ceil(N / 64)) on both engines (``_scaled_quantizer_k`` /
     ``_K_SCALED_SQL``), holding cluster sizes ~constant so the pair
-    join is linear in N — the paper's regime (SCALING.md).  Vectors are
+    join is linear in N.  Vectors are
     projected to (vec_id, cluster, v, nrm) BEFORE the pair exchange so
-    the code vectors used in training never shuffle (round-3
-    ANN-regression lesson)."""
-    return semdedup_drops(spark, sf_dir, k=None, iters=3)
-
-
-def semdedup_drops(
-    spark: SparkSession, sf_dir: str, *, k: int | None = None, iters: int = 3
-) -> DataFrame:
-    """Parameterized SemDeDup body — ``k`` is the scale knob (cluster
-    count grows ∝ N to hold cluster sizes, and thus the Σ|cluster|²
-    pair join, linear; SCALING.md records both regimes).  ``k=None``
-    (the default and the registered query's setting) derives k from the
-    corpus size."""
-    cells = _sq8_kmeans_cells(spark, sf_dir, k=k, iters=iters)
+    the code vectors used in training never shuffle."""
+    cells = _sq8_kmeans_cells(spark, sf_dir, k=None, iters=3)
     slim = cells.select("vec_id", "cluster", "v", "nrm")
     a = slim.select(
         F.col("vec_id").alias("id_a"),
@@ -3072,410 +1613,9 @@ def semdedup_drops(
     )
 
 
-def _full_train_prep_oracle_sql() -> str:
-    """DuckDB twin of ``pipeline_full_train_prep`` — the composed
-    funnel.  Assembled from the proven fragments: the unrolled-Lloyd
-    k-means cells (``_kmeans_cells_cte``), the corpus + quality/lang/
-    exact/minhash chain (``pipeline_training_prep``'s oracle), the
-    SemDeDup pair CTEs, the 8-token decontamination spans, the packing
-    window, and the hash split.  The quantizer k is corpus-scaled
-    (``_K_SCALED_SQL``), matching the funnel's ``k=None`` cells."""
-    sig_cols = ", ".join(
-        f"MIN(CASE WHEN seed = {i} THEN h END) AS h{i}" for i in range(8)
-    )
-    return _kmeans_cells_cte(k_sql=_K_SCALED_SQL) + f""",
-    {_CORPUS_SQL},
-    tk AS (SELECT doc_id, text, string_split_regex(text, '\\s+') AS toks
-           FROM corpus),
-    scored AS (
-        SELECT doc_id, text, toks,
-               len(toks) AS n_tokens,
-               (1000 * len(list_distinct(toks))) // len(toks) AS ttr,
-               len(list_filter(toks, x -> x IN
-                   ('the','a','an','of','and','to','is','in','it','for')))
-                   AS stop_hits
-        FROM tk
-    ),
-    quality AS (SELECT * FROM scored WHERE n_tokens >= 20 AND ttr >= 300),
-    lang AS (SELECT * FROM quality WHERE stop_hits * 20 >= n_tokens),
-    exd AS (SELECT * FROM lang
-           QUALIFY doc_id = MIN(doc_id) OVER (PARTITION BY md5(text))),
-    exsh AS (
-        SELECT doc_id, unnest(list_distinct(
-            CASE WHEN len(toks) >= 3
-                 THEN list_transform(generate_series(1, len(toks)-2),
-                      i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))
-                 ELSE []::VARCHAR[] END)) AS sh
-        FROM exd
-    ),
-    seeds AS (SELECT unnest(generate_series(0, 7)) AS seed),
-    hashed AS (
-        SELECT doc_id, seed, md5(CAST(seed AS VARCHAR) || ':' || sh) AS h
-        FROM exsh CROSS JOIN seeds
-    ),
-    sig AS (SELECT doc_id, {sig_cols} FROM hashed GROUP BY doc_id),
-    bands AS (
-        SELECT doc_id, 0 AS band_idx, md5(concat_ws('|', h0, h1, h2, h3)) AS band_sig FROM sig
-        UNION ALL
-        SELECT doc_id, 1 AS band_idx, md5(concat_ws('|', h4, h5, h6, h7)) AS band_sig FROM sig
-    ),
-    lsh_drops AS (
-        SELECT DISTINCT b.doc_id
-        FROM bands a
-        JOIN bands b ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig
-                    AND a.doc_id < b.doc_id
-    ),
-    nd AS (SELECT * FROM exd WHERE doc_id NOT IN (SELECT doc_id FROM lsh_drops)),
-    sl AS (SELECT c.vec_id, c.cluster, e.v, e.nrm
-           FROM cells c JOIN e ON e.vec_id = c.vec_id),
-    slv AS (SELECT sl.* FROM sl JOIN nd ON nd.doc_id = sl.vec_id),
-    sem_pairs AS (
-        SELECT b.vec_id
-        FROM slv a JOIN slv b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-        WHERE list_dot_product(a.v, b.v) / (a.nrm * b.nrm) >= 0.45
-    ),
-    sd AS (SELECT * FROM nd
-           WHERE doc_id NOT IN (SELECT DISTINCT vec_id FROM sem_pairs)),
-    evtk AS (SELECT doc_id, string_split_regex(text, '\\s+') AS toks FROM corpus
-             WHERE doc_id % 10 = 0 AND doc_id < 100000),
-    evspans AS (
-        SELECT DISTINCT unnest(list_distinct(
-            CASE WHEN len(toks) >= 8
-                 THEN list_transform(generate_series(1, len(toks)-7),
-                      i -> concat_ws(' ', {_SPAN8}))
-                 ELSE []::VARCHAR[] END)) AS span
-        FROM evtk
-    ),
-    sdspans AS (
-        SELECT doc_id, unnest(list_distinct(
-            CASE WHEN len(toks) >= 8
-                 THEN list_transform(generate_series(1, len(toks)-7),
-                      i -> concat_ws(' ', {_SPAN8}))
-                 ELSE []::VARCHAR[] END)) AS span
-        FROM (SELECT doc_id, toks FROM sd
-              WHERE NOT (doc_id % 10 = 0 AND doc_id < 100000))
-    ),
-    contam AS (SELECT DISTINCT s.doc_id
-               FROM sdspans s JOIN evspans e ON e.span = s.span),
-    dc AS (SELECT * FROM sd WHERE doc_id NOT IN (SELECT doc_id FROM contam)),
-    pkc AS (
-        SELECT doc_id, doc_id % 8 AS shard, n_tokens AS n_tok,
-               SUM(n_tokens) OVER (PARTITION BY doc_id % 8 ORDER BY doc_id
-                                   ROWS UNBOUNDED PRECEDING) AS cum
-        FROM dc
-    ),
-    pk AS (
-        SELECT COALESCE(SUM(ns), 0) AS n_units, COALESCE(SUM(nt), 0) AS n_tokens
-        FROM (SELECT shard, (MAX(cum) + 511) // 512 AS ns, SUM(n_tok) AS nt
-              FROM pkc GROUP BY shard)
-    ),
-    sp AS (
-        SELECT CASE WHEN hv < 58982 THEN 'train'
-                    WHEN hv < 62258 THEN 'val' ELSE 'test' END AS split,
-               n_tokens
-        FROM (SELECT CAST(concat('0x', substr(md5(concat('split:', doc_id)), 1, 4))
-                          AS BIGINT) AS hv,
-                     n_tokens
-              FROM dc)
-    ),
-    funnel AS (
-        SELECT 0 AS stage_idx, 'raw' AS stage, COUNT(*) AS n_units,
-               COALESCE(SUM(n_tokens), 0) AS n_tokens FROM scored
-        UNION ALL SELECT 1, 'quality', COUNT(*), COALESCE(SUM(n_tokens), 0) FROM quality
-        UNION ALL SELECT 2, 'lang', COUNT(*), COALESCE(SUM(n_tokens), 0) FROM lang
-        UNION ALL SELECT 3, 'exact_dedup', COUNT(*), COALESCE(SUM(n_tokens), 0) FROM exd
-        UNION ALL SELECT 4, 'near_dedup', COUNT(*), COALESCE(SUM(n_tokens), 0) FROM nd
-        UNION ALL SELECT 5, 'semantic_dedup', COUNT(*), COALESCE(SUM(n_tokens), 0) FROM sd
-        UNION ALL SELECT 6, 'decontaminate', COUNT(*), COALESCE(SUM(n_tokens), 0) FROM dc
-        UNION ALL SELECT 7, 'pack', n_units, n_tokens FROM pk
-        UNION ALL SELECT 8 + CASE split WHEN 'train' THEN 0 WHEN 'val' THEN 1 ELSE 2 END,
-               'split_' || split, COUNT(*), COALESCE(SUM(n_tokens), 0)
-        FROM sp GROUP BY split
-    )
-    SELECT CAST(stage_idx AS INT) AS stage_idx, stage,
-           CAST(n_units AS BIGINT) AS n_units,
-           CAST(n_tokens AS BIGINT) AS n_tokens
-    FROM funnel ORDER BY stage_idx
-    """
-
-
-@register("pipeline_full_train_prep", _full_train_prep_oracle_sql())
-def pipeline_full_train_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The CAPSTONE composed pipeline (round-4, VERDICT r3 "Next" #8):
-    every major train-prep operator family chained over ONE corpus pass
-    with per-stage survivor counts — quality filter → language filter →
-    exact dedup → MinHash-LSH near-dedup → SemDeDup semantic dedup
-    (embedding k-means cells, cos ≥ 0.45 to a lower-id neighbor) →
-    8-token-span decontamination against the eval stand-in → 512-token
-    sequence packing → deterministic 90/5/5 split.  Output: one row per
-    stage (``n_units`` = surviving docs, or packed sequences for the
-    ``pack`` row; token totals alongside) — the end-to-end funnel a
-    data-prep owner reads before shipping a corpus.
-
-    Composition semantics: each stage consumes the previous stage's
-    survivors.  Semantic dedup drops survivors whose embedding
-    (vec_id = doc_id) has a lower-id same-cluster neighbor at
-    cosine ≥ 0.45; docs without embeddings (the planted dup ids) pass
-    through.  Decontamination drops non-eval survivors sharing any
-    8-token span with the eval set.  Packing and the split both run on
-    the final cleaned set.
-
-    Scale shape: every stage reuses the proven scale pattern of its
-    standalone query — one persisted scored scan feeds stages 0-3, the
-    LSH drop set is banded (never all-pairs), SemDeDup's pair join is
-    cluster-equi-join Σ|cluster|² with k ∝ N, eval spans broadcast,
-    packing windows are per-shard, and the split is a map-side hash.
-    Stage counts come from per-frame aggregates, not re-scans.
-    Persist policy: the final lazy action is ONE job whose union
-    branches share the stage frames, and an eager count() per EVERY
-    stage measured 24 s vs 18 s lazy at sf0.1 (each materialization is
-    a full serial job barrier) — but the TWO heavy caches (``base``,
-    the corpus-text frame, and ``ex``, the exact-dedup window output)
-    are eagerly count()-ed anyway: at 300× the union branches raced to
-    first-build them concurrently (getOrCompute has no cross-task
-    build dedup) and the duplicated in-flight builds OOM'd the shared
-    heap.  Round-10: the slim survivor frames (ex, nd, sd, dc) are
-    ``localCheckpoint(eager=False)`` rather than persists — see the
-    survivor-frame comment in the body (output identical).  This is the
-    one execution shape at every corpus size in the repository (at
-    most 5,000 documents).
-
-    Measured sf0.1 cost: 112 s for one run through
-    ``tools/check_oracle.py`` (query, toPandas and the oracle compare)
-    on a 4-vCPU host — far above the 8.6 s the round-10 A/B recorded;
-    the slowdown is not yet profiled.  The round-5 stage audit found
-    most of the wall outside task time, spread over ~67 stages: AQE
-    per-exchange orchestration (materialize, re-plan, resubmit × ~30
-    exchanges).  That fixed cost amortizes once stages carry real
-    data, and AQE is what right-sizes the funnel's data-dependent
-    drop-set joins at 100 TB, so the query keeps AQE on and accepts the
-    small-SF floor;
-    a thread overlapping quantizer training with the text chain was
-    A/B'd and removed (±0 — the wall is barrier count, not overlap)."""
-    corpus = _dedup_corpus(spark, sf_dir)
-    # Survivor frames (round-10 optimization; guide §3.3/§5 — truncate
-    # the plan) are ``localCheckpoint(eager=False)``: the slim
-    # (doc_id, n_tokens) frames chain dc→sd→nd→ex and SEVEN report
-    # branches re-render that nested lineage (93.5M plan chars at
-    # sf0.01, truncated at the 20M cap, re-rendered per execution), so
-    # Catalyst/AQE orchestration owned the one-action wall: sf0.1 A/B
-    # 24.0→8.6 s with collect-identical output — this matches the
-    # round-5 "AQE off" floor (8.2 s) WITH AQE on.
-    tk = corpus.select(
-        "doc_id", "text", F.split(F.col("text"), X.TOKEN_RE).alias("toks")
-    )
-    stat_cols = [
-        F.size("toks").cast("bigint").alias("n_tokens"),
-        F.expr("div(1000 * size(array_distinct(toks)), size(toks))").alias("ttr"),
-        F.size(F.filter(F.col("toks"), lambda t: t.isin(*X.EN_STOPWORDS)))
-        .cast("bigint")
-        .alias("stop_hits"),
-    ]
-    # one wide (raw-text) cache, all consumers share it
-    base = tk.select("doc_id", "text", *stat_cols).transform(tracked_persist)
-    # Materialize the base cache EAGERLY (one count job): the
-    # final report is ONE action whose union branches (stage counts,
-    # bands, contamination) otherwise race to build this cache
-    # concurrently - at 300x the duplicated in-flight builds OOM'd the
-    # shared heap even after the per-stage text caches below were
-    # slimmed away.  Stage-by-stage the same workload fits with GBs to
-    # spare; serializing the ONE heavy build is the whole fix.
-    base.count()
-    q_pass = (F.col("n_tokens") >= 20) & (F.col("ttr") >= 300)
-    l_pass = q_pass & (F.col("stop_hits") * 20 >= F.col("n_tokens"))
-    lang = base.filter(l_pass)
-    ex = (
-        lang.withColumn(
-            "keep",
-            F.min("doc_id").over(Window.partitionBy(F.md5(F.col("text").cast("binary")))),
-        )
-        .filter(F.col("doc_id") == F.col("keep"))
-        .select("doc_id", "n_tokens")
-        .localCheckpoint(eager=False)
-    )
-    # Stage survivor frames persist (doc_id, n_tokens) ONLY — two
-    # bigints per doc.  Round-8: the pre-r8 funnel persisted the full
-    # text column at four stages (base/ex/nd/sd ≈ 4× the corpus in
-    # cache), which OOM'd the 300× decade tier; text-needing consumers
-    # re-read the ONE persisted text cache (base) through an id
-    # semi-join instead — an AQE-sized equi-join, noise next to a
-    # second corpus-text cache at any scale.
-    # same reason as base.count() above: SIX report branches read this
-    # cache; if it is lazy they race to first-build the 1.7M-row
-    # dedup window concurrently (getOrCompute has no cross-task build
-    # dedup) and the multiplied sort memory OOMs the shared heap —
-    # every stage fits with GBs to spare when built once
-    ex.count()
-    ex_txt = base.join(ex.select("doc_id"), "doc_id", "left_semi")
-    bands = D.minhash_bands(ex_txt, "doc_id", "text", n_hashes=8, band_size=4)
-    # Production-shaped LSH config (VERDICT r5 "Next" #4): the hot-bucket
-    # star-emission valve is ON in the composed funnel.  The drop set is
-    # IDENTICAL either way — all-pairs drops every id that appears as
-    # id_b (everything but each bucket's min id), and a star's id_b set
-    # is exactly the same members — so the unrolled all-pairs DuckDB
-    # twin below remains the exact oracle.  Measured max bucket size on
-    # the raw corpus is 4 at sf0.001/0.01/0.1 (cap never fires on test
-    # data); `dedup_lsh_hot_bucket_capped` plants a hot band and
-    # hash-checks the capped semantics cross-engine.
-    lsh_drops = (
-        D.lsh_candidate_pairs(bands, "doc_id", hot_bucket_cap=64)
-        .select(F.col("id_b").alias("doc_id"))
-        .distinct()
-    )
-    # drop sets are data-dependent (duplicate/contamination volume):
-    # no hard broadcast hints anywhere in the funnel — AQE decides
-    nd = ex.join(lsh_drops, "doc_id", "left_anti").localCheckpoint(eager=False)
-    # SemDeDup restricted to the docs still IN the pipeline: the
-    # quantizer is trained on the full embedding space (reusable across
-    # runs), but the Σ|cluster|² pair join only pays for near-dedup
-    # SURVIVORS — dedup among dropped docs is wasted work, and at scale
-    # the survivor semi-join is an equi-join AQE sizes itself.  k=None →
-    # corpus-scaled quantizer, same as the standalone SemDeDup query.
-    cells = _sq8_kmeans_cells(spark, sf_dir, k=None, iters=3)
-    # persisted: both sides of the pair self-join read it, and without
-    # the persist the survivor semi-join (and the cells projection
-    # under it) runs twice
-    slv = (
-        cells.select("vec_id", "cluster", "v", "nrm")
-        .join(nd.select(F.col("doc_id").alias("vec_id")), "vec_id")
-        .transform(tracked_persist)
-    )
-    a_side = slv.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("cluster").alias("cl_a"),
-        F.col("v").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    sem_cos = S.dot(F.col("va"), F.col("v")) / (F.col("na") * F.col("nrm"))
-    sem_drops = (
-        slv.join(
-            a_side,
-            (F.col("cl_a") == F.col("cluster")) & (F.col("id_a") < F.col("vec_id")),
-        )
-        .filter(sem_cos >= 0.45)
-        .select(F.col("vec_id").alias("doc_id"))
-        .distinct()
-    )
-    sd = nd.join(sem_drops, "doc_id", "left_anti").localCheckpoint(eager=False)
-    is_eval = (F.col("doc_id") % 10 == 0) & (F.col("doc_id") < 100000)
-    ev_spans = (
-        D.shingle_explode(corpus.filter(is_eval), "doc_id", "text", 8)
-        .select(F.xxhash64("sh").alias("h"))
-        .distinct()
-    )
-    sd_txt = base.join(sd.select("doc_id"), "doc_id", "left_semi")
-    contam = (
-        D.shingle_explode(sd_txt.filter(~is_eval), "doc_id", "text", 8)
-        .select("doc_id", F.xxhash64("sh").alias("h"))
-        .join(F.broadcast(ev_spans), "h")
-        .select("doc_id")
-        .distinct()
-    )
-    dc = sd.join(contam, "doc_id", "left_anti").localCheckpoint(eager=False)
-    wsh = (
-        Window.partitionBy("shard")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    pkc = dc.select(
-        "doc_id", (F.col("doc_id") % 8).alias("shard"), F.col("n_tokens").alias("n_tok")
-    ).withColumn("cum", F.sum("n_tok").over(wsh))
-    pack = (
-        pkc.groupBy("shard")
-        .agg(
-            F.expr("div(max(cum) + 511, 512)").alias("ns"),
-            F.sum("n_tok").alias("nt"),
-        )
-        .agg(
-            F.coalesce(F.sum("ns"), F.lit(0)).cast("bigint").alias("n_units"),
-            F.coalesce(F.sum("nt"), F.lit(0)).cast("bigint").alias("n_tokens"),
-        )
-        .select(
-            F.lit(7).cast("int").alias("stage_idx"),
-            F.lit("pack").alias("stage"),
-            "n_units",
-            "n_tokens",
-        )
-    )
-    hv = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(F.lit("split:"), F.col("doc_id").cast("string")).cast("binary")
-            ),
-            1,
-            4,
-        ),
-        16,
-        10,
-    ).cast("bigint")
-    sp = dc.select(
-        F.when(hv < 58982, "train").when(hv < 62258, "val").otherwise("test").alias(
-            "split"
-        ),
-        "n_tokens",
-    )
-    splits = sp.groupBy("split").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_units"),
-        F.coalesce(F.sum("n_tokens"), F.lit(0)).cast("bigint").alias("n_tokens"),
-    ).select(
-        (
-            F.lit(8)
-            + F.when(F.col("split") == "train", 0)
-            .when(F.col("split") == "val", 1)
-            .otherwise(2)
-        )
-        .cast("int")
-        .alias("stage_idx"),
-        F.concat(F.lit("split_"), F.col("split")).alias("stage"),
-        "n_units",
-        "n_tokens",
-    )
-
-    def _cnt(flag):
-        return F.count(F.when(flag, F.lit(1))).cast("bigint")
-
-    def _tok(flag):
-        return F.coalesce(F.sum(F.when(flag, F.col("n_tokens"))), F.lit(0)).cast(
-            "bigint"
-        )
-
-    def _row(idx: int, name: str, c, t):
-        return F.struct(
-            F.lit(idx).cast("int").alias("stage_idx"),
-            F.lit(name).alias("stage"),
-            c.alias("n_units"),
-            t.alias("n_tokens"),
-        )
-
-    true = F.lit(True)
-    s012 = base.agg(
-        F.inline(
-            F.array(
-                _row(0, "raw", _cnt(true), _tok(true)),
-                _row(1, "quality", _cnt(q_pass), _tok(q_pass)),
-                _row(2, "lang", _cnt(l_pass), _tok(l_pass)),
-            )
-        )
-    )
-    s3 = ex.agg(F.inline(F.array(_row(3, "exact_dedup", _cnt(true), _tok(true)))))
-    s4 = nd.agg(F.inline(F.array(_row(4, "near_dedup", _cnt(true), _tok(true)))))
-    s5 = sd.agg(F.inline(F.array(_row(5, "semantic_dedup", _cnt(true), _tok(true)))))
-    s6 = dc.agg(F.inline(F.array(_row(6, "decontaminate", _cnt(true), _tok(true)))))
-    return (
-        s012.unionByName(s3)
-        .unionByName(s4)
-        .unionByName(s5)
-        .unionByName(s6)
-        .unionByName(pack)
-        .unionByName(splits)
-        .orderBy("stage_idx")
-    )
-
-
 def _pq_ctes(m: int = 4, k: int = 16, subdim: int = 16, iters: int = 3) -> str:
-    """Unrolled-Lloyd DuckDB twin of ``similarity_ann_pq``, through the
-    ``ranked`` CTE (ADC-approx top-k per query).  Shared by the
-    full-SELECT twin ``_pq_oracle_sql`` and the recall gate
+    """Unrolled-Lloyd DuckDB twin of the PQ-ADC tier, through the
+    ``ranked`` CTE (ADC-approx top-k per query), for the recall gate
     ``ann_recall_pq``.
 
     Replayable because every float op is order-pinned or exact:
@@ -3577,18 +1717,6 @@ def _pq_ctes(m: int = 4, k: int = 16, subdim: int = 16, iters: int = 3) -> str:
     return "".join(parts)
 
 
-def _pq_oracle_sql(m: int = 4, k: int = 16, subdim: int = 16, iters: int = 3) -> str:
-    """Full-SELECT DuckDB twin of ``similarity_ann_pq``: the shared PQ
-    CTE chain plus the ADC top-5 projection."""
-    return _pq_ctes(m, k, subdim, iters) + """
-    SELECT CAST(query_id AS BIGINT) AS query_id,
-           CAST(neighbor_id AS BIGINT) AS neighbor_id,
-           CAST(approx_ip AS DOUBLE) AS approx_ip, rk
-    FROM ranked WHERE rk <= 5
-    ORDER BY query_id, rk
-    """
-
-
 def _pq_recall_oracle_sql() -> str:
     """DuckDB twin of ``ann_recall_pq``: exact cosine top-5 truth over
     the RAW vectors vs the PQ-ADC approx top-5 (both SQ8+PQ training
@@ -3629,7 +1757,7 @@ def ann_recall_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximation error comes from quantization, not candidate
     pruning, and deserves its own measured gate rather than an assumed
     one.  Truth is exact cosine over the raw float vectors; approx is
-    the same ADC top-5 the registered ``similarity_ann_pq`` serves.
+    the ADC top-5 over the PQ codes.
 
     Scale shape: training/encoding inherits ``pq_fit_codes``'s bounded
     driver transfers (k centroids per subspace per round); the truth
@@ -3783,445 +1911,6 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
     ).orderBy("dim")
 
 
-@register("similarity_ann_pq", _pq_oracle_sql())
-def similarity_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ADC top-k — completes the FAISS quantization
-    triad (IVF = partition, SQ8 = scalar compress, PQ = vector
-    compress).  The pipeline is the production ``SQ8 → PQ`` composition:
-    vectors are first scalar-quantized to 8-bit codes (storage tier),
-    then the PQ codebooks are TRAINED ON THE CODE VECTORS (m=4 subspaces
-    × k=16 codewords × 3 Lloyd iterations, first-k-by-id seeding) and
-    each vector stored as 4 small codes.  Queries keep their (quantized)
-    full vector and score candidates through a broadcast
-    (query × subspace × codeword) inner-product lookup table — m table
-    reads + adds per candidate, never a d-dim scan.
-
-    Training on integer-valued inputs is what makes this oracle-exact
-    (round-2 demand): cluster partial sums are exact in float64 (order-
-    independent), centroid means are one rounded division each, and
-    distance folds are index-order on both engines — so the DuckDB twin
-    (``_pq_oracle_sql``) replays training, encoding, and ADC scoring
-    bitwise.  ``tests/test_extensions.py`` additionally pins code
-    determinism and cluster-structured retrieval."""
-    # no _fan_out: PQ's per-row work is tiny (16-dim argmin), so the
-    # driver-loop job cost is TASK COUNT, not compute — training jobs
-    # on the input's natural partitioning run 32× fewer tasks locally
-    # (measured 6.5 → 4.1 s); at scale the input partitions naturally
-    emb = load_testdata(spark, sf_dir, "embeddings")
-    # not persisted here: pq_fit_codes persists its own projection of
-    # this frame (training + encode), and the query side below touches
-    # it once more with a pushed-down vec_id filter — one cheap rescan
-    # beats materializing the same 8-bit vectors into a second cache
-    cvec = S.sq8_codes(emb).select(
-        "vec_id",
-        F.transform("codes", lambda x: x.cast("double")).alias("embedding"),
-    )
-    codes, books = S.pq_fit_codes(cvec, m=4, k=16, max_iter=3)
-    codes = codes.transform(tracked_persist)
-    out = S.pq_adc_topk(
-        codes, books, cvec.filter(F.col("vec_id") < 10), k_neighbors=5
-    )
-    return out.select(
-        F.col("query_id").cast("bigint"),
-        F.col("neighbor_id").cast("bigint"),
-        F.col("approx_ip").cast("double"),
-        "rk",
-    ).orderBy("query_id", "rk")
-
-
-def _ivfpq_oracle_sql(m: int = 4, k: int = 16, subdim: int = 16, iters: int = 3) -> str:
-    """DuckDB twin of ``similarity_ann_ivf_pq`` — the two proven
-    unrolled-Lloyd chains composed: the coarse-cell CTEs
-    (``_kmeans_cells_cte``, shared ``e``/``mm``/``cv``) followed by the
-    PQ training/encoding/ADC chain of ``_pq_oracle_sql`` with
-    ``q``-prefixed CTE names (the two Lloyd fits would otherwise
-    collide on cents/a/u/m), and scoring restricted to same-cell
-    candidates.  Replayability is inherited unchanged from both parents
-    (integer-valued training inputs, index-order folds, pinned
-    iterations)."""
-    js = ", ".join(str(j) for j in range(m))
-    parts = [
-        _kmeans_cells_cte(),
-        f""",
-    sub AS (
-        SELECT vec_id, j, cvec[j*{subdim}+1 : j*{subdim}+{subdim}] AS sv
-        FROM cv, (SELECT unnest([{js}]) AS j)
-    ),
-    qcents0 AS (
-        SELECT j,
-               CAST(ROW_NUMBER() OVER (PARTITION BY j ORDER BY vec_id) AS INTEGER) - 1 AS c,
-               sv AS cent
-        FROM sub
-        WHERE vec_id IN (SELECT vec_id FROM cv ORDER BY vec_id LIMIT {k})
-    )""",
-    ]
-    for i in range(1, iters + 1):
-        parts.append(f""",
-    qa{i}p AS (
-        SELECT s.vec_id, s.j, c.c,
-               list_transform(range(1,{subdim + 1}), t -> s.sv[t] - c.cent[t]) AS d
-        FROM sub s JOIN qcents{i - 1} c ON c.j = s.j
-    ),
-    qa{i} AS (
-        SELECT vec_id, j, c,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, j
-                   ORDER BY list_dot_product(d, d) ASC, c) AS rk
-        FROM qa{i}p
-    ),
-    qu{i} AS (
-        SELECT a.j, a.c, t.i AS pos, SUM(s.sv[t.i]) AS sm, COUNT(*) AS n
-        FROM qa{i} a
-        JOIN sub s ON s.vec_id = a.vec_id AND s.j = a.j
-        CROSS JOIN (SELECT unnest(range(1,{subdim + 1})) AS i) t
-        WHERE a.rk = 1
-        GROUP BY a.j, a.c, t.i
-    ),
-    qm{i} AS (SELECT j, c, list(sm / n ORDER BY pos) AS cent FROM qu{i} GROUP BY j, c),
-    qcents{i} AS (
-        SELECT p.j, p.c, coalesce(mm2.cent, p.cent) AS cent
-        FROM qcents{i - 1} p LEFT JOIN qm{i} mm2 ON mm2.j = p.j AND mm2.c = p.c
-    )""")
-    fin = iters + 1
-    adc = "\n             + ".join(
-        f"MAX(CASE WHEN kk.j = {j} THEN l.ip END)" for j in range(m)
-    )
-    parts.append(f""",
-    qa{fin}p AS (
-        SELECT s.vec_id, s.j, c.c,
-               list_transform(range(1,{subdim + 1}), t -> s.sv[t] - c.cent[t]) AS d
-        FROM sub s JOIN qcents{iters} c ON c.j = s.j
-    ),
-    codesf AS (
-        SELECT vec_id, j, c FROM (
-            SELECT vec_id, j, c,
-                   ROW_NUMBER() OVER (PARTITION BY vec_id, j
-                       ORDER BY list_dot_product(d, d) ASC, c) AS rk
-            FROM qa{fin}p
-        ) WHERE rk = 1
-    ),
-    lut AS (
-        SELECT q.vec_id AS qid, c.j, c.c, list_dot_product(q.sv, c.cent) AS ip
-        FROM sub q JOIN qcents{iters} c ON c.j = q.j
-        WHERE q.vec_id < 10
-    ),
-    scored AS (
-        SELECT l.qid AS query_id, kk.vec_id AS neighbor_id,
-               {adc} AS approx_ip
-        FROM codesf kk
-        JOIN lut l ON l.j = kk.j AND l.c = kk.c AND kk.vec_id != l.qid
-        JOIN cells nc ON nc.vec_id = kk.vec_id
-        JOIN cells qc ON qc.vec_id = l.qid AND qc.cluster = nc.cluster
-        GROUP BY l.qid, kk.vec_id
-    ),
-    ranked AS (
-        SELECT query_id, neighbor_id, approx_ip,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY approx_ip DESC, neighbor_id) AS INTEGER) AS rk
-        FROM scored
-    )
-    SELECT CAST(query_id AS BIGINT) AS query_id,
-           CAST(neighbor_id AS BIGINT) AS neighbor_id,
-           CAST(approx_ip AS DOUBLE) AS approx_ip, rk
-    FROM ranked WHERE rk <= 5
-    ORDER BY query_id, rk
-    """)
-    return "".join(parts)
-
-
-@register("similarity_ann_ivf_pq", _ivfpq_oracle_sql())
-def similarity_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ — the canonical FAISS composite index (round-5): the
-    trained coarse quantizer routes each vector to a cell
-    (``_sq8_kmeans_cells``, k=8 pinned index config) and candidates are
-    scored with PQ asymmetric distance INSIDE the query's cell only.
-    This is the shape a 100 TB vector store actually deploys: the scan
-    side holds 4-byte PQ codes partitioned by cell (one inverted list
-    per probe), the query side broadcasts a |Q|·m·k LUT, and neither
-    full-precision vectors nor cross-cell candidates ever move.
-
-    Reuses the PERSISTED cells frame for PQ training input (its
-    ``cvec`` column is exactly the SQ8 code vector the flat PQ query
-    trains on — one scan serves routing and training).  The DuckDB twin
-    composes the two proven unrolled-Lloyd chains; both inherit the
-    integer-exact replay argument of ``_pq_oracle_sql``."""
-    cells = _sq8_kmeans_cells(spark, sf_dir, k=8, iters=3)
-    cvec = cells.select("vec_id", F.col("cvec").alias("embedding"), "cluster")
-    codes, books = S.pq_fit_codes(
-        cvec.select("vec_id", "embedding"), m=4, k=16, max_iter=3
-    )
-    codes = codes.join(cells.select("vec_id", "cluster"), "vec_id").transform(
-        tracked_persist
-    )
-    out = S.pq_adc_topk(
-        codes,
-        books,
-        cvec.filter(F.col("vec_id") < 10),
-        k_neighbors=5,
-        restrict_col="cluster",
-    )
-    return out.select(
-        F.col("query_id").cast("bigint"),
-        F.col("neighbor_id").cast("bigint"),
-        F.col("approx_ip").cast("double"),
-        "rk",
-    ).orderBy("query_id", "rk")
-
-
-def _bpe_apply_sql(src: str, dst: str, m: str, pre: str) -> str:
-    """One gaps-and-islands merge-application block: apply merge ``m``
-    to every symbol array in ``src``, emitting ``dst``.  Within every
-    run of consecutive matching positions (only possible when
-    lhs = rhs), odd ranks merge and the position after a merge is
-    consumed — exactly the left-fold the Spark side computes."""
-    return f""",
-    {pre}f AS (
-        SELECT word, freq, i, syms[i] AS s,
-               (i < len(syms) AND syms[i] = (SELECT lhs FROM {m})
-                AND syms[i+1] = (SELECT rhs FROM {m})) AS m
-        FROM (SELECT word, freq, syms,
-                     unnest(generate_series(1, len(syms))) AS i FROM {src})
-    ),
-    {pre}g AS (
-        SELECT word, freq, i, s, m,
-               (m AND ROW_NUMBER() OVER (PARTITION BY word, isl, m ORDER BY i) % 2 = 1) AS greedy
-        FROM (SELECT *, i - ROW_NUMBER() OVER (PARTITION BY word, m ORDER BY i) AS isl
-              FROM {pre}f)
-    ),
-    {pre}h AS (
-        SELECT word, freq, i,
-               CASE WHEN greedy THEN (SELECT lhs || rhs FROM {m})
-                    WHEN lag(greedy, 1, false) OVER (PARTITION BY word ORDER BY i)
-                         THEN NULL
-                    ELSE s END AS emit
-        FROM {pre}g
-    ),
-    {dst} AS (
-        SELECT word, freq,
-               list(emit ORDER BY i) FILTER (WHERE emit IS NOT NULL) AS syms
-        FROM {pre}h GROUP BY word, freq
-    )"""
-
-
-def _bpe_train_ctes(rounds: int, vocab: int) -> str:
-    """Shared CTE chain: word frequencies (wall), the top-``vocab``
-    training table (w0/v0), and per round the pair count (p{r}),
-    argmax merge (m{r}), and trained symbol table v{r}."""
-    parts = [rf"""
-    WITH wx AS (SELECT unnest(string_split_regex(lower(text), '\s+')) AS word
-                FROM documents),
-    wall AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS freq FROM wx
-             WHERE word <> '' GROUP BY word),
-    w0 AS (SELECT word, freq FROM wall ORDER BY freq DESC, word LIMIT {vocab}),
-    v0 AS (SELECT word, freq,
-                  list_append(list_transform(generate_series(1, length(word)),
-                                             i -> substr(word, i, 1)), '</w>') AS syms
-           FROM w0)"""]
-    for r in range(1, rounds + 1):
-        parts.append(f""",
-    p{r} AS (
-        SELECT lhs, rhs, SUM(freq) AS cnt FROM (
-            SELECT freq, unnest(syms[1:len(syms)-1]) AS lhs,
-                   unnest(syms[2:len(syms)]) AS rhs
-            FROM v{r - 1}
-        ) GROUP BY lhs, rhs
-    ),
-    m{r} AS (SELECT lhs, rhs, cnt FROM p{r} ORDER BY cnt DESC, lhs, rhs LIMIT 1)"""
-        )
-        parts.append(_bpe_apply_sql(f"v{r - 1}", f"v{r}", f"m{r}", f"f{r}"))
-    return "".join(parts)
-
-
-def _bpe_oracle_sql(rounds: int = 4, vocab: int = 2000) -> str:
-    """Unrolled DuckDB twin of ``vocab_bpe_merges``: the shared
-    training chain, outputting the merge table."""
-    parts = [_bpe_train_ctes(rounds, vocab)]
-    unions = "\n        UNION ALL ".join(
-        f"SELECT {r} AS rnd, lhs, rhs, lhs || rhs AS merged, CAST(cnt AS BIGINT) AS pair_count FROM m{r}"
-        for r in range(1, rounds + 1)
-    )
-    parts.append(f"""
-    SELECT * FROM (
-        {unions}
-    ) ORDER BY rnd
-    """)
-    return "".join(parts)
-
-
-@register("vocab_bpe_merges", _bpe_oracle_sql())
-def vocab_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte-pair-encoding merge induction (Sennrich et al. 2016) — the
-    tokenizer-training step of an LLM data pipeline, run in-engine: 4
-    merge rounds over the corpus vocabulary, returning the learned
-    merge table (round, lhs, rhs, merged, weighted pair count).
-
-    The classic BPE scale trick does the heavy lifting: training
-    operates on the WORD-FREQUENCY table (top-2000 word forms by
-    frequency, deterministic tiebreak), never the token stream — the
-    corpus is scanned once to build it, after which every round touches
-    only ~2000 tiny symbol arrays.  Per round: pair counts via an
-    inline-generator explode (bounded: Σ word-length rows), one
-    map-side-combined groupBy, a 1-row argmax to the driver, and the
-    merge applied as an ``F.aggregate`` left fold per word (greedy
-    non-overlapping, ANSI-safe CaseWhen short-circuit guards the
-    empty-accumulator element_at).  DuckDB replays the fold as a
-    gaps-and-islands window program — two independent formulations of
-    the same greedy semantics."""
-    return spark.createDataFrame(
-        _bpe_train(spark, sf_dir),
-        schema="rnd int, lhs string, rhs string, merged string, pair_count bigint",
-    ).orderBy("rnd")
-
-
-_BPE_SYMS0 = (
-    "concat(slice(split(word, '(?!^)'), 1, size(split(word, '(?!^)')) - 1),"
-    " array('</w>'))"
-)
-
-
-def _bpe_merge_fold(x: str, y: str):
-    """Greedy left-to-right application of merge (x, y) as an
-    ANSI-safe F.aggregate fold over a ``syms`` column (CaseWhen
-    short-circuit guards the empty-accumulator element_at)."""
-    return F.aggregate(
-        F.col("syms"),
-        F.expr("cast(array() as array<string>)"),
-        lambda acc, s: F.when(F.size(acc) == 0, F.concat(acc, F.array(s)))
-        .when(
-            (F.element_at(acc, -1) == F.lit(x)) & (s == F.lit(y)),
-            F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(x + y))),
-        )
-        .otherwise(F.concat(acc, F.array(s))),
-    )
-
-
-def _bpe_train(
-    spark: SparkSession, sf_dir: str, rounds: int = 4, words: DataFrame | None = None
-):
-    """Train the merge table on the top-2000 word-frequency table;
-    returns [(rnd, lhs, rhs, merged, pair_count), ...].  Pass ``words``
-    (a one-column token stream) to reuse an already-tokenized corpus —
-    ``vocab_bpe_encode`` shares its persisted stream this way instead
-    of paying a second scan+split pass (review finding)."""
-    if words is None:
-        words = (
-            load_testdata(spark, sf_dir, "documents")
-            .select(F.explode(F.split(F.lower("text"), r"\s+")).alias("word"))
-            .filter(F.col("word") != "")
-        )
-    vocab = (
-        words.groupBy("word")
-        .agg(F.count("*").alias("freq"))
-        .orderBy(F.desc("freq"), "word")
-        .limit(2000)
-    )
-    vdf = vocab.withColumn("syms", F.expr(_BPE_SYMS0)).transform(tracked_persist)
-    merges = []
-    for rnd in range(1, rounds + 1):
-        pairs = vdf.select(
-            "freq",
-            F.expr(
-                "explode(transform(sequence(1, size(syms) - 1),"
-                " i -> struct(syms[i-1] AS lhs, syms[i] AS rhs)))"
-            ).alias("p"),
-        ).select("freq", "p.lhs", "p.rhs")
-        top = (
-            pairs.groupBy("lhs", "rhs")
-            .agg(F.sum("freq").alias("cnt"))
-            .orderBy(F.desc("cnt"), "lhs", "rhs")
-            .limit(1)
-            .collect()[0]
-        )
-        x, y, cnt = top["lhs"], top["rhs"], int(top["cnt"])
-        vdf = vdf.withColumn("syms", _bpe_merge_fold(x, y)).transform(tracked_persist)
-        merges.append((rnd, x, y, x + y, cnt))
-    return merges
-
-
-@register(
-    "text_lang_classifier_nb",
-    r"""
-    WITH tok AS (
-        SELECT doc_id, lang,
-               unnest(string_split_regex(lower(text), '\s+')) AS tok
-        FROM documents
-    ),
-    tok2 AS (SELECT * FROM tok WHERE tok <> ''),
-    wt AS (
-        SELECT lang AS cls, tok,
-               CAST(length(format('{:b}', COUNT(*))) AS BIGINT) AS wt
-        FROM tok2 WHERE doc_id % 5 <> 0 GROUP BY lang, tok
-    ),
-    scored AS (
-        SELECT t.doc_id, t.lang, w.cls, SUM(w.wt) AS score
-        FROM tok2 t JOIN wt w ON w.tok = t.tok
-        WHERE t.doc_id % 5 = 0
-        GROUP BY t.doc_id, t.lang, w.cls
-    ),
-    pred AS (
-        SELECT doc_id, lang, cls,
-               ROW_NUMBER() OVER (PARTITION BY doc_id
-                   ORDER BY score DESC, cls) AS rk
-        FROM scored
-    )
-    SELECT lang AS actual, cls AS predicted,
-           CAST(COUNT(*) AS BIGINT) AS n_docs
-    FROM pred WHERE rk = 1
-    GROUP BY lang, cls
-    ORDER BY actual, predicted
-    """,
-)
-def text_lang_classifier_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trained multinomial-Naive-Bayes-style language classifier — the
-    model-based tier of quality/language filtering (the fasttext
-    supervised classifier's role in CCNet/RefinedWeb pipelines),
-    expressed entirely in integer arithmetic so both engines agree
-    bitwise: per-class token weights are floor(log2(count))+1 =
-    ``length(bin(count))`` (a libm-free derivation), a doc's class score is the sum of its
-    tokens' class weights, argmax with a (score DESC, class ASC)
-    tiebreak.  Deterministic train/test split by doc_id % 5; output is
-    the test-set confusion matrix.
-
-    Scale shape: the weight table is bounded by vocab × classes and
-    BROADCASTS to the test-token stream (map-side join); scoring is one
-    groupBy(doc, class) with partial combine, and the per-doc argmax
-    window partitions on doc_id with ≤|classes| rows each.  Train and
-    test are disjoint filters over ONE persisted token stream, so the
-    corpus is tokenized once."""
-    toks = (
-        load_testdata(spark, sf_dir, "documents")
-        .select(
-            "doc_id",
-            "lang",
-            F.explode(F.split(F.lower("text"), r"\s+")).alias("tok"),
-        )
-        .filter(F.col("tok") != "")
-        .transform(tracked_persist)
-    )
-    wt = (
-        toks.filter(F.col("doc_id") % 5 != 0)
-        .groupBy(F.col("lang").alias("cls"), "tok")
-        .agg(F.count("*").alias("n"))
-        .select("cls", "tok", F.length(F.expr("bin(n)")).cast("bigint").alias("wt"))
-    )
-    # wt is one row per (class, token) — vocab-sized, grows ∝ corpus:
-    # plain equi-join on tok (AQE broadcasts it while small; at web
-    # scale it shuffles against the eval-split token stream).
-    scored = (
-        toks.filter(F.col("doc_id") % 5 == 0)
-        .join(wt, "tok")
-        .groupBy("doc_id", "lang", "cls")
-        .agg(F.sum("wt").alias("score"))
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.col("score").desc(), "cls")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .groupBy(F.col("lang").alias("actual"), F.col("cls").alias("predicted"))
-        .agg(F.count("*").cast("bigint").alias("n_docs"))
-        .orderBy("actual", "predicted")
-    )
-
-
 _SPAN8_POS = ", ".join(f"toks[pos+{j}]" for j in range(8))
 _SPAN8_SPARK = ",".join(f"toks[i+{j}]" for j in range(-1, 7))
 
@@ -4274,8 +1963,8 @@ def text_exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     globally first occurrence (min (doc_id, pos)), and per doc the
     surviving removal positions merge into maximal intervals — the exact
     token ranges a training pipeline would cut, with per-doc removal
-    stats.  Unlike ``text_span_dup_stats`` (a per-doc profile over
-    DISTINCT spans) this is position-level with keep-one semantics.
+    stats.  Unlike a per-doc profile over DISTINCT spans, this is
+    position-level with keep-one semantics.
 
     Spark-first shape: span occurrences stream out of one INLINE
     generator explode (positions ride along); the span-frequency +
@@ -4427,215 +2116,6 @@ def interval_overlap_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "tokens_heavy_hitters_cms",
-    r"""
-    WITH tok AS (
-        SELECT unnest(string_split_regex(lower(text), '\s+')) AS tok
-        FROM documents
-    ),
-    tok2 AS (SELECT tok FROM tok WHERE tok <> ''),
-    exact AS (
-        SELECT tok, CAST(COUNT(*) AS BIGINT) AS n FROM tok2 GROUP BY tok
-        ORDER BY n DESC, tok LIMIT 20
-    ),
-    rows0 AS (SELECT unnest([0, 1, 2, 3]) AS seed),
-    cells AS (
-        SELECT r.seed,
-               substr(md5(concat('cms', r.seed, ':', t.tok)), 1, 3) AS bucket,
-               COUNT(*) AS cnt
-        FROM tok2 t CROSS JOIN rows0 r
-        GROUP BY r.seed, substr(md5(concat('cms', r.seed, ':', t.tok)), 1, 3)
-    ),
-    est AS (
-        SELECT e.tok, e.n, MIN(c.cnt) AS cms_n
-        FROM exact e
-        JOIN rows0 r ON TRUE
-        JOIN cells c ON c.seed = r.seed
-                    AND c.bucket = substr(md5(concat('cms', r.seed, ':', e.tok)), 1, 3)
-        GROUP BY e.tok, e.n
-    )
-    SELECT tok, n, CAST(cms_n AS BIGINT) AS cms_n,
-           CAST(cms_n - n AS BIGINT) AS overcount
-    FROM est
-    ORDER BY n DESC, tok
-    """,
-)
-def tokens_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-Min Sketch heavy hitters (Cormode & Muthukrishnan 2005) —
-    the fixed-memory frequency sketch a streaming/telemetry pipeline
-    keeps instead of a full count table: d=4 hash rows × 4096 buckets
-    (md5-hex prefix buckets, portable across engines), point estimate =
-    min over rows, verified here against the exact top-20 token counts
-    (``overcount`` = cms_n − n ≥ 0 always; collisions only ever
-    overestimate).
-
-    Scale shape: the sketch build is ONE map-side-combined aggregate
-    over (seed, bucket) — at most d·4096 cells regardless of corpus
-    size (the whole point); the estimate probe broadcasts 20·d cell
-    keys.  Everything is deterministic (seeded md5), so the sketch is
-    exactly replayable by the oracle — an APPROXIMATE structure with an
-    EXACT differential gate, unlike ``approx_distinct_stats`` whose HLL
-    internals are engine-private (rows-only)."""
-    toks = (
-        load_testdata(spark, sf_dir, "documents")
-        .select(F.explode(F.split(F.lower("text"), r"\s+")).alias("tok"))
-        .filter(F.col("tok") != "")
-        .transform(tracked_persist)
-    )
-    exact = (
-        toks.groupBy("tok")
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.desc("n"), "tok")
-        .limit(20)
-    )
-    seeds = spark.range(4).select(F.col("id").cast("int").alias("seed"))
-
-    def bucket(tok_col, seed_col):
-        return F.substring(
-            F.md5(
-                F.concat(
-                    F.lit("cms"), seed_col.cast("string"), F.lit(":"), tok_col
-                ).cast("binary")
-            ),
-            1,
-            3,
-        )
-
-    cells = (
-        toks.crossJoin(F.broadcast(seeds))
-        .groupBy("seed", bucket(F.col("tok"), F.col("seed")).alias("bucket"))
-        .agg(F.count("*").alias("cnt"))
-    )
-    probes = exact.crossJoin(F.broadcast(seeds)).select(
-        "tok", "n", "seed", bucket(F.col("tok"), F.col("seed")).alias("bucket")
-    )
-    return (
-        probes.join(F.broadcast(cells), ["seed", "bucket"])
-        .groupBy("tok", "n")
-        .agg(F.min("cnt").alias("cms_n"))
-        .select(
-            "tok",
-            F.col("n").cast("bigint"),
-            F.col("cms_n").cast("bigint"),
-            (F.col("cms_n") - F.col("n")).cast("bigint").alias("overcount"),
-        )
-        .orderBy(F.desc("n"), "tok")
-    )
-
-
-@register(
-    "events_distribution_drift",
-    """
-    WITH span AS (
-        SELECT (epoch_us(MIN(ts)) + epoch_us(MAX(ts))) // 2 AS mid FROM events
-    ),
-    ev AS (
-        SELECT value, CASE WHEN epoch_us(ts) < mid THEN 0 ELSE 1 END AS win
-        FROM events, span
-    ),
-    bounds AS (
-        SELECT quantile_cont(value, [0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9]) AS bs
-        FROM ev WHERE win = 0
-    ),
-    bucketed AS (
-        SELECT win, len(list_filter(bs, b -> b <= value)) AS bucket
-        FROM ev, bounds
-    ),
-    cnt AS (
-        SELECT bucket, win, COUNT(*) AS n FROM bucketed GROUP BY bucket, win
-    ),
-    tot AS (SELECT win, COUNT(*) AS t FROM bucketed GROUP BY win),
-    grid AS (SELECT unnest(range(0, 10)) AS bucket),
-    wide AS (
-        SELECT g.bucket,
-               coalesce(MAX(CASE WHEN c.win = 0 THEN c.n END), 0) AS n_a,
-               coalesce(MAX(CASE WHEN c.win = 1 THEN c.n END), 0) AS n_b
-        FROM grid g LEFT JOIN cnt c ON c.bucket = g.bucket
-        GROUP BY g.bucket
-    )
-    SELECT CAST(w.bucket AS INTEGER) AS bucket,
-           CAST(w.n_a AS BIGINT) AS n_a, CAST(w.n_b AS BIGINT) AS n_b,
-           CAST((1000 * w.n_a) // ta.t AS BIGINT) AS p_a_permille,
-           CAST((1000 * w.n_b) // tb.t AS BIGINT) AS p_b_permille,
-           CAST(abs((1000 * w.n_a) // ta.t - (1000 * w.n_b) // tb.t) AS BIGINT)
-               AS drift_permille
-    FROM wide w,
-         (SELECT t FROM tot WHERE win = 0) ta,
-         (SELECT t FROM tot WHERE win = 1) tb
-    ORDER BY bucket
-    """,
-)
-def events_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution-drift monitor between two time halves of the event
-    stream — the data-mixture drift check a training pipeline runs
-    between crawl snapshots (PSI's role, but as total-variation
-    distance in integer permille: PSI's ln() would hash-differ across
-    libm builds).  Reference window A = first half by event time;
-    deciles of A's value distribution (exact interpolating percentile —
-    the ``price_percentiles`` parity recipe) bucket BOTH windows, and
-    per-bucket share deltas expose where the distribution moved.
-
-    Scale shape: one scalar (min,max) aggregate broadcasts the time
-    midpoint; the decile boundary row broadcasts to the bucketing scan
-    (10-element literal-array filter per row, branch-free); histogram =
-    one map-side-combined groupBy over ≤ 20 (bucket, win) cells.  The
-    exact percentile over window A is the one sort — swap in
-    approx_percentile at 100 TB if boundary exactness stops mattering
-    before the sort does."""
-    ev0 = load_testdata(spark, sf_dir, "events").select("ts", "value")
-    span = ev0.agg(
-        F.expr("div(unix_micros(min(ts)) + unix_micros(max(ts)), 2)").alias("mid")
-    )
-    ev = (
-        ev0.crossJoin(F.broadcast(span))
-        .select(
-            "value",
-            F.when(F.expr("unix_micros(ts)") < F.col("mid"), 0)
-            .otherwise(1)
-            .alias("win"),
-        )
-        .transform(tracked_persist)
-    )
-    bounds = ev.filter(F.col("win") == 0).agg(
-        F.expr(
-            "percentile(value, array(0.1D,0.2D,0.3D,0.4D,0.5D,0.6D,0.7D,0.8D,0.9D))"
-        ).alias("bs")
-    )
-    bucketed = ev.crossJoin(F.broadcast(bounds)).select(
-        "win",
-        F.size(F.filter(F.col("bs"), lambda b: b <= F.col("value"))).alias("bucket"),
-    )
-    cnt = bucketed.groupBy("bucket", "win").agg(F.count("*").alias("n"))
-    tot = bucketed.groupBy("win").agg(F.count("*").alias("t"))
-    grid = spark.range(10).select(F.col("id").cast("int").alias("bucket"))
-    wide = (
-        grid.join(cnt, "bucket", "left")
-        .groupBy("bucket")
-        .agg(
-            F.coalesce(F.max(F.when(F.col("win") == 0, F.col("n"))), F.lit(0)).alias("n_a"),
-            F.coalesce(F.max(F.when(F.col("win") == 1, F.col("n"))), F.lit(0)).alias("n_b"),
-        )
-    )
-    ta = tot.filter(F.col("win") == 0).select(F.col("t").alias("ta"))
-    tb = tot.filter(F.col("win") == 1).select(F.col("t").alias("tb"))
-    return (
-        wide.crossJoin(F.broadcast(ta))
-        .crossJoin(F.broadcast(tb))
-        .select(
-            F.col("bucket").cast("int"),
-            F.col("n_a").cast("bigint"),
-            F.col("n_b").cast("bigint"),
-            F.expr("div(1000 * n_a, ta)").cast("bigint").alias("p_a_permille"),
-            F.expr("div(1000 * n_b, tb)").cast("bigint").alias("p_b_permille"),
-            F.abs(F.expr("div(1000 * n_a, ta) - div(1000 * n_b, tb)"))
-            .cast("bigint")
-            .alias("drift_permille"),
-        )
-        .orderBy("bucket")
-    )
-
-
 def _ivf_recall_oracle_sql() -> str:
     """DuckDB twin of ``ann_recall_ivf``: replay the trained coarse
     cells (``_kmeans_cells_cte``), rank exact cosine top-5 per query,
@@ -4700,354 +2180,6 @@ def ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id")
 
 
-def _bpe_encode_oracle_sql(rounds: int = 4, vocab: int = 2000) -> str:
-    """DuckDB twin of ``vocab_bpe_encode``: the shared training chain,
-    then the SAME per-round apply blocks over ALL distinct words (u
-    chain) — training is frequency-capped, encoding is not — and
-    per-doc token accounting."""
-    parts = [_bpe_train_ctes(rounds, vocab)]
-    parts.append(""",
-    u0 AS (SELECT word, freq,
-                  list_append(list_transform(generate_series(1, length(word)),
-                                             i -> substr(word, i, 1)), '</w>') AS syms
-           FROM wall)""")
-    for r in range(1, rounds + 1):
-        parts.append(_bpe_apply_sql(f"u{r - 1}", f"u{r}", f"m{r}", f"uf{r}"))
-    parts.append(rf""",
-    enc AS (SELECT word, len(syms) AS n_syms FROM u{rounds}),
-    tokd AS (SELECT doc_id,
-                    unnest(string_split_regex(lower(text), '\s+')) AS word
-             FROM documents),
-    tokd2 AS (SELECT * FROM tokd WHERE word <> '')
-    SELECT CAST(t.doc_id AS BIGINT) AS doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_words,
-           CAST(SUM(e.n_syms) AS BIGINT) AS n_bpe_tokens,
-           CAST((1000 * SUM(e.n_syms)) // COUNT(*) AS BIGINT)
-               AS bpe_per_word_permille
-    FROM tokd2 t JOIN enc e ON e.word = t.word
-    GROUP BY t.doc_id
-    ORDER BY doc_id
-    """)
-    return "".join(parts)
-
-
-@register("vocab_bpe_encode", _bpe_encode_oracle_sql())
-def vocab_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Apply the learned BPE merges to the corpus — the other half of
-    the tokenizer lifecycle (``vocab_bpe_merges`` trains; this
-    encodes): every DISTINCT word is folded through the 4 merges (train
-    is frequency-capped at 2000 forms, encoding is not — OOV forms
-    still merge wherever the learned pairs appear), then per document
-    the word stream joins the word→symbol-count table to give BPE token
-    counts and the tokens-per-word ratio a pipeline budgets context
-    length with.
-
-    Scale shape: encoding cost is the DISTINCT-WORD table (bounded,
-    Zipf), not the token stream — the stream only does a broadcast join
-    against word→count.  The per-word fold is the same ANSI-safe
-    F.aggregate as training."""
-    toks = (
-        load_testdata(spark, sf_dir, "documents")
-        .select("doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("word"))
-        .filter(F.col("word") != "")
-        .transform(tracked_persist)
-    )
-    merges = _bpe_train(spark, sf_dir, words=toks.select("word"))
-    allwords = toks.select("word").distinct().withColumn("syms", F.expr(_BPE_SYMS0))
-    for _, x, y, _, _ in merges:
-        allwords = allwords.withColumn("syms", _bpe_merge_fold(x, y))
-    enc = allwords.select("word", F.size("syms").alias("n_syms"))
-    # enc is one row per DISTINCT word — vocab-sized, grows ∝ corpus:
-    # plain equi-join on word (AQE still broadcasts it at small SF; at
-    # web scale it must shuffle against the token stream).
-    return (
-        toks.join(enc, "word")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").cast("bigint").alias("n_words"),
-            F.sum("n_syms").cast("bigint").alias("n_bpe_tokens"),
-        )
-        .select(
-            F.col("doc_id").cast("bigint"),
-            "n_words",
-            "n_bpe_tokens",
-            F.expr("div(1000 * n_bpe_tokens, n_words)")
-            .cast("bigint")
-            .alias("bpe_per_word_permille"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-@register(
-    "market_basket_pairs",
-    """
-    WITH items AS (
-        SELECT DISTINCT l_orderkey AS okey, l_partkey AS part FROM lineitem
-    ),
-    pairs AS (
-        SELECT a.part AS part_a, b.part AS part_b, COUNT(*) AS n_orders
-        FROM items a JOIN items b ON a.okey = b.okey AND a.part < b.part
-        GROUP BY a.part, b.part
-    )
-    SELECT CAST(part_a AS BIGINT) AS part_a, CAST(part_b AS BIGINT) AS part_b,
-           CAST(n_orders AS BIGINT) AS n_orders
-    FROM pairs
-    ORDER BY n_orders DESC, part_a, part_b
-    LIMIT 25
-    """,
-)
-def market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-basket pair mining: which part pairs co-occur in the most
-    orders.  The pair join is SELF-BOUNDED: it equi-joins on the order
-    key, so work is Σ basket² with baskets capped at ~7 lineitems — the
-    canonical "pair explosion that isn't" (contrast the unbounded
-    cross join this query replaces in naive form).  DISTINCT first so
-    duplicate part lines don't inflate counts; the top-25 is a
-    distributed TakeOrderedAndProject."""
-    items = (
-        load_testdata(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("okey"), F.col("l_partkey").alias("part"))
-        .distinct()
-    )
-    a = items.select("okey", F.col("part").alias("part_a"))
-    b = items.select(F.col("okey").alias("okey_b"), F.col("part").alias("part_b"))
-    return (
-        a.join(b, (F.col("okey") == F.col("okey_b")) & (F.col("part_a") < F.col("part_b")))
-        .groupBy("part_a", "part_b")
-        .agg(F.count("*").alias("n_orders"))
-        .select(
-            F.col("part_a").cast("bigint"),
-            F.col("part_b").cast("bigint"),
-            F.col("n_orders").cast("bigint"),
-        )
-        .orderBy(F.desc("n_orders"), "part_a", "part_b")
-        .limit(25)
-    )
-
-
-@register(
-    "events_transition_matrix",
-    """
-    WITH seq AS (
-        SELECT user_id, event_type,
-               lag(event_type) OVER (PARTITION BY user_id
-                   ORDER BY ts, event_id) AS prev
-        FROM events
-    ),
-    trans AS (
-        SELECT prev, event_type AS next, COUNT(*) AS n
-        FROM seq WHERE prev IS NOT NULL
-        GROUP BY prev, event_type
-    ),
-    tot AS (SELECT prev, SUM(n) AS t FROM trans GROUP BY prev)
-    SELECT tr.prev AS prev, tr.next AS next, CAST(tr.n AS BIGINT) AS n,
-           CAST((1000 * tr.n) // tot.t AS BIGINT) AS p_permille
-    FROM trans tr JOIN tot ON tot.prev = tr.prev
-    ORDER BY tr.prev, tr.next
-    """,
-)
-def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition matrix over per-user event
-    sequences — the session-flow fingerprint (what follows a `view`?
-    how often does `error` repeat?).  One lag window per user (ties
-    broken by event_id so the sequence is deterministic), one bounded
-    groupBy (|event types|² cells), integer permille probabilities.
-
-    Scale shape: the window partitions on user_id — the natural
-    key-bounded unit — and everything after is a ≤25-row aggregate."""
-    ev = load_testdata(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "event_type", F.lag("event_type").over(w).alias("prev")
-    ).filter(F.col("prev").isNotNull())
-    trans = seq.groupBy("prev", F.col("event_type").alias("next")).agg(
-        F.count("*").alias("n")
-    )
-    tot = trans.groupBy("prev").agg(F.sum("n").alias("t"))
-    return (
-        trans.join(tot, "prev")
-        .select(
-            "prev",
-            "next",
-            F.col("n").cast("bigint"),
-            F.expr("div(1000 * n, t)").cast("bigint").alias("p_permille"),
-        )
-        .orderBy("prev", "next")
-    )
-
-
-@register(
-    "dedup_lsh_recall_sampled",
-    f"""
-    WITH {_CORPUS_SQL},
-    samp AS (
-        SELECT * FROM corpus
-        WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN ('0','1','2','3')
-    ),
-    ssh AS (
-        SELECT doc_id, unnest(list_distinct(
-            CASE WHEN len(toks) >= 3
-                 THEN list_transform(generate_series(1, len(toks)-2),
-                      i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))
-                 ELSE []::VARCHAR[] END)) AS sh
-        FROM (SELECT doc_id, string_split_regex(text, '\\s+') AS toks FROM samp)
-    ),
-    sz AS (SELECT doc_id, COUNT(*) AS n FROM ssh GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-        FROM ssh a JOIN ssh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    ),
-    truth AS (
-        SELECT i.id_a, i.id_b
-        FROM inter i JOIN sz sa ON sa.doc_id = i.id_a
-                     JOIN sz sb ON sb.doc_id = i.id_b
-        WHERE (1000 * i.c) // (sa.n + sb.n - i.c) >= 500
-    ),
-    {_SHINGLE_SQL},
-    seeds AS (SELECT unnest(generate_series(0, 7)) AS seed),
-    hashed AS (
-        SELECT doc_id, seed, md5(CAST(seed AS VARCHAR) || ':' || sh) AS h
-        FROM sh CROSS JOIN seeds
-    ),
-    sig AS (
-        SELECT doc_id,
-               {', '.join(f"MIN(CASE WHEN seed = {i} THEN h END) AS h{i}" for i in range(8))}
-        FROM hashed GROUP BY doc_id
-    ),
-    bands AS (
-        SELECT doc_id, 0 AS band_idx, md5(concat_ws('|', h0, h1, h2, h3)) AS band_sig FROM sig
-        UNION ALL
-        SELECT doc_id, 1 AS band_idx, md5(concat_ws('|', h4, h5, h6, h7)) AS band_sig FROM sig
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b ON a.band_idx = b.band_idx
-            AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id
-    ),
-    hit AS (
-        SELECT t.id_a FROM truth t JOIN cand c
-            ON c.id_a = t.id_a AND c.id_b = t.id_b
-    )
-    SELECT CAST((SELECT COUNT(*) FROM samp) AS BIGINT) AS n_docs_sampled,
-           CAST((SELECT COUNT(*) FROM truth) AS BIGINT) AS n_truth_sampled,
-           CAST((SELECT COUNT(*) FROM hit) AS BIGINT) AS n_hit_sampled,
-           CAST((1000 * (SELECT COUNT(*) FROM hit))
-                // greatest((SELECT COUNT(*) FROM truth), 1) AS BIGINT)
-               AS recall_est_permille
-    """,
-)
-def dedup_lsh_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SAMPLED-truth LSH recall estimator: recall of the 2-band ×
-    4-hash MinHash-LSH candidate generator against shingle-Jaccard ≥ 0.5
-    ground truth.  Exact truth is an all-pairs shingle-Jaccard join
-    (Σ bucket², the expensive side); here truth is computed only over a
-    deterministic ~25% doc sample (first md5 hex nibble of doc_id ∈
-    {0..3}), so the truth join cost drops ~p² ≈ 16× while the LSH
-    candidate side still runs over the FULL corpus exactly as production
-    would.  Recall of the banding is then estimated as |sampled truth ∩
-    candidates| / |sampled truth| — unbiased because banding hits are
-    independent of the doc-id hash used for sampling.  At sf0.01 the
-    estimator lands within a few permille of the exact recall (NOTES.md
-    records the delta).
-
-    Scale shape: sampling is a pushed-down filter on the truth side
-    only; at 100 TB this is the difference between an impossible
-    all-pairs join and a bounded audit job."""
-    corpus = _dedup_corpus(spark, sf_dir)
-    samp = corpus.filter(
-        F.substring(
-            F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 1
-        ).isin("0", "1", "2", "3")
-    )
-    truth = D.jaccard_pairs(samp, "doc_id", "text", min_permille=500).select(
-        "id_a", "id_b"
-    )
-    bands = D.minhash_bands(corpus, "doc_id", "text", n_hashes=8, band_size=4)
-    cand = D.lsh_candidate_pairs(bands, "doc_id").select("id_a", "id_b").distinct()
-    hit = truth.join(cand, ["id_a", "id_b"])
-    counts = (
-        samp.agg(F.count("*").alias("n_docs_sampled"))
-        .crossJoin(truth.agg(F.count("*").alias("n_truth_sampled")))
-        .crossJoin(hit.agg(F.count("*").alias("n_hit_sampled")))
-    )
-    return counts.select(
-        F.col("n_docs_sampled").cast("bigint"),
-        F.col("n_truth_sampled").cast("bigint"),
-        F.col("n_hit_sampled").cast("bigint"),
-        F.expr("div(1000 * n_hit_sampled, greatest(n_truth_sampled, 1))")
-        .cast("bigint")
-        .alias("recall_est_permille"),
-    )
-
-
-@register(
-    "events_cohort_retention",
-    """
-    WITH ue AS (
-        SELECT user_id,
-               (CAST(ts AS DATE) - DATE '1970-01-01') // 7 AS wk
-        FROM events
-    ),
-    first_wk AS (SELECT user_id, MIN(wk) AS cohort_wk FROM ue GROUP BY user_id),
-    active AS (SELECT DISTINCT u.user_id, f.cohort_wk, u.wk - f.cohort_wk AS offs
-               FROM ue u JOIN first_wk f ON f.user_id = u.user_id),
-    cohort_size AS (
-        SELECT cohort_wk, COUNT(*) AS n_cohort FROM first_wk GROUP BY cohort_wk
-    ),
-    ret AS (
-        SELECT cohort_wk, offs, COUNT(*) AS n_active
-        FROM active GROUP BY cohort_wk, offs
-    )
-    SELECT CAST(r.cohort_wk AS BIGINT) AS cohort_wk,
-           CAST(r.offs AS BIGINT) AS week_offset,
-           CAST(r.n_active AS BIGINT) AS n_active,
-           CAST(cs.n_cohort AS BIGINT) AS n_cohort,
-           CAST((1000 * r.n_active) // cs.n_cohort AS BIGINT) AS retention_permille
-    FROM ret r JOIN cohort_size cs ON cs.cohort_wk = r.cohort_wk
-    ORDER BY cohort_wk, week_offset
-    """,
-)
-def events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly cohort retention: users grouped by their first-activity
-    week, then per (cohort, week-offset) the share still active — the
-    standard growth-analytics triangle.  Weeks are epoch-day // 7
-    (integer, calendar-free, so both engines agree without timezone or
-    ISO-week semantics entering the picture).
-
-    Scale shape: first-activity via one groupBy(user) MIN; activity
-    grid via DISTINCT on (user, week); everything downstream is
-    cohort-cardinality-bounded.  The offset-0 row of every cohort is
-    1000 permille by construction — a built-in sanity check."""
-    ev = load_testdata(spark, sf_dir, "events")
-    ue = ev.select(
-        "user_id",
-        F.expr("div(datediff(to_date(ts), to_date('1970-01-01')), 7)").alias("wk"),
-    )
-    first_wk = ue.groupBy("user_id").agg(F.min("wk").alias("cohort_wk"))
-    active = (
-        ue.join(first_wk, "user_id")
-        .select("user_id", "cohort_wk", (F.col("wk") - F.col("cohort_wk")).alias("offs"))
-        .distinct()
-    )
-    cohort_size = first_wk.groupBy("cohort_wk").agg(F.count("*").alias("n_cohort"))
-    ret = active.groupBy("cohort_wk", "offs").agg(F.count("*").alias("n_active"))
-    return (
-        ret.join(cohort_size, "cohort_wk")
-        .select(
-            F.col("cohort_wk").cast("bigint"),
-            F.col("offs").cast("bigint").alias("week_offset"),
-            F.col("n_active").cast("bigint"),
-            F.col("n_cohort").cast("bigint"),
-            F.expr("div(1000 * n_active, n_cohort)")
-            .cast("bigint")
-            .alias("retention_permille"),
-        )
-        .orderBy("cohort_wk", "week_offset")
-    )
-
-
 @register(
     "parts_pareto_frontier",
     """
@@ -5078,8 +2210,8 @@ def parts_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one groupBy(price), then the prefix-max runs as a
     TWO-PHASE distributed sweep — range-partition the price-domain
     table, running max per partition via a window partitioned on
-    ``spark_partition_id()`` (NOT a global no-partition window, the
-    vocab_top_tokens scale hazard from round 2), and stitch partitions
+    ``spark_partition_id()`` (NOT a global no-partition window, which
+    sorts every row in one task), and stitch partitions
     with a driver-side prefix over ≤ #partitions boundary maxima
     broadcast back.  A broadcast join returns to the part rows — no
     pair join anywhere.  Algorithm lives in
@@ -5098,537 +2230,6 @@ def parts_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sz").cast("int"),
         )
         .orderBy("price", "p_partkey")
-    )
-
-
-@register(
-    "dedup_graph_triangles",
-    f"""
-    WITH {_CORPUS_SQL}, {_SHINGLE_SQL},
-    seeds AS (SELECT unnest(generate_series(0, 7)) AS seed),
-    hashed AS (
-        SELECT doc_id, seed, md5(CAST(seed AS VARCHAR) || ':' || sh) AS h
-        FROM sh CROSS JOIN seeds
-    ),
-    sig AS (
-        SELECT doc_id,
-               {', '.join(f"MIN(CASE WHEN seed = {i} THEN h END) AS h{i}" for i in range(8))}
-        FROM hashed GROUP BY doc_id
-    ),
-    bands AS (
-        SELECT doc_id, 0 AS band_idx, md5(concat_ws('|', h0, h1, h2, h3)) AS band_sig FROM sig
-        UNION ALL
-        SELECT doc_id, 1 AS band_idx, md5(concat_ws('|', h4, h5, h6, h7)) AS band_sig FROM sig
-    ),
-    e AS (
-        SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
-        FROM bands a JOIN bands b ON a.band_idx = b.band_idx
-            AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id
-    ),
-    deg AS (
-        SELECT node, COUNT(*) AS d FROM (
-            SELECT u AS node FROM e UNION ALL SELECT v FROM e
-        ) GROUP BY node
-    ),
-    wedges AS (SELECT SUM(d * (d - 1) // 2) AS w FROM deg),
-    tri AS (
-        SELECT COUNT(*) AS t
-        FROM e e1 JOIN e e2 ON e2.u = e1.v JOIN e e3
-            ON e3.u = e1.u AND e3.v = e2.v
-    )
-    SELECT CAST((SELECT COUNT(*) FROM e) AS BIGINT) AS n_edges,
-           CAST((SELECT w FROM wedges) AS BIGINT) AS n_wedges,
-           CAST((SELECT t FROM tri) AS BIGINT) AS n_triangles,
-           CAST((3000 * (SELECT t FROM tri))
-                // greatest((SELECT w FROM wedges), 1) AS BIGINT)
-               AS clustering_permille
-    """,
-)
-def dedup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle count + global clustering coefficient of the near-dup
-    graph — the structural health check on a dedup candidate graph (a
-    high coefficient means candidates form tight clone clusters, as
-    duplication should look; a low one means the banding is stitching
-    unrelated docs).  Distributed shape: edges oriented low-id→high-id
-    so each triangle (a<b<c) is found exactly once by one wedge join
-    (e(a,b) ⋈ e(b,c)) closed by one edge probe (a,c) — the classic
-    MapReduce triangle algorithm (Suri & Vassilvitskii 2011), whose
-    cost is Σ deg² wedges, NOT all vertex triples; degree is bounded by
-    duplicate-cluster size here.  Wedge denominator Σ C(deg,2) comes
-    from one degree aggregate."""
-    corpus = _dedup_corpus(spark, sf_dir)
-    bands = D.minhash_bands(corpus, "doc_id", "text", n_hashes=8, band_size=4)
-    e = (
-        D.lsh_candidate_pairs(bands, "doc_id")
-        .select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .distinct()
-        .transform(tracked_persist)
-    )
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-    )
-    wedges = deg.agg(
-        F.sum(F.expr("div(d * (d - 1), 2)")).alias("w")
-    )
-    e1 = e.select(F.col("u").alias("a"), F.col("v").alias("b"))
-    e2 = e.select(F.col("u").alias("b2"), F.col("v").alias("c"))
-    e3 = e.select(F.col("u").alias("a3"), F.col("v").alias("c3"))
-    tri = (
-        e1.join(e2, F.col("b") == F.col("b2"))
-        .join(e3, (F.col("a") == F.col("a3")) & (F.col("c") == F.col("c3")))
-        .agg(F.count("*").alias("t"))
-    )
-    out = (
-        e.agg(F.count("*").alias("n_edges"))
-        .crossJoin(F.broadcast(wedges))
-        .crossJoin(F.broadcast(tri))
-    )
-    return out.select(
-        F.col("n_edges").cast("bigint"),
-        F.col("w").cast("bigint").alias("n_wedges"),
-        F.col("t").cast("bigint").alias("n_triangles"),
-        F.expr("div(3000 * t, greatest(w, 1))")
-        .cast("bigint")
-        .alias("clustering_permille"),
-    )
-
-
-_PROFILE_COLS = ["l_orderkey", "l_suppkey", "l_quantity", "l_returnflag", "l_shipdate"]
-
-
-@register(
-    "profile_lineitem_columns",
-    "\n    UNION ALL ".join(
-        f"""SELECT '{c}' AS col,
-           CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(COUNT(*) - COUNT({c}) AS BIGINT) AS n_null,
-           CAST(COUNT(DISTINCT {c}) AS BIGINT) AS n_distinct,
-           {"strftime(MIN(" + c + "), '%Y-%m-%d %H:%M:%S')" if c == "l_shipdate" else "CAST(MIN(" + c + ") AS VARCHAR)"} AS min_val,
-           {"strftime(MAX(" + c + "), '%Y-%m-%d %H:%M:%S')" if c == "l_shipdate" else "CAST(MAX(" + c + ") AS VARCHAR)"} AS max_val
-    FROM lineitem"""
-        for c in _PROFILE_COLS
-    )
-    + "\n    ORDER BY col",
-)
-def profile_lineitem_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column-profiling table (the Deequ/Great-Expectations profile
-    stage): per column — row count, nulls, distinct count, min/max
-    stringified — the summary a pipeline records before accepting a new
-    data drop.  One aggregate pass PER COLUMN over a cached scan; at
-    100 TB you'd fuse them into one pass with approx_count_distinct,
-    trading exactness for a single scan (the exact distinct forces one
-    shuffle per column — that cost is the point of recording it here).
-
-    Timestamp min/max are stringified through a fixed format on both
-    engines so the hash gate stays timezone-proof."""
-    li = load_testdata(spark, sf_dir, "lineitem").transform(tracked_persist)
-    def stringify(agg, c):
-        if c == "l_shipdate":
-            return F.date_format(agg, "yyyy-MM-dd HH:mm:ss")
-        return agg.cast("string")
-
-    outs = []
-    for c in _PROFILE_COLS:
-        col = F.col(c)
-        outs.append(
-            li.agg(
-                F.lit(c).alias("col"),
-                F.count("*").cast("bigint").alias("n_rows"),
-                (F.count("*") - F.count(col)).cast("bigint").alias("n_null"),
-                F.countDistinct(col).cast("bigint").alias("n_distinct"),
-                stringify(F.min(col), c).alias("min_val"),
-                stringify(F.max(col), c).alias("max_val"),
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out.orderBy("col")
-
-
-@register(
-    "quality_functional_dependencies",
-    """
-    WITH fd1 AS (
-        SELECT CAST(n_nationkey AS VARCHAR) AS lhs_v,
-               CAST(n_regionkey AS VARCHAR) AS rhs_v FROM nation
-    ),
-    fd2 AS (
-        SELECT CAST(o_custkey AS VARCHAR), CAST(o_orderpriority AS VARCHAR)
-        FROM orders
-    ),
-    fd3 AS (
-        SELECT CAST(l_orderkey AS VARCHAR), CAST(l_shipdate AS VARCHAR)
-        FROM lineitem
-    ),
-    stats AS (
-        SELECT 'nation: nationkey->regionkey' AS fd,
-               COUNT(*) AS n_lhs,
-               SUM(CASE WHEN d > 1 THEN 1 ELSE 0 END) AS n_violating
-        FROM (SELECT lhs_v, COUNT(DISTINCT rhs_v) AS d FROM fd1 GROUP BY lhs_v)
-        UNION ALL
-        SELECT 'orders: custkey->orderpriority',
-               COUNT(*), SUM(CASE WHEN d > 1 THEN 1 ELSE 0 END)
-        FROM (SELECT lhs_v, COUNT(DISTINCT rhs_v) AS d FROM fd2 t(lhs_v, rhs_v) GROUP BY lhs_v)
-        UNION ALL
-        SELECT 'lineitem: orderkey->shipdate',
-               COUNT(*), SUM(CASE WHEN d > 1 THEN 1 ELSE 0 END)
-        FROM (SELECT lhs_v, COUNT(DISTINCT rhs_v) AS d FROM fd3 t(lhs_v, rhs_v) GROUP BY lhs_v)
-    )
-    SELECT fd, CAST(n_lhs AS BIGINT) AS n_lhs,
-           CAST(n_violating AS BIGINT) AS n_violating,
-           CAST((1000 * n_violating) // n_lhs AS BIGINT) AS violation_permille
-    FROM stats
-    ORDER BY fd
-    """,
-)
-def quality_functional_dependencies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Functional-dependency conformance check (the data-profiling /
-    Deequ `hasUniqueness`-style rule): for each declared A→B, count
-    left-hand values mapping to more than one distinct B.  nationkey→
-    regionkey should hold exactly (a real FK); custkey→orderpriority
-    and orderkey→shipdate are deliberately non-FDs whose violation
-    rates profile the data's shape.
-
-    Scale shape: per FD one groupBy(lhs) with a distinct-count — the
-    same cost class as any distinct aggregate, with map-side partial
-    aggregation; no joins."""
-
-    def fd(df, name, lhs, rhs):
-        g = (
-            df.select(
-                F.col(lhs).cast("string").alias("lhs_v"),
-                F.col(rhs).cast("string").alias("rhs_v"),
-            )
-            .groupBy("lhs_v")
-            .agg(F.countDistinct("rhs_v").alias("d"))
-        )
-        return g.agg(
-            F.lit(name).alias("fd"),
-            F.count("*").cast("bigint").alias("n_lhs"),
-            F.sum(F.when(F.col("d") > 1, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_violating"),
-        )
-
-    nation = load_testdata(spark, sf_dir, "nation")
-    orders = load_testdata(spark, sf_dir, "orders")
-    li = load_testdata(spark, sf_dir, "lineitem")
-    out = (
-        fd(nation, "nation: nationkey->regionkey", "n_nationkey", "n_regionkey")
-        .unionByName(fd(orders, "orders: custkey->orderpriority", "o_custkey", "o_orderpriority"))
-        .unionByName(fd(li, "lineitem: orderkey->shipdate", "l_orderkey", "l_shipdate"))
-    )
-    return out.select(
-        "fd",
-        "n_lhs",
-        "n_violating",
-        F.expr("div(1000 * n_violating, n_lhs)").cast("bigint").alias("violation_permille"),
-    ).orderBy("fd")
-
-
-@register(
-    "fuzzy_name_pairs_symspell",
-    """
-    WITH n AS (SELECT c_custkey AS id, c_name AS nm FROM customer)
-    SELECT CAST(a.id AS BIGINT) AS id_a, CAST(b.id AS BIGINT) AS id_b,
-           CAST(levenshtein(a.nm, b.nm) AS BIGINT) AS edit_distance
-    FROM n a JOIN n b ON a.id < b.id
-    WHERE levenshtein(a.nm, b.nm) <= 1
-    ORDER BY id_a, id_b
-    """,
-)
-def fuzzy_name_pairs_symspell(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edit-distance ≤ 1 record pairs via SYMMETRIC DELETE (SymSpell):
-    each name generates itself plus every single-character deletion;
-    two names within edit distance 1 MUST share a variant (substitution
-    ⇒ both delete the differing position; insert/delete ⇒ one's
-    deletion equals the other), so candidates come from an EQUI-join on
-    the variant string and only candidates pay a ``levenshtein``
-    verification.  The ORACLE runs the O(n²) levenshtein join this
-    replaces — the fuzzy-matching member of the never-all-pairs family.
-
-    Scale shape: variants multiply rows by (len+1) — constant per
-    record — and the variant join is Σ bucket² like every banding
-    join; variant identity travels as an xxhash64 LONG and the join
-    sides carry bare ids.  The candidate→name rejoin is a plain
-    equi-join with NO mandatory broadcast hint (round-3 review flag):
-    at sf0.1 a forced ``F.broadcast(names)`` measured marginally
-    faster, but the hint is a hard directive — at 100× the names
-    relation exceeds any broadcast threshold and would OOM the driver
-    instead of degrading to a shuffle join.  AQE's size-based strategy
-    picks broadcast when the relation fits and shuffles when it
-    doesn't, which is the behaviour a 100 TB run needs.  Both engines
-    implement the same standard
-    Levenshtein, so the verified distances hash-match."""
-    names = (
-        load_testdata(spark, sf_dir, "customer")
-        .select(F.col("c_custkey").alias("id"), F.col("c_name").alias("nm"))
-        .transform(tracked_persist)
-    )
-    variants = names.select(
-        "id",
-        F.expr(
-            "explode(array_union(array(xxhash64(nm)), transform(sequence(1, char_length(nm)),"
-            " i -> xxhash64(concat(substring(nm, 1, i - 1),"
-            " substring(nm, i + 1, char_length(nm) - i))))))"
-        ).alias("h"),
-    )
-    a = variants.select(F.col("id").alias("id_a"), "h")
-    b = variants.select(F.col("id").alias("id_b"), "h")
-    cand = (
-        a.join(b, ["h"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    na = names.select(F.col("id").alias("id_a"), F.col("nm").alias("nm_a"))
-    nb = names.select(F.col("id").alias("id_b"), F.col("nm").alias("nm_b"))
-    return (
-        cand.join(na, "id_a")
-        .join(nb, "id_b")
-        .withColumn("edit_distance", F.levenshtein("nm_a", "nm_b"))
-        .filter(F.col("edit_distance") <= 1)
-        .select(
-            F.col("id_a").cast("bigint"),
-            F.col("id_b").cast("bigint"),
-            F.col("edit_distance").cast("bigint"),
-        )
-        .orderBy("id_a", "id_b")
-    )
-
-
-@register(
-    "pipeline_data_mixture_epochs",
-    r"""
-    WITH s AS (
-        SELECT source, COUNT(*) AS n_docs,
-               SUM(len(string_split_regex(text, '\s+'))) AS n_tokens
-        FROM documents GROUP BY source
-    ),
-    t AS (SELECT *, CAST(floor(sqrt(n_tokens)) AS BIGINT) AS sq FROM s),
-    tot AS (SELECT SUM(sq) AS ssum FROM t)
-    SELECT source,
-           CAST(n_docs AS BIGINT) AS n_docs,
-           CAST(n_tokens AS BIGINT) AS n_tokens,
-           CAST((1000 * sq) // ssum AS BIGINT) AS weight_permille,
-           CAST((1000000 * sq) // ssum AS BIGINT) AS target_tokens,
-           CAST((1000 * ((1000000 * sq) // ssum)) // n_tokens AS BIGINT)
-               AS epochs_milli
-    FROM t, tot ORDER BY source
-    """,
-)
-def pipeline_data_mixture_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-mixture planner — the step that turns per-source corpus
-    stats into sampling weights and repeat factors (epochs) for a fixed
-    token budget, the way LLM training mixtures are specified (LLaMA's
-    per-source epochs table; temperature-weighted sampling).  Weights
-    here are temperature-T=2 (∝ √tokens, integer-floored so both
-    engines agree bit-for-bit): upweights small sources, downweights
-    the dominant one.  ``epochs_milli`` > 1000 means the source is seen
-    more than once for a 1M-token budget — the over-sampling knob.
-
-    Scale shape: one groupBy(source) token count (map-side combined),
-    one single-row total broadcast back — nothing scales with corpus
-    size but the first aggregate."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    s = docs.groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum(F.size(F.split("text", X.TOKEN_RE))).cast("bigint").alias("n_tokens"),
-    )
-    t = s.withColumn("sq", F.floor(F.sqrt(F.col("n_tokens"))).cast("bigint"))
-    tot = t.agg(F.sum("sq").alias("ssum"))
-    return (
-        t.crossJoin(F.broadcast(tot))
-        .select(
-            "source",
-            "n_docs",
-            "n_tokens",
-            F.expr("div(1000 * sq, ssum)").cast("bigint").alias("weight_permille"),
-            F.expr("div(1000000 * sq, ssum)").cast("bigint").alias("target_tokens"),
-            F.expr("div(1000 * div(1000000 * sq, ssum), n_tokens)")
-            .cast("bigint")
-            .alias("epochs_milli"),
-        )
-        .orderBy("source")
-    )
-
-
-def _gopher_doc_metrics(docs: DataFrame) -> DataFrame:
-    """Per-doc Gopher rule metrics + conjunctive ``passes`` flag —
-    shared by the calibration query
-    (one scan, all metrics from two split() arrays bound per row)."""
-    t = docs.select(
-        "doc_id",
-        F.split("text", X.TOKEN_RE).alias("toks"),
-        F.split("text", "\n").alias("lines"),
-    )
-    n = F.size("toks")
-    nl = F.size("lines")
-    m = t.select(
-        "doc_id",
-        n.cast("bigint").alias("n_tokens"),
-        F.when(
-            n > 0,
-            F.expr(
-                "div(10 * aggregate(transform(toks, x -> length(x)), 0L,"
-                " (a, x) -> a + x), size(toks))"
-            ),
-        )
-        .otherwise(0)
-        .cast("bigint")
-        .alias("mean_len_deci"),
-        F.when(
-            n > 0,
-            F.expr(
-                "div(1000 * size(filter(toks, x -> contains(x, '#')"
-                " OR contains(x, '...'))), size(toks))"
-            ),
-        )
-        .otherwise(0)
-        .cast("bigint")
-        .alias("symbol_permille"),
-        F.when(
-            nl > 0,
-            F.expr(
-                "div(1000 * size(filter(lines, x -> startswith(x, '-')"
-                " OR startswith(x, '*'))), size(lines))"
-            ),
-        )
-        .otherwise(0)
-        .cast("bigint")
-        .alias("bullet_permille"),
-        F.when(
-            nl > 0,
-            F.expr(
-                "div(1000 * size(filter(lines, x -> endswith(x, '...'))),"
-                " size(lines))"
-            ),
-        )
-        .otherwise(0)
-        .cast("bigint")
-        .alias("ellipsis_permille"),
-        F.size(
-            F.array_distinct(F.filter(F.col("toks"), lambda x: x.isin(*X.EN_STOPWORDS)))
-        )
-        .cast("bigint")
-        .alias("n_stop_distinct"),
-    )
-    return m.select(
-        "doc_id",
-        "n_tokens",
-        "mean_len_deci",
-        "symbol_permille",
-        "bullet_permille",
-        "ellipsis_permille",
-        "n_stop_distinct",
-        (
-            F.col("n_tokens").between(50, 100000)
-            & F.col("mean_len_deci").between(30, 100)
-            & (F.col("symbol_permille") < 100)
-            & (F.col("bullet_permille") < 900)
-            & (F.col("ellipsis_permille") < 300)
-            & (F.col("n_stop_distinct") >= 2)
-        ).alias("passes"),
-    )
-
-
-@register(
-    "similarity_matryoshka_agreement",
-    """
-    WITH n AS (
-        SELECT vec_id, embedding::DOUBLE[] AS v,
-               sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-                   AS nrm,
-               (embedding::DOUBLE[])[1:16] AS tv,
-               greatest(sqrt(list_dot_product((embedding::DOUBLE[])[1:16],
-                                              (embedding::DOUBLE[])[1:16])),
-                        1e-12) AS tnrm
-        FROM embeddings
-    ),
-    full_rk AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                   ORDER BY list_dot_product(q.v, c.v) / (q.nrm * c.nrm) DESC,
-                            c.vec_id) AS rk
-        FROM n q JOIN n c ON c.vec_id != q.vec_id
-        WHERE q.vec_id < 10
-    ),
-    trunc_rk AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                   ORDER BY list_dot_product(q.tv, c.tv) / (q.tnrm * c.tnrm) DESC,
-                            c.vec_id) AS rk
-        FROM n q JOIN n c ON c.vec_id != q.vec_id
-        WHERE q.vec_id < 10
-    )
-    SELECT CAST(f.query_id AS BIGINT) AS query_id,
-           CAST(COUNT(t.neighbor_id) AS BIGINT) AS overlap_at_5
-    FROM full_rk f
-    LEFT JOIN trunc_rk t ON t.query_id = f.query_id
-        AND t.neighbor_id = f.neighbor_id AND t.rk <= 5
-    WHERE f.rk <= 5
-    GROUP BY f.query_id
-    ORDER BY query_id
-    """,
-)
-def similarity_matryoshka_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matryoshka-style dimension truncation audit (Kusupati et al.
-    2022): rank the corpus by cosine twice — full 64-dim embeddings vs
-    the first-16-dims prefix renormalized — and report, per query, how
-    many of the full top-5 the truncated top-5 retains.  This is the
-    measurement that decides whether a 4× cheaper prefix index is good
-    enough as a first-stage retriever.
-
-    Scale shape: both rankings are the bounded-query broadcast scan of
-    ``similarity_cosine_topk`` (queries broadcast, corpus scanned once
-    per ranking; the truncated pass reads 4× fewer floats); the
-    agreement join is per-query top-5 — constant size."""
-    emb = S.with_norm(_fan_out(load_testdata(spark, sf_dir, "embeddings")))
-    n = emb.select(
-        "vec_id",
-        F.col("_v").alias("v"),
-        F.col("_norm").alias("nrm"),
-        F.slice(F.col("_v"), 1, 16).alias("tv"),
-    ).withColumn(
-        "tnrm",
-        F.greatest(F.sqrt(S.dot(F.col("tv"), F.col("tv"))), F.lit(1e-12)),
-    ).transform(tracked_persist)
-    q = n.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-        F.col("tv").alias("qtv"),
-        F.col("tnrm").alias("qtn"),
-    )
-    pairs = n.join(F.broadcast(q), F.col("query_id") != F.col("vec_id"))
-    wf = Window.partitionBy("query_id").orderBy(
-        (S.dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm"))).desc(),
-        F.col("vec_id"),
-    )
-    wt = Window.partitionBy("query_id").orderBy(
-        (S.dot(F.col("qtv"), F.col("tv")) / (F.col("qtn") * F.col("tnrm"))).desc(),
-        F.col("vec_id"),
-    )
-    ranked = pairs.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.row_number().over(wf).alias("frk"),
-        F.row_number().over(wt).alias("trk"),
-    )
-    return (
-        ranked.filter(F.col("frk") <= 5)
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.when(F.col("trk") <= 5, 1).otherwise(0))
-            .cast("bigint")
-            .alias("overlap_at_5")
-        )
-        .select(F.col("query_id").cast("bigint"), "overlap_at_5")
-        .orderBy("query_id")
     )
 
 
@@ -5710,233 +2311,11 @@ def embedding_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "events_robust_anomalies_mad",
-    """
-    WITH med AS (
-        SELECT event_type, quantile_cont(value, 0.5) AS med
-        FROM events GROUP BY event_type
-    ),
-    dev AS (
-        SELECT e.event_type, abs(e.value - m.med) AS ad
-        FROM events e JOIN med m ON m.event_type = e.event_type
-    ),
-    mad AS (
-        SELECT event_type, quantile_cont(ad, 0.5) AS mad
-        FROM dev GROUP BY event_type
-    )
-    SELECT d.event_type,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(CAST(ROUND(ANY_VALUE(m.med), 6) AS DECIMAL(18,6)) AS DOUBLE) AS median_value,
-           CAST(CAST(ROUND(ANY_VALUE(md.mad), 6) AS DECIMAL(18,6)) AS DOUBLE) AS mad_value,
-           CAST(SUM(CASE WHEN 10000 * d.ad > 44478 * md.mad THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_outliers
-    FROM dev d
-    JOIN med m ON m.event_type = d.event_type
-    JOIN mad md ON md.event_type = d.event_type
-    GROUP BY d.event_type
-    ORDER BY d.event_type
-    """,
-)
-def events_robust_anomalies_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust anomaly counts via Median Absolute Deviation — the
-    outlier rule that survives the outliers themselves (mean/stddev,
-    as in ``events_value_anomalies``, is dragged by the very anomalies
-    it hunts; median/MAD has a 50% breakdown point).  An event is
-    anomalous when |x − median| > 3·1.4826·MAD, evaluated as the exact
-    cross-multiplied integer-scaled comparison 10000·|x−med| >
-    44478·MAD so no division enters the predicate.  Exact interpolating
-    percentiles on both engines (bitwise-identical — the
-    ``price_percentiles`` precedent).
-
-    Scale shape: two grouped exact-median passes (per-group
-    ObjectHashAggregate, the unavoidable cost of exact medians — the
-    approximate path is ``percentile_approx`` as in
-    ``approx_distinct_stats``) with a broadcast median join between
-    them; the final count is one map-side-combinable aggregate."""
-    ev = load_testdata(spark, sf_dir, "events").select("event_type", "value")
-    med = ev.groupBy("event_type").agg(
-        F.expr("percentile(value, 0.5)").alias("med")
-    )
-    dev = ev.join(F.broadcast(med), "event_type").select(
-        "event_type", "med", F.abs(F.col("value") - F.col("med")).alias("ad")
-    ).transform(tracked_persist)
-    mad = dev.groupBy("event_type").agg(F.expr("percentile(ad, 0.5)").alias("mad"))
-    return (
-        dev.join(F.broadcast(mad), "event_type")
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            F.round(F.first("med"), 6)
-            .cast("decimal(18,6)")
-            .cast("double")
-            .alias("median_value"),
-            F.round(F.first("mad"), 6)
-            .cast("decimal(18,6)")
-            .cast("double")
-            .alias("mad_value"),
-            F.sum(
-                F.when(10000 * F.col("ad") > 44478 * F.col("mad"), 1).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_outliers"),
-        )
-        .orderBy("event_type")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Round-5 session-3 additions: CCNet perplexity buckets, mergeable
 # bottom-k quantile sketch, deterministic global training shuffle,
 # curriculum-order phases.
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "text_ccnet_perplexity_buckets",
-    r"""
-    WITH lowered AS (SELECT doc_id, lang, lower(text) AS t FROM documents),
-    pos AS (
-        SELECT doc_id, lang, t,
-               unnest(generate_series(1, greatest(length(t) - 2, 0))) AS i
-        FROM lowered WHERE length(t) >= 3
-    ),
-    tg AS (SELECT doc_id, lang, substr(t, i, 3) AS tg FROM pos),
-    counts AS (SELECT tg, COUNT(*) AS n FROM tg GROUP BY tg),
-    scored AS (
-        SELECT g.doc_id, g.lang,
-               COUNT(*) AS n_trigrams,
-               (1000 * SUM(length(format('{:b}', c.n)) - 1)) // COUNT(*)
-                   AS fam
-        FROM tg g JOIN counts c ON c.tg = g.tg
-        GROUP BY g.doc_id, g.lang
-    ),
-    hist AS (SELECT lang, fam, COUNT(*) AS c FROM scored GROUP BY lang, fam),
-    cum AS (
-        SELECT lang, fam,
-               SUM(c) OVER (PARTITION BY lang ORDER BY fam) AS cum,
-               SUM(c) OVER (PARTITION BY lang) AS n
-        FROM hist
-    ),
-    cuts AS (
-        SELECT lang,
-               MIN(CASE WHEN 3 * cum >= n THEN fam END) AS c1,
-               MIN(CASE WHEN 3 * cum >= 2 * n THEN fam END) AS c2
-        FROM cum GROUP BY lang
-    ),
-    tagged AS (
-        SELECT s.lang,
-               CASE WHEN s.fam <= k.c1 THEN 'tail'
-                    WHEN s.fam <= k.c2 THEN 'middle'
-                    ELSE 'head' END AS bucket,
-               s.n_trigrams, s.fam
-        FROM scored s JOIN cuts k ON k.lang = s.lang
-    )
-    SELECT lang, bucket,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_trigrams) AS BIGINT) AS total_trigrams,
-           CAST(SUM(fam) // COUNT(*) AS BIGINT) AS avg_familiarity_permille
-    FROM tagged
-    GROUP BY lang, bucket
-    ORDER BY lang, bucket
-    """,
-)
-def text_ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style head/middle/tail perplexity bucketing per language
-    (Wenzek et al. 2020): score every document with the char-trigram
-    LM familiarity (an integer-exact KenLM stand-in), then split each language into terciles
-    and report per-bucket mass — the op CCNet uses to keep 'head'
-    (fluent) text and drop or down-sample the 'tail'.
-
-    Scale shape — the part that matters at 100 TB: terciles are NOT
-    computed with a corpus-wide ntile window (that is a full sort of
-    every document within each language partition, and the dominant
-    language IS the skew).  Instead the integer score domain is
-    bounded (permille of floor(log2 count) ≤ ~60,000 values), so a
-    (lang, score) HISTOGRAM — one map-side-combinable groupBy — holds
-    the full distribution in |langs|·|domain| rows; the cumulative
-    window and cutoff extraction run over that tiny relation, and the
-    per-document bucket tag is a broadcast join + map-side CASE.  This
-    is the histogram-quantile pattern production pipelines use for
-    integer-valued scores: exact, one extra scan, no per-doc sort.
-    Tie policy: every doc with score <= cutoff lands in the lower
-    bucket, so bucket sizes are N/3 up to tie inflation —
-    deterministic on both engines with no doc_id tiebreak needed."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    # persist the compact lowered text, not the char array — caching
-    # the inflated form OOMs the columnar cache builder at large
-    # blow-ups; cs re-derives streamed.
-    lowered = docs.select(
-        "doc_id", "lang", F.lower("text").alias("lt")
-    ).transform(tracked_persist)
-    chars = lowered.select(
-        "doc_id", "lang", F.split("lt", "(?!^)").alias("cs")
-    ).filter(F.size("cs") >= 4)
-    tg = chars.select(
-        "doc_id",
-        "lang",
-        F.expr(
-            "explode(transform(sequence(1, size(cs) - 3),"
-            " i -> concat(cs[i-1], cs[i], cs[i+1])))"
-        ).alias("tg"),
-    )
-    counts = tg.groupBy("tg").agg(F.count("*").alias("n"))
-    bucket = F.length(F.expr("bin(n)")) - 1
-    scored = (
-        tg.join(F.broadcast(counts), "tg")
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.count("*").alias("n_trigrams"),
-            F.sum(bucket).alias("bucket_sum"),
-        )
-        .select(
-            "doc_id",
-            "lang",
-            "n_trigrams",
-            F.expr("div(1000 * bucket_sum, n_trigrams)").alias("fam"),
-        )
-        .transform(tracked_persist)
-    )
-    hist = scored.groupBy("lang", "fam").agg(F.count(F.lit(1)).alias("c"))
-    wcum = Window.partitionBy("lang").orderBy("fam")
-    wl = Window.partitionBy("lang")
-    cum = hist.select(
-        "lang",
-        "fam",
-        F.sum("c").over(wcum).alias("cum"),
-        F.sum("c").over(wl).alias("n"),
-    )
-    cuts = cum.groupBy("lang").agg(
-        F.min(F.when(3 * F.col("cum") >= F.col("n"), F.col("fam"))).alias("c1"),
-        F.min(F.when(3 * F.col("cum") >= 2 * F.col("n"), F.col("fam"))).alias("c2"),
-    )
-    tagged = scored.join(F.broadcast(cuts), "lang").select(
-        "lang",
-        F.when(F.col("fam") <= F.col("c1"), F.lit("tail"))
-        .when(F.col("fam") <= F.col("c2"), F.lit("middle"))
-        .otherwise(F.lit("head"))
-        .alias("bucket"),
-        "n_trigrams",
-        "fam",
-    )
-    return (
-        tagged.groupBy("lang", "bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_trigrams").alias("total_trigrams"),
-            F.sum("fam").alias("fam_sum"),
-        )
-        .select(
-            "lang",
-            "bucket",
-            F.col("n_docs").cast("bigint"),
-            F.col("total_trigrams").cast("bigint"),
-            F.expr("div(fam_sum, n_docs)")
-            .cast("bigint")
-            .alias("avg_familiarity_permille"),
-        )
-        .orderBy("lang", "bucket")
-    )
 
 
 @register(
@@ -6110,8 +2489,7 @@ def pipeline_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffled but reproducible).  Reports per-phase doc/token mass and
     the first document each phase would feed the trainer.
 
-    Scale shape: global quartiles use the same bounded-domain
-    HISTOGRAM pattern as ``text_ccnet_perplexity_buckets`` — a
+    Scale shape: global quartiles use a bounded-domain HISTOGRAM — a
     map-side-combinable groupBy(difficulty) holds the whole
     distribution, the cumulative scan runs over that tiny relation,
     and per-doc tagging is a broadcast of THREE integers.  No global
@@ -6432,126 +2810,6 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("source_a") != F.col("source_b")).alias("cross_source"),
         )
         .orderBy("source_a", "source_b")
-    )
-
-
-@register(
-    "quality_score_calibration",
-    r"""
-    WITH t AS (
-        SELECT doc_id,
-               string_split_regex(text, '\s+') AS toks,
-               string_split(text, chr(10)) AS lines
-        FROM documents
-    ),
-    g AS (
-        SELECT doc_id,
-               (len(toks) BETWEEN 50 AND 100000)
-               AND (CASE WHEN len(toks) > 0
-                    THEN (10 * list_sum(list_transform(toks, x -> length(x))))
-                         // len(toks) ELSE 0 END BETWEEN 30 AND 100)
-               AND (CASE WHEN len(toks) > 0
-                    THEN (1000 * len(list_filter(toks,
-                         x -> contains(x, '#') OR contains(x, '...'))))
-                         // len(toks) ELSE 0 END < 100)
-               AND (CASE WHEN len(lines) > 0
-                    THEN (1000 * len(list_filter(lines,
-                         x -> starts_with(x, '-') OR starts_with(x, '*'))))
-                         // len(lines) ELSE 0 END < 900)
-               AND (CASE WHEN len(lines) > 0
-                    THEN (1000 * len(list_filter(lines, x -> ends_with(x, '...'))))
-                         // len(lines) ELSE 0 END < 300)
-               AND (len(list_distinct(list_filter(toks, x -> x IN
-                   ('the','a','an','of','and','to','is','in','it','for'))))
-                   >= 2) AS passes
-        FROM t
-    ),
-    f AS (
-        SELECT doc_id,
-               CAST(concat('0x', substr(md5(concat('qc:',
-                    unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                                       x -> x <> '')))), 1, 2))
-                    AS BIGINT) AS j
-        FROM documents
-    ),
-    wt AS (SELECT range AS j, ((range * 37 + 11) % 41) - 20 AS w
-           FROM range(256)),
-    doc AS (
-        SELECT f.doc_id, COUNT(*) AS n_toks, SUM(wt.w) AS wsum
-        FROM f JOIN wt ON f.j = wt.j
-        GROUP BY f.doc_id
-    ),
-    sc AS (
-        SELECT doc_id,
-               CASE WHEN wsum >= 0 THEN (1000 * wsum) // n_toks
-                    ELSE -((1000 * (-wsum)) // n_toks) END AS avg_w_milli
-        FROM doc
-    ),
-    joined AS (
-        SELECT (sc.avg_w_milli + 20000) // 2000 AS bucket,
-               sc.avg_w_milli, g.passes
-        FROM sc JOIN g ON g.doc_id = sc.doc_id
-    )
-    SELECT CAST(bucket AS BIGINT) AS bucket,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(CASE WHEN avg_w_milli + 500 >= 0 THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_keep,
-           CAST(SUM(CASE WHEN passes THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_gopher_pass,
-           CAST((1000 * SUM(CASE WHEN passes THEN 1 ELSE 0 END)) // COUNT(*)
-                AS BIGINT) AS gopher_pass_permille
-    FROM joined
-    GROUP BY bucket
-    ORDER BY bucket
-    """,
-)
-def quality_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calibration curve of the model-based quality filter against the
-    heuristic battery: bucket documents by hashed-classifier margin
-    (fixed-width 2-unit buckets on the shifted milli scale — no
-    quantile sort) and report the Gopher-rule pass rate per bucket.
-    The diagnostic a pipeline runs before trusting a trained filter:
-    if pass rate doesn't rise with classifier score, the model and
-    the heuristics disagree and the cutoff needs review.  Reuses the
-    exact per-doc chains of ``text_quality_classifier_hashed`` and the
-    Gopher rules via shared helpers, so this query and those can never
-    drift apart.
-
-    Scale shape: the gopher flags are a narrow no-shuffle projection;
-    the classifier margin is explode → 256-row broadcast join →
-    map-side-combined groupBy(doc_id); the two per-doc frames join on
-    doc_id (co-partitioned by the same key) and collapse into a
-    ≤21-row bucket report via one more map-side-combined aggregate.
-    The bucket id is a pure integer expression — shifted to
-    non-negative so Spark's truncating div and DuckDB's flooring //
-    agree."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    g = _gopher_doc_metrics(docs).select("doc_id", "passes")
-    sc = _hashed_classifier_scores(spark, docs).select("doc_id", "avg_w_milli")
-    joined = sc.join(g, "doc_id").select(
-        F.expr("div(avg_w_milli + 20000, 2000)").alias("bucket"),
-        "avg_w_milli",
-        "passes",
-    )
-    return (
-        joined.groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.when(F.col("avg_w_milli") + 500 >= 0, 1).otherwise(0)).alias(
-                "n_keep"
-            ),
-            F.sum(F.when(F.col("passes"), 1).otherwise(0)).alias("n_gopher_pass"),
-        )
-        .select(
-            F.col("bucket").cast("bigint"),
-            F.col("n_docs").cast("bigint"),
-            F.col("n_keep").cast("bigint"),
-            F.col("n_gopher_pass").cast("bigint"),
-            F.expr("div(1000 * n_gopher_pass, n_docs)")
-            .cast("bigint")
-            .alias("gopher_pass_permille"),
-        )
-        .orderBy("bucket")
     )
 
 
@@ -6917,172 +3175,6 @@ def quality_knn_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Poisson(1) CDF cutoffs scaled to 2^32 (floor(CDF(k) * 2^32) for
-# k = 0..4): a uniform 32-bit hash value below cutoff k draws weight k.
-# Shared verbatim by the Spark expression and the DuckDB twin so the
-# bootstrap replicas are bit-identical on both engines.
-_POIS1_CUTS = (1580030168, 3160060337, 3950075421, 4213413783, 4279248373)
-
-
-def _pois1_weight_sql(u: str) -> str:
-    """CASE expression mapping a uniform 32-bit value to a Poisson(1)
-    draw via inverse-CDF — pure integer compares, engine-portable."""
-    branches = " ".join(
-        f"WHEN {u} < {c} THEN {k}" for k, c in enumerate(_POIS1_CUTS)
-    )
-    return f"(CASE {branches} ELSE 5 END)"
-
-
-def _boot_u_sql(r: int, engine: str) -> str:
-    """The r-th replica's uniform 32-bit draw: an 8-hex window of one
-    of four per-row md5 hashes (4 disjoint windows per hash — 16
-    independent values from 4 hash evaluations)."""
-    g, j = divmod(r, 4)
-    suf = "abcd"[g]
-    if engine == "duck":
-        return f"CAST('0x' || substr(md5(key || ':{suf}'), {8 * j + 1}, 8) AS BIGINT)"
-    return f"cast(conv(substring(h{suf}, {8 * j + 1}, 8), 16, 10) as bigint)"
-
-
-def _boot_sum_cols_sql(engine: str) -> str:
-    cols = []
-    for r in range(16):
-        w = _pois1_weight_sql(_boot_u_sql(r, engine))
-        cols.append(f"SUM({w} * cents) AS swc{r}, SUM({w}) AS sw{r}")
-    return ",\n               ".join(cols)
-
-
-def _boot_mean_cols_sql() -> str:
-    return ",\n               ".join(
-        f"(1000 * swc{r}) // (100 * sw{r}) AS b{r}" for r in range(16)
-    )
-
-
-_B_ALL = ", ".join(f"b{r}" for r in range(16))
-
-
-@register(
-    "stats_bootstrap_ci",
-    f"""
-    WITH li AS (
-        SELECT l_returnflag AS flag,
-               CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents,
-               concat_ws('|', l_orderkey, l_linenumber, l_extendedprice,
-                         l_quantity) AS key
-        FROM lineitem
-    ),
-    agg AS (
-        SELECT flag, COUNT(*) AS n_rows, SUM(cents) AS sum_cents,
-               {_boot_sum_cols_sql("duck")}
-        FROM li GROUP BY flag
-    ),
-    boot AS (
-        SELECT flag, n_rows, sum_cents,
-               {_boot_mean_cols_sql()}
-        FROM agg
-    )
-    SELECT flag,
-           CAST(n_rows AS BIGINT) AS n_rows,
-           CAST((1000 * sum_cents) // (100 * n_rows) AS BIGINT) AS mean_milli,
-           CAST(LEAST({_B_ALL}) AS BIGINT) AS boot_min_milli,
-           CAST(GREATEST({_B_ALL}) AS BIGINT) AS boot_max_milli,
-           CAST(GREATEST({_B_ALL}) - LEAST({_B_ALL}) AS BIGINT) AS spread_milli
-    FROM boot
-    ORDER BY flag
-    """,
-)
-def stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Poisson-bootstrap confidence bands (the MapReduce bootstrap,
-    Chamandy et al. 2012): instead of resampling-with-replacement —
-    impossible in one distributed pass — each row draws an independent
-    Poisson(1) weight per replica from a content hash, giving 16
-    simultaneous resample estimates of the per-group mean.  Reports
-    the point estimate and the min/max/spread of the replica means —
-    the error bar a pipeline attaches to any metric it monitors.
-    Four md5 calls per row yield 16 independent 32-bit draws via
-    disjoint hex windows; weights are inverse-CDF with shared integer
-    cutoffs, so both engines reproduce every replica bit-for-bit.
-
-    Scale shape: ALL 16 replicas are columns of ONE map-side-combined
-    groupBy(flag) — no row expansion, no extra shuffle; the exchange
-    carries |groups|·partitions rows of 34 integers.  min/max over
-    replicas is a LEAST/GREATEST projection on the |groups|-row
-    result.  No driver-side randomness — reruns and engines agree
-    exactly."""
-    li = _fan_out(load_testdata(spark, sf_dir, "lineitem")).select(
-        F.col("l_returnflag").alias("flag"),
-        F.expr("CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)").alias(
-            "cents"
-        ),
-        F.concat_ws(
-            "|", "l_orderkey", "l_linenumber", "l_extendedprice", "l_quantity"
-        ).alias("key"),
-    )
-    hashed = li.select(
-        "flag",
-        "cents",
-        *[
-            F.md5(F.concat(F.col("key"), F.lit(f":{s}")).cast("binary")).alias(
-                f"h{s}"
-            )
-            for s in "abcd"
-        ],
-    )
-    # weights projected ONCE before the aggregate: each inverse-CDF
-    # CASE appears a single time in the plan (32 sum operands then
-    # reference plain columns), keeping the codegen'd expression tree
-    # small — the all-in-agg spelling measured ~7 s of fixed
-    # compilation cost at sf0.1
-    weighted = hashed.select(
-        "flag",
-        "cents",
-        *[
-            F.expr(_pois1_weight_sql(_boot_u_sql(r, "spark"))).alias(f"w{r}")
-            for r in range(16)
-        ],
-    )
-    agg = weighted.groupBy("flag").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum("cents").alias("sum_cents"),
-        *[
-            c
-            for r in range(16)
-            for c in (
-                F.sum(F.col(f"w{r}") * F.col("cents")).alias(f"swc{r}"),
-                F.sum(f"w{r}").alias(f"sw{r}"),
-            )
-        ],
-    )
-    boot = agg.select(
-        "flag",
-        "n_rows",
-        "sum_cents",
-        *[
-            F.expr(f"div(1000 * swc{r}, 100 * sw{r})").alias(f"b{r}")
-            for r in range(16)
-        ],
-    )
-    return boot.select(
-        "flag",
-        F.col("n_rows").cast("bigint"),
-        F.expr("div(1000 * sum_cents, 100 * n_rows)").cast("bigint").alias(
-            "mean_milli"
-        ),
-        F.least(*[F.col(f"b{r}") for r in range(16)])
-        .cast("bigint")
-        .alias("boot_min_milli"),
-        F.greatest(*[F.col(f"b{r}") for r in range(16)])
-        .cast("bigint")
-        .alias("boot_max_milli"),
-        (
-            F.greatest(*[F.col(f"b{r}") for r in range(16)])
-            - F.least(*[F.col(f"b{r}") for r in range(16)])
-        )
-        .cast("bigint")
-        .alias("spread_milli"),
-    ).orderBy("flag")
-
-
 @register(
     "quality_metadata_consistency",
     """
@@ -7277,201 +3369,6 @@ def _hexat(col: str, start: int, n: int) -> str:
     )
 
 
-_BLOOM_M = 65536   # bits  (2048 64-word rows at 32 bits/word)
-_BLOOM_K = 4       # probes per span (md5 hex windows 1-6, 7-12, 13-18, 19-24)
-
-
-def _bloom_pos_sql(hcol: str, i: int) -> str:
-    return f"({_hexat(hcol, 1 + 6 * i, 6)} % {_BLOOM_M})"
-
-
-@register(
-    "pipeline_bloom_decontam",
-    rf"""
-    WITH {_CORPUS_SQL},
-    t AS (SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM corpus),
-    spans AS (
-        SELECT doc_id, unnest(list_distinct(
-            CASE WHEN len(toks) >= 8
-                 THEN list_transform(generate_series(1, len(toks)-7),
-                      i -> concat_ws(' ', {_SPAN8}))
-                 ELSE []::VARCHAR[] END)) AS span
-        FROM t
-    ),
-    sp AS (
-        SELECT doc_id, md5(span) AS h,
-               (doc_id % 10 = 0 AND doc_id < 100000) AS is_eval
-        FROM spans
-    ),
-    ev AS (SELECT DISTINCT h FROM sp WHERE is_eval),
-    evp AS (
-        SELECT DISTINCT (p // 32) AS word,
-               (1::BIGINT << CAST(p % 32 AS INTEGER)) AS mask
-        FROM (SELECT unnest([{", ".join(_bloom_pos_sql("h", i) for i in range(_BLOOM_K))}]) AS p
-              FROM ev)
-    ),
-    bloom AS (SELECT word, bit_or(mask) AS bw FROM evp GROUP BY word),
-    tr AS (SELECT doc_id, h FROM sp WHERE NOT is_eval),
-    trp AS (
-        SELECT doc_id, h,
-               unnest([{", ".join(_bloom_pos_sql("h", i) for i in range(_BLOOM_K))}]) AS p
-        FROM tr
-    ),
-    hits AS (
-        SELECT t.doc_id, t.h,
-               SUM(CASE WHEN b.bw IS NOT NULL
-                         AND (b.bw & (1::BIGINT << CAST(t.p % 32 AS INTEGER))) != 0
-                        THEN 1 ELSE 0 END) AS n_hit
-        FROM trp t LEFT JOIN bloom b ON b.word = t.p // 32
-        GROUP BY t.doc_id, t.h
-    ),
-    cand AS (SELECT doc_id, h FROM hits WHERE n_hit = {_BLOOM_K}),
-    candx AS (
-        SELECT c.doc_id, CASE WHEN e.h IS NOT NULL THEN 1 ELSE 0 END AS exact
-        FROM cand c LEFT JOIN ev e ON e.h = c.h
-    ),
-    perdoc AS (
-        SELECT doc_id, COUNT(*) AS n_cand, SUM(exact) AS n_exact
-        FROM candx GROUP BY doc_id
-    ),
-    agg AS (
-        SELECT COALESCE(COUNT(*), 0) AS n_bloom_docs,
-               COALESCE(SUM(CASE WHEN n_exact > 0 THEN 1 ELSE 0 END), 0) AS n_exact_docs,
-               COALESCE(SUM(CASE WHEN n_exact = 0 THEN 1 ELSE 0 END), 0) AS n_fp_docs,
-               COALESCE(SUM(n_cand), 0) AS n_bloom_spans,
-               COALESCE(SUM(n_exact), 0) AS n_exact_spans
-        FROM perdoc
-    ),
-    tagg AS (SELECT COUNT(DISTINCT doc_id) AS n_train_docs FROM tr),
-    bagg AS (SELECT CAST(SUM(bit_count(bw)) AS BIGINT) AS bits_set FROM bloom)
-    SELECT CAST(n_train_docs AS BIGINT) AS n_train_docs,
-           CAST(n_bloom_docs AS BIGINT) AS n_bloom_docs,
-           CAST(n_exact_docs AS BIGINT) AS n_exact_docs,
-           CAST(n_fp_docs AS BIGINT) AS n_fp_docs,
-           CAST(n_bloom_spans AS BIGINT) AS n_bloom_spans,
-           CAST(n_exact_spans AS BIGINT) AS n_exact_spans,
-           CAST((1000 * (n_bloom_spans - n_exact_spans))
-                // greatest(n_bloom_spans, 1) AS BIGINT) AS span_fp_permille,
-           CAST(bits_set AS BIGINT) AS bloom_bits_set,
-           CAST((1000 * bits_set) // {_BLOOM_M} AS BIGINT) AS fill_permille
-    FROM tagg, agg, bagg
-    """,
-)
-def pipeline_bloom_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter decontamination pre-filter with measured false-
-    positive rate — the production shape of eval-overlap checking at
-    corpus scale: the eval 8-token span set is folded into a CONSTANT
-    8 KB bitmap (m=65536 bits, k=4 md5-derived probes), the bitmap
-    broadcasts to every scan task, and only spans whose 4 probe bits
-    are all set (Bloom candidates — a superset of true hits, Bloom
-    filters have no false negatives) proceed to the exact span join.
-    Reports the doc/span candidate counts, the exactly-confirmed
-    subset, the false-positive residue the filter would admit, and the
-    bitmap fill rate (fill ≈ 50% is the classic sizing optimum; higher
-    means m is undersized for the eval set).
-
-    Complements ``pipeline_decontaminate`` (which ships the exact
-    span-join answer): at 100 TB the bitmap pre-filter drops ~all
-    clean spans at scan time for 8 KB of broadcast state instead of
-    shuffling every span into the semi-join, and the exact join runs
-    over the surviving sliver only.  All probe arithmetic is md5-hex
-    → integer, bit-identical on both engines.
-
-    Scale shape: bitmap build is a bounded aggregate over the
-    BENCHMARK-sized eval span set (≤2048 rows out); the training scan
-    is map-only probe + ONE groupBy(doc, span) combinable count; the
-    exact verification join sees only Bloom survivors.  Driver sees
-    nothing but the 1-row report."""
-    corpus = _dedup_corpus(spark, sf_dir)
-    is_eval = (F.col("doc_id") % 10 == 0) & (F.col("doc_id") < 100000)
-    sp = D.shingle_explode(corpus, "doc_id", "text", 8).select(
-        "doc_id", F.md5(F.col("sh").cast("binary")).alias("h"), is_eval.alias("is_eval")
-    )
-    sp = sp.transform(tracked_persist)
-
-    def probes():
-        cols = []
-        for i in range(_BLOOM_K):
-            pos = (
-                f"pmod(cast(conv(substring(h, {1 + 6 * i}, 6), 16, 10) as bigint),"
-                f" {_BLOOM_M})"
-            )
-            cols.append(
-                F.expr(
-                    f"named_struct('word', div({pos}, 32),"
-                    f" 'mask', shiftleft(cast(1 as bigint), cast({pos} % 32 as int)))"
-                )
-            )
-        return F.explode(F.array(*cols)).alias("pr")
-
-    ev = sp.filter("is_eval").select("h").distinct().transform(tracked_persist)
-    bloom = (
-        ev.select(probes())
-        .select(F.col("pr.word").alias("word"), F.col("pr.mask").alias("mask"))
-        .groupBy("word")
-        .agg(F.expr("bit_or(mask)").alias("bw"))
-    )
-    tr = sp.filter(~F.col("is_eval")).select("doc_id", "h")
-    trp = tr.select("doc_id", "h", probes()).select(
-        "doc_id", "h", F.col("pr.word").alias("word"), F.col("pr.mask").alias("mask")
-    )
-    hits = (
-        trp.join(F.broadcast(bloom), "word", "left")
-        .withColumn(
-            "hit",
-            F.when(
-                F.col("bw").isNotNull()
-                & (F.col("bw").bitwiseAND(F.col("mask")) != 0),
-                1,
-            ).otherwise(0),
-        )
-        .groupBy("doc_id", "h")
-        .agg(F.sum("hit").alias("n_hit"))
-    )
-    cand = hits.filter(F.col("n_hit") == _BLOOM_K)
-    candx = cand.join(
-        F.broadcast(ev.withColumn("ex", F.lit(1))), "h", "left"
-    ).select("doc_id", F.coalesce("ex", F.lit(0)).alias("exact"))
-    perdoc = candx.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_cand"), F.sum("exact").alias("n_exact")
-    )
-    agg = perdoc.agg(
-        F.coalesce(F.count(F.lit(1)), F.lit(0)).alias("n_bloom_docs"),
-        F.coalesce(
-            F.sum(F.when(F.col("n_exact") > 0, 1).otherwise(0)), F.lit(0)
-        ).alias("n_exact_docs"),
-        F.coalesce(
-            F.sum(F.when(F.col("n_exact") == 0, 1).otherwise(0)), F.lit(0)
-        ).alias("n_fp_docs"),
-        F.coalesce(F.sum("n_cand"), F.lit(0)).alias("n_bloom_spans"),
-        F.coalesce(F.sum("n_exact"), F.lit(0)).alias("n_exact_spans"),
-    )
-    tagg = tr.agg(F.countDistinct("doc_id").alias("n_train_docs"))
-    bagg = bloom.agg(F.expr("cast(sum(bit_count(bw)) as bigint)").alias("bits_set"))
-    return (
-        tagg.crossJoin(F.broadcast(agg))
-        .crossJoin(F.broadcast(bagg))
-        .select(
-            F.col("n_train_docs").cast("bigint"),
-            F.col("n_bloom_docs").cast("bigint"),
-            F.col("n_exact_docs").cast("bigint"),
-            F.col("n_fp_docs").cast("bigint"),
-            F.col("n_bloom_spans").cast("bigint"),
-            F.col("n_exact_spans").cast("bigint"),
-            F.expr(
-                "div(1000 * (n_bloom_spans - n_exact_spans),"
-                " greatest(n_bloom_spans, 1))"
-            )
-            .cast("bigint")
-            .alias("span_fp_permille"),
-            F.col("bits_set").cast("bigint").alias("bloom_bits_set"),
-            F.expr(f"div(1000 * bits_set, {_BLOOM_M})")
-            .cast("bigint")
-            .alias("fill_permille"),
-        )
-    )
-
-
 def _d2_sql(a: str, b: str) -> str:
     """DuckDB SQL: exact integer squared L2 between two int lists."""
     return (
@@ -7584,513 +3481,6 @@ def sample_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("pick_idx")
 
 
-import math as _math
-
-# LinearCounting small-range correction lookup, m = 256: lc_milli[V] =
-# round(m·ln(m/V)·1000) for V empty registers.  Precomputed to integer
-# literals so BOTH engines evaluate the identical constant — no libm
-# in either plan (the repo-wide libm-free parity contract).
-_HLL_LC_CASE = (
-    "(CASE (256 - r) "
-    + " ".join(
-        f"WHEN {v} THEN {round(256 * _math.log(256 / v) * 1000)}"
-        for v in range(1, 256)
-    )
-    + " ELSE 0 END)"
-)
-
-
-@register(
-    "approx_distinct_hll",
-    f"""
-    WITH vals AS (
-        SELECT 'l_orderkey' AS column_name, CAST(l_orderkey AS VARCHAR) AS val FROM lineitem
-        UNION ALL
-        SELECT 'l_partkey', CAST(l_partkey AS VARCHAR) FROM lineitem
-        UNION ALL
-        SELECT 'l_suppkey', CAST(l_suppkey AS VARCHAR) FROM lineitem
-    ),
-    rr AS (
-        SELECT column_name,
-               {_hexat("md5(val)", 1, 2)} AS reg,
-               {_hexat("md5(val)", 3, 12)} AS v48,
-               val
-        FROM vals
-    ),
-    m AS (
-        SELECT column_name, reg,
-               MAX(least(CASE WHEN v48 = 0 THEN 49
-                              ELSE 49 - length(bin(v48)) END, 30)) AS mj
-        FROM rr GROUP BY column_name, reg
-    ),
-    z AS (
-        SELECT column_name, COUNT(*) AS r,
-               SUM(1::BIGINT << CAST(30 - mj AS INTEGER)) AS zpart
-        FROM m GROUP BY column_name
-    ),
-    ex AS (SELECT column_name, COUNT(DISTINCT val) AS exact_distinct FROM vals
-           GROUP BY column_name),
-    est AS (
-        SELECT column_name,
-               CASE WHEN raw_milli <= 640000 AND r < 256
-                    THEN {_HLL_LC_CASE} ELSE raw_milli END AS est_milli
-        FROM (
-            SELECT column_name, r,
-                   (1846528 * (70368744177664000 //
-                       (zpart + (256 - r) * 1073741824))) // 2570790 AS raw_milli
-            FROM z)
-    )
-    SELECT est.column_name,
-           CAST(est.est_milli AS BIGINT) AS est_milli,
-           CAST(ex.exact_distinct AS BIGINT) AS exact_distinct,
-           CAST((1000 * abs(est.est_milli - 1000 * ex.exact_distinct))
-                // (1000 * ex.exact_distinct) AS BIGINT) AS err_permille
-    FROM est JOIN ex ON ex.column_name = est.column_name
-    ORDER BY est.column_name
-    """,
-)
-def approx_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HyperLogLog distinct-count sketch (Flajolet et al. 2007 — the
-    register design behind Spark's own ``approx_count_distinct`` and
-    every warehouse's APPROX_COUNT_DISTINCT), run side-by-side with
-    the exact count to report realized error: m=256 registers indexed
-    by the first md5 hex byte, rank = leading-zero count of the next
-    48 hash bits, register state = max rank.  Complements the KMV
-    sketch (``approx_set_ops_kmv``): HLL is the constant-memory
-    (m · 6 bits), mergeable, union-able production sketch.
-
-    Engine parity: rank derives from ``49 − length(bin(v48))`` —
-    libm-free — and the harmonic mean runs scaled by 2^30 in EXACT
-    integer arithmetic (Σ 2^(30−M_j) + empty·2^30; ranks capped at 30,
-    beyond any cardinality both engines see at test SFs), with
-    α_256 = 0.7213/(1 + 1.079/256) carried as the exact rational
-    1846528/2570790.  The standard small-range LinearCounting
-    correction (E ≤ 2.5m with empty registers → m·ln(m/V)) applies via
-    a precomputed 255-entry integer lookup (``_HLL_LC_CASE``), keeping
-    both plans libm-free; without it the raw estimator reads ~2.4×
-    high at n=100 (measured).  A production variant lifts the cap and
-    widens to decimal(38) before the α multiply.
-
-    Scale shape: ONE map-side-combined groupBy(column, register) —
-    ≤ 3·256 rows out of the heavy aggregate regardless of N (this is
-    the whole point of the sketch: merge is register-wise max, so
-    partial aggregation does all the work) — followed by |columns|-row
-    estimate math.  The exact COUNT(DISTINCT) twin is the sf-bounded
-    calibration side, same contract as the KMV query."""
-    li = load_testdata(spark, sf_dir, "lineitem")
-    vals = _fan_out(
-        li.selectExpr(
-            "stack(3,"
-            " 'l_orderkey', cast(l_orderkey as string),"
-            " 'l_partkey', cast(l_partkey as string),"
-            " 'l_suppkey', cast(l_suppkey as string)) as (column_name, val)"
-        )
-    ).transform(tracked_persist)
-    rr = vals.select(
-        "column_name",
-        "val",
-        F.expr("cast(conv(substring(md5(cast(val as binary)), 1, 2), 16, 10) as int)").alias(
-            "reg"
-        ),
-        F.expr(
-            "cast(conv(substring(md5(cast(val as binary)), 3, 12), 16, 10) as bigint)"
-        ).alias("v48"),
-    )
-    m = rr.groupBy("column_name", "reg").agg(
-        F.expr(
-            "max(least(case when v48 = 0 then 49"
-            " else 49 - length(bin(v48)) end, 30))"
-        ).alias("mj")
-    )
-    z = m.groupBy("column_name").agg(
-        F.count(F.lit(1)).alias("r"),
-        F.sum(F.expr("shiftleft(cast(1 as bigint), cast(30 - mj as int))")).alias(
-            "zpart"
-        ),
-    )
-    est = z.select(
-        "column_name",
-        "r",
-        F.expr(
-            "div(1846528 * div(70368744177664000,"
-            " zpart + (256 - r) * 1073741824), 2570790)"
-        ).alias("raw_milli"),
-    ).select(
-        "column_name",
-        F.expr(
-            f"case when raw_milli <= 640000 and r < 256"
-            f" then {_HLL_LC_CASE} else raw_milli end"
-        ).alias("est_milli"),
-    )
-    ex = vals.groupBy("column_name").agg(
-        F.countDistinct("val").alias("exact_distinct")
-    )
-    return (
-        est.join(ex, "column_name")
-        .select(
-            "column_name",
-            F.col("est_milli").cast("bigint"),
-            F.col("exact_distinct").cast("bigint"),
-            F.expr(
-                "div(1000 * abs(est_milli - 1000 * exact_distinct),"
-                " 1000 * exact_distinct)"
-            )
-            .cast("bigint")
-            .alias("err_permille"),
-        )
-        .orderBy("column_name")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Round-5 session-5 batch 2: theta-sketch set operations, exact
-# distributed KS two-sample test
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "approx_set_ops_kmv",
-    """
-    WITH pairs AS (SELECT DISTINCT event_type, user_id FROM events),
-    hx AS (
-        SELECT DISTINCT event_type,
-               CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 8))
-                    AS BIGINT) AS v32
-        FROM pairs
-    ),
-    rk AS (
-        SELECT event_type, v32,
-               ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY v32) AS rk
-        FROM hx
-    ),
-    sk AS (SELECT event_type, v32 FROM rk WHERE rk <= 64),
-    tt AS (
-        SELECT event_type,
-               CASE WHEN COUNT(*) = 64 THEN MAX(v32)
-                    ELSE 4294967296 END AS theta
-        FROM sk GROUP BY event_type
-    ),
-    tp AS (
-        SELECT a.event_type AS type_a, b.event_type AS type_b,
-               greatest(least(a.theta, b.theta), 1) AS theta
-        FROM tt a JOIN tt b ON a.event_type < b.event_type
-    ),
-    ua AS (SELECT p.type_a, p.type_b, p.theta, s.v32
-           FROM tp p JOIN sk s ON s.event_type = p.type_a),
-    ub AS (SELECT p.type_a, p.type_b, p.theta, s.v32
-           FROM tp p JOIN sk s ON s.event_type = p.type_b),
-    uni AS (
-        SELECT DISTINCT type_a, type_b, v32
-        FROM (SELECT * FROM ua UNION ALL SELECT * FROM ub)
-        WHERE v32 < theta
-    ),
-    nu AS (SELECT type_a, type_b, COUNT(*) AS n_u FROM uni
-           GROUP BY type_a, type_b),
-    ni AS (
-        SELECT a.type_a, a.type_b, COUNT(*) AS n_i
-        FROM ua a JOIN ub b
-          ON b.type_a = a.type_a AND b.type_b = a.type_b AND b.v32 = a.v32
-        WHERE a.v32 < a.theta
-        GROUP BY a.type_a, a.type_b
-    ),
-    exn AS (SELECT event_type, COUNT(*) AS n FROM pairs GROUP BY event_type),
-    exi AS (
-        SELECT x.event_type AS type_a, y.event_type AS type_b,
-               COUNT(*) AS exact_inter
-        FROM pairs x JOIN pairs y
-          ON y.user_id = x.user_id AND x.event_type < y.event_type
-        GROUP BY type_a, type_b
-    )
-    SELECT p.type_a, p.type_b,
-           CAST(na.n + nb.n - COALESCE(e.exact_inter, 0) AS BIGINT) AS exact_union,
-           CAST((COALESCE(u.n_u, 0) * 4294967296) // p.theta AS BIGINT) AS est_union,
-           CAST(COALESCE(e.exact_inter, 0) AS BIGINT) AS exact_inter,
-           CAST((COALESCE(i.n_i, 0) * 4294967296) // p.theta AS BIGINT) AS est_inter,
-           CAST((1000 * COALESCE(e.exact_inter, 0))
-                // (na.n + nb.n - COALESCE(e.exact_inter, 0)) AS BIGINT)
-               AS jaccard_exact_milli,
-           CAST((1000 * COALESCE(i.n_i, 0))
-                // greatest(COALESCE(u.n_u, 0), 1) AS BIGINT) AS jaccard_est_milli,
-           CAST((1000 * abs((COALESCE(u.n_u, 0) * 4294967296) // p.theta
-                 - (na.n + nb.n - COALESCE(e.exact_inter, 0))))
-                // (na.n + nb.n - COALESCE(e.exact_inter, 0)) AS BIGINT)
-               AS err_union_permille
-    FROM tp p
-    JOIN exn na ON na.event_type = p.type_a
-    JOIN exn nb ON nb.event_type = p.type_b
-    LEFT JOIN exi e ON e.type_a = p.type_a AND e.type_b = p.type_b
-    LEFT JOIN nu u ON u.type_a = p.type_a AND u.type_b = p.type_b
-    LEFT JOIN ni i ON i.type_a = p.type_a AND i.type_b = p.type_b
-    ORDER BY 1, 2
-    """,
-)
-def approx_set_ops_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theta-sketch set operations (Dasgupta et al., the DataSketches
-    theta family): estimate |A∪B|, |A∩B| and Jaccard between the user
-    sets of every event-type pair from k=64 KMV sketches, next to the
-    exact answers.  θ for a pair is the smaller of the two kth-minimum
-    hash values; every sketch hash below θ is an inclusion-probability-
-    θ/2³² sample of the union, so |A∪B| ≈ |S_∪|·2³²/θ and |A∩B| ≈
-    |S_∩|·2³²/θ — the estimator that lets a 100 TB curation run answer
-    "how much does source A overlap source B" from two constant-size
-    summaries instead of a corpus-scale join.  Hash = first 8 md5 hex
-    chars as a 2³²-scaled integer (the KMV sketch's
-    convention), all arithmetic integer floor-div, so both engines
-    produce bit-identical estimates; sets smaller than k fall back to
-    θ=2³² (the sketch is exact there).
-
-    Scale shape: ONE distinct on (type, user) + ONE per-type top-k
-    window builds all sketches; everything downstream — the type-pair
-    grid, union/intersect sample counts, estimates — runs over ≤
-    |types|²·k sketch rows.  The exact union/intersection twin (a
-    user-keyed self-equi-join) is the sf-bounded calibrator, same
-    contract as the other approx_* queries.  At production the
-    sketches persist per source/day and merge associatively; nothing
-    rescans history."""
-    ev = (
-        load_testdata(spark, sf_dir, "events")
-        .select("event_type", "user_id")
-        .distinct()
-        .transform(tracked_persist)
-    )
-    hx = ev.select(
-        "event_type",
-        F.expr(
-            "cast(conv(substring(md5(cast(cast(user_id as string) as binary)),"
-            " 1, 8), 16, 10) as bigint)"
-        ).alias("v32"),
-    ).distinct()
-    w = Window.partitionBy("event_type").orderBy("v32")
-    sk = (
-        hx.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 64)
-        .select("event_type", "v32")
-        .transform(tracked_persist)
-    )
-    tt = sk.groupBy("event_type").agg(
-        F.when(F.count(F.lit(1)) == 64, F.max("v32"))
-        .otherwise(F.lit(4294967296))
-        .alias("theta")
-    )
-    a = tt.select(F.col("event_type").alias("type_a"), F.col("theta").alias("tha"))
-    b = tt.select(F.col("event_type").alias("type_b"), F.col("theta").alias("thb"))
-    tp = (
-        a.join(F.broadcast(b), F.col("type_a") < F.col("type_b"))
-        .select(
-            "type_a",
-            "type_b",
-            F.greatest(F.least("tha", "thb"), F.lit(1)).alias("theta"),
-        )
-        .transform(tracked_persist)
-    )
-    ua = F.broadcast(tp).join(
-        sk.withColumnRenamed("event_type", "type_a"), "type_a"
-    ).select("type_a", "type_b", "theta", "v32")
-    ub = F.broadcast(tp).join(
-        sk.withColumnRenamed("event_type", "type_b"), "type_b"
-    ).select("type_a", "type_b", "theta", "v32")
-    nu = (
-        ua.unionByName(ub)
-        .filter(F.col("v32") < F.col("theta"))
-        .select("type_a", "type_b", "v32")
-        .distinct()
-        .groupBy("type_a", "type_b")
-        .agg(F.count(F.lit(1)).alias("n_u"))
-    )
-    ni = (
-        ua.filter(F.col("v32") < F.col("theta"))
-        .join(ub.select("type_a", "type_b", "v32"), ["type_a", "type_b", "v32"])
-        .groupBy("type_a", "type_b")
-        .agg(F.count(F.lit(1)).alias("n_i"))
-    )
-    exn = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    x = ev.select(F.col("event_type").alias("type_a"), "user_id")
-    y = ev.select(F.col("event_type").alias("type_b"), "user_id")
-    exi = (
-        x.join(y, "user_id")
-        .filter(F.col("type_a") < F.col("type_b"))
-        .groupBy("type_a", "type_b")
-        .agg(F.count(F.lit(1)).alias("exact_inter"))
-    )
-    out = (
-        tp.join(F.broadcast(exn.select(F.col("event_type").alias("type_a"), F.col("n").alias("n_a"))), "type_a")
-        .join(F.broadcast(exn.select(F.col("event_type").alias("type_b"), F.col("n").alias("n_b"))), "type_b")
-        .join(F.broadcast(exi), ["type_a", "type_b"], "left")
-        .join(F.broadcast(nu), ["type_a", "type_b"], "left")
-        .join(F.broadcast(ni), ["type_a", "type_b"], "left")
-        .select(
-            "type_a",
-            "type_b",
-            "theta",
-            F.coalesce("exact_inter", F.lit(0)).alias("xi"),
-            F.coalesce("n_u", F.lit(0)).alias("n_u"),
-            F.coalesce("n_i", F.lit(0)).alias("n_i"),
-            (F.col("n_a") + F.col("n_b")).alias("nab"),
-        )
-    )
-    return out.select(
-        "type_a",
-        "type_b",
-        F.expr("nab - xi").cast("bigint").alias("exact_union"),
-        F.expr("div(n_u * 4294967296, theta)").cast("bigint").alias("est_union"),
-        F.col("xi").cast("bigint").alias("exact_inter"),
-        F.expr("div(n_i * 4294967296, theta)").cast("bigint").alias("est_inter"),
-        F.expr("div(1000 * xi, nab - xi)").cast("bigint").alias("jaccard_exact_milli"),
-        F.expr("div(1000 * n_i, greatest(n_u, 1))")
-        .cast("bigint")
-        .alias("jaccard_est_milli"),
-        F.expr(
-            "div(1000 * abs(div(n_u * 4294967296, theta) - (nab - xi)), nab - xi)"
-        )
-        .cast("bigint")
-        .alias("err_union_permille"),
-    ).orderBy("type_a", "type_b")
-
-
-@register(
-    "stats_ks_two_sample",
-    """
-    WITH vals AS (
-        SELECT l_returnflag AS grp,
-               CAST(round(l_extendedprice * 100) AS BIGINT) AS v
-        FROM lineitem
-    ),
-    tot AS (SELECT grp, COUNT(*) AS n_grp FROM vals GROUP BY grp),
-    nall AS (SELECT COUNT(*) AS n_all FROM vals),
-    cnt AS (SELECT grp, v, COUNT(*) AS c FROM vals GROUP BY grp, v),
-    grid AS (SELECT v, COUNT(*) AS nt FROM vals GROUP BY v),
-    flags AS (SELECT DISTINCT grp FROM vals),
-    dense AS (
-        SELECT f.grp, g.v, g.nt, COALESCE(c.c, 0) AS c
-        FROM grid g CROSS JOIN flags f
-        LEFT JOIN cnt c ON c.grp = f.grp AND c.v = g.v
-    ),
-    cums AS (
-        SELECT grp, v,
-               SUM(c) OVER (PARTITION BY grp ORDER BY v) AS cum_c,
-               SUM(nt) OVER (PARTITION BY grp ORDER BY v) AS cum_t
-        FROM dense
-    ),
-    d AS (
-        SELECT cu.grp, cu.v,
-               abs(cu.cum_c * (n.n_all - t.n_grp)
-                   - (cu.cum_t - cu.cum_c) * t.n_grp) AS diff,
-               t.n_grp, n.n_all
-        FROM cums cu JOIN tot t ON t.grp = cu.grp, nall n
-    ),
-    mx AS (SELECT grp, n_grp, n_all, MAX(diff) AS maxdiff
-           FROM d GROUP BY grp, n_grp, n_all),
-    loc AS (
-        SELECT d.grp, MIN(d.v) AS ks_at_centi
-        FROM d JOIN mx ON mx.grp = d.grp AND d.diff = mx.maxdiff
-        GROUP BY d.grp
-    )
-    SELECT m.grp AS l_returnflag,
-           CAST(m.n_grp AS BIGINT) AS n_grp,
-           CAST(m.n_all - m.n_grp AS BIGINT) AS n_rest,
-           CAST(m.maxdiff AS BIGINT) AS diff_scaled,
-           CAST((1000000 * m.maxdiff) // (m.n_grp * (m.n_all - m.n_grp))
-               AS BIGINT) AS d_micro,
-           CAST(l.ks_at_centi AS BIGINT) AS ks_at_centi
-    FROM mx m JOIN loc l ON l.grp = m.grp
-    ORDER BY l_returnflag
-    """,
-)
-def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact two-sample Kolmogorov-Smirnov statistic, one-vs-rest per
-    return flag over the extended-price distribution — the
-    distribution-shift gate a data pipeline runs between corpus slices
-    (did this source/shard/day drift?).  D = max_v |F_grp(v) −
-    F_rest(v)| is computed EXACTLY in integer arithmetic: the max is
-    over |cum_grp·n_rest − cum_rest·n_grp| (common-denominator form),
-    reported both raw (``diff_scaled``) and as ``d_micro`` =
-    ⌊10⁶·D⌋, plus the price point attaining it (ties broken to the
-    smallest — deterministic on both engines; prices are exact
-    centi-units so the double→int conversion is collision-free).
-
-    The distributed heart is ``operators/prefixsum.bucketed_cumsum``:
-    a GLOBAL window (`SUM OVER (ORDER BY v)` with no partition — the
-    oracle's spelling, and the classic single-task scale-killer) is
-    replaced by per-bucket partial sums + broadcast exclusive offsets
-    + a window partitioned by (grp, bucket), so ECDFs over arbitrarily
-    many distinct values never serialize onto one task.
-
-    Scale shape (rewritten round 11, VERDICT r10 "Next" #3 — the fleet's
-    most expensive untouched query at 6.5 s): ONE pass over lineitem
-    into the (grp, v) count grid; everything else derives from that
-    cached grid — the per-value totals and per-flag counts come from a
-    single ``groupBy(v)`` that folds the ≤|flags| per-value counts into
-    a map (``map_from_entries(collect_list(...))``), and the dense
-    ECDF input is a broadcast crossJoin with the flag list plus a map
-    lookup.  The old shape scanned the cached corpus FIVE times (cnt,
-    grid, flags, tot, nall) and re-shuffled the grid×flags frame to
-    (grp, v) for a sort-merge join against cnt; the new shape has no
-    (grp, v) join at all and its widest shuffles are the two grid
-    aggregations.  Then the two-level scan, one max-agg, and the
-    equi-join-back for the argmax location, unchanged.  At 100 TB
-    n_grp·n_rest exceeds 2⁶³ for micro-scaling — widen the final
-    division to decimal(38,0); the comparisons themselves stay in
-    bigint common-denominator form far longer."""
-    from .operators.prefixsum import bucketed_cumsum
-
-    li = _fan_out(
-        load_testdata(spark, sf_dir, "lineitem").select(
-            F.col("l_returnflag").alias("grp"),
-            F.expr("cast(round(l_extendedprice * 100) as bigint)").alias("v"),
-        )
-    )
-    cnt = tracked_persist(li.groupBy("grp", "v").agg(F.count(F.lit(1)).alias("c")))
-    # per-value totals + the bounded (≤|flags| entries) per-flag count
-    # map, in one combinable aggregate over the cached count grid.  NOT
-    # persisted: its two consumers sit above bucketed_cumsum's shared
-    # repartition exchange, so ReusedExchange computes it once anyway.
-    pv = cnt.groupBy("v").agg(
-        F.sum("c").alias("nt"),
-        F.map_from_entries(F.collect_list(F.struct("grp", "c"))).alias("m"),
-    )
-    tot = cnt.groupBy("grp").agg(F.sum("c").alias("n_grp"))
-    flags = tot.select("grp")
-    nall = tot.agg(F.sum("n_grp").alias("n_all"))
-    dense = pv.crossJoin(F.broadcast(flags)).select(
-        "grp",
-        "v",
-        "nt",
-        F.coalesce(F.element_at("m", F.col("grp")), F.lit(0)).alias("c"),
-    )
-    cums = bucketed_cumsum(dense, ["grp"], "v", ["c", "nt"], bucket_width=100_000)
-    d = (
-        cums.join(F.broadcast(tot), "grp")
-        .crossJoin(F.broadcast(nall))
-        .select(
-            "grp",
-            "v",
-            "n_grp",
-            "n_all",
-            F.abs(
-                F.col("cum_c") * (F.col("n_all") - F.col("n_grp"))
-                - (F.col("cum_nt") - F.col("cum_c")) * F.col("n_grp")
-            ).alias("diff"),
-        )
-    )
-    # one-pass deterministic argmax: max over (diff, -v) structs is
-    # lexicographic, so it yields max diff AND, among ties, the minimum
-    # v — exactly the oracle's MAX(diff) + MIN(v at max) pair — without
-    # persisting d, without the join-back on (grp, diff), and without
-    # the final mx⋈loc join.  Combinable (a declarative MAX), so it is
-    # also the scan-once shape 100 TB wants.
-    mx = d.groupBy("grp", "n_grp", "n_all").agg(
-        F.max(F.struct(F.col("diff"), (-F.col("v")).alias("nv"))).alias("s")
-    )
-    return mx.select(
-        F.col("grp").alias("l_returnflag"),
-        F.col("n_grp").cast("bigint"),
-        (F.col("n_all") - F.col("n_grp")).cast("bigint").alias("n_rest"),
-        F.col("s.diff").cast("bigint").alias("diff_scaled"),
-        F.expr("div(1000000 * s.diff, n_grp * (n_all - n_grp))")
-        .cast("bigint")
-        .alias("d_micro"),
-        (-F.col("s.nv")).cast("bigint").alias("ks_at_centi"),
-    ).orderBy("l_returnflag")
 
 
 # ---------------------------------------------------------------------------
@@ -8217,141 +3607,6 @@ def sample_priority_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("err_permille"),
         )
         .orderBy("l_returnflag")
-    )
-
-
-@register(
-    "approx_distinct_hll_merged",
-    f"""
-    WITH vals AS (
-        SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-               md5(CAST(user_id AS VARCHAR)) AS h
-        FROM events
-    ),
-    rr AS (
-        SELECT day, {_hexat("h", 1, 2)} AS reg, {_hexat("h", 3, 12)} AS v48, h
-        FROM vals
-    ),
-    daily AS (
-        SELECT day, reg,
-               MAX(least(CASE WHEN v48 = 0 THEN 49
-                              ELSE 49 - length(bin(v48)) END, 30)) AS mj
-        FROM rr GROUP BY day, reg
-    ),
-    merged AS (SELECT reg, MAX(mj) AS mj FROM daily GROUP BY reg),
-    direct AS (
-        SELECT reg,
-               MAX(least(CASE WHEN v48 = 0 THEN 49
-                              ELSE 49 - length(bin(v48)) END, 30)) AS mj
-        FROM rr GROUP BY reg
-    ),
-    est AS (
-        SELECT src,
-               CASE WHEN raw_milli <= 640000 AND r < 256
-                    THEN {_HLL_LC_CASE} ELSE raw_milli END AS est_milli
-        FROM (
-            SELECT src, r,
-                   (1846528 * (70368744177664000 //
-                       (zpart + (256 - r) * 1073741824))) // 2570790 AS raw_milli
-            FROM (
-                SELECT 'merged' AS src, COUNT(*) AS r,
-                       SUM(1::BIGINT << CAST(30 - mj AS INTEGER)) AS zpart
-                FROM merged
-                UNION ALL
-                SELECT 'direct', COUNT(*),
-                       SUM(1::BIGINT << CAST(30 - mj AS INTEGER))
-                FROM direct))
-    ),
-    ex AS (SELECT COUNT(DISTINCT h) AS exact_distinct FROM vals),
-    nd AS (SELECT COUNT(DISTINCT day) AS n_days FROM vals)
-    SELECT CAST(nd.n_days AS BIGINT) AS n_days,
-           CAST(ex.exact_distinct AS BIGINT) AS exact_distinct,
-           CAST(d.est_milli AS BIGINT) AS est_direct_milli,
-           CAST(m.est_milli AS BIGINT) AS est_merged_milli,
-           CAST(CASE WHEN m.est_milli = d.est_milli THEN 1 ELSE 0 END
-               AS INTEGER) AS merged_equals_direct,
-           CAST((1000 * abs(m.est_milli - 1000 * ex.exact_distinct))
-                // (1000 * ex.exact_distinct) AS BIGINT) AS err_permille
-    FROM ex, nd,
-         (SELECT est_milli FROM est WHERE src = 'merged') m,
-         (SELECT est_milli FROM est WHERE src = 'direct') d
-    """,
-)
-def approx_distinct_hll_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL sketch MERGEABILITY — the property that makes the sketch a
-    pipeline primitive rather than a one-shot query: per-day register
-    states (the "daily sketch table" a 100 TB ingest materializes
-    incrementally) merged by register-wise max must yield the SAME
-    registers — and therefore the bit-identical estimate — as one
-    direct pass over all days.  Reports both estimates, the equality
-    flag, and realized error vs the exact multi-day distinct-user
-    count.  Same m=256 / integer-harmonic-mean / LinearCounting
-    machinery as ``approx_distinct_hll`` (contract documented there).
-
-    Scale shape: the daily sketch build is one map-side-combined
-    groupBy(day, reg) — ≤256 rows out per day regardless of volume;
-    the merge is a groupBy(reg) over |days|·256 rows; nothing ever
-    rescans history.  The direct pass and exact count are the
-    sf-bounded calibration sides."""
-    ev = _fan_out(
-        load_testdata(spark, sf_dir, "events").select(
-            F.to_date(F.date_trunc("day", "ts")).alias("day"),
-            F.md5(F.col("user_id").cast("string").cast("binary")).alias("h"),
-        )
-    ).transform(tracked_persist)
-    rr = ev.select(
-        "day",
-        "h",
-        F.expr("cast(conv(substring(h, 1, 2), 16, 10) as int)").alias("reg"),
-        F.expr("cast(conv(substring(h, 3, 12), 16, 10) as bigint)").alias("v48"),
-    )
-    rank = (
-        "max(least(case when v48 = 0 then 49"
-        " else 49 - length(bin(v48)) end, 30))"
-    )
-    daily = rr.groupBy("day", "reg").agg(F.expr(rank).alias("mj"))
-    merged = daily.groupBy("reg").agg(F.max("mj").alias("mj"))
-    direct = rr.groupBy("reg").agg(F.expr(rank).alias("mj"))
-
-    def estimate(regs: DataFrame, label: str) -> DataFrame:
-        z = regs.agg(
-            F.count(F.lit(1)).alias("r"),
-            F.sum(
-                F.expr("shiftleft(cast(1 as bigint), cast(30 - mj as int))")
-            ).alias("zpart"),
-        )
-        return z.select(
-            F.expr(
-                "case when div(1846528 * div(70368744177664000,"
-                " zpart + (256 - r) * 1073741824), 2570790) <= 640000"
-                " and r < 256 then " + _HLL_LC_CASE + " else"
-                " div(1846528 * div(70368744177664000,"
-                " zpart + (256 - r) * 1073741824), 2570790) end"
-            ).alias(f"est_{label}_milli")
-        )
-
-    ex = ev.agg(F.countDistinct("h").alias("exact_distinct"))
-    nd = ev.agg(F.countDistinct("day").alias("n_days"))
-    return (
-        nd.crossJoin(F.broadcast(ex))
-        .crossJoin(F.broadcast(estimate(direct, "direct")))
-        .crossJoin(F.broadcast(estimate(merged, "merged")))
-        .select(
-            F.col("n_days").cast("bigint"),
-            F.col("exact_distinct").cast("bigint"),
-            F.col("est_direct_milli").cast("bigint"),
-            F.col("est_merged_milli").cast("bigint"),
-            F.when(F.col("est_merged_milli") == F.col("est_direct_milli"), 1)
-            .otherwise(0)
-            .cast("int")
-            .alias("merged_equals_direct"),
-            F.expr(
-                "div(1000 * abs(est_merged_milli - 1000 * exact_distinct),"
-                " 1000 * exact_distinct)"
-            )
-            .cast("bigint")
-            .alias("err_permille"),
-        )
     )
 
 
@@ -9039,8 +4294,8 @@ def similarity_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell count) scales with N in the SemDeDup regime to hold cluster
     sizes: the registered query uses the corpus-scaled k
     (``_scaled_quantizer_k`` / ``_K_SCALED_SQL``, the SemDeDup
-    contract) — a fixed k=8 measured exponent ~0.96 at 10x
-    (SCALING.md), the quadratic creep the scaled k removes.  Cross-cell
+    contract) — a fixed k=8 measured exponent ~0.96 at 10x, the
+    quadratic creep the scaled k removes.  Cross-cell
     true mutual pairs are the recall trade the IVF recall gates
     measure."""
     cells = _sq8_kmeans_cells(spark, sf_dir, k=None, iters=3)
@@ -9974,104 +5229,6 @@ def events_hopping_window_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-6 batch 7: Fellegi-Sunter record-linkage scoring
-# ---------------------------------------------------------------------------
-
-# Fixed integer agreement/disagreement weights (deci-bans, the classic
-# log(m/u)-shaped magnitudes a production linker trains offline via EM;
-# pinned constants here so both engines score identically with zero
-# float arithmetic).
-_FS_W = {
-    "name": (40, -12),  # agreement on full name is near-conclusive
-    "bal": (22, -4),    # exact balance match: strong, cheap to fake
-    "seg": (8, -9),     # 5-value segment: weak agree, firm disagree
-}
-_FS_MATCH, _FS_POSSIBLE = 45, 10
-
-# Candidate cap for the hot-block variant: normal blocks are ≤10 ids per
-# side (the 17-char prefix pins 8 of 9 key digits → ≤100 candidates), so
-# 128 caps ONLY genuinely hot blocks and the base fixture's pairs stay
-# exact at every SF.
-_FS_HOT_CAP = 128
-
-
-def _fs_sides(cust: DataFrame, *, planted_hot: bool = False):
-    """A/B sides of the FS linkage fixture with the blocking key
-    materialized — A keeps natural names (id, name, nat, bal_c, seg,
-    blk), B is the registry copy with ``b_``-prefixed record columns
-    and the SAME (nat, blk) block-key names, as
-    ``operators.linkage.blocked_bipartite_pairs`` requires.
-
-    ``planted_hot=True`` additionally collapses every 3rd record (both
-    sides, verbatim — no B perturbation) onto one per-nation identity
-    ('Customer#HOTBLOCK', balance 424242+nat, segment BUILDING): the
-    repeat-heavy production shape (franchise branches, placeholder
-    rows, ingest replays) where one block holds f records per side and
-    all-pairs blocking emits f² candidates.  The hot rows are exact
-    duplicates, so each nation's hot block is a clique under the FS
-    match predicate — the regime where star emission preserves
-    connected components exactly."""
-    a = cust.select(
-        F.col("c_custkey").alias("id"),
-        F.col("c_name").alias("name"),
-        F.col("c_nationkey").alias("nat"),
-        F.expr("cast(round(c_acctbal * 100) as bigint)").alias("bal_c"),
-        F.col("c_mktsegment").alias("seg"),
-    )
-    if planted_hot:
-        hot = F.col("id") % 3 == 0
-        a = a.select(
-            "id",
-            F.when(hot, F.lit("Customer#HOTBLOCK")).otherwise(F.col("name")).alias("name"),
-            "nat",
-            F.when(hot, (F.lit(424242) + F.col("nat")).cast("bigint"))
-            .otherwise(F.col("bal_c"))
-            .alias("bal_c"),
-            F.when(hot, F.lit("BUILDING")).otherwise(F.col("seg")).alias("seg"),
-        )
-        keep = F.col("id") % 3 == 0
-    else:
-        keep = F.lit(False)
-    b = a.select(
-        (F.col("id") + 1000000).alias("id"),
-        F.when(
-            ~keep & (F.col("id") % 7 == 0),
-            F.concat(F.expr("substring(name, 1, length(name) - 1)"), F.lit("X")),
-        )
-        .otherwise(F.col("name"))
-        .alias("name"),
-        "nat",
-        F.when(~keep & (F.col("id") % 5 == 0), F.col("bal_c") + 1)
-        .otherwise(F.col("bal_c"))
-        .alias("bal_c"),
-        F.when(~keep & (F.col("id") % 11 == 0), F.lit("AUTOMOBILE"))
-        .otherwise(F.col("seg"))
-        .alias("seg"),
-    )
-    aa = a.withColumn("blk", F.expr("substring(name, 1, 17)"))
-    bb = b.select(
-        "nat",
-        F.expr("substring(name, 1, 17)").alias("blk"),
-        F.col("id").alias("b_id"),
-        F.col("name").alias("b_name"),
-        F.col("bal_c").alias("b_bal_c"),
-        F.col("seg").alias("b_seg"),
-    )
-    return aa, bb
-
-
-def _fs_score():
-    """The FS deci-ban score column over a candidate-pair row (A columns
-    natural, B columns ``b_``-prefixed)."""
-    wn, wb, ws = _FS_W["name"], _FS_W["bal"], _FS_W["seg"]
-    return (
-        F.when(F.col("name") == F.col("b_name"), wn[0]).otherwise(wn[1])
-        + F.when(F.col("bal_c") == F.col("b_bal_c"), wb[0]).otherwise(wb[1])
-        + F.when(F.col("seg") == F.col("b_seg"), ws[0]).otherwise(ws[1])
-    )
-
-
-# ---------------------------------------------------------------------------
 # Round-6 batch 8: earth-mover's distance between source length profiles
 # ---------------------------------------------------------------------------
 
@@ -10492,8 +5649,7 @@ def events_autocorr_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     to PERMILLE-OF-TOTAL×1000 (pm = 1e6·cnt // Σcnt ≤ 1e6) so every
     centered deviation is ≤1e6, every product ≤1e12, and the sums are
     bounded by |days|·1e12 FOREVER — corpus growth cannot overflow the
-    bigint moments (the lesson from this round's OLS 10x overflow,
-    NOTES.md).  ACF is scale-invariant, so the normalization only
+    bigint moments.  ACF is scale-invariant, so the normalization only
     costs integer rounding (≤1 part in 1e6 per term).  Centering uses
     the truncated integer mean; all divisions are truncating on both
     engines.  Denominator is the full-series sum of squares (the
@@ -10799,7 +5955,7 @@ def events_interarrival_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame
     Exact at scale, no global sort: gaps come from a USER-partitioned
     lag window; the quantile selection runs on the (gap → count)
     aggregate via ``operators/prefixsum.bucketed_cumsum`` — the same
-    two-level exact-ECDF scan as ``stats_ks_two_sample`` — then one
+    two-level exact-ECDF scan as ``events_mannwhitney_auc`` — then one
     1-row total broadcast turns percentile ranks ⌈p·n/100⌉ into
     threshold selections (percentile_disc semantics, smallest value
     whose cumulative count reaches the rank).  The oracle spells the
@@ -11101,9 +6257,8 @@ def quality_tukey_fences_by_source(spark: SparkSession, sf_dir: str) -> DataFram
     grid) and the count of docs beyond Q1−1.5·IQR / Q3+1.5·IQR — the
     box-plot audit that flags a source whose length distribution has
     grown a truncation spike or a concatenation tail before those docs
-    poison a training mix.  Complements the GLOBAL MAD detector
-    (events_robust_anomalies_mad) with a per-group exact-quartile
-    form.
+    poison a training mix.  A per-group exact-quartile form of a
+    robust outlier detector.
 
     Integer contract: fences are compared in DOUBLED units
     (2·len < 2·Q1 − 3·IQR) so the 1.5 multiplier never leaves ℤ; the
@@ -11176,8 +6331,8 @@ def quality_tukey_fences_by_source(spark: SparkSession, sf_dir: str) -> DataFram
 )
 def events_journey_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 three-step user journeys (event-type trigrams in strict
-    per-user time order) — the sequence view of behavior that the
-    first-order ``events_transition_matrix`` cannot see: a high
+    per-user time order) — the sequence view of behavior that a
+    first-order transition matrix cannot see: a high
     view>click>purchase count versus view>click>error separates a
     working funnel from a broken checkout, and anomalous
     signup>signup>signup loops expose bot registration.
@@ -11355,315 +6510,8 @@ def events_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-6 batch 13: entity clusters, split leakage audit, delay quantiles
+# Train/test split leakage audit, ship-latency quantiles
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "customers_linkage_clusters",
-    f"""
-    WITH a AS (
-        SELECT c_custkey AS id, c_name AS name, c_nationkey AS nat,
-               CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c,
-               c_mktsegment AS seg
-        FROM customer
-    ),
-    b AS (
-        SELECT id + 1000000 AS id,
-               CASE WHEN id % 7 = 0 THEN substr(name, 1, length(name) - 1) || 'X'
-                    ELSE name END AS name,
-               nat,
-               CASE WHEN id % 5 = 0 THEN bal_c + 1 ELSE bal_c END AS bal_c,
-               CASE WHEN id % 11 = 0 THEN 'AUTOMOBILE' ELSE seg END AS seg
-        FROM a
-    ),
-    matched AS (
-        SELECT a.id AS u, b.id AS v
-        FROM a JOIN b ON a.nat = b.nat
-                     AND substr(a.name, 1, 17) = substr(b.name, 1, 17)
-        WHERE (CASE WHEN a.name = b.name THEN {_FS_W['name'][0]} ELSE {_FS_W['name'][1]} END
-             + CASE WHEN a.bal_c = b.bal_c THEN {_FS_W['bal'][0]} ELSE {_FS_W['bal'][1]} END
-             + CASE WHEN a.seg = b.seg THEN {_FS_W['seg'][0]} ELSE {_FS_W['seg'][1]} END)
-              >= {_FS_MATCH}
-    ),
-    ed AS (SELECT u AS src, v AS dst FROM matched
-           UNION ALL SELECT v, u FROM matched),
-    nodes AS (SELECT DISTINCT src AS node FROM ed),
-    l0 AS (SELECT node, node AS lbl FROM nodes),
-    r1 AS (SELECT e.dst AS node, MIN(l.lbl) AS ml
-           FROM ed e JOIN l0 l ON l.node = e.src GROUP BY e.dst),
-    l1 AS (SELECT l.node, least(l.lbl, COALESCE(r.ml, l.lbl)) AS lbl
-           FROM l0 l LEFT JOIN r1 r ON r.node = l.node),
-    r2 AS (SELECT e.dst AS node, MIN(l.lbl) AS ml
-           FROM ed e JOIN l1 l ON l.node = e.src GROUP BY e.dst),
-    l2 AS (SELECT l.node, least(l.lbl, COALESCE(r.ml, l.lbl)) AS lbl
-           FROM l1 l LEFT JOIN r2 r ON r.node = l.node),
-    r3 AS (SELECT e.dst AS node, MIN(l.lbl) AS ml
-           FROM ed e JOIN l2 l ON l.node = e.src GROUP BY e.dst),
-    l3 AS (SELECT l.node, least(l.lbl, COALESCE(r.ml, l.lbl)) AS lbl
-           FROM l2 l LEFT JOIN r3 r ON r.node = l.node),
-    sz AS (SELECT lbl, COUNT(*) AS size FROM l3 GROUP BY lbl)
-    SELECT CAST(size AS BIGINT) AS entity_size,
-           CAST(COUNT(*) AS BIGINT) AS n_entities,
-           CAST(SUM(size) AS BIGINT) AS n_records
-    FROM sz GROUP BY size ORDER BY size
-    """,
-)
-def customers_linkage_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity clusters from the Fellegi–Sunter match decisions: the
-    'match'-class pairs of the Fellegi–Sunter scoring become an
-    undirected graph, THREE unrolled min-label propagation rounds
-    collapse it into entities, and the output is the entity-size
-    histogram — the deliverable an ER pipeline actually ships (dedup
-    groups), one tier above the pair-level pattern table.  A size-2
-    entity is the expected {{A-record, its registry copy}}; size ≥3
-    means colliding blocks merged distinct customers — the
-    over-linkage signal a threshold review looks for.  Fixed rounds
-    make the fixpoint replay exactly in the unrolled twin (3 hops
-    cover the planted bipartite stars; the convergence pytest asserts
-    a 4th round is a no-op on this fixture).
-
-    Scale shape: blocking keeps candidates ∝ N (17-char prefix pins
-    block size ≤10 at any scale); each propagation round is one
-    edge⋈label equi-join plus a combinable MIN groupBy — the same
-    O(|E|)-per-round contract as ``graph.connected_components``, with
-    |E| here the MATCH set (≪ N·avg-block).  Histogram is two tiny
-    groupBys.  No window, no BNLJ, no driver loop.  Blocking runs through
-    ``operators.linkage.blocked_bipartite_pairs`` with
-    ``hot_block_cap=None`` (exact all-pairs per block — one equi-join,
-    same plan); the capped sibling over the planted repeat-heavy
-    fixture is ``customers_linkage_clusters_capped``."""
-    cust = load_testdata(spark, sf_dir, "customer")
-    aa, bb = _fs_sides(cust)
-    matched = (
-        LK.blocked_bipartite_pairs(
-            aa, bb, ["nat", "blk"], "id", "b_id", hot_block_cap=None
-        )
-        .filter(_fs_score() >= _FS_MATCH)
-        .select(F.col("id").alias("u"), F.col("b_id").alias("v"))
-    )
-    ed = (
-        matched.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(matched.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        # repartition before the persist (guide §2.4/§6: the union of
-        # the two emission branches otherwise caches 2× the blocking
-        # plan's output partitions as slivers; every downstream scan
-        # pays per-task overhead ∝ that count, and hash(src) is the
-        # partitioning nodes-distinct and the self-loop union want)
-        .repartition("src")
-        .transform(tracked_persist)
-    )
-    return _entity_size_histogram(ed)
-
-
-def _entity_size_histogram(ed: DataFrame) -> DataFrame:
-    """Entity-size histogram from a symmetric (src, dst) match-edge
-    list: THREE unrolled min-label propagation rounds then two tiny
-    groupBys.  3 rounds cover both fixtures' diameters — the base
-    bipartite pairs (1 round) and the capped two-star blocks (2
-    rounds: hub_a's label reaches every B member in round 1 and the
-    remaining A members via hub_b in round 2); the convergence pytest
-    asserts a 4th round is a no-op on both.
-
-    Round shape (rewritten round 8, VERDICT r7 "Next" #3): the edge
-    list carries a SELF-LOOP per node, so one round is exactly one
-    edge⋈label equi-join + one combinable MIN groupBy — ``min(own,
-    in-neighbors)`` without a left join-back.  The earlier join-back
-    form referenced the prior label frame twice per round, doubling
-    the unpersisted plan per round (2³ = 8 leaf recomputes — most of
-    the capped query's 8.7× 1× constant); with self-loops the label
-    frame is referenced once per round, the plan stays linear, and
-    only the static self-looped edge frame is persisted.
-
-    Round 11 (optimization; guide §3.3/§5, VERDICT r10 "Next" #4):
-    the per-round label frame is additionally ``localCheckpoint(eager=
-    False)`` — even at one reference per round, every round's plan
-    nested the FULL blocking lineage of the persisted edge frame (the
-    capped variant's 3-way candidate union rendered once per round:
-    128 Exchanges / 140 scans in the initial plan), and Catalyst/AQE
-    orchestration of that tree, not the data, dominated the query.
-    The truncated plan references the edge cache once.  Same cluster
-    caveat as ``connected_components``: localCheckpoint blocks die
-    with executors; production swaps in reliable ``checkpoint(dir)``.
-    The static self-looped edge frame stays persisted (an RDD-scan
-    leaf would lose its ``repartition("src")`` outputPartitioning and
-    re-shuffle the edge side every round)."""
-    nodes = ed.select(F.col("src").alias("node")).distinct()
-    # hash-partitioned by the propagation key before the persist: the
-    # cached frame's outputPartitioning then satisfies every round's
-    # join on src with NO per-round exchange on the edge side (the
-    # union of emission branches otherwise caches 4×shuffle-partitions
-    # slivers, and 3 rounds × re-shuffling them was pure task overhead)
-    ed_self = tracked_persist(
-        ed.unionByName(
-            nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"))
-        ).repartition("src")
-    )
-    lab = nodes.select("node", F.col("node").alias("lbl"))
-    for _ in range(3):
-        lab = (
-            ed_self.join(
-                lab.select(F.col("node").alias("src"), "lbl"), "src"
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint(eager=False)
-        )
-    sz = lab.groupBy("lbl").agg(F.count(F.lit(1)).alias("size"))
-    return (
-        sz.groupBy("size")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_entities"),
-            F.sum("size").cast("bigint").alias("n_records"),
-        )
-        .select(F.col("size").cast("bigint").alias("entity_size"), "n_entities", "n_records")
-        .orderBy("entity_size")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Round-7: hot-block-capped linkage over a planted repeat-heavy registry
-# (VERDICT r6 "Next" #3 — the FS-blocking sibling of the LSH hot-bucket cap)
-# ---------------------------------------------------------------------------
-
-_FS_CC_SQL = """
-    ed AS (SELECT u AS src, v AS dst FROM matched
-           UNION ALL SELECT v, u FROM matched),
-    nodes AS (SELECT DISTINCT src AS node FROM ed),
-    l0 AS (SELECT node, node AS lbl FROM nodes),
-    r1 AS (SELECT e.dst AS node, MIN(l.lbl) AS ml
-           FROM ed e JOIN l0 l ON l.node = e.src GROUP BY e.dst),
-    l1 AS (SELECT l.node, least(l.lbl, COALESCE(r.ml, l.lbl)) AS lbl
-           FROM l0 l LEFT JOIN r1 r ON r.node = l.node),
-    r2 AS (SELECT e.dst AS node, MIN(l.lbl) AS ml
-           FROM ed e JOIN l1 l ON l.node = e.src GROUP BY e.dst),
-    l2 AS (SELECT l.node, least(l.lbl, COALESCE(r.ml, l.lbl)) AS lbl
-           FROM l1 l LEFT JOIN r2 r ON r.node = l.node),
-    r3 AS (SELECT e.dst AS node, MIN(l.lbl) AS ml
-           FROM ed e JOIN l2 l ON l.node = e.src GROUP BY e.dst),
-    l3 AS (SELECT l.node, least(l.lbl, COALESCE(r.ml, l.lbl)) AS lbl
-           FROM l2 l LEFT JOIN r3 r ON r.node = l.node),
-    sz AS (SELECT lbl, COUNT(*) AS size FROM l3 GROUP BY lbl)
-    SELECT CAST(size AS BIGINT) AS entity_size,
-           CAST(COUNT(*) AS BIGINT) AS n_entities,
-           CAST(SUM(size) AS BIGINT) AS n_records
-    FROM sz GROUP BY size ORDER BY size
-"""
-
-
-@register(
-    "customers_linkage_clusters_capped",
-    f"""
-    WITH a0 AS (
-        SELECT c_custkey AS id, c_name AS name, c_nationkey AS nat,
-               CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c,
-               c_mktsegment AS seg
-        FROM customer
-    ),
-    a AS (
-        SELECT id,
-               CASE WHEN id % 3 = 0 THEN 'Customer#HOTBLOCK' ELSE name END AS name,
-               nat,
-               CASE WHEN id % 3 = 0 THEN CAST(424242 + nat AS BIGINT)
-                    ELSE bal_c END AS bal_c,
-               CASE WHEN id % 3 = 0 THEN 'BUILDING' ELSE seg END AS seg
-        FROM a0
-    ),
-    b AS (
-        SELECT id + 1000000 AS id,
-               CASE WHEN id % 3 <> 0 AND id % 7 = 0
-                    THEN substr(name, 1, length(name) - 1) || 'X'
-                    ELSE name END AS name,
-               nat,
-               CASE WHEN id % 3 <> 0 AND id % 5 = 0 THEN bal_c + 1
-                    ELSE bal_c END AS bal_c,
-               CASE WHEN id % 3 <> 0 AND id % 11 = 0 THEN 'AUTOMOBILE'
-                    ELSE seg END AS seg
-        FROM a
-    ),
-    ak AS (SELECT id, name, nat, bal_c, seg, substr(name, 1, 17) AS blk FROM a),
-    bk AS (SELECT id, name, nat, bal_c, seg, substr(name, 1, 17) AS blk FROM b),
-    sa AS (SELECT nat, blk, COUNT(*) AS na, MIN(id) AS hub_a
-           FROM ak GROUP BY nat, blk),
-    sb AS (SELECT nat, blk, COUNT(*) AS nb, MIN(id) AS hub_b
-           FROM bk GROUP BY nat, blk),
-    st AS (SELECT sa.nat AS nat, sa.blk AS blk, na, hub_a, nb, hub_b
-           FROM sa JOIN sb ON sb.nat = sa.nat AND sb.blk = sa.blk),
-    cand AS (
-        SELECT x.id AS ua, x.name AS an, x.bal_c AS abal, x.seg AS asg,
-               y.id AS vb, y.name AS bn, y.bal_c AS bbal, y.seg AS bsg
-        FROM st
-        JOIN ak x ON x.nat = st.nat AND x.blk = st.blk
-        JOIN bk y ON y.nat = st.nat AND y.blk = st.blk
-        WHERE na * nb <= {_FS_HOT_CAP}
-        UNION ALL
-        SELECT x.id, x.name, x.bal_c, x.seg, y.id, y.name, y.bal_c, y.seg
-        FROM st
-        JOIN ak x ON x.nat = st.nat AND x.blk = st.blk AND x.id = st.hub_a
-        JOIN bk y ON y.nat = st.nat AND y.blk = st.blk
-        WHERE na * nb > {_FS_HOT_CAP}
-        UNION ALL
-        SELECT x.id, x.name, x.bal_c, x.seg, y.id, y.name, y.bal_c, y.seg
-        FROM st
-        JOIN ak x ON x.nat = st.nat AND x.blk = st.blk AND x.id <> st.hub_a
-        JOIN bk y ON y.nat = st.nat AND y.blk = st.blk AND y.id = st.hub_b
-        WHERE na * nb > {_FS_HOT_CAP}
-    ),
-    matched AS (
-        SELECT ua AS u, vb AS v FROM cand
-        WHERE (CASE WHEN an = bn THEN {_FS_W['name'][0]} ELSE {_FS_W['name'][1]} END
-             + CASE WHEN abal = bbal THEN {_FS_W['bal'][0]} ELSE {_FS_W['bal'][1]} END
-             + CASE WHEN asg = bsg THEN {_FS_W['seg'][0]} ELSE {_FS_W['seg'][1]} END)
-              >= {_FS_MATCH}
-    ),
-    {_FS_CC_SQL}
-    """,
-)
-def customers_linkage_clusters_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``customers_linkage_clusters`` under the repeat-heavy production
-    hazard, with the hot-block valve ENGAGED — the FS-blocking sibling
-    of ``dedup_lsh_hot_bucket_capped`` (VERDICT r6 "Next" #3: the
-    measured 30× α 0.79 of the base linkage queries is in-answer f²
-    candidate growth when names repeat verbatim; this query is the
-    mitigation, demonstrated end-to-end under oracle).
-
-    The planted fixture collapses every 3rd record onto one per-nation
-    verbatim identity, so each nation's block holds ~N/75 records per
-    side and all-pairs blocking would emit ~(N/75)² candidates into one
-    join task.  ``blocked_bipartite_pairs(hot_block_cap=128)`` switches
-    those blocks to two-star emission — O(n_a + n_b) candidates, hubs
-    by min id — while every normal block (≤10 ids per side, ≤100
-    candidates) stays exact all-pairs.  Because the planted hot rows
-    are identical records, each hot block is a clique under the FS
-    match predicate, and the two-star spans exactly the same connected
-    component: the entity-size histogram is IDENTICAL to what uncapped
-    all-pairs blocking produces (the differential pytest asserts this),
-    at linear instead of quadratic candidate cost.
-
-    Scale shape: two map-side-combinable per-block groupBys + equi-join
-    -backs replace nothing-but-the-join; candidate count is
-    Σ_cold (n_a·n_b) + Σ_hot (n_a+n_b) ≤ 128·|blocks| + 2·N — linear in
-    N at any repeat rate.  CC is the shared 3-round O(|E|) chain; the
-    oracle replays the cap, the scoring, and the unrolled rounds
-    verbatim in SQL."""
-    cust = load_testdata(spark, sf_dir, "customer")
-    aa, bb = _fs_sides(cust, planted_hot=True)
-    matched = (
-        LK.blocked_bipartite_pairs(
-            aa, bb, ["nat", "blk"], "id", "b_id", hot_block_cap=_FS_HOT_CAP
-        )
-        .filter(_fs_score() >= _FS_MATCH)
-        .select(F.col("id").alias("u"), F.col("b_id").alias("v"))
-    )
-    ed = (
-        matched.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(matched.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        # same sliver fix as the uncapped tier — the capped 3-way
-        # candidate union caches even more output partitions
-        .repartition("src")
-        .transform(tracked_persist)
-    )
-    return _entity_size_histogram(ed)
 
 
 @register(
@@ -11720,7 +6568,7 @@ def customers_linkage_clusters_capped(spark: SparkSession, sf_dir: str) -> DataF
 )
 def pipeline_split_leakage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/val/test LEAKAGE audit: because the 90/5/5 split
-    (the ``split`` stage of ``pipeline_full_train_prep``) hashes each doc_id
+    of a training-prep funnel hashes each doc_id
     independently, two near-duplicate documents can land in DIFFERENT
     splits — the eval-contamination failure that inflates held-out
     metrics.  This query re-derives the split assignment (pure
@@ -11870,143 +6718,6 @@ def orders_ship_latency_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 @register(
-    "dedup_minhash_multiband_sweep",
-    f"""
-    WITH {_CORPUS_SQL}, {_SHINGLE_SQL},
-    seeds AS (SELECT unnest(generate_series(0, 7)) AS seed),
-    hashed AS (
-        SELECT doc_id, seed, md5(CAST(seed AS VARCHAR) || ':' || sh) AS h
-        FROM sh CROSS JOIN seeds
-    ),
-    sig AS (
-        SELECT doc_id,
-               {', '.join(f"MIN(CASE WHEN seed = {i} THEN h END) AS h{i}" for i in range(8))}
-        FROM hashed GROUP BY doc_id
-    ),
-    b4 AS (
-        SELECT doc_id, 0 AS band_idx, md5(concat_ws('|', h0, h1, h2, h3)) AS band_sig FROM sig
-        UNION ALL
-        SELECT doc_id, 1, md5(concat_ws('|', h4, h5, h6, h7)) FROM sig
-    ),
-    b2 AS (
-        SELECT doc_id, 0 AS band_idx, md5(concat_ws('|', h0, h1)) AS band_sig FROM sig
-        UNION ALL SELECT doc_id, 1, md5(concat_ws('|', h2, h3)) FROM sig
-        UNION ALL SELECT doc_id, 2, md5(concat_ws('|', h4, h5)) FROM sig
-        UNION ALL SELECT doc_id, 3, md5(concat_ws('|', h6, h7)) FROM sig
-    ),
-    b1 AS (
-        {' UNION ALL '.join(f"SELECT doc_id, {i} AS band_idx, md5(concat_ws('|', h{i})) AS band_sig FROM sig" for i in range(8))}
-    ),
-    all_bands AS (
-        SELECT 4 AS band_size, * FROM b4
-        UNION ALL SELECT 2, * FROM b2
-        UNION ALL SELECT 1, * FROM b1
-    ),
-    bs AS (
-        SELECT band_size, band_idx, band_sig, COUNT(*) AS c
-        FROM all_bands GROUP BY 1, 2, 3
-    ),
-    flagged AS (
-        SELECT ab.band_size, ab.doc_id
-        FROM all_bands ab
-        JOIN bs ON bs.band_size = ab.band_size
-               AND bs.band_idx = ab.band_idx
-               AND bs.band_sig = ab.band_sig
-        WHERE bs.c >= 2
-        GROUP BY 1, 2
-    ),
-    mass AS (
-        SELECT band_size,
-               SUM(c * (c - 1) // 2) AS collision_pairs,
-               MAX(c) AS max_bucket
-        FROM bs GROUP BY 1
-    ),
-    fl AS (SELECT band_size, COUNT(*) AS n_flagged FROM flagged GROUP BY 1)
-    SELECT CAST(m.band_size AS INTEGER) AS band_size,
-           CAST(8 // m.band_size AS INTEGER) AS n_bands,
-           CAST(m.collision_pairs AS BIGINT) AS collision_pairs,
-           CAST(m.max_bucket AS BIGINT) AS max_bucket,
-           CAST(COALESCE(fl.n_flagged, 0) AS BIGINT) AS n_flagged_docs
-    FROM mass m LEFT JOIN fl ON fl.band_size = m.band_size
-    ORDER BY band_size
-    """,
-)
-def dedup_minhash_multiband_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH banding-parameter tuning sweep WITHOUT building a candidate
-    set: the SAME 8-hash MinHash signatures re-banded three ways —
-    (r=4, b=2) high-precision, (r=2, b=4) balanced, (r=1, b=8)
-    high-recall — scored purely from BUCKET-SIZE MOMENTS: candidate
-    mass Σ C(bucket, 2) (the exact number of in-bucket collisions the
-    banded join WOULD emit), the max bucket size (the hot-bucket /
-    task-skew hazard indicator), and the flagged-doc count (docs
-    sharing any bucket).  This is the S-curve P=1−(1−s^r)^b made
-    empirical, read BEFORE committing to a join: on this corpus r=1
-    is ~100× the candidate mass of r=4 — the measurement that tells
-    an engineer r=1 needs the hot-bucket valve, made without paying
-    the quadratic emission to learn it (an earlier draft materialized
-    the r=1 pairs and took 76 s at sf0.1; this form never joins
-    bucket members at all).
-
-    Scale shape: shingling + signatures run ONCE; each layout is a
-    constant-size projection; bucket sizes are ONE combinable
-    groupBy; the flagged-doc pass is a linear equi-join of bands
-    against bucket counts.  Zero pair materialization at ANY r —
-    Σ C(c,2) comes from counts, not joins.  No BNLJ, no window."""
-    from .operators.dedup import minhash_signatures
-
-    corpus = _dedup_corpus(spark, sf_dir)
-    sig = minhash_signatures(corpus, "doc_id", "text", n_hashes=8)
-    layouts = None
-    for band_size in (4, 2, 1):
-        for b in range(8 // band_size):
-            cols = [f"h{b * band_size + j}" for j in range(band_size)]
-            part = sig.select(
-                F.lit(band_size).alias("band_size"),
-                F.col("doc_id"),
-                F.lit(b).alias("band_idx"),
-                # binary h columns (round-10): fixed-width 16-byte
-                # fields make the separator-less concat injective, so
-                # bucket equality classes match the hex-'|' oracle form
-                F.unhex(F.md5(F.concat(*cols))).alias("band_sig"),
-            )
-            layouts = part if layouts is None else layouts.unionByName(part)
-    # round 11: a pre-persist repartition on (band_size, band_idx,
-    # band_sig) — the sliver fix that paid off for the linkage/LPA
-    # edge caches — was A/B'd here and measured ~5-10% WORSE at sf0.1:
-    # the signature cache is already few partitions, so the extra full
-    # exchange of the 14× frame outweighs the consumers' partitioning
-    # reuse.  Left as-is deliberately (measured negative result).
-    layouts = layouts.transform(tracked_persist)
-    bs = layouts.groupBy("band_size", "band_idx", "band_sig").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    mass = bs.groupBy("band_size").agg(
-        F.sum(F.expr("div(c * (c - 1), 2)")).alias("collision_pairs"),
-        F.max("c").alias("max_bucket"),
-    )
-    flagged = (
-        layouts.join(bs.filter(F.col("c") >= 2), ["band_size", "band_idx", "band_sig"])
-        .select("band_size", "doc_id")
-        .distinct()
-        .groupBy("band_size")
-        .agg(F.count(F.lit(1)).alias("n_flagged"))
-    )
-    return (
-        mass.join(flagged, "band_size", "left")
-        .select(
-            F.col("band_size").cast("int"),
-            F.expr("cast(div(8, band_size) as int)").alias("n_bands"),
-            F.col("collision_pairs").cast("bigint"),
-            F.col("max_bucket").cast("bigint"),
-            F.coalesce(F.col("n_flagged"), F.lit(0))
-            .cast("bigint")
-            .alias("n_flagged_docs"),
-        )
-        .orderBy("band_size")
-    )
-
-
-@register(
     "events_user_lifetime_stats",
     """
     WITH ul AS (
@@ -12028,9 +6739,9 @@ def events_user_lifetime_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """User-lifetime histogram: days between each user's first and
     last event, bucketed by week, with cohort mass and per-user
     intensity — the churn-shape summary (is the base long-lived or a
-    spike of one-week tourists?) that complements the cohort-retention
-    matrix (events_cohort_retention tracks WHEN users return; this
-    tracks HOW LONG they stay at all).
+    spike of one-week tourists?) that complements a cohort-retention
+    matrix (which tracks WHEN users return; this tracks HOW LONG they
+    stay at all).
 
     Scale shape: ONE map-side-combinable groupBy(user) computes
     min/max/count per user; the week histogram is a second combinable
@@ -12195,7 +6906,7 @@ def dedup_removal_bias_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (never all-pairs), distinct-projected to doc ids; the quartile
     cutoffs use the distinct-length grid cumsum (bounded by the
     length domain — global-window-allowlisted) with a 1-row threshold
-    broadcast (BNLJ-allowlisted, as stats_ks_two_sample); tagging is
+    broadcast (BNLJ-allowlisted); tagging is
     a LEFT key join + one combinable 4-row groupBy."""
     from .operators.prefixsum import bucketed_cumsum
 
@@ -12439,9 +7150,8 @@ def events_type_mix_drift_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     between each week's event-type distribution and the whole-corpus
     mix — the instrumentation-health monitor that catches a logger
     change ('clicks stopped firing in week 9') as a composition shift
-    even when total volume looks normal.  Complements
-    events_distribution_drift (VALUE drift between time halves) on
-    the categorical axis with a per-week trail.
+    even when total volume looks normal: categorical drift with a
+    per-week trail.
 
     Integer contract: shares in micro-units by truncating division;
     TVD = Σ|dev| // 2000 (the ½ and the permille fold into one
@@ -12720,9 +7430,8 @@ def events_new_vs_returning_daily(spark: SparkSession, sf_dir: str) -> DataFrame
     """Daily active users split into NEW (first-ever active day) vs
     RETURNING — the growth-accounting decomposition behind every DAU
     chart: flat DAU with a rising new-share means churn is eating
-    acquisition; the cohort-retention matrix
-    (events_cohort_retention) explains WHERE the returners come from,
-    this gives the daily topline split.
+    acquisition; a cohort-retention matrix explains WHERE the
+    returners come from, this gives the daily topline split.
 
     Scale shape: one groupBy(user, day) dedup, one combinable
     groupBy(user) MIN for first-day, one key equi-join back, one
@@ -13057,9 +7766,9 @@ def sample_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_lsh_precision_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate PRECISION, stratified by shared-band count: of
     the pairs the banded join emits, what fraction survives exact
-    Jaccard ≥ 0.3 verification?  The operational companion to the
-    recall gates (`dedup_lsh_recall_sampled` answers "what do we
-    MISS"; this answers "what do we WASTE verifying") — together they
+    Jaccard ≥ 0.3 verification?  The operational companion to a
+    recall gate (recall answers "what do we MISS"; this answers "what
+    do we WASTE verifying") — together they
     locate the corpus on the banding S-curve, and the per-band split
     shows the expected monotonicity (2-band agreers verify at a far
     higher rate than 1-band accidents), the number that justifies

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from sales_azure_data_engineer_project_spark.operators import dedup as D
 from sales_azure_data_engineer_project_spark.operators import multimodal as M
@@ -36,95 +35,11 @@ def test_exact_dedup_groups(spark, docs):
     assert by_keeper[3] == 1 and by_keeper[4] == 1 and by_keeper[5] == 1
 
 
-def test_jaccard_pairs_finds_near_dup(spark, docs):
-    pairs = {(r["id_a"], r["id_b"]): r["jac_permille"] for r in
-             D.jaccard_pairs(docs, "doc_id", "text", min_permille=300).collect()}
-    assert pairs[(1, 2)] == 1000  # exact dup → jaccard 1.0
-    assert (1, 3) in pairs  # near dup found
-    assert all((4 not in p) for p in pairs)  # unrelated doc not paired
-
-
-def test_posting_freq_cap_exactness_and_boilerplate_pruning(spark):
-    """The posting_freq_cap valve contract: (a) a cap no shingle's df
-    reaches reproduces the uncapped result exactly; (b) a boilerplate
-    shingle present in EVERY doc is excluded at a firing cap — pairs
-    linked only through it disappear while true near-dups survive with
-    sizes recomputed over retained shingles."""
-    boiler = "click here to read more"
-    df = spark.createDataFrame(
-        [
-            (1, f"alpha beta gamma delta {boiler}"),
-            (2, f"alpha beta gamma delta epsilon {boiler}"),  # near dup of 1
-            (3, f"unrelated words entirely different topic {boiler}"),
-            (4, f"another separate subject matter entirely {boiler}"),
-        ],
-        ["doc_id", "text"],
-    )
-    uncapped = {
-        (r["id_a"], r["id_b"]): (r["common"], r["jac_permille"])
-        for r in D.jaccard_pairs(df, "doc_id", "text", min_permille=1).collect()
-    }
-    high_cap = {
-        (r["id_a"], r["id_b"]): (r["common"], r["jac_permille"])
-        for r in D.jaccard_pairs(
-            df, "doc_id", "text", min_permille=1, posting_freq_cap=10
-        ).collect()
-    }
-    assert high_cap == uncapped  # (a) cap above max df → identical
-    # the 5-token boilerplate tail yields shingles shared by all 4 docs;
-    # uncapped links every doc pair through them
-    assert (3, 4) in uncapped
-    capped = {
-        (r["id_a"], r["id_b"]): (r["common"], r["jac_permille"])
-        for r in D.jaccard_pairs(
-            df, "doc_id", "text", min_permille=1, posting_freq_cap=2
-        ).collect()
-    }
-    assert (3, 4) not in capped  # boilerplate-only pair pruned
-    assert (1, 2) in capped  # true near dup survives
-    # sizes recomputed over RETAINED shingles: docs 1/2 keep 4 and 5
-    # shingles (df ≤ 2), sharing 2 → jaccard 2000 div (4+5−2) = 285
-    assert capped[(1, 2)] == (2, 285)
-
-    cont = {
-        (r["id_a"], r["id_b"])
-        for r in D.containment_pairs(
-            df, "doc_id", "text", min_permille=500, posting_freq_cap=2
-        ).collect()
-    }
-    assert (1, 2) in cont and (3, 4) not in cont
-
-    with pytest.raises(ValueError, match="posting_freq_cap"):
-        D.jaccard_pairs(df, "doc_id", "text", posting_freq_cap=0)
-
-
 def test_minhash_lsh_candidates(spark, docs):
     bands = D.minhash_bands(docs, "doc_id", "text")
     cands = {(r["id_a"], r["id_b"]) for r in D.lsh_candidate_pairs(bands, "doc_id").collect()}
     assert (1, 2) in cands  # identical docs always collide in every band
     assert all((4 not in p) for p in cands)
-
-
-def test_minhash_verified_pairs_subset_of_jaccard(spark, docs):
-    """LSH-verified pairs must be a SUBSET of the full posting-list
-    Jaccard pairs (recall < 1 by banding), and every emitted pair must
-    carry the IDENTICAL exact (common, jac_permille) — verification
-    recomputes true Jaccard, so precision matches the brute path."""
-    full = {
-        (r["id_a"], r["id_b"]): (r["common"], r["jac_permille"])
-        for r in D.jaccard_pairs(docs, "doc_id", "text", min_permille=300).collect()
-    }
-    lsh = {
-        (r["id_a"], r["id_b"]): (r["common"], r["jac_permille"])
-        for r in D.minhash_verified_pairs(
-            docs, "doc_id", "text", min_permille=300
-        ).collect()
-    }
-    assert set(lsh) <= set(full)
-    for k, v in lsh.items():
-        assert v == full[k]
-    # identical docs collide in every band and verify at jaccard 1.0
-    assert lsh[(1, 2)] == full[(1, 2)]
 
 
 def test_pq_codes_and_adc_retrieval(spark):
@@ -270,26 +185,6 @@ def test_arrow_assignment_matches_sql_fold(spark, sf_smoke):
     assert sql_rows == arrow_rows
 
 
-def test_training_prep_funnel_invariants(spark, sf_smoke):
-    """The funnel's stage populations must be monotone non-increasing
-    and stage 0 must equal the planted-corpus size."""
-    import __spark_entry__ as entry_mod
-    from sales_azure_data_engineer_project_spark.queries_extensions import (
-        _dedup_corpus,
-    )
-
-    rows = entry_mod.queries()["pipeline_training_prep"](spark, sf_smoke).collect()
-    assert [r["stage"] for r in rows] == [
-        "raw", "quality", "lang", "exact_dedup", "near_dedup", "sample",
-    ]
-    docs = [r["n_docs"] for r in rows]
-    toks = [r["n_tokens"] for r in rows]
-    assert docs == sorted(docs, reverse=True)
-    assert toks == sorted(toks, reverse=True)
-    assert docs[0] == _dedup_corpus(spark, sf_smoke).count()
-    assert docs[-1] > 0
-
-
 def test_token_count_invariants(spark, sf_smoke):
     """BPE-ish pre-tokenization splits at least as fine as whitespace:
     bpe_tokens >= ws_tokens for every doc, and the density ratio is
@@ -346,24 +241,6 @@ def test_pack_sequences_invariants(spark, sf_smoke):
         assert 0 <= r["n_straddling"] <= r["n_docs"]
 
 
-def test_incremental_matches_planted_copies(spark, sf_smoke):
-    """Every planted EXACT copy (doc_id+200000) must match its original
-    at 1000 permille; near-dup clones (+100000) match their original
-    with high Jaccard; no new doc matches itself."""
-    import __spark_entry__ as entry_mod
-
-    rows = entry_mod.queries()["dedup_incremental_batch"](spark, sf_smoke).collect()
-    assert rows
-    by_new = {r["new_id"]: r for r in rows}
-    for new_id, r in by_new.items():
-        assert new_id >= 100000 and r["match_id"] < 100000
-    exact = [r for r in rows if r["new_id"] >= 200000]
-    assert exact, "expected exact copies in the batch"
-    for r in exact:
-        assert r["jac_permille"] == 1000
-        assert r["match_id"] == r["new_id"] - 200000
-
-
 def test_semdedup_drop_list_vs_brute(spark, sf_smoke):
     """SemDeDup differential at sf0.001: the registered drop list must
     equal the brute-force rule 'drop b iff some a<b in b's k-means cell
@@ -396,48 +273,6 @@ def test_semdedup_drop_list_vs_brute(spark, sf_smoke):
                 expect[ib] = (cl, ia)
     assert out == expect
     assert out, "expected a non-empty drop list on the smoke corpus"
-
-
-def test_bpe_merges_vs_python_reference(spark, sf_smoke):
-    """Third formulation cross-check: the registered BPE query (Spark
-    F.aggregate fold; DuckDB replays it as windows) must equal a plain
-    Python BPE trainer run on the same word-frequency table — greedy
-    left-to-right merge, (count DESC, lhs, rhs) argmax tiebreak."""
-    import re
-    from collections import Counter
-
-    import __spark_entry__ as entry_mod
-    from sales_azure_data_engineer_project_spark.io import load_testdata
-
-    got = [
-        (r["rnd"], r["lhs"], r["rhs"], r["merged"], r["pair_count"])
-        for r in entry_mod.queries()["vocab_bpe_merges"](spark, sf_smoke).collect()
-    ]
-
-    texts = [
-        r["text"] for r in load_testdata(spark, sf_smoke, "documents").select("text").collect()
-    ]
-    freq = Counter(w for t in texts for w in re.split(r"\s+", t.lower()) if w)
-    vocab = sorted(freq.items(), key=lambda kv: (-kv[1], kv[0]))[:2000]
-    words = {w: [*w, "</w>"] for w, _ in vocab}
-    expect = []
-    for rnd in range(1, 5):
-        counts: Counter = Counter()
-        for w, n in vocab:
-            s = words[w]
-            for a, b in zip(s, s[1:]):
-                counts[(a, b)] += n
-        (x, y), cnt = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-        for w, _ in vocab:
-            s, out = words[w], []
-            for sym in s:
-                if out and out[-1] == x and sym == y:
-                    out[-1] = x + y
-                else:
-                    out.append(sym)
-            words[w] = out
-        expect.append((rnd, x, y, x + y, cnt))
-    assert got == expect
 
 
 def test_exact_substring_dedup_removes_planted_copies(spark, sf_smoke):
@@ -510,39 +345,6 @@ def test_pq_adc_cell_restriction_equals_postfilter(spark):
     for q in expected:
         got_sorted = [ (n_, ip) for n_, ip, _ in sorted(got[q], key=lambda t: t[2]) ]
         assert got_sorted == expected[q], f"query {q}"
-
-
-def test_containment_catches_subset_jaccard_misses(spark):
-    """A short doc wholly contained in a long one: containment from the
-    short side is 1000‰ while symmetric Jaccard stays below any dedup
-    threshold — the quote-inclusion case the asymmetric measure exists
-    for."""
-    words = [f"tok{i}x" for i in range(60)]
-    long_doc = " ".join(words)
-    short_doc = " ".join(words[:10])  # shingles(short) ⊂ shingles(long)
-    df = spark.createDataFrame(
-        [(1, long_doc), (2, short_doc), (3, "unrelated totally different words entirely")],
-        ["doc_id", "text"],
-    )
-    cont = D.containment_pairs(df, "doc_id", "text", min_permille=800).collect()
-    assert len(cont) == 1
-    r = cont[0]
-    assert (r["id_a"], r["id_b"]) == (1, 2)
-    # short side: 8 shingles, all present in long
-    assert r["cont_b_permille"] == 1000
-    # long side: 8/58 shingles shared
-    assert r["cont_a_permille"] == 1000 * 8 // 58
-    # symmetric Jaccard would NOT flag this pair at the same bar
-    jac = D.jaccard_pairs(df, "doc_id", "text", min_permille=800).collect()
-    assert jac == []
-
-
-def test_containment_symmetric_on_exact_dup(spark):
-    df = spark.createDataFrame(
-        [(1, "a b c d e f g h"), (2, "a b c d e f g h")], ["doc_id", "text"]
-    )
-    r = D.containment_pairs(df, "doc_id", "text").collect()[0]
-    assert r["cont_a_permille"] == r["cont_b_permille"] == 1000
 
 
 def test_dsir_importance_prefers_target_profile(spark, sf_smoke):
@@ -635,24 +437,6 @@ def test_boilerplate_chunks_flags_planted_dups(spark, sf_smoke):
         assert 0 <= r["n_shared"] <= r["n_chunks"]
 
 
-def test_containment_estimator_calibrated_at_extremes(spark, sf_smoke):
-    """Background (adjacent-id) pairs anchor decile 0, planted dups
-    anchor decile 10; the signature-based estimate must be within
-    150 permille of exact containment at both extremes."""
-    from sales_azure_data_engineer_project_spark.queries_extensions import (
-        dedup_minhash_containment_estimate,
-    )
-
-    rows = {
-        r["cont_decile"]: r
-        for r in dedup_minhash_containment_estimate(spark, sf_smoke).collect()
-    }
-    assert 0 in rows and 10 in rows
-    assert rows[0]["n_pairs"] > 0 and rows[10]["n_pairs"] > 0
-    assert rows[0]["avg_abs_err_permille"] <= 150
-    assert rows[10]["avg_abs_err_permille"] <= 150
-
-
 def test_pca_power_iteration_matches_numpy(spark, sf_smoke):
     """Three quantized power iterations must agree with numpy's exact
     eigendecomposition of the same SQ8 second-moment matrix: loading
@@ -681,41 +465,6 @@ def test_pca_power_iteration_matches_numpy(spark, sf_smoke):
     cos = float(got @ top_vec) / (np.linalg.norm(got) * np.linalg.norm(top_vec))
     assert cos > 0.999, cos
     assert abs(lam - top_val) / top_val < 0.02, (lam, top_val)
-
-
-def test_ccnet_buckets_partition_and_order(spark, sf_smoke):
-    """Per language the three buckets partition the scored docs and the
-    per-bucket mean familiarity is ordered tail < middle < head (they
-    are score ranges, so ordering is structural — a violation means the
-    cutoff extraction is wrong)."""
-    import __spark_entry__ as entry_mod
-    from sales_azure_data_engineer_project_spark.io import load_testdata
-    from pyspark.sql import functions as F
-
-    rows = entry_mod.queries()["text_ccnet_perplexity_buckets"](
-        spark, sf_smoke
-    ).collect()
-    assert {r["bucket"] for r in rows} <= {"head", "middle", "tail"}
-
-    per_lang: dict = {}
-    for r in rows:
-        per_lang.setdefault(r["lang"], {})[r["bucket"]] = r
-
-    docs = load_testdata(spark, sf_smoke, "documents")
-    scored_counts = {
-        r["lang"]: r["n"]
-        for r in docs.filter(F.length(F.lower("text")) >= 3)
-        .groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    for lang, buckets in per_lang.items():
-        assert sum(b["n_docs"] for b in buckets.values()) == scored_counts[lang]
-        if {"tail", "middle", "head"} <= set(buckets):
-            t = buckets["tail"]["avg_familiarity_permille"]
-            m = buckets["middle"]["avg_familiarity_permille"]
-            h = buckets["head"]["avg_familiarity_permille"]
-            assert t <= m <= h, (lang, t, m, h)
 
 
 def test_bottomk_sketch_is_mergeable(spark, sf_smoke):
@@ -846,21 +595,6 @@ def test_cross_source_matrix_covers_all_lsh_pairs(spark, sf_smoke):
         assert r["source_a"] <= r["source_b"]
         assert r["cross_source"] == (r["source_a"] != r["source_b"])
         assert 0 <= r["n_strong"] <= r["n_pairs"]
-
-
-def test_calibration_buckets_partition_scored_docs(spark, sf_smoke):
-    """Bucket populations sum to the classifier-scored doc count and
-    every count is internally consistent."""
-    import __spark_entry__ as entry_mod
-
-    qs = entry_mod.queries()
-    n_scored = qs["text_quality_classifier_hashed"](spark, sf_smoke).count()
-    rows = qs["quality_score_calibration"](spark, sf_smoke).collect()
-    assert sum(r["n_docs"] for r in rows) == n_scored
-    for r in rows:
-        assert 0 <= r["n_keep"] <= r["n_docs"]
-        assert 0 <= r["n_gopher_pass"] <= r["n_docs"]
-        assert r["gopher_pass_permille"] == (1000 * r["n_gopher_pass"]) // r["n_docs"]
 
 
 def test_unimax_closed_form_equals_sequential_waterfill(spark, sf_smoke):
@@ -1038,72 +772,6 @@ def test_embedding_outliers_consistent_with_cluster_radius(spark, sf_smoke):
         assert ds[0] == radius[c]
 
 
-def test_bootstrap_ci_python_differential(spark):
-    """Exact Python replay of the Poisson-bootstrap on a small fixture:
-    identical md5-derived inverse-CDF weights, identical integer-milli
-    replica means — the determinism that makes the error bars
-    reproducible across engines and reruns."""
-    import hashlib
-    import os
-    import tempfile
-
-    from sales_azure_data_engineer_project_spark.queries_extensions import (
-        _POIS1_CUTS,
-        stats_bootstrap_ci,
-    )
-
-    rows = []
-    for i in range(30):
-        flag = "AB"[i % 2]
-        price = float(100 + 7 * i) + 0.25  # clean 2-decimal doubles
-        rows.append((1000 + i, 1, 1, i % 7, 10.0, price, 0.0, 0.0, flag, "O"))
-    cols = [
-        "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
-        "l_extendedprice", "l_discount", "l_tax", "l_returnflag", "l_linestatus",
-    ]
-
-    def weight(key, r):
-        g, j = divmod(r, 4)
-        h = hashlib.md5(f"{key}:{'abcd'[g]}".encode()).hexdigest()
-        u = int(h[8 * j : 8 * j + 8], 16)
-        for k, c in enumerate(_POIS1_CUTS):
-            if u < c:
-                return k
-        return 5
-
-    expect = {}
-    for flag in "AB":
-        sub = [r for r in rows if r[8] == flag]
-        cents = {
-            f"{r[0]}|{r[3]}|{r[5]}|{r[4]}": round(r[5] * 100) for r in sub
-        }
-        boots = []
-        for rep in range(16):
-            num = sum(weight(k, rep) * c for k, c in cents.items())
-            den = sum(weight(k, rep) for k in cents)
-            boots.append(1000 * num // (100 * den))
-        mean = 1000 * sum(cents.values()) // (100 * len(cents))
-        expect[flag] = (
-            len(sub), mean, min(boots), max(boots), max(boots) - min(boots)
-        )
-
-    with tempfile.TemporaryDirectory() as d:
-        schema = T.StructType(
-            [f for f in TESTDATA_SCHEMAS["lineitem"].fields if f.name in cols]
-        )
-        spark.createDataFrame(rows, schema).write.parquet(
-            os.path.join(d, "lineitem.parquet")
-        )
-        got = {
-            r["flag"]: (
-                r["n_rows"], r["mean_milli"], r["boot_min_milli"],
-                r["boot_max_milli"], r["spread_milli"],
-            )
-            for r in stats_bootstrap_ci(spark, d).collect()
-        }
-    assert got == expect
-
-
 def test_metadata_consistency_flags_planted_drift(spark):
     """A doc whose stored n_chars disagrees with its payload by 7 must
     be the only mismatch, with the drift magnitude reported."""
@@ -1159,22 +827,6 @@ def test_hybrid_rrf_fuses_both_tiers(spark, sf_smoke):
             assert hyb[key] == rk, f"lexical rank drifted for {key}"
 
 
-def test_bloom_decontam_no_false_negatives(spark, sf_smoke):
-    """Bloom filters admit false positives but NEVER false negatives:
-    the exactly-confirmed doc set inside the Bloom report must equal
-    the doc set the exact-join decontaminate query flags."""
-    from sales_azure_data_engineer_project_spark import queries_core as Q
-    from sales_azure_data_engineer_project_spark import queries_extensions  # noqa: F401 (registers)
-
-    rep = Q.QUERIES["pipeline_bloom_decontam"](spark, sf_smoke).collect()[0]
-    exact_docs = Q.QUERIES["pipeline_decontaminate"](spark, sf_smoke).count()
-    assert rep["n_exact_docs"] == exact_docs
-    assert rep["n_bloom_docs"] >= rep["n_exact_docs"]
-    assert rep["n_fp_docs"] == rep["n_bloom_docs"] - rep["n_exact_docs"]
-    assert rep["n_bloom_spans"] >= rep["n_exact_spans"]
-    assert 0 < rep["bloom_bits_set"] <= 65536
-
-
 def test_kcenter_radius_monotone_and_picks_distinct(spark, sf_smoke):
     from sales_azure_data_engineer_project_spark import queries_core as Q
     from sales_azure_data_engineer_project_spark import queries_extensions  # noqa: F401 (registers)
@@ -1189,22 +841,6 @@ def test_kcenter_radius_monotone_and_picks_distinct(spark, sf_smoke):
     radii = [r["radius2"] for r in rows]
     assert radii == sorted(radii, reverse=True), "coverage radius must shrink"
     assert radii[-1] >= 0
-
-
-def test_hll_error_within_band(spark, sf_smoke):
-    """HLL with LinearCounting small-range correction: realized error
-    stays within the expected band at every tested cardinality (the
-    uncorrected raw estimator reads ~2.4x high at n=100)."""
-    from sales_azure_data_engineer_project_spark import queries_core as Q
-    from sales_azure_data_engineer_project_spark import queries_extensions  # noqa: F401 (registers)
-
-    rows = Q.QUERIES["approx_distinct_hll"](spark, sf_smoke).collect()
-    assert len(rows) == 3
-    for r in rows:
-        assert r["exact_distinct"] > 0
-        assert r["err_permille"] <= 200, (
-            f"{r['column_name']}: est {r['est_milli']} vs {r['exact_distinct']}"
-        )
 
 
 def test_bucketed_cumsum_matches_global_window(spark):
@@ -1230,64 +866,6 @@ def test_bucketed_cumsum_matches_global_window(spark):
         for r in df.withColumn("ref", F.sum("x").over(w)).collect()
     }
     assert got == want
-
-
-def test_ks_two_sample_differential(spark, sf_smoke):
-    """d_micro and the argmax location must match a NumPy ECDF
-    recomputation from the raw rows."""
-    import numpy as np
-    from sales_azure_data_engineer_project_spark import queries_core as Q
-    from sales_azure_data_engineer_project_spark import queries_extensions  # noqa: F401 (registers)
-
-    got = {
-        r["l_returnflag"]: r
-        for r in Q.QUERIES["stats_ks_two_sample"](spark, sf_smoke).collect()
-    }
-    import pyarrow.parquet as pq
-    import os
-
-    t = pq.read_table(
-        os.path.join(sf_smoke, "lineitem.parquet"),
-        columns=["l_returnflag", "l_extendedprice"],
-    ).to_pandas()
-    v = np.rint(t["l_extendedprice"].to_numpy() * 100).astype(np.int64)
-    grp = t["l_returnflag"].to_numpy()
-    grid = np.unique(v)
-    n_all = len(v)
-    for flag in np.unique(grp):
-        a = np.sort(v[grp == flag])
-        b = np.sort(v[grp != flag])
-        ca = np.searchsorted(a, grid, side="right").astype(object)
-        cb = np.searchsorted(b, grid, side="right").astype(object)
-        diff = abs(ca * len(b) - cb * len(a))
-        maxdiff = max(diff)
-        r = got[str(flag)]
-        assert r["n_grp"] == len(a) and r["n_rest"] == len(b)
-        assert r["diff_scaled"] == maxdiff
-        assert r["d_micro"] == (1_000_000 * maxdiff) // (len(a) * len(b))
-        assert r["ks_at_centi"] == int(grid[diff == maxdiff].min())
-
-
-def test_set_ops_kmv_invariants(spark, sf_smoke):
-    """10 unordered type pairs; intersection ≤ union on both the exact
-    and estimated sides; Jaccards in [0, 1000]; the k=64 estimate
-    stays inside a generous 3σ band (RSE ≈ 1/√62 ≈ 12.7%)."""
-    from sales_azure_data_engineer_project_spark import queries_core as Q
-    from sales_azure_data_engineer_project_spark import queries_extensions  # noqa: F401 (registers)
-
-    rows = Q.QUERIES["approx_set_ops_kmv"](spark, sf_smoke).collect()
-    assert len(rows) == 10
-    assert len({(r["type_a"], r["type_b"]) for r in rows}) == 10
-    for r in rows:
-        assert r["type_a"] < r["type_b"]
-        assert 0 <= r["exact_inter"] <= r["exact_union"]
-        assert 0 <= r["est_inter"] <= r["est_union"]
-        assert 0 <= r["jaccard_exact_milli"] <= 1000
-        assert 0 <= r["jaccard_est_milli"] <= 1000
-        assert r["err_union_permille"] <= 400, (
-            f"{r['type_a']}×{r['type_b']}: est {r['est_union']}"
-            f" vs exact {r['exact_union']}"
-        )
 
 
 def test_priority_sample_matches_python_reference(spark, sf_smoke):
@@ -1341,20 +919,6 @@ def test_priority_sample_plan_has_partial_window_group_limit(spark, sf_smoke):
         .toString()
     )
     assert "WindowGroupLimit" in plan and "Partial" in plan
-
-
-def test_hll_merged_equals_direct(spark, sf_smoke):
-    """Register-wise max of per-day sketches must reproduce the direct
-    single-pass estimate bit-exactly (mergeability), within the error
-    band vs the exact count."""
-    from sales_azure_data_engineer_project_spark import queries_core as Q
-    from sales_azure_data_engineer_project_spark import queries_extensions  # noqa: F401 (registers)
-
-    r = Q.QUERIES["approx_distinct_hll_merged"](spark, sf_smoke).collect()[0]
-    assert r["n_days"] >= 2, "mergeability needs multiple daily sketches"
-    assert r["merged_equals_direct"] == 1
-    assert r["est_merged_milli"] == r["est_direct_milli"]
-    assert r["exact_distinct"] > 0 and r["err_permille"] <= 200
 
 
 def test_chi2_independence_differential(spark, sf_smoke):
@@ -2440,67 +2004,6 @@ def test_dau_wau_differential(spark):
         assert r["stickiness_permille"] == (1000 * len(users)) // len(wau_set)
 
 
-def test_linkage_clusters_match_true_cc(spark):
-    """customers_linkage_clusters: the 3-round min-label propagation
-    must equal TRUE connected components on the planted linkage graph
-    (i.e. the fixture converges — a 4th round would be a no-op), and
-    the histogram must match a plain-Python union-find."""
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    # rebuild the match edge set exactly as the query defines it
-    rows = duckdb.sql(
-        f"""
-        WITH a AS (
-            SELECT c_custkey AS id, c_name AS name, c_nationkey AS nat,
-                   CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c,
-                   c_mktsegment AS seg
-            FROM '{sf}/customer.parquet'
-        ),
-        b AS (
-            SELECT id + 1000000 AS id,
-                   CASE WHEN id % 7 = 0 THEN substr(name, 1, length(name) - 1) || 'X'
-                        ELSE name END AS name,
-                   nat,
-                   CASE WHEN id % 5 = 0 THEN bal_c + 1 ELSE bal_c END AS bal_c,
-                   CASE WHEN id % 11 = 0 THEN 'AUTOMOBILE' ELSE seg END AS seg
-            FROM a
-        )
-        SELECT a.id, b.id FROM a JOIN b
-          ON a.nat = b.nat AND substr(a.name, 1, 17) = substr(b.name, 1, 17)
-        WHERE (CASE WHEN a.name = b.name THEN 40 ELSE -12 END
-             + CASE WHEN a.bal_c = b.bal_c THEN 22 ELSE -4 END
-             + CASE WHEN a.seg = b.seg THEN 8 ELSE -9 END) >= 45
-        """
-    ).fetchall()
-    parent: dict = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for u, v in rows:
-        parent[find(u)] = find(v)
-    from collections import Counter
-
-    sizes = Counter()
-    for node in list(parent):
-        sizes[find(node)] += 1
-    hist = Counter(sizes.values())
-    expect = sorted(
-        (s, c, s * c) for s, c in hist.items()
-    )
-    got = [
-        (r["entity_size"], r["n_entities"], r["n_records"])
-        for r in m.queries()["customers_linkage_clusters"](spark, sf).collect()
-    ]
-    assert got == expect
-
-
 def test_split_leakage_matrix_differential(spark):
     """pipeline_split_leakage_check vs a Python split-tagging of the
     SAME candidate pairs (extracted via the shared LSH operators):
@@ -2575,53 +2078,6 @@ def test_ship_latency_quantiles_differential(spark):
         assert r["n_items"] == n
         for p in (25, 50, 75, 95):
             assert r[f"p{p}_days"] == ds[(p * n + 99) // 100 - 1]
-
-
-def test_multiband_sweep_differential(spark):
-    """dedup_minhash_multiband_sweep vs plain-Python bucket moments
-    over the SAME signature frame, plus the S-curve invariant: wider
-    banding (smaller r) always flags a superset of docs."""
-    from collections import Counter
-
-    import __spark_entry__ as m
-    from sales_azure_data_engineer_project_spark.operators.dedup import (
-        minhash_signatures,
-    )
-    from sales_azure_data_engineer_project_spark.queries_extensions import (
-        _dedup_corpus,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    sig = minhash_signatures(
-        _dedup_corpus(spark, sf), "doc_id", "text", n_hashes=8
-    ).collect()
-    got = {
-        r["band_size"]: r
-        for r in m.queries()["dedup_minhash_multiband_sweep"](spark, sf).collect()
-    }
-    flagged_by_r = {}
-    for band_size in (4, 2, 1):
-        buckets: Counter = Counter()
-        members: dict = {}
-        for row in sig:
-            for b in range(8 // band_size):
-                # h columns are 16-byte binary (round-10) — the tuple
-                # of bytes is the injective bucket key the fixed-width
-                # concat produces
-                cols = [bytes(row[f"h{b * band_size + j}"]) for j in range(band_size)]
-                key = (b, tuple(cols))
-                buckets[key] += 1
-                members.setdefault(key, []).append(row["doc_id"])
-        collision = sum(c * (c - 1) // 2 for c in buckets.values())
-        flagged = {d for k, ds in members.items() for d in ds if buckets[k] >= 2}
-        flagged_by_r[band_size] = flagged
-        r = got[band_size]
-        assert r["n_bands"] == 8 // band_size
-        assert r["collision_pairs"] == collision
-        assert r["max_bucket"] == max(buckets.values())
-        assert r["n_flagged_docs"] == len(flagged)
-    # S-curve: r=1 flags a superset of r=2, which flags a superset of r=4
-    assert flagged_by_r[4] <= flagged_by_r[2] <= flagged_by_r[1]
 
 
 def test_user_lifetime_differential(spark):
@@ -3109,159 +2565,6 @@ def test_lsh_precision_differential(spark):
         assert r["precision_permille"] == (1000 * nv) // nc
     if 1 in got and 2 in got:
         assert got[2]["precision_permille"] >= got[1]["precision_permille"]
-
-
-def test_linkage_capped_equals_uncapped_cc_and_bounds_candidates(spark):
-    """customers_linkage_clusters_capped: on the planted repeat-heavy
-    fixture the hot blocks are identical-record cliques, so two-star
-    emission must yield EXACTLY the entity histogram that exact
-    all-pairs blocking yields (true CC via plain-Python union-find over
-    the uncapped match edges), while emitting far fewer candidates.
-    sf0.01 so the cap actually engages (~20 hot ids per nation per
-    side -> 400 candidates/block > 128; sf0.001 blocks stay cold)."""
-    import duckdb
-
-    import __spark_entry__ as m
-    from sales_azure_data_engineer_project_spark.operators import linkage as LK
-    from sales_azure_data_engineer_project_spark.queries_extensions import (
-        _FS_HOT_CAP,
-        _FS_MATCH,
-        _FS_W,
-        _fs_sides,
-    )
-    from sales_azure_data_engineer_project_spark.io import load_testdata
-
-    sf = "/root/testdata/sf0.01"
-    planted = f"""
-        WITH a0 AS (
-            SELECT c_custkey AS id, c_name AS name, c_nationkey AS nat,
-                   CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c,
-                   c_mktsegment AS seg
-            FROM '{sf}/customer.parquet'
-        ),
-        a AS (
-            SELECT id,
-                   CASE WHEN id % 3 = 0 THEN 'Customer#HOTBLOCK' ELSE name END AS name,
-                   nat,
-                   CASE WHEN id % 3 = 0 THEN CAST(424242 + nat AS BIGINT)
-                        ELSE bal_c END AS bal_c,
-                   CASE WHEN id % 3 = 0 THEN 'BUILDING' ELSE seg END AS seg
-            FROM a0
-        ),
-        b AS (
-            SELECT id + 1000000 AS id,
-                   CASE WHEN id % 3 <> 0 AND id % 7 = 0
-                        THEN substr(name, 1, length(name) - 1) || 'X'
-                        ELSE name END AS name,
-                   nat,
-                   CASE WHEN id % 3 <> 0 AND id % 5 = 0 THEN bal_c + 1
-                        ELSE bal_c END AS bal_c,
-                   CASE WHEN id % 3 <> 0 AND id % 11 = 0 THEN 'AUTOMOBILE'
-                        ELSE seg END AS seg
-            FROM a
-        )
-    """
-    # TRUE components: exact all-pairs blocking (no cap) -> union-find.
-    # Weights interpolated from _FS_W/_FS_MATCH (ADVICE r7) so a future
-    # weight change keeps this baseline in sync with the registered
-    # oracle instead of silently diverging.
-    edges = duckdb.sql(
-        planted
-        + f"""
-        SELECT a.id, b.id FROM a JOIN b
-          ON a.nat = b.nat AND substr(a.name, 1, 17) = substr(b.name, 1, 17)
-        WHERE (CASE WHEN a.name = b.name THEN {_FS_W['name'][0]} ELSE {_FS_W['name'][1]} END
-             + CASE WHEN a.bal_c = b.bal_c THEN {_FS_W['bal'][0]} ELSE {_FS_W['bal'][1]} END
-             + CASE WHEN a.seg = b.seg THEN {_FS_W['seg'][0]} ELSE {_FS_W['seg'][1]} END)
-              >= {_FS_MATCH}
-        """
-    ).fetchall()
-    parent: dict = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for u, v in edges:
-        parent[find(u)] = find(v)
-    from collections import Counter
-
-    sizes = Counter()
-    for node in list(parent):
-        sizes[find(node)] += 1
-    hist = Counter(sizes.values())
-    expect = sorted((s, c, s * c) for s, c in hist.items())
-    got = [
-        (r["entity_size"], r["n_entities"], r["n_records"])
-        for r in m.queries()["customers_linkage_clusters_capped"](
-            spark, sf
-        ).collect()
-    ]
-    assert got == expect
-    # the fixture genuinely engages the cap...
-    max_block = duckdb.sql(
-        planted
-        + """
-        , sa AS (SELECT nat, substr(name,1,17) AS blk, COUNT(*) AS n
-                 FROM a GROUP BY 1, 2),
-        sb AS (SELECT nat, substr(name,1,17) AS blk, COUNT(*) AS n
-               FROM b GROUP BY 1, 2)
-        SELECT MAX(sa.n * sb.n) FROM sa JOIN sb
-          ON sb.nat = sa.nat AND sb.blk = sa.blk
-        """
-    ).fetchone()[0]
-    assert max_block > _FS_HOT_CAP
-    # ...and star emission bounds the candidate set well below all-pairs
-    cust = load_testdata(spark, sf, "customer")
-    aa, bb = _fs_sides(cust, planted_hot=True)
-    capped_n = LK.blocked_bipartite_pairs(
-        aa, bb, ["nat", "blk"], "id", "b_id", hot_block_cap=_FS_HOT_CAP
-    ).count()
-    uncapped_n = LK.blocked_bipartite_pairs(
-        aa, bb, ["nat", "blk"], "id", "b_id", hot_block_cap=None
-    ).count()
-    assert capped_n < uncapped_n / 2
-    # every hot-block candidate the star emits still scores as a match
-    # (clique fixture), so CC preservation is by construction, not luck
-    assert len(edges) > 0
-
-
-def test_blocked_bipartite_pairs_edges(spark):
-    """Operator edge cases: one-sided blocks emit nothing, cold blocks
-    are exact all-pairs, hot blocks emit exactly n_a + n_b - 1 star
-    edges with the min-id hubs."""
-    from sales_azure_data_engineer_project_spark.operators import linkage as LK
-
-    a = spark.createDataFrame(
-        # block 'x': 3 A rows; block 'y': 1 A row; block 'z': A only
-        [(1, "x"), (2, "x"), (3, "x"), (10, "y"), (20, "z")],
-        ["id", "blk"],
-    )
-    b = spark.createDataFrame(
-        # block 'x': 2 B rows; block 'y': 1; block 'w': B only
-        [(101, "x"), (102, "x"), (110, "y"), (120, "w")],
-        ["b_id", "blk"],
-    )
-    exact = LK.blocked_bipartite_pairs(a, b, ["blk"], "id", "b_id")
-    got = {(r["id"], r["b_id"]) for r in exact.collect()}
-    assert got == {
-        (1, 101), (1, 102), (2, 101), (2, 102), (3, 101), (3, 102),
-        (10, 110),
-    }  # one-sided blocks z/w emit nothing
-    # cap=10: block x (3*2=6 <= 10) stays exact -> identical output
-    capped10 = LK.blocked_bipartite_pairs(
-        a, b, ["blk"], "id", "b_id", hot_block_cap=10
-    )
-    assert {(r["id"], r["b_id"]) for r in capped10.collect()} == got
-    # cap=5: block x goes hot -> two-star: hub_a=1 x {101,102} plus
-    # {2,3} x hub_b=101 — exactly n_a + n_b - 1 = 4 edges
-    capped5 = LK.blocked_bipartite_pairs(
-        a, b, ["blk"], "id", "b_id", hot_block_cap=5
-    )
-    hot = {(r["id"], r["b_id"]) for r in capped5.collect()}
-    assert hot == {(1, 101), (1, 102), (2, 101), (3, 101), (10, 110)}
 
 
 def test_ivf_cadence_engine_parity(spark):

@@ -157,29 +157,6 @@ def test_assign_surrogate_keys_initial_load_scale(spark):
     assert again == dict(rows), "not deterministic across invocations"
 
 
-def test_full_train_prep_funnel_monotone(spark):
-    """The capstone funnel's doc stages must be non-increasing (each
-    stage only drops), pack tokens must equal the final doc stage's
-    tokens, and the split rows must partition the cleaned set."""
-    from sales_azure_data_engineer_project_spark.queries_extensions import (
-        pipeline_full_train_prep,
-    )
-
-    rows = {r["stage"]: r for r in pipeline_full_train_prep(
-        spark, "/root/testdata/sf0.001"
-    ).collect()}
-    chain = ["raw", "quality", "lang", "exact_dedup", "near_dedup",
-             "semantic_dedup", "decontaminate"]
-    for a, b in zip(chain, chain[1:]):
-        assert rows[b]["n_units"] <= rows[a]["n_units"], (a, b)
-        assert rows[b]["n_tokens"] <= rows[a]["n_tokens"], (a, b)
-    assert rows["pack"]["n_tokens"] == rows["decontaminate"]["n_tokens"]
-    split_docs = sum(rows[s]["n_units"] for s in ("split_train", "split_val", "split_test") if s in rows)
-    split_toks = sum(rows[s]["n_tokens"] for s in ("split_train", "split_val", "split_test") if s in rows)
-    assert split_docs == rows["decontaminate"]["n_units"]
-    assert split_toks == rows["decontaminate"]["n_tokens"]
-
-
 def test_grid_quantiles_matches_percentile_disc(spark):
     """operators/quantiles.grid_quantiles vs plain-Python
     percentile_disc on a synthetic grouped frame with ties, negative

@@ -18,7 +18,13 @@ def _module_defs(tree: ast.Module) -> dict[str, ast.AST]:
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
             names = [node.name]
         elif isinstance(node, ast.Assign):
-            names = [t.id for t in node.targets if isinstance(t, ast.Name)]
+            # ``a, b = ...`` binds each name in the tuple
+            names = [
+                n.id
+                for t in node.targets
+                for n in (t.elts if isinstance(t, ast.Tuple) else [t])
+                if isinstance(n, ast.Name)
+            ]
         elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
             names = [node.target.id]
         else:

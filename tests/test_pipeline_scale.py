@@ -1,9 +1,9 @@
-"""Scale row for the reference pipeline itself (VERDICT r6 "Next" #6).
+"""Scale row for the reference pipeline itself.
 
 The 1,849-row SalesData pipeline is e2e-tested elsewhere; this drives
 :class:`SalesPipeline` on a 10⁴-replicated bronze (~18.5 M rows) plus an
 incremental second run, asserting MERGE idempotency and fact-grain
-uniqueness at scale and printing a wall-time line for NOTES.md.
+uniqueness at scale and printing its wall time.
 
 Growth model: each copy advances the ``Date_ID`` space (time marches on
 — ``dim_date`` and the fact grain grow with history, reference

@@ -1,0 +1,154 @@
+"""Spark-free checks that the query registry stays cut to one extension
+query per operator family.
+
+A query's operator family is the set of ``PLAN_AUDIT.md`` operator
+columns where its count is non-zero.  Exchange and scan counts are left
+out because nearly every query has them.  An extension query either is
+protected, is pinned by a test of its own, or is the only registered
+query with its family among the rest.
+"""
+
+from __future__ import annotations
+
+import ast
+import pathlib
+
+REPO = pathlib.Path(__file__).resolve().parents[1]
+PACKAGE = REPO / "sales_azure_data_engineer_project_spark"
+
+FAMILY_COLUMNS = (
+    "BHJ", "SMJ", "SHJ", "BNLJ", "Cartesian", "Window", "WGL(Partial)",
+    "PyEval", "ArrowPandas",
+)
+
+# Extension queries kept whatever their family, besides the benchmark's.
+PROTECTED = {
+    # the registered batch twin of streaming.windowed_event_counts
+    "events_hopping_window_rate",
+    # the test_properties::test_partition_count_invariance probes
+    "text_dsir_importance",
+    "dedup_minhash_estimate_calibration",
+    "embedding_pca_power_iteration",
+    "text_quality_classifier_hashed",
+}
+
+
+# Extension queries that share a family but still carry a dedicated test
+# (a differential or invariant check of the query's own output).  They go
+# with their tests in later cuts; the set may only shrink, and a name
+# here that is no longer registered fails the family test.
+PINNED = {
+    "crossmodal_coverage_report", "cube_revenue_by_flag_status",
+    "customer_concentration_profile", "customers_rfm_segments",
+    "dedup_cross_source_matrix", "dedup_graph_kcore",
+    "dedup_lsh_hot_bucket_capped", "dedup_minhash_lsh", "dedup_simhash",
+    "dedup_simhash_hamming", "dedup_token_savings_report",
+    "embedding_outliers_topk", "events_audience_overlap_jaccard",
+    "events_autocorr_daily", "events_cusum_changepoint",
+    "events_dau_wau_stickiness", "events_hour_weekday_heatmap",
+    "events_interarrival_quantiles", "events_journey_trigrams",
+    "events_mannwhitney_auc", "events_new_vs_returning_daily",
+    "events_time_to_convert_quantiles", "events_type_mix_drift_weekly",
+    "events_user_lifetime_stats", "interval_overlap_sweep",
+    "orders_benford_deviation", "orders_daily_revenue_7d_ma",
+    "orders_repeat_purchase_intervals", "parts_pareto_frontier",
+    "pipeline_curriculum_order", "pipeline_decontaminate",
+    "pipeline_incremental_manifest", "pipeline_pack_sequences",
+    "pipeline_skew_report", "pipeline_split_leakage_check",
+    "pipeline_unimax_language_budget", "quality_adaptive_thresholds",
+    "quality_knn_label_noise", "quality_metadata_consistency",
+    "quality_simpson_diversity", "quality_tukey_fences_by_source",
+    "quantile_sketch_bottomk", "sample_balanced_class_downsample",
+    "sample_coreset_kcenter", "sample_priority_topk",
+    "sample_soft_dedup_weights", "similarity_ann_sq8",
+    "similarity_maxsim_late_interaction", "skew_salted_aggregation",
+    "stats_chi2_independence", "stats_spearman_daily", "stats_theil_sen_trend",
+    "text_bm25_topk", "text_boilerplate_chunks", "text_exact_substring_dedup",
+    "text_quality_stats", "text_source_length_emd", "text_source_token_tvd",
+    "text_token_counts", "vocab_coverage_curve",
+    "vocab_good_turing_unseen_mass", "vocab_heaps_growth",
+    "vocab_oov_rate_by_source",
+}
+
+
+def _registered(module: str) -> list[str]:
+    """Names passed to ``@register(...)`` in a package module, read from
+    its AST."""
+    tree = ast.parse((PACKAGE / module).read_text())
+    return [
+        deco.args[0].value
+        for node in ast.walk(tree)
+        for deco in getattr(node, "decorator_list", [])
+        if isinstance(deco, ast.Call) and getattr(deco.func, "id", None) == "register"
+    ]
+
+
+def _benchmark_queries() -> set[str]:
+    """The ``STAR`` and ``CORPUS`` lists of ``perfbench/run.py``."""
+    tree = ast.parse((REPO / "perfbench" / "run.py").read_text())
+    out: set[str] = set()
+    for node in tree.body:
+        if isinstance(node, ast.Assign) and any(
+            getattr(t, "id", None) in ("STAR", "CORPUS") for t in node.targets
+        ):
+            out.update(ast.literal_eval(node.value))
+    return out
+
+
+def _audit_families() -> dict[str, frozenset[str]]:
+    """Query name → operator family, from the ``PLAN_AUDIT.md`` table."""
+    lines = (REPO / "PLAN_AUDIT.md").read_text().splitlines()
+    header = next(line for line in lines if line.startswith("| query |"))
+    cols = [c.strip() for c in header.strip("|").split("|")]
+    out: dict[str, frozenset[str]] = {}
+    for line in lines[lines.index(header) + 2:]:
+        if not line.startswith("|"):
+            break
+        row = dict(zip(cols, (c.strip() for c in line.strip("|").split("|"))))
+        out[row["query"]] = frozenset(c for c in FAMILY_COLUMNS if int(row[c]) != 0)
+    return out
+
+
+def test_plan_audit_lists_exactly_the_registered_queries():
+    """A stale ``PLAN_AUDIT.md`` would let the family rule read families
+    of queries that are gone, or miss new ones."""
+    registered = {
+        n for m in ("queries_core.py", "queries_analytics.py", "queries_extensions.py")
+        for n in _registered(m)
+    }
+    audited = set(_audit_families())
+    assert audited == registered, (
+        f"regenerate PLAN_AUDIT.md with tools/plan_report.py: "
+        f"unaudited {sorted(registered - audited)}, "
+        f"not registered {sorted(audited - registered)}"
+    )
+
+
+def test_each_extension_query_is_protected_or_alone_in_its_family():
+    """An extension query that is neither protected nor pinned must be
+    the only query with its operator family, pinned queries aside: a
+    second query with the same family adds code without covering a new
+    operator mix."""
+    families = _audit_families()
+    protected = PROTECTED | _benchmark_queries()
+    extensions = _registered("queries_extensions.py")
+    assert PROTECTED <= set(extensions), sorted(PROTECTED - set(extensions))
+    assert PINNED <= set(extensions), (
+        f"drop deleted queries from PINNED: {sorted(PINNED - set(extensions))}"
+    )
+    assert not PINNED & protected, sorted(PINNED & protected)
+    shared = {}
+    for name in extensions:
+        if name in protected or name in PINNED:
+            continue
+        twins = sorted(
+            other for other, fam in families.items()
+            if other != name and other not in PINNED and fam == families[name]
+        )
+        if twins:
+            shared[name] = (sorted(families[name]), twins)
+    assert not shared, (
+        "extension queries that share an operator family (delete them, "
+        "or keep one per family):\n"
+        + "\n".join(f"{n} {fam}: also {tw}" for n, (fam, tw) in sorted(shared.items()))
+    )

@@ -248,7 +248,7 @@ def test_scale_headroom_5m_rows(spark):
 
 
 def test_plan_quality_regressions(spark):
-    """Golden plan properties for the headline shapes (PLANS.md enforced):
+    """Golden plan properties for the headline shapes:
     dimension joins broadcast; aggregations have exactly one hash
     Exchange (plus at most a range Exchange for presentation ORDER BY)."""
     import __spark_entry__ as m
@@ -420,13 +420,7 @@ def test_no_cartesian_or_python_udf_in_any_registered_plan(spark):
         "events_funnel",            # per-user ts inequality after key join
         "q21_waiting_orders",       # correlated <> EXISTS rewrite
         "similarity_ann_ivf",       # broadcast centroid grid (crossJoin by design)
-        "similarity_ann_ivf_sq8",   # same centroid grid + bounded-query probe
-        "similarity_ann_ivf_pq",    # same shared _sq8_kmeans_cells 1-row stats broadcast;
-                                    # the ADC probe itself is a cell equi-join
         "dedup_semantic_semdedup",  # same 1-row sq8 stats broadcast (shared _sq8_kmeans_cells)
-        "tokens_heavy_hitters_cms",  # 4-row seed grid broadcast (crossJoin by design)
-        "events_distribution_drift",  # 1-row midpoint/boundaries/totals broadcasts
-        "dedup_graph_triangles",  # 1-row wedge/triangle aggregates crossJoined
         "ann_recall_ivf",  # 20-row broadcast query set × corpus, != join
                            # + shared _sq8_kmeans_cells stats broadcast
         "cross_join_region_priority",  # deliberate tiny-dim cross join
@@ -435,15 +429,6 @@ def test_no_cartesian_or_python_udf_in_any_registered_plan(spark):
                                     # ANN tiers are the scale path)
         "similarity_ann_sq8",       # same bounded-query broadcast shape,
                                     # scored in the 8-bit code domain
-        "similarity_ann_pq",        # ADC probe: bounded query LUT
-                                    # broadcast against the code scan
-        "pipeline_full_train_prep",  # shared _sq8_kmeans_cells 1-row
-                                     # sq8 stats broadcast (as semdedup)
-        "dedup_lsh_recall_sampled",  # 1-row count aggregates crossJoined
-                                     # into one row
-        "pipeline_data_mixture_epochs",  # 1-row Σ√tokens total broadcast
-        "similarity_matryoshka_agreement",  # bounded-query broadcast ×
-                                    # corpus, same as similarity_cosine_topk
         "embedding_cluster_quality",  # shared _sq8_kmeans_cells 1-row
                                       # sq8 stats broadcast
         "events_resample_gapfill",  # 1-row min/max span broadcast into
@@ -451,7 +436,7 @@ def test_no_cartesian_or_python_udf_in_any_registered_plan(spark):
         "text_dsir_importance",  # 1-row corpus/target total broadcast
                                  # onto the 256-bucket weight table
         "ann_recall_pq",  # 10-row truth query set broadcast != join
-                          # + the PQ ADC LUT broadcast (as similarity_ann_pq)
+                          # + the PQ ADC LUT broadcast
         "pipeline_curriculum_order",  # 1-row quartile-cutoffs aggregate
                                       # (3 integers) broadcast onto docs
         "quality_knn_label_noise",  # bounded 50-probe broadcast ×
@@ -468,21 +453,9 @@ def test_no_cartesian_or_python_udf_in_any_registered_plan(spark):
                                  # 1-row stats broadcast + the bounded
                                  # 8-query cosine broadcast != join;
                                  # fusion itself is an equi-join
-        "pipeline_bloom_decontam",  # 1-row report aggregates (train
-                                    # count, candidate counts, bitmap
-                                    # popcount) crossJoined into one row
         "sample_coreset_kcenter",  # 1-row center picks broadcast into
                                    # each min-update round + the shared
                                    # sq8 1-row stats broadcast
-        "approx_set_ops_kmv",  # bounded 5×5 event-type grid builds the
-                               # pair relation; all sketch/exact joins
-                               # are equi-joins
-        "stats_ks_two_sample",  # bounded 3-row flag grid × value grid
-                                # + 1-row corpus total broadcast; the
-                                # cumsum itself is the two-level
-                                # partitioned scan (no global window)
-        "approx_distinct_hll_merged",  # 1-row estimate/exact aggregates
-                                       # crossJoined into the report row
         "stats_chi2_independence",  # 1-row grand-total broadcast onto
                                     # the bounded category-cell relation
         "events_mannwhitney_auc",  # 1-row corpus-total broadcast onto
@@ -516,7 +489,6 @@ def test_no_cartesian_or_python_udf_in_any_registered_plan(spark):
                                             # pair grid — both bounded
         "events_interarrival_quantiles",  # 1-row gap-total broadcast
                                           # onto the distinct-gap ECDF
-                                          # (as stats_ks_two_sample)
         "vocab_heaps_growth",  # 1-row max-doc-id broadcast onto the
                                # first-occurrence and doc relations
         "sample_balanced_class_downsample",  # 1-row global min-class-
@@ -727,10 +699,9 @@ def test_bottomk_sketch_plan_has_partial_window_group_limit(spark):
 
 
 def test_iterative_graph_queries_reuse_persisted_edges(spark):
-    """Runtime-shape pin for the iterative graph queries (VERDICT r5
-    "Next" #5): the unrolled k-core / triangle iterations must read
-    the pre-joined edge list from cache, not replay the LSH chain per
-    iteration.  PLAN_AUDIT's 240/72 parquet scans are the lineage
+    """Runtime-shape pin for the iterative graph query (VERDICT r5
+    "Next" #5): the unrolled k-core iterations must read the pre-joined
+    edge list from cache, not replay the LSH chain per iteration.  PLAN_AUDIT's 240/72 parquet scans are the lineage
     PRINTED INSIDE the cached relations' definitions; this test pins
     (a) the iterations actually reference InMemoryTableScan nodes and
     (b) executing the query materializes the caches (cached partitions
@@ -752,27 +723,10 @@ def test_iterative_graph_queries_reuse_persisted_edges(spark):
     expected = {
         # (min InMemoryTableScan refs, min "Scan ExistingRDD" refs,
         #  min materialized cached RDDs):
-        # triangles persists the signature cache and the oriented edge
-        # list, referenced by the wedge and closing joins (static
-        # unroll, no loop state — unchanged by the round-10 swap).
-        # min_cached=2: the old floor of 3 was only ever met by blocks
-        # lingering from the PREVIOUS query's non-blocking release —
-        # the exact vacuousness ADVICE r10 flagged (verified: a fresh
-        # session materializes exactly these 2 persists)
-        "dedup_graph_triangles": (3, 0, 2),
         # kcore: the final plan reads rounds 2-3's checkpointed edge
         # lists (active's degree + the final degree); the symmetric
         # edge cache + signature cache materialize during round 1
         "dedup_graph_kcore": (0, 2, 2),
-        # linkage clusters (round-11 swap, same contract as kcore):
-        # the returned histogram reads round 3's checkpointed label
-        # frame; the raw match-edge + self-looped edge caches
-        # materialize during the collect
-        "customers_linkage_clusters": (0, 1, 2),
-        # the capped variant truncates the same way — its fat 3-way
-        # candidate-union lineage now renders once (inside the edge
-        # cache), not once per round
-        "customers_linkage_clusters_capped": (0, 1, 2),
     }
     for name, (min_refs, min_rdd, min_cached) in expected.items():
         df = m.queries()[name](spark, sf)
@@ -803,41 +757,16 @@ def test_iterative_graph_queries_reuse_persisted_edges(spark):
 
 
 def test_corpus_sized_relations_are_not_broadcast(spark):
-    """Round-8 broadcast-audit pins: relations that grow ∝ corpus must
+    """Round-8 broadcast-audit pin: relations that grow ∝ corpus must
     never sit on the build side of an explicit broadcast (a driver OOM
-    at web scale no matter how well it benches at test SF).
-
-    - jaccard_pairs / containment_pairs carry per-doc shingle sizes
-      through the posting rows, so their whole logical plan has exactly
-      ONE join (the shingle posting self-join) — the two per-doc size
-      joins (formerly ∝N broadcasts) are gone, not merely demoted.
-    - BM25 pushes the bounded query-term set BELOW the index
-      aggregates as a LeftSemi join, so tf/df/idf are |query terms|-
-      bounded before anything is broadcast.
-    """
+    at web scale no matter how well it benches at test SF).  BM25
+    pushes the bounded query-term set BELOW the index aggregates as a
+    LeftSemi join, so tf/df/idf are |query terms|-bounded before
+    anything is broadcast."""
     import __spark_entry__ as m
 
-    from sales_azure_data_engineer_project_spark.operators import dedup as D
-
-    QUERIES = m.queries()
-
-    docs = spark.createDataFrame(
-        [(i, f"tok{i} alpha beta gamma delta epsilon zeta") for i in range(8)],
-        ["doc_id", "text"],
-    )
-    jac_plan = (
-        D.jaccard_pairs(docs, "doc_id", "text")
-        ._jdf.queryExecution().optimizedPlan().toString()
-    )
-    assert jac_plan.count("Join") == 1, jac_plan
-    cont_plan = (
-        D.containment_pairs(docs, "doc_id", "text")
-        ._jdf.queryExecution().optimizedPlan().toString()
-    )
-    assert cont_plan.count("Join") == 1, cont_plan
-
     bm_plan = (
-        QUERIES["text_bm25_topk"](spark, "/root/testdata/sf0.001")
+        m.queries()["text_bm25_topk"](spark, "/root/testdata/sf0.001")
         ._jdf.queryExecution().optimizedPlan().toString()
     )
     assert "LeftSemi" in bm_plan, bm_plan

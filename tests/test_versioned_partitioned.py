@@ -34,6 +34,38 @@ def test_versioned_vacuum(spark, tmp_path):
     assert vt.read(version=4).first()["x"] == 3
     assert vt.read(version=1) is None
 
+
+def test_vacuum_keeps_the_published_version(spark, tmp_path):
+    """``keep_last < 1`` would delete the version ``_VERSION`` names, and
+    the table would read as never written: vacuum refuses it."""
+    import pytest
+
+    vt = VersionedTable(spark, str(tmp_path / "t"))
+    for i in range(2):
+        vt.overwrite(spark.createDataFrame([(i,)], ["x"]))
+    for keep_last in (0, -1):
+        with pytest.raises(ValueError, match="published version"):
+            vt.vacuum(keep_last=keep_last)
+    assert vt.read().first()["x"] == 1
+
+
+def test_read_raises_when_the_current_version_dir_is_gone(spark, tmp_path):
+    """A pointer to a missing version dir is a broken table, not an empty
+    one: ``read`` and ``read_where`` raise instead of returning None."""
+    import shutil
+
+    import pytest
+
+    vt = VersionedTable(spark, str(tmp_path / "t"))
+    for i in range(2):
+        vt.overwrite(spark.createDataFrame([(i,)], ["x"]))
+    shutil.rmtree(vt._vdir(2))
+    with pytest.raises(FileNotFoundError, match="v2"):
+        vt.read()
+    with pytest.raises(FileNotFoundError, match="v2"):
+        vt.read_where("x", 0, 1)
+    assert vt.read(version=1).first()["x"] == 0
+
     # a partitioned merge hardlinks the base version's untouched
     # partitions: dropping that version leaves every row readable, and
     # compaction keeps the partition dirs
@@ -305,57 +337,9 @@ def test_data_skipping_manifest_prunes_files(spark, tmp_path):
     assert got == expect and got
 
 
-def test_zorder_prunes_on_every_listed_column(spark, tmp_path):
-    """Z-order clustering gives every file a tight min/max box on BOTH
-    interleaved columns, so single-column range predicates skip files on
-    either — where the linear layout above only prunes its lead key."""
-    from sales_azure_data_engineer_project_spark.io import load_testdata
-    from sales_azure_data_engineer_project_spark.operators.skipping import pruned_files
-
-    orders = load_testdata(spark, "/root/testdata/sf0.001", "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    vt = VersionedTable(spark, str(tmp_path / "t"))
-    v = vt.overwrite(orders, zorder=["o_custkey", "o_totalprice"])
-
-    keep_c, total = pruned_files(vt._vdir(v), "o_custkey", 10, 20)
-    keep_p, _ = pruned_files(vt._vdir(v), "o_totalprice", 50_000, 90_000)
-    assert len(keep_c) < total, "z-order must prune on the first column"
-    assert len(keep_p) < total, "z-order must prune on the second column"
-
-    got = sorted(
-        r["o_orderkey"]
-        for r in vt.read_where("o_totalprice", 50_000, 90_000, version=v).collect()
-    )
-    expect = sorted(
-        r["o_orderkey"]
-        for r in orders.filter(F.col("o_totalprice").between(50_000, 90_000)).collect()
-    )
-    assert got == expect and got
-
-
-def test_zorder_rejects_unsupported_columns(spark):
-    """Numeric (quantile) and string (sampled lexicographic) z-columns
-    are supported since round 4; anything else — here a timestamp —
-    must fail loudly, not inside a Spark job."""
-    import datetime
-
-    import pytest
-
-    from sales_azure_data_engineer_project_spark.operators.skipping import zorder_frame
-
-    df = spark.createDataFrame(
-        [(1, "a", datetime.datetime(2024, 1, 1))], ["x", "s", "ts"]
-    )
-    with pytest.raises(TypeError, match="numeric or string"):
-        zorder_frame(df, ["x", "ts"])
-    # strings are accepted now
-    zorder_frame(df, ["x", "s"])
-
-
 def test_lakehouse_maintenance_e2e(spark, tmp_path):
     """Cross-feature integration: incremental MERGEs build versions, a
-    z-ordered stats commit makes range reads file-pruned, compaction
+    range-clustered stats commit makes range reads file-pruned, compaction
     shrinks files and vacuum drops history — with the table's content
     provably unchanged at every step."""
     from sales_azure_data_engineer_project_spark.io import load_testdata
@@ -381,7 +365,10 @@ def test_lakehouse_maintenance_e2e(spark, tmp_path):
     full = content(orders)
     assert content(vt.read()) == full
 
-    v4 = vt.overwrite(vt.read(), zorder=["o_custkey", "o_totalprice"])
+    clustered = vt.read().repartitionByRange(8, "o_totalprice").sortWithinPartitions(
+        "o_totalprice"
+    )
+    v4 = vt.overwrite(clustered, stats_columns=["o_totalprice"])
     assert content(vt.read()) == full
     assert read_manifest(vt._vdir(v4)) is not None
     keep, total = pruned_files(vt._vdir(v4), "o_totalprice", 100_000, 150_000)
@@ -531,9 +518,9 @@ def test_domain_mismatched_bounds_keep_every_file(spark, tmp_path):
 
 
 def test_commit_restores_timestamp_conf_and_cleans_failed_staging(spark, tmp_path):
-    """ADVICE r4: _commit must not permanently mutate
-    spark.sql.parquet.outputTimestampType, and a zorder TypeError must
-    not leak an orphan ._staged_ dir."""
+    """_commit must not permanently mutate
+    spark.sql.parquet.outputTimestampType, and a write that fails must
+    not leak an orphan ._staged_ dir or publish a version."""
     import os
 
     import pytest as _pytest
@@ -548,47 +535,11 @@ def test_commit_restores_timestamp_conf_and_cleans_failed_staging(spark, tmp_pat
     vt = VersionedTable(spark, str(tmp_path / "t"))
     vt.overwrite(ev, stats_columns=["ts"])
     assert spark.conf.get(key, None) == before, "commit leaked session conf"
-    # zorder on an unsupported (timestamp) column raises BEFORE any
-    # staging dir exists (strings are valid z-columns since round 4)
-    with _pytest.raises(TypeError):
-        vt.overwrite(ev, zorder=["ts"])
+    # the write job itself fails, after the staging dir was made
+    with _pytest.raises(Exception, match="boom"):
+        vt.overwrite(ev.withColumn("x", F.raise_error(F.lit("boom"))), stats_columns=["ts"])
+    assert vt.current_version() == 1
     staged = [n for n in os.listdir(vt.root) if n.startswith("._staged_")]
     assert staged == [], f"orphan staging dirs leaked: {staged}"
 
 
-def test_zorder_string_column_prunes(spark, tmp_path):
-    """Round-4: z-order accepts STRING columns via sampled
-    lexicographic boundaries — a commit clustered on (numeric, string)
-    must prune manifest files for a string range predicate AND still
-    return exact results."""
-    from sales_azure_data_engineer_project_spark.io import load_testdata
-    from sales_azure_data_engineer_project_spark.operators.skipping import pruned_files
-
-    orders = load_testdata(spark, "/root/testdata/sf0.01", "orders").select(
-        "o_orderkey", "o_totalprice", "o_clerk"
-    ) if "o_clerk" in [f.name for f in load_testdata(
-        spark, "/root/testdata/sf0.01", "orders").schema] else None
-    if orders is None:
-        orders = load_testdata(spark, "/root/testdata/sf0.01", "customer").select(
-            F.col("c_custkey").alias("o_orderkey"),
-            F.col("c_acctbal").alias("o_totalprice"),
-            F.col("c_name").alias("o_clerk"),
-        )
-    vt = VersionedTable(spark, str(tmp_path / "t"))
-    v = vt.overwrite(
-        orders, zorder=["o_totalprice", "o_clerk"], stats_columns=["o_totalprice", "o_clerk"]
-    )
-    lo, hi = "Customer#000000100", "Customer#000000400"
-    keep_s, total = pruned_files(vt._vdir(v), "o_clerk", lo, hi)
-    assert len(keep_s) < total, "string z-column must prune"
-    keep_n, _ = pruned_files(vt._vdir(v), "o_totalprice", 1000.0, 2000.0)
-    assert len(keep_n) < total, "numeric z-column must still prune"
-    got = sorted(
-        r["o_orderkey"]
-        for r in vt.read_where("o_clerk", lo, hi, version=v).collect()
-    )
-    expect = sorted(
-        r["o_orderkey"]
-        for r in orders.filter(F.col("o_clerk").between(lo, hi)).collect()
-    )
-    assert got == expect and got
