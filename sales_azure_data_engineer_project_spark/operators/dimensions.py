@@ -18,8 +18,9 @@ later one:
 
   a. project the batch's natural key + attributes from silver with a
      NULL surrogate key, and union the sink's ``(key, natural cols)``
-     (steps 1-2; with no committed sink there is nothing to union, the
-     S9 ``tableExists`` branch)
+     (steps 1-2; the pipeline creates each dimension empty before its
+     first load, so on the initial load the sink is that empty table,
+     the reference's ``where 1=0`` frame)
   b. ``coalesce(1)`` + DISTINCT: every row of the dimension in one
      partition, each source variant once (step 1's DISTINCT, P1)
   c. one window partitioned by the natural key decides every row:
@@ -98,7 +99,9 @@ def build_scd1_dimension(
 ) -> DataFrame:
     """Compute the post-merge state of one SCD-1 dimension.
 
-    ``sink`` is the current gold dimension (None on initial load).
+    ``sink`` is the current gold dimension: on the initial load, the
+    empty table the pipeline created (so that load runs this same plan),
+    or None for a caller with no table at all.
     Returns the full new dimension: existing rows keep their surrogate
     keys but take CURRENT attribute values from silver (SCD-1 update,
     reference behavior per hazard H3); new natural keys get dense keys
@@ -115,7 +118,7 @@ def build_scd1_dimension(
     cols = [key, *nk, *attrs]
     # Source rows carry a NULL key; sink rows their committed one.
     rows = silver.selectExpr(f"CAST(NULL AS BIGINT) AS {key}", *nk, *attrs)
-    if sink is not None:  # S9 tableExists: union the committed dimension
+    if sink is not None:  # union the committed dimension
         rows = rows.union(sink.selectExpr(*cols))
     # One partition for the whole dimension, so nothing below shuffles.
     # Reference parity: the source dedup is DISTINCT over (nk, attrs) —

@@ -3,8 +3,8 @@ quantizer for IVF-style ANN (``similarity_ann_ivf`` uses a fixed-stride
 stand-in so its oracle stays deterministic; this is the real thing).
 
 Iterative Spark formulation:
-  1. centroids ← first k vectors (deterministic seeding; k-means++ would
-     need a seeded RNG — avoided so runs are replayable)
+  1. centroids ← k seed vectors the caller picks (deterministic seeding;
+     k-means++ would need a seeded RNG — avoided so runs are replayable)
   2. assign: broadcast centroids, argmin squared-L2 per vector (one
      narrow pass, no shuffle)
   3. update: mean of assigned vectors per cluster from per-batch
@@ -149,33 +149,26 @@ def _iteration_sums_arrow(
 
 def kmeans_fit(
     df: DataFrame,
+    seeds: list[list[float]],
     *,
-    k: int = 8,
     vec_col: str = "embedding",
     max_iter: int = 10,
     tol: float = 1e-6,
-    seeds: list[list[float]] | None = None,
-    compute_inertia: bool = True,
-) -> tuple[list[list[float]], float]:
-    """Fit k-means; returns (centroids, inertia).
+) -> list[list[float]]:
+    """Fit k-means from the ``len(seeds)`` initial centroids ``seeds``;
+    returns the centroids.
 
-    Deterministic: seeds from the first k rows ordered by the frame's
-    natural id ordering (callers should pass a deterministic frame), or
-    pass ``seeds`` explicitly — cheaper than sorting the frame when a
-    deterministic prefix is available some other way.  With
-    ``compute_inertia=False`` the final quality scan is skipped (one
-    job) and inertia returns as ``nan``.
+    Deterministic given deterministic seeds: the caller picks them
+    (a deterministic prefix of its frame, fetched once — sorting the
+    frame inside the fit would re-run the sort on every iteration).
 
     Each iteration is one Arrow pass (``_iteration_sums_arrow``):
     assignment and per-batch partial sums fused, ≤ k rows per batch to
     the driver.  Its fold-order distances keep the fit replayable by
     an unrolled SQL oracle.
     """
-    if seeds is None:
-        first = df.limit(k).select(as_double_vec(vec_col).alias("v")).collect()
-        centroids = [list(r["v"]) for r in first]
-    else:
-        centroids = [list(c) for c in seeds]
+    centroids = [list(c) for c in seeds]
+    k = len(centroids)
     dim = len(centroids[0])
 
     # the per-iteration partial-sum shuffle carries at most k·dim rows —
@@ -206,19 +199,4 @@ def kmeans_fit(
                 break
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_conf)
-
-    if not compute_inertia:
-        return centroids, float("nan")
-    final = assign_clusters(df, centroids, vec_col)
-    cents = _centroid_struct(centroids)
-    sq = F.aggregate(
-        F.zip_with(
-            as_double_vec(vec_col),
-            F.element_at(cents, F.col("cluster") + 1),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    inertia = final.agg(F.sum(sq).alias("i")).first()["i"]
-    return centroids, float(inertia)
+    return centroids

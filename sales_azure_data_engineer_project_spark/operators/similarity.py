@@ -286,7 +286,6 @@ def pq_adc_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k_neighbors: int = 5,
-    restrict_col: str | None = None,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes: the query stays
     full-precision; per (query, subspace, codeword) inner products form
@@ -295,18 +294,11 @@ def pq_adc_topk(
     The scan side touches only the 4-byte codes: at 100 TB this is the
     difference between scanning codes and scanning vectors.
 
-    ``restrict_col`` turns flat ADC into the IVF-PQ probe: both
-    ``codes`` and ``queries`` must carry that column (the coarse cell
-    id), and a candidate is scored ONLY when its cell equals the
-    query's — the join becomes an equi-join on the cell id, so the
-    scan touches one inverted list per probe instead of the corpus.
-
     Output: (query_id, neighbor_id, approx_ip, rk)."""
     m = len(codebooks)
-    q_cols = [F.col(id_col).alias("qid"), as_double_vec(vec_col).alias("v")]
-    if restrict_col is not None:
-        q_cols.append(F.col(restrict_col).cast("long").alias("_cell"))
-    q_rows = queries.select(*q_cols).collect()
+    q_rows = queries.select(
+        F.col(id_col).alias("qid"), as_double_vec(vec_col).alias("v")
+    ).collect()
     spark = codes.sparkSession
     subdim = len(codebooks[0][0])
     lut_rows = []
@@ -319,16 +311,8 @@ def pq_adc_topk(
             ]
             for j in range(m)
         ]
-        if restrict_col is not None:
-            lut_rows.append((int(r["qid"]), int(r["_cell"]), lut))
-        else:
-            lut_rows.append((int(r["qid"]), lut))
-    schema = (
-        "query_id long, _cell long, lut array<array<double>>"
-        if restrict_col is not None
-        else "query_id long, lut array<array<double>>"
-    )
-    lutdf = spark.createDataFrame(lut_rows, schema)
+        lut_rows.append((int(r["qid"]), lut))
+    lutdf = spark.createDataFrame(lut_rows, "query_id long, lut array<array<double>>")
     score = sum(
         [
             F.element_at(F.element_at("lut", j + 1), F.col(f"c{j}") + 1)
@@ -336,11 +320,8 @@ def pq_adc_topk(
         ],
         F.lit(0.0),
     )
-    cond = F.col("query_id") != F.col(id_col)
-    if restrict_col is not None:
-        cond = cond & (F.col("_cell") == F.col(restrict_col).cast("long"))
     scored = (
-        codes.join(F.broadcast(lutdf), cond)
+        codes.join(F.broadcast(lutdf), F.col("query_id") != F.col(id_col))
         .withColumn("approx_ip", score)
         .select(
             "query_id", F.col(id_col).alias("neighbor_id"), "approx_ip"

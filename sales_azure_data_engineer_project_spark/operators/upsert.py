@@ -21,7 +21,8 @@ key, and a count of two or more hits ``raise_error`` in that same
 window: the action that writes the merge result fails before anything
 is published, at no job of its own.  ``guard_unique`` is the same check
 for a frame with no target; it serves ``merge_upsert(target=None)``, a
-MERGE into a table not yet committed.  Dimension snapshots need no such
+MERGE into a table never created (the pipeline creates its gold tables
+empty first, so only direct ``VersionedTable`` callers reach it).  Dimension snapshots need no such
 check: ``dimensions.build_scd1_dimension`` raises the same message from
 its own natural-key window.
 
@@ -59,8 +60,9 @@ def merge_upsert(
 ) -> DataFrame:
     """Relational SCD-1 merge: source wins on key match, others kept.
 
-    ``target=None`` means initial load (`tableExists` false branch,
-    `3(1)_Gold_dim_model.py:171-176`): the result is the source rows.
+    ``target=None`` means no table to merge into (the reference's
+    `tableExists` false branch, `3(1)_Gold_dim_model.py:171-176`): the
+    result is the source rows.
 
     Either way, evaluating the result raises if two source rows share
     ``keys``: the check runs inside the plan, not as a job of its own.

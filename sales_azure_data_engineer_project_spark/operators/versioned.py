@@ -4,6 +4,7 @@ parquet (no Delta jars in this environment).
 Layout:
 
     table_root/
+      v=0/                 the empty table ``create`` publishes: ``_schema.json`` only
       v=1/  v=2/  ...      immutable version directories (parquet)
         _schema.json        the committed frame's schema (read without inference)
         _manifest.json      optional per-file min/max (``stats_columns``)
@@ -14,7 +15,11 @@ Writers stage a full new version directory, then flip ``_VERSION`` with
 an atomic rename — readers either see the old or the new version, never
 a partial write, and historical versions stay readable (time travel).
 The table is never missing, history is kept, and each commit maps 1:1
-onto a JSON commit in Delta's ``_delta_log``.
+onto a JSON commit in Delta's ``_delta_log``.  ``create`` is Delta's
+version-0 CREATE TABLE commit: it publishes the declared schema and no
+rows, so the first load reads (and merges into) an empty table instead
+of taking a code path of its own.  A table never created has no
+version: ``read`` returns ``None``.
 
 A partitioned table's MERGE reads only the partitions its source
 touches (an IN-list the scan turns into ``PartitionFilters``), writes
@@ -79,27 +84,28 @@ class VersionedTable:
 
     def _snapshot_dir(self, version: int | None) -> str | None:
         """The directory of ``version`` (default: the current one), or
-        ``None`` when the table has no commit yet or ``version`` was
-        vacuumed.  A current version whose directory is gone raises
-        ``FileNotFoundError``: returning ``None`` there would make a
-        populated table look empty, and a caller that rebuilds from an
+        ``None`` when the table was never created or ``version`` was
+        vacuumed.  A current version past 0 whose directory is gone
+        raises ``FileNotFoundError``: returning ``None`` there would make
+        a populated table look empty, and a caller that rebuilds from an
         empty table would re-key every row."""
         cur = self.current_version()
         v = cur if version is None else version
         vdir = self._vdir(v)
-        if v <= 0:
+        if v < 0:
             return None
         if not os.path.isdir(vdir):
-            if v == cur:
+            if v == cur and v > 0:
                 raise FileNotFoundError(f"{self._pointer} names v{v}, but {vdir} is gone")
             return None
         return vdir
 
     def read(self, version: int | None = None) -> DataFrame | None:
         """Current snapshot, or time-travel to ``version`` (``None`` as
-        in ``_snapshot_dir``).  A pure plan builder: the schema committed
-        with the version replaces parquet schema inference, which would
-        run a Spark job per read."""
+        in ``_snapshot_dir``; version 0 of a created table is an empty
+        frame).  A pure plan builder: the schema committed with the
+        version replaces parquet schema inference, which would run a
+        Spark job per read."""
         vdir = self._snapshot_dir(version)
         return None if vdir is None else self._reader(vdir).parquet(vdir)
 
@@ -114,6 +120,44 @@ class VersionedTable:
         except FileNotFoundError:
             raise FileNotFoundError(f"version dir {vdir} has no {_SCHEMA}") from None
         return self.spark.read.schema(schema)
+
+    def _versions(self) -> list[int]:
+        """The version numbers that have a directory, published or not."""
+        return [
+            int(name[2:])
+            for name in os.listdir(self.root)
+            if name.startswith("v=") and name[2:].isdigit()
+        ]
+
+    def _claim(self, staged: str, version: int) -> None:
+        """Publish the staged dir as ``v=version`` with one rename, which
+        fails if another writer already owns that directory."""
+        try:
+            os.rename(staged, self._vdir(version))
+        except OSError as e:
+            import shutil
+
+            shutil.rmtree(staged, ignore_errors=True)
+            raise ConcurrentWriteError(
+                f"v{version} was claimed by a concurrent writer; "
+                "re-read and retry the merge"
+            ) from e
+
+    def create(self, schema: StructType) -> None:
+        """Publish version 0: the table with ``schema`` and no rows, the
+        CREATE TABLE commit a first load then reads and merges into.  It
+        writes ``_schema.json`` alone and starts no Spark job.  A table
+        that already has a version raises ``ConcurrentWriteError``, and
+        so does a commit that lands while version 0 publishes: a create
+        never hides another writer's commit."""
+        if self._versions():
+            raise ConcurrentWriteError(f"{self.root} already has a version")
+        staged = tempfile.mkdtemp(dir=self.root, prefix="._staged_")
+        with open(os.path.join(staged, _SCHEMA), "w") as f:
+            f.write(schema.json())
+        self._claim(staged, 0)
+        if max(self._versions()) > 0:
+            raise ConcurrentWriteError(f"{self.root} was committed to while it was created")
 
     def _commit(
         self,
@@ -155,15 +199,7 @@ class VersionedTable:
         # leaves an orphaned directory, and pointer+1 would collide with
         # it on every retry forever.  Orphans stay invisible (pointer
         # never reached them) and vacuum sweeps them.
-        max_dir = max(
-            (
-                int(name[2:])
-                for name in os.listdir(self.root)
-                if name.startswith("v=") and name[2:].isdigit()
-            ),
-            default=0,
-        )
-        new_v = max(cur, max_dir) + 1
+        new_v = max([cur, *self._versions()]) + 1
         staged = tempfile.mkdtemp(dir=self.root, prefix="._staged_")
         try:
             # Spark refuses to write into an existing dir without
@@ -203,16 +239,7 @@ class VersionedTable:
 
             shutil.rmtree(staged, ignore_errors=True)
             raise
-        try:
-            os.rename(staged, self._vdir(new_v))
-        except OSError as e:
-            import shutil
-
-            shutil.rmtree(staged, ignore_errors=True)
-            raise ConcurrentWriteError(
-                f"v{new_v} was claimed by a concurrent writer; "
-                "re-read and retry the merge"
-            ) from e
+        self._claim(staged, new_v)
         # pointer flip is monotonic: never move it backwards if a later
         # commit already advanced it
         fd, tmp = tempfile.mkstemp(dir=self.root, prefix="._VERSION_")

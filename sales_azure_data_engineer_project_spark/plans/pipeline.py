@@ -6,10 +6,14 @@ Re-derives the reference's notebook DAG (X2: `1_db` → `2_Silver` →
 incremental loads idempotently.
 
 The reference parameterizes runs with a Databricks widget
-(`3(1)_Gold_dim_model.py:13-18` ``Incremental_Flag``); here run mode is
-inferred from sink existence (S9 ``tableExists``) — the flag's only
-real effect, key seeding, is subsumed by seeding new keys from the
-sink's max key, which is correct in both modes (hazard H2).
+(`3(1)_Gold_dim_model.py:13-18` ``Incremental_Flag``) and branches on
+sink existence (S9 ``tableExists``).  Here there is no run mode: each
+gold table is created empty with its declared schema before its first
+load (version 0, the reference's ``where 1=0`` empty-typed sink, P7),
+so the initial load is an incremental batch into empty tables and runs
+the same plans.  The flag's only real effect, key seeding, is subsumed
+by seeding new keys from the sink's max key, which is correct either
+way (hazard H2).
 """
 
 from __future__ import annotations
@@ -25,9 +29,9 @@ from ..operators.dimensions import DimensionSpec, build_scd1_dimension
 from ..operators.fact import aggregate_to_grain
 from ..operators.fact import build_fact as assemble_fact
 from ..operators.versioned import VersionedTable
-from ..schemas import RAW_SALES_SCHEMA, SILVER_SALES_SCHEMA
+from ..schemas import RAW_SALES_SCHEMA, SILVER_SALES_SCHEMA, gold_schema
 
-__all__ = ["SalesPipeline", "transform_silver", "DIM_SPECS"]
+__all__ = ["SalesPipeline", "transform_silver", "DIM_SPECS", "GOLD_SCHEMAS"]
 
 # The four reference dimensions (3(1..4)_Gold_dim_*.py:44-46) + grain.
 DIM_SPECS: dict[str, DimensionSpec] = {
@@ -52,6 +56,17 @@ FACT_GRAIN = [
     "dim_date_key",
     "dim_calendar_key",
 ]
+
+# What each gold table commits, declared so that creating the table
+# (version 0) runs no Spark job: a dimension is its key and natural
+# columns, the fact its measures (``aggregate_to_grain``) and grain.
+GOLD_SCHEMAS = {
+    **{
+        name: gold_schema([spec.key_col, *spec.natural_cols], [spec.key_col])
+        for name, spec in DIM_SPECS.items()
+    },
+    "factsales": gold_schema(["Revenue", "Units_Sold", "Rev_Per_Unit", *FACT_GRAIN], FACT_GRAIN),
+}
 
 
 def transform_silver(df: DataFrame) -> DataFrame:
@@ -96,17 +111,18 @@ class SalesPipeline:
       (``RAW_SALES_SCHEMA``, ``SILVER_SALES_SCHEMA``), so no read runs a
       schema-inference job.
     - each gold table is written in one pass over its inputs, by its
-      commit.  A dimension is committed as the snapshot
-      ``build_scd1_dimension`` returns (silver's natural columns ∪ the
-      sink in one partition, decided by one window per natural key and
-      keyed in one more: one stage with no exchange, and already the
-      SCD-1 MERGE result); the fact is merged on its grain by
-      ``VersionedTable.merge`` (one window over fact ∪ committed fact,
-      so the fact's plan runs once).  The duplicate-key check runs
-      inside each commit's write (the dimension's natural-key window,
-      the fact's merge window), so a violation fails that commit and
-      publishes nothing.  Later stages read the committed versions,
-      which start no Spark job before their own write.
+      commit, into a table created empty before its first load.  A
+      dimension is committed as the snapshot ``build_scd1_dimension``
+      returns (silver's natural columns ∪ the sink in one partition,
+      decided by one window per natural key and keyed in one more: one
+      stage with no exchange, and already the SCD-1 MERGE result); the
+      fact is merged on its grain by ``VersionedTable.merge`` (one
+      window over fact ∪ committed fact, so the fact's plan runs once).
+      The duplicate-key check runs inside each commit's write (the
+      dimension's natural-key window, the fact's merge window), so a
+      violation fails that commit and publishes nothing.  Later stages
+      read the committed versions, which start no Spark job before
+      their own write.
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -128,6 +144,15 @@ class SalesPipeline:
     def read_gold(self, table: str, version: int | None = None) -> DataFrame | None:
         return self.gold_table(table).read(version)
 
+    def _gold_to_write(self, table: str) -> VersionedTable:
+        """Gold ``table``, created empty first (version 0) if it never
+        was: the first load then reads and merges into an empty table,
+        so it runs, and compiles, the plans of every later batch."""
+        vt = self.gold_table(table)
+        if vt.current_version() == 0 and vt.read() is None:
+            vt.create(GOLD_SCHEMAS[table])
+        return vt
+
     # -- stages -----------------------------------------------------------
     def ingest_bronze(self, csv_path: str) -> DataFrame:
         """S4: land raw CSV as bronze parquet with the explicit schema."""
@@ -143,7 +168,7 @@ class SalesPipeline:
     def build_dimensions(self, silver: DataFrame) -> dict[str, DataFrame]:
         dims: dict[str, DataFrame] = {}
         for name, spec in DIM_SPECS.items():
-            table = self.gold_table(name)
+            table = self._gold_to_write(name)
             base = table.current_version()
             dim = build_scd1_dimension(silver, table.read(base), spec)
             new_v = table.overwrite(dim, base_version=base)
@@ -155,7 +180,7 @@ class SalesPipeline:
             silver, {n: (df, DIM_SPECS[n]) for n, df in dims.items()}
         )
         fact = aggregate_to_grain(fact, FACT_GRAIN)
-        table = self.gold_table("factsales")
+        table = self._gold_to_write("factsales")
         return table.read(table.merge(fact, keys=FACT_GRAIN))
 
     def run(self, csv_path: str) -> dict[str, DataFrame]:

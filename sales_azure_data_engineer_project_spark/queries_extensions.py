@@ -1378,6 +1378,16 @@ def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ceil-division.
 _QUANTIZER_TARGET_CELL = 64
 _QUANTIZER_K_FLOOR = 8
+# Shared by each quantizer's Spark fit and its unrolled DuckDB twin, so
+# the two cannot drift: the fixed quantizer size, the Lloyd iterations
+# (both sides run exactly this many: ``tol=0.0``), the corpus' embedding
+# width (a literal in the unrolled SQL) and the PQ tier's m subspaces of
+# k codewords each.
+_KMEANS_K = 8
+_KMEANS_ITERS = 3
+_EMBED_DIM = 64
+_PQ_M = 4
+_PQ_K = 16
 _K_SCALED_SQL = (
     f"(SELECT GREATEST({_QUANTIZER_K_FLOOR}, "
     f"(COUNT(*) + {_QUANTIZER_TARGET_CELL - 1}) // {_QUANTIZER_TARGET_CELL}) "
@@ -1395,7 +1405,7 @@ def _scaled_quantizer_k(n: int) -> int:
 
 
 def _sq8_kmeans_cells(
-    spark: SparkSession, sf_dir: str, k: int | None = 8, iters: int = 3
+    spark: SparkSession, sf_dir: str, k: int | None = _KMEANS_K
 ) -> DataFrame:
     """Train the SQ8-domain k-means quantizer and assign every vector
     to its cell: a persisted frame (vec_id, v, nrm, cvec, cluster INT).
@@ -1444,29 +1454,26 @@ def _sq8_kmeans_cells(
     # passes transfer every column of their input, so hand them the
     # (vec_id, cvec) projection — v/nrm are dead weight in every Lloyd
     # iteration's batch stream (half the transferred bytes at 64 dims)
-    centroids, _ = kmeans_fit(
+    centroids = kmeans_fit(
         base.select("vec_id", "cvec"),
-        k=k,
+        [list(r["cvec"]) for r in seed_rows],
         vec_col="cvec",
-        max_iter=iters,
+        max_iter=_KMEANS_ITERS,
         tol=0.0,
-        seeds=[list(r["cvec"]) for r in seed_rows],
-        compute_inertia=False,
     )
     return assign_clusters_arrow(base, centroids, "cvec").transform(tracked_persist)
 
 
-def _kmeans_cells_cte(
-    k: int = 8, dim: int = 64, iters: int = 3, k_sql: str | None = None
-) -> str:
+def _kmeans_cells_cte(k_sql: str | None = None) -> str:
     """Shared unrolled-Lloyd CTE prefix: trains the SQ8-domain k-means
     quantizer and ends at the ``cells`` CTE (vec_id → cluster), with
     ``e`` (full-precision vectors + norms) still in scope.  Used by the
     ``ann_recall_ivf`` and ``dedup_semantic_semdedup`` oracles.  ``k_sql`` (a scalar-subquery string)
-    replaces the literal k for corpus-scaled quantizers
+    replaces the literal ``_KMEANS_K`` for corpus-scaled quantizers
     (``_K_SCALED_SQL``); only the SEED selection depends on k — the
     Lloyd unrolling itself is k-agnostic (centroids are rows)."""
-    k_expr = k_sql if k_sql is not None else str(k)
+    k_expr = k_sql if k_sql is not None else str(_KMEANS_K)
+    dim, iters = _EMBED_DIM, _KMEANS_ITERS
     parts = [
         f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v,
@@ -1577,7 +1584,7 @@ def dedup_semantic_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is linear in N.  Vectors are
     projected to (vec_id, cluster, v, nrm) BEFORE the pair exchange so
     the code vectors used in training never shuffle."""
-    cells = _sq8_kmeans_cells(spark, sf_dir, k=None, iters=3)
+    cells = _sq8_kmeans_cells(spark, sf_dir, k=None)
     slim = cells.select("vec_id", "cluster", "v", "nrm")
     a = slim.select(
         F.col("vec_id").alias("id_a"),
@@ -1613,7 +1620,7 @@ def dedup_semantic_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_ctes(m: int = 4, k: int = 16, subdim: int = 16, iters: int = 3) -> str:
+def _pq_ctes() -> str:
     """Unrolled-Lloyd DuckDB twin of the PQ-ADC tier, through the
     ``ranked`` CTE (ADC-approx top-k per query), for the recall gate
     ``ann_recall_pq``.
@@ -1626,9 +1633,12 @@ def _pq_ctes(m: int = 4, k: int = 16, subdim: int = 16, iters: int = 3) -> str:
     - distances fold dimension-by-dimension in index order on BOTH
       engines (``list_dot_product`` ≡ the Spark SQL fold ≡ the Arrow
       tier's ``_dists_fold_order``), so argmins — ties included — agree;
-    - the iteration count is pinned (``tol=0.0`` → exactly ``iters``
-      updates), so the unrolled CTE chain replays training step-for-step.
+    - the iteration count is pinned (``tol=0.0`` → exactly
+      ``_KMEANS_ITERS`` updates), so the unrolled CTE chain replays
+      training step-for-step.
     """
+    m, k, iters = _PQ_M, _PQ_K, _KMEANS_ITERS
+    subdim = _EMBED_DIM // m
     js = ", ".join(str(j) for j in range(m))
     parts = [
         f"""
@@ -1679,6 +1689,9 @@ def _pq_ctes(m: int = 4, k: int = 16, subdim: int = 16, iters: int = 3) -> str:
         FROM cents{i - 1} p LEFT JOIN m{i} mm ON mm.j = p.j AND mm.c = p.c
     )""")
     fin = iters + 1
+    approx_ip = "\n             + ".join(
+        f"MAX(CASE WHEN kk.j = {j} THEN l.ip END)" for j in range(m)
+    )
     parts.append(f""",
     a{fin}p AS (
         SELECT s.vec_id, s.j, c.c,
@@ -1700,10 +1713,7 @@ def _pq_ctes(m: int = 4, k: int = 16, subdim: int = 16, iters: int = 3) -> str:
     ),
     scored AS (
         SELECT l.qid AS query_id, kk.vec_id AS neighbor_id,
-               MAX(CASE WHEN kk.j = 0 THEN l.ip END)
-             + MAX(CASE WHEN kk.j = 1 THEN l.ip END)
-             + MAX(CASE WHEN kk.j = 2 THEN l.ip END)
-             + MAX(CASE WHEN kk.j = 3 THEN l.ip END) AS approx_ip
+               {approx_ip} AS approx_ip
         FROM codesf kk
         JOIN lut l ON l.j = kk.j AND l.c = kk.c AND kk.vec_id != l.qid
         GROUP BY l.qid, kk.vec_id
@@ -1771,7 +1781,7 @@ def ann_recall_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.transform("codes", lambda x: x.cast("double")).alias("embedding"),
     )
-    codes, books = S.pq_fit_codes(cvec, m=4, k=16, max_iter=3)
+    codes, books = S.pq_fit_codes(cvec, m=_PQ_M, k=_PQ_K, max_iter=_KMEANS_ITERS)
     codes = codes.transform(tracked_persist)
     approx = S.pq_adc_topk(
         codes, books, cvec.filter(F.col("vec_id") < 10), k_neighbors=5
@@ -2155,7 +2165,7 @@ def ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell-restricted tiers."""
     from pyspark.sql import Window
 
-    cells = _sq8_kmeans_cells(spark, sf_dir, k=8, iters=3)
+    cells = _sq8_kmeans_cells(spark, sf_dir)
     nn = cells.select("vec_id", "v", F.col("nrm"), "cluster")
     q = nn.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
@@ -2282,7 +2292,7 @@ def embedding_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle as one Lloyd update step; the per-vector distance needs one
     posexplode + a broadcast join of the k·d sums — nothing quadratic,
     nothing driver-side beyond the k×d matrix."""
-    cells = _sq8_kmeans_cells(spark, sf_dir, k=8, iters=3)
+    cells = _sq8_kmeans_cells(spark, sf_dir)
     pe = cells.select(
         "vec_id", "cluster", F.posexplode("cvec").alias("pos", "x")
     )
@@ -3036,7 +3046,7 @@ def embedding_outliers_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     k·d sums; the ranking window partitions by cluster (parallel
     across cells, each a bounded-size group under the k ∝ N quantizer
     regime)."""
-    cells = _sq8_kmeans_cells(spark, sf_dir, k=8, iters=3)
+    cells = _sq8_kmeans_cells(spark, sf_dir)
     pe = cells.select("vec_id", "cluster", F.posexplode("cvec").alias("pos", "x"))
     sums = pe.groupBy("cluster", "pos").agg(F.sum("x").cast("bigint").alias("sm"))
     cn = cells.groupBy("cluster").agg(F.count(F.lit(1)).alias("n"))
@@ -4298,7 +4308,7 @@ def similarity_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic creep the scaled k removes.  Cross-cell
     true mutual pairs are the recall trade the IVF recall gates
     measure."""
-    cells = _sq8_kmeans_cells(spark, sf_dir, k=None, iters=3)
+    cells = _sq8_kmeans_cells(spark, sf_dir, k=None)
     slim = cells.select("vec_id", "cluster", "v", "nrm")
     a = slim.select(
         F.col("vec_id").alias("src"),

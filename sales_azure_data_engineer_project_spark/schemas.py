@@ -18,6 +18,7 @@ from pyspark.sql import types as T
 __all__ = [
     "RAW_SALES_SCHEMA",
     "SILVER_SALES_SCHEMA",
+    "gold_schema",
     "TESTDATA_TABLES",
     "TESTDATA_SCHEMAS",
 ]
@@ -54,6 +55,24 @@ SILVER_SALES_SCHEMA = T.StructType(
         T.StructField("Year", T.IntegerType(), True),
     ]
 )
+
+
+def gold_schema(columns: list[str], surrogate_keys: list[str]) -> T.StructType:
+    """The schema a gold table commits, declared instead of inferred:
+    ``columns`` in order, each of ``surrogate_keys`` a bigint and every
+    other column typed as in silver, matched case-insensitively as the
+    fact resolves ``Rev_Per_Unit`` against silver's ``Rev_Per_unit``
+    (the fact's sums of silver's longs stay long).  So ``Year`` is an
+    int and ``Month`` and ``Day`` are longs.  Every field is nullable,
+    as a committed version reads back."""
+    silver = {f.name.lower(): f.dataType for f in SILVER_SALES_SCHEMA.fields}
+    return T.StructType(
+        [
+            T.StructField(c, T.LongType() if c in surrogate_keys else silver[c.lower()], True)
+            for c in columns
+        ]
+    )
+
 
 # ---------------------------------------------------------------------------
 # Driver test corpus (/root/testdata/sf*/ — FIXTURES.md §A)

@@ -23,7 +23,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark"]
+__all__ = ["get_spark", "codegen_compilations"]
 
 
 def _cpus() -> int:
@@ -84,6 +84,19 @@ def get_spark(
         # the pathological exponential render stays bounded.
         .config("spark.sql.maxPlanStringLength", "20000000")
         .config("spark.ui.showConsoleProgress", "false")
+        # Janino's compiled-class cache: LRU, one per JVM, keyed by the
+        # generated source.  Classes per operation, counted with Spark's
+        # CodegenMetrics on perfbench's seed-7 inputs: the medallion
+        # initial load 102, then 4 for its first batch and 0 for later
+        # ones; a pass of the four benchmark star/corpus queries 133.
+        # Under Spark's default of 100 entries the working set (about
+        # 100-230 classes) does not fit, so each class was evicted
+        # before its plan shape ran again: every medallion batch
+        # recompiled 54-76 classes and every star pass 130.  2000 is
+        # nearly 9x the largest of these.  It does not hold a whole
+        # registry pass (tools/check_oracle.py prints the count: 2,457
+        # at sf0.01), which is not one operation's working set.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # The corpus events table has shipped as TIMESTAMP(NANOS) (reader
         # rejects it — read as long, normalize in io) and as naive
         # timestamp[us] (read as a UTC instant, not NTZ, so time functions
@@ -102,3 +115,10 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
+
+
+def codegen_compilations(spark: SparkSession) -> int:
+    """Generated classes Janino has compiled in this JVM so far: the
+    codegen cache's misses, counted by Spark's ``CodegenMetrics``."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -298,55 +298,6 @@ def test_exact_substring_dedup_removes_planted_copies(spark, sf_smoke):
         assert r["kept_permille"] == 0
 
 
-def test_pq_adc_cell_restriction_equals_postfilter(spark):
-    """`pq_adc_topk(restrict_col=...)` (the IVF-PQ probe) must equal
-    scoring ALL candidates and keeping same-cell ones afterwards — the
-    restriction is a pushdown, never a semantics change."""
-    from pyspark.sql import functions as F
-
-    from sales_azure_data_engineer_project_spark.operators import similarity as S
-
-    n, d = 120, 8
-    emb = spark.range(n).select(
-        F.col("id").alias("vec_id"),
-        F.transform(
-            F.sequence(F.lit(0), F.lit(d - 1)),
-            lambda i: ((F.col("id") * 7 + i * 13) % 19).cast("double"),
-        ).alias("embedding"),
-        (F.col("id") % 4).cast("int").alias("cell"),
-    )
-    codes, books = S.pq_fit_codes(
-        emb.select("vec_id", "embedding"), m=2, k=4, max_iter=2
-    )
-    codes = codes.join(emb.select("vec_id", "cell"), "vec_id")
-    queries = emb.filter(F.col("vec_id") < 5)
-
-    restricted = S.pq_adc_topk(
-        codes, books, queries, k_neighbors=3, restrict_col="cell"
-    ).collect()
-
-    # reference: flat ADC over everything, filter to same cell, re-rank
-    flat = S.pq_adc_topk(codes, books, queries, k_neighbors=n).collect()
-    cell_of = {r["vec_id"]: r["cell"] for r in emb.select("vec_id", "cell").collect()}
-    expected = {}
-    for r in flat:
-        q = r["query_id"]
-        if cell_of[r["neighbor_id"]] == cell_of[q]:
-            expected.setdefault(q, []).append((r["neighbor_id"], r["approx_ip"]))
-    for q in expected:
-        expected[q] = sorted(expected[q], key=lambda t: (-t[1], t[0]))[:3]
-
-    got = {}
-    for r in restricted:
-        got.setdefault(r["query_id"], []).append(
-            (r["neighbor_id"], r["approx_ip"], r["rk"])
-        )
-    assert set(got) == set(expected)
-    for q in expected:
-        got_sorted = [ (n_, ip) for n_, ip, _ in sorted(got[q], key=lambda t: t[2]) ]
-        assert got_sorted == expected[q], f"query {q}"
-
-
 def test_dsir_importance_prefers_target_profile(spark, sf_smoke):
     """Docs from the designated target sources must score at least as
     high on average as the rest of the corpus — the defining property

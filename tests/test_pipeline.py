@@ -118,6 +118,23 @@ def test_gold_time_travel_across_runs(spark, tmp_path):
     assert old["BR0001"] == "Chandler BMW" and "XYZ9726" not in old
 
 
+def test_gold_tables_start_at_an_empty_version_0_with_the_committed_schema(spark, tmp_path):
+    """Every gold table is created empty (version 0) before its first
+    load, with a declared schema equal to the one that load commits."""
+    from sales_azure_data_engineer_project_spark.plans.pipeline import GOLD_SCHEMAS
+
+    init = write_sales_csv(str(tmp_path / "init.csv"), INITIAL_ROWS)
+    pipe = SalesPipeline(spark, str(tmp_path / "zones"))
+    pipe.run(init)
+    assert sorted(os.listdir(pipe.gold)) == sorted(GOLD_SCHEMAS)
+    for name, schema in GOLD_SCHEMAS.items():
+        table = pipe.gold_table(name)
+        assert table.current_version() == 1
+        assert (name, table.read(0).schema) == (name, schema)
+        assert (name, table.read(1).schema) == (name, schema)
+        assert table.read(0).count() == 0
+
+
 def test_silver_partition_pruning(spark, tmp_path):
     csv = write_sales_csv(str(tmp_path / "init.csv"), INITIAL_ROWS)
     pipe = SalesPipeline(spark, str(tmp_path / "zones"))
@@ -236,8 +253,8 @@ def test_incremental_run_job_budget(spark, tmp_path):
     assert jobs <= INCREMENTAL_RUN_JOB_BUDGET
 
 
-# Jobs the fixtures' initial load starts (measured: 14): the same plans
-# as an incremental batch, each dimension built with no sink to union.
+# Jobs the fixtures' initial load starts (measured: 15): the plans of an
+# incremental batch, run into the empty gold tables created for it.
 INITIAL_LOAD_JOB_BUDGET = 19
 
 

@@ -3,6 +3,8 @@ physical-plan assertions."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from conftest import count_jobs
 from pyspark.sql import functions as F
@@ -212,7 +214,8 @@ def test_kmeans_separates_obvious_clusters(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>").orderBy(
         "vec_id"
     )
-    centroids, inertia = kmeans_fit(df, k=2, max_iter=10)
+    # seeded with the first vector of each blob (vec_ids 0 and 1)
+    centroids = kmeans_fit(df, [rows[0][1], rows[1][1]], max_iter=10)
     assigned = assign_clusters(df, centroids).collect()
     by_parity = {}
     for r in assigned:
@@ -220,6 +223,9 @@ def test_kmeans_separates_obvious_clusters(spark):
     # each blob maps to exactly one cluster, and they differ
     assert len(by_parity[0]) == 1 and len(by_parity[1]) == 1
     assert by_parity[0] != by_parity[1]
+    inertia = sum(
+        math.dist(r["embedding"], centroids[r["cluster"]]) ** 2 for r in assigned
+    )
     assert inertia < 0.1
 
 

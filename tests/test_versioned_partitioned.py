@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from conftest import count_jobs
 from pyspark.sql import functions as F
 
@@ -47,6 +48,69 @@ def test_vacuum_keeps_the_published_version(spark, tmp_path):
         with pytest.raises(ValueError, match="published version"):
             vt.vacuum(keep_last=keep_last)
     assert vt.read().first()["x"] == 1
+
+
+_XV = "x long, v string"
+
+
+def test_create_publishes_an_empty_version_0_without_a_job(spark, tmp_path):
+    """``create`` is the CREATE TABLE commit: no Spark job, and the
+    table then reads as an empty frame with the declared schema, at the
+    current version and at version 0.  The first commit claims v=1."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    schema = StructType([StructField("x", LongType()), StructField("v", StringType())])
+    vt = VersionedTable(spark, str(tmp_path / "t"))
+    _, jobs = count_jobs(spark, lambda: vt.create(schema))
+    assert jobs == 0
+    assert vt.current_version() == 0
+    for snapshot in (vt.read(), vt.read(0)):
+        assert snapshot.schema == schema and snapshot.count() == 0
+    assert vt.overwrite(spark.createDataFrame([(1, "a")], _XV)) == 1
+    assert vt.read(0).count() == 0 and vt.read().count() == 1
+
+
+def test_create_racing_a_commit_raises(spark, tmp_path, monkeypatch):
+    """A commit that lands while version 0 publishes makes ``create``
+    raise, and the commit stays the published version; a table that
+    already has a version cannot be created again."""
+    import os
+
+    from sales_azure_data_engineer_project_spark.operators import versioned as V
+
+    root = str(tmp_path / "t")
+    vt, other = VersionedTable(spark, root), VersionedTable(spark, root)
+    schema = spark.createDataFrame([], _XV).schema
+    real_rename = os.rename
+    raced = []
+
+    def racing_rename(src, dst):
+        # just before create claims v=0, the other writer commits v=1
+        if os.path.basename(dst) == "v=0" and not raced:
+            raced.append(other.overwrite(spark.createDataFrame([(1, "a")], _XV)))
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(V.os, "rename", racing_rename)
+    with pytest.raises(V.ConcurrentWriteError):
+        vt.create(schema)
+    monkeypatch.undo()
+    assert raced == [1]
+    assert vt.current_version() == 1 and [tuple(r) for r in vt.read().collect()] == [(1, "a")]
+    with pytest.raises(V.ConcurrentWriteError):
+        vt.create(schema)
+    assert not [n for n in os.listdir(root) if n.startswith("._staged_")]
+
+
+def test_vacuum_never_drops_the_published_version_0(spark, tmp_path):
+    """An empty created table's version 0 is its published version, so
+    vacuum keeps it; once commits follow, it ages out like any other."""
+    vt = VersionedTable(spark, str(tmp_path / "t"))
+    vt.create(spark.createDataFrame([], _XV).schema)
+    assert vt.vacuum(keep_last=1) == [] and vt.read() is not None
+    vt.overwrite(spark.createDataFrame([(1, "a")], _XV))
+    vt.overwrite(spark.createDataFrame([(2, "b")], _XV))
+    assert vt.vacuum(keep_last=1) == [0, 1]
+    assert vt.read(0) is None and vt.read().first()["x"] == 2
 
 
 def test_read_raises_when_the_current_version_dir_is_gone(spark, tmp_path):

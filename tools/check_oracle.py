@@ -16,6 +16,10 @@ where the driver's hash fails.  This gate therefore:
 - flags any per-column pandas dtype disagreement, the leading indicator
   of the whole failure class.
 
+Its last line is the number of classes Janino compiled during the run,
+with the codegen cache size next to it: a registry pass that compiles
+more classes than the cache holds evicts them before they are reused.
+
 Usage: python tools/check_oracle.py [sf_dir] [query_name ...]
 """
 
@@ -75,9 +79,10 @@ def main() -> int:
 
     import __spark_entry__ as entry_mod
     from sales_azure_data_engineer_project_spark.schemas import TESTDATA_TABLES
-    from sales_azure_data_engineer_project_spark.session import get_spark
+    from sales_azure_data_engineer_project_spark.session import codegen_compilations, get_spark
 
     spark = get_spark("oracle-check")
+    compiled_before = codegen_compilations(spark)
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
@@ -160,6 +165,12 @@ def main() -> int:
         else:
             print(f"ok   {name}: {len(spdf)} rows match [{time.time()-t0:.1f}s]")
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
+    # the run's codegen working set, against the cache that must hold it
+    print(
+        f"janino compilations: {codegen_compilations(spark) - compiled_before} "
+        f"(spark.sql.codegen.cache.maxEntries="
+        f"{spark.conf.get('spark.sql.codegen.cache.maxEntries')})"
+    )
     return 1 if failures else 0
 
 
