@@ -53,9 +53,7 @@ Scale notes:
   case that would hand a key to two rows (a new attribute variant of a
   natural key the sink holds) raises inside step c's window.
 - ``assign_surrogate_keys`` is the engine's one surrogate-key
-  algorithm.  ``scd2.build_scd2_dimension`` keys its opened versions
-  with it too, and so shares the single-partition assumption, history
-  rows included.
+  algorithm: step d.
 """
 
 from __future__ import annotations
@@ -94,14 +92,11 @@ class DimensionSpec:
         return [*self.nk_cols, *self.attrs]
 
 
-def build_scd1_dimension(
-    silver: DataFrame, sink: DataFrame | None, spec: DimensionSpec
-) -> DataFrame:
+def build_scd1_dimension(silver: DataFrame, sink: DataFrame, spec: DimensionSpec) -> DataFrame:
     """Compute the post-merge state of one SCD-1 dimension.
 
     ``sink`` is the current gold dimension: on the initial load, the
-    empty table the pipeline created (so that load runs this same plan),
-    or None for a caller with no table at all.
+    empty table the pipeline created, so that load runs this same plan.
     Returns the full new dimension: existing rows keep their surrogate
     keys but take CURRENT attribute values from silver (SCD-1 update,
     reference behavior per hazard H3); new natural keys get dense keys
@@ -117,9 +112,9 @@ def build_scd1_dimension(
     attrs = [_ident(a) for a in spec.attrs]
     cols = [key, *nk, *attrs]
     # Source rows carry a NULL key; sink rows their committed one.
-    rows = silver.selectExpr(f"CAST(NULL AS BIGINT) AS {key}", *nk, *attrs)
-    if sink is not None:  # union the committed dimension
-        rows = rows.union(sink.selectExpr(*cols))
+    rows = silver.selectExpr(f"CAST(NULL AS BIGINT) AS {key}", *nk, *attrs).union(
+        sink.selectExpr(*cols)
+    )
     # One partition for the whole dimension, so nothing below shuffles.
     # Reference parity: the source dedup is DISTINCT over (nk, attrs) —
     # `select Distinct Dealer_ID, DealerName` (`3(3)_Gold_dim_dealer.py:44`)

@@ -24,8 +24,8 @@ widest shuffle is the original groupBy on (group, bucket).
 
 This generalizes the reference's running-total notebooks' semantics
 (cumulative measures over an ordered dimension) to a shape that holds
-at cluster scale.  Used by ``events_mannwhitney_auc`` for exact
-midranks and by the concentration and RFM queries.
+at cluster scale.  Used by ``dedup_removal_bias_audit`` for its
+length ECDF.
 """
 
 from __future__ import annotations

@@ -12,11 +12,10 @@ column, computed scalably:
 3. the quantile is the smallest value whose cumulative count reaches
    the rank ⌈p·n/100⌉ — one conditional MIN per requested p.
 
-This is the engine's standard exact-quantile shape (used by the Tukey
-fences, ship-latency, repeat-purchase and inter-arrival queries); the
-UNGROUPED variant with an unbounded value domain belongs to
-``prefixsum.bucketed_cumsum`` instead (two-level scan — see
-``events_interarrival_quantiles``).
+This is the engine's standard exact-quantile shape (used by the
+ship-latency and repeat-purchase queries); the UNGROUPED variant with
+an unbounded value domain belongs to ``prefixsum.bucketed_cumsum``
+instead (two-level scan).
 
 Parity contract (mirrored by every DuckDB oracle twin): rank
 threshold is ``(p·n + 99) // 100`` (integer, truncating — equals

@@ -19,10 +19,9 @@ Hazard H4 (SURVEY §4.3): Delta MERGE *fails* when multiple source rows
 match one target key.  The merge window counts the source rows of each
 key, and a count of two or more hits ``raise_error`` in that same
 window: the action that writes the merge result fails before anything
-is published, at no job of its own.  ``guard_unique`` is the same check
-for a frame with no target; it serves ``merge_upsert(target=None)``, a
-MERGE into a table never created (the pipeline creates its gold tables
-empty first, so only direct ``VersionedTable`` callers reach it).  Dimension snapshots need no such
+is published, at no job of its own.  Every MERGE has a target: a table
+never created is created empty first (``VersionedTable.merge``), so the
+first load runs this same plan.  Dimension snapshots need no such
 check: ``dimensions.build_scd1_dimension`` raises the same message from
 its own natural-key window.
 
@@ -42,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["merge_upsert", "guard_unique"]
+__all__ = ["merge_upsert"]
 
 
 def _duplicate_keys_message(keys: list[str]) -> str:
@@ -53,51 +52,23 @@ def _duplicate_keys_message(keys: list[str]) -> str:
     )
 
 
-def merge_upsert(
-    target: DataFrame | None,
-    source: DataFrame,
-    keys: list[str],
-) -> DataFrame:
+def merge_upsert(target: DataFrame, source: DataFrame, keys: list[str]) -> DataFrame:
     """Relational SCD-1 merge: source wins on key match, others kept.
 
-    ``target=None`` means no table to merge into (the reference's
-    `tableExists` false branch, `3(1)_Gold_dim_model.py:171-176`): the
-    result is the source rows.
-
-    Either way, evaluating the result raises if two source rows share
-    ``keys``: the check runs inside the plan, not as a job of its own.
+    Source rows and target rows are decided per key by one window: two
+    or more source rows raise; a source row survives; a target row
+    survives unless a source row matches its key, and a key with a NULL
+    column matches nothing.  Evaluating the result raises on a
+    duplicate: the check runs inside the plan, not as a job of its own.
 
     The source is projected onto the target's columns (H7), so a column
     new in the source is dropped, as in Delta without ``mergeSchema``.
     """
-    if target is None:
-        return guard_unique(source, keys)
-    source = source.select(*target.columns)
-    return _merge_window(
-        source.withColumn("__src", F.lit(1)).unionByName(
-            target.withColumn("__src", F.lit(0))
-        ),
-        keys,
+    rows = (
+        source.select(*target.columns)
+        .withColumn("__src", F.lit(1))
+        .unionByName(target.withColumn("__src", F.lit(0)))
     )
-
-
-def guard_unique(df: DataFrame, keys: list[str]) -> DataFrame:
-    """``df`` unchanged, but evaluating it raises if two rows share
-    ``keys``: the merge window with no target to merge into.
-
-    The check runs inside whatever action evaluates ``df`` (the
-    commit's write) instead of as a job of its own.  On a frame already
-    partitioned on ``keys`` (an aggregate to the merge grain, or a
-    single partition) the window adds no exchange.
-    """
-    return _merge_window(df.withColumn("__src", F.lit(1)), keys)
-
-
-def _merge_window(rows: DataFrame, keys: list[str]) -> DataFrame:
-    """Source rows (``__src`` = 1) and target rows (0) decided per key
-    by one window: two or more source rows raise; a source row
-    survives; a target row survives unless a source row matches its
-    key, and a key with a NULL column matches nothing."""
     n_src = F.sum("__src").over(Window.partitionBy(*keys))
     unmatched = F.col("__n_src") == 0
     for k in keys:
@@ -109,4 +80,3 @@ def _merge_window(rows: DataFrame, keys: list[str]) -> DataFrame:
         .otherwise(unmatched)
     )
     return rows.withColumn("__n_src", n_src).filter(keep).drop("__src", "__n_src")
-

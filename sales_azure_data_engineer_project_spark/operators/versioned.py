@@ -19,7 +19,7 @@ onto a JSON commit in Delta's ``_delta_log``.  ``create`` is Delta's
 version-0 CREATE TABLE commit: it publishes the declared schema and no
 rows, so the first load reads (and merges into) an empty table instead
 of taking a code path of its own.  A table never created has no
-version: ``read`` returns ``None``.
+version: ``read`` returns ``None``, and ``merge`` creates it first.
 
 A partitioned table's MERGE reads only the partitions its source
 touches (an IN-list the scan turns into ``PartitionFilters``), writes
@@ -284,6 +284,9 @@ class VersionedTable:
         merged plan (``merge_upsert``) evaluates ``source`` once and
         checks its keys in the same window: a duplicate fails the write,
         so no version is published, and no separate job runs before it.
+        A table never created is first created with ``source``'s schema,
+        and the merge commits into that empty version 0, as a pipeline's
+        first load does.
 
         On a partitioned table the merge reads, and rewrites, only the
         partitions ``source`` touches; one collect of the source's
@@ -298,8 +301,11 @@ class VersionedTable:
             )
         base = self.current_version()
         target = self.read(base)
+        if target is None:
+            self.create(source.schema)
+            target = self.read(base)
         carry_from = None
-        if self.partition_by and target is not None:
+        if self.partition_by:
             touched = source.select(*self.partition_by).distinct().collect()
             target = target.filter(_in_partitions(self.partition_by, touched))
             carry_from = self._vdir(base)

@@ -385,101 +385,6 @@ def text_quality_classifier_hashed(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 @register(
-    "quality_adaptive_thresholds",
-    r"""
-    WITH t AS (
-        SELECT doc_id, source,
-               string_split_regex(text, '\s+') AS toks
-        FROM documents
-    ),
-    m AS (
-        SELECT doc_id, source,
-               (1000 * len(list_distinct(toks))) // len(toks) AS ttr_permille
-        FROM t WHERE len(toks) > 0
-    ),
-    rk AS (
-        SELECT source, ttr_permille,
-               ROW_NUMBER() OVER (PARTITION BY source
-                   ORDER BY ttr_permille, doc_id) AS rn,
-               COUNT(*) OVER (PARTITION BY source) AS n
-        FROM m
-    ),
-    cut AS (
-        SELECT source, n AS n_docs, ttr_permille AS p25_cutoff
-        FROM rk WHERE rn = (n + 3) // 4
-    )
-    SELECT c.source, CAST(c.n_docs AS BIGINT) AS n_docs,
-           CAST(c.p25_cutoff AS BIGINT) AS p25_cutoff,
-           CAST(SUM(CASE WHEN m.ttr_permille >= c.p25_cutoff
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-           CAST((1000 * SUM(CASE WHEN m.ttr_permille >= c.p25_cutoff
-                                 THEN 1 ELSE 0 END)) // c.n_docs AS BIGINT)
-               AS kept_permille
-    FROM cut c JOIN m ON m.source = c.source
-    GROUP BY c.source, c.n_docs, c.p25_cutoff
-    ORDER BY c.source
-    """,
-)
-def quality_adaptive_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain adaptive quality cutoffs — the FineWeb/RefinedWeb
-    lesson that one global threshold over-filters some domains and
-    under-filters others: compute a quality metric per document
-    (type-token ratio in permille), derive each SOURCE's own 25th-
-    percentile cutoff (rank-based, integer-exact: the value at row
-    ⌈n/4⌉ of the per-source ascending order), and report how much of
-    each domain survives its own bar.  Rank-based percentiles rather
-    than interpolated quantiles keep the oracle exact.
-
-    Scale shape: metric is a narrow map; the percentile is a window
-    over (source) — partitions are per-domain, so the sort is
-    domain-local and parallel across domains (at 100 TB a skewed mega-
-    domain would switch to approx_percentile per partition, same
-    plan shape); the cutoff table is |domains| rows, broadcast back
-    for the survivor count."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    t = docs.select("doc_id", "source", F.split("text", X.TOKEN_RE).alias("toks"))
-    m = (
-        t.filter(F.size("toks") > 0)
-        .select(
-            "doc_id",
-            "source",
-            F.expr("div(1000 * size(array_distinct(toks)), size(toks))").alias(
-                "ttr_permille"
-            ),
-        )
-        .transform(tracked_persist)
-    )
-    w = Window.partitionBy("source").orderBy("ttr_permille", "doc_id")
-    wn = Window.partitionBy("source")
-    rk = m.select(
-        "source",
-        "ttr_permille",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(wn).alias("n"),
-    )
-    cut = rk.filter(F.col("rn") == F.expr("div(n + 3, 4)")).select(
-        "source", F.col("n").alias("n_docs"), F.col("ttr_permille").alias("p25_cutoff")
-    )
-    return (
-        m.join(F.broadcast(cut), "source")
-        .groupBy("source", "n_docs", "p25_cutoff")
-        .agg(
-            F.sum(
-                F.when(F.col("ttr_permille") >= F.col("p25_cutoff"), 1).otherwise(0)
-            ).alias("n_kept")
-        )
-        .select(
-            "source",
-            F.col("n_docs").cast("bigint"),
-            F.col("p25_cutoff").cast("bigint"),
-            F.col("n_kept").cast("bigint"),
-            F.expr("div(1000 * n_kept, n_docs)").cast("bigint").alias("kept_permille"),
-        )
-        .orderBy("source")
-    )
-
-
-@register(
     "text_boilerplate_chunks",
     f"""
     WITH {_CORPUS_SQL},
@@ -881,16 +786,6 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Training-data pipeline staples: chunking, deterministic sampling,
 # vocabulary statistics
 # ---------------------------------------------------------------------------
-
-
-_HEX12 = (
-    "("
-    + " + ".join(
-        f"(strpos('0123456789abcdef', substr(h, {i}, 1)) - 1) * {16 ** (12 - i)}"
-        for i in range(1, 13)
-    )
-    + ")"
-)
 
 
 @register(
@@ -1921,133 +1816,6 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
     ).orderBy("dim")
 
 
-_SPAN8_POS = ", ".join(f"toks[pos+{j}]" for j in range(8))
-_SPAN8_SPARK = ",".join(f"toks[i+{j}]" for j in range(-1, 7))
-
-
-@register(
-    "text_exact_substring_dedup",
-    rf"""
-    WITH {_CORPUS_SQL},
-    t AS (SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM corpus),
-    occ AS (
-        SELECT doc_id, toks, unnest(generate_series(1, len(toks)-7)) AS pos
-        FROM t WHERE len(toks) >= 8
-    ),
-    sp AS (SELECT doc_id, pos, concat_ws(' ', {_SPAN8_POS}) AS span FROM occ),
-    g AS (SELECT span, COUNT(*) AS n,
-                 MIN(struct_pack(d := doc_id, p := pos)) AS fk
-          FROM sp GROUP BY span),
-    rem AS (
-        SELECT s.doc_id, s.pos FROM sp s JOIN g ON g.span = s.span
-        WHERE g.n >= 2 AND NOT (s.doc_id = g.fk.d AND s.pos = g.fk.p)
-    ),
-    isl AS (
-        SELECT doc_id, pos,
-               SUM(CASE WHEN prev IS NULL OR pos > prev + 8 THEN 1 ELSE 0 END)
-                   OVER (PARTITION BY doc_id ORDER BY pos
-                         ROWS UNBOUNDED PRECEDING) AS island
-        FROM (SELECT doc_id, pos,
-                     lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
-              FROM rem)
-    ),
-    iv AS (SELECT doc_id, island, MIN(pos) AS s, MAX(pos) + 7 AS e
-           FROM isl GROUP BY doc_id, island),
-    per_doc AS (SELECT doc_id, COUNT(*) AS n_iv, SUM(e - s + 1) AS n_rm
-                FROM iv GROUP BY doc_id)
-    SELECT CAST(c.doc_id AS BIGINT) AS doc_id,
-           CAST(coalesce(p.n_iv, 0) AS BIGINT) AS n_remove_intervals,
-           CAST(coalesce(p.n_rm, 0) AS BIGINT) AS tokens_removed,
-           CAST(len(t2.toks) AS BIGINT) AS tokens_total,
-           CAST((1000 * (len(t2.toks) - coalesce(p.n_rm, 0))) // len(t2.toks)
-                AS BIGINT) AS kept_permille
-    FROM corpus c JOIN t t2 ON t2.doc_id = c.doc_id
-    LEFT JOIN per_doc p ON p.doc_id = c.doc_id
-    ORDER BY doc_id
-    """,
-)
-def text_exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-substring deduplication plan (Lee et al. 2022, "Deduplicating
-    Training Data Makes Language Models Better"): every 8-token span
-    occurrence that repeats anywhere in the corpus is REMOVED except the
-    globally first occurrence (min (doc_id, pos)), and per doc the
-    surviving removal positions merge into maximal intervals — the exact
-    token ranges a training pipeline would cut, with per-doc removal
-    stats.  Unlike a per-doc profile over DISTINCT spans, this is
-    position-level with keep-one semantics.
-
-    Spark-first shape: span occurrences stream out of one INLINE
-    generator explode (positions ride along); the span-frequency +
-    first-occurrence aggregate and the probe side share the identical
-    subtree, so Catalyst reuses one Exchange on the span hash.  The
-    interval merge exploits fixed-length spans: removal intervals sorted
-    by position have monotone ends, so one lag() compare (pos >
-    prev + 8) starts a new island and a running sum numbers them — two
-    narrow windows over only the REMOVED positions, partitioned by doc.
-    Span identity travels as xxhash64 longs; the oracle groups raw
-    strings, so a collision would fail the sf0.01 hash gate."""
-    corpus = _dedup_corpus(spark, sf_dir)
-    toks = corpus.select(
-        "doc_id", F.split("text", X.TOKEN_RE).alias("toks")
-    )
-    sp = toks.filter(F.size("toks") >= 8).select(
-        "doc_id",
-        F.expr(
-            "explode(transform(sequence(1, size(toks) - 7),"
-            f" i -> struct(i AS pos, xxhash64(concat_ws(' ', {_SPAN8_SPARK})) AS h)))"
-        ).alias("s"),
-    ).select("doc_id", "s.pos", "s.h")
-    # first occurrence = lexicographic MIN over (doc_id, pos) structs —
-    # collision-free for any doc length, unlike an arithmetic
-    # doc_id*K + pos encoding (review finding: K bounds token count)
-    g = sp.groupBy("h").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min(F.struct(F.col("doc_id"), F.col("pos"))).alias("fk"),
-    )
-    rem = (
-        sp.join(g, "h")
-        .filter(
-            (F.col("n") >= 2)
-            & ~((F.col("doc_id") == F.col("fk.doc_id")) & (F.col("pos") == F.col("fk.pos")))
-        )
-        .select("doc_id", "pos")
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    isl = (
-        rem.withColumn("prev", F.lag("pos").over(w))
-        .withColumn(
-            "new_isl",
-            F.when(
-                F.col("prev").isNull() | (F.col("pos") > F.col("prev") + 8), 1
-            ).otherwise(0),
-        )
-        .withColumn(
-            "island",
-            F.sum("new_isl").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-    )
-    iv = isl.groupBy("doc_id", "island").agg(
-        F.min("pos").alias("s"), (F.max("pos") + 7).alias("e")
-    )
-    per_doc = iv.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_iv"), F.sum(F.col("e") - F.col("s") + 1).alias("n_rm")
-    )
-    return (
-        toks.select("doc_id", F.size("toks").alias("n_toks"))
-        .join(per_doc, "doc_id", "left")
-        .select(
-            F.col("doc_id").cast("bigint"),
-            F.coalesce("n_iv", F.lit(0)).cast("bigint").alias("n_remove_intervals"),
-            F.coalesce("n_rm", F.lit(0)).cast("bigint").alias("tokens_removed"),
-            F.col("n_toks").cast("bigint").alias("tokens_total"),
-            F.expr("div(1000 * (n_toks - coalesce(n_rm, 0)), n_toks)")
-            .cast("bigint")
-            .alias("kept_permille"),
-        )
-        .orderBy("doc_id")
-    )
-
-
 @register(
     "interval_overlap_sweep",
     """
@@ -2323,8 +2091,7 @@ def embedding_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Round-5 session-3 additions: CCNet perplexity buckets, mergeable
-# bottom-k quantile sketch, deterministic global training shuffle,
-# curriculum-order phases.
+# bottom-k quantile sketch, deterministic global training shuffle.
 # ---------------------------------------------------------------------------
 
 
@@ -2440,138 +2207,6 @@ def quantile_sketch_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("est_p99_cents").cast("bigint"),
         )
         .orderBy("l_returnflag")
-    )
-
-
-@register(
-    "pipeline_curriculum_order",
-    r"""
-    WITH t AS (
-        SELECT doc_id,
-               string_split_regex(text, '\s+') AS toks,
-               md5(CAST(doc_id AS VARCHAR)) AS h
-        FROM documents
-    ),
-    m AS (
-        SELECT doc_id, h, len(toks) AS n_tokens,
-               (1000 * list_sum(list_transform(toks, s -> length(s))))
-                   // len(toks) AS difficulty
-        FROM t WHERE len(toks) > 0
-    ),
-    hist AS (SELECT difficulty, COUNT(*) AS c FROM m GROUP BY difficulty),
-    cum AS (
-        SELECT difficulty,
-               SUM(c) OVER (ORDER BY difficulty) AS cum,
-               SUM(c) OVER () AS n
-        FROM hist
-    ),
-    cuts AS (
-        SELECT MIN(CASE WHEN 4 * cum >= n THEN difficulty END) AS c1,
-               MIN(CASE WHEN 4 * cum >= 2 * n THEN difficulty END) AS c2,
-               MIN(CASE WHEN 4 * cum >= 3 * n THEN difficulty END) AS c3
-        FROM cum
-    ),
-    tagged AS (
-        SELECT CASE WHEN m.difficulty <= k.c1 THEN 1
-                    WHEN m.difficulty <= k.c2 THEN 2
-                    WHEN m.difficulty <= k.c3 THEN 3
-                    ELSE 4 END AS phase,
-               m.doc_id, m.h, m.n_tokens, m.difficulty
-        FROM m CROSS JOIN cuts k
-    )
-    SELECT CAST(phase AS BIGINT) AS phase,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-           CAST(SUM(difficulty) // COUNT(*) AS BIGINT)
-               AS avg_difficulty_permille,
-           CAST(arg_min(doc_id, h) AS BIGINT) AS first_doc_id
-    FROM tagged
-    GROUP BY phase
-    ORDER BY phase
-    """,
-)
-def pipeline_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Curriculum-learning phase assignment (Bengio et al. 2009 shape):
-    score every document with an integer difficulty proxy (mean token
-    length in permille — longer words ≈ harder text), split the corpus
-    into 4 phases easy→hard by GLOBAL quartile, and within each phase
-    fix a deterministic hash order (so each phase is internally
-    shuffled but reproducible).  Reports per-phase doc/token mass and
-    the first document each phase would feed the trainer.
-
-    Scale shape: global quartiles use a bounded-domain HISTOGRAM — a
-    map-side-combinable groupBy(difficulty) holds the whole
-    distribution, the cumulative scan runs over that tiny relation,
-    and per-doc tagging is a broadcast of THREE integers.  No global
-    sort of documents anywhere; the trainer-facing order is hash
-    order within phase (sorted per output shard at write time).
-    first_doc_id = min_by(doc_id, hash) — one map-side-combinable
-    argmin."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    t = docs.select(
-        "doc_id",
-        F.split("text", X.TOKEN_RE).alias("toks"),
-        F.md5(F.col("doc_id").cast("string").cast("binary")).alias("h"),
-    )
-    m = (
-        t.filter(F.size("toks") > 0)
-        .select(
-            "doc_id",
-            "h",
-            F.size("toks").alias("n_tokens"),
-            F.expr(
-                "div(1000 * aggregate(toks, 0L, (a, s) -> a + length(s)),"
-                " size(toks))"
-            ).alias("difficulty"),
-        )
-        .transform(tracked_persist)
-    )
-    hist = m.groupBy("difficulty").agg(F.count(F.lit(1)).alias("c"))
-    wcum = Window.partitionBy().orderBy("difficulty")
-    wall = Window.partitionBy()
-    cum = hist.select(
-        "difficulty",
-        F.sum("c").over(wcum).alias("cum"),
-        F.sum("c").over(wall).alias("n"),
-    )
-    cuts = cum.agg(
-        F.min(F.when(4 * F.col("cum") >= F.col("n"), F.col("difficulty"))).alias("c1"),
-        F.min(
-            F.when(4 * F.col("cum") >= 2 * F.col("n"), F.col("difficulty"))
-        ).alias("c2"),
-        F.min(
-            F.when(4 * F.col("cum") >= 3 * F.col("n"), F.col("difficulty"))
-        ).alias("c3"),
-    )
-    tagged = m.join(F.broadcast(cuts)).select(
-        F.when(F.col("difficulty") <= F.col("c1"), F.lit(1))
-        .when(F.col("difficulty") <= F.col("c2"), F.lit(2))
-        .when(F.col("difficulty") <= F.col("c3"), F.lit(3))
-        .otherwise(F.lit(4))
-        .alias("phase"),
-        "doc_id",
-        "h",
-        "n_tokens",
-        "difficulty",
-    )
-    return (
-        tagged.groupBy("phase")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("total_tokens"),
-            F.sum("difficulty").alias("dsum"),
-            F.min_by("doc_id", "h").alias("first_doc_id"),
-        )
-        .select(
-            F.col("phase").cast("bigint"),
-            F.col("n_docs").cast("bigint"),
-            F.col("total_tokens").cast("bigint"),
-            F.expr("div(dsum, n_docs)")
-            .cast("bigint")
-            .alias("avg_difficulty_permille"),
-            F.col("first_doc_id").cast("bigint"),
-        )
-        .orderBy("phase")
     )
 
 
@@ -3075,117 +2710,6 @@ def embedding_outliers_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "quality_knn_label_noise",
-    """
-    WITH n AS (
-        SELECT vec_id, label, embedding::DOUBLE[] AS v,
-               sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-        FROM embeddings
-    ),
-    scored AS (
-        SELECT q.vec_id AS query_id, q.label AS query_label,
-               c.label AS neighbor_label,
-               list_dot_product(q.v, c.v) / (q.nrm * c.nrm) AS cos_raw,
-               c.vec_id AS neighbor_id
-        FROM n q JOIN n c ON c.vec_id != q.vec_id
-        WHERE q.vec_id < 50
-    ),
-    ranked AS (
-        SELECT query_id, query_label, neighbor_label,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY cos_raw DESC, neighbor_id) AS rk
-        FROM scored
-    ),
-    per AS (
-        SELECT query_id, query_label,
-               SUM(CASE WHEN neighbor_label = query_label THEN 1 ELSE 0 END)
-                   AS n_same
-        FROM ranked WHERE rk <= 5
-        GROUP BY query_id, query_label
-    )
-    SELECT CAST(query_label AS INTEGER) AS label,
-           CAST(COUNT(*) AS BIGINT) AS n_probes,
-           CAST(SUM(CASE WHEN 2 * n_same < 5 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_flagged,
-           CAST((1000 * SUM(n_same)) // (5 * COUNT(*)) AS BIGINT)
-               AS agreement_permille
-    FROM per
-    GROUP BY query_label
-    ORDER BY label
-    """,
-)
-def quality_knn_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """kNN label-noise estimation (the Confident-Learning / cleanlab
-    signal): for each probe vector, how many of its 5 exact nearest
-    neighbors share its label; a probe whose neighborhood majority
-    DISAGREES is a likely label error.  Reported per label — the
-    per-class noise-rate table that decides relabeling or per-class
-    loss weighting before training.
-
-    Scale shape: the bounded 50-probe set broadcasts against one
-    corpus scan (same calibration-gate contract as the ``ann_recall``
-    family — cost is |Q|·N with |Q| fixed); the full-corpus production
-    sweep swaps the brute scan for the IVF cell-restricted kNN with
-    this query as its recall/agreement gate.  Neighbor counting is a
-    5-row-per-probe aggregate; the report is |labels| rows."""
-    emb = _fan_out(load_testdata(spark, sf_dir, "embeddings"))
-    nv = S.with_norm(emb)
-    cand = nv.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("neighbor_label"),
-        F.col("_v").alias("cv"),
-        F.col("_norm").alias("cn"),
-    )
-    q = nv.filter(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("query_label"),
-        F.col("_v").alias("qv"),
-        F.col("_norm").alias("qn"),
-    )
-    scored = cand.join(
-        F.broadcast(q), F.col("query_id") != F.col("neighbor_id")
-    ).select(
-        "query_id",
-        "query_label",
-        "neighbor_id",
-        "neighbor_label",
-        (S.dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias(
-            "cos_raw"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-    )
-    per = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .groupBy("query_id", "query_label")
-        .agg(
-            F.sum(
-                F.when(F.col("neighbor_label") == F.col("query_label"), 1).otherwise(0)
-            ).alias("n_same")
-        )
-    )
-    return (
-        per.groupBy("query_label")
-        .agg(
-            F.count(F.lit(1)).alias("n_probes"),
-            F.sum(F.when(2 * F.col("n_same") < 5, 1).otherwise(0)).alias("n_flagged"),
-            F.sum("n_same").alias("sum_same"),
-        )
-        .select(
-            F.col("query_label").cast("int").alias("label"),
-            F.col("n_probes").cast("bigint"),
-            F.col("n_flagged").cast("bigint"),
-            F.expr("div(1000 * sum_same, 5 * n_probes)")
-            .cast("bigint")
-            .alias("agreement_permille"),
-        )
-        .orderBy("label")
-    )
-
-
-@register(
     "quality_metadata_consistency",
     """
     WITH t AS (
@@ -3252,7 +2776,7 @@ def quality_metadata_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Round-5 session-5: hybrid retrieval fusion, Bloom decontamination
-# pre-filter, k-center coreset selection, HyperLogLog distinct sketch
+# pre-filter, HyperLogLog distinct sketch
 # ---------------------------------------------------------------------------
 
 
@@ -3367,7 +2891,7 @@ def text_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _hexat(col: str, start: int, n: int) -> str:
     """DuckDB SQL: integer value of ``n`` hex chars of ``col`` starting
-    at 1-based ``start`` (generalizes ``_HEX12`` to offsets)."""
+    at 1-based ``start``."""
     return (
         "("
         + " + ".join(
@@ -3377,120 +2901,6 @@ def _hexat(col: str, start: int, n: int) -> str:
         )
         + ")"
     )
-
-
-def _d2_sql(a: str, b: str) -> str:
-    """DuckDB SQL: exact integer squared L2 between two int lists."""
-    return (
-        f"list_sum(list_transform(generate_series(1, len({a})),"
-        f" i -> CAST(({a}[i] - {b}[i]) AS BIGINT) * ({a}[i] - {b}[i])))"
-    )
-
-
-@register(
-    "sample_coreset_kcenter",
-    f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    mm AS (SELECT MIN(x) AS mn, MAX(x) AS mx FROM (SELECT unnest(v) AS x FROM e)),
-    q AS (
-        SELECT vec_id,
-               list_transform(v, x -> least(255, greatest(0,
-                   CAST(floor((x - mn) * 256.0 / greatest(mx - mn, 1e-12)) AS INTEGER)))) AS qv
-        FROM e, mm
-    ),
-    c1 AS (SELECT vec_id, qv FROM q ORDER BY vec_id LIMIT 1),
-    d1 AS (SELECT p.vec_id, p.qv, {_d2_sql("p.qv", "c.qv")} AS d
-           FROM q p CROSS JOIN c1 c),
-    p2 AS (SELECT vec_id, qv, d FROM d1 ORDER BY d DESC, vec_id LIMIT 1),
-    d2 AS (SELECT p.vec_id, p.qv, least(p.d, {_d2_sql("p.qv", "c.qv")}) AS d
-           FROM d1 p CROSS JOIN p2 c),
-    p3 AS (SELECT vec_id, qv, d FROM d2 ORDER BY d DESC, vec_id LIMIT 1),
-    d3 AS (SELECT p.vec_id, p.qv, least(p.d, {_d2_sql("p.qv", "c.qv")}) AS d
-           FROM d2 p CROSS JOIN p3 c),
-    p4 AS (SELECT vec_id, qv, d FROM d3 ORDER BY d DESC, vec_id LIMIT 1),
-    d4 AS (SELECT least(p.d, {_d2_sql("p.qv", "c.qv")}) AS d
-           FROM d3 p CROSS JOIN p4 c),
-    r4 AS (SELECT MAX(d) AS d FROM d4)
-    SELECT CAST(1 AS INTEGER) AS pick_idx, CAST(c1.vec_id AS BIGINT) AS vec_id,
-           CAST(p2.d AS BIGINT) AS radius2 FROM c1, p2
-    UNION ALL SELECT 2, CAST(p2.vec_id AS BIGINT), CAST(p3.d AS BIGINT) FROM p2, p3
-    UNION ALL SELECT 3, CAST(p3.vec_id AS BIGINT), CAST(p4.d AS BIGINT) FROM p3, p4
-    UNION ALL SELECT 4, CAST(p4.vec_id AS BIGINT), CAST(r4.d AS BIGINT) FROM p4, r4
-    ORDER BY pick_idx
-    """,
-)
-def sample_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy k-center coreset selection (Gonzalez 1985; the
-    farthest-point diversity sampler behind active-learning coresets,
-    Sener & Savarese 2018) — pick 4 maximally-spread exemplars: seed
-    with the lowest id, then 3× pick the point farthest from the
-    selected set.  Reports each pick plus the coverage radius (the
-    max-min squared distance every point has to the selected set)
-    AFTER that pick — the 2-approximation certificate of the optimal
-    k-center cost, and the curve a curator reads to choose k.
-
-    Distances run in the shared SQ8 integer domain
-    (``operators/similarity.sq8_codes``) so the argmax — and therefore
-    every pick — is bit-exact on both engines (a double tie could
-    diverge; integer ties break by vec_id deterministically).
-
-    Scale shape: each of the 3 rounds is one broadcast of the single
-    new center into a map-only min-update + ONE TakeOrderedAndProject
-    argmax (k·O(N) total, the textbook distributed greedy k-center);
-    the running min-distance frame is persisted so round i+1 scans it,
-    not the lineage.  Driver sees only 1-row picks.  At real k the
-    same loop runs k rounds with O(1) state per round
-    (cf. operators/kmeans.py for the driver-bounded-iteration
-    contract)."""
-    emb = _fan_out(load_testdata(spark, sf_dir, "embeddings"))
-    codes = S.sq8_codes(emb).transform(tracked_persist)
-
-    def d2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: ((x - y) * (x - y)).cast("long")),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
-    c1 = codes.orderBy("vec_id").limit(1)
-    d = codes.crossJoin(
-        F.broadcast(c1.select(F.col("codes").alias("c")))
-    ).select("vec_id", "codes", d2(F.col("codes"), F.col("c")).alias("d"))
-    rows = []
-    prev_pick = c1.select("vec_id")
-    for idx in range(2, 5):
-        d = d.transform(tracked_persist)
-        pick = d.orderBy(F.col("d").desc(), F.col("vec_id").asc()).limit(1)
-        rows.append(
-            prev_pick.crossJoin(F.broadcast(pick.select(F.col("d").alias("radius2"))))
-            .select(
-                F.lit(idx - 1).cast("int").alias("pick_idx"),
-                F.col("vec_id").cast("bigint"),
-                F.col("radius2").cast("bigint"),
-            )
-        )
-        d = d.crossJoin(
-            F.broadcast(pick.select(F.col("codes").alias("c")))
-        ).select(
-            "vec_id",
-            "codes",
-            F.least(F.col("d"), d2(F.col("codes"), F.col("c"))).alias("d"),
-        )
-        prev_pick = pick.select("vec_id")
-    r4 = d.agg(F.max("d").alias("radius2"))
-    rows.append(
-        prev_pick.crossJoin(F.broadcast(r4)).select(
-            F.lit(4).cast("int").alias("pick_idx"),
-            F.col("vec_id").cast("bigint"),
-            F.col("radius2").cast("bigint"),
-        )
-    )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out.orderBy("pick_idx")
-
-
 
 
 # ---------------------------------------------------------------------------
@@ -3704,425 +3114,6 @@ def stats_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
             " * cast(n as double))) as bigint)"
         ).alias("contrib_micro"),
     ).orderBy("l_returnflag", "l_linestatus")
-
-
-# ---------------------------------------------------------------------------
-# Round-5 session-5 batch 5: Mann-Whitney rank test, source-drift TVD
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "events_mannwhitney_auc",
-    """
-    WITH vals AS (
-        SELECT event_type AS grp,
-               CAST(round(value * 1000) AS BIGINT) AS v
-        FROM events
-    ),
-    cnt AS (SELECT grp, v, COUNT(*) AS c FROM vals GROUP BY grp, v),
-    grid AS (SELECT v, COUNT(*) AS nt FROM vals GROUP BY v),
-    mid AS (
-        SELECT v, 2 * SUM(nt) OVER (ORDER BY v) - nt + 1 AS mid2
-        FROM grid
-    ),
-    tot AS (SELECT grp, COUNT(*) AS n_grp FROM vals GROUP BY grp),
-    nall AS (SELECT COUNT(*) AS n_all FROM vals),
-    r2 AS (
-        SELECT c.grp, SUM(c.c * m.mid2) AS r2_sum
-        FROM cnt c JOIN mid m ON m.v = c.v
-        GROUP BY c.grp
-    )
-    SELECT t.grp AS event_type,
-           CAST(t.n_grp AS BIGINT) AS n_grp,
-           CAST(n.n_all - t.n_grp AS BIGINT) AS n_rest,
-           CAST(r.r2_sum AS BIGINT) AS r2_sum,
-           CAST(r.r2_sum - t.n_grp * (t.n_grp + 1) AS BIGINT) AS u2,
-           CAST((1000000 * (r.r2_sum - t.n_grp * (t.n_grp + 1)))
-                // (2 * t.n_grp * (n.n_all - t.n_grp)) AS BIGINT) AS auc_micro
-    FROM tot t JOIN r2 r ON r.grp = t.grp, nall n
-    ORDER BY event_type
-    """,
-)
-def events_mannwhitney_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann-Whitney U rank-sum test, one-vs-rest per event type over
-    the value distribution — the nonparametric shift detector that
-    (unlike KS) reads directly as an effect size: U/(n₁·n₂) is the
-    probability a random value from the group exceeds one from the
-    rest (the AUC).  Exact integer arithmetic throughout: ties get
-    textbook midranks carried as DOUBLED ranks (mid2 = 2·cum − m + 1,
-    always integral), the rank-sum and U are kept doubled (``r2_sum``,
-    ``u2``), and ``auc_micro`` = ⌊10⁶·U/(n₁·n₂)⌋ — bit-identical on
-    both engines, no float ranks anywhere.
-
-    Scale shape: value-grid counts are ONE map-side-combined groupBy;
-    global midranks come from ``operators/prefixsum.bucketed_cumsum``
-    in its single-series mode (the oracle's ``SUM() OVER (ORDER BY
-    v)`` global window is exactly the single-task shape the operator
-    replaces); the rank-sum is one equi-join on the value grid + one
-    combinable aggregate per group.  Everything after the grid is
-    bounded by |distinct values|, not N."""
-    from .operators.prefixsum import bucketed_cumsum
-
-    ev = _fan_out(
-        load_testdata(spark, sf_dir, "events").select(
-            F.col("event_type").alias("grp"),
-            F.expr("cast(round(value * 1000) as bigint)").alias("v"),
-        )
-    ).transform(tracked_persist)
-    cnt = ev.groupBy("grp", "v").agg(F.count(F.lit(1)).alias("c"))
-    grid = ev.groupBy("v").agg(F.count(F.lit(1)).alias("nt"))
-    mid = bucketed_cumsum(grid, [], "v", ["nt"], bucket_width=10_000).select(
-        "v", (2 * F.col("cum_nt") - F.col("nt") + 1).alias("mid2")
-    )
-    r2 = (
-        cnt.join(mid, "v")
-        .groupBy("grp")
-        .agg(F.sum(F.col("c") * F.col("mid2")).alias("r2_sum"))
-    )
-    tot = ev.groupBy("grp").agg(F.count(F.lit(1)).alias("n_grp"))
-    nall = ev.agg(F.count(F.lit(1)).alias("n_all"))
-    return (
-        tot.join(F.broadcast(r2), "grp")
-        .crossJoin(F.broadcast(nall))
-        .select(
-            F.col("grp").alias("event_type"),
-            F.col("n_grp").cast("bigint"),
-            (F.col("n_all") - F.col("n_grp")).cast("bigint").alias("n_rest"),
-            F.col("r2_sum").cast("bigint"),
-            (F.col("r2_sum") - F.col("n_grp") * (F.col("n_grp") + 1))
-            .cast("bigint")
-            .alias("u2"),
-            F.expr(
-                "div(1000000 * (r2_sum - n_grp * (n_grp + 1)),"
-                " 2 * n_grp * (n_all - n_grp))"
-            )
-            .cast("bigint")
-            .alias("auc_micro"),
-        )
-        .orderBy("event_type")
-    )
-
-
-@register(
-    "text_source_token_tvd",
-    r"""
-    WITH tk AS (
-        SELECT source, unnest(string_split_regex(text, '\s+')) AS tok
-        FROM documents
-    ),
-    st AS (SELECT source, tok, COUNT(*) AS c FROM tk GROUP BY source, tok),
-    tt AS (SELECT tok, COUNT(*) AS ct FROM tk GROUP BY tok),
-    ns AS (SELECT source, SUM(c) AS n_s FROM st GROUP BY source),
-    nn AS (SELECT SUM(ct) AS n FROM tt),
-    present AS (
-        SELECT s.source,
-               SUM(abs(s.c * (n.n - x.n_s) - (t.ct - s.c) * x.n_s))
-                   AS present_mass,
-               SUM(t.ct - s.c) AS rest_in_vocab
-        FROM st s
-        JOIN tt t ON t.tok = s.tok
-        JOIN ns x ON x.source = s.source, nn n
-        GROUP BY s.source
-    )
-    SELECT p.source,
-           CAST(x.n_s AS BIGINT) AS n_tokens,
-           CAST(n.n - x.n_s AS BIGINT) AS n_rest,
-           CAST((1000000 * (p.present_mass
-                 + x.n_s * ((n.n - x.n_s) - p.rest_in_vocab)))
-                // (2 * x.n_s * (n.n - x.n_s)) AS BIGINT) AS tvd_micro
-    FROM present p JOIN ns x ON x.source = p.source, nn n
-    ORDER BY p.source
-    """,
-)
-def text_source_token_tvd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Total-variation distance between each source's token
-    distribution and the rest of the corpus — the exact drift metric
-    behind "is this crawl slice distributionally off?" (TVD, unlike
-    KL/JS, needs no logarithms, so it is integer-expressible and
-    bit-identical on both engines).  TVD = ½·Σ_t |p_s(t) − p_rest(t)|
-    evaluated in common-denominator form |c_s·N_r − c_r·N_s| over the
-    source's own vocabulary, plus the closed-form correction
-    N_s·(N_r − Σ_{t∈vocab_s} c_r(t)) for the mass of tokens the source
-    never uses — no dense vocab×source grid is ever materialized.
-
-    Scale shape: two map-side-combined groupBys (per-source-token,
-    per-token), one equi-join on token between them (the widest
-    shuffle, vocab-sized), margins broadcast.  The absent-token mass
-    is algebra, not a join — the trick that keeps one-vs-rest drift
-    linear in corpus vocabulary at 100 TB."""
-    tk = (
-        _fan_out(load_testdata(spark, sf_dir, "documents").select("source", "text"))
-        .select("source", F.explode(F.split("text", X.TOKEN_RE)).alias("tok"))
-        .transform(tracked_persist)
-    )
-    st = tk.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("c"))
-    tt = tk.groupBy("tok").agg(F.count(F.lit(1)).alias("ct"))
-    ns = tk.groupBy("source").agg(F.count(F.lit(1)).alias("n_s"))
-    nn = tk.agg(F.count(F.lit(1)).alias("n"))
-    present = (
-        st.join(tt, "tok")
-        .join(F.broadcast(ns), "source")
-        .crossJoin(F.broadcast(nn))
-        .groupBy("source")
-        .agg(
-            F.sum(
-                F.abs(
-                    F.col("c") * (F.col("n") - F.col("n_s"))
-                    - (F.col("ct") - F.col("c")) * F.col("n_s")
-                )
-            ).alias("present_mass"),
-            F.sum(F.col("ct") - F.col("c")).alias("rest_in_vocab"),
-        )
-    )
-    return (
-        present.join(F.broadcast(ns), "source")
-        .crossJoin(F.broadcast(nn))
-        .select(
-            "source",
-            F.col("n_s").cast("bigint").alias("n_tokens"),
-            (F.col("n") - F.col("n_s")).cast("bigint").alias("n_rest"),
-            F.expr(
-                "div(1000000 * (present_mass + n_s * ((n - n_s) - rest_in_vocab)),"
-                " 2 * n_s * (n - n_s))"
-            )
-            .cast("bigint")
-            .alias("tvd_micro"),
-        )
-        .orderBy("source")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Round-5 session-5 batch 6: vocab coverage curve, CUSUM changepoints
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "vocab_coverage_curve",
-    r"""
-    WITH tk AS (
-        SELECT unnest(string_split_regex(text, '\s+')) AS tok FROM documents
-    ),
-    tc AS (SELECT tok, COUNT(*) AS c FROM tk GROUP BY tok),
-    coc AS (SELECT c, COUNT(*) AS m FROM tc GROUP BY c),
-    tot AS (SELECT SUM(c * m) AS n_total, SUM(m) AS n_vocab FROM coc),
-    cum AS (
-        SELECT c, m,
-               SUM(c * m) OVER (ORDER BY c DESC) AS mass_cum,
-               SUM(m) OVER (ORDER BY c DESC) AS vocab_cum
-        FROM coc
-    ),
-    targets AS (SELECT unnest([500, 900, 990, 999]) AS target_permille),
-    hit AS (
-        SELECT t.target_permille,
-               MIN(cu.vocab_cum - cu.m
-                   + ((t.target_permille * x.n_total + 999) // 1000
-                      - (cu.mass_cum - cu.c * cu.m) + cu.c - 1) // cu.c)
-                   AS vocab_needed
-        FROM targets t
-        JOIN cum cu ON cu.mass_cum * 1000 >= t.target_permille * (SELECT n_total FROM tot), tot x
-        WHERE (cu.mass_cum - cu.c * cu.m) * 1000 < t.target_permille * x.n_total
-        GROUP BY t.target_permille
-    )
-    SELECT h.target_permille,
-           CAST(h.vocab_needed AS BIGINT) AS vocab_needed,
-           CAST(x.n_vocab AS BIGINT) AS n_vocab,
-           CAST(x.n_total AS BIGINT) AS n_total,
-           CAST((1000000 * h.vocab_needed) // x.n_vocab AS BIGINT)
-               AS vocab_share_micro
-    FROM hit h, tot x
-    ORDER BY h.target_permille
-    """,
-)
-def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary coverage curve — the tokenizer-budget planning
-    readout: the minimum number of (frequency-ranked) vocabulary
-    entries needed to cover 50% / 90% / 99% / 99.9% of all corpus
-    token occurrences, exactly.  The classic Zipf consequence (a tiny
-    head covers most mass) decides vocab size, OOV policy, and what
-    the long tail costs.
-
-    Exactness without a global token sort: group the vocabulary by
-    count value (the count-of-counts relation, bounded by |distinct
-    count values| ≤ √(2N)), take cumulative mass/vocab over counts
-    DESCENDING, locate the count bin where the target mass falls, and
-    finish inside the bin by ceiling division — within a bin every
-    token has the same count, so the needed number of its tokens is
-    ⌈remaining_mass / c⌉.  All integer arithmetic, deterministic on
-    both engines.
-
-    Scale shape: ONE map-side-combined groupBy(token) (the only
-    corpus-scale shuffle), ONE groupBy(count) collapsing the vocab to
-    the bounded count-of-counts relation, then windows/joins over that
-    tiny relation (the oracle's global window is fine THERE — it runs
-    on ≤ a few thousand rows; the Spark side uses the same bounded
-    window, not a corpus-wide sort)."""
-    tk = _fan_out(load_testdata(spark, sf_dir, "documents").select("text")).select(
-        F.explode(F.split("text", X.TOKEN_RE)).alias("tok")
-    )
-    tc = tk.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
-    coc = tc.groupBy("c").agg(F.count(F.lit(1)).alias("m")).transform(tracked_persist)
-    tot = coc.agg(
-        F.sum(F.col("c") * F.col("m")).alias("n_total"),
-        F.sum("m").alias("n_vocab"),
-    )
-    w = Window.orderBy(F.col("c").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = coc.select(
-        "c",
-        "m",
-        F.sum(F.col("c") * F.col("m")).over(w).alias("mass_cum"),
-        F.sum("m").over(w).alias("vocab_cum"),
-    )
-    targets = spark.createDataFrame(
-        [(500,), (900,), (990,), (999,)], "target_permille int"
-    )
-    hit = (
-        F.broadcast(targets)
-        .crossJoin(F.broadcast(tot))
-        .join(
-            cum,
-            (F.col("mass_cum") * 1000 >= F.col("target_permille") * F.col("n_total"))
-            & (
-                (F.col("mass_cum") - F.col("c") * F.col("m")) * 1000
-                < F.col("target_permille") * F.col("n_total")
-            ),
-        )
-        .groupBy("target_permille", "n_total", "n_vocab")
-        .agg(
-            F.min(
-                F.col("vocab_cum")
-                - F.col("m")
-                + F.expr(
-                    "div(div(target_permille * n_total + 999, 1000)"
-                    " - (mass_cum - c * m) + c - 1, c)"
-                )
-            ).alias("vocab_needed")
-        )
-    )
-    return hit.select(
-        "target_permille",
-        F.col("vocab_needed").cast("bigint"),
-        F.col("n_vocab").cast("bigint"),
-        F.col("n_total").cast("bigint"),
-        F.expr("div(1000000 * vocab_needed, n_vocab)")
-        .cast("bigint")
-        .alias("vocab_share_micro"),
-    ).orderBy("target_permille")
-
-
-@register(
-    "events_cusum_changepoint",
-    """
-    WITH daily AS (
-        -- per-row milli rounding BEFORE the sum: an integer sum is
-        -- order-independent where a double sum is not (parity contract)
-        SELECT event_type, CAST(ts AS DATE) AS day,
-               SUM(CAST(round(value * 1000) AS BIGINT)) AS x_milli
-        FROM events GROUP BY 1, 2
-    ),
-    tot AS (
-        SELECT event_type, COUNT(*) AS n_days, SUM(x_milli) AS total
-        FROM daily GROUP BY event_type
-    ),
-    cus AS (
-        SELECT d.event_type, d.day,
-               SUM(d.x_milli * t.n_days - t.total)
-                   OVER (PARTITION BY d.event_type ORDER BY d.day) AS s
-        FROM daily d JOIN tot t ON t.event_type = d.event_type
-    ),
-    mx AS (
-        SELECT event_type, MAX(abs(s)) AS peak FROM cus GROUP BY event_type
-    ),
-    loc AS (
-        SELECT c.event_type, MIN(c.day) AS peak_day,
-               MIN(CASE WHEN c.s > 0 THEN 1 ELSE -1 END) AS direction
-        FROM cus c JOIN mx m ON m.event_type = c.event_type
-                             AND abs(c.s) = m.peak
-        GROUP BY c.event_type
-    )
-    SELECT t.event_type,
-           CAST(t.n_days AS BIGINT) AS n_days,
-           CAST(m.peak AS BIGINT) AS cusum_peak_scaled,
-           CAST((1000 * m.peak) // (t.n_days * greatest(t.total, 1))
-               AS BIGINT) AS peak_share_permille,
-           CAST(l.peak_day AS VARCHAR) AS peak_day,
-           CAST(l.direction AS INTEGER) AS direction
-    FROM tot t
-    JOIN mx m ON m.event_type = t.event_type
-    JOIN loc l ON l.event_type = t.event_type
-    ORDER BY t.event_type
-    """,
-)
-def events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSUM changepoint detection (Page 1954) per event type over the
-    daily value series — "did this stream's rate shift, and when?".
-    The cumulative sum of deviations from the per-type mean peaks at
-    the most likely changepoint (the binary-segmentation pivot).
-    Exact integers via the common-denominator trick: S_i =
-    Σ_{d≤i} (x_d·D − T) where D = #days and T = total, so no mean
-    division ever happens; the peak day ties break to the earliest,
-    ``direction`` says whether the level shifted up (+1: early days
-    below mean, CUSUM dips negative... sign of S at the peak) and
-    ``peak_share_permille`` normalizes the peak against D·T for
-    cross-type comparison.
-
-    Scale shape: the corpus-scale work is ONE map-side-combined
-    groupBy(type, day); the CUSUM window runs over the bounded
-    (type × day) relation partitioned by type.  At 100 TB with years
-    of days per key, the same window converts to
-    ``operators/prefixsum.bucketed_cumsum`` with (type) groups and
-    day buckets — the relation here is 5×30 so the plain partitioned
-    window IS the right plan."""
-    daily = (
-        _fan_out(load_testdata(spark, sf_dir, "events"))
-        .groupBy("event_type", F.to_date("ts").alias("day"))
-        .agg(F.expr("sum(cast(round(value * 1000) as bigint))").alias("x_milli"))
-        .transform(tracked_persist)
-    )
-    tot = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_days"), F.sum("x_milli").alias("total")
-    )
-    w = Window.partitionBy("event_type").orderBy("day").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cus = (
-        daily.join(F.broadcast(tot), "event_type")
-        .select(
-            "event_type",
-            "day",
-            F.sum(
-                F.col("x_milli") * F.col("n_days") - F.col("total")
-            ).over(w).alias("s"),
-        )
-        .transform(tracked_persist)
-    )
-    mx = cus.groupBy("event_type").agg(F.max(F.abs("s")).alias("peak"))
-    loc = (
-        cus.join(F.broadcast(mx), "event_type")
-        .filter(F.abs("s") == F.col("peak"))
-        .groupBy("event_type")
-        .agg(
-            F.min("day").alias("peak_day"),
-            F.min(F.when(F.col("s") > 0, 1).otherwise(-1)).alias("direction"),
-        )
-    )
-    return (
-        tot.join(F.broadcast(mx), "event_type")
-        .join(F.broadcast(loc), "event_type")
-        .select(
-            "event_type",
-            F.col("n_days").cast("bigint"),
-            F.col("peak").cast("bigint").alias("cusum_peak_scaled"),
-            F.expr("div(1000 * peak, n_days * greatest(total, 1))")
-            .cast("bigint")
-            .alias("peak_share_permille"),
-            F.col("peak_day").cast("string"),
-            F.col("direction").cast("int"),
-        )
-        .orderBy("event_type")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -4354,330 +3345,6 @@ def similarity_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-5 session-5 batch 10: customer concentration (Gini + HHI)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "customer_concentration_profile",
-    """
-    WITH spend AS (
-        SELECT o_custkey,
-               SUM(CAST(round(o_totalprice * 100) AS BIGINT)) // 100 AS x
-        FROM orders GROUP BY o_custkey
-    ),
-    seg AS (
-        SELECT c.c_mktsegment, s.x
-        FROM spend s JOIN customer c ON c.c_custkey = s.o_custkey
-    ),
-    gx AS (SELECT c_mktsegment, x, COUNT(*) AS c FROM seg GROUP BY 1, 2),
-    cum AS (
-        SELECT c_mktsegment, x, c,
-               SUM(c) OVER (PARTITION BY c_mktsegment ORDER BY x) - c
-                   AS cum_before
-        FROM gx
-    ),
-    agg AS (
-        SELECT c_mktsegment,
-               SUM(c) AS n,
-               SUM(x * c) AS s,
-               SUM(x * c * (2 * cum_before + c + 1)) AS two_sum,
-               SUM(x * x * c) AS sumsq
-        FROM cum GROUP BY c_mktsegment
-    )
-    SELECT c_mktsegment,
-           CAST(n AS BIGINT) AS n_customers,
-           CAST(s AS BIGINT) AS total_dollars,
-           CAST((1000 * (two_sum - (n + 1) * s)) // (n * s) AS BIGINT)
-               AS gini_milli,
-           CAST(floor((1000000.0 * CAST(sumsq AS DOUBLE))
-                / (CAST(s AS DOUBLE) * CAST(s AS DOUBLE))) AS BIGINT)
-               AS hhi_micro
-    FROM agg
-    ORDER BY c_mktsegment
-    """,
-)
-def customer_concentration_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue-concentration profile per market segment: the exact
-    Gini coefficient and the Herfindahl-Hirschman index of
-    per-customer spend — the inequality/duopoly audit a pipeline runs
-    on contributor or source concentration ("does one uploader own
-    this shard?") as much as finance runs it on customers.  Gini from
-    grouped data without per-row ranks: for each distinct spend value
-    the doubled rank-sum contribution is x·c·(2·cum_before + c + 1)
-    (the tie-group arithmetic-series closed form), so
-    G = (2Σix − (n+1)S)/(nS) comes out in exact integer milli.  HHI =
-    Σx²/S² uses exact integer Σx² with ONE engine-identical double
-    fold for the final ratio (S² exceeds bigint).
-
-    Scale shape: per-customer totals are ONE map-side-combined
-    groupBy(custkey) (the only corpus-scale shuffle; per-order centi
-    rounding BEFORE the integer sum, the order-independence
-    contract); the segment join is customer-dimension-sized; the
-    grouped-value cumsum runs per segment over the bounded distinct-
-    spend relation — at 100 TB it converts to
-    ``operators/prefixsum.bucketed_cumsum`` exactly as written here."""
-    from .operators.prefixsum import bucketed_cumsum
-
-    spend = (
-        _fan_out(load_testdata(spark, sf_dir, "orders"))
-        .groupBy("o_custkey")
-        .agg(
-            F.expr("div(sum(cast(round(o_totalprice * 100) as bigint)), 100)").alias(
-                "x"
-            )
-        )
-    )
-    cust = load_testdata(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
-    )
-    seg = spend.join(cust, "o_custkey").select("c_mktsegment", "x")
-    gx = seg.groupBy("c_mktsegment", "x").agg(F.count(F.lit(1)).alias("c"))
-    cum = bucketed_cumsum(gx, ["c_mktsegment"], "x", ["c"], bucket_width=10_000).select(
-        "c_mktsegment", "x", "c", (F.col("cum_c") - F.col("c")).alias("cum_before")
-    )
-    agg = cum.groupBy("c_mktsegment").agg(
-        F.sum("c").alias("n"),
-        F.sum(F.col("x") * F.col("c")).alias("s"),
-        F.sum(
-            F.col("x") * F.col("c") * (2 * F.col("cum_before") + F.col("c") + 1)
-        ).alias("two_sum"),
-        F.sum(F.col("x") * F.col("x") * F.col("c")).alias("sumsq"),
-    )
-    return agg.select(
-        "c_mktsegment",
-        F.col("n").cast("bigint").alias("n_customers"),
-        F.col("s").cast("bigint").alias("total_dollars"),
-        F.expr("div(1000 * (two_sum - (n + 1) * s), n * s)")
-        .cast("bigint")
-        .alias("gini_milli"),
-        F.expr(
-            "cast(floor((1000000.0 * cast(sumsq as double))"
-            " / (cast(s as double) * cast(s as double))) as bigint)"
-        ).alias("hhi_micro"),
-    ).orderBy("c_mktsegment")
-
-
-# ---------------------------------------------------------------------------
-# Round-5 session-5 batch 11: late-interaction (MaxSim) retrieval
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "similarity_maxsim_late_interaction",
-    """
-    WITH tv AS (
-        SELECT vec_id // 8 AS doc_id, vec_id,
-               embedding::DOUBLE[] AS v,
-               sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-        FROM embeddings
-    ),
-    q AS (SELECT * FROM tv WHERE doc_id < 2),
-    d AS (SELECT * FROM tv WHERE doc_id >= 2),
-    scored AS (
-        SELECT q.doc_id AS query_doc, d.doc_id AS cand_doc,
-               q.vec_id AS q_tok,
-               MAX(list_dot_product(q.v, d.v) / (q.nrm * d.nrm)) AS best
-        FROM q JOIN d ON true
-        GROUP BY q.doc_id, d.doc_id, q.vec_id
-    ),
-    agg AS (
-        SELECT query_doc, cand_doc,
-               CAST(SUM(CAST(floor(best * 1000000) AS BIGINT)) AS BIGINT)
-                   AS maxsim_micro
-        FROM scored GROUP BY query_doc, cand_doc
-    ),
-    rk AS (
-        SELECT query_doc, cand_doc, maxsim_micro,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_doc
-                    ORDER BY maxsim_micro DESC, cand_doc) AS INTEGER) AS rk
-        FROM agg
-    )
-    SELECT CAST(query_doc AS BIGINT) AS query_doc,
-           CAST(cand_doc AS BIGINT) AS cand_doc,
-           maxsim_micro, rk
-    FROM rk WHERE rk <= 5
-    ORDER BY query_doc, rk
-    """,
-)
-def similarity_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Late-interaction retrieval à la ColBERT (Khattab & Zaharia
-    2020): documents and queries are BAGS of token vectors (here the
-    synthetic grouping vec_id//8 — 8 token vectors per doc, the
-    multi-vector layout a real pipeline stores as one row per token
-    embedding), and relevance is MaxSim = Σ_q max_d cos(q_i, d_j) —
-    each query token finds its best document token, so precise term-
-    level matches survive pooling.  The two bounded query docs score
-    against every candidate doc; per-(query-token, cand-doc) maxes are
-    ONE combinable aggregate, the Σ over query tokens another.  Cosine
-    uses the strict-fold double contract; per-token maxes are floored
-    to integer micro BEFORE the sum so the final score is an integer
-    sum of identically-floored terms on both engines (a raw double Σ
-    would be order-dependent).
-
-    Scale shape: the bounded 16-row query-token set broadcasts into a
-    map-only scoring pass over candidate token vectors (never a
-    corpus×corpus join); both aggregates are map-side combinable; the
-    ranking window sees |queries|×|docs| rows.  At production scale
-    the candidate set first passes an ANN tier (the IVF family here)
-    and MaxSim reranks the sliver — exactly how ColBERT deployments
-    stage it."""
-    tv = S.with_norm(_fan_out(load_testdata(spark, sf_dir, "embeddings"))).select(
-        F.expr("div(vec_id, 8)").alias("doc_id"),
-        "vec_id",
-        F.col("_v").alias("v"),
-        F.col("_norm").alias("nrm"),
-    )
-    q = tv.filter(F.col("doc_id") < 2).select(
-        F.col("doc_id").alias("query_doc"),
-        F.col("vec_id").alias("q_tok"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    d = tv.filter(F.col("doc_id") >= 2).select(
-        F.col("doc_id").alias("cand_doc"), "v", "nrm"
-    )
-    scored = (
-        d.join(F.broadcast(q), F.lit(True))
-        .withColumn(
-            "cos_raw", S.dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm"))
-        )
-        .groupBy("query_doc", "cand_doc", "q_tok")
-        .agg(F.max("cos_raw").alias("best"))
-    )
-    agg = scored.groupBy("query_doc", "cand_doc").agg(
-        F.sum(F.expr("cast(floor(best * 1000000) as bigint)")).alias("maxsim_micro")
-    )
-    w = Window.partitionBy("query_doc").orderBy(
-        F.col("maxsim_micro").desc(), F.col("cand_doc").asc()
-    )
-    return (
-        agg.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= 5)
-        .select(
-            F.col("query_doc").cast("bigint"),
-            F.col("cand_doc").cast("bigint"),
-            F.col("maxsim_micro").cast("bigint"),
-            "rk",
-        )
-        .orderBy("query_doc", "rk")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Round-5 session-5 batch 14: RFM segmentation
-# ---------------------------------------------------------------------------
-
-
-def _rfm_score_ctes(dim: str, col: str) -> str:
-    """DuckDB CTE pair scoring one RFM dimension: competition-rank
-    quintiles from the value-grouped cumsum (no per-row rank)."""
-    return f"""
-    g_{dim} AS (SELECT {col} AS v, COUNT(*) AS c FROM rfm GROUP BY 1),
-    s_{dim} AS (
-        SELECT v, 1 + (5 * (SUM(c) OVER (ORDER BY v) - c)) // (SELECT COUNT(*) FROM rfm)
-                   AS score
-        FROM g_{dim}
-    )"""
-
-
-@register(
-    "customers_rfm_segments",
-    f"""
-    WITH mx AS (SELECT MAX(CAST(o_orderdate AS DATE)) AS mxd FROM orders),
-    rfm AS (
-        SELECT o_custkey,
-               -datediff('day', MAX(CAST(o_orderdate AS DATE)), mxd) AS r_neg,
-               COUNT(*) AS f,
-               SUM(CAST(round(o_totalprice * 100) AS BIGINT)) // 100 AS m
-        FROM orders, mx GROUP BY o_custkey, mxd
-    ),
-    {_rfm_score_ctes("r", "r_neg")},
-    {_rfm_score_ctes("f", "f")},
-    {_rfm_score_ctes("m", "m")},
-    scored AS (
-        SELECT sr.score AS r_score, sf.score AS f_score, sm.score AS m_score,
-               x.f, x.m
-        FROM rfm x
-        JOIN s_r sr ON sr.v = x.r_neg
-        JOIN s_f sf ON sf.v = x.f
-        JOIN s_m sm ON sm.v = x.m
-    )
-    SELECT CAST(r_score AS INTEGER) AS r_score,
-           CAST(f_score AS INTEGER) AS f_score,
-           CAST(m_score AS INTEGER) AS m_score,
-           CAST(COUNT(*) AS BIGINT) AS n_customers,
-           CAST(SUM(f) AS BIGINT) AS n_orders,
-           CAST(SUM(m) AS BIGINT) AS total_dollars
-    FROM scored
-    GROUP BY 1, 2, 3
-    ORDER BY 1, 2, 3
-    """,
-)
-def customers_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM customer segmentation — the classic recency/frequency/
-    monetary scoring every retention stack runs (and a template for
-    any 3-axis quantile segmentation, e.g. doc length × quality ×
-    novelty in a curation pipeline).  Each dimension gets a 1-5
-    competition-rank quintile: ties share the score of the group's
-    FIRST rank, computed as 1 + ⌊5·cum_before/n⌋ from the
-    value-grouped cumulative counts — deterministic on both engines,
-    no per-row ranking, no ntile.  Recency scores through the negated
-    day-gap so "more recent" = higher score on the shared ascending
-    rule.  Output: the populated (r, f, m) segment grid with customer/
-    order/revenue mass per cell.
-
-    Scale shape: per-customer rollup is ONE map-side-combined
-    groupBy(custkey); each dimension's quintile map is a cumsum over
-    the BOUNDED value-grouped relation (day gaps / order counts /
-    dollar totals) — the oracle's global window runs there, and the
-    Spark side uses `bucketed_cumsum` in single-series mode on the
-    same bounded relation; scores come back via three broadcast
-    equi-joins on the value."""
-    from .operators.prefixsum import bucketed_cumsum
-
-    mx = _fan_out(load_testdata(spark, sf_dir, "orders")).select(
-        "o_custkey",
-        F.to_date("o_orderdate").alias("od"),
-        F.expr("cast(round(o_totalprice * 100) as bigint)").alias("centi"),
-    )
-    mxd = mx.agg(F.max("od").alias("mxd"))
-    rfm = (
-        mx.crossJoin(F.broadcast(mxd))
-        .groupBy("o_custkey")
-        .agg(
-            F.expr("-min(datediff(mxd, od))").alias("r_neg"),
-            F.count(F.lit(1)).alias("f"),
-            F.expr("div(sum(centi), 100)").alias("m"),
-        )
-        .transform(tracked_persist)
-    )
-    n = rfm.count()
-
-    def score_map(col: str, width: int) -> DataFrame:
-        g = rfm.groupBy(F.col(col).alias("v")).agg(F.count(F.lit(1)).alias("c"))
-        return bucketed_cumsum(g, [], "v", ["c"], bucket_width=width).select(
-            F.col("v").alias(col),
-            (1 + F.expr(f"div(5 * (cum_c - c), {n})")).cast("int").alias(f"{col[0]}_score"),
-        )
-    # negated day gaps span ~-2400..0; counts 1..~40; dollars ~0..6e6
-    scored = (
-        rfm.join(F.broadcast(score_map("r_neg", 100)), "r_neg")
-        .join(F.broadcast(score_map("f", 8)), "f")
-        .join(F.broadcast(score_map("m", 10_000)), "m")
-    )
-    return (
-        scored.groupBy("r_score", "f_score", "m_score")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_customers"),
-            F.sum("f").cast("bigint").alias("n_orders"),
-            F.sum("m").cast("bigint").alias("total_dollars"),
-        )
-        .orderBy("r_score", "f_score", "m_score")
-    )
-
-
-# ---------------------------------------------------------------------------
 # Round-5 session-5 batch 15: exact token-budget apportionment
 # ---------------------------------------------------------------------------
 
@@ -4839,127 +3506,6 @@ def dedup_lsh_hot_bucket_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = D.minhash_bands(corpus, "doc_id", "text", n_hashes=8, band_size=4)
     return D.lsh_candidate_pairs(bands, "doc_id", hot_bucket_cap=16).orderBy(
         "id_a", "id_b"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Round-6 batch 3: incremental snapshot manifest
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "pipeline_incremental_manifest",
-    f"""
-    WITH v1 AS (SELECT doc_id, text FROM documents),
-    v2 AS (
-        SELECT doc_id,
-               CASE WHEN doc_id % 13 = 0 THEN text || ' rev2' ELSE text END AS text
-        FROM documents WHERE doc_id % 31 != 0
-        UNION ALL
-        SELECT doc_id + 500000 AS doc_id, text
-        FROM documents WHERE doc_id % 41 = 0
-    ),
-    d1 AS (
-        SELECT doc_id,
-               ({_HEX12.replace("substr(h,", "substr(ch,")}) % 4294967296 AS dg
-        FROM (SELECT doc_id, md5(CAST(doc_id AS VARCHAR) || ':' || text) AS ch FROM v1)
-    ),
-    d2 AS (
-        SELECT doc_id,
-               ({_HEX12.replace("substr(h,", "substr(ch,")}) % 4294967296 AS dg
-        FROM (SELECT doc_id, md5(CAST(doc_id AS VARCHAR) || ':' || text) AS ch FROM v2)
-    ),
-    j AS (
-        SELECT COALESCE(a.doc_id, b.doc_id) AS doc_id,
-               CASE WHEN a.doc_id IS NULL THEN 'added'
-                    WHEN b.doc_id IS NULL THEN 'removed'
-                    WHEN a.dg != b.dg THEN 'changed'
-                    ELSE 'unchanged' END AS status
-        FROM d1 a FULL OUTER JOIN d2 b ON a.doc_id = b.doc_id
-    ),
-    sh AS (
-        SELECT status,
-               ({_HEX12}) % 16 AS shard
-        FROM (SELECT status, md5(CAST(doc_id AS VARCHAR)) AS h FROM j)
-    )
-    SELECT CAST(shard AS BIGINT) AS shard, status,
-           CAST(COUNT(*) AS BIGINT) AS n_docs
-    FROM sh GROUP BY shard, status
-    ORDER BY shard, status
-    """,
-)
-def pipeline_incremental_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot-diff manifest — the incremental-ingestion audit between
-    two corpus versions: per shard, how many docs were added, removed,
-    changed, or untouched, detected by content digest (md5 of id:text),
-    never by text comparison.  The derived v2 plants all three edit
-    kinds deterministically (drop every 31st, revise every 13th, add a
-    copy of every 41st under a new id) so both engines diff the same
-    pair.  This is the shape of a versioned-table changefeed audit:
-    digests make the diff O(join) instead of O(bytes compared).
-
-    Scale shape: two map passes (digest per side) + ONE full outer
-    equi-join on doc_id + a map-side-combinable groupBy(shard, status)
-    with ≤ 16·4 output rows.  At 100 TB the join is the only shuffle
-    and AQE sizes it; no sort, no window, no text movement — digests
-    (16 bytes) ride the shuffle, not documents."""
-    docs = load_testdata(spark, sf_dir, "documents").select("doc_id", "text")
-    v2 = (
-        docs.filter(F.col("doc_id") % 31 != 0)
-        .select(
-            "doc_id",
-            F.when(
-                F.col("doc_id") % 13 == 0, F.concat(F.col("text"), F.lit(" rev2"))
-            )
-            .otherwise(F.col("text"))
-            .alias("text"),
-        )
-        .unionByName(
-            docs.filter(F.col("doc_id") % 41 == 0).select(
-                (F.col("doc_id") + 500000).alias("doc_id"), "text"
-            )
-        )
-    )
-
-    def digests(df: DataFrame, side: str) -> DataFrame:
-        return df.select(
-            F.col("doc_id").alias(f"{side}_id"),
-            (
-                F.expr(
-                    "cast(conv(substring(md5(cast("
-                    "concat(cast(doc_id as string), ':', text) as binary"
-                    ")), 1, 12), 16, 10) as bigint)"
-                )
-                % 4294967296
-            ).alias(f"{side}_dg"),
-        )
-
-    j = digests(docs, "a").join(
-        digests(v2, "b"), F.col("a_id") == F.col("b_id"), "full_outer"
-    )
-    st = j.select(
-        F.coalesce(F.col("a_id"), F.col("b_id")).alias("doc_id"),
-        F.when(F.col("a_id").isNull(), F.lit("added"))
-        .when(F.col("b_id").isNull(), F.lit("removed"))
-        .when(F.col("a_dg") != F.col("b_dg"), F.lit("changed"))
-        .otherwise(F.lit("unchanged"))
-        .alias("status"),
-    )
-    sh = st.select(
-        "status",
-        (
-            F.expr(
-                "cast(conv(substring(md5(cast(cast(doc_id as string) as binary)),"
-                " 1, 12), 16, 10) as bigint)"
-            )
-            % 16
-        ).alias("shard"),
-    )
-    return (
-        sh.groupBy("shard", "status")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-        .select(F.col("shard").cast("bigint"), "status", "n_docs")
-        .orderBy("shard", "status")
     )
 
 
@@ -5239,123 +3785,6 @@ def events_hopping_window_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-6 batch 8: earth-mover's distance between source length profiles
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "text_source_length_emd",
-    r"""
-    WITH t AS (
-        SELECT source, len(string_split_regex(text, '\s+')) AS n_tok
-        FROM documents
-    ),
-    mm AS (SELECT MIN(n_tok) AS mn, MAX(n_tok) AS mx FROM t),
-    bkt AS (
-        SELECT source,
-               least((32 * (n_tok - mn)) // (mx - mn + 1), 31) AS b
-        FROM t, mm
-    ),
-    c AS (SELECT source, b, COUNT(*) AS c FROM bkt GROUP BY source, b),
-    srcs AS (SELECT DISTINCT source FROM t),
-    grid AS (
-        SELECT s.source, g.b, COALESCE(c.c, 0) AS c
-        FROM srcs s CROSS JOIN (SELECT unnest(generate_series(0, 31)) AS b) g
-        LEFT JOIN c ON c.source = s.source AND c.b = g.b
-    ),
-    cum AS (
-        SELECT source, b,
-               SUM(c) OVER (PARTITION BY source ORDER BY b) AS cc
-        FROM grid
-    ),
-    tot AS (SELECT source, SUM(c) AS n FROM grid GROUP BY source),
-    pairs AS (
-        SELECT a.source AS source_a, b2.source AS source_b,
-               SUM(abs(a.cc * tb.n - b2.cc * ta.n)) AS numer,
-               ANY_VALUE(ta.n) AS na, ANY_VALUE(tb.n) AS nb
-        FROM cum a
-        JOIN cum b2 ON b2.b = a.b AND a.source < b2.source
-        JOIN tot ta ON ta.source = a.source
-        JOIN tot tb ON tb.source = b2.source
-        GROUP BY a.source, b2.source
-    )
-    SELECT source_a, source_b,
-           CAST(na AS BIGINT) AS n_a,
-           CAST(nb AS BIGINT) AS n_b,
-           CAST((1000000 * numer) // (na * nb) AS BIGINT) AS emd_micro_buckets
-    FROM pairs ORDER BY source_a, source_b
-    """,
-)
-def text_source_length_emd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise 1-D earth-mover's (Wasserstein-1) distance between the
-    per-source document-length distributions, over a 32-bucket
-    equi-width grid — the transport metric that complements TVD
-    (`text_source_token_tvd`): TVD counts how much mass differs, EMD
-    counts how FAR it has to move, so a source whose docs are uniformly
-    ~10% longer scores near-zero TVD-per-bucket but a real EMD.  For
-    sorted 1-D histograms W₁ = Σ_b |F_a(b) − F_b(b)| exactly, computed
-    in cross-multiplied integers (|ca·n_b − cb·n_a| summed, one floor
-    division at the end) — micro-units of bucket widths, bit-identical
-    on both engines.  (At web scale the per-bucket cumulative shares
-    would be reduced to micro-units per source FIRST to keep the
-    cross-products in bigint; exactness at test SF needs no such
-    rounding.)
-
-    Scale shape: one map-side-combinable groupBy(source, bucket), a
-    |sources|×32 dense grid, a cumsum WINDOW PARTITIONED by source
-    (bounded 32-row frames), and a pair join on the bucket index —
-    everything after the first aggregate is bounded by |sources|²·32,
-    independent of corpus size.  The min/max is a 1-row broadcast
-    (BNLJ-allowlisted)."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    t = docs.select(
-        "source", F.size(F.split("text", X.TOKEN_RE)).cast("long").alias("n_tok")
-    )
-    mm = t.agg(F.min("n_tok").alias("mn"), F.max("n_tok").alias("mx"))
-    bkt = t.crossJoin(F.broadcast(mm)).select(
-        "source",
-        F.least(
-            F.expr("div(32 * (n_tok - mn), mx - mn + 1)"), F.lit(31)
-        ).alias("b"),
-    )
-    c = bkt.groupBy("source", "b").agg(F.count(F.lit(1)).alias("c"))
-    srcs = t.select("source").distinct()
-    gridb = spark.range(32).select(F.col("id").alias("b"))
-    grid = (
-        srcs.crossJoin(F.broadcast(gridb))
-        .join(c, ["source", "b"], "left")
-        .select("source", "b", F.coalesce(F.col("c"), F.lit(0)).alias("c"))
-    )
-    w = Window.partitionBy("source").orderBy("b").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = grid.withColumn("cc", F.sum("c").over(w))
-    tot = grid.groupBy("source").agg(F.sum("c").alias("n"))
-    a = cum.select(
-        F.col("source").alias("source_a"), "b", F.col("cc").alias("cc_a")
-    ).join(tot.select(F.col("source").alias("source_a"), F.col("n").alias("na")), "source_a")
-    bb = cum.select(
-        F.col("source").alias("source_b"), F.col("b").alias("b2"), F.col("cc").alias("cc_b")
-    ).join(tot.select(F.col("source").alias("source_b"), F.col("n").alias("nb")), "source_b")
-    pairs = (
-        a.join(bb, (F.col("b") == F.col("b2")) & (F.col("source_a") < F.col("source_b")))
-        .groupBy("source_a", "source_b")
-        .agg(
-            F.sum(F.abs(F.col("cc_a") * F.col("nb") - F.col("cc_b") * F.col("na"))).alias("numer"),
-            F.first("na").alias("na"),
-            F.first("nb").alias("nb"),
-        )
-    )
-    return pairs.select(
-        "source_a",
-        "source_b",
-        F.col("na").cast("bigint").alias("n_a"),
-        F.col("nb").cast("bigint").alias("n_b"),
-        F.expr("div(1000000 * numer, na * nb)").cast("bigint").alias("emd_micro_buckets"),
-    ).orderBy("source_a", "source_b")
-
-
-# ---------------------------------------------------------------------------
 # Round-6 batch 9: session-scoped first/last-touch revenue attribution
 # ---------------------------------------------------------------------------
 
@@ -5495,526 +3924,6 @@ def events_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-6 batch 8: audience set-overlap, series autocorrelation
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "events_audience_overlap_jaccard",
-    """
-    WITH tmap AS (
-        SELECT event_type,
-               CAST(dense_rank() OVER (ORDER BY event_type) - 1 AS INTEGER) AS idx
-        FROM (SELECT DISTINCT event_type FROM events)
-    ),
-    masks AS (
-        SELECT e.user_id, bit_or(CAST(1 AS BIGINT) << t.idx) AS mask
-        FROM events e JOIN tmap t USING (event_type)
-        GROUP BY e.user_id
-    ),
-    mc AS (SELECT mask, COUNT(*) AS n FROM masks GROUP BY mask),
-    pairs AS (
-        SELECT a.event_type AS type_a, a.idx AS ia,
-               b.event_type AS type_b, b.idx AS ib
-        FROM tmap a JOIN tmap b ON a.idx < b.idx
-    )
-    SELECT type_a, type_b,
-           CAST(SUM(CASE WHEN (mask & (CAST(1 AS BIGINT) << ia)) != 0
-                         THEN n ELSE 0 END) AS BIGINT) AS n_users_a,
-           CAST(SUM(CASE WHEN (mask & (CAST(1 AS BIGINT) << ib)) != 0
-                         THEN n ELSE 0 END) AS BIGINT) AS n_users_b,
-           CAST(SUM(CASE WHEN (mask & (CAST(1 AS BIGINT) << ia)) != 0
-                          AND (mask & (CAST(1 AS BIGINT) << ib)) != 0
-                         THEN n ELSE 0 END) AS BIGINT) AS n_intersection,
-           CAST(SUM(CASE WHEN (mask & (CAST(1 AS BIGINT) << ia)) != 0
-                          OR (mask & (CAST(1 AS BIGINT) << ib)) != 0
-                         THEN n ELSE 0 END) AS BIGINT) AS n_union,
-           CAST((1000 * SUM(CASE WHEN (mask & (CAST(1 AS BIGINT) << ia)) != 0
-                                  AND (mask & (CAST(1 AS BIGINT) << ib)) != 0
-                                 THEN n ELSE 0 END))
-                // SUM(CASE WHEN (mask & (CAST(1 AS BIGINT) << ia)) != 0
-                             OR (mask & (CAST(1 AS BIGINT) << ib)) != 0
-                            THEN n ELSE 0 END) AS BIGINT) AS jaccard_permille
-    FROM pairs CROSS JOIN mc
-    GROUP BY type_a, type_b
-    ORDER BY type_a, type_b
-    """,
-)
-def events_audience_overlap_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT audience-overlap Jaccard for every event-type pair via the
-    bitmask-inventory trick: one groupBy(user) folds each user's type
-    set into a ≤64-bit mask (``bit_or(1 << idx)``, map-side
-    combinable), a second groupBy collapses the corpus to the ≤2^|types|
-    distinct-mask inventory, and every pairwise |A∩B| / |A∪B| is then a
-    conditional sum over that BOUNDED relation — the naive spelling
-    (|types|² distinct-user self-joins) re-shuffles the corpus 25
-    times; this shape shuffles it ONCE and never materializes a
-    user-level pair.  The audience-overlap matrix is the campaign /
-    cannibalization diagnostic for event instrumentation (do 'view'
-    and 'purchase' reach the same users?).
-
-    Parity contract: type index = alphabetical dense rank (both
-    engines); Jaccard in permille by integer division (union ≥ 1 since
-    each type has ≥1 user).  Requires |types| ≤ 63 (asserted upstream
-    by the mask width; the generator has 5).
-
-    Scale shape: groupBy(user_id) is the single corpus-wide shuffle;
-    the mask inventory (≤2^|types| rows) × the type-pair grid
-    (|types|² rows) BNLJ is constant-size on both sides — allowlisted
-    in test_scale_ops.  The dense-rank window runs over the DISTINCT
-    TYPE relation (an aggregate output, ≤|types| rows) —
-    global-window-allowlisted."""
-    ev = load_testdata(spark, sf_dir, "events").select("user_id", "event_type")
-    tmap = (
-        ev.select("event_type")
-        .distinct()
-        .select(
-            "event_type",
-            (F.dense_rank().over(Window.orderBy("event_type")) - 1)
-            .cast("int")
-            .alias("idx"),
-        )
-    )
-    masks = (
-        ev.join(F.broadcast(tmap), "event_type")
-        .groupBy("user_id")
-        .agg(F.expr("bit_or(shiftleft(cast(1 as bigint), idx))").alias("mask"))
-    )
-    mc = masks.groupBy("mask").agg(F.count(F.lit(1)).alias("n"))
-    pairs = (
-        tmap.select(F.col("event_type").alias("type_a"), F.col("idx").alias("ia"))
-        .join(
-            tmap.select(F.col("event_type").alias("type_b"), F.col("idx").alias("ib")),
-            F.col("ia") < F.col("ib"),
-        )
-    )
-    bit_a = F.expr("mask & shiftleft(cast(1 as bigint), ia)") != 0
-    bit_b = F.expr("mask & shiftleft(cast(1 as bigint), ib)") != 0
-    cells = F.broadcast(pairs).crossJoin(mc)
-    agg = cells.groupBy("type_a", "type_b").agg(
-        F.sum(F.when(bit_a, F.col("n")).otherwise(0)).alias("n_users_a"),
-        F.sum(F.when(bit_b, F.col("n")).otherwise(0)).alias("n_users_b"),
-        F.sum(F.when(bit_a & bit_b, F.col("n")).otherwise(0)).alias("n_intersection"),
-        F.sum(F.when(bit_a | bit_b, F.col("n")).otherwise(0)).alias("n_union"),
-    )
-    return agg.select(
-        "type_a",
-        "type_b",
-        F.col("n_users_a").cast("bigint"),
-        F.col("n_users_b").cast("bigint"),
-        F.col("n_intersection").cast("bigint"),
-        F.col("n_union").cast("bigint"),
-        F.expr("div(1000 * n_intersection, n_union)")
-        .cast("bigint")
-        .alias("jaccard_permille"),
-    ).orderBy("type_a", "type_b")
-
-
-@register(
-    "events_autocorr_daily",
-    """
-    WITH daily AS (
-        SELECT event_type,
-               datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS x,
-               COUNT(*) AS cnt
-        FROM events GROUP BY 1, 2
-    ),
-    tot AS (SELECT event_type, SUM(cnt) AS s FROM daily GROUP BY 1),
-    p AS (
-        SELECT d.event_type, d.x, (1000000 * d.cnt) // t.s AS pm
-        FROM daily d JOIN tot t USING (event_type)
-    ),
-    mu AS (
-        SELECT event_type, SUM(pm) // COUNT(*) AS m,
-               CAST(COUNT(*) AS BIGINT) AS n_days
-        FROM p GROUP BY 1
-    ),
-    c AS (
-        SELECT p.event_type, p.x, p.pm - mu.m AS cv
-        FROM p JOIN mu USING (event_type)
-    ),
-    den AS (SELECT event_type, SUM(cv * cv) AS d2 FROM c GROUP BY 1),
-    num AS (
-        SELECT a.event_type, lg.lag AS lag,
-               SUM(a.cv * b.cv) AS nm, COUNT(*) AS n_pairs
-        FROM (VALUES (1), (7)) lg(lag)
-        JOIN c a ON TRUE
-        JOIN c b ON a.event_type = b.event_type AND b.x = a.x + lg.lag
-        GROUP BY 1, 2
-    )
-    SELECT n.event_type, CAST(n.lag AS INTEGER) AS lag,
-           mu.n_days, CAST(n.n_pairs AS BIGINT) AS n_pairs,
-           CAST((1000000 * n.nm) // den.d2 AS BIGINT) AS acf_micro
-    FROM num n JOIN den USING (event_type) JOIN mu USING (event_type)
-    ORDER BY event_type, lag
-    """,
-)
-def events_autocorr_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lag-1 / lag-7 autocorrelation of each event type's DAILY COUNT
-    series — the periodicity detector (is traffic weekly-seasonal?)
-    that complements the trend (``stats_theil_sen_trend``) and
-    change-point (``events_cusum_changepoint``) monitors.
-
-    Overflow-proof by construction: daily counts are first normalized
-    to PERMILLE-OF-TOTAL×1000 (pm = 1e6·cnt // Σcnt ≤ 1e6) so every
-    centered deviation is ≤1e6, every product ≤1e12, and the sums are
-    bounded by |days|·1e12 FOREVER — corpus growth cannot overflow the
-    bigint moments.  ACF is scale-invariant, so the normalization only
-    costs integer rounding (≤1 part in 1e6 per term).  Centering uses
-    the truncated integer mean; all divisions are truncating on both
-    engines.  Denominator is the full-series sum of squares (the
-    standard biased ACF estimator); numerator pairs are (t, t+k) days
-    both present (equi-join on x+k — robust to gap days).
-
-    Scale shape: ONE map-side-combinable groupBy(type, day) collapses
-    the corpus; everything after runs on ≤|types|·|days| rows via
-    keyed equi-joins (type, day) — no window, no BNLJ, no broadcast of
-    anything unbounded."""
-    ev = load_testdata(spark, sf_dir, "events").select(
-        "event_type",
-        F.expr("datediff(cast(ts as date), date'2024-01-01')").alias("x"),
-    )
-    daily = ev.groupBy("event_type", "x").agg(F.count(F.lit(1)).alias("cnt"))
-    tot = daily.groupBy("event_type").agg(F.sum("cnt").alias("s"))
-    p = daily.join(tot, "event_type").select(
-        "event_type", "x", F.expr("div(1000000 * cnt, s)").alias("pm")
-    )
-    mu = p.groupBy("event_type").agg(
-        F.expr("div(sum(pm), count(1))").alias("m"),
-        F.count(F.lit(1)).cast("bigint").alias("n_days"),
-    )
-    c = p.join(mu.select("event_type", "m"), "event_type").select(
-        "event_type", "x", (F.col("pm") - F.col("m")).alias("cv")
-    )
-    den = c.groupBy("event_type").agg(F.sum(F.col("cv") * F.col("cv")).alias("d2"))
-    nums = []
-    for k in (1, 7):
-        a = c.select("event_type", "x", F.col("cv").alias("ca"))
-        b = c.select(
-            "event_type", (F.col("x") - k).alias("x"), F.col("cv").alias("cb")
-        )
-        nums.append(
-            a.join(b, ["event_type", "x"])
-            .groupBy("event_type")
-            .agg(
-                F.lit(k).cast("int").alias("lag"),
-                F.sum(F.col("ca") * F.col("cb")).alias("nm"),
-                F.count(F.lit(1)).alias("n_pairs"),
-            )
-        )
-    num = nums[0].unionByName(nums[1])
-    return (
-        num.join(den, "event_type")
-        .join(mu.select("event_type", "n_days"), "event_type")
-        .select(
-            "event_type",
-            "lag",
-            "n_days",
-            F.col("n_pairs").cast("bigint"),
-            F.expr("div(1000000 * nm, d2)").cast("bigint").alias("acf_micro"),
-        )
-        .orderBy("event_type", "lag")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Round-6 batch 9: rank correlation, robust trend, inter-arrival quantiles
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "stats_spearman_daily",
-    """
-    WITH daily AS (
-        SELECT event_type,
-               datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS x,
-               COUNT(*) AS cnt,
-               SUM(CAST(round(value * 1000) AS BIGINT)) // COUNT(*) AS ybar
-        FROM events GROUP BY 1, 2
-    ),
-    na AS (SELECT event_type, cnt, COUNT(*) AS n_eq FROM daily GROUP BY 1, 2),
-    nb AS (SELECT event_type, ybar, COUNT(*) AS n_eq FROM daily GROUP BY 1, 2),
-    ranked AS (
-        SELECT d.event_type,
-               2 * rank() OVER (PARTITION BY d.event_type ORDER BY d.cnt)
-                 + na.n_eq - 1 AS a2,
-               2 * rank() OVER (PARTITION BY d.event_type ORDER BY d.ybar)
-                 + nb.n_eq - 1 AS b2
-        FROM daily d
-        JOIN na ON na.event_type = d.event_type AND na.cnt = d.cnt
-        JOIN nb ON nb.event_type = d.event_type AND nb.ybar = d.ybar
-    ),
-    m AS (
-        SELECT event_type, COUNT(*) AS n,
-               SUM(a2) AS sa, SUM(b2) AS sb, SUM(a2 * b2) AS sab,
-               SUM(a2 * a2) AS saa, SUM(b2 * b2) AS sbb
-        FROM ranked GROUP BY 1
-    )
-    SELECT event_type,
-           CAST(n AS BIGINT) AS n_days,
-           CASE WHEN n * saa - sa * sa = 0 OR n * sbb - sb * sb = 0 THEN NULL
-                ELSE CAST(floor((1000000.0 * (n * sab - sa * sb))
-                     / (sqrt(CAST(n * saa - sa * sa AS DOUBLE))
-                        * sqrt(CAST(n * sbb - sb * sb AS DOUBLE)))) AS BIGINT)
-           END AS rho_micro
-    FROM m ORDER BY event_type
-    """,
-)
-def stats_spearman_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spearman rank correlation (tie-corrected, per event type)
-    between each day's EVENT VOLUME and its MEAN VALUE — the monotone-
-    association monitor ("do busy days run hotter?") that Pearson-on-
-    raw-values gets wrong under outliers and nonlinearity.
-
-    Exactness contract: classical average ranks carry .5 halves, so
-    both engines compute DOUBLED average ranks — ``2·rank() + n_eq − 1``
-    (min-rank window plus the tied-group size from a groupBy join) —
-    keeping every moment integer; the constant factor cancels in the
-    correlation.  The only float steps are the final two IEEE sqrt
-    calls and one division — both CORRECTLY ROUNDED per IEEE 754 on
-    identical integer inputs, hence bit-identical across engines
-    (unlike ln/exp, which the fleet avoids).  Zero-variance series
-    yield NULL on both sides.
-
-    Scale shape: one combinable groupBy(type, day) bounds everything
-    at ≤|types|·|days| rows; the rank windows are PARTITIONED by type
-    over that bounded relation; tie sizes come from two more bounded
-    groupBys — no global window, no BNLJ, no unbounded broadcast."""
-    daily = (
-        load_testdata(spark, sf_dir, "events")
-        .select(
-            "event_type",
-            F.expr("datediff(cast(ts as date), date'2024-01-01')").alias("x"),
-            F.expr("cast(round(value * 1000) as bigint)").alias("y"),
-        )
-        .groupBy("event_type", "x")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.expr("div(sum(y), count(1))").alias("ybar"),
-        )
-    )
-    na = daily.groupBy("event_type", "cnt").agg(F.count(F.lit(1)).alias("na_eq"))
-    nb = daily.groupBy("event_type", "ybar").agg(F.count(F.lit(1)).alias("nb_eq"))
-    wa = Window.partitionBy("event_type").orderBy("cnt")
-    wb = Window.partitionBy("event_type").orderBy("ybar")
-    ranked = (
-        daily.join(na, ["event_type", "cnt"])
-        .join(nb, ["event_type", "ybar"])
-        .select(
-            "event_type",
-            (2 * F.rank().over(wa) + F.col("na_eq") - 1).alias("a2"),
-            (2 * F.rank().over(wb) + F.col("nb_eq") - 1).alias("b2"),
-        )
-    )
-    m = ranked.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("a2").alias("sa"),
-        F.sum("b2").alias("sb"),
-        F.sum(F.col("a2") * F.col("b2")).alias("sab"),
-        F.sum(F.col("a2") * F.col("a2")).alias("saa"),
-        F.sum(F.col("b2") * F.col("b2")).alias("sbb"),
-    )
-    return m.select(
-        "event_type",
-        F.col("n").cast("bigint").alias("n_days"),
-        F.expr(
-            "case when n * saa - sa * sa = 0 or n * sbb - sb * sb = 0 then null"
-            " else cast(floor((1000000.0 * (n * sab - sa * sb))"
-            " / (sqrt(cast(n * saa - sa * sa as double))"
-            " * sqrt(cast(n * sbb - sb * sb as double)))) as bigint) end"
-        ).alias("rho_micro"),
-    ).orderBy("event_type")
-
-
-@register(
-    "stats_theil_sen_trend",
-    """
-    WITH daily AS (
-        SELECT event_type,
-               datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS x,
-               SUM(CAST(round(value * 1000) AS BIGINT)) // COUNT(*) AS ybar
-        FROM events GROUP BY 1, 2
-    ),
-    slopes AS (
-        SELECT a.event_type,
-               CAST(floor((1000000.0 * (b.ybar - a.ybar))
-                          / CAST(b.x - a.x AS DOUBLE)) AS BIGINT) AS slope_micro,
-               a.x AS x1, b.x AS x2
-        FROM daily a JOIN daily b
-          ON a.event_type = b.event_type AND a.x < b.x
-    ),
-    numbered AS (
-        SELECT event_type, slope_micro,
-               row_number() OVER (PARTITION BY event_type
-                                  ORDER BY slope_micro, x1, x2) AS rn,
-               COUNT(*) OVER (PARTITION BY event_type) AS n_pairs
-        FROM slopes
-    )
-    SELECT event_type,
-           CAST((SELECT COUNT(*) FROM daily d
-                 WHERE d.event_type = numbered.event_type) AS BIGINT) AS n_days,
-           CAST(n_pairs AS BIGINT) AS n_pairs,
-           CAST(slope_micro AS BIGINT) AS median_slope_micro
-    FROM numbered
-    WHERE rn = (n_pairs + 1) // 2
-    ORDER BY event_type
-    """,
-)
-def stats_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theil–Sen robust trend per event type — the median of all
-    pairwise slopes over the DAILY MEAN value series, the estimator
-    that shrugs off the outlier days that drag an OLS fit around: a 29.3% breakdown point for
-    the cost of |days|² bounded pairs.
-
-    Parity contract: each slope is one exact integer subtraction pair
-    fed through IEEE-correctly-rounded multiply/divide/floor —
-    bit-identical across engines; the median is picked POSITIONALLY
-    (row_number at ⌈n/2⌉ under the total order (slope, x1, x2)), never
-    averaged, so no new arithmetic enters.
-
-    Scale shape: the corpus collapses to ≤|types|·|days| daily rows in
-    one combinable groupBy; the pair 'self-join' is an EQUI-join on
-    event_type whose per-key output is |days|² ≈ 10⁵ rows at worst —
-    bounded by the calendar, not the corpus, forever.  The
-    median-pick window is PARTITIONED by type over that bounded pair
-    relation.  No global window, no BNLJ."""
-    daily = (
-        load_testdata(spark, sf_dir, "events")
-        .select(
-            "event_type",
-            F.expr("datediff(cast(ts as date), date'2024-01-01')").alias("x"),
-            F.expr("cast(round(value * 1000) as bigint)").alias("y"),
-        )
-        .groupBy("event_type", "x")
-        .agg(F.expr("div(sum(y), count(1))").alias("ybar"))
-    )
-    a = daily.select("event_type", F.col("x").alias("x1"), F.col("ybar").alias("y1"))
-    b = daily.select("event_type", F.col("x").alias("x2"), F.col("ybar").alias("y2"))
-    slopes = (
-        a.join(b, "event_type")
-        .filter(F.col("x1") < F.col("x2"))
-        .select(
-            "event_type",
-            F.expr(
-                "cast(floor((1000000.0 * (y2 - y1)) / cast(x2 - x1 as double))"
-                " as bigint)"
-            ).alias("slope_micro"),
-            "x1",
-            "x2",
-        )
-    )
-    w = Window.partitionBy("event_type").orderBy("slope_micro", "x1", "x2")
-    wn = Window.partitionBy("event_type")
-    numbered = slopes.select(
-        "event_type",
-        "slope_micro",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(wn).alias("n_pairs"),
-    )
-    ndays = daily.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_days"))
-    return (
-        numbered.filter(F.col("rn") == F.expr("div(n_pairs + 1, 2)"))
-        .join(ndays, "event_type")
-        .select(
-            "event_type",
-            F.col("n_days").cast("bigint"),
-            F.col("n_pairs").cast("bigint"),
-            F.col("slope_micro").cast("bigint").alias("median_slope_micro"),
-        )
-        .orderBy("event_type")
-    )
-
-
-@register(
-    "events_interarrival_quantiles",
-    """
-    WITH e AS (
-        SELECT user_id, event_id, epoch_ms(ts) AS ems FROM events
-    ),
-    g AS (
-        SELECT ems - lag(ems) OVER (PARTITION BY user_id
-                                    ORDER BY ems, event_id) AS gap
-        FROM e
-    ),
-    gg AS (SELECT gap, COUNT(*) AS c FROM g WHERE gap IS NOT NULL GROUP BY gap),
-    cum AS (
-        SELECT gap,
-               SUM(c) OVER (ORDER BY gap
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                                     AND CURRENT ROW) AS cc
-        FROM gg
-    ),
-    t AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM gg)
-    SELECT CAST(t.n AS BIGINT) AS n_gaps,
-           CAST(MIN(CASE WHEN cc >= (50 * t.n + 99) // 100 THEN gap END)
-                AS BIGINT) AS p50_ms,
-           CAST(MIN(CASE WHEN cc >= (90 * t.n + 99) // 100 THEN gap END)
-                AS BIGINT) AS p90_ms,
-           CAST(MIN(CASE WHEN cc >= (99 * t.n + 99) // 100 THEN gap END)
-                AS BIGINT) AS p99_ms
-    FROM cum CROSS JOIN t
-    GROUP BY t.n
-    """,
-)
-def events_interarrival_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact p50/p90/p99 of per-user inter-arrival time (milliseconds)
-    — the engagement-cadence fingerprint behind session-timeout
-    choices (``events_sessionization``'s 30-min gap is exactly a point
-    on this distribution) and bot detection (impossibly tight p50s).
-
-    Exact at scale, no global sort: gaps come from a USER-partitioned
-    lag window; the quantile selection runs on the (gap → count)
-    aggregate via ``operators/prefixsum.bucketed_cumsum`` — the same
-    two-level exact-ECDF scan as ``events_mannwhitney_auc`` — then one
-    1-row total broadcast turns percentile ranks ⌈p·n/100⌉ into
-    threshold selections (percentile_disc semantics, smallest value
-    whose cumulative count reaches the rank).  The oracle spells the
-    identical cumsum explicitly.
-
-    Scale shape: the only corpus-wide operations are the user-
-    partitioned window (natural key partitioning) and one combinable
-    groupBy(gap); the cumsum's single-task step touches only BUCKET
-    TOTALS (≤ span/width rows — global-window-allowlisted), and the
-    1-row threshold crossJoin is BNLJ-allowlisted."""
-    from .operators.prefixsum import bucketed_cumsum
-
-    ev = load_testdata(spark, sf_dir, "events").select(
-        "user_id", "event_id", F.expr("unix_millis(ts)").alias("ems")
-    )
-    w = Window.partitionBy("user_id").orderBy("ems", "event_id")
-    gaps = (
-        ev.select((F.col("ems") - F.lag("ems").over(w)).alias("gap"))
-        .filter(F.col("gap").isNotNull())
-    )
-    gg = gaps.groupBy("gap").agg(F.count(F.lit(1)).alias("c"))
-    cum = bucketed_cumsum(gg, [], "gap", ["c"], bucket_width=10_000_000)
-    t = gg.agg(F.sum("c").cast("bigint").alias("n"))
-    return (
-        cum.crossJoin(F.broadcast(t))
-        .groupBy("n")
-        .agg(
-            *[
-                F.min(
-                    F.when(
-                        F.col("cum_c") >= F.expr(f"div({p} * n + 99, 100)"),
-                        F.col("gap"),
-                    )
-                )
-                .cast("bigint")
-                .alias(f"p{p}_ms")
-                for p in (50, 90, 99)
-            ]
-        )
-        .select(
-            F.col("n").alias("n_gaps"),
-            "p50_ms",
-            "p90_ms",
-            "p99_ms",
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
 # Round-6 batch 10: k-core decomposition over the near-dup graph
 # ---------------------------------------------------------------------------
 
@@ -6138,7 +4047,7 @@ def dedup_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-6 batch 11: Heaps growth, Tukey fences, journey trigrams
+# Round-6 batch 11: Heaps growth, journey trigrams
 # ---------------------------------------------------------------------------
 
 
@@ -6222,101 +4131,6 @@ def vocab_heaps_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("vocab_cum"),
         )
         .orderBy("decile")
-    )
-
-
-@register(
-    "quality_tukey_fences_by_source",
-    """
-    WITH grid AS (
-        SELECT source, n_chars, COUNT(*) AS c
-        FROM documents GROUP BY 1, 2
-    ),
-    cum AS (
-        SELECT source, n_chars, c,
-               SUM(c) OVER (PARTITION BY source ORDER BY n_chars
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                                     AND CURRENT ROW) AS cc
-        FROM grid
-    ),
-    tot AS (SELECT source, SUM(c) AS n FROM grid GROUP BY 1),
-    q AS (
-        SELECT cum.source,
-               MIN(CASE WHEN cc >= (25 * n + 99) // 100 THEN n_chars END) AS q1,
-               MIN(CASE WHEN cc >= (75 * n + 99) // 100 THEN n_chars END) AS q3,
-               CAST(MIN(n) AS BIGINT) AS n_docs
-        FROM cum JOIN tot ON tot.source = cum.source
-        GROUP BY cum.source
-    )
-    SELECT d.source,
-           CAST(q.q1 AS BIGINT) AS q1,
-           CAST(q.q3 AS BIGINT) AS q3,
-           q.n_docs,
-           CAST(SUM(CASE WHEN 2 * d.n_chars < 2 * q.q1 - 3 * (q.q3 - q.q1)
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_low,
-           CAST(SUM(CASE WHEN 2 * d.n_chars > 2 * q.q3 + 3 * (q.q3 - q.q1)
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_high
-    FROM documents d JOIN q ON q.source = d.source
-    GROUP BY d.source, q.q1, q.q3, q.n_docs
-    ORDER BY d.source
-    """,
-)
-def quality_tukey_fences_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source Tukey outlier fences on document length: exact
-    quartiles (percentile_disc semantics over the per-source length
-    grid) and the count of docs beyond Q1−1.5·IQR / Q3+1.5·IQR — the
-    box-plot audit that flags a source whose length distribution has
-    grown a truncation spike or a concatenation tail before those docs
-    poison a training mix.  A per-group exact-quartile form of a
-    robust outlier detector.
-
-    Integer contract: fences are compared in DOUBLED units
-    (2·len < 2·Q1 − 3·IQR) so the 1.5 multiplier never leaves ℤ; the
-    quartile is the smallest length whose cumulative count reaches
-    ⌈p·n/100⌉ — both engines spell the identical cumsum.
-
-    Scale shape: ONE combinable groupBy(source, n_chars) collapses the
-    corpus to the per-source length grid (bounded by the length
-    domain, not N); the cumsum window is PARTITIONED by source over
-    that grid; the fence lookup joins a |sources|-row relation back —
-    a broadcast equi-join.  No global window, no BNLJ."""
-    from .operators.quantiles import grid_quantiles
-
-    docs = load_testdata(spark, sf_dir, "documents").select("source", "n_chars")
-    q = grid_quantiles(
-        docs, ["source"], "n_chars", [25, 75], count_alias="n_docs"
-    ).select(
-        "source",
-        F.col("p25").alias("q1"),
-        F.col("p75").alias("q3"),
-        "n_docs",
-    )
-    return (
-        docs.join(F.broadcast(q), "source")
-        .groupBy("source", "q1", "q3", "n_docs")
-        .agg(
-            F.sum(
-                F.when(
-                    2 * F.col("n_chars") < 2 * F.col("q1") - 3 * (F.col("q3") - F.col("q1")),
-                    1,
-                ).otherwise(0)
-            ).alias("n_low"),
-            F.sum(
-                F.when(
-                    2 * F.col("n_chars") > 2 * F.col("q3") + 3 * (F.col("q3") - F.col("q1")),
-                    1,
-                ).otherwise(0)
-            ).alias("n_high"),
-        )
-        .select(
-            "source",
-            F.col("q1").cast("bigint"),
-            F.col("q3").cast("bigint"),
-            "n_docs",
-            F.col("n_low").cast("bigint"),
-            F.col("n_high").cast("bigint"),
-        )
-        .orderBy("source")
     )
 
 
@@ -6520,139 +4334,8 @@ def events_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Train/test split leakage audit, ship-latency quantiles
+# Ship-latency quantiles
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "pipeline_split_leakage_check",
-    f"""
-    WITH {_CORPUS_SQL}, {_SHINGLE_SQL},
-    seeds AS (SELECT unnest(generate_series(0, 7)) AS seed),
-    hashed AS (
-        SELECT doc_id, seed, md5(CAST(seed AS VARCHAR) || ':' || sh) AS h
-        FROM sh CROSS JOIN seeds
-    ),
-    sig AS (
-        SELECT doc_id,
-               {', '.join(f"MIN(CASE WHEN seed = {i} THEN h END) AS h{i}" for i in range(8))}
-        FROM hashed GROUP BY doc_id
-    ),
-    bands AS (
-        SELECT doc_id, 0 AS band_idx, md5(concat_ws('|', h0, h1, h2, h3)) AS band_sig FROM sig
-        UNION ALL
-        SELECT doc_id, 1 AS band_idx, md5(concat_ws('|', h4, h5, h6, h7)) AS band_sig FROM sig
-    ),
-    pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS shared_bands
-        FROM bands a JOIN bands b ON a.band_idx = b.band_idx
-            AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    sp AS (
-        SELECT doc_id,
-               CASE WHEN CAST(concat('0x', substr(md5(concat('split:', doc_id)), 1, 4))
-                          AS BIGINT) < 58982 THEN 'train'
-                    WHEN CAST(concat('0x', substr(md5(concat('split:', doc_id)), 1, 4))
-                          AS BIGINT) < 62258 THEN 'val'
-                    ELSE 'test' END AS split
-        FROM corpus
-    ),
-    tagged AS (
-        SELECT least(sa.split, sb.split) AS split_a,
-               greatest(sa.split, sb.split) AS split_b,
-               p.shared_bands
-        FROM pairs p
-        JOIN sp sa ON sa.doc_id = p.id_a
-        JOIN sp sb ON sb.doc_id = p.id_b
-    )
-    SELECT split_a, split_b,
-           CAST(COUNT(*) AS BIGINT) AS n_candidate_pairs,
-           CAST(SUM(CASE WHEN shared_bands = 2 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_strong,
-           (split_a <> split_b) AS is_leak
-    FROM tagged
-    GROUP BY split_a, split_b
-    ORDER BY split_a, split_b
-    """,
-)
-def pipeline_split_leakage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train/val/test LEAKAGE audit: because the 90/5/5 split
-    of a training-prep funnel hashes each doc_id
-    independently, two near-duplicate documents can land in DIFFERENT
-    splits — the eval-contamination failure that inflates held-out
-    metrics.  This query re-derives the split assignment (pure
-    function of doc_id — the property that makes this audit possible
-    at all), runs the standard MinHash-LSH candidate generation over
-    the planted-duplicate corpus, and reports the candidate-pair mass
-    per split-pair cell: off-diagonal rows (``is_leak``) are the
-    pairs a correct pipeline must either co-assign (split by CLUSTER,
-    not by doc) or drop from eval.  The planted corpus guarantees the
-    audit has true positives to find (copies hash independently of
-    their bases).
-
-    Scale shape: identical to the proven dedup_cross_source_matrix —
-    banded bucket equi-join for candidates (never all-pairs), split
-    tags join the PAIR relation (|pairs| ≪ N) against the doc→split
-    map, and the cell matrix is one combinable groupBy to ≤9 rows.
-    Composes three verified components (split hash, minhash_bands,
-    lsh_candidate_pairs) with zero new shuffle shapes."""
-    corpus = _dedup_corpus(spark, sf_dir)
-    bands = D.minhash_bands(corpus, "doc_id", "text", n_hashes=8, band_size=4)
-    pairs = D.lsh_candidate_pairs(bands, "doc_id")
-    sp = corpus.select(
-        "doc_id",
-        F.when(
-            F.expr(
-                "cast(conv(substring(md5(concat('split:', cast(doc_id as string))), 1, 4),"
-                " 16, 10) as bigint)"
-            )
-            < 58982,
-            "train",
-        )
-        .when(
-            F.expr(
-                "cast(conv(substring(md5(concat('split:', cast(doc_id as string))), 1, 4),"
-                " 16, 10) as bigint)"
-            )
-            < 62258,
-            "val",
-        )
-        .otherwise("test")
-        .alias("split"),
-    )
-    tagged = (
-        pairs.join(
-            sp.select(F.col("doc_id").alias("id_a"), F.col("split").alias("sa")),
-            "id_a",
-        )
-        .join(
-            sp.select(F.col("doc_id").alias("id_b"), F.col("split").alias("sb")),
-            "id_b",
-        )
-        .select(
-            F.least("sa", "sb").alias("split_a"),
-            F.greatest("sa", "sb").alias("split_b"),
-            "shared_bands",
-        )
-    )
-    return (
-        tagged.groupBy("split_a", "split_b")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_candidate_pairs"),
-            F.sum(F.when(F.col("shared_bands") == 2, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_strong"),
-        )
-        .select(
-            "split_a",
-            "split_b",
-            "n_candidate_pairs",
-            "n_strong",
-            (F.col("split_a") != F.col("split_b")).alias("is_leak"),
-        )
-        .orderBy("split_a", "split_b")
-    )
 
 
 @register(
@@ -6701,8 +4384,8 @@ def orders_ship_latency_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame
     groupBy(priority, delay) collapses everything to a |priorities|·
     |delay-domain| grid; the cumsum window is PARTITIONED by priority
     over that grid, and quantile selection is a conditional MIN — the
-    same exact-quantile-without-global-sort pattern as
-    quality_tukey_fences_by_source.  No BNLJ, no global window, no
+    exact-quantile-without-global-sort pattern of
+    ``operators.quantiles``.  No BNLJ, no global window, no
     approximation."""
     from .operators.quantiles import grid_quantiles
 
@@ -7021,9 +4704,8 @@ def orders_repeat_purchase_intervals(spark: SparkSession, sf_dir: str) -> DataFr
     """Repeat-purchase cadence per market segment: exact p50/p90 of
     the days between a customer's consecutive orders — the
     reorder-cycle profile behind replenishment forecasting and the
-    'is BUILDING stickier than MACHINERY' comparison; the commerce
-    twin of events_interarrival_quantiles (same estimator, order
-    grain, per-segment cuts).
+    'is BUILDING stickier than MACHINERY' comparison (per-segment
+    cuts at order grain).
 
     Parity: per-customer ordering ties (same order date) break by
     o_orderkey on both engines; quantiles are percentile_disc via the
@@ -7316,103 +4998,8 @@ def dedup_token_savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-6 batch 19: conversion latency, new-vs-returning split
+# Round-6 batch 19: new-vs-returning split
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "events_time_to_convert_quantiles",
-    """
-    WITH v AS (
-        SELECT user_id, MIN(epoch_ms(ts)) AS first_view
-        FROM events WHERE event_type = 'view' GROUP BY user_id
-    ),
-    p AS (
-        SELECT e.user_id, MIN(epoch_ms(e.ts)) AS first_purchase
-        FROM events e JOIN v ON v.user_id = e.user_id
-        WHERE e.event_type = 'purchase' AND epoch_ms(e.ts) >= v.first_view
-        GROUP BY e.user_id
-    ),
-    g AS (
-        SELECT (p.first_purchase - v.first_view) // 60000 AS gap_min
-        FROM v JOIN p ON p.user_id = v.user_id
-    ),
-    gg AS (SELECT gap_min, COUNT(*) AS c FROM g GROUP BY gap_min),
-    cum AS (
-        SELECT gap_min,
-               SUM(c) OVER (ORDER BY gap_min
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                                     AND CURRENT ROW) AS cc
-        FROM gg
-    ),
-    t AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM gg)
-    SELECT CAST(t.n AS BIGINT) AS n_converters,
-           CAST(MIN(CASE WHEN cc >= (50 * t.n + 99) // 100 THEN gap_min END)
-                AS BIGINT) AS p50_min,
-           CAST(MIN(CASE WHEN cc >= (90 * t.n + 99) // 100 THEN gap_min END)
-                AS BIGINT) AS p90_min,
-           CAST(MIN(CASE WHEN cc >= (99 * t.n + 99) // 100 THEN gap_min END)
-                AS BIGINT) AS p99_min
-    FROM cum CROSS JOIN t
-    GROUP BY t.n
-    """,
-)
-def events_time_to_convert_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact p50/p90/p99 of VIEW→PURCHASE latency (minutes from a
-    user's first view to their first purchase at-or-after it) — the
-    conversion-velocity metric product teams pair with the funnel's
-    conversion RATE (events_funnel says how many convert; this says
-    how long the ones who do take, with the p99 tail exposing the
-    slow-consideration cohort).
-
-    Scale shape: two combinable groupBy(user) MIN-aggregates (the
-    purchase side pre-filtered by a key equi-join against first
-    views); the latency distribution collapses to the minute-domain
-    grid and quantile selection runs through the shared ECDF
-    threshold contract (cumsum over the bounded gap grid —
-    global-window-allowlisted; 1-row total broadcast —
-    BNLJ-allowlisted; same shape as events_interarrival_quantiles)."""
-    from .operators.prefixsum import bucketed_cumsum
-
-    ev = load_testdata(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.expr("unix_millis(ts)").alias("ems")
-    )
-    v = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ems").alias("first_view"))
-    )
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(v, "user_id")
-        .filter(F.col("ems") >= F.col("first_view"))
-        .groupBy("user_id")
-        .agg(F.min("ems").alias("first_purchase"))
-    )
-    g = v.join(p, "user_id").select(
-        F.expr("div(first_purchase - first_view, 60000)").alias("gap_min")
-    )
-    gg = g.groupBy("gap_min").agg(F.count(F.lit(1)).alias("c"))
-    cum = bucketed_cumsum(gg, [], "gap_min", ["c"], bucket_width=1440)
-    t = gg.agg(F.sum("c").cast("bigint").alias("n"))
-    return (
-        cum.crossJoin(F.broadcast(t))
-        .groupBy("n")
-        .agg(
-            *[
-                F.min(
-                    F.when(
-                        F.col("cum_c") >= F.expr(f"div({pp} * n + 99, 100)"),
-                        F.col("gap_min"),
-                    )
-                )
-                .cast("bigint")
-                .alias(f"p{pp}_min")
-                for pp in (50, 90, 99)
-            ]
-        )
-        .select(F.col("n").alias("n_converters"), "p50_min", "p90_min", "p99_min")
-    )
 
 
 @register(

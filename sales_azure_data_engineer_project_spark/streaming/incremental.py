@@ -41,7 +41,8 @@ def stream_incremental_merge(
     """Drain all available files from ``source_dir`` into the
     ``VersionedTable`` at ``target_path`` with SCD-1 MERGE semantics,
     exactly once per file (checkpointed).  Each non-empty micro-batch
-    commits one table version.
+    commits one table version; the first creates the table's empty
+    version 0 before it (``VersionedTable.merge``), so it commits v1.
 
     ``partition_by`` partitions the table: a micro-batch then rewrites
     only the partitions it touches (``VersionedTable.merge``).  The

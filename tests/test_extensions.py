@@ -10,7 +10,6 @@ from sales_azure_data_engineer_project_spark.operators import dedup as D
 from sales_azure_data_engineer_project_spark.operators import multimodal as M
 from sales_azure_data_engineer_project_spark.operators import similarity as S
 from sales_azure_data_engineer_project_spark.operators import text as X
-from sales_azure_data_engineer_project_spark.schemas import TESTDATA_SCHEMAS
 
 
 @pytest.fixture(scope="module")
@@ -275,29 +274,6 @@ def test_semdedup_drop_list_vs_brute(spark, sf_smoke):
     assert out, "expected a non-empty drop list on the smoke corpus"
 
 
-def test_exact_substring_dedup_removes_planted_copies(spark, sf_smoke):
-    """Keep-first semantics: a planted exact copy (doc_id+200000) has
-    every span occurrence preceded by its original, so its whole token
-    range (for docs >= 8 tokens) collapses into removal intervals; the
-    original keeps the first occurrences and must lose nothing to the
-    copy alone (it may still share spans with OTHER docs, so we assert
-    the copy side only)."""
-    import __spark_entry__ as entry_mod
-
-    rows = {
-        r["doc_id"]: r
-        for r in entry_mod.queries()["text_exact_substring_dedup"](
-            spark, sf_smoke
-        ).collect()
-    }
-    copies = [r for d, r in rows.items() if d >= 200000 and r["tokens_total"] >= 8]
-    assert copies, "expected planted exact copies"
-    for r in copies:
-        assert r["n_remove_intervals"] == 1
-        assert r["tokens_removed"] == r["tokens_total"]
-        assert r["kept_permille"] == 0
-
-
 def test_dsir_importance_prefers_target_profile(spark, sf_smoke):
     """Docs from the designated target sources must score at least as
     high on average as the rest of the corpus — the defining property
@@ -352,22 +328,6 @@ def test_hashed_classifier_matches_python_reference(spark):
         assert out[k]["avg_w_milli"] == int(1000 * s / n) if s >= 0 else -(
             1000 * (-s) // n
         )
-
-
-def test_adaptive_thresholds_per_source_quartile(spark, sf_smoke):
-    """Each source keeps at least 3/4 of its docs (cutoff is its own
-    25th percentile) and cutoffs genuinely differ across sources when
-    distributions differ."""
-    from sales_azure_data_engineer_project_spark.queries_extensions import (
-        quality_adaptive_thresholds,
-    )
-
-    out = quality_adaptive_thresholds(spark, sf_smoke).collect()
-    assert len(out) == 20
-    for r in out:
-        # rank-based p25: at least ceil(3n/4) docs sit at/above cutoff
-        assert r["n_kept"] * 4 >= r["n_docs"] * 3
-        assert r["kept_permille"] == 1000 * r["n_kept"] // r["n_docs"]
 
 
 def test_boilerplate_chunks_flags_planted_dups(spark, sf_smoke):
@@ -480,29 +440,6 @@ def test_bottomk_estimates_are_sane(spark, sf_smoke):
         assert r["est_p50_cents"] <= r["est_p90_cents"] <= r["est_p99_cents"]
         for c in ("est_p50_cents", "est_p90_cents", "est_p99_cents"):
             assert r[c] in cents_by_flag[flag], (flag, c, r[c])
-
-
-def test_curriculum_phases_partition_and_escalate(spark, sf_smoke):
-    """Phases 1..4 partition the tokenized docs and mean difficulty is
-    strictly ordered phase1 < ... < phase4 (structural: phases are
-    difficulty ranges)."""
-    import __spark_entry__ as entry_mod
-    from sales_azure_data_engineer_project_spark.io import load_testdata
-    from sales_azure_data_engineer_project_spark.operators import text as X
-    from pyspark.sql import functions as F
-
-    rows = sorted(
-        entry_mod.queries()["pipeline_curriculum_order"](spark, sf_smoke).collect(),
-        key=lambda r: r["phase"],
-    )
-    assert [r["phase"] for r in rows] == list(range(1, len(rows) + 1))
-    docs = load_testdata(spark, sf_smoke, "documents")
-    n_tokenized = docs.filter(
-        F.size(F.split("text", X.TOKEN_RE)) > 0
-    ).count()
-    assert sum(r["n_docs"] for r in rows) == n_tokenized
-    diffs = [r["avg_difficulty_permille"] for r in rows]
-    assert diffs == sorted(diffs)
 
 
 def test_unimax_waterfill_invariants(spark, sf_smoke):
@@ -659,44 +596,6 @@ def test_bm25_planted_relevant_doc_ranks_first(spark):
             assert r["score_milli"] == 0
 
 
-def test_knn_label_noise_flags_planted_mislabel(spark):
-    """Two tight, well-separated clusters; one probe carries the wrong
-    label — it must be flagged (its whole neighborhood disagrees) and
-    every correctly-labeled probe must not be."""
-    import os
-    import tempfile
-
-    from sales_azure_data_engineer_project_spark.queries_extensions import (
-        quality_knn_label_noise,
-    )
-
-    def vec(axis, jitter):
-        v = [0.0] * 64
-        v[axis] = 10.0
-        v[axis + 2] = jitter
-        return v
-
-    rows = []
-    # labels 0 and 1: 8 clean members each, probed (vec_id < 50)
-    for i in range(8):
-        rows.append((i, vec(0, 0.1 * i), 0))
-        rows.append((10 + i, vec(1, 0.1 * i), 1))
-    # planted mislabel: sits in cluster 0's region but labeled 1
-    rows.append((30, vec(0, 0.45), 1))
-    with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(rows, TESTDATA_SCHEMAS["embeddings"]).write.parquet(
-            os.path.join(d, "embeddings.parquet")
-        )
-        out = {r["label"]: r for r in quality_knn_label_noise(spark, d).collect()}
-    assert out[0]["n_flagged"] == 0
-    assert out[1]["n_flagged"] == 1  # exactly the planted mislabel
-    # the mislabel sits inside cluster 0, so it may appear in label-0
-    # neighborhoods (lowering agreement below 1000) but never flips a
-    # clean probe's majority
-    assert out[0]["agreement_permille"] >= 800
-    assert out[1]["agreement_permille"] < 1000
-
-
 def test_embedding_outliers_consistent_with_cluster_radius(spark, sf_smoke):
     """The rank-1 outlier's scaled distance² per cluster must equal the
     radius embedding_cluster_quality reports for that cluster (the two
@@ -776,22 +675,6 @@ def test_hybrid_rrf_fuses_both_tiers(spark, sf_smoke):
     for key, rk in lex5.items():
         if key in hyb and hyb[key] > 0:
             assert hyb[key] == rk, f"lexical rank drifted for {key}"
-
-
-def test_kcenter_radius_monotone_and_picks_distinct(spark, sf_smoke):
-    from sales_azure_data_engineer_project_spark import queries_core as Q
-    from sales_azure_data_engineer_project_spark import queries_extensions  # noqa: F401 (registers)
-
-    rows = sorted(
-        Q.QUERIES["sample_coreset_kcenter"](spark, sf_smoke).collect(),
-        key=lambda r: r["pick_idx"],
-    )
-    assert [r["pick_idx"] for r in rows] == [1, 2, 3, 4]
-    picks = [r["vec_id"] for r in rows]
-    assert len(set(picks)) == 4, "centers must be distinct"
-    radii = [r["radius2"] for r in rows]
-    assert radii == sorted(radii, reverse=True), "coverage radius must shrink"
-    assert radii[-1] >= 0
 
 
 def test_bucketed_cumsum_matches_global_window(spark):
@@ -907,161 +790,6 @@ def test_chi2_independence_differential(spark, sf_smoke):
         assert r["contrib_micro"] == want
 
 
-def test_mannwhitney_auc_differential(spark, sf_smoke):
-    """Doubled midranks, U, and AUC recomputed exactly in Python."""
-    import os
-    from collections import Counter
-
-    import pyarrow.parquet as pq
-    from sales_azure_data_engineer_project_spark import queries_core as Q
-    from sales_azure_data_engineer_project_spark import queries_extensions  # noqa: F401 (registers)
-
-    got = {
-        r["event_type"]: r
-        for r in Q.QUERIES["events_mannwhitney_auc"](spark, sf_smoke).collect()
-    }
-    t = pq.read_table(
-        os.path.join(sf_smoke, "events.parquet"), columns=["event_type", "value"]
-    ).to_pandas()
-    v = (t["value"] * 1000).round().astype(int)
-    total = Counter(v)
-    mid2 = {}
-    cum = 0
-    for val in sorted(total):
-        m = total[val]
-        mid2[val] = 2 * cum + m + 1
-        cum += m
-    n_all = len(v)
-    for et in t["event_type"].unique():
-        sel = v[t["event_type"] == et]
-        n1 = len(sel)
-        r2 = sum(mid2[x] for x in sel)
-        u2 = r2 - n1 * (n1 + 1)
-        r = got[et]
-        assert (r["n_grp"], r["n_rest"], r["r2_sum"], r["u2"]) == (
-            n1, n_all - n1, r2, u2,
-        )
-        assert r["auc_micro"] == (1_000_000 * u2) // (2 * n1 * (n_all - n1))
-        assert 0 <= r["auc_micro"] <= 1_000_000
-
-
-def test_source_token_tvd_differential(spark, sf_smoke):
-    """TVD recomputed from full dense distributions in Python — proves
-    the vocab-restricted sum + absent-mass correction is exact."""
-    import os
-    import re
-    from collections import Counter
-
-    import pyarrow.parquet as pq
-    from sales_azure_data_engineer_project_spark import queries_core as Q
-    from sales_azure_data_engineer_project_spark import queries_extensions  # noqa: F401 (registers)
-    from sales_azure_data_engineer_project_spark.operators.text import TOKEN_RE
-
-    got = {
-        r["source"]: r
-        for r in Q.QUERIES["text_source_token_tvd"](spark, sf_smoke).collect()
-    }
-    t = pq.read_table(
-        os.path.join(sf_smoke, "documents.parquet"), columns=["source", "text"]
-    ).to_pandas()
-    per_src: dict[str, Counter] = {}
-    tot: Counter = Counter()
-    for src, text in zip(t["source"], t["text"]):
-        toks = re.split(TOKEN_RE, text)
-        per_src.setdefault(src, Counter()).update(toks)
-        tot.update(toks)
-    n = sum(tot.values())
-    assert set(got) == set(per_src)
-    for src, cs in per_src.items():
-        n_s = sum(cs.values())
-        n_r = n - n_s
-        mass = sum(
-            abs(cs.get(tok, 0) * n_r - (ct - cs.get(tok, 0)) * n_s)
-            for tok, ct in tot.items()
-        )
-        r = got[src]
-        assert (r["n_tokens"], r["n_rest"]) == (n_s, n_r)
-        assert r["tvd_micro"] == (1_000_000 * mass) // (2 * n_s * n_r)
-
-
-def test_vocab_coverage_differential(spark, sf_smoke):
-    """Coverage thresholds recomputed by brute-force frequency-sorted
-    walk over the raw token counts."""
-    import os
-    import re
-    from collections import Counter
-
-    import pyarrow.parquet as pq
-    from sales_azure_data_engineer_project_spark import queries_core as Q
-    from sales_azure_data_engineer_project_spark import queries_extensions  # noqa: F401 (registers)
-    from sales_azure_data_engineer_project_spark.operators.text import TOKEN_RE
-
-    got = {
-        r["target_permille"]: r
-        for r in Q.QUERIES["vocab_coverage_curve"](spark, sf_smoke).collect()
-    }
-    t = pq.read_table(
-        os.path.join(sf_smoke, "documents.parquet"), columns=["text"]
-    ).to_pandas()
-    tot: Counter = Counter()
-    for text in t["text"]:
-        tot.update(re.split(TOKEN_RE, text))
-    counts = sorted(tot.values(), reverse=True)
-    n_total = sum(counts)
-    for target in (500, 900, 990, 999):
-        need = -(-target * n_total // 1000)  # ceil
-        acc = k = 0
-        while acc < need:
-            acc += counts[k]
-            k += 1
-        r = got[target]
-        assert r["n_vocab"] == len(counts) and r["n_total"] == n_total
-        assert r["vocab_needed"] == k, f"target {target}: {r['vocab_needed']} != {k}"
-        assert r["vocab_share_micro"] == (1_000_000 * k) // len(counts)
-
-
-def test_cusum_changepoint_differential(spark, sf_smoke):
-    """CUSUM series recomputed exactly in Python (per-row milli
-    rounding before the integer sum — the order-independence
-    contract)."""
-    import os
-    from collections import defaultdict
-
-    import pyarrow.parquet as pq
-    from sales_azure_data_engineer_project_spark import queries_core as Q
-    from sales_azure_data_engineer_project_spark import queries_extensions  # noqa: F401 (registers)
-
-    got = {
-        r["event_type"]: r
-        for r in Q.QUERIES["events_cusum_changepoint"](spark, sf_smoke).collect()
-    }
-    t = pq.read_table(
-        os.path.join(sf_smoke, "events.parquet"),
-        columns=["event_type", "ts", "value"],
-    ).to_pandas()
-    daily: dict = defaultdict(int)
-    for et, ts, v in zip(t["event_type"], t["ts"], t["value"]):
-        daily[(et, ts.date())] += int(round(v * 1000))
-    by_type: dict = defaultdict(dict)
-    for (et, d), x in daily.items():
-        by_type[et][d] = x
-    for et, series in by_type.items():
-        days = sorted(series)
-        n, total = len(days), sum(series.values())
-        s = 0
-        best = (-1, None, None)
-        for d in days:
-            s += series[d] * n - total
-            if abs(s) > best[0]:
-                best = (abs(s), d, 1 if s > 0 else -1)
-        r = got[et]
-        assert r["n_days"] == n
-        assert r["cusum_peak_scaled"] == best[0]
-        assert r["peak_day"] == str(best[1])
-        assert r["direction"] == best[2]
-        assert r["peak_share_permille"] == (1000 * best[0]) // (n * max(total, 1))
-
-
 def test_benford_deviation_differential(spark, sf_smoke):
     import os
     from collections import Counter
@@ -1138,148 +866,6 @@ def test_mutual_knn_reciprocity_invariants(spark, sf_smoke):
         assert abs(cos - r["cos_sim"]) < 1e-5
 
 
-def test_concentration_profile_differential(spark, sf_smoke):
-    """Gini via the per-row sorted-rank formula and HHI recomputed in
-    Python — proves the grouped tie-closed-form."""
-    import math
-    import os
-    from collections import defaultdict
-
-    import pyarrow.parquet as pq
-    from sales_azure_data_engineer_project_spark import queries_core as Q
-    from sales_azure_data_engineer_project_spark import queries_extensions  # noqa: F401 (registers)
-
-    got = {
-        r["c_mktsegment"]: r
-        for r in Q.QUERIES["customer_concentration_profile"](spark, sf_smoke).collect()
-    }
-    od = pq.read_table(
-        os.path.join(sf_smoke, "orders.parquet"), columns=["o_custkey", "o_totalprice"]
-    ).to_pandas()
-    cu = pq.read_table(
-        os.path.join(sf_smoke, "customer.parquet"),
-        columns=["c_custkey", "c_mktsegment"],
-    ).to_pandas()
-    seg_of = dict(zip(cu["c_custkey"], cu["c_mktsegment"]))
-    spend: dict = defaultdict(int)
-    for ck, p in zip(od["o_custkey"], od["o_totalprice"]):
-        spend[ck] += int(round(p * 100))
-    per_seg: dict = defaultdict(list)
-    for ck, centi in spend.items():
-        per_seg[seg_of[ck]].append(centi // 100)
-    assert set(got) == set(per_seg)
-    for segn, xs in per_seg.items():
-        xs.sort()
-        n, s = len(xs), sum(xs)
-        two_sum = 2 * sum((i + 1) * x for i, x in enumerate(xs))
-        r = got[segn]
-        assert (r["n_customers"], r["total_dollars"]) == (n, s)
-        assert r["gini_milli"] == (1000 * (two_sum - (n + 1) * s)) // (n * s)
-        sumsq = sum(x * x for x in xs)
-        assert r["hhi_micro"] == math.floor(
-            (1000000.0 * float(sumsq)) / (float(s) * float(s))
-        )
-        assert 0 <= r["gini_milli"] <= 1000
-
-
-def test_maxsim_differential(spark, sf_smoke):
-    """MaxSim scores recomputed with numpy: per-query-token best
-    cosine over each candidate doc, floored to micro, summed."""
-    import math
-    import os
-
-    import numpy as np
-    import pyarrow.parquet as pq
-    from sales_azure_data_engineer_project_spark import queries_core as Q
-    from sales_azure_data_engineer_project_spark import queries_extensions  # noqa: F401 (registers)
-
-    rows = Q.QUERIES["similarity_maxsim_late_interaction"](spark, sf_smoke).collect()
-    emb = pq.read_table(os.path.join(sf_smoke, "embeddings.parquet")).to_pandas()
-    vecs = {int(i): np.asarray(v, dtype=np.float64) for i, v in zip(emb["vec_id"], emb["embedding"])}
-    docs: dict = {}
-    for i, v in vecs.items():
-        docs.setdefault(i // 8, []).append(v / np.linalg.norm(v))
-    want: dict = {}
-    for qd in (0, 1):
-        for cd, dvs in docs.items():
-            if cd < 2:
-                continue
-            score = 0
-            for qv in docs[qd]:
-                best = max(float(qv @ dv) for dv in dvs)
-                score += math.floor(best * 1_000_000)
-            want[(qd, cd)] = score
-    assert len(rows) == 10
-    for r in rows:
-        assert r["maxsim_micro"] == want[(r["query_doc"], r["cand_doc"])]
-    for qd in (0, 1):
-        qrows = sorted([r for r in rows if r["query_doc"] == qd], key=lambda r: r["rk"])
-        scores = [r["maxsim_micro"] for r in qrows]
-        assert scores == sorted(scores, reverse=True)
-        top5 = sorted(
-            [s for (q_, c_), s in want.items() if q_ == qd], reverse=True
-        )[:5]
-        assert scores == top5
-
-
-def test_rfm_segments_differential(spark, sf_smoke):
-    """Per-customer R/F/M and competition-rank quintiles recomputed in
-    Python; segment grid must match cell-for-cell."""
-    import os
-    from collections import defaultdict
-
-    import pyarrow.parquet as pq
-    from sales_azure_data_engineer_project_spark import queries_core as Q
-    from sales_azure_data_engineer_project_spark import queries_extensions  # noqa: F401 (registers)
-
-    got = {
-        (r["r_score"], r["f_score"], r["m_score"]): r
-        for r in Q.QUERIES["customers_rfm_segments"](spark, sf_smoke).collect()
-    }
-    t = pq.read_table(
-        os.path.join(sf_smoke, "orders.parquet"),
-        columns=["o_custkey", "o_orderdate", "o_totalprice"],
-    ).to_pandas()
-    days = t["o_orderdate"].dt.normalize()
-    mxd = days.max()
-    per: dict = defaultdict(lambda: [None, 0, 0])
-    for ck, d, p in zip(t["o_custkey"], days, t["o_totalprice"]):
-        e = per[ck]
-        gap = (mxd - d).days
-        e[0] = gap if e[0] is None else min(e[0], gap)
-        e[1] += 1
-        e[2] += int(round(p * 100))
-    rows = [(-gap, f, centi // 100) for gap, f, centi in per.values()]
-    n = len(rows)
-
-    def quint(vals):
-        order = sorted(set(vals))
-        cum = 0
-        score = {}
-        from collections import Counter
-
-        cnt = Counter(vals)
-        for v in order:
-            score[v] = 1 + (5 * cum) // n
-            cum += cnt[v]
-        return score
-
-    sr = quint([r[0] for r in rows])
-    sf_ = quint([r[1] for r in rows])
-    sm = quint([r[2] for r in rows])
-    want: dict = defaultdict(lambda: [0, 0, 0])
-    for rneg, f, m in rows:
-        key = (sr[rneg], sf_[f], sm[m])
-        w = want[key]
-        w[0] += 1
-        w[1] += f
-        w[2] += m
-    assert set(got) == set(want)
-    for key, (nc, no, td) in want.items():
-        r = got[key]
-        assert (r["n_customers"], r["n_orders"], r["total_dollars"]) == (nc, no, td)
-
-
 def test_apportionment_sums_to_budget(spark, sf_smoke):
     """Hamilton allocations must sum EXACTLY to the budget, respect
     floor quotas, and match a Python recompute."""
@@ -1341,33 +927,6 @@ def test_registered_capped_lsh_star_shape(spark):
     ]
     # cold (odd-id) docs still deduplicate via exact all-pairs
     assert all(r["id_a"] < r["id_b"] for r in rows)
-
-
-def test_incremental_manifest_accounts_for_every_doc(spark):
-    """pipeline_incremental_manifest totals must reconcile exactly with
-    the planted edit rates: removed = multiples of 31, added = multiples
-    of 41, changed = multiples of 13 that survive removal."""
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    rows = m.queries()["pipeline_incremental_manifest"](spark, sf).collect()
-    by_status: dict = {}
-    for r in rows:
-        by_status[r["status"]] = by_status.get(r["status"], 0) + r["n_docs"]
-    n, n31, n41, n13s = duckdb.sql(f"""
-        SELECT COUNT(*),
-               SUM(CASE WHEN doc_id % 31 = 0 THEN 1 ELSE 0 END),
-               SUM(CASE WHEN doc_id % 41 = 0 THEN 1 ELSE 0 END),
-               SUM(CASE WHEN doc_id % 13 = 0 AND doc_id % 31 != 0 THEN 1 ELSE 0 END)
-        FROM '{sf}/documents.parquet'
-    """).fetchone()
-    assert by_status.get("removed", 0) == n31
-    assert by_status.get("added", 0) == n41
-    assert by_status.get("changed", 0) == n13s
-    assert by_status.get("unchanged", 0) == n - n31 - n13s
-    assert sum(by_status.values()) == n + n41
 
 
 def test_simpson_diversity_differential(spark):
@@ -1457,50 +1016,6 @@ def test_oov_rate_differential(spark):
         assert r["oov_permille"] == (1000 * oov) // n
 
 
-def test_source_length_emd_differential(spark):
-    """text_source_length_emd vs a plain-Python EMD over the same
-    32-bucket histograms, plus metric properties (symmetry is implicit
-    in the a<b output; identity EMD(x,x)=0 checked by construction)."""
-    import re as _re
-
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    got = {
-        (r["source_a"], r["source_b"]): r
-        for r in m.queries()["text_source_length_emd"](spark, sf).collect()
-    }
-    rows = duckdb.sql(f"SELECT source, text FROM '{sf}/documents.parquet'").fetchall()
-    lens: dict = {}
-    for source, text in rows:
-        lens.setdefault(source, []).append(len(_re.split(r"\s+", text)))
-    mn = min(v for vs in lens.values() for v in vs)
-    mx = max(v for vs in lens.values() for v in vs)
-    hist = {
-        s: [0] * 32 for s in lens
-    }
-    for s, vs in lens.items():
-        for v in vs:
-            hist[s][min(32 * (v - mn) // (mx - mn + 1), 31)] += 1
-    for (sa, sb), r in got.items():
-        na, nb = sum(hist[sa]), sum(hist[sb])
-        ca = cb = numer = 0
-        for b in range(32):
-            ca += hist[sa][b]
-            cb += hist[sb][b]
-            numer += abs(ca * nb - cb * na)
-        assert (r["n_a"], r["n_b"]) == (na, nb)
-        assert r["emd_micro_buckets"] == (1000000 * numer) // (na * nb)
-    # completeness: all unordered source pairs present exactly once
-    import itertools
-
-    assert set(got) == {
-        (a, b) for a, b in itertools.combinations(sorted(lens), 2)
-    }
-
-
 def test_touch_attribution_differential(spark):
     """events_touch_attribution vs a plain-Python session walk on a
     hand-built frame covering: purchase opening a session ('direct'),
@@ -1540,211 +1055,6 @@ def test_touch_attribution_differential(spark):
         "error": (1, 3000, 1, 3000),
         "view": (2, 15000, 0, 0),
     }
-
-
-def test_audience_overlap_jaccard_differential(spark):
-    """events_audience_overlap_jaccard vs brute-force Python sets on
-    the real sf0.001 events: the bitmask-inventory shape must produce
-    the EXACT per-pair |A|, |B|, |A∩B|, |A∪B| that materializing the
-    user sets gives, for every type pair, plus the permille contract."""
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    rows = duckdb.sql(
-        f"SELECT DISTINCT event_type, user_id FROM '{sf}/events.parquet'"
-    ).fetchall()
-    sets: dict = {}
-    for ty, u in rows:
-        sets.setdefault(ty, set()).add(u)
-    types = sorted(sets)
-    got = {
-        (r["type_a"], r["type_b"]): r
-        for r in m.queries()["events_audience_overlap_jaccard"](spark, sf).collect()
-    }
-    expected_pairs = {
-        (a, b) for i, a in enumerate(types) for b in types[i + 1 :]
-    }
-    assert set(got) == expected_pairs
-    for (a, b), r in got.items():
-        inter = len(sets[a] & sets[b])
-        union = len(sets[a] | sets[b])
-        assert r["n_users_a"] == len(sets[a])
-        assert r["n_users_b"] == len(sets[b])
-        assert r["n_intersection"] == inter
-        assert r["n_union"] == union
-        assert r["jaccard_permille"] == (1000 * inter) // union
-
-
-def test_autocorr_daily_differential(spark):
-    """events_autocorr_daily vs a plain-Python replication of the
-    integer permille-normalized estimator on the real sf0.001 events,
-    plus a float sanity bound vs the classic biased ACF on the same
-    daily series (tolerance covers the 1e-6 integer-rounding steps)."""
-    import datetime as dt
-
-    import duckdb
-    import numpy as np
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    rows = duckdb.sql(
-        f"SELECT event_type, CAST(ts AS DATE), COUNT(*) FROM '{sf}/events.parquet' GROUP BY 1, 2"
-    ).fetchall()
-    anchor = dt.date(2024, 1, 1)
-    per: dict = {}
-    for ty, d, c in rows:
-        per.setdefault(ty, {})[(d - anchor).days] = int(c)
-    got = {
-        (r["event_type"], r["lag"]): r
-        for r in m.queries()["events_autocorr_daily"](spark, sf).collect()
-    }
-    assert set(got) == {(ty, k) for ty in per for k in (1, 7)}
-    for ty, days in per.items():
-        s = sum(days.values())
-        pm = {x: (1000000 * c) // s for x, c in days.items()}
-        mu = sum(pm.values()) // len(pm)
-        cv = {x: v - mu for x, v in pm.items()}
-        d2 = sum(v * v for v in cv.values())
-        for k in (1, 7):
-            pairs = [(cv[x], cv[x + k]) for x in cv if x + k in cv]
-            nm = sum(a * b for a, b in pairs)
-            q = abs(1000000 * nm) // d2
-            expect = -q if nm < 0 else q
-            r = got[(ty, k)]
-            assert r["n_days"] == len(days)
-            assert r["n_pairs"] == len(pairs)
-            assert r["acf_micro"] == expect
-            # float sanity: same estimator in numpy over the same series
-            xs = sorted(cv)
-            v = np.array([cv[x] for x in xs], dtype=float)
-            num_f = sum(
-                cv[x] * cv[x + k] for x in cv if x + k in cv
-            )
-            assert abs(r["acf_micro"] - 1e6 * num_f / float(d2)) <= 1.0
-
-
-def test_spearman_daily_differential(spark):
-    """stats_spearman_daily vs plain-Python classical Spearman with
-    average ranks (scipy semantics) on the real sf0.001 events: the
-    doubled-integer-rank formulation must agree with the float
-    average-rank computation to within the 1e-6 floor step."""
-    import math
-
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    rows = duckdb.sql(
-        f"""SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS cnt,
-                   SUM(CAST(round(value*1000) AS BIGINT)) // COUNT(*) AS ybar
-            FROM '{sf}/events.parquet' GROUP BY 1, 2"""
-    ).fetchall()
-    per: dict = {}
-    for ty, _, cnt, ybar in rows:
-        per.setdefault(ty, []).append((int(cnt), int(ybar)))
-    got = {
-        r["event_type"]: r
-        for r in m.queries()["stats_spearman_daily"](spark, sf).collect()
-    }
-    assert set(got) == set(per)
-
-    def avg_ranks(vals):
-        order = sorted(range(len(vals)), key=lambda i: vals[i])
-        ranks = [0.0] * len(vals)
-        i = 0
-        while i < len(order):
-            j = i
-            while j + 1 < len(order) and vals[order[j + 1]] == vals[order[i]]:
-                j += 1
-            r = (i + j) / 2.0 + 1.0
-            for k in range(i, j + 1):
-                ranks[order[k]] = r
-            i = j + 1
-        return ranks
-
-    for ty, pts in per.items():
-        ra = avg_ranks([p[0] for p in pts])
-        rb = avg_ranks([p[1] for p in pts])
-        n = len(pts)
-        ma = sum(ra) / n
-        mb = sum(rb) / n
-        num = sum((a - ma) * (b - mb) for a, b in zip(ra, rb))
-        da = sum((a - ma) ** 2 for a in ra)
-        db = sum((b - mb) ** 2 for b in rb)
-        rho = num / math.sqrt(da * db)
-        assert got[ty]["n_days"] == n
-        assert abs(got[ty]["rho_micro"] - 1e6 * rho) <= 2.0
-
-
-def test_theil_sen_differential(spark):
-    """stats_theil_sen_trend vs plain-Python positional median of the
-    exact pairwise slope list on the real sf0.001 events."""
-    import math
-
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    rows = duckdb.sql(
-        f"""SELECT event_type,
-                   datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS x,
-                   SUM(CAST(round(value*1000) AS BIGINT)) // COUNT(*) AS ybar
-            FROM '{sf}/events.parquet' GROUP BY 1, 2"""
-    ).fetchall()
-    per: dict = {}
-    for ty, x, ybar in rows:
-        per.setdefault(ty, {})[int(x)] = int(ybar)
-    got = {
-        r["event_type"]: r
-        for r in m.queries()["stats_theil_sen_trend"](spark, sf).collect()
-    }
-    for ty, days in per.items():
-        xs = sorted(days)
-        slopes = []
-        for i, x1 in enumerate(xs):
-            for x2 in xs[i + 1 :]:
-                s = int(math.floor(1e6 * (days[x2] - days[x1]) / float(x2 - x1)))
-                slopes.append((s, x1, x2))
-        slopes.sort()
-        n_pairs = len(slopes)
-        med = slopes[(n_pairs + 1) // 2 - 1][0]
-        r = got[ty]
-        assert r["n_days"] == len(xs)
-        assert r["n_pairs"] == n_pairs
-        assert r["median_slope_micro"] == med
-
-
-def test_interarrival_quantiles_differential(spark):
-    """events_interarrival_quantiles vs plain-Python sorted-gap
-    percentile_disc (smallest value at cumulative rank ⌈p·n/100⌉) on
-    the real sf0.001 events."""
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    rows = duckdb.sql(
-        f"SELECT user_id, event_id, epoch_ms(ts) FROM '{sf}/events.parquet'"
-    ).fetchall()
-    per_user: dict = {}
-    for u, eid, ems in rows:
-        per_user.setdefault(u, []).append((int(ems), int(eid)))
-    gaps = []
-    for seq in per_user.values():
-        seq.sort()
-        gaps.extend(seq[i + 1][0] - seq[i][0] for i in range(len(seq) - 1))
-    gaps.sort()
-    n = len(gaps)
-    [r] = m.queries()["events_interarrival_quantiles"](spark, sf).collect()
-    assert r["n_gaps"] == n
-    for p in (50, 90, 99):
-        rank = (p * n + 99) // 100
-        assert r[f"p{p}_ms"] == gaps[rank - 1]
 
 
 def test_kcore_peeling_differential(spark):
@@ -1827,38 +1137,6 @@ def test_heaps_growth_differential(spark):
     # sf0.001 generator vocab saturates in decile 0 — 31 tokens — so
     # strict growth only appears at larger SFs)
     assert vocab_at[9] >= vocab_at[0] > 0
-
-
-def test_tukey_fences_differential(spark):
-    """quality_tukey_fences_by_source vs plain-Python per-source
-    quartiles (percentile_disc at ⌈p·n/100⌉) and fence counts."""
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    rows = duckdb.sql(
-        f"SELECT source, n_chars FROM '{sf}/documents.parquet'"
-    ).fetchall()
-    per: dict = {}
-    for s, nc in rows:
-        per.setdefault(s, []).append(int(nc))
-    got = {
-        r["source"]: r
-        for r in m.queries()["quality_tukey_fences_by_source"](spark, sf).collect()
-    }
-    assert set(got) == set(per)
-    for s, lens in per.items():
-        lens.sort()
-        n = len(lens)
-        q1 = lens[(25 * n + 99) // 100 - 1]
-        q3 = lens[(75 * n + 99) // 100 - 1]
-        iqr = q3 - q1
-        n_low = sum(1 for v in lens if 2 * v < 2 * q1 - 3 * iqr)
-        n_high = sum(1 for v in lens if 2 * v > 2 * q3 + 3 * iqr)
-        r = got[s]
-        assert (r["q1"], r["q3"], r["n_docs"]) == (q1, q3, n)
-        assert (r["n_low"], r["n_high"]) == (n_low, n_high)
 
 
 def test_journey_trigrams_differential(spark):
@@ -1953,51 +1231,6 @@ def test_dau_wau_differential(spark):
         assert r["dau"] == len(users)
         assert r["wau"] == len(wau_set)
         assert r["stickiness_permille"] == (1000 * len(users)) // len(wau_set)
-
-
-def test_split_leakage_matrix_differential(spark):
-    """pipeline_split_leakage_check vs a Python split-tagging of the
-    SAME candidate pairs (extracted via the shared LSH operators):
-    matrix cells must match and the planted copies must produce
-    at least one cross-split (is_leak) cell."""
-    import hashlib
-    from collections import Counter
-
-    import __spark_entry__ as m
-    from sales_azure_data_engineer_project_spark.operators import dedup as D
-    from sales_azure_data_engineer_project_spark.queries_extensions import (
-        _dedup_corpus,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    corpus = _dedup_corpus(spark, sf)
-    bands = D.minhash_bands(corpus, "doc_id", "text", n_hashes=8, band_size=4)
-    pairs = [
-        (r["id_a"], r["id_b"], r["shared_bands"])
-        for r in D.lsh_candidate_pairs(bands, "doc_id").collect()
-    ]
-
-    def split_of(doc_id: int) -> str:
-        hv = int(hashlib.md5(f"split:{doc_id}".encode()).hexdigest()[:4], 16)
-        return "train" if hv < 58982 else ("val" if hv < 62258 else "test")
-
-    cells: Counter = Counter()
-    strong: Counter = Counter()
-    for ia, ib, sb_ in pairs:
-        key = tuple(sorted((split_of(ia), split_of(ib))))
-        cells[key] += 1
-        if sb_ == 2:
-            strong[key] += 1
-    got = {
-        (r["split_a"], r["split_b"]): r
-        for r in m.queries()["pipeline_split_leakage_check"](spark, sf).collect()
-    }
-    assert set(got) == set(cells)
-    for key, r in got.items():
-        assert r["n_candidate_pairs"] == cells[key]
-        assert r["n_strong"] == strong[key]
-        assert r["is_leak"] == (key[0] != key[1])
-    assert any(r["is_leak"] for r in got.values()), "planted copies must leak"
 
 
 def test_ship_latency_quantiles_differential(spark):
@@ -2292,33 +1525,6 @@ def test_token_savings_differential(spark):
         1000 * sum(toks[d] for d in removed)
     ) // sum(toks.values())
     assert r["tokens_removed"] > 0, "planted copies must yield savings"
-
-
-def test_time_to_convert_differential(spark):
-    """events_time_to_convert_quantiles vs plain-Python first-view /
-    first-purchase-after walk + percentile_disc."""
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    rows = duckdb.sql(
-        f"SELECT user_id, event_type, epoch_ms(ts) FROM '{sf}/events.parquet'"
-    ).fetchall()
-    fv: dict = {}
-    for u, ty, ems in rows:
-        if ty == "view":
-            fv[u] = min(fv.get(u, ems), ems)
-    fp: dict = {}
-    for u, ty, ems in rows:
-        if ty == "purchase" and u in fv and ems >= fv[u]:
-            fp[u] = min(fp.get(u, ems), ems)
-    gaps = sorted((fp[u] - fv[u]) // 60000 for u in fp)
-    n = len(gaps)
-    [r] = m.queries()["events_time_to_convert_quantiles"](spark, sf).collect()
-    assert r["n_converters"] == n
-    for p in (50, 90, 99):
-        assert r[f"p{p}_min"] == gaps[(p * n + 99) // 100 - 1]
 
 
 def test_new_vs_returning_differential(spark):

@@ -76,8 +76,9 @@ def test_merge_upsert_duplicate_source_raises(spark):
 
 def test_scd1_dimension_initial_and_incremental(spark):
     spec = DimensionSpec("dim_x", "dim_x_key", "nk", ("attr",))
+    empty = spark.createDataFrame([], "dim_x_key long, nk string, attr string")
     s1 = spark.createDataFrame([("b", "B"), ("a", "A")], ["nk", "attr"])
-    d1 = build_scd1_dimension(s1, None, spec)
+    d1 = build_scd1_dimension(s1, empty, spec)
     got1 = {r["nk"]: (r["dim_x_key"], r["attr"]) for r in d1.collect()}
     assert got1 == {"a": (1, "A"), "b": (2, "B")}
 
@@ -88,7 +89,6 @@ def test_scd1_dimension_initial_and_incremental(spark):
     assert got2 == {"a": (1, "A2"), "b": (2, "B"), "c": (3, "C")}
 
     # a committed but empty sink takes the incremental path: keys from 1
-    empty = spark.createDataFrame([], "dim_x_key long, nk string, attr string")
     d3 = build_scd1_dimension(s2, empty, spec)
     got3 = {r["nk"]: (r["dim_x_key"], r["attr"]) for r in d3.collect()}
     assert got3 == {"a": (1, "A2"), "c": (2, "C")}
@@ -96,7 +96,7 @@ def test_scd1_dimension_initial_and_incremental(spark):
     # a sink holding two keys for one natural key (initial-load variants)
     # and a batch with one variant: both keys stay, both take its attr
     s4 = spark.createDataFrame([("v", "V1"), ("v", "V2")], ["nk", "attr"])
-    d4 = build_scd1_dimension(s4, None, spec)
+    d4 = build_scd1_dimension(s4, empty, spec)
     s5 = spark.createDataFrame([("v", "V3")], ["nk", "attr"])
     d5 = build_scd1_dimension(s5, d4, spec)
     got5 = sorted((r["dim_x_key"], r["nk"], r["attr"]) for r in d5.collect())
@@ -114,7 +114,8 @@ def test_incremental_dimension_and_gold_read_start_no_job(spark, tmp_path):
     spec = DimensionSpec("dim_x", "dim_x_key", "nk", ("attr",))
     table = VersionedTable(spark, str(tmp_path / "dim_x"))
     s1 = spark.createDataFrame([("b", "B"), ("a", "A")], ["nk", "attr"])
-    table.overwrite(build_scd1_dimension(s1, None, spec))
+    empty = spark.createDataFrame([], "dim_x_key long, nk string, attr string")
+    table.overwrite(build_scd1_dimension(s1, empty, spec))
     s2 = spark.createDataFrame([("a", "A2"), ("c", "C")], ["nk", "attr"])
 
     dim, jobs = count_jobs(spark, lambda: build_scd1_dimension(s2, table.read(), spec))
@@ -126,7 +127,7 @@ def test_incremental_dimension_and_gold_read_start_no_job(spark, tmp_path):
 def test_scd1_dimension_keys_dense_unique(spark):
     spec = DimensionSpec("d", "key", "nk", ())
     src = spark.createDataFrame([(f"k{i:03d}",) for i in range(57)], ["nk"]).repartition(8)
-    dim = build_scd1_dimension(src, None, spec)
+    dim = build_scd1_dimension(src, spark.createDataFrame([], "key long, nk string"), spec)
     keys = sorted(r["key"] for r in dim.collect())
     assert keys == list(range(1, 58))
 

@@ -85,10 +85,6 @@ KEEP_UNREACHABLE = {
     "streaming/incremental.py:stream_incremental_merge": (
         "the foreachBatch MERGE stream whose fate ROADMAP item 9 decides"
     ),
-    "operators/scd2.py:build_scd2_dimension": (
-        "the write side of the registered events_scd2_user_history and the "
-        "second user of assign_surrogate_keys"
-    ),
 }
 
 

@@ -39,33 +39,22 @@ PROTECTED = {
 # here that is no longer registered fails the family test.
 PINNED = {
     "crossmodal_coverage_report", "cube_revenue_by_flag_status",
-    "customer_concentration_profile", "customers_rfm_segments",
     "dedup_cross_source_matrix", "dedup_graph_kcore",
     "dedup_lsh_hot_bucket_capped", "dedup_minhash_lsh", "dedup_simhash",
     "dedup_simhash_hamming", "dedup_token_savings_report",
-    "embedding_outliers_topk", "events_audience_overlap_jaccard",
-    "events_autocorr_daily", "events_cusum_changepoint",
-    "events_dau_wau_stickiness", "events_hour_weekday_heatmap",
-    "events_interarrival_quantiles", "events_journey_trigrams",
-    "events_mannwhitney_auc", "events_new_vs_returning_daily",
-    "events_time_to_convert_quantiles", "events_type_mix_drift_weekly",
+    "embedding_outliers_topk", "events_dau_wau_stickiness",
+    "events_hour_weekday_heatmap", "events_journey_trigrams",
+    "events_new_vs_returning_daily", "events_type_mix_drift_weekly",
     "events_user_lifetime_stats", "interval_overlap_sweep",
     "orders_benford_deviation", "orders_daily_revenue_7d_ma",
     "orders_repeat_purchase_intervals", "parts_pareto_frontier",
-    "pipeline_curriculum_order", "pipeline_decontaminate",
-    "pipeline_incremental_manifest", "pipeline_pack_sequences",
-    "pipeline_skew_report", "pipeline_split_leakage_check",
-    "pipeline_unimax_language_budget", "quality_adaptive_thresholds",
-    "quality_knn_label_noise", "quality_metadata_consistency",
-    "quality_simpson_diversity", "quality_tukey_fences_by_source",
+    "pipeline_decontaminate", "pipeline_pack_sequences",
+    "pipeline_skew_report", "pipeline_unimax_language_budget",
+    "quality_metadata_consistency", "quality_simpson_diversity",
     "quantile_sketch_bottomk", "sample_balanced_class_downsample",
-    "sample_coreset_kcenter", "sample_priority_topk",
-    "sample_soft_dedup_weights", "similarity_ann_sq8",
-    "similarity_maxsim_late_interaction", "skew_salted_aggregation",
-    "stats_chi2_independence", "stats_spearman_daily", "stats_theil_sen_trend",
-    "text_bm25_topk", "text_boilerplate_chunks", "text_exact_substring_dedup",
-    "text_quality_stats", "text_source_length_emd", "text_source_token_tvd",
-    "text_token_counts", "vocab_coverage_curve",
+    "sample_priority_topk", "sample_soft_dedup_weights", "similarity_ann_sq8",
+    "skew_salted_aggregation", "stats_chi2_independence", "text_bm25_topk",
+    "text_boilerplate_chunks", "text_quality_stats", "text_token_counts",
     "vocab_good_turing_unseen_mass", "vocab_heaps_growth",
     "vocab_oov_rate_by_source",
 }
@@ -152,3 +141,41 @@ def test_each_extension_query_is_protected_or_alone_in_its_family():
         "or keep one per family):\n"
         + "\n".join(f"{n} {fam}: also {tw}" for n, (fam, tw) in sorted(shared.items()))
     )
+
+
+def _test_names(stem: str) -> set[str]:
+    """The ``test_*`` functions defined in ``tests/<stem>.py``, read from
+    its AST."""
+    path = REPO / "tests" / f"{stem}.py"
+    if not path.is_file():
+        return set()
+    return {
+        node.name
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.FunctionDef) and node.name.startswith("test_")
+    }
+
+
+def test_coverage_pinned_table_matches_pinned():
+    """``COVERAGE.md``'s table of pinned queries lists exactly ``PINNED``,
+    and every ``file::test`` it names is a test in ``tests/``, so the
+    table cannot drift as later cuts shrink the set."""
+    lines = (REPO / "COVERAGE.md").read_text().splitlines()
+    start = lines.index("## Extension queries pinned by their own tests")
+    rows = []
+    for line in lines[start + 1:]:
+        if line.startswith("## "):
+            break
+        if line.startswith("| `"):
+            query, tests = (c.strip() for c in line.strip("|").split("|"))
+            rows.append((query.strip("`"), [t.strip(" `") for t in tests.split(",")]))
+    listed = [q for q, _ in rows]
+    assert len(listed) == len(set(listed)) and set(listed) == PINNED, (
+        f"not in PINNED {sorted(set(listed) - PINNED)}, "
+        f"missing from COVERAGE.md {sorted(PINNED - set(listed))}"
+    )
+    missing = [
+        t for _, tests in rows for t in tests
+        if t.split("::")[1] not in _test_names(t.split("::")[0])
+    ]
+    assert not missing, f"COVERAGE.md names tests that do not exist: {missing}"

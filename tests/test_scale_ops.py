@@ -5,8 +5,6 @@ from __future__ import annotations
 
 import math
 
-import pytest
-from conftest import count_jobs
 from pyspark.sql import functions as F
 
 from sales_azure_data_engineer_project_spark.operators.asof import asof_join
@@ -69,83 +67,6 @@ def test_connected_components(spark):
     )
     got = {r["id"]: r["component"] for r in connected_components(nodes, edges).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 7}
-
-
-def test_scd2_dimension_lifecycle(spark):
-    from sales_azure_data_engineer_project_spark.operators.dimensions import (
-        DimensionSpec,
-    )
-    from sales_azure_data_engineer_project_spark.operators.scd2 import (
-        build_scd2_dimension,
-    )
-
-    spec = DimensionSpec("d", "key", "nk", ("attr",))
-    b1 = spark.createDataFrame([("a", "A1"), ("b", "B1")], ["nk", "attr"])
-    # a pure plan builder: neither the initial nor an incremental build
-    # starts a Spark job
-    d1, jobs = count_jobs(
-        spark, lambda: build_scd2_dimension(b1, None, spec, batch_ts="2024-01-01")
-    )
-    assert jobs == 0
-    rows1 = {(r["nk"], r["attr"]): r for r in d1.collect()}
-    assert len(rows1) == 2 and all(r["is_current"] for r in rows1.values())
-
-    # batch 2: a changes (close+open), b unchanged, c new
-    b2 = spark.createDataFrame([("a", "A2"), ("b", "B1"), ("c", "C1")], ["nk", "attr"])
-    d2, jobs = count_jobs(
-        spark, lambda: build_scd2_dimension(b2, d1, spec, batch_ts="2024-02-01")
-    )
-    assert jobs == 0
-    rows = d2.collect()
-    by = {(r["nk"], r["attr"]): r for r in rows}
-    assert len(rows) == 4  # a:2 versions, b:1, c:1
-
-    closed_a = by[("a", "A1")]
-    assert not closed_a["is_current"] and closed_a["valid_to"] == "2024-02-01"
-    open_a = by[("a", "A2")]
-    assert open_a["is_current"] and open_a["valid_from"] == "2024-02-01"
-    assert open_a["key"] != closed_a["key"]  # new version = new surrogate
-    assert by[("b", "B1")]["is_current"] and by[("b", "B1")]["valid_from"] == "2024-01-01"
-    assert by[("c", "C1")]["is_current"]
-
-    # keys unique & dense across all versions
-    keys = sorted(r["key"] for r in rows)
-    assert keys == list(range(1, 5))
-
-    # batch 3: a vanishes from source → stays current (no delete)
-    b3 = spark.createDataFrame([("b", "B1")], ["nk", "attr"])
-    d3 = build_scd2_dimension(b3, d2, spec, batch_ts="2024-03-01")
-    cur = {r["nk"]: r["attr"] for r in d3.filter("is_current").collect()}
-    assert cur == {"a": "A2", "b": "B1", "c": "C1"}
-
-
-def test_scd2_rejects_two_variants_of_one_key(spark):
-    """A batch with two attribute variants of one current natural key
-    would close that row twice and open two current versions; the
-    build must raise when the plan runs instead.  NULL natural keys
-    never match, so two of them are not a violation."""
-    from sales_azure_data_engineer_project_spark.operators.dimensions import (
-        DimensionSpec,
-    )
-    from sales_azure_data_engineer_project_spark.operators.scd2 import (
-        build_scd2_dimension,
-    )
-
-    spec = DimensionSpec("d", "key", "nk", ("attr",))
-    b1 = spark.createDataFrame([("a", "A1"), ("b", "B1")], ["nk", "attr"])
-    d1 = build_scd2_dimension(b1, None, spec, batch_ts="2024-01-01")
-    b2 = spark.createDataFrame([("a", "A2"), ("b", "B1"), ("c", "C1")], ["nk", "attr"])
-    sink = build_scd2_dimension(b2, d1, spec, batch_ts="2024-02-01")
-    assert [r["key"] for r in sink.filter("nk = 'a' AND is_current").collect()] == [3]
-
-    bad = spark.createDataFrame([("a", "A3"), ("a", "A4")], ["nk", "attr"])
-    out = build_scd2_dimension(bad, sink, spec, batch_ts="2024-03-01")
-    with pytest.raises(Exception, match="two rows for one natural key"):
-        out.collect()
-
-    nulls = spark.createDataFrame([(None, "N1"), (None, "N2")], "nk string, attr string")
-    out = build_scd2_dimension(nulls, sink, spec, batch_ts="2024-03-01").collect()
-    assert sum(r["nk"] is None and r["is_current"] for r in out) == 2
 
 
 def test_merge_schema_evolution(spark):
@@ -443,11 +364,6 @@ def test_no_cartesian_or_python_udf_in_any_registered_plan(spark):
                                  # onto the 256-bucket weight table
         "ann_recall_pq",  # 10-row truth query set broadcast != join
                           # + the PQ ADC LUT broadcast
-        "pipeline_curriculum_order",  # 1-row quartile-cutoffs aggregate
-                                      # (3 integers) broadcast onto docs
-        "quality_knn_label_noise",  # bounded 50-probe broadcast ×
-                                    # corpus != join (calibration-gate
-                                    # contract, as the ann_recall family)
         "embedding_outliers_topk",  # shared _sq8_kmeans_cells 1-row
                                     # sq8 stats broadcast (as
                                     # embedding_cluster_quality)
@@ -459,42 +375,18 @@ def test_no_cartesian_or_python_udf_in_any_registered_plan(spark):
                                  # 1-row stats broadcast + the bounded
                                  # 8-query cosine broadcast != join;
                                  # fusion itself is an equi-join
-        "sample_coreset_kcenter",  # 1-row center picks broadcast into
-                                   # each min-update round + the shared
-                                   # sq8 1-row stats broadcast
         "stats_chi2_independence",  # 1-row grand-total broadcast onto
                                     # the bounded category-cell relation
-        "events_mannwhitney_auc",  # 1-row corpus-total broadcast onto
-                                   # the bounded per-type rank sums
-        "text_source_token_tvd",  # 1-row token-total broadcast onto
-                                  # the source-margin relation
-        "vocab_coverage_curve",  # 4-row target grid range-joined into
-                                 # the bounded count-of-counts relation
-                                 # (both BNLJ sides constant-size)
         "orders_benford_deviation",  # 1-row total broadcast onto the
                                      # 9-digit cell relation
         "similarity_mutual_knn_pairs",  # shared _sq8_kmeans_cells 1-row
                                         # sq8 stats broadcast (as
                                         # dedup_semantic_semdedup)
-        "similarity_maxsim_late_interaction",  # bounded 16-row query
-                                               # token set broadcast ×
-                                               # candidate tokens (the
-                                               # ann-recall contract)
-        "customers_rfm_segments",  # 1-row max-date broadcast into the
-                                   # per-customer rollup
         "pipeline_token_budget_apportion",  # 1-row total + 1-row
                                             # shortfall broadcast onto
                                             # the |sources| relation
         "pipeline_skew_report",  # 1-row totals broadcast onto the
                                  # count-of-counts grid
-        "text_source_length_emd",  # 1-row min/max broadcast for
-                                   # bucketing + 32-row bucket-grid
-                                   # broadcast onto |sources|
-        "events_audience_overlap_jaccard",  # ≤2^|types| mask inventory
-                                            # (groupBy output) × |types|²
-                                            # pair grid — both bounded
-        "events_interarrival_quantiles",  # 1-row gap-total broadcast
-                                          # onto the distinct-gap ECDF
         "vocab_heaps_growth",  # 1-row max-doc-id broadcast onto the
                                # first-occurrence and doc relations
         "sample_balanced_class_downsample",  # 1-row global min-class-
@@ -505,48 +397,25 @@ def test_no_cartesian_or_python_udf_in_any_registered_plan(spark):
                                      # length grid / corpus rows
         "events_type_mix_drift_weekly",  # 1-row grand-total broadcast
                                          # onto the |weeks|·|types| grid
-        "events_time_to_convert_quantiles",  # 1-row converter-total
-                                             # broadcast onto the gap
-                                             # ECDF (as interarrival)
     }
     # Unpartitioned windows: every entry must name the BOUNDED relation
     # the global window runs over (always an aggregate output, never the
     # raw corpus) — the 100 TB justification for a single-task sort.
     global_window_ok = {
-        "events_mannwhitney_auc",  # prefixsum.bucketed_cumsum level 2:
-                                   # cumsum over |buckets| bucket TOTALS
-                                   # (an aggregate), not over rows
-        "customers_rfm_segments",  # 3× the same bucketed_cumsum level-2
-                                   # shape (R/F/M quintile cutpoints)
-        "vocab_coverage_curve",  # cumsum over the count-of-counts
-                                 # relation (bounded by distinct token
-                                 # frequencies, ≪ vocab ≪ corpus)
         "pipeline_token_budget_apportion",  # row_number over the
                                             # |sources| relation (5 rows;
                                             # largest-remainder ranking)
-        "pipeline_curriculum_order",  # cumsum over the per-difficulty
-                                      # count grid (groupBy output,
-                                      # bounded by |distinct scores|)
         "pipeline_unimax_language_budget",  # water-fill rank over the
                                             # per-language inventory
                                             # (groupBy(lang) output)
         "pipeline_skew_report",  # cumsum over the count-of-counts
                                  # grid (bounded by |distinct key
                                  # frequencies| — groupBy output)
-        "events_audience_overlap_jaccard",  # dense_rank over the
-                                            # DISTINCT event-type
-                                            # relation (≤|types| rows)
-        "events_interarrival_quantiles",  # bucketed_cumsum level 2:
-                                          # cumsum over ≤ span/10⁷ ms
-                                          # bucket TOTALS (aggregate)
         "vocab_heaps_growth",  # cumsum over the 10-row decile grid
                                # (groupBy output)
         "dedup_removal_bias_audit",  # bucketed_cumsum level 2: cumsum
                                      # over length-domain bucket
                                      # TOTALS (aggregate)
-        "events_time_to_convert_quantiles",  # bucketed_cumsum level 2:
-                                             # cumsum over ≤ span/day
-                                             # bucket TOTALS (aggregate)
     }
     registered = m.queries()
     unregistered = (bnlj_ok | global_window_ok) - set(registered)

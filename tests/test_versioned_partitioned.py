@@ -138,7 +138,7 @@ def test_read_raises_when_the_current_version_dir_is_gone(spark, tmp_path):
     pt = VersionedTable(spark, str(tmp_path / "p"), partition_by=("p",))
     pt.merge(spark.createDataFrame([(1, "a"), (2, "b")], "k long, p string"), ["k", "p"])
     pt.merge(spark.createDataFrame([(3, "b")], "k long, p string"), ["k", "p"])
-    assert pt.vacuum(keep_last=1) == [1]
+    assert pt.vacuum(keep_last=1) == [0, 1]
     assert sorted(r["k"] for r in pt.read().collect()) == [1, 2, 3]
     v = pt.compact()
     assert sorted(n for n in os.listdir(pt._vdir(v)) if "=" in n) == ["p=a", "p=b"]
@@ -303,7 +303,7 @@ def test_partitioned_merge_rejects_partition_column_outside_keys(spark, tmp_path
     with pytest.raises(ValueError, match="unpartitioned"):
         vt.overwrite(spark.createDataFrame([(1, "B", "a2")], schema), stats_columns=["k"])
     assert vt.current_version() == 1
-    assert sorted(os.listdir(root)) == ["_VERSION", "v=1"]
+    assert sorted(os.listdir(root)) == ["_VERSION", "v=0", "v=1"]
 
 
 def test_versioned_commit_skips_orphaned_version_dir(spark, tmp_path):
