@@ -223,56 +223,20 @@ def _bands_from_sig(
     return out
 
 
-def lsh_candidate_pairs(
-    bands: DataFrame, id_col: str, *, hot_bucket_cap: int | None = None
-) -> DataFrame:
+def lsh_candidate_pairs(bands: DataFrame, id_col: str) -> DataFrame:
     """Self-join banded signatures → candidate pairs + shared-band count.
 
-    ``hot_bucket_cap`` is the skewed-band safety valve (VERDICT r4
-    "Next" #8): a band bucket holding m near-identical docs (empty
-    pages, boilerplate — the real web-corpus hazard) emits C(m,2)
-    pairs, quadratic in the hot bucket, and the equi-join hashes the
-    whole bucket into ONE task.  With a cap, buckets larger than it
-    switch to STAR emission — every member pairs with the bucket's
-    min-id hub only — which preserves the connected components exactly
-    (a hot bucket is one clique; a star spans the same component) at
-    O(m) edges and no single-task blowup.  Downstream dedup/clustering
-    semantics are unchanged; only pairwise enumeration inside mega-
-    cliques is elided.  Default None keeps the exact all-pairs
-    behavior (the oracle-checked queries; no test corpus has a bucket
-    anywhere near a sane cap)."""
+    Every pair of docs that share a band bucket is emitted, so a bucket
+    of m docs yields C(m,2) pairs (the exact all-pairs enumeration the
+    oracle-checked queries compare against)."""
     r = bands.select(
         F.col(id_col).alias("rid"), F.col("band_idx"), F.col("band_sig")
     )
-    if hot_bucket_cap is None:
-        raw = (
-            bands.join(r, on=["band_idx", "band_sig"])
-            .filter(F.col(id_col) < F.col("rid"))
-            .select(F.col(id_col).alias("id_a"), F.col("rid").alias("id_b"))
-        )
-    else:
-        # bucket size + hub via a WINDOW over the exact partitioning the
-        # self-join requires (hash by band_idx, band_sig): Spark computes
-        # both on the join's own Exchange instead of paying a separate
-        # aggregate shuffle + join-back, and the window is partitioned
-        # (never global)
-        from pyspark.sql import Window as _W
-
-        w = _W.partitionBy("band_idx", "band_sig")
-        tagged = bands.withColumn("_bn", F.count(F.lit(1)).over(w)).withColumn(
-            "_hub", F.min(id_col).over(w)
-        )
-        cold = tagged.filter(F.col("_bn") <= hot_bucket_cap)
-        cold_pairs = (
-            cold.join(r, on=["band_idx", "band_sig"])
-            .filter(F.col(id_col) < F.col("rid"))
-            .select(F.col(id_col).alias("id_a"), F.col("rid").alias("id_b"))
-        )
-        # hub = bucket min id, so id_a < id_b holds by construction
-        hot_pairs = tagged.filter(
-            (F.col("_bn") > hot_bucket_cap) & (F.col(id_col) != F.col("_hub"))
-        ).select(F.col("_hub").alias("id_a"), F.col(id_col).alias("id_b"))
-        raw = cold_pairs.unionByName(hot_pairs)
+    raw = (
+        bands.join(r, on=["band_idx", "band_sig"])
+        .filter(F.col(id_col) < F.col("rid"))
+        .select(F.col(id_col).alias("id_a"), F.col("rid").alias("id_b"))
+    )
     return (
         raw.groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("shared_bands"))

@@ -1575,10 +1575,9 @@ def events_asof_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_scd2_user_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD-Type-2 history reconstruction: each user's purchase stream
     becomes validity-ranged rows — (value, valid_from, valid_to,
-    is_current), half-open intervals closed by the next change — the
-    read-side twin of the ``operators/scd2.py`` dimension maintainer
-    (which is pytest-verified on the write path; this query puts the
-    family under the DuckDB hash gate too).
+    is_current), half-open intervals closed by the next change.  The
+    engine's gold dimensions are SCD-1; this query keeps the SCD-2
+    validity-range shape under the DuckDB hash gate.
 
     Scale shape: one hash Exchange(user) + per-user sort shared by the
     single ``lead`` window; nothing else."""

@@ -385,92 +385,6 @@ def text_quality_classifier_hashed(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 @register(
-    "text_boilerplate_chunks",
-    f"""
-    WITH {_CORPUS_SQL},
-    tk AS (SELECT doc_id, string_split_regex(text, '\\s+') AS toks FROM corpus),
-    ch AS (
-        SELECT doc_id,
-               md5(array_to_string(
-                   toks[(i-1)*10+1 : least((i-1)*10+10, len(toks))], ' ')) AS h
-        FROM tk,
-             unnest(generate_series(1,
-                 CAST(ceil(len(toks) / 10.0) AS BIGINT))) AS u(i)
-        WHERE len(toks) > 0
-    ),
-    freq AS (SELECT h, COUNT(*) AS n FROM ch GROUP BY h),
-    doc AS (
-        SELECT c.doc_id, COUNT(*) AS n_chunks,
-               SUM(CASE WHEN f.n >= 2 THEN 1 ELSE 0 END) AS n_shared
-        FROM ch c JOIN freq f ON c.h = f.h
-        GROUP BY c.doc_id
-    )
-    SELECT CAST(doc_id AS BIGINT) AS doc_id,
-           CAST(n_chunks AS BIGINT) AS n_chunks,
-           CAST(n_shared AS BIGINT) AS n_shared,
-           CAST((1000 * n_shared) // n_chunks AS BIGINT) AS boiler_permille
-    FROM doc ORDER BY doc_id
-    """,
-)
-def text_boilerplate_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chunk-level boilerplate detection — the CCNet/RefinedWeb line-
-    dedup step re-expressed over fixed 10-token chunks (the synthetic
-    corpus is single-line, so chunks stand in for lines): hash every
-    non-overlapping chunk, count corpus-wide occurrences, and report
-    each document's fraction of chunks that appear verbatim elsewhere
-    (``boiler_permille``).  Documents dominated by shared chunks are
-    the navboxes/cookie-banners/licence-footers a web pipeline strips
-    before model-based filtering; the planted near/exact dups in
-    ``_dedup_corpus`` guarantee measurable shared mass here.
-
-    Scale shape: chunking is narrow (explode sequence + slice on the
-    bound token array); the frequency table is ONE map-side-combined
-    groupBy on a 16-byte hash, joined back on the same key — at 100 TB
-    both sides partition by chunk hash, and the frequency side can be
-    pre-filtered to n ≥ 2 (the only rows that change any doc's count)
-    before the join."""
-    corpus = _dedup_corpus(spark, sf_dir)
-    tk = corpus.select("doc_id", F.split("text", X.TOKEN_RE).alias("toks")).filter(
-        F.size("toks") > 0
-    )
-    n_chunks = F.ceil(F.size("toks") / F.lit(10.0)).cast("long")
-    ch = (
-        tk.select(
-            "doc_id", F.explode(F.sequence(F.lit(1), n_chunks)).alias("i"), "toks"
-        )
-        .select(
-            "doc_id",
-            F.md5(
-                F.concat_ws(
-                    " ",
-                    F.slice(
-                        F.col("toks"),
-                        (F.col("i") - 1) * 10 + 1,
-                        F.least(F.lit(10), F.size("toks") - (F.col("i") - 1) * 10),
-                    ),
-                ).cast("binary")
-            ).alias("h"),
-        )
-        .transform(tracked_persist)
-    )
-    freq = ch.groupBy("h").agg(F.count(F.lit(1)).alias("n"))
-    doc = (
-        ch.join(freq, "h")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_chunks"),
-            F.sum(F.when(F.col("n") >= 2, 1).otherwise(0)).alias("n_shared"),
-        )
-    )
-    return doc.select(
-        F.col("doc_id").cast("bigint"),
-        F.col("n_chunks").cast("bigint"),
-        F.col("n_shared").cast("bigint"),
-        F.expr("div(1000 * n_shared, n_chunks)").cast("bigint").alias("boiler_permille"),
-    ).orderBy("doc_id")
-
-
-@register(
     "dedup_minhash_lsh",
     f"""
     WITH {_CORPUS_SQL}, {_SHINGLE_SQL},
@@ -783,8 +697,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Training-data pipeline staples: chunking, deterministic sampling,
-# vocabulary statistics
+# Training-data pipeline staples: sequence packing
 # ---------------------------------------------------------------------------
 
 
@@ -1049,69 +962,6 @@ def skew_salted_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("l_returnflag")
 
 
-_SPAN8 = ", ".join(f"toks[i+{j}]" for j in range(8))
-
-
-@register(
-    "pipeline_decontaminate",
-    rf"""
-    WITH {_CORPUS_SQL},
-    t AS (SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM corpus),
-    spans AS (
-        SELECT doc_id, unnest(list_distinct(
-            CASE WHEN len(toks) >= 8
-                 THEN list_transform(generate_series(1, len(toks)-7),
-                      i -> concat_ws(' ', {_SPAN8}))
-                 ELSE []::VARCHAR[] END)) AS span
-        FROM t
-    ),
-    ev AS (SELECT DISTINCT span FROM spans
-           WHERE doc_id % 10 = 0 AND doc_id < 100000),
-    hits AS (
-        SELECT s.doc_id, COUNT(*) AS n_shared_spans
-        FROM spans s JOIN ev ON ev.span = s.span
-        WHERE NOT (s.doc_id % 10 = 0 AND s.doc_id < 100000)
-        GROUP BY s.doc_id
-    )
-    SELECT CAST(doc_id AS BIGINT) AS doc_id,
-           CAST(n_shared_spans AS BIGINT) AS n_shared_spans
-    FROM hits ORDER BY doc_id
-    """,
-)
-def pipeline_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination — flag every training document that
-    shares an 8-token span with the held-out evaluation set (here the
-    eval stand-in is the corpus docs with ``doc_id % 10 == 0``, whose
-    planted near/exact duplicates play the role of leaked eval text).
-    This is the n-gram-overlap contamination check LLM training runs
-    before training (GPT-3 used 13-gram overlap, Llama/FineWeb n-gram
-    dedup against eval suites): any doc returned here would be dropped
-    or span-redacted before the corpus ships.
-
-    Scale shape: the eval span set is BENCHMARK-sized (thousands of
-    docs), so it broadcasts; the training side is one linear scan whose
-    span stream semi-joins the broadcast set — only actual hits ever
-    shuffle, and nothing is quadratic in corpus size.  Span identity
-    travels as xxhash64 longs; the oracle joins raw strings, so a hash
-    collision would fail the sf0.01 gate."""
-    corpus = _dedup_corpus(spark, sf_dir)
-    is_eval = (F.col("doc_id") % 10 == 0) & (F.col("doc_id") < 100000)
-    sp = D.shingle_explode(corpus, "doc_id", "text", 8).select(
-        "doc_id", F.xxhash64("sh").alias("h")
-    )
-    eval_spans = sp.filter(is_eval).select("h").distinct()
-    hits = (
-        sp.filter(~is_eval)
-        .join(F.broadcast(eval_spans), "h")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_shared_spans"))
-    )
-    return hits.select(
-        F.col("doc_id").cast("bigint"),
-        F.col("n_shared_spans").cast("bigint"),
-    ).orderBy("doc_id")
-
-
 @register(
     "dedup_minhash_estimate_calibration",
     f"""
@@ -1206,61 +1056,6 @@ def dedup_minhash_estimate_calibration(spark: SparkSession, sf_dir: str) -> Data
         )
         .orderBy("jac_decile")
     )
-
-
-@register(
-    "text_token_counts",
-    r"""
-    WITH t AS (
-        SELECT doc_id, text,
-               regexp_extract_all(text,
-                   '''(?:[sdmt]|ll|ve|re)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+'
-               ) AS bpe
-        FROM documents
-    )
-    SELECT doc_id,
-           CAST(length(text) AS BIGINT) AS n_chars,
-           CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-           CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS ws_tokens,
-           CAST(len(bpe) AS BIGINT) AS bpe_tokens,
-           CAST((1000 * length(text)) // len(bpe) AS BIGINT) AS chars_per_bpe_milli
-    FROM t
-    ORDER BY doc_id
-    """,
-)
-def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document token counting, the budget currency of every LLM
-    training pipeline: whitespace tokens AND a BPE-ish pre-tokenizer
-    count (the GPT-2 split regex — contraction suffixes, letter runs,
-    digit runs, punctuation runs, whitespace — which upper-bounds real
-    BPE merge counts and is deterministic without a vocab file).
-    chars/token (milli) is the packing-density signal used to filter
-    boilerplate/code-like shards.  Verified engine-exact: the Java and
-    RE2 dialects agree on this pattern over the whole corpus (no
-    lookarounds, which RE2 lacks).
-
-    Scale shape: map-only over the text column — no shuffle, no UDF;
-    the regex runs inside whole-stage codegen.  ``_fan_out`` spreads
-    the small local file so the regex work uses every core; a real
-    multi-GB input partitions naturally."""
-    docs = _fan_out(load_testdata(spark, sf_dir, "documents"))
-    bpe_pat = r"'(?:[sdmt]|ll|ve|re)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+"
-    bpe = F.regexp_extract_all(F.col("text"), F.lit(bpe_pat), F.lit(0))
-    counted = docs.select(
-        "doc_id",
-        F.length("text").cast("bigint").alias("n_chars"),
-        F.octet_length("text").cast("bigint").alias("n_bytes"),
-        F.size(F.split(F.trim(F.col("text")), r"\s+"))
-        .cast("bigint")
-        .alias("ws_tokens"),
-        F.size(bpe).cast("bigint").alias("bpe_tokens"),
-    )
-    return counted.select(
-        "*",
-        F.expr("div(1000 * n_chars, bpe_tokens)")
-        .cast("bigint")
-        .alias("chars_per_bpe_milli"),
-    ).orderBy("doc_id")
 
 
 # SemDeDup's scale contract: cluster count grows with corpus size so the
@@ -1816,84 +1611,6 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
     ).orderBy("dim")
 
 
-@register(
-    "interval_overlap_sweep",
-    """
-    WITH iv0 AS (
-        SELECT l_suppkey AS s,
-               CAST(CAST(l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS st,
-               CAST(CAST(l_shipdate AS DATE) - DATE '1970-01-01'
-                    + 1 + CAST(l_quantity AS INTEGER) % 14 AS BIGINT) AS en
-        FROM lineitem
-    ),
-    -- pairing id must be unique PER ROW (the synthetic lineitem is not
-    -- unique on (orderkey, linenumber) — duplicate interval instances
-    -- are distinct intervals and their pairs count)
-    iv AS (SELECT s, st, en,
-                  ROW_NUMBER() OVER (PARTITION BY s ORDER BY st, en) AS rid
-           FROM iv0),
-    pairs AS (
-        SELECT a.s, COUNT(*) AS n_pairs
-        FROM iv a JOIN iv b
-          ON a.s = b.s AND a.rid < b.rid AND a.st < b.en AND b.st < a.en
-        GROUP BY a.s
-    ),
-    per AS (SELECT s, COUNT(*) AS n_intervals FROM iv GROUP BY s)
-    SELECT CAST(per.s AS BIGINT) AS suppkey,
-           CAST(per.n_intervals AS BIGINT) AS n_intervals,
-           CAST(coalesce(pairs.n_pairs, 0) AS BIGINT) AS n_overlapping_pairs
-    FROM per LEFT JOIN pairs ON pairs.s = per.s
-    ORDER BY suppkey
-    """,
-)
-def interval_overlap_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval-overlap counting via a boundary SWEEP — the O(n log n)
-    distributed form of a problem users reach for an O(n²) non-equi
-    self-join to solve.  Shipment busy-intervals per supplier
-    ([shipdate, shipdate + 1 + quantity%14 days), half-open), counting
-    per supplier how many pairs of its shipments overlap in time.
-
-    Sweep formulation: each interval contributes a (+1 at start, −1 at
-    end) boundary row; within a supplier, boundaries sort by (t, delta)
-    so ends release before same-day starts (half-open semantics), and a
-    running sum gives the number of intervals active at each start —
-    summing (active − 1) over start events counts every overlapping
-    pair exactly once.  Tied starts see each other cumulatively, so the
-    per-supplier SUM is order-invariant under any tie order.  One
-    window per supplier over 2n rows replaces the Σ n² self-join the
-    ORACLE runs — the oracle being brute force is the point: two
-    formulations, one answer.  At 100 TB the sweep shuffles each fact
-    row twice (boundary explode) and sorts within supplier partitions —
-    linear-log work, no pair blowup.  Algorithm lives in
-    ``operators.sweeps.interval_overlap_counts`` (property-tested
-    against Python brute force on random intervals)."""
-    from .operators.sweeps import interval_overlap_counts
-
-    li = load_testdata(spark, sf_dir, "lineitem")
-    iv = li.select(
-        F.col("l_suppkey").alias("s"),
-        F.datediff(F.to_date("l_shipdate"), F.lit("1970-01-01").cast("date"))
-        .cast("bigint")
-        .alias("st"),
-        (
-            F.datediff(F.to_date("l_shipdate"), F.lit("1970-01-01").cast("date"))
-            + 1
-            + F.col("l_quantity").cast("int") % 14
-        )
-        .cast("bigint")
-        .alias("en"),
-    )
-    return (
-        interval_overlap_counts(iv, "s", "st", "en")
-        .select(
-            F.col("s").cast("bigint").alias("suppkey"),
-            F.col("n_intervals").cast("bigint"),
-            F.col("n_overlapping_pairs").cast("bigint"),
-        )
-        .orderBy("suppkey")
-    )
-
-
 def _ivf_recall_oracle_sql() -> str:
     """DuckDB twin of ``ann_recall_ivf``: replay the trained coarse
     cells (``_kmeans_cells_cte``), rank exact cosine top-5 per query,
@@ -1956,59 +1673,6 @@ def ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_hit",
         F.expr("div(1000 * n_hit, 5)").cast("bigint").alias("recall_permille"),
     ).orderBy("query_id")
-
-
-@register(
-    "parts_pareto_frontier",
-    """
-    WITH p AS (SELECT p_partkey, p_retailprice AS price, p_size AS sz FROM part)
-    SELECT CAST(a.p_partkey AS BIGINT) AS p_partkey,
-           CAST(a.price AS DOUBLE) AS price,
-           CAST(a.sz AS INTEGER) AS sz
-    FROM p a
-    WHERE NOT EXISTS (
-        SELECT 1 FROM p b
-        WHERE b.price <= a.price AND b.sz >= a.sz
-          AND (b.price < a.price OR b.sz > a.sz)
-    )
-    ORDER BY price, p_partkey
-    """,
-)
-def parts_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skyline / Pareto frontier (min price, max size) in ONE SWEEP —
-    the third entry in the sweeps-not-joins family (with
-    ``interval_overlap_sweep``): the oracle runs the textbook NOT
-    EXISTS anti-join, which is O(n²); the engine sorts once by price
-    and keeps a part iff it is the size-max of its price group AND its
-    size strictly exceeds the running size-max over all strictly
-    cheaper groups.  Identical (price, size) twins both survive — no
-    strictly-better part exists — which the grp_max equality handles
-    and the oracle's strictness clause mirrors.
-
-    Scale shape: one groupBy(price), then the prefix-max runs as a
-    TWO-PHASE distributed sweep — range-partition the price-domain
-    table, running max per partition via a window partitioned on
-    ``spark_partition_id()`` (NOT a global no-partition window, which
-    sorts every row in one task), and stitch partitions
-    with a driver-side prefix over ≤ #partitions boundary maxima
-    broadcast back.  A broadcast join returns to the part rows — no
-    pair join anywhere.  Algorithm lives in
-    ``operators.sweeps.pareto_frontier`` (property-tested against
-    Python brute force on random point sets)."""
-    from .operators.sweeps import pareto_frontier
-
-    p = load_testdata(spark, sf_dir, "part").select(
-        "p_partkey", F.col("p_retailprice").alias("price"), F.col("p_size").alias("sz")
-    )
-    return (
-        pareto_frontier(p, "price", "sz")
-        .select(
-            F.col("p_partkey").cast("bigint"),
-            F.col("price").cast("double"),
-            F.col("sz").cast("int"),
-        )
-        .orderBy("price", "p_partkey")
-    )
 
 
 def _cluster_quality_oracle_sql() -> str:
@@ -2090,8 +1754,7 @@ def embedding_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-5 session-3 additions: CCNet perplexity buckets, mergeable
-# bottom-k quantile sketch, deterministic global training shuffle.
+# Mergeable bottom-k quantile sketch
 # ---------------------------------------------------------------------------
 
 
@@ -2211,8 +1874,8 @@ def quantile_sketch_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-5 session-3 batch 2: UniMax language budgets, cross-source
-# near-dup matrix, model-vs-heuristic quality calibration.
+# UniMax language budgets, cross-source
+# near-dup matrix
 # ---------------------------------------------------------------------------
 
 
@@ -2459,8 +2122,7 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-5 session-4 additions: hard-negative mining, k-anonymity audit,
-# temperature-scaled mixture sampling.
+# BM25 top-k, embedding outliers
 # ---------------------------------------------------------------------------
 
 
@@ -2709,74 +2371,8 @@ def embedding_outliers_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "quality_metadata_consistency",
-    """
-    WITH t AS (
-        SELECT source, length(text) AS actual, n_chars
-        FROM documents
-    )
-    SELECT source,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(CASE WHEN actual != n_chars THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_mismatch,
-           CAST(MAX(abs(actual - n_chars)) AS BIGINT) AS max_abs_drift,
-           CAST((1000 * SUM(CASE WHEN actual != n_chars THEN 1 ELSE 0 END))
-                // COUNT(*) AS BIGINT) AS mismatch_permille,
-           CAST(MIN(actual) AS BIGINT) AS min_len,
-           CAST(MAX(actual) AS BIGINT) AS max_len
-    FROM t
-    GROUP BY source
-    ORDER BY source
-    """,
-)
-def quality_metadata_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Metadata-consistency audit: recompute a derived column
-    (``n_chars``) from the payload and reconcile against the stored
-    metadata, per source.  Stale or drifted metadata is how length
-    filters, pricing, and dedup keys silently rot after upstream
-    re-encodes; this is the freshness check a lakehouse runs on every
-    ingest batch (the same contract as the pipeline's quality
-    expectations, expressed as a registered audit).
-
-    Scale shape: narrow map-only reconcile in whole-stage codegen +
-    ONE map-side-combined groupBy(source) — |sources| output rows,
-    nothing else shuffles."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    t = docs.select(
-        "source",
-        F.length("text").cast("long").alias("actual"),
-        F.col("n_chars").cast("long").alias("meta"),
-    )
-    return (
-        t.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.when(F.col("actual") != F.col("meta"), 1).otherwise(0)).alias(
-                "n_mismatch"
-            ),
-            F.max(F.abs(F.col("actual") - F.col("meta"))).alias("max_abs_drift"),
-            F.min("actual").alias("min_len"),
-            F.max("actual").alias("max_len"),
-        )
-        .select(
-            "source",
-            F.col("n_docs").cast("bigint"),
-            F.col("n_mismatch").cast("bigint"),
-            F.col("max_abs_drift").cast("bigint"),
-            F.expr("div(1000 * n_mismatch, n_docs)")
-            .cast("bigint")
-            .alias("mismatch_permille"),
-            F.col("min_len").cast("bigint"),
-            F.col("max_len").cast("bigint"),
-        )
-        .orderBy("source")
-    )
-
-
 # ---------------------------------------------------------------------------
-# Round-5 session-5: hybrid retrieval fusion, Bloom decontamination
-# pre-filter, HyperLogLog distinct sketch
+# Hybrid retrieval fusion
 # ---------------------------------------------------------------------------
 
 
@@ -2904,7 +2500,7 @@ def _hexat(col: str, start: int, n: int) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Round-5 session-5 batch 3: priority sampling, sketch mergeability
+# Priority sampling
 # ---------------------------------------------------------------------------
 
 
@@ -3031,161 +2627,8 @@ def sample_priority_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-5 session-5 batch 4: chi-square independence, decayed engagement
+# Revenue cube by flag and status
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "stats_chi2_independence",
-    """
-    WITH obs AS (
-        SELECT l_returnflag AS flag, l_linestatus AS status,
-               COUNT(*) AS o
-        FROM lineitem GROUP BY 1, 2
-    ),
-    rr AS (SELECT flag, SUM(o) AS r FROM obs GROUP BY flag),
-    cc AS (SELECT status, SUM(o) AS c FROM obs GROUP BY status),
-    nn AS (SELECT SUM(o) AS n FROM obs),
-    cells AS (
-        SELECT o.flag, o.status, o.o, r.r, c.c, n.n,
-               o.o * n.n - r.r * c.c AS diff
-        FROM obs o
-        JOIN rr r ON r.flag = o.flag
-        JOIN cc c ON c.status = o.status, nn n
-    )
-    SELECT flag AS l_returnflag, status AS l_linestatus,
-           CAST(o AS BIGINT) AS observed,
-           CAST((1000 * r * c) // n AS BIGINT) AS expected_milli,
-           CAST(floor((1000000.0 * CAST(diff AS DOUBLE) * CAST(diff AS DOUBLE))
-                / (CAST(r AS DOUBLE) * CAST(c AS DOUBLE) * CAST(n AS DOUBLE)
-                   * CAST(n AS DOUBLE))) AS BIGINT) AS contrib_micro
-    FROM cells
-    ORDER BY 1, 2
-    """,
-)
-def stats_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pearson chi-square test of independence between return flag and
-    line status — the categorical-association audit a curation
-    pipeline runs between metadata dimensions (is source independent
-    of language? does the quality band depend on the shard?).  Per
-    cell: observed count, expected count under independence
-    (milli-exact integers: ⌊1000·R·C/N⌋), and the chi-square
-    contribution (O−E)²/E in micro-units via the common-denominator
-    form (O·N − R·C)²/(R·C·N²) — the integer numerator diff is exact;
-    the one double fold is written identically on both engines (the
-    repo's strict-fold parity contract).  Σ contrib_micro / 10⁶ is the
-    chi-square statistic; compare against the χ²((R−1)(C−1)) critical
-    value offline.
-
-    Scale shape: ONE map-side-combined groupBy over the two
-    categorical columns (cells bounded by the category-domain product,
-    not N), then row/column margins and the test statistic live
-    entirely on the bounded cell relation.  This never gets harder at
-    100 TB — the heavy aggregate's output is |flags|×|statuses|
-    rows."""
-    obs = (
-        _fan_out(
-            load_testdata(spark, sf_dir, "lineitem").select(
-                F.col("l_returnflag").alias("flag"),
-                F.col("l_linestatus").alias("status"),
-            )
-        )
-        .groupBy("flag", "status")
-        .agg(F.count(F.lit(1)).alias("o"))
-        .transform(tracked_persist)
-    )
-    rr = obs.groupBy("flag").agg(F.sum("o").alias("r"))
-    cc = obs.groupBy("status").agg(F.sum("o").alias("c"))
-    nn = obs.agg(F.sum("o").alias("n"))
-    cells = (
-        obs.join(F.broadcast(rr), "flag")
-        .join(F.broadcast(cc), "status")
-        .crossJoin(F.broadcast(nn))
-        .withColumn("diff", F.col("o") * F.col("n") - F.col("r") * F.col("c"))
-    )
-    return cells.select(
-        F.col("flag").alias("l_returnflag"),
-        F.col("status").alias("l_linestatus"),
-        F.col("o").cast("bigint").alias("observed"),
-        F.expr("div(1000 * r * c, n)").cast("bigint").alias("expected_milli"),
-        F.expr(
-            "cast(floor((1000000.0 * cast(diff as double) * cast(diff as double))"
-            " / (cast(r as double) * cast(c as double) * cast(n as double)"
-            " * cast(n as double))) as bigint)"
-        ).alias("contrib_micro"),
-    ).orderBy("l_returnflag", "l_linestatus")
-
-
-# ---------------------------------------------------------------------------
-# Round-5 session-5 batch 7: Benford audit, token burstiness
-# ---------------------------------------------------------------------------
-
-# round(1000·log10(1 + 1/d)) for d = 1..9 — precomputed integer
-# literals so both engines use the identical libm-free constants
-_BENFORD_MILLI = {1: 301, 2: 176, 3: 125, 4: 97, 5: 79, 6: 67, 7: 58, 8: 51, 9: 46}
-_BENFORD_CASE = (
-    "CASE first_digit "
-    + " ".join(f"WHEN {d} THEN {m}" for d, m in _BENFORD_MILLI.items())
-    + " END"
-)
-
-
-@register(
-    "orders_benford_deviation",
-    f"""
-    WITH v AS (
-        SELECT CAST(substr(CAST(CAST(round(o_totalprice * 100) AS BIGINT)
-                    AS VARCHAR), 1, 1) AS INTEGER) AS first_digit
-        FROM orders
-    ),
-    cnt AS (SELECT first_digit, COUNT(*) AS n_obs FROM v GROUP BY first_digit),
-    tot AS (SELECT COUNT(*) AS n FROM v)
-    SELECT c.first_digit,
-           CAST(c.n_obs AS BIGINT) AS n_obs,
-           CAST((1000 * c.n_obs) // t.n AS BIGINT) AS obs_share_milli,
-           CAST({_BENFORD_CASE} AS BIGINT) AS benford_share_milli,
-           CAST((1000 * c.n_obs) // t.n - {_BENFORD_CASE} AS BIGINT)
-               AS dev_milli
-    FROM cnt c, tot t
-    ORDER BY c.first_digit
-    """,
-)
-def orders_benford_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford's-law first-digit audit over order totals — the
-    classic anomaly screen for fabricated or mechanically-generated
-    numeric columns (synthetic/templated data violates the log
-    distribution real multiplicative processes follow; a curation
-    pipeline runs this on numeric metadata before trusting it).
-    Expected shares round(1000·log₁₀(1+1/d)) ship as precomputed
-    integer literals (libm-free on both engines); observed shares and
-    deviations in exact milli units.  First digit reads off the
-    centi-unit integer's decimal string — exact for 2-decimal
-    currency doubles.
-
-    Scale shape: one map projection + ONE map-side-combined
-    groupBy(first_digit) — ≤9 rows out of the heavy aggregate
-    regardless of N; the 1-row total broadcast finishes it."""
-    v = _fan_out(load_testdata(spark, sf_dir, "orders")).select(
-        F.expr(
-            "cast(substring(cast(cast(round(o_totalprice * 100) as bigint)"
-            " as string), 1, 1) as int)"
-        ).alias("first_digit")
-    )
-    cnt = v.groupBy("first_digit").agg(F.count(F.lit(1)).alias("n_obs"))
-    tot = v.agg(F.count(F.lit(1)).alias("n"))
-    return (
-        cnt.crossJoin(F.broadcast(tot))
-        .select(
-            "first_digit",
-            F.col("n_obs").cast("bigint"),
-            F.expr("div(1000 * n_obs, n)").cast("bigint").alias("obs_share_milli"),
-            F.expr(_BENFORD_CASE).cast("bigint").alias("benford_share_milli"),
-            F.expr(f"div(1000 * n_obs, n) - ({_BENFORD_CASE})")
-            .cast("bigint")
-            .alias("dev_milli"),
-        )
-        .orderBy("first_digit")
-    )
 
 
 @register(
@@ -3241,7 +2684,7 @@ def cube_revenue_by_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-5 session-5 batch 9: mutual-kNN paraphrase mining
+# Mutual-kNN paraphrase mining
 # ---------------------------------------------------------------------------
 
 
@@ -3345,7 +2788,7 @@ def similarity_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-5 session-5 batch 15: exact token-budget apportionment
+# Exact token-budget apportionment
 # ---------------------------------------------------------------------------
 
 _APPORTION_BUDGET = 100_000
@@ -3428,301 +2871,7 @@ def pipeline_token_budget_apportion(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 # ---------------------------------------------------------------------------
-# Round-6 batch 1: hot-bucket-capped LSH, end-to-end (VERDICT r5 "Next" #4)
-# ---------------------------------------------------------------------------
-
-# Planted boilerplate: half the corpus becomes this exact string, so every
-# band funnels 250 (sf0.01) / 2500 (sf0.1) docs into ONE bucket — the
-# web-corpus skew hazard the cap exists for.  Constant in both engines.
-_HOT_BOILER = (
-    "breaking news sign up for our newsletter today and never miss a story"
-    " terms of service and privacy policy apply to all visitors"
-)
-
-
-@register(
-    "dedup_lsh_hot_bucket_capped",
-    f"""
-    WITH corpus AS (
-        SELECT doc_id,
-               CASE WHEN doc_id % 2 = 0 THEN '{_HOT_BOILER}' ELSE text END AS text
-        FROM documents
-    ),
-    {_SHINGLE_SQL},
-    {_MINHASH_BANDS_SQL},
-    sizes AS (
-        SELECT band_idx, band_sig, COUNT(*) AS bn, MIN(doc_id) AS hub
-        FROM bands GROUP BY band_idx, band_sig
-    ),
-    tagged AS (
-        SELECT b.doc_id, b.band_idx, b.band_sig, s.bn, s.hub
-        FROM bands b JOIN sizes s
-          ON s.band_idx = b.band_idx AND s.band_sig = b.band_sig
-    ),
-    cold AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM tagged a JOIN tagged b
-          ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig
-         AND a.doc_id < b.doc_id
-        WHERE a.bn <= 16
-    ),
-    hot AS (
-        SELECT hub AS id_a, doc_id AS id_b
-        FROM tagged WHERE bn > 16 AND doc_id != hub
-    ),
-    allp AS (SELECT * FROM cold UNION ALL SELECT * FROM hot)
-    SELECT CAST(id_a AS BIGINT) AS id_a,
-           CAST(id_b AS BIGINT) AS id_b,
-           CAST(COUNT(*) AS BIGINT) AS shared_bands
-    FROM allp GROUP BY 1, 2
-    ORDER BY id_a, id_b
-    """,
-)
-def dedup_lsh_hot_bucket_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH candidate generation with the hot-bucket safety valve LIVE
-    (VERDICT r5 "Next" #4): half the corpus is planted byte-identical
-    boilerplate, so each band's hottest bucket holds N/2 docs — the
-    exact-all-pairs path would emit C(N/2, 2) pairs out of one shuffle
-    task (quadratic single-task blowup, the production skew hazard).
-    With ``hot_bucket_cap=16`` that bucket switches to STAR emission:
-    every member pairs with the bucket's min-id hub only, O(m) edges,
-    same node coverage and hence the SAME connected components (a hot
-    bucket is one clique; a star spans it).  The DuckDB twin replays
-    the capped algorithm exactly — bucket sizes, min-id hub, cold
-    all-pairs + hot star — so the cross-engine hash gate covers the
-    capped semantics themselves, not just the uncapped default.
-
-    Scale shape: two aggregates over the banded signatures (bucket
-    size + hub), one equi-join back, and the cold self-join now
-    provably bounded at ≤ cap rows per bucket per task.  At 100 TB the
-    cap turns the worst-case task from O(hot²) to O(hot)."""
-    docs = _fan_out(load_testdata(spark, sf_dir, "documents").select("doc_id", "text"))
-    corpus = docs.select(
-        "doc_id",
-        F.when(F.col("doc_id") % 2 == 0, F.lit(_HOT_BOILER))
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    bands = D.minhash_bands(corpus, "doc_id", "text", n_hashes=8, band_size=4)
-    return D.lsh_candidate_pairs(bands, "doc_id", hot_bucket_cap=16).orderBy(
-        "id_a", "id_b"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Round-6 batch 4: Simpson diversity, join-skew audit, per-source OOV
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "quality_simpson_diversity",
-    r"""
-    WITH tok AS (
-        SELECT source, unnest(string_split_regex(text, '\s+')) AS tok
-        FROM documents
-    ),
-    c AS (SELECT source, tok, COUNT(*) AS c FROM tok GROUP BY source, tok),
-    agg AS (
-        SELECT source,
-               SUM(c) AS n_tokens,
-               COUNT(*) AS n_types,
-               SUM(c * (c - 1)) AS coll2
-        FROM c GROUP BY source
-    )
-    SELECT source,
-           CAST(n_tokens AS BIGINT) AS n_tokens,
-           CAST(n_types AS BIGINT) AS n_types,
-           CAST((1000000 * coll2) // (n_tokens * (n_tokens - 1)) AS BIGINT)
-               AS simpson_micro,
-           CAST(1000000 - (1000000 * coll2) // (n_tokens * (n_tokens - 1))
-               AS BIGINT) AS diversity_micro
-    FROM agg ORDER BY source
-    """,
-)
-def quality_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source lexical diversity via the Simpson index — the
-    probability two tokens drawn without replacement from a source are
-    the SAME type (Σc(c−1)/N(N−1), the unbiased collision estimator),
-    and its complement (Gini–Simpson diversity).  A source whose
-    diversity collapses is template/boilerplate-heavy — the
-    mixture-weighting signal TTR misses because TTR ignores the shape
-    of the frequency tail.  Exact integer micro-units on both engines
-    (N ≤ 10⁶ tokens/source at test SF keeps 10⁶·Σc(c−1) far inside
-    bigint; production keeps the same integers per shard and merges
-    numerators/denominators — both are plain sums).
-
-    Scale shape: explode → ONE map-side-combinable groupBy(source,
-    token) → ONE groupBy(source) over the per-type counts; output
-    |sources| rows.  No window, no join, combinable end-to-end (the
-    same two-level aggregate pattern as the burstiness query)."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    tok = docs.select(
-        "source", F.explode(F.split("text", X.TOKEN_RE)).alias("tok")
-    )
-    c = tok.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("c"))
-    agg = c.groupBy("source").agg(
-        F.sum("c").alias("n_tokens"),
-        F.count(F.lit(1)).alias("n_types"),
-        F.sum(F.col("c") * (F.col("c") - 1)).alias("coll2"),
-    )
-    return agg.select(
-        "source",
-        F.col("n_tokens").cast("bigint"),
-        F.col("n_types").cast("bigint"),
-        F.expr("div(1000000 * coll2, n_tokens * (n_tokens - 1))")
-        .cast("bigint")
-        .alias("simpson_micro"),
-        (
-            F.lit(1000000)
-            - F.expr("div(1000000 * coll2, n_tokens * (n_tokens - 1))")
-        )
-        .cast("bigint")
-        .alias("diversity_micro"),
-    ).orderBy("source")
-
-
-@register(
-    "pipeline_skew_report",
-    """
-    WITH c AS (
-        SELECT l_partkey AS k, COUNT(*) AS cnt FROM lineitem GROUP BY l_partkey
-    ),
-    grid AS (SELECT cnt, COUNT(*) AS m FROM c GROUP BY cnt),
-    tot AS (
-        SELECT SUM(m) AS n_keys, SUM(cnt * m) AS n_rows, MAX(cnt) AS max_cnt
-        FROM grid
-    ),
-    cum AS (
-        SELECT cnt, SUM(m) OVER (ORDER BY cnt) AS ckeys FROM grid
-    ),
-    q AS (
-        SELECT t.n_keys, t.n_rows, t.max_cnt,
-               MIN(CASE WHEN 2 * u.ckeys >= t.n_keys THEN u.cnt END) AS p50_cnt,
-               MIN(CASE WHEN 100 * u.ckeys >= 99 * t.n_keys THEN u.cnt END) AS p99_cnt
-        FROM cum u, tot t
-        GROUP BY t.n_keys, t.n_rows, t.max_cnt
-    )
-    SELECT CAST(n_keys AS BIGINT) AS n_keys,
-           CAST(n_rows AS BIGINT) AS n_rows,
-           CAST(max_cnt AS BIGINT) AS max_cnt,
-           CAST(p50_cnt AS BIGINT) AS p50_cnt,
-           CAST(p99_cnt AS BIGINT) AS p99_cnt,
-           CAST((1000000 * max_cnt) // n_rows AS BIGINT) AS top_share_micro,
-           CAST((1000 * max_cnt) // p50_cnt AS BIGINT) AS skew_ratio_milli
-    FROM q
-    """,
-)
-def pipeline_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-join skew audit over a prospective shuffle key (l_partkey) —
-    the report a planner consults before choosing salting / skew-join
-    handling: key count, hottest-key share, and the max/median key-mass
-    ratio.  Quantiles come from the count-of-counts grid (how many keys
-    occur exactly c times), so the global cumsum runs over a relation
-    bounded by |distinct frequencies|, never over keys or rows.
-
-    Scale shape: ONE map-side-combinable groupBy(key) → ONE
-    groupBy(cnt) collapse to the grid → scalar aggregates + a global
-    window over the GRID (bounded; allowlisted in the fleet
-    unpartitioned-window guard with this justification).  At 100 TB
-    this is the cheapest possible skew probe: two combinable
-    aggregates and arithmetic on ≤ a few hundred grid rows."""
-    li = load_testdata(spark, sf_dir, "lineitem").select("l_partkey")
-    c = li.groupBy(F.col("l_partkey").alias("k")).agg(F.count(F.lit(1)).alias("cnt"))
-    grid = c.groupBy("cnt").agg(F.count(F.lit(1)).alias("m"))
-    tot = grid.agg(
-        F.sum("m").alias("n_keys"),
-        F.sum(F.col("cnt") * F.col("m")).alias("n_rows"),
-        F.max("cnt").alias("max_cnt"),
-    )
-    w = Window.orderBy("cnt").rowsBetween(Window.unboundedPreceding, 0)
-    cum = grid.withColumn("ckeys", F.sum("m").over(w))
-    q = cum.crossJoin(F.broadcast(tot)).agg(
-        F.first("n_keys").alias("n_keys"),
-        F.first("n_rows").alias("n_rows"),
-        F.first("max_cnt").alias("max_cnt"),
-        F.min(
-            F.when(2 * F.col("ckeys") >= F.col("n_keys"), F.col("cnt"))
-        ).alias("p50_cnt"),
-        F.min(
-            F.when(100 * F.col("ckeys") >= 99 * F.col("n_keys"), F.col("cnt"))
-        ).alias("p99_cnt"),
-    )
-    return q.select(
-        F.col("n_keys").cast("bigint"),
-        F.col("n_rows").cast("bigint"),
-        F.col("max_cnt").cast("bigint"),
-        F.col("p50_cnt").cast("bigint"),
-        F.col("p99_cnt").cast("bigint"),
-        F.expr("div(1000000 * max_cnt, n_rows)").cast("bigint").alias("top_share_micro"),
-        F.expr("div(1000 * max_cnt, p50_cnt)").cast("bigint").alias("skew_ratio_milli"),
-    )
-
-
-@register(
-    "vocab_oov_rate_by_source",
-    r"""
-    WITH tok AS (
-        SELECT source, unnest(string_split_regex(text, '\s+')) AS tok
-        FROM documents
-    ),
-    gtok AS (SELECT tok, COUNT(*) AS c FROM tok GROUP BY tok),
-    vocab AS (
-        SELECT tok FROM gtok ORDER BY c DESC, tok ASC LIMIT 256
-    ),
-    per_src AS (SELECT source, tok, COUNT(*) AS c FROM tok GROUP BY source, tok),
-    m AS (
-        SELECT p.source, p.c,
-               CASE WHEN v.tok IS NULL THEN 0 ELSE 1 END AS in_vocab
-        FROM per_src p LEFT JOIN vocab v ON v.tok = p.tok
-    )
-    SELECT source,
-           CAST(SUM(c) AS BIGINT) AS n_tokens,
-           CAST(SUM(CASE WHEN in_vocab = 0 THEN c ELSE 0 END) AS BIGINT) AS n_oov,
-           CAST((1000 * SUM(CASE WHEN in_vocab = 0 THEN c ELSE 0 END)) // SUM(c)
-               AS BIGINT) AS oov_permille
-    FROM m GROUP BY source ORDER BY source
-    """,
-)
-def vocab_oov_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Out-of-vocabulary rate per source against the corpus top-256
-    vocabulary (count-desc, token-asc tie-break — deterministic on both
-    engines) — the mixture diagnostic that flags a source whose token
-    distribution the shared tokenizer/vocab serves poorly (high OOV =
-    fertility blowup for that slice).
-
-    Scale shape: the vocab is a TakeOrderedAndProject over the global
-    token counts (top-k, never a full sort); per-source counts are ONE
-    combinable groupBy; membership is an equi-join against the ≤256-row
-    broadcast vocab.  Everything is bounded by vocab size or |sources|
-    after the two token aggregates."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    tok = docs.select("source", F.explode(F.split("text", X.TOKEN_RE)).alias("tok"))
-    glob = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
-    vocab = glob.orderBy(F.col("c").desc(), F.col("tok").asc()).limit(256).select("tok")
-    per_src = tok.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("c"))
-    m = per_src.join(
-        F.broadcast(vocab.withColumn("in_vocab", F.lit(1))), "tok", "left"
-    )
-    return (
-        m.groupBy("source")
-        .agg(
-            F.sum("c").cast("bigint").alias("n_tokens"),
-            F.sum(F.when(F.col("in_vocab").isNull(), F.col("c")).otherwise(0))
-            .cast("bigint")
-            .alias("n_oov"),
-        )
-        .select(
-            "source",
-            "n_tokens",
-            "n_oov",
-            F.expr("div(1000 * n_oov, n_tokens)").cast("bigint").alias("oov_permille"),
-        )
-        .orderBy("source")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Round-6 batch 5: hopping-window rollup (F.window slide semantics, batch twin)
+# Hopping-window rollup (F.window slide semantics, batch twin)
 # ---------------------------------------------------------------------------
 
 
@@ -3785,7 +2934,7 @@ def events_hopping_window_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-6 batch 9: session-scoped first/last-touch revenue attribution
+# Session-scoped first/last-touch revenue attribution
 # ---------------------------------------------------------------------------
 
 
@@ -3924,7 +3073,7 @@ def events_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-6 batch 10: k-core decomposition over the near-dup graph
+# K-core decomposition over the near-dup graph
 # ---------------------------------------------------------------------------
 
 
@@ -4047,293 +3196,6 @@ def dedup_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-6 batch 11: Heaps growth, journey trigrams
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "vocab_heaps_growth",
-    r"""
-    WITH mx AS (SELECT MAX(doc_id) AS m FROM documents),
-    fo AS (
-        SELECT tok, MIN(doc_id) AS fd
-        FROM (SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok
-              FROM documents)
-        GROUP BY tok
-    ),
-    vd AS (
-        SELECT least((fd * 10) // (m + 1), 9) AS decile, COUNT(*) AS nv
-        FROM fo CROSS JOIN mx GROUP BY 1
-    ),
-    dd AS (
-        SELECT least((doc_id * 10) // (m + 1), 9) AS decile, COUNT(*) AS nd
-        FROM documents CROSS JOIN mx GROUP BY 1
-    )
-    SELECT CAST(dd.decile AS INTEGER) AS decile,
-           CAST(SUM(dd.nd) OVER (ORDER BY dd.decile
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS BIGINT) AS docs_cum,
-           CAST(SUM(COALESCE(vd.nv, 0)) OVER (ORDER BY dd.decile
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS BIGINT) AS vocab_cum
-    FROM dd LEFT JOIN vd ON vd.decile = dd.decile
-    ORDER BY decile
-    """,
-)
-def vocab_heaps_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary-growth (Heaps' law) curve: cumulative distinct-token
-    count after each decile of the corpus in doc_id order — the
-    diminishing-returns measurement behind "will more data still grow
-    the tokenizer's vocab?" and the sanity check that a crawl isn't
-    looping (a FLAT tail means new docs bring no new words — suspect
-    duplication; Heaps predicts V ∝ N^β, β≈0.5).
-
-    Exactness trick: no per-prefix distinct-count is ever run —
-    a token's contribution to every prefix is determined by its FIRST
-    occurrence (min doc_id, a map-side-combinable aggregate), so the
-    whole curve falls out of ONE groupBy(token) + a 10-row decile
-    histogram + a cumsum over those 10 rows.  The naive spelling (10
-    countDistinct passes) re-scans the corpus 10 times.
-
-    Scale shape: explode → groupBy(token) is the vocabulary-build
-    shuffle every tokenizer pipeline already pays; everything after is
-    ≤10 rows.  The 1-row max-id broadcast is BNLJ-allowlisted; the
-    cumsum window runs over the 10-row decile grid —
-    global-window-allowlisted."""
-    docs = load_testdata(spark, sf_dir, "documents").select("doc_id", "text")
-    mx = docs.agg(F.max("doc_id").alias("m"))
-    fo = (
-        docs.select("doc_id", F.explode(X.tokens("text")).alias("tok"))
-        .groupBy("tok")
-        .agg(F.min("doc_id").alias("fd"))
-    )
-    vd = (
-        fo.crossJoin(F.broadcast(mx))
-        .select(F.expr("least(div(fd * 10, m + 1), 9)").alias("decile"))
-        .groupBy("decile")
-        .agg(F.count(F.lit(1)).alias("nv"))
-    )
-    dd = (
-        docs.crossJoin(F.broadcast(mx))
-        .select(F.expr("least(div(doc_id * 10, m + 1), 9)").alias("decile"))
-        .groupBy("decile")
-        .agg(F.count(F.lit(1)).alias("nd"))
-    )
-    w = Window.orderBy("decile").rowsBetween(Window.unboundedPreceding, 0)
-    return (
-        dd.join(vd, "decile", "left")
-        .select(
-            F.col("decile").cast("int"),
-            F.sum("nd").over(w).cast("bigint").alias("docs_cum"),
-            F.sum(F.coalesce(F.col("nv"), F.lit(0)))
-            .over(w)
-            .cast("bigint")
-            .alias("vocab_cum"),
-        )
-        .orderBy("decile")
-    )
-
-
-@register(
-    "events_journey_trigrams",
-    """
-    WITH seq AS (
-        SELECT user_id, event_type,
-               lead(event_type, 1) OVER (PARTITION BY user_id
-                                         ORDER BY ts, event_id) AS t2,
-               lead(event_type, 2) OVER (PARTITION BY user_id
-                                         ORDER BY ts, event_id) AS t3
-        FROM events
-    )
-    SELECT event_type || '>' || t2 || '>' || t3 AS journey,
-           CAST(COUNT(*) AS BIGINT) AS n
-    FROM seq WHERE t2 IS NOT NULL AND t3 IS NOT NULL
-    GROUP BY 1
-    ORDER BY n DESC, journey
-    LIMIT 20
-    """,
-)
-def events_journey_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 three-step user journeys (event-type trigrams in strict
-    per-user time order) — the sequence view of behavior that a
-    first-order transition matrix cannot see: a high
-    view>click>purchase count versus view>click>error separates a
-    working funnel from a broken checkout, and anomalous
-    signup>signup>signup loops expose bot registration.
-
-    Parity contract: ordering ties (same user, same timestamp) are
-    broken by event_id on both engines; journeys with fewer than two
-    successors are dropped (no NULL-padded partial trigrams).
-
-    Scale shape: the double-lead runs in ONE user-partitioned window
-    pass (natural key partitioning — the same shuffle sessionization
-    pays); the trigram count is a map-side-combinable groupBy over
-    ≤|types|³ keys, and top-20 plans as TakeOrderedAndProject — per-
-    partition heaps, never a global sort."""
-    ev = load_testdata(spark, sf_dir, "events").select(
-        "user_id", "event_id", "ts", "event_type"
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "event_type",
-        F.lead("event_type", 1).over(w).alias("t2"),
-        F.lead("event_type", 2).over(w).alias("t3"),
-    )
-    return (
-        seq.filter(F.col("t2").isNotNull() & F.col("t3").isNotNull())
-        .select(
-            F.concat_ws(">", "event_type", "t2", "t3").alias("journey")
-        )
-        .groupBy("journey")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select("journey", F.col("n").cast("bigint"))
-        .orderBy(F.col("n").desc(), "journey")
-        .limit(20)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Round-6 batch 12: deseasonalized anomalies, balanced downsample, DAU/WAU
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "sample_balanced_class_downsample",
-    """
-    WITH cnt AS (SELECT label, COUNT(*) AS n FROM embeddings GROUP BY 1),
-    m AS (SELECT MIN(n) AS m FROM cnt),
-    ranked AS (
-        SELECT vec_id, label,
-               row_number() OVER (PARTITION BY label
-                                  ORDER BY md5(CAST(vec_id AS VARCHAR)),
-                                           vec_id) AS rn
-        FROM embeddings
-    ),
-    kept AS (SELECT label, vec_id FROM ranked CROSS JOIN m WHERE rn <= m.m)
-    SELECT c.label,
-           CAST(c.n AS BIGINT) AS n_orig,
-           CAST(COUNT(k.vec_id) AS BIGINT) AS n_kept,
-           CAST(SUM(k.vec_id) AS BIGINT) AS kept_id_sum
-    FROM cnt c JOIN kept k ON k.label = c.label
-    GROUP BY c.label, c.n
-    ORDER BY c.label
-    """,
-)
-def sample_balanced_class_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic balanced downsampling: every label class is cut
-    to the MINORITY class's size by keeping each class's first
-    min-count rows under the md5(vec_id) hash order — the standard
-    class-rebalancing step before training a probe/classifier head,
-    made reproducible (no RNG state: the same corpus always keeps the
-    same rows, and adding rows to ONE class never changes another
-    class's selection).  ``kept_id_sum`` checksums the exact selected
-    SET, so the oracle proves both engines picked identical rows, not
-    just identical counts.
-
-    Scale shape: the class-size table is one combinable groupBy; the
-    1-row global min broadcasts (BNLJ-allowlisted); selection is a
-    row_number window PARTITIONED by label — the distributed sort
-    shuffle a per-class top-k always pays (Spark plans a
-    WindowGroupLimit-style rank filter; classes are assumed
-    comparable-sized after upstream stratification — a pathologic
-    mega-class would call for the salting operator first)."""
-    emb = load_testdata(spark, sf_dir, "embeddings").select("vec_id", "label")
-    cnt = emb.groupBy("label").agg(F.count(F.lit(1)).alias("n"))
-    m = cnt.agg(F.min("n").alias("m"))
-    w = Window.partitionBy("label").orderBy(
-        F.md5(F.col("vec_id").cast("string")), "vec_id"
-    )
-    kept = (
-        emb.select("label", "vec_id", F.row_number().over(w).alias("rn"))
-        .crossJoin(F.broadcast(m))
-        .filter(F.col("rn") <= F.col("m"))
-    )
-    return (
-        cnt.join(kept, "label")
-        .groupBy("label", "n")
-        .agg(
-            F.count("vec_id").cast("bigint").alias("n_kept"),
-            F.sum("vec_id").cast("bigint").alias("kept_id_sum"),
-        )
-        .select(
-            "label",
-            F.col("n").cast("bigint").alias("n_orig"),
-            "n_kept",
-            "kept_id_sum",
-        )
-        .orderBy("label")
-    )
-
-
-@register(
-    "events_dau_wau_stickiness",
-    """
-    WITH ud AS (
-        SELECT DISTINCT user_id,
-               datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS x
-        FROM events
-    ),
-    dau AS (SELECT x, COUNT(*) AS dau FROM ud GROUP BY 1),
-    span AS (
-        SELECT DISTINCT u.user_id, d AS x
-        FROM ud u CROSS JOIN unnest(generate_series(u.x, u.x + 6)) t(d)
-    ),
-    wau AS (SELECT x, COUNT(*) AS wau FROM span GROUP BY 1)
-    SELECT CAST(d.x AS INTEGER) AS day_idx,
-           CAST(d.dau AS BIGINT) AS dau,
-           CAST(w.wau AS BIGINT) AS wau,
-           CAST((1000 * d.dau) // w.wau AS BIGINT) AS stickiness_permille
-    FROM dau d JOIN wau w ON w.x = d.x
-    ORDER BY day_idx
-    """,
-)
-def events_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DAU / trailing-7-day WAU per day — the classic stickiness ratio
-    (DAU/WAU → how much of the weekly audience shows up daily).  WAU
-    is EXACT distinct users over [d−6, d], computed scalably by the
-    expansion trick: each (user, active-day) row emits its 7 trailing
-    membership days, and a distinct-then-count groupBy(day) replaces
-    the naive 7-day range self-join (which re-scans the activity table
-    per day) — a constant 7× map-side blow-up of the ALREADY
-    user-day-deduplicated relation, never of raw events.  First 6 days
-    carry partial windows (standard for trailing metrics); days are
-    emitted only where DAU exists (inner join).
-
-    Scale shape: groupBy(user, day) dedup is the one corpus shuffle;
-    the ×7 sequence-explode is map-side; both counts are combinable
-    groupBys on day keys.  No window, no BNLJ, no driver loop."""
-    ud = (
-        load_testdata(spark, sf_dir, "events")
-        .select(
-            "user_id",
-            F.expr("datediff(cast(ts as date), date'2024-01-01')").alias("x"),
-        )
-        .distinct()
-    )
-    dau = ud.groupBy("x").agg(F.count(F.lit(1)).alias("dau"))
-    span = (
-        ud.select(
-            "user_id",
-            F.explode(F.sequence(F.col("x"), F.col("x") + 6)).alias("x"),
-        )
-        .distinct()
-    )
-    wau = span.groupBy("x").agg(F.count(F.lit(1)).alias("wau"))
-    return (
-        dau.join(wau, "x")
-        .select(
-            F.col("x").cast("int").alias("day_idx"),
-            F.col("dau").cast("bigint"),
-            F.col("wau").cast("bigint"),
-            F.expr("cast(div(1000 * dau, wau) as bigint)").alias(
-                "stickiness_permille"
-            ),
-        )
-        .orderBy("day_idx")
-    )
-
-
-# ---------------------------------------------------------------------------
 # Ship-latency quantiles
 # ---------------------------------------------------------------------------
 
@@ -4406,125 +3268,7 @@ def orders_ship_latency_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # ---------------------------------------------------------------------------
-# Round-6 batch 14: LSH banding sweep, user lifetimes, modality coverage
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "events_user_lifetime_stats",
-    """
-    WITH ul AS (
-        SELECT user_id,
-               MAX(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)))
-                 - MIN(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)))
-                 AS lifetime_days,
-               COUNT(*) AS n_events
-        FROM events GROUP BY user_id
-    )
-    SELECT CAST(lifetime_days // 7 AS INTEGER) AS lifetime_weeks,
-           CAST(COUNT(*) AS BIGINT) AS n_users,
-           CAST(SUM(n_events) AS BIGINT) AS total_events,
-           CAST(SUM(n_events) // COUNT(*) AS BIGINT) AS events_per_user
-    FROM ul GROUP BY 1 ORDER BY 1
-    """,
-)
-def events_user_lifetime_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """User-lifetime histogram: days between each user's first and
-    last event, bucketed by week, with cohort mass and per-user
-    intensity — the churn-shape summary (is the base long-lived or a
-    spike of one-week tourists?) that complements a cohort-retention
-    matrix (which tracks WHEN users return; this tracks HOW LONG they
-    stay at all).
-
-    Scale shape: ONE map-side-combinable groupBy(user) computes
-    min/max/count per user; the week histogram is a second combinable
-    groupBy over the per-user relation.  Two shuffles total, both on
-    natural keys; no window, no BNLJ, no broadcast."""
-    ul = (
-        load_testdata(spark, sf_dir, "events")
-        .select(
-            "user_id",
-            F.expr("datediff(cast(ts as date), date'2024-01-01')").alias("x"),
-        )
-        .groupBy("user_id")
-        .agg(
-            (F.max("x") - F.min("x")).alias("lifetime_days"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-    )
-    return (
-        ul.groupBy(F.expr("cast(div(lifetime_days, 7) as int)").alias("lifetime_weeks"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_users"),
-            F.sum("n_events").cast("bigint").alias("total_events"),
-        )
-        .select(
-            "lifetime_weeks",
-            "n_users",
-            "total_events",
-            F.expr("cast(div(total_events, n_users) as bigint)").alias(
-                "events_per_user"
-            ),
-        )
-        .orderBy("lifetime_weeks")
-    )
-
-
-@register(
-    "crossmodal_coverage_report",
-    """
-    WITH cov AS (
-        SELECT d.source,
-               CASE WHEN e.vec_id IS NULL THEN 0 ELSE 1 END AS has_vec
-        FROM documents d
-        LEFT JOIN embeddings e ON e.vec_id = d.doc_id
-    )
-    SELECT source,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(has_vec) AS BIGINT) AS n_with_embedding,
-           CAST((1000 * SUM(has_vec)) // COUNT(*) AS BIGINT)
-               AS coverage_permille
-    FROM cov GROUP BY source ORDER BY source
-    """,
-)
-def crossmodal_coverage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Modality-coverage audit: per source, how many documents have a
-    paired embedding row (id-join convention doc_id = vec_id) — the data-completeness gate a
-    multimodal training run checks BEFORE sampling, because a source
-    whose vectors are missing silently vanishes from contrastive
-    batches built by inner joins.
-
-    Scale shape: one LEFT equi-join on the id key (both sides
-    id-partitioned at production layout, so co-located) and one
-    combinable groupBy(source) to |sources| rows.  No window, no
-    BNLJ."""
-    docs = load_testdata(spark, sf_dir, "documents").select("doc_id", "source")
-    emb = load_testdata(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("doc_id"), F.lit(1).alias("has_vec")
-    )
-    return (
-        docs.join(emb, "doc_id", "left")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum(F.coalesce(F.col("has_vec"), F.lit(0)))
-            .cast("bigint")
-            .alias("n_with_embedding"),
-        )
-        .select(
-            "source",
-            "n_docs",
-            "n_with_embedding",
-            F.expr("cast(div(1000 * n_with_embedding, n_docs) as bigint)").alias(
-                "coverage_permille"
-            ),
-        )
-        .orderBy("source")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Round-6 batch 15: dedup removal bias, repeat-purchase gaps, hash collisions
+# Dedup removal bias
 # ---------------------------------------------------------------------------
 
 
@@ -4660,236 +3404,8 @@ def dedup_removal_bias_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "orders_repeat_purchase_intervals",
-    """
-    WITH o AS (
-        SELECT o_custkey,
-               datediff('day', DATE '1992-01-01', o_orderdate) AS x,
-               o_orderkey
-        FROM orders
-    ),
-    gaps AS (
-        SELECT o_custkey,
-               x - lag(x) OVER (PARTITION BY o_custkey
-                                ORDER BY x, o_orderkey) AS gap
-        FROM o
-    ),
-    g2 AS (
-        SELECT c.c_mktsegment AS segment, g.gap
-        FROM gaps g JOIN customer c ON c.c_custkey = g.o_custkey
-        WHERE g.gap IS NOT NULL
-    ),
-    grid AS (SELECT segment, gap, COUNT(*) AS c FROM g2 GROUP BY 1, 2),
-    cum AS (
-        SELECT segment, gap, c,
-               SUM(c) OVER (PARTITION BY segment ORDER BY gap
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                                     AND CURRENT ROW) AS cc
-        FROM grid
-    ),
-    tot AS (SELECT segment, SUM(c) AS n FROM grid GROUP BY 1)
-    SELECT cum.segment,
-           CAST(MIN(n) AS BIGINT) AS n_gaps,
-           CAST(MIN(CASE WHEN cc >= (50 * n + 99) // 100 THEN gap END)
-                AS BIGINT) AS p50_days,
-           CAST(MIN(CASE WHEN cc >= (90 * n + 99) // 100 THEN gap END)
-                AS BIGINT) AS p90_days
-    FROM cum JOIN tot ON tot.segment = cum.segment
-    GROUP BY cum.segment
-    ORDER BY cum.segment
-    """,
-)
-def orders_repeat_purchase_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Repeat-purchase cadence per market segment: exact p50/p90 of
-    the days between a customer's consecutive orders — the
-    reorder-cycle profile behind replenishment forecasting and the
-    'is BUILDING stickier than MACHINERY' comparison (per-segment
-    cuts at order grain).
-
-    Parity: per-customer ordering ties (same order date) break by
-    o_orderkey on both engines; quantiles are percentile_disc via the
-    shared cumsum-threshold contract.
-
-    Scale shape: the lag runs in a CUSTOMER-partitioned window
-    (natural key); the segment tag is one key equi-join to the
-    customer dim; quantile selection collapses to the bounded
-    (|segments| × gap-day-domain) grid with a segment-PARTITIONED
-    cumsum — no global window, no BNLJ."""
-    o = load_testdata(spark, sf_dir, "orders").select(
-        "o_custkey",
-        F.expr("datediff(o_orderdate, date'1992-01-01')").alias("x"),
-        "o_orderkey",
-    )
-    w = Window.partitionBy("o_custkey").orderBy("x", "o_orderkey")
-    gaps = o.select(
-        "o_custkey", (F.col("x") - F.lag("x").over(w)).alias("gap")
-    ).filter(F.col("gap").isNotNull())
-    cust = load_testdata(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"), F.col("c_mktsegment").alias("segment")
-    )
-    from .operators.quantiles import grid_quantiles
-
-    g2 = gaps.join(cust, "o_custkey").select("segment", "gap")
-    q = grid_quantiles(g2, ["segment"], "gap", [50, 90], count_alias="n_gaps")
-    return q.select(
-        "segment",
-        "n_gaps",
-        F.col("p50").alias("p50_days"),
-        F.col("p90").alias("p90_days"),
-    ).orderBy("segment")
-
-
 # ---------------------------------------------------------------------------
-# Round-6 batch 17: Good-Turing unseen mass, weekly type-mix drift
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "vocab_good_turing_unseen_mass",
-    r"""
-    WITH tok AS (
-        SELECT unnest(string_split_regex(text, '\s+')) AS tok FROM documents
-    ),
-    tc AS (SELECT tok, COUNT(*) AS c FROM tok GROUP BY tok)
-    SELECT CAST(SUM(c) AS BIGINT) AS n_tokens,
-           CAST(COUNT(*) AS BIGINT) AS vocab_size,
-           CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax,
-           CAST(SUM(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_dis_legomena,
-           CAST((1000 * SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END)) // SUM(c)
-               AS BIGINT) AS unseen_mass_permille,
-           CAST((1000 * SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END)) // COUNT(*)
-               AS BIGINT) AS hapax_vocab_permille
-    FROM tc
-    """,
-)
-def vocab_good_turing_unseen_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Good–Turing unseen-probability-mass estimate: P(next token is
-    NOVEL) ≈ N₁/N (hapax count over token count) — the language-model
-    smoothing number that says how much probability a model trained
-    on this corpus must reserve for words it has never seen, and the
-    leading indicator for 'will more data still help the tokenizer'
-    (falling hapax share = saturating vocabulary — the same signal
-    vocab_heaps_growth reads as a curve, here as the classical point
-    estimate).  Dis-legomena (c=2) ride along for the GT confidence
-    heuristic (N₁ should ≈ 2·N₂ under Zipf).
-
-    Scale shape: explode → ONE map-side-combinable groupBy(token),
-    then a single global aggregate projection — no join, no window,
-    no broadcast, nothing else.  The vocabulary relation is the same
-    one every tokenizer-build query already pays for."""
-    docs = load_testdata(spark, sf_dir, "documents")
-    tc = (
-        docs.select(F.explode(X.tokens("text")).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    return tc.agg(
-        F.sum("c").cast("bigint").alias("n_tokens"),
-        F.count(F.lit(1)).cast("bigint").alias("vocab_size"),
-        F.sum(F.when(F.col("c") == 1, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_hapax"),
-        F.sum(F.when(F.col("c") == 2, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_dis_legomena"),
-        F.expr(
-            "cast(div(1000 * sum(case when c = 1 then 1 else 0 end), sum(c))"
-            " as bigint)"
-        ).alias("unseen_mass_permille"),
-        F.expr(
-            "cast(div(1000 * sum(case when c = 1 then 1 else 0 end), count(1))"
-            " as bigint)"
-        ).alias("hapax_vocab_permille"),
-    )
-
-
-@register(
-    "events_type_mix_drift_weekly",
-    """
-    WITH e AS (
-        SELECT event_type,
-               datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) // 7 AS wk
-        FROM events
-    ),
-    wt AS (SELECT wk, event_type, COUNT(*) AS c FROM e GROUP BY 1, 2),
-    wn AS (SELECT wk, SUM(c) AS nw FROM wt GROUP BY 1),
-    ot AS (SELECT event_type, COUNT(*) AS ct FROM e GROUP BY 1),
-    tot AS (SELECT SUM(ct) AS n FROM ot),
-    cells AS (
-        -- FULL week x type grid: a type with ZERO events in a week
-        -- must still contribute |0 - p_all| (the vanished-logger case
-        -- is the largest deviation, not a missing term)
-        SELECT g.wk,
-               abs((1000000 * COALESCE(wt.c, 0)) // g.nw
-                   - (1000000 * g.ct) // tot.n) AS dev
-        FROM (SELECT wn.wk, wn.nw, ot.event_type, ot.ct
-              FROM wn CROSS JOIN ot) g
-        LEFT JOIN wt ON wt.wk = g.wk AND wt.event_type = g.event_type
-        CROSS JOIN tot
-    )
-    SELECT CAST(c.wk AS INTEGER) AS week,
-           CAST(MIN(wn.nw) AS BIGINT) AS n_events,
-           CAST(SUM(c.dev) // 2000 AS BIGINT) AS tvd_permille
-    FROM cells c JOIN wn ON wn.wk = c.wk
-    GROUP BY c.wk
-    ORDER BY week
-    """,
-)
-def events_type_mix_drift_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly event-type MIX drift: total-variation distance (permille)
-    between each week's event-type distribution and the whole-corpus
-    mix — the instrumentation-health monitor that catches a logger
-    change ('clicks stopped firing in week 9') as a composition shift
-    even when total volume looks normal: categorical drift with a
-    per-week trail.
-
-    Integer contract: shares in micro-units by truncating division;
-    TVD = Σ|dev| // 2000 (the ½ and the permille fold into one
-    divisor).  Slight truncation bias is identical on both engines.
-
-    Scale shape: one combinable groupBy(week, type) bounds everything
-    at ≤|weeks|·|types| rows; the deviation runs over the FULL
-    week×type grid (|weeks| totals × |types| mix — both bounded
-    aggregates, crossJoin BNLJ-allowlisted) left-joined with observed
-    counts, so zero cells keep their |0 − p_all| term; the 1-row
-    grand total broadcasts.  No window."""
-    e = load_testdata(spark, sf_dir, "events").select(
-        "event_type",
-        F.expr("div(datediff(cast(ts as date), date'2024-01-01'), 7)").alias("wk"),
-    )
-    wt = e.groupBy("wk", "event_type").agg(F.count(F.lit(1)).alias("c"))
-    wn = wt.groupBy("wk").agg(F.sum("c").alias("nw"))
-    ot = e.groupBy("event_type").agg(F.count(F.lit(1)).alias("ct"))
-    tot = ot.agg(F.sum("ct").alias("n"))
-    grid = wn.crossJoin(F.broadcast(ot))
-    cells = (
-        grid.join(wt, ["wk", "event_type"], "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "wk",
-            F.abs(
-                F.expr("div(1000000 * coalesce(c, 0L), nw)")
-                - F.expr("div(1000000 * ct, n)")
-            ).alias("dev"),
-        )
-    )
-    return (
-        cells.groupBy("wk")
-        .agg(F.sum("dev").alias("sdev"))
-        .join(wn, "wk")
-        .select(
-            F.col("wk").cast("int").alias("week"),
-            F.col("nw").cast("bigint").alias("n_events"),
-            F.expr("cast(div(sdev, 2000) as bigint)").alias("tvd_permille"),
-        )
-        .orderBy("week")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Round-6 batch 18: dedup token-savings report
+# Dedup token-savings report
 # ---------------------------------------------------------------------------
 
 
@@ -4998,77 +3514,7 @@ def dedup_token_savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-6 batch 19: new-vs-returning split
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "events_new_vs_returning_daily",
-    """
-    WITH ud AS (
-        SELECT DISTINCT user_id,
-               datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS x
-        FROM events
-    ),
-    first_day AS (SELECT user_id, MIN(x) AS fd FROM ud GROUP BY user_id)
-    SELECT CAST(ud.x AS INTEGER) AS day_idx,
-           CAST(COUNT(*) AS BIGINT) AS active_users,
-           CAST(SUM(CASE WHEN f.fd = ud.x THEN 1 ELSE 0 END) AS BIGINT)
-               AS new_users,
-           CAST(SUM(CASE WHEN f.fd < ud.x THEN 1 ELSE 0 END) AS BIGINT)
-               AS returning_users,
-           CAST((1000 * SUM(CASE WHEN f.fd = ud.x THEN 1 ELSE 0 END))
-                // COUNT(*) AS BIGINT) AS new_share_permille
-    FROM ud JOIN first_day f ON f.user_id = ud.user_id
-    GROUP BY ud.x ORDER BY day_idx
-    """,
-)
-def events_new_vs_returning_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily active users split into NEW (first-ever active day) vs
-    RETURNING — the growth-accounting decomposition behind every DAU
-    chart: flat DAU with a rising new-share means churn is eating
-    acquisition; a cohort-retention matrix explains WHERE the
-    returners come from, this gives the daily topline split.
-
-    Scale shape: one groupBy(user, day) dedup, one combinable
-    groupBy(user) MIN for first-day, one key equi-join back, one
-    groupBy(day) — all natural-key shuffles, no window, no BNLJ."""
-    ud = (
-        load_testdata(spark, sf_dir, "events")
-        .select(
-            "user_id",
-            F.expr("datediff(cast(ts as date), date'2024-01-01')").alias("x"),
-        )
-        .distinct()
-    )
-    first_day = ud.groupBy("user_id").agg(F.min("x").alias("fd"))
-    return (
-        ud.join(first_day, "user_id")
-        .groupBy("x")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("active_users"),
-            F.sum(F.when(F.col("fd") == F.col("x"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("new_users"),
-            F.sum(F.when(F.col("fd") < F.col("x"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("returning_users"),
-        )
-        .select(
-            F.col("x").cast("int").alias("day_idx"),
-            "active_users",
-            "new_users",
-            "returning_users",
-            F.expr("cast(div(1000 * new_users, active_users) as bigint)").alias(
-                "new_share_permille"
-            ),
-        )
-        .orderBy("day_idx")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Round-6 batch 20: hour-of-week heatmap, trailing-7d revenue MA
+# Hour-of-week heatmap
 # ---------------------------------------------------------------------------
 
 
@@ -5124,75 +3570,8 @@ def events_hour_weekday_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "orders_daily_revenue_7d_ma",
-    """
-    WITH daily AS (
-        SELECT datediff('day', DATE '1992-01-01', o_orderdate) AS x,
-               SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS rev_c
-        FROM orders GROUP BY 1
-    ),
-    contrib AS (
-        SELECT d AS x, rev_c
-        FROM daily CROSS JOIN unnest(generate_series(daily.x, daily.x + 6)) t(d)
-    ),
-    ma AS (
-        SELECT x, SUM(rev_c) AS s, COUNT(*) AS k
-        FROM contrib GROUP BY x
-    )
-    SELECT CAST(d.x AS INTEGER) AS day_idx,
-           CAST(d.rev_c AS BIGINT) AS revenue_cents,
-           CAST(m.s // m.k AS BIGINT) AS ma7_cents,
-           CAST(m.k AS INTEGER) AS window_days
-    FROM daily d JOIN ma m ON m.x = d.x
-    ORDER BY day_idx
-    """,
-)
-def orders_daily_revenue_7d_ma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily revenue with its trailing-7-day moving average — the
-    smoothed topline read alongside the raw series (the MA crossing
-    under the daily line flags a slowdown earlier than eyeballing
-    noise).  Partial windows at the series head average over the
-    days actually present (window_days reports the divisor).
-
-    Scale shape: the SCALABLE moving-average spelling — each daily
-    aggregate row EMITS its 7 trailing membership days (constant ×7
-    map-side sequence-explode of the ALREADY-collapsed daily
-    relation, the events_dau_wau_stickiness trick), then one
-    combinable groupBy(day) — instead of an unpartitioned range
-    window over the series (the single-task shape the fleet bans).
-    At 100 TB the daily relation is |days| rows either way; the same
-    spelling keeps working when the grain drops to minutes."""
-    daily = (
-        load_testdata(spark, sf_dir, "orders")
-        .select(
-            F.expr("datediff(o_orderdate, date'1992-01-01')").alias("x"),
-            F.expr("cast(round(o_totalprice * 100) as bigint)").alias("rc"),
-        )
-        .groupBy("x")
-        .agg(F.sum("rc").alias("rev_c"))
-    )
-    contrib = daily.select(
-        F.explode(F.sequence(F.col("x"), F.col("x") + 6)).alias("x"),
-        "rev_c",
-    )
-    ma = contrib.groupBy("x").agg(
-        F.sum("rev_c").alias("s"), F.count(F.lit(1)).alias("k")
-    )
-    return (
-        daily.join(ma, "x")
-        .select(
-            F.col("x").cast("int").alias("day_idx"),
-            F.col("rev_c").cast("bigint").alias("revenue_cents"),
-            F.expr("cast(div(s, k) as bigint)").alias("ma7_cents"),
-            F.col("k").cast("int").alias("window_days"),
-        )
-        .orderBy("day_idx")
-    )
-
-
 # ---------------------------------------------------------------------------
-# Round-6 batch 21: soft-dedup duplicate down-weighting
+# Soft-dedup duplicate down-weighting
 # ---------------------------------------------------------------------------
 
 
@@ -5308,7 +3687,7 @@ def sample_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-6 batch 22: LSH candidate precision report
+# LSH candidate precision report
 # ---------------------------------------------------------------------------
 
 

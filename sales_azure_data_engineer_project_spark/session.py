@@ -68,21 +68,6 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        # Plan-STRING cap.  Spark renders a physicalPlanDescription for
-        # every execution (even with the UI off); the renderer expands
-        # plan DAGs into TREES, so a composed query whose lazy persists
-        # are referenced from several report branches (the train-prep
-        # funnel: dc ×3 → sd → slv ×2 → the hierarchical-quantizer
-        # union) explodes exponentially IN THE STRING while executing
-        # fine — the round-8 300× funnel OOM was StringConcat.append
-        # inside QueryExecution.explainString, not a data operator.
-        # Spark's default cap is ~2³¹ chars, i.e. unbounded in practice.
-        # 20M chars (~40 MB) sits 3× above the fleet's largest LEGIT
-        # plan string (the composed funnel renders 7.2M chars at smoke
-        # SF — measured round 8), so the plan-hygiene audits that parse
-        # executedPlan().toString() never see a truncated plan, while
-        # the pathological exponential render stays bounded.
-        .config("spark.sql.maxPlanStringLength", "20000000")
         .config("spark.ui.showConsoleProgress", "false")
         # Janino's compiled-class cache: LRU, one per JVM, keyed by the
         # generated source.  Classes per operation, counted with Spark's
@@ -93,9 +78,9 @@ def get_spark(
         # 100-230 classes) does not fit, so each class was evicted
         # before its plan shape ran again: every medallion batch
         # recompiled 54-76 classes and every star pass 130.  2000 is
-        # nearly 9x the largest of these.  It does not hold a whole
-        # registry pass (tools/check_oracle.py prints the count: 2,457
-        # at sf0.01), which is not one operation's working set.
+        # nearly 9x the largest of these.  A whole registry pass is not
+        # one operation's working set, but it fits too
+        # (tools/check_oracle.py prints the count: 1,542 at sf0.01).
         .config("spark.sql.codegen.cache.maxEntries", "2000")
         # The corpus events table has shipped as TIMESTAMP(NANOS) (reader
         # rejects it — read as long, normalize in io) and as naive

@@ -184,48 +184,6 @@ def test_arrow_assignment_matches_sql_fold(spark, sf_smoke):
     assert sql_rows == arrow_rows
 
 
-def test_token_count_invariants(spark, sf_smoke):
-    """BPE-ish pre-tokenization splits at least as fine as whitespace:
-    bpe_tokens >= ws_tokens for every doc, and the density ratio is
-    consistent with the counts it was derived from."""
-    import __spark_entry__ as entry_mod
-
-    rows = entry_mod.queries()["text_token_counts"](spark, sf_smoke).collect()
-    assert rows
-    for r in rows:
-        assert r["bpe_tokens"] >= r["ws_tokens"] > 0
-        assert r["chars_per_bpe_milli"] == 1000 * r["n_chars"] // r["bpe_tokens"]
-
-
-def test_decontaminate_flags_planted_eval_clones(spark, sf_smoke):
-    """Every planted near-dup clone of an eval doc (doc_id%10==0 →
-    clone at +100000) must be flagged as contaminated — the clone
-    drops only the last 3 tokens, so nearly all of its 8-token spans
-    exist verbatim in its eval original.  No eval doc may appear in
-    the output (decontamination reports TRAINING docs only), and exact
-    dup copies (+200000) of eval docs must be flagged too."""
-    import __spark_entry__ as entry_mod
-    from sales_azure_data_engineer_project_spark.queries_extensions import (
-        _dedup_corpus,
-    )
-
-    out = entry_mod.queries()["pipeline_decontaminate"](spark, sf_smoke)
-    flagged = {r["doc_id"] for r in out.collect()}
-    assert flagged, "expected contaminated docs at smoke scale"
-    # output contains no eval docs
-    assert not any(d % 10 == 0 and d < 100000 for d in flagged)
-    corpus_ids = {
-        r["doc_id"] for r in _dedup_corpus(spark, sf_smoke).select("doc_id").collect()
-    }
-    # every near-dup clone of an eval doc whose original has >= 8+3
-    # tokens shares spans; spot-check: all planted exact copies of eval
-    # docs (ids ending the %170 residue chain) are flagged
-    exact_eval_copies = {
-        d for d in corpus_ids if d >= 200000 and (d - 200000) % 10 == 0
-    }
-    assert exact_eval_copies <= flagged
-
-
 def test_pack_sequences_invariants(spark, sf_smoke):
     """Packing arithmetic: sequences = ceil(tokens/512) per shard, fill
     can never exceed 1000 permille, and straddling docs are bounded by
@@ -328,24 +286,6 @@ def test_hashed_classifier_matches_python_reference(spark):
         assert out[k]["avg_w_milli"] == int(1000 * s / n) if s >= 0 else -(
             1000 * (-s) // n
         )
-
-
-def test_boilerplate_chunks_flags_planted_dups(spark, sf_smoke):
-    """Docs with a planted exact copy must have every chunk shared
-    (boiler_permille == 1000 on both the original and the copy); the
-    corpus-wide shared mass must be nonzero and bounded by n_chunks."""
-    from sales_azure_data_engineer_project_spark.queries_extensions import (
-        text_boilerplate_chunks,
-    )
-
-    out = {r["doc_id"]: r for r in text_boilerplate_chunks(spark, sf_smoke).collect()}
-    exact_originals = [d for d in out if d < 100000 and d % 17 == 0]
-    assert exact_originals
-    for d in exact_originals:
-        assert out[d]["boiler_permille"] == 1000, d
-        assert out[d + 200000]["boiler_permille"] == 1000, d
-    for r in out.values():
-        assert 0 <= r["n_shared"] <= r["n_chunks"]
 
 
 def test_pca_power_iteration_matches_numpy(spark, sf_smoke):
@@ -622,31 +562,6 @@ def test_embedding_outliers_consistent_with_cluster_radius(spark, sf_smoke):
         assert ds[0] == radius[c]
 
 
-def test_metadata_consistency_flags_planted_drift(spark):
-    """A doc whose stored n_chars disagrees with its payload by 7 must
-    be the only mismatch, with the drift magnitude reported."""
-    import os
-    import tempfile
-
-    from sales_azure_data_engineer_project_spark.queries_extensions import (
-        quality_metadata_consistency,
-    )
-
-    rows = [
-        (1, "hello world", "en", "sA", 11),
-        (2, "goodbye", "en", "sA", 14),   # planted: off by 7
-        (3, "ok then", "en", "sB", 7),
-    ]
-    with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(
-            rows, ["doc_id", "text", "lang", "source", "n_chars"]
-        ).write.parquet(os.path.join(d, "documents.parquet"))
-        out = {r["source"]: r for r in quality_metadata_consistency(spark, d).collect()}
-    assert out["sA"]["n_mismatch"] == 1 and out["sA"]["max_abs_drift"] == 7
-    assert out["sA"]["mismatch_permille"] == 500
-    assert out["sB"]["n_mismatch"] == 0 and out["sB"]["max_abs_drift"] == 0
-
-
 def test_hybrid_rrf_fuses_both_tiers(spark, sf_smoke):
     """RRF output must reproduce div(1e6, 60+rk) per tier exactly, rank
     by fused score, and agree with the standalone BM25 tier on lexical
@@ -755,67 +670,6 @@ def test_priority_sample_plan_has_partial_window_group_limit(spark, sf_smoke):
     assert "WindowGroupLimit" in plan and "Partial" in plan
 
 
-def test_chi2_independence_differential(spark, sf_smoke):
-    """Cell counts, milli-exact expecteds, and the double-fold
-    contribution recomputed from the raw rows."""
-    import math
-    import os
-
-    import pyarrow.parquet as pq
-    from sales_azure_data_engineer_project_spark import queries_core as Q
-    from sales_azure_data_engineer_project_spark import queries_extensions  # noqa: F401 (registers)
-
-    got = {
-        (r["l_returnflag"], r["l_linestatus"]): r
-        for r in Q.QUERIES["stats_chi2_independence"](spark, sf_smoke).collect()
-    }
-    t = pq.read_table(
-        os.path.join(sf_smoke, "lineitem.parquet"),
-        columns=["l_returnflag", "l_linestatus"],
-    ).to_pandas()
-    obs = t.groupby(["l_returnflag", "l_linestatus"]).size()
-    rr = t.groupby("l_returnflag").size()
-    cc = t.groupby("l_linestatus").size()
-    n = len(t)
-    assert len(got) == len(obs)
-    for (f, s), o in obs.items():
-        r = got[(f, s)]
-        assert r["observed"] == o
-        assert r["expected_milli"] == (1000 * rr[f] * cc[s]) // n
-        diff = float(o * n - rr[f] * cc[s])
-        want = math.floor(
-            (1000000.0 * diff * diff)
-            / (float(rr[f]) * float(cc[s]) * float(n) * float(n))
-        )
-        assert r["contrib_micro"] == want
-
-
-def test_benford_deviation_differential(spark, sf_smoke):
-    import os
-    from collections import Counter
-
-    import pyarrow.parquet as pq
-    from sales_azure_data_engineer_project_spark import queries_core as Q
-    from sales_azure_data_engineer_project_spark import queries_extensions as QE
-
-    got = {
-        r["first_digit"]: r
-        for r in Q.QUERIES["orders_benford_deviation"](spark, sf_smoke).collect()
-    }
-    t = pq.read_table(
-        os.path.join(sf_smoke, "orders.parquet"), columns=["o_totalprice"]
-    ).to_pandas()
-    digits = Counter(int(str(int(round(p * 100)))[0]) for p in t["o_totalprice"])
-    n = len(t)
-    assert set(got) == set(digits)
-    for d, c in digits.items():
-        r = got[d]
-        assert r["n_obs"] == c
-        assert r["obs_share_milli"] == (1000 * c) // n
-        assert r["benford_share_milli"] == QE._BENFORD_MILLI[d]
-        assert r["dev_milli"] == (1000 * c) // n - QE._BENFORD_MILLI[d]
-
-
 def test_cube_margins_consistent(spark, sf_smoke):
     """All four grouping sets must be internally consistent: cell rows
     sum to each margin and to the grand total."""
@@ -897,123 +751,6 @@ def test_apportionment_sums_to_budget(spark, sf_smoke):
         assert r["floor_quota"] == quotas[r["source"]]
         assert r["got_extra"] == (1 if r["source"] in extra else 0)
         assert r["allocation"] == quotas[r["source"]] + r["got_extra"]
-
-
-def test_registered_capped_lsh_star_shape(spark):
-    """The registered hot-bucket query (dedup_lsh_hot_bucket_capped)
-    actually exercises star emission: the planted boilerplate (all even
-    doc_ids) collapses into one bucket per band, so the hub (min even
-    id) pairs with every other even doc across BOTH bands, and no
-    even-even pair bypasses the hub."""
-    import __spark_entry__ as m
-
-    rows = m.queries()["dedup_lsh_hot_bucket_capped"](
-        spark, "/root/testdata/sf0.001"
-    ).collect()
-    import duckdb
-
-    n_even, hub = duckdb.sql(
-        "SELECT count(*), min(doc_id) FROM "
-        "'/root/testdata/sf0.001/documents.parquet' WHERE doc_id % 2 = 0"
-    ).fetchone()
-    star = [r for r in rows if r["id_a"] == hub]
-    assert len(star) == n_even - 1
-    assert all(r["shared_bands"] == 2 for r in star)  # identical docs: both bands
-    assert {r["id_b"] % 2 for r in star} == {0}
-    # star, not clique: every even-even pair goes through the hub
-    assert not [
-        r for r in rows
-        if r["id_a"] % 2 == 0 and r["id_b"] % 2 == 0 and r["id_a"] != hub
-    ]
-    # cold (odd-id) docs still deduplicate via exact all-pairs
-    assert all(r["id_a"] < r["id_b"] for r in rows)
-
-
-def test_simpson_diversity_differential(spark):
-    """quality_simpson_diversity vs collections.Counter on sf0.001."""
-    import collections
-    import re as _re
-
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    got = {r["source"]: r for r in m.queries()["quality_simpson_diversity"](spark, sf).collect()}
-    rows = duckdb.sql(f"SELECT source, text FROM '{sf}/documents.parquet'").fetchall()
-    per: dict = {}
-    for source, text in rows:
-        per.setdefault(source, collections.Counter()).update(_re.split(r"\s+", text))
-    assert set(got) == set(per)
-    for source, cnt in per.items():
-        n = sum(cnt.values())
-        coll2 = sum(c * (c - 1) for c in cnt.values())
-        r = got[source]
-        assert r["n_tokens"] == n and r["n_types"] == len(cnt)
-        assert r["simpson_micro"] == (1000000 * coll2) // (n * (n - 1))
-        assert r["diversity_micro"] == 1000000 - r["simpson_micro"]
-
-
-def test_skew_report_differential(spark):
-    """pipeline_skew_report vs a plain-Python pass over the real key
-    distribution (p50/p99 from the count-of-counts grid, ceiling-rank
-    semantics: smallest cnt whose cumulative key share reaches q)."""
-    import collections
-
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    r = m.queries()["pipeline_skew_report"](spark, sf).collect()[0]
-    keys = [
-        k for (k,) in duckdb.sql(
-            f"SELECT l_partkey FROM '{sf}/lineitem.parquet'"
-        ).fetchall()
-    ]
-    cnt = collections.Counter(keys)
-    grid = collections.Counter(cnt.values())
-    n_keys, n_rows, mx = len(cnt), len(keys), max(cnt.values())
-
-    def q_at(q_num, q_den):
-        ck = 0
-        for c in sorted(grid):
-            ck += grid[c]
-            if q_den * ck >= q_num * n_keys:
-                return c
-
-    assert (r["n_keys"], r["n_rows"], r["max_cnt"]) == (n_keys, n_rows, mx)
-    assert r["p50_cnt"] == q_at(1, 2)
-    assert r["p99_cnt"] == q_at(99, 100)
-    assert r["top_share_micro"] == (1000000 * mx) // n_rows
-    assert r["skew_ratio_milli"] == (1000 * mx) // r["p50_cnt"]
-
-
-def test_oov_rate_differential(spark):
-    """vocab_oov_rate_by_source vs Counter-based top-256 vocab."""
-    import collections
-    import re as _re
-
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    got = {r["source"]: r for r in m.queries()["vocab_oov_rate_by_source"](spark, sf).collect()}
-    rows = duckdb.sql(f"SELECT source, text FROM '{sf}/documents.parquet'").fetchall()
-    glob: collections.Counter = collections.Counter()
-    per: dict = {}
-    for source, text in rows:
-        toks = _re.split(r"\s+", text)
-        glob.update(toks)
-        per.setdefault(source, collections.Counter()).update(toks)
-    vocab = {t for t, _ in sorted(glob.items(), key=lambda kv: (-kv[1], kv[0]))[:256]}
-    for source, cnt in per.items():
-        n = sum(cnt.values())
-        oov = sum(c for t, c in cnt.items() if t not in vocab)
-        r = got[source]
-        assert (r["n_tokens"], r["n_oov"]) == (n, oov)
-        assert r["oov_permille"] == (1000 * oov) // n
 
 
 def test_touch_attribution_differential(spark):
@@ -1098,141 +835,6 @@ def test_kcore_peeling_differential(spark):
     assert got == expect
 
 
-def test_heaps_growth_differential(spark):
-    """vocab_heaps_growth vs a sequential Python scan: walk documents
-    in doc_id order accumulating a seen-token set; the cumulative
-    vocab at each decile boundary must equal the first-occurrence
-    histogram formulation exactly."""
-    import re
-
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    rows = duckdb.sql(
-        f"SELECT doc_id, text FROM '{sf}/documents.parquet' ORDER BY doc_id"
-    ).fetchall()
-    mx = max(r[0] for r in rows)
-    seen: set = set()
-    docs_cum = [0] * 10
-    vocab_at = [0] * 10
-    for doc_id, text in rows:
-        dec = min((doc_id * 10) // (mx + 1), 9)
-        docs_cum[dec] += 1
-        for t in re.split(r"\s+", text):
-            seen.add(t)
-        vocab_at[dec] = len(seen)
-    # forward-fill vocab (a decile inherits the running set) and
-    # accumulate docs
-    for i in range(1, 10):
-        if vocab_at[i] == 0:
-            vocab_at[i] = vocab_at[i - 1]
-        docs_cum[i] += docs_cum[i - 1]
-    got = m.queries()["vocab_heaps_growth"](spark, sf).collect()
-    assert [r["decile"] for r in got] == list(range(10))
-    assert [r["docs_cum"] for r in got] == docs_cum
-    assert [r["vocab_cum"] for r in got] == vocab_at
-    # Heaps sanity: cumulative vocab is monotone and positive (the
-    # sf0.001 generator vocab saturates in decile 0 — 31 tokens — so
-    # strict growth only appears at larger SFs)
-    assert vocab_at[9] >= vocab_at[0] > 0
-
-
-def test_journey_trigrams_differential(spark):
-    """events_journey_trigrams vs a plain-Python per-user sequence
-    walk with (ts, event_id) ordering on the real sf0.001 events."""
-    from collections import Counter
-
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    rows = duckdb.sql(
-        f"SELECT user_id, ts, event_id, event_type FROM '{sf}/events.parquet'"
-    ).fetchall()
-    per: dict = {}
-    for u, ts, eid, ty in rows:
-        per.setdefault(u, []).append((ts, eid, ty))
-    cnt: Counter = Counter()
-    for seq in per.values():
-        seq.sort()
-        types = [t[2] for t in seq]
-        for i in range(len(types) - 2):
-            cnt[">".join(types[i : i + 3])] += 1
-    expect = sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[:20]
-    got = [
-        (r["journey"], r["n"])
-        for r in m.queries()["events_journey_trigrams"](spark, sf).collect()
-    ]
-    assert got == expect
-
-
-def test_balanced_downsample_differential(spark):
-    """sample_balanced_class_downsample vs plain-Python md5-ordered
-    selection: identical kept SET per label (checksummed), minority
-    size everywhere, and determinism — the kept set of a label never
-    depends on other labels' rows."""
-    import hashlib
-
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    rows = duckdb.sql(
-        f"SELECT vec_id, label FROM '{sf}/embeddings.parquet'"
-    ).fetchall()
-    per: dict = {}
-    for vid, lab in rows:
-        per.setdefault(lab, []).append(int(vid))
-    mn = min(len(v) for v in per.values())
-    got = {
-        r["label"]: r
-        for r in m.queries()["sample_balanced_class_downsample"](spark, sf).collect()
-    }
-    assert set(got) == set(per)
-    for lab, ids in per.items():
-        ranked = sorted(ids, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))
-        kept = ranked[:mn]
-        r = got[lab]
-        assert r["n_orig"] == len(ids)
-        assert r["n_kept"] == mn
-        assert r["kept_id_sum"] == sum(kept)
-
-
-def test_dau_wau_differential(spark):
-    """events_dau_wau_stickiness vs plain-Python day sets: WAU(d) must
-    equal |union of active sets over [d-6, d]| exactly."""
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    rows = duckdb.sql(
-        f"""SELECT DISTINCT user_id,
-                   datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
-            FROM '{sf}/events.parquet'"""
-    ).fetchall()
-    per_day: dict = {}
-    for u, x in rows:
-        per_day.setdefault(int(x), set()).add(u)
-    got = {
-        r["day_idx"]: r
-        for r in m.queries()["events_dau_wau_stickiness"](spark, sf).collect()
-    }
-    assert set(got) == set(per_day)
-    for d, users in per_day.items():
-        wau_set = set()
-        for k in range(7):
-            wau_set |= per_day.get(d - k, set())
-        r = got[d]
-        assert r["dau"] == len(users)
-        assert r["wau"] == len(wau_set)
-        assert r["stickiness_permille"] == (1000 * len(users)) // len(wau_set)
-
-
 def test_ship_latency_quantiles_differential(spark):
     """orders_ship_latency_quantiles vs plain-Python percentile_disc
     per priority on the real sf0.001 join."""
@@ -1262,73 +864,6 @@ def test_ship_latency_quantiles_differential(spark):
         assert r["n_items"] == n
         for p in (25, 50, 75, 95):
             assert r[f"p{p}_days"] == ds[(p * n + 99) // 100 - 1]
-
-
-def test_user_lifetime_differential(spark):
-    """events_user_lifetime_stats vs plain-Python per-user min/max."""
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    rows = duckdb.sql(
-        f"""SELECT user_id,
-                   datediff('day', DATE '2024-01-01', CAST(ts AS DATE)),
-                   COUNT(*)
-            FROM '{sf}/events.parquet' GROUP BY 1, 2"""
-    ).fetchall()
-    per: dict = {}
-    for u, x, c in rows:
-        lo, hi, n = per.get(u, (10**9, -(10**9), 0))
-        per[u] = (min(lo, x), max(hi, x), n + c)
-    from collections import defaultdict
-
-    agg = defaultdict(lambda: [0, 0])
-    for lo, hi, n in per.values():
-        wk = (hi - lo) // 7
-        agg[wk][0] += 1
-        agg[wk][1] += n
-    got = {
-        r["lifetime_weeks"]: r
-        for r in m.queries()["events_user_lifetime_stats"](spark, sf).collect()
-    }
-    assert set(got) == set(agg)
-    for wk, (nu, te) in agg.items():
-        r = got[wk]
-        assert r["n_users"] == nu
-        assert r["total_events"] == te
-        assert r["events_per_user"] == te // nu
-
-
-def test_crossmodal_coverage_differential(spark):
-    """crossmodal_coverage_report vs plain-Python id-set coverage."""
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    docs = duckdb.sql(
-        f"SELECT doc_id, source FROM '{sf}/documents.parquet'"
-    ).fetchall()
-    vecs = {
-        r[0]
-        for r in duckdb.sql(
-            f"SELECT vec_id FROM '{sf}/embeddings.parquet'"
-        ).fetchall()
-    }
-    per: dict = {}
-    for did, src in docs:
-        n, w = per.get(src, (0, 0))
-        per[src] = (n + 1, w + (1 if did in vecs else 0))
-    got = {
-        r["source"]: r
-        for r in m.queries()["crossmodal_coverage_report"](spark, sf).collect()
-    }
-    assert set(got) == set(per)
-    for src, (n, wv) in per.items():
-        r = got[src]
-        assert (r["n_docs"], r["n_with_embedding"]) == (n, wv)
-        assert r["coverage_permille"] == (1000 * wv) // n
 
 
 def test_removal_bias_audit_differential(spark):
@@ -1375,109 +910,6 @@ def test_removal_bias_audit_differential(spark):
         assert (r["n_docs"], r["n_flagged"]) == (nd, nf)
         assert r["flagged_permille"] == (1000 * nf) // nd
     assert sum(1 for r in got.values() if r["n_flagged"] > 0) >= 2
-
-
-def test_repeat_purchase_intervals_differential(spark):
-    """orders_repeat_purchase_intervals vs plain-Python per-customer
-    gap walk + percentile_disc per segment."""
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    orders = duckdb.sql(
-        f"""SELECT o_custkey,
-                   datediff('day', DATE '1992-01-01', o_orderdate),
-                   o_orderkey
-            FROM '{sf}/orders.parquet'"""
-    ).fetchall()
-    seg = dict(
-        duckdb.sql(
-            f"SELECT c_custkey, c_mktsegment FROM '{sf}/customer.parquet'"
-        ).fetchall()
-    )
-    per: dict = {}
-    for ck, x, ok in orders:
-        per.setdefault(ck, []).append((int(x), int(ok)))
-    gaps: dict = {}
-    for ck, seq in per.items():
-        seq.sort()
-        for i in range(1, len(seq)):
-            gaps.setdefault(seg[ck], []).append(seq[i][0] - seq[i - 1][0])
-    got = {
-        r["segment"]: r
-        for r in m.queries()["orders_repeat_purchase_intervals"](spark, sf).collect()
-    }
-    assert set(got) == set(gaps)
-    for s, gs in gaps.items():
-        gs.sort()
-        n = len(gs)
-        r = got[s]
-        assert r["n_gaps"] == n
-        assert r["p50_days"] == gs[(50 * n + 99) // 100 - 1]
-        assert r["p90_days"] == gs[(90 * n + 99) // 100 - 1]
-
-
-def test_good_turing_differential(spark):
-    """vocab_good_turing_unseen_mass vs plain-Python token counting."""
-    import re
-    from collections import Counter
-
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    cnt: Counter = Counter()
-    for (text,) in duckdb.sql(
-        f"SELECT text FROM '{sf}/documents.parquet'"
-    ).fetchall():
-        cnt.update(re.split(r"\s+", text))
-    n = sum(cnt.values())
-    v = len(cnt)
-    n1 = sum(1 for c in cnt.values() if c == 1)
-    n2 = sum(1 for c in cnt.values() if c == 2)
-    [r] = m.queries()["vocab_good_turing_unseen_mass"](spark, sf).collect()
-    assert (r["n_tokens"], r["vocab_size"]) == (n, v)
-    assert (r["n_hapax"], r["n_dis_legomena"]) == (n1, n2)
-    assert r["unseen_mass_permille"] == (1000 * n1) // n
-    assert r["hapax_vocab_permille"] == (1000 * n1) // v
-
-
-def test_type_mix_drift_differential(spark):
-    """events_type_mix_drift_weekly vs plain-Python weekly TVD."""
-    from collections import Counter
-
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    rows = duckdb.sql(
-        f"""SELECT datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) // 7,
-                   event_type, COUNT(*)
-            FROM '{sf}/events.parquet' GROUP BY 1, 2"""
-    ).fetchall()
-    wt: dict = {}
-    ot: Counter = Counter()
-    for wk, ty, c in rows:
-        wt.setdefault(int(wk), Counter())[ty] = int(c)
-        ot[ty] += int(c)
-    n = sum(ot.values())
-    got = {
-        r["week"]: r
-        for r in m.queries()["events_type_mix_drift_weekly"](spark, sf).collect()
-    }
-    assert set(got) == set(wt)
-    for wk, cc in wt.items():
-        nw = sum(cc.values())
-        sdev = sum(
-            abs((1000000 * cc.get(ty, 0)) // nw - (1000000 * ot[ty]) // n)
-            for ty in ot  # FULL type set: zero cells contribute |0 - p_all|
-        )
-        r = got[wk]
-        assert r["n_events"] == nw
-        assert r["tvd_permille"] == sdev // 2000
 
 
 def test_token_savings_differential(spark):
@@ -1527,39 +959,6 @@ def test_token_savings_differential(spark):
     assert r["tokens_removed"] > 0, "planted copies must yield savings"
 
 
-def test_new_vs_returning_differential(spark):
-    """events_new_vs_returning_daily vs plain-Python first-day sets,
-    including the identity new + returning = active."""
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    rows = duckdb.sql(
-        f"""SELECT DISTINCT user_id,
-                   datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
-            FROM '{sf}/events.parquet'"""
-    ).fetchall()
-    per_day: dict = {}
-    first: dict = {}
-    for u, x in rows:
-        per_day.setdefault(int(x), set()).add(u)
-        first[u] = min(first.get(u, int(x)), int(x))
-    got = {
-        r["day_idx"]: r
-        for r in m.queries()["events_new_vs_returning_daily"](spark, sf).collect()
-    }
-    assert set(got) == set(per_day)
-    for d, users in per_day.items():
-        new = sum(1 for u in users if first[u] == d)
-        r = got[d]
-        assert r["active_users"] == len(users)
-        assert r["new_users"] == new
-        assert r["returning_users"] == len(users) - new
-        assert r["new_users"] + r["returning_users"] == r["active_users"]
-        assert r["new_share_permille"] == (1000 * new) // len(users)
-
-
 def test_hour_weekday_heatmap_differential(spark):
     """events_hour_weekday_heatmap vs plain-Python epoch bucketing."""
     from collections import Counter
@@ -1586,33 +985,6 @@ def test_hour_weekday_heatmap_differential(spark):
     for (w, h), r in got.items():
         assert r["n_events"] == cells[(w, h)]
         assert r["weekday_share_permille"] == (1000 * cells[(w, h)]) // wt[w]
-
-
-def test_revenue_ma7_differential(spark):
-    """orders_daily_revenue_7d_ma vs plain-Python trailing average
-    over present days, including partial head windows."""
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    rows = duckdb.sql(
-        f"""SELECT datediff('day', DATE '1992-01-01', o_orderdate),
-                   SUM(CAST(round(o_totalprice * 100) AS BIGINT))
-            FROM '{sf}/orders.parquet' GROUP BY 1"""
-    ).fetchall()
-    daily = {int(x): int(r) for x, r in rows}
-    got = {
-        r["day_idx"]: r
-        for r in m.queries()["orders_daily_revenue_7d_ma"](spark, sf).collect()
-    }
-    assert set(got) == set(daily)
-    for x, rev in daily.items():
-        window = [daily[d] for d in range(x - 6, x + 1) if d in daily]
-        r = got[x]
-        assert r["revenue_cents"] == rev
-        assert r["window_days"] == len(window)
-        assert r["ma7_cents"] == sum(window) // len(window)
 
 
 def test_soft_dedup_weights_differential(spark):
@@ -1748,5 +1120,3 @@ def test_ivf_cadence_engine_parity(spark):
             f"SELECT GREATEST(61, CAST(ceil(sqrt({n})) AS BIGINT))"
         ).fetchone()[0]
         assert got[n] == sql, n
-
-

@@ -474,121 +474,6 @@ def test_q21_window_form_vs_reference(spark):
     assert got == dict(expected)
 
 
-@SLOW
-@given(
-    ivs=st.lists(
-        st.tuples(st.integers(0, 1), st.integers(0, 12), st.integers(0, 6)),
-        min_size=1,
-        max_size=14,
-    )
-)
-def test_interval_sweep_equals_brute(spark, ivs):
-    """Boundary-sweep overlap counting ≡ the O(n²) brute force on
-    random half-open intervals (key, start, start+len) — INCLUDING
-    zero-length intervals, which are empty SETS and overlap nothing
-    (intersection semantics, documented on the operator; review
-    finding: the sweep must not emit −1 for them either)."""
-    from sales_azure_data_engineer_project_spark.operators.sweeps import (
-        interval_overlap_counts,
-    )
-
-    rows = [(k, s, s + ln) for k, s, ln in ivs]
-    df = spark.createDataFrame(rows, "k int, st long, en long")
-    got = {
-        r["k"]: (r["n_intervals"], r["n_overlapping_pairs"])
-        for r in interval_overlap_counts(df, "k", "st", "en").collect()
-    }
-    expect: dict[int, list[int]] = {}
-    for k in {r[0] for r in rows}:
-        mine = [(s, e) for kk, s, e in rows if kk == k]
-        pairs = sum(
-            1
-            for i in range(len(mine))
-            for j in range(i + 1, len(mine))
-            if mine[i][0] < mine[i][1]  # empty sets intersect nothing
-            and mine[j][0] < mine[j][1]
-            and mine[i][0] < mine[j][1]
-            and mine[j][0] < mine[i][1]
-        )
-        expect[k] = (len(mine), pairs)
-    assert got == expect
-
-
-@SLOW
-@given(
-    pts=st.lists(
-        st.tuples(st.integers(0, 10), st.integers(0, 10)),
-        min_size=1,
-        max_size=16,
-    )
-)
-def test_pareto_frontier_equals_brute(spark, pts):
-    """Two-phase prefix-max skyline ≡ NOT-EXISTS brute force on random
-    (x, y) multisets, duplicates included."""
-    from sales_azure_data_engineer_project_spark.operators.sweeps import pareto_frontier
-
-    rows = [(i, float(x), y) for i, (x, y) in enumerate(pts)]
-    df = spark.createDataFrame(rows, "id int, x double, y int")
-    got = sorted(r["id"] for r in pareto_frontier(df, "x", "y").collect())
-    expect = sorted(
-        i
-        for i, x, y in rows
-        if not any(
-            (x2 <= x and y2 >= y and (x2 < x or y2 > y)) for _, x2, y2 in rows
-        )
-    )
-    assert got == expect
-
-
-def test_lsh_star_capping_preserves_components(spark):
-    """Differential: hot-bucket STAR emission (round-5 safety valve)
-    must yield the SAME connected components as exact all-pairs
-    emission on seeded random band tables — every bucket is a clique
-    either way, a star spans it.  Seeds cover hot buckets well above
-    the cap, buckets exactly at the cap, and singletons."""
-    import random
-
-    from sales_azure_data_engineer_project_spark.operators.dedup import (
-        lsh_candidate_pairs,
-    )
-
-    for seed in (7, 31, 91):
-        rng = random.Random(seed)
-        n = 80
-        rows = []
-        for doc in range(n):
-            for band in (0, 1):
-                # small signature alphabet → frequent collisions; one
-                # dedicated "hot" signature absorbs ~a third of docs
-                sig = "HOT" if rng.random() < 0.33 else f"s{rng.randrange(12)}"
-                rows.append((doc, band, f"{band}:{sig}"))
-        bands = spark.createDataFrame(
-            rows, "doc_id long, band_idx int, band_sig string"
-        )
-
-        def components(pairs_df):
-            parent = list(range(n))
-
-            def find(x):
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            for r in pairs_df.collect():
-                a, b = int(r["id_a"]), int(r["id_b"])
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-            return {i: find(i) for i in range(n)}
-
-        exact = components(lsh_candidate_pairs(bands, "doc_id"))
-        capped = components(
-            lsh_candidate_pairs(bands, "doc_id", hot_bucket_cap=4)
-        )
-        assert exact == capped, f"seed {seed}"
-
-
 def test_partition_count_invariance(spark):
     """Results must not depend on parallelism — the distributed-
     correctness axis the DuckDB oracle can't see (it runs at one fixed

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import ast
 import pathlib
+import re
 
 REPO = pathlib.Path(__file__).resolve().parents[1]
 PACKAGE = REPO / "sales_azure_data_engineer_project_spark"
@@ -38,25 +39,14 @@ PROTECTED = {
 # with their tests in later cuts; the set may only shrink, and a name
 # here that is no longer registered fails the family test.
 PINNED = {
-    "crossmodal_coverage_report", "cube_revenue_by_flag_status",
-    "dedup_cross_source_matrix", "dedup_graph_kcore",
-    "dedup_lsh_hot_bucket_capped", "dedup_minhash_lsh", "dedup_simhash",
+    "cube_revenue_by_flag_status", "dedup_cross_source_matrix",
+    "dedup_graph_kcore", "dedup_minhash_lsh", "dedup_simhash",
     "dedup_simhash_hamming", "dedup_token_savings_report",
-    "embedding_outliers_topk", "events_dau_wau_stickiness",
-    "events_hour_weekday_heatmap", "events_journey_trigrams",
-    "events_new_vs_returning_daily", "events_type_mix_drift_weekly",
-    "events_user_lifetime_stats", "interval_overlap_sweep",
-    "orders_benford_deviation", "orders_daily_revenue_7d_ma",
-    "orders_repeat_purchase_intervals", "parts_pareto_frontier",
-    "pipeline_decontaminate", "pipeline_pack_sequences",
-    "pipeline_skew_report", "pipeline_unimax_language_budget",
-    "quality_metadata_consistency", "quality_simpson_diversity",
-    "quantile_sketch_bottomk", "sample_balanced_class_downsample",
-    "sample_priority_topk", "sample_soft_dedup_weights", "similarity_ann_sq8",
-    "skew_salted_aggregation", "stats_chi2_independence", "text_bm25_topk",
-    "text_boilerplate_chunks", "text_quality_stats", "text_token_counts",
-    "vocab_good_turing_unseen_mass", "vocab_heaps_growth",
-    "vocab_oov_rate_by_source",
+    "embedding_outliers_topk", "events_hour_weekday_heatmap",
+    "pipeline_pack_sequences", "pipeline_unimax_language_budget",
+    "quantile_sketch_bottomk", "sample_priority_topk",
+    "sample_soft_dedup_weights", "similarity_ann_sq8",
+    "skew_salted_aggregation", "text_bm25_topk", "text_quality_stats",
 }
 
 
@@ -179,3 +169,60 @@ def test_coverage_pinned_table_matches_pinned():
         if t.split("::")[1] not in _test_names(t.split("::")[0])
     ]
     assert not missing, f"COVERAGE.md names tests that do not exist: {missing}"
+
+
+def _package_defs() -> set[str]:
+    """Every function, class and module-level constant name defined in
+    the package, read from its AST."""
+    out: set[str] = set()
+    for path in PACKAGE.rglob("*.py"):
+        tree = ast.parse(path.read_text())
+        out.update(
+            n.name for n in ast.walk(tree)
+            if isinstance(n, (ast.FunctionDef, ast.ClassDef))
+        )
+        out.update(
+            t.id for n in tree.body if isinstance(n, ast.Assign)
+            for t in n.targets if isinstance(t, ast.Name)
+        )
+    return out
+
+
+def test_docs_name_only_modules_and_queries_that_exist():
+    """Every ``operators.<module>`` or ``operators/<module>.py`` that
+    ``COVERAGE.md`` or ``README.md`` names is a module of the package,
+    and every query that a ``COVERAGE.md`` table names in backticks is
+    registered: a bare snake_case name must be a registered query, a
+    name the package defines, or a test, and a ``queries_<m>.<name>``
+    must be registered in that module.  Rows left behind by a cut fail
+    here."""
+    missing_modules = sorted(
+        f"{doc}: operators {mod}"
+        for doc in ("COVERAGE.md", "README.md")
+        for mod in set(re.findall(
+            r"operators[./]([a-z_0-9]+)", (REPO / doc).read_text()
+        ))
+        if not (PACKAGE / "operators" / f"{mod}.py").is_file()
+    )
+    registered = {
+        m: set(_registered(f"queries_{m}.py"))
+        for m in ("core", "analytics", "extensions")
+    }
+    known = set().union(*registered.values()) | _package_defs()
+    tests = {p.stem for p in (REPO / "tests").glob("test_*.py")}
+    tests |= set().union(*(_test_names(s) for s in tests))
+    unknown = []
+    for line in (REPO / "COVERAGE.md").read_text().splitlines():
+        if not line.startswith("|"):
+            continue
+        for span in re.findall(r"`([^`]+)`", re.sub(r"``.*?``", "", line)):
+            if re.fullmatch(r"[a-z][a-z0-9_]*", span):
+                if span not in known and span not in tests:
+                    unknown.append(span)
+            elif m := re.fullmatch(r"queries_(core|analytics|extensions)\.(\w+)", span):
+                if m[2] not in registered[m[1]]:
+                    unknown.append(span)
+    assert not missing_modules and not unknown, (
+        f"docs name modules that do not exist: {missing_modules}; "
+        f"COVERAGE.md names queries that are not registered: {unknown}"
+    )

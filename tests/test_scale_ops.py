@@ -375,28 +375,15 @@ def test_no_cartesian_or_python_udf_in_any_registered_plan(spark):
                                  # 1-row stats broadcast + the bounded
                                  # 8-query cosine broadcast != join;
                                  # fusion itself is an equi-join
-        "stats_chi2_independence",  # 1-row grand-total broadcast onto
-                                    # the bounded category-cell relation
-        "orders_benford_deviation",  # 1-row total broadcast onto the
-                                     # 9-digit cell relation
         "similarity_mutual_knn_pairs",  # shared _sq8_kmeans_cells 1-row
                                         # sq8 stats broadcast (as
                                         # dedup_semantic_semdedup)
         "pipeline_token_budget_apportion",  # 1-row total + 1-row
                                             # shortfall broadcast onto
                                             # the |sources| relation
-        "pipeline_skew_report",  # 1-row totals broadcast onto the
-                                 # count-of-counts grid
-        "vocab_heaps_growth",  # 1-row max-doc-id broadcast onto the
-                               # first-occurrence and doc relations
-        "sample_balanced_class_downsample",  # 1-row global min-class-
-                                             # size broadcast onto the
-                                             # ranked rows
         "dedup_removal_bias_audit",  # 1-row total + 1-row quartile-
                                      # cutoff broadcasts onto the
                                      # length grid / corpus rows
-        "events_type_mix_drift_weekly",  # 1-row grand-total broadcast
-                                         # onto the |weeks|·|types| grid
     }
     # Unpartitioned windows: every entry must name the BOUNDED relation
     # the global window runs over (always an aggregate output, never the
@@ -408,11 +395,6 @@ def test_no_cartesian_or_python_udf_in_any_registered_plan(spark):
         "pipeline_unimax_language_budget",  # water-fill rank over the
                                             # per-language inventory
                                             # (groupBy(lang) output)
-        "pipeline_skew_report",  # cumsum over the count-of-counts
-                                 # grid (bounded by |distinct key
-                                 # frequencies| — groupBy output)
-        "vocab_heaps_growth",  # cumsum over the 10-row decile grid
-                               # (groupBy output)
         "dedup_removal_bias_audit",  # bucketed_cumsum level 2: cumsum
                                      # over length-domain bucket
                                      # TOTALS (aggregate)
@@ -436,73 +418,6 @@ def test_no_cartesian_or_python_udf_in_any_registered_plan(spark):
         if bad:
             offenders[name] = bad
     assert not offenders, f"plan hygiene violations: {offenders}"
-
-
-def test_lsh_hot_band_bucket_star_capping(spark):
-    """Skewed-band stress (VERDICT r4 "Next" #8): 10% of a 20k-doc
-    corpus is byte-identical boilerplate, so every band funnels those
-    2,000 docs into ONE bucket — the web-corpus hazard where all-pairs
-    emission is C(2000,2) rows materializing in a single join task.
-    With ``hot_bucket_cap`` the bucket switches to star emission: the
-    candidate graph keeps the same node coverage (hence the same
-    connected components — a hot bucket is a clique, a star spans it)
-    at O(m) edges, and the run stays inside tight time bounds."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from sales_azure_data_engineer_project_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_bands,
-    )
-
-    n_docs, n_hot = 20_000, 2_000
-    boiler = "lorem ipsum dolor sit amet the quick brown fox jumps over it"
-    docs = spark.range(n_docs).select(
-        F.col("id").alias("doc_id"),
-        F.when(F.col("id") < n_hot, F.lit(boiler))
-        .otherwise(
-            F.concat_ws(
-                " ",
-                *[
-                    F.concat(F.lit(f"w{j}u"), (F.col("id") * (j + 7)).cast("string"))
-                    for j in range(12)
-                ],
-            )
-        )
-        .alias("text"),
-    )
-    bands = minhash_bands(docs, "doc_id", "text", n_hashes=8, band_size=4).persist()
-    bands.count()
-
-    t0 = time.perf_counter()
-    capped = lsh_candidate_pairs(bands, "doc_id", hot_bucket_cap=256)
-    rows = capped.collect()
-    capped_sec = time.perf_counter() - t0
-    # star emission: edge count is O(hot bucket), nowhere near C(m,2)
-    assert len(rows) < 3 * n_hot, f"capped path emitted {len(rows)} pairs"
-    hot_edges = [r for r in rows if r["id_a"] == 0]
-    assert len(hot_edges) == n_hot - 1  # hub 0 → every other clique member
-    # node coverage (⇒ connected components for the clique) matches the
-    # exact path's: every hot doc appears in some pair either way
-    covered = {r["id_a"] for r in rows} | {r["id_b"] for r in rows}
-    assert set(range(n_hot)) <= covered
-    # the capped plan must finish fast — generous bound that still
-    # catches an accidental fall-through to the quadratic path
-    assert capped_sec < 60, f"capped candidate generation took {capped_sec:.1f}s"
-
-    # exact path on the same corpus stays the oracle-checked default:
-    # spot-check agreement outside the hot bucket (all-pairs there)
-    exact_cold = (
-        lsh_candidate_pairs(bands, "doc_id")
-        .filter(F.col("id_a") >= n_hot)
-        .collect()
-    )
-    capped_cold = sorted(
-        (r["id_a"], r["id_b"]) for r in rows if r["id_a"] >= n_hot
-    )
-    assert sorted((r["id_a"], r["id_b"]) for r in exact_cold) == capped_cold
-    bands.unpersist()
 
 
 def test_runtime_bloom_filter_prunes_selective_join(spark, tmp_path):
