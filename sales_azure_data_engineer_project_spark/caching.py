@@ -30,15 +30,14 @@ from pyspark.sql import DataFrame
 _TRACKED: list[DataFrame] = []
 
 
-def tracked_persist(
-    df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
-) -> DataFrame:
-    """Persist ``df`` and register it for a later :func:`release_caches`.
+def tracked_persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` at ``MEMORY_AND_DISK`` and register it for a later
+    :func:`release_caches`.
 
     Every cache keeps the session's columnar batch size
     (``spark.sql.inMemoryColumnarStorage.batchSize``): on the
     repository's corpora a cache holds at most a few thousand rows."""
-    out = df.persist(level)
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
     _TRACKED.append(out)
     return out
 

@@ -161,75 +161,3 @@ def asof_join_same_source(
         *left_cols,
         *[F.col(f"__match.{name}").alias(name) for name in payload],
     )
-
-
-def asof_join_forward(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    payload: list[str],
-    strict: bool = False,
-    right_tiebreak: str | None = None,
-) -> DataFrame:
-    """FORWARD as-of join: each left row picks the EARLIEST right row at
-    or after its timestamp (``strict=True``: strictly after) — the
-    mirror of :func:`asof_join`, e.g. "next purchase after this click"
-    or "first sensor reading after each fault".
-
-    Same union-then-window shape, with the window running FORWARD
-    (``currentRow .. unboundedFollowing``) and ``first(ignorenulls)``
-    picking the nearest following payload.  Side ordering at equal
-    timestamps encodes the boundary rule: for >= semantics left rows
-    sort before right rows so a simultaneous right row is visible; for
-    strict > the order flips.  ``right_tiebreak`` resolves equal-ts
-    right rows deterministically (ascending = the winner).
-
-    Scale shape: identical to the backward join — one hash
-    Exchange(key) + per-key sort shared by the window; never a range
-    join or per-row subquery."""
-    lcols = left.columns
-    clash = set(lcols) & set(payload)
-    if clash:
-        raise ValueError(
-            f"payload columns {sorted(clash)} collide with left-side columns; "
-            "alias them on the right side first"
-        )
-    left_side = F.lit(0 if not strict else 1)
-    right_side = F.lit(1 if not strict else 0)
-    if right_tiebreak is not None:
-        tie_type = right.schema[right_tiebreak].dataType
-        r_tie = F.col(right_tiebreak)
-        l_tie = F.lit(None).cast(tie_type)
-    else:
-        r_tie = F.lit(0).cast("long")
-        l_tie = F.lit(0).cast("long")
-    r = right.select(
-        F.col(on).alias("__k"),
-        F.col(right_ts).alias("__ts"),
-        right_side.alias("__side"),
-        r_tie.alias("__tie"),
-        F.struct(*payload).alias("__payload"),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in lcols],
-    )
-    l = left.select(  # noqa: E741
-        F.col(on).alias("__k"),
-        F.col(left_ts).alias("__ts"),
-        left_side.alias("__side"),
-        l_tie.alias("__tie"),
-        F.lit(None).cast(r.schema["__payload"].dataType).alias("__payload"),
-        *lcols,
-    )
-    w = (
-        Window.partitionBy("__k")
-        .orderBy("__ts", "__side", "__tie")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    merged = l.unionByName(r).withColumn(
-        "__match", F.first("__payload", ignorenulls=True).over(w)
-    )
-    return merged.filter(F.col("__side") == left_side).select(
-        *lcols, *[F.col(f"__match.{p}").alias(p) for p in payload]
-    )

@@ -10,9 +10,10 @@ Three tiers, all shuffle-aware and expressed with built-in functions:
                    exact shingle Jaccard.  Signature size is constant
                    per doc and the band join shuffles only (doc,
                    band-sig) pairs.
-- **SimHash**      16-bit vote fingerprint from md5 nibbles (the
-                   SQL-exact variant; a 64/128-bit production variant
-                   would swap the nibble trick for a Pandas UDF).
+- **SimHash**      64-bit vote fingerprint from md5 bits, kept as four
+                   16-bit blocks; pairs within Hamming 3 agree on at
+                   least one block, so candidates come from block
+                   equi-joins and are verified by exact Hamming distance.
 
 All hashes are md5-hex so a DuckDB oracle can reproduce results
 byte-for-byte; minhash "min" is lexicographic over hex strings.
@@ -33,7 +34,6 @@ __all__ = [
     "minhash_signatures",
     "lsh_candidate_pairs",
     "minhash_verified_pairs",
-    "simhash16",
     "simhash_hamming_pairs",
 ]
 
@@ -330,12 +330,12 @@ _HEX = "0123456789abcdef"
 def _simhash64_blocks(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """64-bit SimHash as FOUR 16-bit integer blocks per document.
 
-    Production-width variant of ``simhash16``: bit i (0..63) votes with
-    the i-th bit of md5(token), +1 when set, −1 when clear, weighted by
-    token multiplicity; the fingerprint bit is 1 iff the vote sum is
-    positive.  Bits are packed big-endian into blocks b0..b3 (bit p of
-    block b has weight 2^(15−p)), keeping every value ≤ 65535 so both
-    engines stay in exact BIGINT arithmetic — no 64-bit sign hazards.
+    Bit i (0..63) votes with the i-th bit of md5(token), +1 when set,
+    −1 when clear, weighted by token multiplicity; the fingerprint bit
+    is 1 iff the vote sum is positive.  Bits are packed big-endian into
+    blocks b0..b3 (bit p of block b has weight 2^(15−p)), keeping every
+    value ≤ 65535 so both engines stay in exact BIGINT arithmetic — no
+    64-bit sign hazards.
 
     One explode + ONE map-side-combined aggregate keyed by the doc id
     computes all 64 vote sums in a single pass (wide agg beats a
@@ -449,30 +449,3 @@ def simhash_hamming_pairs(
             F.col("hamming"),
         )
     )
-
-
-def simhash16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """16-bit SimHash: bit i = sign of Σ_tokens vote(md5(token)[i]).
-
-    vote = +1 when hex nibble i of the token digest has its top bit set
-    ('8'..'f'), else −1; token multiplicity weights the vote.  Fully
-    SQL-exact in both engines.  Output: (id, simhash16 string of '0'/'1').
-    """
-    toks = df.select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), TOKEN_RE)).alias("tok")
-    )
-    hashed = toks.select(id_col, F.md5(F.col("tok").cast("binary")).alias("h"))
-    votes = hashed.groupBy(id_col).agg(
-        *[
-            F.sum(
-                F.when(
-                    F.substring("h", i + 1, 1).isin(*"89abcdef"), F.lit(1)
-                ).otherwise(F.lit(-1))
-            ).alias(f"s{i}")
-            for i in range(16)
-        ]
-    )
-    fp = F.concat(
-        *[F.when(F.col(f"s{i}") > 0, F.lit("1")).otherwise(F.lit("0")) for i in range(16)]
-    )
-    return votes.select(F.col(id_col).cast("bigint"), fp.alias("simhash16"))

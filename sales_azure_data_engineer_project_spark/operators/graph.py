@@ -38,16 +38,14 @@ def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     *,
-    id_col: str = "id",
-    src_col: str = "src",
-    dst_col: str = "dst",
     max_iter: int = 25,
 ) -> DataFrame:
     """Label every node with min(id) of its connected component.
 
-    ``nodes``: one column ``id_col`` (isolated nodes allowed).
-    ``edges``: undirected pairs (one direction suffices; symmetrized
-    here).  Returns (id, component) with component = least member id.
+    ``nodes``: one column ``id`` (isolated nodes allowed).
+    ``edges``: undirected ``(src, dst)`` pairs (one direction suffices;
+    symmetrized here).  Returns (id, component) with component = least
+    member id.
     """
     # persist the edge list: it is re-joined EVERY round, and without
     # this the entire upstream lineage (for dedup clustering, the whole
@@ -61,10 +59,10 @@ def connected_components(
             F.explode(
                 F.array(
                     F.struct(
-                        F.col(src_col).alias("s"), F.col(dst_col).alias("d")
+                        F.col("src").alias("s"), F.col("dst").alias("d")
                     ),
                     F.struct(
-                        F.col(dst_col).alias("s"), F.col(src_col).alias("d")
+                        F.col("dst").alias("s"), F.col("src").alias("d")
                     ),
                 )
             ).alias("e")
@@ -99,7 +97,7 @@ def connected_components(
         # reliable checkpoint(dir) — same contract, survives executor
         # loss.
         labels = nodes.select(
-            F.col(id_col).alias("id"), F.col(id_col).alias("component")
+            F.col("id"), F.col("id").alias("component")
         ).localCheckpoint(eager=False)
 
         def one_round(lbl: DataFrame) -> DataFrame:

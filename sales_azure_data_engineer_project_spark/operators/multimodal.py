@@ -30,10 +30,10 @@ __all__ = [
 FEATURE_SCHEMA = "doc_id bigint, n_bytes bigint, width int, height int"
 
 
-def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Stand-in ingestion: pack a string column as the binary payload
+def attach_binary_payload(df: DataFrame) -> DataFrame:
+    """Stand-in ingestion: pack the ``text`` column as the binary payload
     (a real pipeline reads a parquet binary column)."""
-    return df.withColumn("content", F.encode(F.col(text_col), "UTF-8"))
+    return df.withColumn("content", F.encode(F.col("text"), "UTF-8"))
 
 
 def decode_image(payload: bytes, *, fake: bool = False) -> tuple[int, int]:

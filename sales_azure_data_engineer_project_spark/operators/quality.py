@@ -73,13 +73,13 @@ def unique(*cols: str) -> Expectation:
     return Expectation(f"unique({','.join(cols)})", runner=run)
 
 
-def references(dim: DataFrame, fk: str, pk: str | None = None) -> Expectation:
-    """Referential integrity: rows whose ``fk`` has no match in ``dim``."""
-    pk = pk or fk
+def references(dim: DataFrame, fk: str) -> Expectation:
+    """Referential integrity: rows whose ``fk`` has no match in ``dim``'s
+    column of the same name."""
 
     def run(df: DataFrame) -> int:
         orphans = df.filter(F.col(fk).isNotNull()).join(
-            dim.select(F.col(pk).alias(fk)).distinct(), on=fk, how="left_anti"
+            dim.select(fk).distinct(), on=fk, how="left_anti"
         )
         return orphans.count()
 

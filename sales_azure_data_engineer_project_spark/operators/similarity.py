@@ -31,7 +31,6 @@ __all__ = [
     "with_norm",
     "cosine_topk",
     "sq8_codes",
-    "sq8_topk",
     "pq_fit_codes",
     "pq_adc_topk",
     "sign_bucket",
@@ -57,7 +56,6 @@ def cosine_topk(
     vectors: DataFrame,
     queries: DataFrame,
     *,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
 ) -> DataFrame:
@@ -67,10 +65,10 @@ def cosine_topk(
     excluded, ties broken by neighbor id.
     """
     cand = with_norm(vectors, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("_v").alias("cv"), F.col("_norm").alias("cn")
+        F.col("vec_id").alias("neighbor_id"), F.col("_v").alias("cv"), F.col("_norm").alias("cn")
     )
     q = with_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("_v").alias("qv"), F.col("_norm").alias("qn")
+        F.col("vec_id").alias("query_id"), F.col("_v").alias("qv"), F.col("_norm").alias("qn")
     )
     scored = (
         cand.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
@@ -122,7 +120,7 @@ def sq8_stats(df: DataFrame, *, vec_col: str = "embedding") -> DataFrame:
 
 
 def sq8_codes(
-    df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding"
+    df: DataFrame, *, vec_col: str = "embedding"
 ) -> DataFrame:
     """Scalar-quantize vectors to 8-bit codes over the global value range.
 
@@ -137,51 +135,13 @@ def sq8_codes(
     Output: (id, codes array<int>).
     """
     return df.crossJoin(F.broadcast(sq8_stats(df, vec_col=vec_col))).select(
-        F.col(id_col), sq8_quant_expr(as_double_vec(vec_col)).alias("codes")
-    )
-
-
-def sq8_topk(
-    codes: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    k: int = 10,
-) -> DataFrame:
-    """Top-k per query by integer dot product in the quantized domain.
-
-    Same shape as ``cosine_topk`` (broadcast queries, scan candidates,
-    rank-filter per query) but the score is Σ qa_i·qb_i over the 8-bit
-    codes — BIGINT-exact, order-independent.  Output: (query_id,
-    neighbor_id, approx_dot, rk)."""
-    cand = codes.select(
-        F.col(id_col).alias("neighbor_id"), F.col("codes").alias("cv")
-    )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col("codes").alias("qv"))
-    idot = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("cv"), lambda x, y: (x * y).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        cand.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("approx_dot", idot)
-        .select("query_id", "neighbor_id", "approx_dot")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_dot").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= k)
-        .orderBy("query_id", "rk")
+        F.col("vec_id"), sq8_quant_expr(as_double_vec(vec_col)).alias("codes")
     )
 
 
 def pq_fit_codes(
     df: DataFrame,
     *,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     m: int = 4,
     k: int = 16,
@@ -216,7 +176,7 @@ def pq_fit_codes(
 
     from .kmeans import _dists_fold_order, assign_clusters
 
-    head = df.orderBy(id_col).limit(k).select(as_double_vec(vec_col).alias("v")).collect()
+    head = df.orderBy("vec_id").limit(k).select(as_double_vec(vec_col).alias("v")).collect()
     dim = len(head[0]["v"])
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -225,7 +185,7 @@ def pq_fit_codes(
     # ONE persisted projection feeds every iteration AND the final
     # encode — unpersisted, each scan would re-read parquet and re-run
     # the double cast (measured 8.2 s → 4.2 s at sf0.1 for m=4, k=16).
-    base = df.select(F.col(id_col), as_double_vec(vec_col).alias("_v")).transform(tracked_persist)
+    base = df.select(F.col("vec_id"), as_double_vec(vec_col).alias("_v")).transform(tracked_persist)
     codebooks: list[list[list[float]]] = [
         [list(r["v"][j * subdim : (j + 1) * subdim]) for r in head]
         for j in range(m)
@@ -275,7 +235,7 @@ def pq_fit_codes(
             .withColumnRenamed("cluster", f"c{j}")
             .drop("_sub")
         )
-    return coded.select(id_col, *[f"c{j}" for j in range(m)]), codebooks
+    return coded.select("vec_id", *[f"c{j}" for j in range(m)]), codebooks
 
 
 def pq_adc_topk(
@@ -283,7 +243,6 @@ def pq_adc_topk(
     codebooks: list[list[list[float]]],
     queries: DataFrame,
     *,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     k_neighbors: int = 5,
 ) -> DataFrame:
@@ -297,7 +256,7 @@ def pq_adc_topk(
     Output: (query_id, neighbor_id, approx_ip, rk)."""
     m = len(codebooks)
     q_rows = queries.select(
-        F.col(id_col).alias("qid"), as_double_vec(vec_col).alias("v")
+        F.col("vec_id").alias("qid"), as_double_vec(vec_col).alias("v")
     ).collect()
     spark = codes.sparkSession
     subdim = len(codebooks[0][0])
@@ -321,10 +280,10 @@ def pq_adc_topk(
         F.lit(0.0),
     )
     scored = (
-        codes.join(F.broadcast(lutdf), F.col("query_id") != F.col(id_col))
+        codes.join(F.broadcast(lutdf), F.col("query_id") != F.col("vec_id"))
         .withColumn("approx_ip", score)
         .select(
-            "query_id", F.col(id_col).alias("neighbor_id"), "approx_ip"
+            "query_id", F.col("vec_id").alias("neighbor_id"), "approx_ip"
         )
     )
     w = Window.partitionBy("query_id").orderBy(

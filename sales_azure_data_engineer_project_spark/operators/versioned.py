@@ -26,7 +26,7 @@ touches (an IN-list the scan turns into ``PartitionFilters``), writes
 the merged slice, and hardlinks every file of the base version's
 untouched partition dirs into the staged version before it publishes.
 A version therefore stays a self-contained directory — read, time
-travel, vacuum, compact and conflict detection are the same as for an
+travel, vacuum and conflict detection are the same as for an
 unpartitioned table — while the bytes a merge writes scale with the
 partitions it touches, not the table.
 
@@ -311,16 +311,6 @@ class VersionedTable:
             carry_from = self._vdir(base)
         merged = merge_upsert(target, source, keys)
         return self._commit(merged, base_version=base, carry_from=carry_from)
-
-    def compact(self, target_partitions: int = 1) -> int:
-        """Small-file compaction: rewrite the current snapshot into
-        ``target_partitions`` files as a new commit.  The lakehouse
-        maintenance op that keeps scan task counts sane after many
-        incremental merges (pair with ``vacuum`` for space)."""
-        cur = self.read()
-        if cur is None:
-            return 0
-        return self._commit(cur.coalesce(target_partitions))
 
     def vacuum(self, keep_last: int = 2) -> list[int]:
         """Drop version dirs older than the last ``keep_last``.  The

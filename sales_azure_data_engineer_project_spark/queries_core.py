@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .io import load_testdata
@@ -363,7 +363,7 @@ def top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Subquery shapes + HAVING + exact percentiles (none appear in the
+# HAVING + exact percentiles (neither appears in the
 # reference — §2 notes their absence — but a complete engine needs them)
 # ---------------------------------------------------------------------------
 
@@ -392,65 +392,6 @@ def having_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("n_customers") > 200)
         .orderBy("c_mktsegment")
-    )
-
-
-@register(
-    "richest_customer_per_nation",
-    """
-    SELECT c_nationkey, c_custkey, c_name,
-           c_acctbal AS acctbal
-    FROM customer c
-    WHERE c_acctbal = (SELECT MAX(c2.c_acctbal) FROM customer c2
-                       WHERE c2.c_nationkey = c.c_nationkey)
-    ORDER BY c_nationkey, c_custkey
-    """,
-)
-def richest_customer_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated scalar subquery (TPC-H Q2 shape).  Equality compares a
-    stored double against MAX of stored doubles — no arithmetic, so the
-    engines agree exactly."""
-    load_testdata(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    return spark.sql(
-        """
-        SELECT c_nationkey, c_custkey, c_name,
-               c_acctbal AS acctbal
-        FROM customer c
-        WHERE c_acctbal = (SELECT MAX(c2.c_acctbal) FROM customer c2
-                           WHERE c2.c_nationkey = c.c_nationkey)
-        ORDER BY c_nationkey, c_custkey
-        """
-    )
-
-
-@register(
-    "orders_of_overdrawn_customers",
-    """
-    SELECT o_orderstatus,
-           CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS DOUBLE) AS total
-    FROM orders
-    WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_acctbal < 0)
-    GROUP BY o_orderstatus
-    ORDER BY o_orderstatus
-    """,
-)
-def orders_of_overdrawn_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_testdata(spark, sf_dir, "orders")
-    customer = load_testdata(spark, sf_dir, "customer")
-    overdrawn = customer.filter(F.col("c_acctbal") < 0).select("c_custkey")
-    return (
-        orders.join(
-            overdrawn, orders.o_custkey == overdrawn.c_custkey, "left_semi"
-        )
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(14,2)"))
-            .cast("double")
-            .alias("total"),
-        )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -693,96 +634,6 @@ def empty_schema_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# TPC-H classic shapes (Q3 shipping-priority, Q5 local-supplier volume)
-# on the corpus subset of columns — familiar benchmarks for plan review
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "q3_shipping_priority",
-    """
-    SELECT l.l_orderkey,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l.l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue,
-           strftime(CAST(o.o_orderdate AS TIMESTAMP), '%Y-%m-%d') AS orderdate,
-           o.o_orderpriority
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE c.c_mktsegment = 'BUILDING'
-      AND o.o_orderdate < TIMESTAMP '1997-06-01'
-      AND l.l_shipdate > TIMESTAMP '1997-06-01'
-    GROUP BY l.l_orderkey, strftime(CAST(o.o_orderdate AS TIMESTAMP), '%Y-%m-%d'), o.o_orderpriority
-    ORDER BY revenue DESC, l_orderkey
-    LIMIT 20
-    """,
-)
-def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = load_testdata(spark, sf_dir, "customer")
-    orders = load_testdata(spark, sf_dir, "orders")
-    li = load_testdata(spark, sf_dir, "lineitem")
-    price = F.col("l_extendedprice").cast("decimal(12,2)")
-    disc = F.col("l_discount").cast("decimal(4,2)")
-    return (
-        li.filter(F.col("l_shipdate") > "1997-06-01")
-        .join(
-            orders.filter(F.col("o_orderdate") < "1997-06-01"),
-            li.l_orderkey == orders.o_orderkey,
-            "inner",
-        )
-        .join(
-            F.broadcast(
-                customer.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
-            ),
-            F.col("o_custkey") == F.col("c_custkey"),
-            "inner",
-        )
-        .groupBy(
-            "l_orderkey",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
-            "o_orderpriority",
-        )
-        .agg(F.sum(price * (F.lit(1) - disc)).cast("double").alias("revenue"))
-        .select("l_orderkey", "revenue", "orderdate", "o_orderpriority")
-        .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
-        .limit(20)
-    )
-
-
-@register(
-    "q5_supplier_volume_by_region",
-    """
-    SELECT r.r_name AS region, n.n_name AS nation,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l.l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue
-    FROM lineitem l
-    JOIN supplier s ON l.l_suppkey = s.s_suppkey
-    JOIN nation n ON s.s_nationkey = n.n_nationkey
-    JOIN region r ON n.n_regionkey = r.r_regionkey
-    GROUP BY r.r_name, n.n_name
-    ORDER BY region, revenue DESC, nation
-    """,
-)
-def q5_supplier_volume_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_testdata(spark, sf_dir, "lineitem")
-    supplier = load_testdata(spark, sf_dir, "supplier")
-    nation = load_testdata(spark, sf_dir, "nation")
-    region = load_testdata(spark, sf_dir, "region")
-    price = F.col("l_extendedprice").cast("decimal(12,2)")
-    disc = F.col("l_discount").cast("decimal(4,2)")
-    dim = (
-        supplier.select("s_suppkey", "s_nationkey")
-        .join(F.broadcast(nation), F.col("s_nationkey") == nation.n_nationkey)
-        .join(F.broadcast(region), F.col("n_regionkey") == region.r_regionkey)
-        .select("s_suppkey", F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
-    )
-    return (
-        li.join(F.broadcast(dim), li.l_suppkey == dim.s_suppkey, "inner")
-        .groupBy("region", "nation")
-        .agg(F.sum(price * (F.lit(1) - disc)).cast("double").alias("revenue"))
-        .orderBy("region", F.col("revenue").desc(), "nation")
-    )
-
-
-# ---------------------------------------------------------------------------
 # Join-type completeness: FULL OUTER and CROSS (absent from the
 # reference — §2.3 — but part of any complete engine surface)
 # ---------------------------------------------------------------------------
@@ -867,154 +718,6 @@ def cross_join_region_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "grouping_sets_revenue",
-    """
-    SELECT l_returnflag, l_linestatus,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS qty,
-           CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus) AS INTEGER) AS gid
-    FROM lineitem
-    GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-    ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
-    """,
-)
-def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_testdata(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS qty,
-               CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus) AS INTEGER) AS gid
-        FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
-        """
-    )
-
-
-@register(
-    "posexplode_tokens",
-    r"""
-    SELECT doc_id, CAST(i - 1 AS INTEGER) AS pos, toks[i] AS tok
-    FROM (SELECT doc_id, string_split_regex(text, '\s+') AS toks
-          FROM documents WHERE doc_id < 5) t,
-         unnest(generate_series(1, len(toks))) AS u(i)
-    ORDER BY doc_id, pos
-    """,
-)
-def posexplode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Positional explode (lateral view) — token positions survive the
-    flatten, which chunkers and aligners need."""
-    docs = load_testdata(spark, sf_dir, "documents").filter(F.col("doc_id") < 5)
-    return (
-        docs.select(
-            "doc_id",
-            F.posexplode(F.split(F.col("text"), r"\s+")).alias("pos", "tok"),
-        )
-        .select("doc_id", F.col("pos").cast("int").alias("pos"), "tok")
-        .orderBy("doc_id", "pos")
-    )
-
-
-@register(
-    "map_functions",
-    """
-    SELECT event_type,
-           CAST(map_extract(map {'click': 1, 'view': 2, 'purchase': 3, 'signup': 4, 'error': 5},
-                event_type)[1] AS INTEGER) AS type_code,
-           CAST(COUNT(*) AS BIGINT) AS n
-    FROM events
-    GROUP BY event_type
-    ORDER BY event_type
-    """,
-)
-def map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Map-typed literal lookup (MapType surface; the corpus has no map
-    columns, so the map is constructed)."""
-    ev = load_testdata(spark, sf_dir, "events")
-    code_map = F.create_map(
-        F.lit("click"), F.lit(1), F.lit("view"), F.lit(2), F.lit("purchase"),
-        F.lit(3), F.lit("signup"), F.lit(4), F.lit("error"), F.lit(5),
-    )
-    return (
-        ev.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            "event_type",
-            F.element_at(code_map, F.col("event_type")).cast("int").alias("type_code"),
-            "n",
-        )
-        .orderBy("event_type")
-    )
-
-
-@register(
-    "q19_disjunctive_predicates",
-    """
-    SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue,
-           CAST(COUNT(*) AS BIGINT) AS n
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    WHERE (p_brand = 'BRAND_1' AND p_size BETWEEN 1 AND 15 AND l_quantity >= 10)
-       OR (p_brand = 'BRAND_2' AND p_size BETWEEN 10 AND 30 AND l_quantity >= 20)
-       OR (p_brand = 'BRAND_3' AND p_size BETWEEN 20 AND 50 AND l_quantity >= 30)
-    """,
-)
-def q19_disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 shape: OR-of-ANDs predicates spanning both join sides —
-    the optimizer must keep the join predicate clean and evaluate the
-    disjunction post-join."""
-    li = load_testdata(spark, sf_dir, "lineitem")
-    part = load_testdata(spark, sf_dir, "part")
-    rev = F.col("l_extendedprice").cast("decimal(12,2)") * (
-        F.lit(1) - F.col("l_discount").cast("decimal(4,2)")
-    )
-    cond = (
-        ((F.col("p_brand") == "BRAND_1") & F.col("p_size").between(1, 15) & (F.col("l_quantity") >= 10))
-        | ((F.col("p_brand") == "BRAND_2") & F.col("p_size").between(10, 30) & (F.col("l_quantity") >= 20))
-        | ((F.col("p_brand") == "BRAND_3") & F.col("p_size").between(20, 50) & (F.col("l_quantity") >= 30))
-    )
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .filter(cond)
-        .agg(
-            F.sum(rev).cast("double").alias("revenue"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-
-
-@register(
-    "q16_supplier_counts",
-    """
-    SELECT p_brand, p_type,
-           CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    WHERE p_brand <> 'BRAND_1'
-      AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-    GROUP BY p_brand, p_type
-    HAVING COUNT(DISTINCT l_suppkey) >= 8
-    ORDER BY supplier_cnt DESC, p_brand, p_type
-    """,
-)
-def q16_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16 shape: NOT IN anti-join + count-distinct + HAVING."""
-    li = load_testdata(spark, sf_dir, "lineitem")
-    part = load_testdata(spark, sf_dir, "part")
-    supplier = load_testdata(spark, sf_dir, "supplier")
-    bad = supplier.filter(F.col("s_acctbal") < 0).select("s_suppkey")
-    return (
-        li.join(bad, li.l_suppkey == bad.s_suppkey, "left_anti")
-        .join(
-            F.broadcast(part.filter(F.col("p_brand") != "BRAND_1")),
-            li.l_partkey == part.p_partkey,
-        )
-        .groupBy("p_brand", "p_type")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .filter(F.col("supplier_cnt") >= 8)
-        .orderBy(F.col("supplier_cnt").desc(), "p_brand", "p_type")
-    )
-
-
-@register(
     "q6_forecast_revenue",
     """
     SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) AS revenue,
@@ -1047,329 +750,4 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("revenue"),
             F.count(F.lit(1)).alias("n"),
         )
-    )
-
-
-@register(
-    "range_band_join",
-    """
-    WITH bands(band, lo, hi) AS (
-        VALUES ('small', 0.0, 100000.0),
-               ('medium', 100000.0, 300000.0),
-               ('large', 300000.0, 1000000.0)
-    )
-    SELECT b.band,
-           CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS DOUBLE) AS total
-    FROM orders o JOIN bands b
-      ON o.o_totalprice >= b.lo AND o.o_totalprice < b.hi
-    GROUP BY b.band
-    ORDER BY b.band
-    """,
-)
-def range_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Range (band) join: rows matched to value intervals — the binning
-    join Spark executes as a broadcast nested loop over the tiny band
-    table (at scale: pre-compute the band with width_bucket/CASE to keep
-    it a narrow map; the join form generalizes to overlapping bands)."""
-    orders = load_testdata(spark, sf_dir, "orders")
-    bands = spark.createDataFrame(
-        [("small", 0.0, 100000.0), ("medium", 100000.0, 300000.0), ("large", 300000.0, 1000000.0)],
-        ["band", "lo", "hi"],
-    )
-    return (
-        orders.join(
-            F.broadcast(bands),
-            (orders.o_totalprice >= bands.lo) & (orders.o_totalprice < bands.hi),
-        )
-        .groupBy("band")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(14,2)"))
-            .cast("double")
-            .alias("total"),
-        )
-        .orderBy("band")
-    )
-
-
-@register(
-    "array_regex_functions",
-    r"""
-    WITH t AS (SELECT doc_id, text, string_split_regex(text, '\s+') AS toks
-               FROM documents WHERE doc_id < 20)
-    SELECT doc_id,
-           CAST(list_contains(toks, 'data') AS BOOLEAN) AS has_data,
-           CAST(len(list_filter(toks, x -> length(x) > 4)) AS BIGINT) AS n_long_tokens,
-           toks[1] AS first_tok,
-           toks[len(toks)] AS last_tok,
-           CAST(len(regexp_extract_all(text, '[a-z]+a[a-z]*')) AS BIGINT) AS n_a_words,
-           array_to_string(list_slice(toks, 1, 3), '_') AS head3
-    FROM t
-    ORDER BY doc_id
-    """,
-)
-def array_regex_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Array + regex function surface: contains / filter / head / tail /
-    slice / regexp_extract_all — the collection API a training pipeline
-    leans on between tokenize and featurize."""
-    docs = load_testdata(spark, sf_dir, "documents").filter(F.col("doc_id") < 20)
-    toks = F.split(F.col("text"), r"\s+")
-    t = docs.select("doc_id", "text", toks.alias("toks"))
-    return t.select(
-        "doc_id",
-        F.array_contains("toks", "data").alias("has_data"),
-        F.size(F.filter("toks", lambda x: F.length(x) > 4)).cast("bigint").alias("n_long_tokens"),
-        F.element_at("toks", 1).alias("first_tok"),
-        F.element_at("toks", -1).alias("last_tok"),
-        F.size(F.regexp_extract_all("text", F.lit("[a-z]+a[a-z]*"), 0)).cast("bigint").alias("n_a_words"),
-        F.concat_ws("_", F.slice("toks", 1, 3)).alias("head3"),
-    ).orderBy("doc_id")
-
-
-@register(
-    "q13_customer_order_distribution",
-    """
-    SELECT c_count, CAST(COUNT(*) AS BIGINT) AS custdist
-    FROM (
-        SELECT c.c_custkey,
-               CAST(COUNT(o.o_orderkey) AS BIGINT) AS c_count
-        FROM customer c
-        LEFT JOIN orders o
-          ON c.c_custkey = o.o_custkey AND o.o_orderpriority <> '1-URGENT'
-        GROUP BY c.c_custkey
-    )
-    GROUP BY c_count
-    ORDER BY custdist DESC, c_count DESC
-    """,
-)
-def q13_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape: outer-join distribution histogram.  The LEFT
-    join's extra non-key predicate must live in the JOIN condition (a
-    WHERE would drop the zero-order customers the histogram exists to
-    count).  Two aggregations, but the second groups ~50 distinct
-    counts — its Exchange is trivial; the first shuffles on c_custkey
-    only because the join itself already did (AQE reuses the
-    partitioning)."""
-    customer = load_testdata(spark, sf_dir, "customer")
-    orders = load_testdata(spark, sf_dir, "orders")
-    per_cust = (
-        customer.join(
-            orders,
-            (customer.c_custkey == orders.o_custkey)
-            & (orders.o_orderpriority != "1-URGENT"),
-            "left",
-        )
-        .groupBy(customer.c_custkey)
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return (
-        per_cust.groupBy("c_count")
-        .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.col("custdist").desc(), F.col("c_count").desc())
-    )
-
-
-@register(
-    "q17_small_quantity_revenue",
-    """
-    WITH brand_lines AS (
-        SELECT l.l_partkey, l.l_quantity, l.l_extendedprice
-        FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-        WHERE p.p_brand = 'BRAND_1'
-    ),
-    avg_qty AS (
-        SELECT l_partkey, 0.2 * AVG(l_quantity) AS threshold
-        FROM brand_lines GROUP BY l_partkey
-    )
-    SELECT CAST(CAST(SUM(CAST(b.l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) / 7.0 AS DOUBLE) AS avg_yearly,
-           CAST(COUNT(*) AS BIGINT) AS n
-    FROM brand_lines b JOIN avg_qty a ON b.l_partkey = a.l_partkey
-    WHERE b.l_quantity < a.threshold
-    """,
-)
-def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape: per-key average threshold applied back to the
-    same rows.  The textbook decorrelation (aggregate + join back, the
-    oracle's CTE form) makes the part-filtered lineitem slice feed TWO
-    consumers — at 100 TB that is two lineitem scans (Spark won't reuse
-    the subtree: one side aggregates).  The window formulation computes
-    the per-partkey AVG with a WINDOW over the single broadcast-pruned
-    scan: one scan, ONE Exchange(l_partkey), no self-join.  Quantities
-    are integral doubles, so AVG is exact and the 0.2× threshold
-    compares identically in both engines."""
-    part = load_testdata(spark, sf_dir, "part").filter(
-        F.col("p_brand") == "BRAND_1"
-    ).select("p_partkey")
-    li = load_testdata(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_quantity", "l_extendedprice"
-    )
-    brand_lines = li.join(F.broadcast(part), li.l_partkey == part.p_partkey).drop(
-        "p_partkey"
-    )
-    w = Window.partitionBy("l_partkey")
-    return (
-        brand_lines.withColumn(
-            "threshold", F.lit(0.2) * F.avg("l_quantity").over(w)
-        )
-        .filter(F.col("l_quantity") < F.col("threshold"))
-        .agg(
-            (
-                F.sum(F.col("l_extendedprice").cast("decimal(12,2)")).cast("double")
-                / F.lit(7.0)
-            )
-            .cast("double")
-            .alias("avg_yearly"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-
-
-@register(
-    "q18_large_volume_customers",
-    """
-    WITH big AS (
-        SELECT l_orderkey,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
-        FROM lineitem
-        GROUP BY l_orderkey
-        HAVING SUM(CAST(l_quantity AS DECIMAL(12,2))) > 300
-    )
-    SELECT c.c_name, c.c_custkey, o.o_orderkey,
-           strftime(CAST(o.o_orderdate AS TIMESTAMP), '%Y-%m-%d') AS orderdate,
-           o.o_totalprice AS totalprice,
-           big.sum_qty
-    FROM big
-    JOIN orders o ON big.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    ORDER BY totalprice DESC, o.o_orderkey
-    LIMIT 100
-    """,
-)
-def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape: HAVING-filtered aggregate driving a star probe.
-    The big-order set is tiny after the >300 filter (sub-percent of
-    orders), so it is the BROADCAST side into orders — the plan never
-    shuffles orders or customer on the join key.  At 100 TB the same
-    holds: the aggregate shrinks lineitem by ~4× lines/order, the
-    HAVING by another ~100×, so the broadcast stays MB-sized."""
-    li = load_testdata(spark, sf_dir, "lineitem")
-    orders = load_testdata(spark, sf_dir, "orders")
-    customer = load_testdata(spark, sf_dir, "customer")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(12,2)")).alias("sq"))
-        .filter(F.col("sq") > 300)
-        .select("l_orderkey", F.col("sq").cast("double").alias("sum_qty"))
-    )
-    return (
-        orders.join(F.broadcast(big), orders.o_orderkey == big.l_orderkey)
-        .join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .select(
-            "c_name",
-            "c_custkey",
-            "o_orderkey",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
-            F.col("o_totalprice").alias("totalprice"),
-            "sum_qty",
-        )
-        .orderBy(F.col("totalprice").desc(), F.col("o_orderkey"))
-        .limit(100)
-    )
-
-
-@register(
-    "q9_product_profit_adapted",
-    """
-    SELECT n.n_name AS nation,
-           CAST(year(o.o_orderdate) AS INTEGER) AS o_year,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l.l_discount AS DECIMAL(4,2)))
-                    - CAST(p.p_retailprice AS DECIMAL(12,2)) * CAST(l.l_quantity AS DECIMAL(12,2)) * CAST(0.10 AS DECIMAL(4,2))
-               ) AS DOUBLE) AS profit
-    FROM lineitem l
-    JOIN part p ON l.l_partkey = p.p_partkey
-    JOIN supplier s ON l.l_suppkey = s.s_suppkey
-    JOIN nation n ON s.s_nationkey = n.n_nationkey
-    JOIN orders o ON l.l_orderkey = o.o_orderkey
-    WHERE p.p_name LIKE '%gear%'
-    GROUP BY nation, o_year
-    ORDER BY nation, o_year DESC
-    """,
-)
-def q9_product_profit_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 shape, adapted: the corpus has no partsupp table, so
-    ps_supplycost is proxied by 10% of p_retailprice (cost model noted,
-    not hidden — the PLAN shape is the thing under test: a five-table
-    join where part/supplier/nation broadcast and lineitem-orders is the
-    one shuffle pair).  All arithmetic stays in exact decimals until the
-    final DOUBLE cast."""
-    li = load_testdata(spark, sf_dir, "lineitem")
-    part = load_testdata(spark, sf_dir, "part").filter(F.col("p_name").like("%gear%"))
-    supplier = load_testdata(spark, sf_dir, "supplier")
-    nation = load_testdata(spark, sf_dir, "nation")
-    orders = load_testdata(spark, sf_dir, "orders")
-    price = F.col("l_extendedprice").cast("decimal(12,2)")
-    disc = F.col("l_discount").cast("decimal(4,2)")
-    cost = (
-        F.col("p_retailprice").cast("decimal(12,2)")
-        * F.col("l_quantity").cast("decimal(12,2)")
-        * F.lit("0.10").cast("decimal(4,2)")
-    )
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(F.broadcast(supplier), li.l_suppkey == supplier.s_suppkey)
-        .join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.year("o_orderdate").alias("o_year"),
-        )
-        .agg(F.sum(price * (F.lit(1) - disc) - cost).cast("double").alias("profit"))
-        .orderBy("nation", F.col("o_year").desc())
-    )
-
-
-@register(
-    "json_functions",
-    """
-    WITH j AS (
-        SELECT p_partkey,
-               '{"brand":"' || p_brand || '","size":' || CAST(p_size AS VARCHAR) ||
-               ',"tags":["' || lower(p_type) || '","' || p_name || '"]}' AS doc
-        FROM part WHERE p_partkey < 80
-    )
-    SELECT p_partkey,
-           json_extract_string(doc, '$.brand') AS brand,
-           CAST(json_extract(doc, '$.size') AS BIGINT) AS size,
-           json_extract_string(doc, '$.tags[0]') AS tag0,
-           CAST(json_array_length(json_extract(doc, '$.tags')) AS BIGINT) AS n_tags
-    FROM j
-    ORDER BY p_partkey
-    """,
-)
-def json_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured surface: JSON path extraction over an in-row
-    document.  The document is CONSTRUCTED by identical string concat on
-    both sides (engine-native to_json key order/whitespace differ, so
-    serializer output is never compared — only parse results).
-    get_json_object stays JVM-side (Jackson) — no UDF."""
-    part = load_testdata(spark, sf_dir, "part").filter(F.col("p_partkey") < 80)
-    doc = F.concat(
-        F.lit('{"brand":"'), F.col("p_brand"),
-        F.lit('","size":'), F.col("p_size").cast("string"),
-        F.lit(',"tags":["'), F.lower(F.col("p_type")),
-        F.lit('","'), F.col("p_name"), F.lit('"]}'),
-    )
-    j = part.select("p_partkey", doc.alias("doc"))
-    return (
-        j.select(
-            "p_partkey",
-            F.get_json_object("doc", "$.brand").alias("brand"),
-            F.get_json_object("doc", "$.size").cast("bigint").alias("size"),
-            F.get_json_object("doc", "$.tags[0]").alias("tag0"),
-            F.json_array_length(F.get_json_object("doc", "$.tags"))
-            .cast("bigint")
-            .alias("n_tags"),
-        )
-        .orderBy("p_partkey")
     )

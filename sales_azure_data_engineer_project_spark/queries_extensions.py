@@ -124,31 +124,6 @@ _SHINGLE_SQL = r"""
 """
 
 # ---------------------------------------------------------------------------
-# Text analysis
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "text_quality_stats",
-    r"""
-    WITH t AS (SELECT doc_id, text, string_split_regex(text, '\s+') AS toks
-               FROM documents)
-    SELECT doc_id,
-           CAST(length(text) AS BIGINT) AS n_chars,
-           CAST(len(toks) AS BIGINT) AS n_tokens,
-           CAST(len(list_distinct(toks)) AS BIGINT) AS n_types,
-           CAST((1000 * list_sum(list_transform(toks, t -> length(t)))) // len(toks) AS BIGINT) AS avg_tok_len_milli,
-           CAST((1000 * len(list_distinct(toks))) // len(toks) AS BIGINT) AS ttr_permille
-    FROM t
-    ORDER BY doc_id
-    """,
-)
-def text_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_testdata(spark, sf_dir, "documents")
-    return docs.select("doc_id", *X.quality_columns("text")).orderBy("doc_id")
-
-
-# ---------------------------------------------------------------------------
 # Dedup family (over the planted-duplicate corpus)
 # ---------------------------------------------------------------------------
 
@@ -418,31 +393,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.lsh_candidate_pairs(bands, "doc_id").orderBy("id_a", "id_b")
 
 
-_SIMHASH_NIBS = "('8','9','a','b','c','d','e','f')"
-
-
-@register(
-    "dedup_simhash",
-    f"""
-    WITH {_CORPUS_SQL},
-    tok AS (SELECT doc_id, unnest(string_split_regex(text, '\\s+')) AS tok FROM corpus),
-    h AS (SELECT doc_id, md5(tok) AS h FROM tok),
-    v AS (
-        SELECT doc_id,
-               {', '.join(f"SUM(CASE WHEN substr(h, {i + 1}, 1) IN {_SIMHASH_NIBS} THEN 1 ELSE -1 END) AS s{i}" for i in range(16))}
-        FROM h GROUP BY doc_id
-    )
-    SELECT CAST(doc_id AS BIGINT) AS doc_id,
-           {" || ".join(f"(CASE WHEN s{i} > 0 THEN '1' ELSE '0' END)" for i in range(16))} AS simhash16
-    FROM v
-    ORDER BY doc_id
-    """,
-)
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    corpus = _dedup_corpus(spark, sf_dir)
-    return D.simhash16(corpus, "doc_id", "text").orderBy("doc_id")
-
-
 def _duck_simhash64_votes() -> str:
     out = []
     for b in range(4):
@@ -549,57 +499,6 @@ def similarity_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("query_id").cast("bigint"),
         F.col("neighbor_id").cast("bigint"),
         F.round("cos_sim", 6).cast("decimal(10,6)").cast("double").alias("cos_sim"),
-        "rk",
-    ).orderBy("query_id", "rk")
-
-
-@register(
-    "similarity_ann_sq8",
-    """
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    mm AS (SELECT MIN(x) AS mn, MAX(x) AS mx FROM (SELECT unnest(v) AS x FROM e)),
-    q AS (
-        SELECT vec_id,
-               list_transform(v, x -> least(255, greatest(0,
-                   CAST(floor((x - mn) * 256.0 / greatest(mx - mn, 1e-12)) AS INTEGER)))) AS qv
-        FROM e, mm
-    ),
-    scored AS (
-        SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-               list_sum(list_transform(generate_series(1, len(a.qv)),
-                        i -> a.qv[i] * b.qv[i])) AS approx_dot
-        FROM q a JOIN q b ON b.vec_id != a.vec_id
-        WHERE a.vec_id < 10
-    ),
-    ranked AS (
-        SELECT query_id, neighbor_id, approx_dot,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY approx_dot DESC, neighbor_id) AS INTEGER) AS rk
-        FROM scored
-    )
-    SELECT CAST(query_id AS BIGINT) AS query_id,
-           CAST(neighbor_id AS BIGINT) AS neighbor_id,
-           CAST(approx_dot AS BIGINT) AS approx_dot, rk
-    FROM ranked WHERE rk <= 10
-    ORDER BY query_id, rk
-    """,
-)
-def similarity_ann_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar-quantized (SQ8) top-k — the COMPRESSION tier of ANN,
-    complementing the partitioning (IVF) and hashing (sign-LSH) tiers:
-    8-bit codes over the global value range cut the scanned bytes 4×
-    and turn the distance into an exact BIGINT dot product.  One tiny
-    min/max aggregate broadcasts into the quantization map; scoring is
-    the same broadcast-queries scan-candidates shape as the brute
-    baseline.  Both engines quantize with the identical double
-    expression, so codes — and therefore ranks — match exactly."""
-    emb = _fan_out(load_testdata(spark, sf_dir, "embeddings"))
-    codes = S.sq8_codes(emb)
-    out = S.sq8_topk(codes, codes.filter(F.col("vec_id") < 10), k=10)
-    return out.select(
-        F.col("query_id").cast("bigint"),
-        F.col("neighbor_id").cast("bigint"),
-        F.col("approx_dot").cast("bigint"),
         "rk",
     ).orderBy("query_id", "rk")
 
@@ -925,41 +824,6 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("query_id", "rk")
     )
-
-
-@register(
-    "skew_salted_aggregation",
-    """
-    SELECT l_returnflag,
-           CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty,
-           CAST(SUM(CAST(floor(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS total_cents
-    FROM lineitem
-    GROUP BY l_returnflag
-    ORDER BY l_returnflag
-    """,
-)
-def skew_salted_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The skew-safe two-phase aggregation (operators/skew.py) under the
-    oracle gate: l_returnflag has only 3 values — the definitional hot
-    key — so the heavy shuffle carries (key, salt) pre-aggregates.
-    Result is provably identical to the plain GROUP BY the oracle runs."""
-    from .operators.skew import salted_sum
-
-    li = load_testdata(spark, sf_dir, "lineitem").select(
-        "l_returnflag",
-        F.col("l_orderkey").alias("uid"),
-        F.col("l_quantity").cast("bigint").alias("qty"),
-        F.floor(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),
-    )
-    out = salted_sum(
-        li, ["l_returnflag"], {"qty": "total_qty", "cents": "total_cents"},
-        salt_from="uid", buckets=16,
-    )
-    return out.select(
-        "l_returnflag",
-        F.col("total_qty").cast("bigint"),
-        F.col("total_cents").cast("bigint"),
-    ).orderBy("l_returnflag")
 
 
 @register(
@@ -2122,7 +1986,7 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# BM25 top-k, embedding outliers
+# BM25 top-k
 # ---------------------------------------------------------------------------
 
 
@@ -2284,90 +2148,6 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rk",
         )
         .orderBy("query_id", "rk")
-    )
-
-
-def _embedding_outliers_oracle_sql() -> str:
-    """DuckDB twin of ``embedding_outliers_topk``: replays the trained
-    cells (same ``_kmeans_cells_cte`` chain as
-    ``embedding_cluster_quality``), computes the integer-exact scaled
-    distance² of every member to its cluster's final mean, and keeps
-    the top-3 farthest per cluster."""
-    return _kmeans_cells_cte() + """,
-    cn AS (SELECT cluster, COUNT(*) AS n FROM cells GROUP BY cluster),
-    fu AS (
-        SELECT c.cluster, t.i AS pos, CAST(SUM(s.cvec[t.i]) AS BIGINT) AS sm
-        FROM cells c JOIN cv s ON s.vec_id = c.vec_id
-        CROSS JOIN (SELECT unnest(range(1, 65)) AS i) t
-        GROUP BY c.cluster, t.i
-    ),
-    fm AS (SELECT cluster, list(sm ORDER BY pos) AS sml FROM fu GROUP BY cluster),
-    pv AS (
-        SELECT c.cluster, c.vec_id,
-               list_sum(list_transform(range(1, 65),
-                   t -> CAST(cn.n * s.cvec[t] - fm.sml[t] AS BIGINT)
-                        * CAST(cn.n * s.cvec[t] - fm.sml[t] AS BIGINT))) AS d2s
-        FROM cells c
-        JOIN cv s ON s.vec_id = c.vec_id
-        JOIN fm ON fm.cluster = c.cluster
-        JOIN cn ON cn.cluster = c.cluster
-    ),
-    ranked AS (
-        SELECT cluster, vec_id, d2s,
-               CAST(ROW_NUMBER() OVER (PARTITION BY cluster
-                    ORDER BY d2s DESC, vec_id) AS INTEGER) AS rk
-        FROM pv
-    )
-    SELECT CAST(cluster AS INTEGER) AS cluster,
-           CAST(vec_id AS BIGINT) AS vec_id,
-           CAST(d2s AS BIGINT) AS d2s_scaled, rk
-    FROM ranked WHERE rk <= 3
-    ORDER BY cluster, rk
-    """
-
-
-@register("embedding_outliers_topk", _embedding_outliers_oracle_sql())
-def embedding_outliers_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-space outlier mining — the OOD-pruning curation step
-    (SemDeDup's complement: instead of dropping what clusters too
-    tightly, surface what barely belongs anywhere): per trained
-    quantizer cell, the 3 members FARTHEST from the cell's final mean.
-    These are the mislabeled / out-of-distribution / garbage-encoding
-    candidates a pipeline routes to review or drops before training.
-    Distance² is scaled by |cluster|² so every term is integer-exact
-    on both engines (same trick as ``embedding_cluster_quality``,
-    whose chain this shares verbatim up to the ranking).
-
-    Scale shape: final-mean partial sums = one (k·d)-row combinable
-    shuffle; per-vector distance = posexplode + broadcast joins of the
-    k·d sums; the ranking window partitions by cluster (parallel
-    across cells, each a bounded-size group under the k ∝ N quantizer
-    regime)."""
-    cells = _sq8_kmeans_cells(spark, sf_dir)
-    pe = cells.select("vec_id", "cluster", F.posexplode("cvec").alias("pos", "x"))
-    sums = pe.groupBy("cluster", "pos").agg(F.sum("x").cast("bigint").alias("sm"))
-    cn = cells.groupBy("cluster").agg(F.count(F.lit(1)).alias("n"))
-    term = (F.col("n") * F.col("x") - F.col("sm")).cast("bigint")
-    pv = (
-        pe.join(F.broadcast(sums), ["cluster", "pos"])
-        .join(F.broadcast(cn), "cluster")
-        .select("vec_id", "cluster", (term * term).alias("t2"))
-        .groupBy("vec_id", "cluster")
-        .agg(F.sum("t2").alias("d2s"))
-    )
-    w = Window.partitionBy("cluster").orderBy(
-        F.col("d2s").desc(), F.col("vec_id").asc()
-    )
-    return (
-        pv.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= 3)
-        .select(
-            F.col("cluster").cast("int"),
-            F.col("vec_id").cast("bigint"),
-            F.col("d2s").cast("bigint").alias("d2s_scaled"),
-            "rk",
-        )
-        .orderBy("cluster", "rk")
     )
 
 
@@ -2623,63 +2403,6 @@ def sample_priority_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("err_permille"),
         )
         .orderBy("l_returnflag")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Revenue cube by flag and status
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "cube_revenue_by_flag_status",
-    """
-    SELECT COALESCE(l_returnflag, 'ALL') AS l_returnflag,
-           COALESCE(l_linestatus, 'ALL') AS l_linestatus,
-           CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus)
-               AS INTEGER) AS grouping_id,
-           CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-               AS revenue_centi
-    FROM lineitem
-    GROUP BY CUBE (l_returnflag, l_linestatus)
-    ORDER BY grouping_id, l_returnflag, l_linestatus
-    """,
-)
-def cube_revenue_by_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE aggregation — the remaining member of the grouped-
-    aggregation family next to ``rollup_revenue`` and
-    ``grouping_sets_revenue``: all 2² margin combinations of
-    (returnflag, linestatus) in one pass, with the GROUPING() bitmask
-    distinguishing real NULL-like margins from data values (the
-    ``'ALL'`` coalesce is presentation; grouping_id is the truth).
-    Revenue in exact centi-units (per-row rounding before the integer
-    sum — order-independent on both engines).
-
-    Scale shape: Spark expands CUBE into a single Expand + one
-    map-side-combinable aggregate — one shuffle for all four grouping
-    sets, output bounded by the category-domain product; the same
-    Expand-based plan AQE-sizes at any N."""
-    return (
-        _fan_out(load_testdata(spark, sf_dir, "lineitem"))
-        .cube("l_returnflag", "l_linestatus")
-        .agg(
-            (F.grouping("l_returnflag") * 2 + F.grouping("l_linestatus"))
-            .cast("int")
-            .alias("grouping_id"),
-            F.count(F.lit(1)).cast("bigint").alias("n_items"),
-            F.sum(F.expr("cast(round(l_extendedprice * 100) as bigint)"))
-            .cast("bigint")
-            .alias("revenue_centi"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("l_returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("l_linestatus"),
-            "grouping_id",
-            "n_items",
-            "revenue_centi",
-        )
-        .orderBy("grouping_id", "l_returnflag", "l_linestatus")
     )
 
 
@@ -3510,63 +3233,6 @@ def dedup_token_savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cast(div(1000 * sum(case when id <> component then n_tok else 0 end),"
             " sum(n_tok)) as bigint)"
         ).alias("tokens_removed_permille"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Hour-of-week heatmap
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "events_hour_weekday_heatmap",
-    """
-    WITH e AS (
-        SELECT datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) % 7 AS wd,
-               (epoch_ms(ts) // 3600000) % 24 AS hod
-        FROM events
-    ),
-    cells AS (SELECT wd, hod, COUNT(*) AS n FROM e GROUP BY 1, 2),
-    wt AS (SELECT wd, SUM(n) AS nw FROM cells GROUP BY 1)
-    SELECT CAST(c.wd AS INTEGER) AS weekday,
-           CAST(c.hod AS INTEGER) AS hour_utc,
-           CAST(c.n AS BIGINT) AS n_events,
-           CAST((1000 * c.n) // w.nw AS BIGINT) AS weekday_share_permille
-    FROM cells c JOIN wt w ON w.wd = c.wd
-    ORDER BY weekday, hour_utc
-    """,
-)
-def events_hour_weekday_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 7×24 activity heatmap: event volume per (weekday,
-    UTC-hour) cell with each cell's permille share of its weekday —
-    the seasonality fingerprint behind capacity planning (when do we
-    scale up?) and anomaly-detector scheduling (the weekday
-    deseasonalizer assumes a stable weekly shape; this is the table
-    that VERIFIES the assumption).  Day 0 (2024-01-01) is a Monday;
-    hour-of-day is derived from epoch milliseconds (pure integer
-    arithmetic, timezone-free — the same TZ-proof contract the
-    hourly rollup uses via epoch, surviving the driver's
-    Asia/Kolkata session).
-
-    Scale shape: ONE map-side-combinable groupBy to ≤168 cells plus a
-    7-row weekday-total groupBy and their equi-join.  Nothing else."""
-    e = load_testdata(spark, sf_dir, "events").select(
-        F.expr("datediff(cast(ts as date), date'2024-01-01') % 7").alias("wd"),
-        F.expr("(div(unix_millis(ts), 3600000)) % 24").alias("hod"),
-    )
-    cells = e.groupBy("wd", "hod").agg(F.count(F.lit(1)).alias("n"))
-    wt = cells.groupBy("wd").agg(F.sum("n").alias("nw"))
-    return (
-        cells.join(wt, "wd")
-        .select(
-            F.col("wd").cast("int").alias("weekday"),
-            F.col("hod").cast("int").alias("hour_utc"),
-            F.col("n").cast("bigint").alias("n_events"),
-            F.expr("cast(div(1000 * n, nw) as bigint)").alias(
-                "weekday_share_permille"
-            ),
-        )
-        .orderBy("weekday", "hour_utc")
     )
 
 

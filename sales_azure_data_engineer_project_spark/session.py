@@ -80,7 +80,7 @@ def get_spark(
         # recompiled 54-76 classes and every star pass 130.  2000 is
         # nearly 9x the largest of these.  A whole registry pass is not
         # one operation's working set, but it fits too
-        # (tools/check_oracle.py prints the count: 1,542 at sf0.01).
+        # (tools/check_oracle.py prints the count: 1,164 at sf0.01).
         .config("spark.sql.codegen.cache.maxEntries", "2000")
         # The corpus events table has shipped as TIMESTAMP(NANOS) (reader
         # rejects it — read as long, normalize in io) and as naive

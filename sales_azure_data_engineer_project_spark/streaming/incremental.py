@@ -77,9 +77,9 @@ def windowed_event_counts(
     *,
     window: str = "1 hour",
     slide: str | None = None,
-    watermark: str = "30 minutes",
 ) -> DataFrame:
-    """Event-time tumbling/sliding window counts with late-data watermark.
+    """Event-time tumbling/sliding window counts with a 30-minute
+    late-data watermark.
 
     Works on both batch and streaming DataFrames (same plan shape); on a
     stream, the watermark bounds state so the aggregation runs forever
@@ -87,7 +87,7 @@ def windowed_event_counts(
     """
     win = F.window("ts", window, slide) if slide else F.window("ts", window)
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "30 minutes")
         .groupBy(win, "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("total_value"))
         .select(

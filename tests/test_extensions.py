@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from sales_azure_data_engineer_project_spark.operators import dedup as D
 from sales_azure_data_engineer_project_spark.operators import multimodal as M
 from sales_azure_data_engineer_project_spark.operators import similarity as S
-from sales_azure_data_engineer_project_spark.operators import text as X
 
 
 @pytest.fixture(scope="module")
@@ -57,26 +56,6 @@ def test_pq_codes_and_adc_retrieval(spark):
     out = S.pq_adc_topk(codes, books, emb.filter("vec_id = 0"), k_neighbors=8).collect()
     top5 = [r["neighbor_id"] for r in out[:5]]
     assert set(top5) == {1, 2, 3, 4, 5}  # own cluster first
-
-
-def test_sq8_codes_and_topk(spark):
-    rows = [(i, [float(i == j) for j in range(4)]) for i in range(4)]
-    rows.append((9, [1.0, 0.001, 0.0, 0.0]))  # near-parallel to vec 0
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    codes = S.sq8_codes(emb)
-    got = {r["vec_id"]: r["codes"] for r in codes.collect()}
-    assert all(0 <= c <= 255 for cs in got.values() for c in cs)
-    assert got[0] == [255, 0, 0, 0]  # max value clamps to 255
-    out = S.sq8_topk(codes, codes.filter("vec_id = 0"), k=2).collect()
-    assert [r["neighbor_id"] for r in out] == [9, 1]
-    assert out[0]["approx_dot"] == 255 * 255
-
-
-def test_simhash_identical_docs_equal(spark, docs):
-    fp = {r["doc_id"]: r["simhash16"] for r in D.simhash16(docs, "doc_id", "text").collect()}
-    assert fp[1] == fp[2]
-    assert len(fp[1]) == 16 and set(fp[1]) <= {"0", "1"}
-    assert fp[1] != fp[4]
 
 
 def test_simhash_hamming_pairs(spark, docs):
@@ -135,16 +114,6 @@ def test_sign_bucket(spark):
     )
     got = {r["vec_id"]: r["b"] for r in emb.select("vec_id", S.sign_bucket("embedding", 4).alias("b")).collect()}
     assert got[1] == got[2] == "1010" and got[3] == "0111"
-
-
-def test_quality_columns_integer_exact(spark):
-    df = spark.createDataFrame([(1, "aa bb aa")], ["doc_id", "text"])
-    row = df.select(*X.quality_columns("text")).first()
-    assert row["n_chars"] == 8
-    assert row["n_tokens"] == 3
-    assert row["n_types"] == 2
-    assert row["avg_tok_len_milli"] == 2000
-    assert row["ttr_permille"] == 666
 
 
 def test_multimodal_stub_raises_without_fake():
@@ -536,32 +505,6 @@ def test_bm25_planted_relevant_doc_ranks_first(spark):
             assert r["score_milli"] == 0
 
 
-def test_embedding_outliers_consistent_with_cluster_radius(spark, sf_smoke):
-    """The rank-1 outlier's scaled distance² per cluster must equal the
-    radius embedding_cluster_quality reports for that cluster (the two
-    queries share the distance chain verbatim), and ranks must be
-    consecutive with non-increasing distances."""
-    from sales_azure_data_engineer_project_spark.queries_extensions import (
-        embedding_cluster_quality,
-        embedding_outliers_topk,
-    )
-
-    radius = {
-        r["cluster"]: r["radius_scaled"]
-        for r in embedding_cluster_quality(spark, sf_smoke).collect()
-    }
-    by_c: dict = {}
-    for r in embedding_outliers_topk(spark, sf_smoke).collect():
-        by_c.setdefault(r["cluster"], []).append(r)
-    assert set(by_c) == set(radius)
-    for c, rows in by_c.items():
-        rows.sort(key=lambda r: r["rk"])
-        assert [r["rk"] for r in rows] == list(range(1, len(rows) + 1))
-        ds = [r["d2s_scaled"] for r in rows]
-        assert ds == sorted(ds, reverse=True)
-        assert ds[0] == radius[c]
-
-
 def test_hybrid_rrf_fuses_both_tiers(spark, sf_smoke):
     """RRF output must reproduce div(1e6, 60+rk) per tier exactly, rank
     by fused score, and agree with the standalone BM25 tier on lexical
@@ -668,27 +611,6 @@ def test_priority_sample_plan_has_partial_window_group_limit(spark, sf_smoke):
         .toString()
     )
     assert "WindowGroupLimit" in plan and "Partial" in plan
-
-
-def test_cube_margins_consistent(spark, sf_smoke):
-    """All four grouping sets must be internally consistent: cell rows
-    sum to each margin and to the grand total."""
-    from sales_azure_data_engineer_project_spark import queries_core as Q
-    from sales_azure_data_engineer_project_spark import queries_extensions  # noqa: F401 (registers)
-
-    rows = Q.QUERIES["cube_revenue_by_flag_status"](spark, sf_smoke).collect()
-    cells = [r for r in rows if r["grouping_id"] == 0]
-    by_flag = {r["l_returnflag"]: r for r in rows if r["grouping_id"] == 1}
-    by_stat = {r["l_linestatus"]: r for r in rows if r["grouping_id"] == 2}
-    grand = [r for r in rows if r["grouping_id"] == 3]
-    assert len(grand) == 1
-    for margin, key in ((by_flag, "l_returnflag"), (by_stat, "l_linestatus")):
-        for val, m in margin.items():
-            sub = [c for c in cells if c[key] == val]
-            assert m["n_items"] == sum(c["n_items"] for c in sub)
-            assert m["revenue_centi"] == sum(c["revenue_centi"] for c in sub)
-    assert grand[0]["n_items"] == sum(c["n_items"] for c in cells)
-    assert grand[0]["revenue_centi"] == sum(c["revenue_centi"] for c in cells)
 
 
 def test_mutual_knn_reciprocity_invariants(spark, sf_smoke):
@@ -957,34 +879,6 @@ def test_token_savings_differential(spark):
         1000 * sum(toks[d] for d in removed)
     ) // sum(toks.values())
     assert r["tokens_removed"] > 0, "planted copies must yield savings"
-
-
-def test_hour_weekday_heatmap_differential(spark):
-    """events_hour_weekday_heatmap vs plain-Python epoch bucketing."""
-    from collections import Counter
-
-    import duckdb
-
-    import __spark_entry__ as m
-
-    sf = "/root/testdata/sf0.001"
-    rows = duckdb.sql(
-        f"""SELECT datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) % 7,
-                   (epoch_ms(ts) // 3600000) % 24
-            FROM '{sf}/events.parquet'"""
-    ).fetchall()
-    cells = Counter((int(w), int(h)) for w, h in rows)
-    wt = Counter()
-    for (w, _), n in cells.items():
-        wt[w] += n
-    got = {
-        (r["weekday"], r["hour_utc"]): r
-        for r in m.queries()["events_hour_weekday_heatmap"](spark, sf).collect()
-    }
-    assert set(got) == set(cells)
-    for (w, h), r in got.items():
-        assert r["n_events"] == cells[(w, h)]
-        assert r["weekday_share_permille"] == (1000 * cells[(w, h)]) // wt[w]
 
 
 def test_soft_dedup_weights_differential(spark):

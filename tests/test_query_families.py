@@ -1,11 +1,11 @@
-"""Spark-free checks that the query registry stays cut to one extension
-query per operator family.
+"""Spark-free checks that the query registry stays cut to one query per
+operator family.
 
 A query's operator family is the set of ``PLAN_AUDIT.md`` operator
 columns where its count is non-zero.  Exchange and scan counts are left
-out because nearly every query has them.  An extension query either is
-protected, is pinned by a test of its own, or is the only registered
-query with its family among the rest.
+out because nearly every query has them.  A query either is protected,
+is pinned by a test of its own, or is the only registered query with
+its family among the rest.
 """
 
 from __future__ import annotations
@@ -22,6 +22,8 @@ FAMILY_COLUMNS = (
     "PyEval", "ArrowPandas",
 )
 
+QUERY_MODULES = ("core", "analytics", "extensions")
+
 # Extension queries kept whatever their family, besides the benchmark's.
 PROTECTED = {
     # the registered batch twin of streaming.windowed_event_counts
@@ -34,19 +36,17 @@ PROTECTED = {
 }
 
 
-# Extension queries that share a family but still carry a dedicated test
-# (a differential or invariant check of the query's own output).  They go
-# with their tests in later cuts; the set may only shrink, and a name
-# here that is no longer registered fails the family test.
+# Queries of any module that share a family but still carry a dedicated
+# test (a differential or invariant check of the query's own output, or
+# a plan pin).  They go with their tests in later cuts; the set may only
+# shrink, and a name here that is no longer registered fails the family
+# test.
 PINNED = {
-    "cube_revenue_by_flag_status", "dedup_cross_source_matrix",
-    "dedup_graph_kcore", "dedup_minhash_lsh", "dedup_simhash",
-    "dedup_simhash_hamming", "dedup_token_savings_report",
-    "embedding_outliers_topk", "events_hour_weekday_heatmap",
+    "dedup_cross_source_matrix", "dedup_graph_kcore", "dedup_minhash_lsh",
+    "dedup_simhash_hamming", "dedup_token_savings_report", "events_funnel",
     "pipeline_pack_sequences", "pipeline_unimax_language_budget",
-    "quantile_sketch_bottomk", "sample_priority_topk",
-    "sample_soft_dedup_weights", "similarity_ann_sq8",
-    "skew_salted_aggregation", "text_bm25_topk", "text_quality_stats",
+    "q21_waiting_orders", "q6_forecast_revenue", "quantile_sketch_bottomk",
+    "sample_priority_topk", "sample_soft_dedup_weights", "text_bm25_topk",
 }
 
 
@@ -88,13 +88,32 @@ def _audit_families() -> dict[str, frozenset[str]]:
     return out
 
 
+def _backtick_spans(line: str) -> list[str]:
+    """The single-backtick spans of a markdown line; ````literal````
+    spans are dropped first."""
+    return re.findall(r"`([^`]+)`", re.sub(r"``.*?``", "", line))
+
+
+def _coverage_cited(registered: dict[str, set[str]]) -> set[str]:
+    """Queries that the survey sections of ``COVERAGE.md`` (everything
+    above its training-data section) cite in backticks, as ``name`` or
+    as ``queries_<m>.name``."""
+    text = (REPO / "COVERAGE.md").read_text()
+    every = set().union(*registered.values())
+    out: set[str] = set()
+    for line in text[:text.index("## Training-data extensions")].splitlines():
+        for span in _backtick_spans(line):
+            if span in every:
+                out.add(span)
+            elif m := re.fullmatch(r"queries_(core|analytics|extensions)\.(\w+)", span):
+                out.update({m[2]} & registered[m[1]])
+    return out
+
+
 def test_plan_audit_lists_exactly_the_registered_queries():
     """A stale ``PLAN_AUDIT.md`` would let the family rule read families
     of queries that are gone, or miss new ones."""
-    registered = {
-        n for m in ("queries_core.py", "queries_analytics.py", "queries_extensions.py")
-        for n in _registered(m)
-    }
+    registered = {n for m in QUERY_MODULES for n in _registered(f"queries_{m}.py")}
     audited = set(_audit_families())
     assert audited == registered, (
         f"regenerate PLAN_AUDIT.md with tools/plan_report.py: "
@@ -103,21 +122,22 @@ def test_plan_audit_lists_exactly_the_registered_queries():
     )
 
 
-def test_each_extension_query_is_protected_or_alone_in_its_family():
-    """An extension query that is neither protected nor pinned must be
-    the only query with its operator family, pinned queries aside: a
-    second query with the same family adds code without covering a new
-    operator mix."""
+def test_each_query_is_protected_pinned_or_alone_in_its_family():
+    """A query that is neither protected nor pinned must be the only
+    query with its operator family, pinned queries aside: a second query
+    with the same family adds code without covering a new operator mix.
+    Protected are the benchmark's queries, ``PROTECTED``, and the core
+    and analytics queries that ``COVERAGE.md``'s survey sections cite."""
     families = _audit_families()
-    protected = PROTECTED | _benchmark_queries()
-    extensions = _registered("queries_extensions.py")
-    assert PROTECTED <= set(extensions), sorted(PROTECTED - set(extensions))
-    assert PINNED <= set(extensions), (
-        f"drop deleted queries from PINNED: {sorted(PINNED - set(extensions))}"
-    )
+    registered = {m: set(_registered(f"queries_{m}.py")) for m in QUERY_MODULES}
+    every = set().union(*registered.values())
+    cited = _coverage_cited(registered) & (registered["core"] | registered["analytics"])
+    protected = PROTECTED | _benchmark_queries() | cited
+    assert PROTECTED <= registered["extensions"], sorted(PROTECTED - registered["extensions"])
+    assert PINNED <= every, f"drop deleted queries from PINNED: {sorted(PINNED - every)}"
     assert not PINNED & protected, sorted(PINNED & protected)
     shared = {}
-    for name in extensions:
+    for name in sorted(every):
         if name in protected or name in PINNED:
             continue
         twins = sorted(
@@ -127,8 +147,8 @@ def test_each_extension_query_is_protected_or_alone_in_its_family():
         if twins:
             shared[name] = (sorted(families[name]), twins)
     assert not shared, (
-        "extension queries that share an operator family (delete them, "
-        "or keep one per family):\n"
+        "queries that share an operator family (delete them, or keep one "
+        "per family):\n"
         + "\n".join(f"{n} {fam}: also {tw}" for n, (fam, tw) in sorted(shared.items()))
     )
 
@@ -151,7 +171,7 @@ def test_coverage_pinned_table_matches_pinned():
     and every ``file::test`` it names is a test in ``tests/``, so the
     table cannot drift as later cuts shrink the set."""
     lines = (REPO / "COVERAGE.md").read_text().splitlines()
-    start = lines.index("## Extension queries pinned by their own tests")
+    start = lines.index("## Queries pinned by their own tests")
     rows = []
     for line in lines[start + 1:]:
         if line.startswith("## "):
@@ -188,9 +208,23 @@ def _package_defs() -> set[str]:
     return out
 
 
+def _readme_operator_tree() -> set[str]:
+    """The module files that the ``operators/`` branch of ``README.md``'s
+    layout tree lists, one per line."""
+    lines = (REPO / "README.md").read_text().splitlines()
+    out: set[str] = set()
+    for line in lines[lines.index("  operators/") + 1:]:
+        if not line.startswith("    "):
+            break
+        if m := re.match(r"    ([a-z_0-9]+\.py) ", line):
+            out.add(m[1])
+    return out
+
+
 def test_docs_name_only_modules_and_queries_that_exist():
     """Every ``operators.<module>`` or ``operators/<module>.py`` that
     ``COVERAGE.md`` or ``README.md`` names is a module of the package,
+    ``README.md``'s layout tree lists exactly the ``operators`` modules,
     and every query that a ``COVERAGE.md`` table names in backticks is
     registered: a bare snake_case name must be a registered query, a
     name the package defines, or a test, and a ``queries_<m>.<name>``
@@ -204,10 +238,9 @@ def test_docs_name_only_modules_and_queries_that_exist():
         ))
         if not (PACKAGE / "operators" / f"{mod}.py").is_file()
     )
-    registered = {
-        m: set(_registered(f"queries_{m}.py"))
-        for m in ("core", "analytics", "extensions")
-    }
+    modules = {p.name for p in (PACKAGE / "operators").glob("*.py")} - {"__init__.py"}
+    tree = _readme_operator_tree()
+    registered = {m: set(_registered(f"queries_{m}.py")) for m in QUERY_MODULES}
     known = set().union(*registered.values()) | _package_defs()
     tests = {p.stem for p in (REPO / "tests").glob("test_*.py")}
     tests |= set().union(*(_test_names(s) for s in tests))
@@ -215,14 +248,16 @@ def test_docs_name_only_modules_and_queries_that_exist():
     for line in (REPO / "COVERAGE.md").read_text().splitlines():
         if not line.startswith("|"):
             continue
-        for span in re.findall(r"`([^`]+)`", re.sub(r"``.*?``", "", line)):
+        for span in _backtick_spans(line):
             if re.fullmatch(r"[a-z][a-z0-9_]*", span):
                 if span not in known and span not in tests:
                     unknown.append(span)
             elif m := re.fullmatch(r"queries_(core|analytics|extensions)\.(\w+)", span):
                 if m[2] not in registered[m[1]]:
                     unknown.append(span)
-    assert not missing_modules and not unknown, (
+    assert not missing_modules and tree == modules and not unknown, (
         f"docs name modules that do not exist: {missing_modules}; "
+        f"README.md's layout tree leaves out {sorted(modules - tree)} and "
+        f"lists missing {sorted(tree - modules)}; "
         f"COVERAGE.md names queries that are not registered: {unknown}"
     )

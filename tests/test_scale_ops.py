@@ -1,4 +1,4 @@
-"""Scale-oriented operator tests: as-of join, skew salting and
+"""Scale-oriented operator tests: as-of join and
 physical-plan assertions."""
 
 from __future__ import annotations
@@ -8,7 +8,6 @@ import math
 from pyspark.sql import functions as F
 
 from sales_azure_data_engineer_project_spark.operators.asof import asof_join
-from sales_azure_data_engineer_project_spark.operators.skew import salted_sum
 
 
 def test_asof_join_semantics(spark):
@@ -39,20 +38,6 @@ def test_asof_join_semantics(spark):
         ).collect()
     }
     assert strict["t1"] == 9.0  # equal-ts quote excluded under strict <
-
-
-def test_salted_sum_equals_plain(spark):
-    df = spark.range(0, 10_000).select(
-        (F.col("id") % 3).alias("k"),  # 3 hot keys
-        F.col("id").alias("uid"),
-        (F.col("id") % 7).cast("long").alias("v"),
-    )
-    plain = {r["k"]: r["v_sum"] for r in df.groupBy("k").agg(F.sum("v").alias("v_sum")).collect()}
-    salted = {
-        r["k"]: r["v_sum"]
-        for r in salted_sum(df, ["k"], {"v": "v_sum"}, salt_from="uid").collect()
-    }
-    assert salted == plain
 
 
 def test_connected_components(spark):
@@ -339,11 +324,7 @@ def test_no_cartesian_or_python_udf_in_any_registered_plan(spark):
     # non-equi joins against constant-size build sides: a BNLJ over a
     # broadcast of O(1) rows is the intended plan, not a smell
     bnlj_ok = {
-        "range_band_join",          # 3-band interval table
         "orders_above_avg_price",   # scalar subquery comparison
-        "q22_inactive_rich_customers",  # scalar avg comparison
-        "q11_important_parts",      # scalar total-value comparison
-        "events_value_anomalies",   # scalar stddev bounds
         "events_funnel",            # per-user ts inequality after key join
         "q21_waiting_orders",       # correlated <> EXISTS rewrite
         "similarity_ann_ivf",       # broadcast centroid grid (crossJoin by design)
@@ -354,8 +335,6 @@ def test_no_cartesian_or_python_udf_in_any_registered_plan(spark):
         "similarity_cosine_topk",   # brute-force baseline: bounded
                                     # query set broadcast × corpus (the
                                     # ANN tiers are the scale path)
-        "similarity_ann_sq8",       # same bounded-query broadcast shape,
-                                    # scored in the 8-bit code domain
         "embedding_cluster_quality",  # shared _sq8_kmeans_cells 1-row
                                       # sq8 stats broadcast
         "events_resample_gapfill",  # 1-row min/max span broadcast into
@@ -364,9 +343,6 @@ def test_no_cartesian_or_python_udf_in_any_registered_plan(spark):
                                  # onto the 256-bucket weight table
         "ann_recall_pq",  # 10-row truth query set broadcast != join
                           # + the PQ ADC LUT broadcast
-        "embedding_outliers_topk",  # shared _sq8_kmeans_cells 1-row
-                                    # sq8 stats broadcast (as
-                                    # embedding_cluster_quality)
         "text_bm25_topk",  # 1-row corpus stats (N, avgdl) broadcast
                            # onto the query-term-bounded idf table and
                            # the posting join; retrieval joins are all

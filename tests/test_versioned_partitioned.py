@@ -132,7 +132,7 @@ def test_read_raises_when_the_current_version_dir_is_gone(spark, tmp_path):
 
     # a partitioned merge hardlinks the base version's untouched
     # partitions: dropping that version leaves every row readable, and
-    # compaction keeps the partition dirs
+    # the current version keeps the partition dirs
     import os
 
     pt = VersionedTable(spark, str(tmp_path / "p"), partition_by=("p",))
@@ -140,7 +140,7 @@ def test_read_raises_when_the_current_version_dir_is_gone(spark, tmp_path):
     pt.merge(spark.createDataFrame([(3, "b")], "k long, p string"), ["k", "p"])
     assert pt.vacuum(keep_last=1) == [0, 1]
     assert sorted(r["k"] for r in pt.read().collect()) == [1, 2, 3]
-    v = pt.compact()
+    v = pt.current_version()
     assert sorted(n for n in os.listdir(pt._vdir(v)) if "=" in n) == ["p=a", "p=b"]
     assert sorted((r["k"], r["p"]) for r in pt.read().collect()) == [
         (1, "a"), (2, "b"), (3, "b")
@@ -160,23 +160,6 @@ def test_partitioned_write_prunes_scan(spark, tmp_path):
     # pruning proof: only the matching partition's rows are read
     assert scan.count() == 50
     assert "2018" in plan
-
-
-def test_compact_reduces_files_preserves_rows(spark, tmp_path):
-    import glob
-
-    from sales_azure_data_engineer_project_spark.operators.versioned import (
-        VersionedTable,
-    )
-
-    vt = VersionedTable(spark, str(tmp_path / "c"))
-    vt.overwrite(spark.range(0, 1000).repartition(16))
-    v1_files = len(glob.glob(f"{vt._vdir(1)}/*.parquet"))
-    assert v1_files >= 8
-    v2 = vt.compact(target_partitions=1)
-    assert v2 == 2
-    assert len(glob.glob(f"{vt._vdir(2)}/*.parquet")) == 1
-    assert vt.read().count() == 1000
 
 
 def test_concurrent_write_detection(spark, tmp_path):
@@ -403,9 +386,9 @@ def test_data_skipping_manifest_prunes_files(spark, tmp_path):
 
 def test_lakehouse_maintenance_e2e(spark, tmp_path):
     """Cross-feature integration: incremental MERGEs build versions, a
-    range-clustered stats commit makes range reads file-pruned, compaction
-    shrinks files and vacuum drops history — with the table's content
-    provably unchanged at every step."""
+    range-clustered stats commit makes range reads file-pruned, and
+    vacuum drops history — with the table's content provably unchanged
+    at every step."""
     from sales_azure_data_engineer_project_spark.io import load_testdata
     from sales_azure_data_engineer_project_spark.operators.skipping import (
         pruned_files,
@@ -441,17 +424,8 @@ def test_lakehouse_maintenance_e2e(spark, tmp_path):
     expect = content(orders.filter(F.col("o_totalprice").between(100_000, 150_000)))
     assert got == expect and got
 
-    import os
-
-    v5 = vt.compact(target_partitions=1)
-    assert content(vt.read()) == full
-    files = [
-        f for f in os.listdir(vt._vdir(v5)) if f.endswith(".parquet")
-    ]
-    assert len(files) == 1
-
     dropped = vt.vacuum(keep_last=2)
-    assert dropped and max(dropped) <= v5 - 2
+    assert dropped and max(dropped) <= v4 - 2
     assert content(vt.read()) == full
 
 
@@ -605,5 +579,3 @@ def test_commit_restores_timestamp_conf_and_cleans_failed_staging(spark, tmp_pat
     assert vt.current_version() == 1
     staged = [n for n in os.listdir(vt.root) if n.startswith("._staged_")]
     assert staged == [], f"orphan staging dirs leaked: {staged}"
-
-
