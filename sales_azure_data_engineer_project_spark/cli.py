@@ -35,7 +35,7 @@ def _registry():
     return QUERIES
 
 
-def main(argv: list[str] | None = None) -> int:
+def main() -> int:
     ap = argparse.ArgumentParser(prog="sales_azure_data_engineer_project_spark")
     ap.add_argument("--root", help="zone root directory (pipeline mode)")
     ap.add_argument("--csv", help="raw sales CSV to load (pipeline mode)")
@@ -50,7 +50,7 @@ def main(argv: list[str] | None = None) -> int:
                     help="run one registered query against --sf-dir")
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01",
                     help="testdata directory for --run-query")
-    args = ap.parse_args(argv)
+    args = ap.parse_args()
 
     if args.list_queries:
         for name in _registry():

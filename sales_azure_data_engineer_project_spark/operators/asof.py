@@ -109,7 +109,6 @@ def asof_join_same_source(
     is_right,
     left_cols: list[str],
     payload: dict[str, str],
-    strict: bool = False,
     right_tiebreak: str | None = None,
 ) -> DataFrame:
     """:func:`asof_join` fast path when BOTH sides are row-subsets of
@@ -124,10 +123,11 @@ def asof_join_same_source(
 
     ``payload`` maps output column name → source column (payload values
     are taken from RIGHT rows; left rows carry NULL so the running
-    ``last IGNORE NULLS`` skips them).
+    ``last IGNORE NULLS`` skips them).  Ties follow ``asof_join``'s
+    default ``<=`` rule: at equal timestamps right rows sort first.
     """
-    right_side = F.lit(0 if not strict else 1)
-    left_side = F.lit(1 if not strict else 0)
+    right_side = F.lit(0)
+    left_side = F.lit(1)
     if right_tiebreak is not None:
         tie_type = df.schema[right_tiebreak].dataType
         tie = F.when(is_right, F.col(right_tiebreak)).otherwise(

@@ -38,9 +38,14 @@ __all__ = [
 ]
 
 
-def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles from a *bound tokens column*;
-    empty array when < n tokens.
+# Word n-gram length of every shingle (the oracles' ``_SHINGLE_SQL``
+# uses the same 3).
+_SHINGLE_N = 3
+
+
+def shingles_from_tokens(toks: Column) -> Column:
+    """Distinct word ``_SHINGLE_N``-gram shingles from a *bound tokens
+    column*; empty array when there are fewer tokens than that.
 
     Callers must materialize the token array as a real column first:
     referencing ``split(text)`` inline would re-run the regex split for
@@ -50,6 +55,7 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     (The <n guard matters: Spark's ``sequence(0, -1)`` counts *down*,
     unlike DuckDB's ``generate_series`` which returns empty.)
     """
+    n = _SHINGLE_N
     idx = F.sequence(F.lit(0), F.size(toks) - n)
     grams = F.transform(
         idx, lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j + 1) for j in range(n)])
@@ -71,7 +77,7 @@ def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def shingle_explode(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
+def shingle_explode(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, shingle) pairs, distinct shingles per document.
 
     Tokens are BOUND in a projection before the gram lambda (round-4:
@@ -81,7 +87,7 @@ def shingle_explode(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Da
     → 0.7 s for explode+hash at sf0.1)."""
     toks = df.select(F.col(id_col), F.split(F.col(text_col), TOKEN_RE).alias("__toks"))
     return toks.select(
-        F.col(id_col), F.explode(shingles_from_tokens(F.col("__toks"), n)).alias("sh")
+        F.col(id_col), F.explode(shingles_from_tokens(F.col("__toks"))).alias("sh")
     )
 
 
@@ -89,7 +95,6 @@ def _shingled_with_sig(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int,
     *,
     n_hashes: int = 8,
 ) -> DataFrame:
@@ -98,7 +103,7 @@ def _shingled_with_sig(
     (candidate verification) and the md5 minhash signature (banding).
     Docs with zero shingles are absent, exactly as in
     ``minhash_signatures``."""
-    sh = shingle_explode(df, id_col, text_col, n)
+    sh = shingle_explode(df, id_col, text_col)
     return (
         sh.groupBy(id_col)
         .agg(
@@ -125,16 +130,13 @@ def minhash_bands(
     *,
     n_hashes: int = 8,
     band_size: int = 4,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Banded MinHash signatures: one row per (id, band_idx, band_sig).
 
     hash_i(doc) = min over shingles of md5(i || ':' || shingle) —
     deterministic, engine-portable (lexicographic min over hex).
     """
-    sig = minhash_signatures(
-        df, id_col, text_col, n_hashes=n_hashes, shingle_n=shingle_n
-    )
+    sig = minhash_signatures(df, id_col, text_col, n_hashes=n_hashes)
     return _bands_from_sig(sig, id_col, n_hashes=n_hashes, band_size=band_size)
 
 
@@ -144,7 +146,6 @@ def minhash_signatures(
     text_col: str,
     *,
     n_hashes: int = 8,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Per-doc minhash signature columns (h0..h{n-1}) — the
     constant-size-per-doc sketch the banding, the estimator
@@ -176,7 +177,7 @@ def minhash_signatures(
     What it buys at scale: the corpus-proportional signature cache and
     the banded-join shuffle halve (16 B vs 32 B + string overhead per
     value)."""
-    sh = shingle_explode(df, id_col, text_col, shingle_n)
+    sh = shingle_explode(df, id_col, text_col)
     return sh.groupBy(id_col).agg(
         *[
             F.min(
@@ -255,7 +256,6 @@ def minhash_verified_pairs(
     *,
     n_hashes: int = 8,
     band_size: int = 4,
-    shingle_n: int = 3,
     min_permille: int = 300,
 ) -> DataFrame:
     """Near-dup pairs via LSH candidates + exact-Jaccard verification.
@@ -287,9 +287,7 @@ def minhash_verified_pairs(
             f"minhash_verified_pairs requires an integral id column; "
             f"{id_col!r} is {id_type} — hash or index it to BIGINT first"
         )
-    shingled = _shingled_with_sig(
-        df, id_col, text_col, shingle_n, n_hashes=n_hashes
-    )
+    shingled = _shingled_with_sig(df, id_col, text_col, n_hashes=n_hashes)
     bands = _bands_from_sig(shingled, id_col, n_hashes=n_hashes, band_size=band_size)
     cand = lsh_candidate_pairs(bands, id_col).select("id_a", "id_b")
     # Verification joins: candidates ≪ corpus, so hand both joins to

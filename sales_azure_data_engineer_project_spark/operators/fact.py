@@ -20,8 +20,6 @@ Scale notes:
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -33,7 +31,6 @@ __all__ = ["build_fact", "aggregate_to_grain"]
 def build_fact(
     silver: DataFrame,
     dims: dict[str, tuple[DataFrame, DimensionSpec]],
-    measures: Iterable[str] = ("Revenue", "Units_Sold", "Rev_Per_Unit"),
 ) -> DataFrame:
     """Replace natural keys with surrogate keys via broadcast left joins.
 
@@ -50,22 +47,22 @@ def build_fact(
     # Case-insensitive measure resolution (hazard H5: the reference selects
     # Rev_Per_Unit against silver's Rev_Per_unit at 4_fact:50).
     lower_map = {c.lower(): c for c in out.columns}
-    proj = [F.col(lower_map[m.lower()]).alias(m) for m in measures]
+    proj = [
+        F.col(lower_map[m.lower()]).alias(m)
+        for m in ("Revenue", "Units_Sold", "Rev_Per_Unit")
+    ]
     return out.select(*proj, *key_cols)
 
 
-def aggregate_to_grain(
-    fact: DataFrame,
-    grain: list[str],
-    sum_measures: Iterable[str] = ("Revenue", "Units_Sold"),
-) -> DataFrame:
+def aggregate_to_grain(fact: DataFrame, grain: list[str]) -> DataFrame:
     """Collapse the fact to its merge grain (hazard H4 resolution).
 
     Re-derives ratio measures after summing (sum(Revenue)/sum(Units)),
     which is the only grain-consistent definition of Rev_Per_Unit.
     """
-    aggs = [F.sum(m).alias(m) for m in sum_measures]
-    out = fact.groupBy(*grain).agg(*aggs)
+    out = fact.groupBy(*grain).agg(
+        F.sum("Revenue").alias("Revenue"), F.sum("Units_Sold").alias("Units_Sold")
+    )
     return out.withColumn(
         "Rev_Per_Unit", F.try_divide(F.col("Revenue"), F.col("Units_Sold"))
     ).select("Revenue", "Units_Sold", "Rev_Per_Unit", *grain)

@@ -33,19 +33,19 @@ from pyspark.sql import functions as F
 
 __all__ = ["connected_components"]
 
+# Rounds run at most.  A label travels one hop per round, so in a
+# component of diameter above this some nodes keep a label that is not
+# the component's least id.
+_MAX_ROUNDS = 25
 
-def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    *,
-    max_iter: int = 25,
-) -> DataFrame:
+
+def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Label every node with min(id) of its connected component.
 
     ``nodes``: one column ``id`` (isolated nodes allowed).
     ``edges``: undirected ``(src, dst)`` pairs (one direction suffices;
     symmetrized here).  Returns (id, component) with component = least
-    member id.
+    member id, for components of diameter up to ``_MAX_ROUNDS``.
     """
     # persist the edge list: it is re-joined EVERY round, and without
     # this the entire upstream lineage (for dedup clustering, the whole
@@ -124,7 +124,7 @@ def connected_components(
         # propagation round past the fixpoint — a wash locally and a
         # strict loss at scale, where one extra full-shuffle round costs
         # far more than one driver action; rejected).
-        for _ in range(max_iter):
+        for _ in range(_MAX_ROUNDS):
             new_labels = one_round(labels).localCheckpoint(eager=False)
             # one action per round: materializes the checkpoint AND
             # returns the convergence scalar

@@ -31,7 +31,6 @@ __all__ = [
     "matches",
     "references",
     "check",
-    "QualityError",
 ]
 
 
@@ -86,19 +85,10 @@ def references(dim: DataFrame, fk: str) -> Expectation:
     return Expectation(f"references({fk})", runner=run)
 
 
-class QualityError(AssertionError):
-    def __init__(self, report: dict[str, int]):
-        self.report = report
-        super().__init__(f"data-quality violations: {report}")
-
-
-def check(
-    df: DataFrame, expectations: list[Expectation], *, fail: bool = False
-) -> dict[str, int]:
+def check(df: DataFrame, expectations: list[Expectation]) -> dict[str, int]:
     """Evaluate expectations; returns {name: violation_count}.
 
-    All row-local expectations share ONE aggregate job.  ``fail=True``
-    raises :class:`QualityError` when any count is non-zero.
+    All row-local expectations share ONE aggregate job.
     """
     report: dict[str, int] = {}
     row_local = [e for e in expectations if e.violation_col is not None]
@@ -110,6 +100,4 @@ def check(
     for e in expectations:
         if e.runner is not None:
             report[e.name] = e.runner(df)
-    if fail and any(v > 0 for v in report.values()):
-        raise QualityError(report)
     return report

@@ -36,6 +36,10 @@ __all__ = [
     "sign_bucket",
 ]
 
+# The column every vector frame carries its vector in (the corpus'
+# ``embeddings`` table).
+_VEC_COL = "embedding"
+
 
 def as_double_vec(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -47,8 +51,8 @@ def dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    v = as_double_vec(vec_col)
+def with_norm(df: DataFrame) -> DataFrame:
+    v = as_double_vec(_VEC_COL)
     return df.withColumn("_v", v).withColumn("_norm", F.sqrt(dot(F.col("_v"), F.col("_v"))))
 
 
@@ -56,7 +60,6 @@ def cosine_topk(
     vectors: DataFrame,
     queries: DataFrame,
     *,
-    vec_col: str = "embedding",
     k: int = 10,
 ) -> DataFrame:
     """Exact top-k neighbors per query by cosine similarity.
@@ -64,10 +67,10 @@ def cosine_topk(
     Output: (query_id, neighbor_id, cos_sim double, rk int), self-pairs
     excluded, ties broken by neighbor id.
     """
-    cand = with_norm(vectors, vec_col).select(
+    cand = with_norm(vectors).select(
         F.col("vec_id").alias("neighbor_id"), F.col("_v").alias("cv"), F.col("_norm").alias("cn")
     )
-    q = with_norm(queries, vec_col).select(
+    q = with_norm(queries).select(
         F.col("vec_id").alias("query_id"), F.col("_v").alias("qv"), F.col("_norm").alias("qn")
     )
     scored = (
@@ -110,18 +113,16 @@ def sq8_quant_expr(v: Column) -> Column:
     )
 
 
-def sq8_stats(df: DataFrame, *, vec_col: str = "embedding") -> DataFrame:
+def sq8_stats(df: DataFrame) -> DataFrame:
     """Global (mn, mx) range aggregate for SQ8 — one tiny broadcastable
     frame."""
-    v = as_double_vec(vec_col)
+    v = as_double_vec(_VEC_COL)
     return df.select(
         F.min(F.array_min(v)).alias("mn"), F.max(F.array_max(v)).alias("mx")
     )
 
 
-def sq8_codes(
-    df: DataFrame, *, vec_col: str = "embedding"
-) -> DataFrame:
+def sq8_codes(df: DataFrame) -> DataFrame:
     """Scalar-quantize vectors to 8-bit codes over the global value range.
 
     The compression tier of production ANN (FAISS's SQ8): each dimension
@@ -134,19 +135,17 @@ def sq8_codes(
 
     Output: (id, codes array<int>).
     """
-    return df.crossJoin(F.broadcast(sq8_stats(df, vec_col=vec_col))).select(
-        F.col("vec_id"), sq8_quant_expr(as_double_vec(vec_col)).alias("codes")
+    return df.crossJoin(F.broadcast(sq8_stats(df))).select(
+        F.col("vec_id"), sq8_quant_expr(as_double_vec(_VEC_COL)).alias("codes")
     )
 
 
 def pq_fit_codes(
     df: DataFrame,
     *,
-    vec_col: str = "embedding",
     m: int = 4,
     k: int = 16,
     max_iter: int = 5,
-    tol: float = 0.0,
 ) -> tuple[DataFrame, list[list[list[float]]]]:
     """Product quantization (FAISS ``PQ``): split each vector into ``m``
     subvectors, k-means each subspace to ``k`` centroids, store each
@@ -164,19 +163,17 @@ def pq_fit_codes(
     m=4, iters=3).  Seeds = subvectors of the first ``k`` vectors by id
     (TakeOrdered, no full sort); encoding is one chained
     argmin-assignment plan over the SQL fold tier (bitwise equal to the
-    Arrow tier — see kmeans module docstring).  ``tol=0.0`` default:
-    movement < 0 is never true, so EXACTLY ``max_iter`` updates run — a
-    replayable iteration count is what lets an unrolled SQL oracle
-    reproduce the codebooks.  Returns (codes frame: (id, c0..c{m-1}),
+    Arrow tier — see kmeans module docstring).  EXACTLY ``max_iter``
+    updates run, with no early stop on convergence — a replayable
+    iteration count is what lets an unrolled SQL oracle reproduce the
+    codebooks.  Returns (codes frame: (id, c0..c{m-1}),
     codebooks[m][k][subdim])."""
-    import math
-
     import numpy as np
     import pandas as pd
 
     from .kmeans import _dists_fold_order, assign_clusters
 
-    head = df.orderBy("vec_id").limit(k).select(as_double_vec(vec_col).alias("v")).collect()
+    head = df.orderBy("vec_id").limit(k).select(as_double_vec(_VEC_COL).alias("v")).collect()
     dim = len(head[0]["v"])
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -185,7 +182,7 @@ def pq_fit_codes(
     # ONE persisted projection feeds every iteration AND the final
     # encode — unpersisted, each scan would re-read parquet and re-run
     # the double cast (measured 8.2 s → 4.2 s at sf0.1 for m=4, k=16).
-    base = df.select(F.col("vec_id"), as_double_vec(vec_col).alias("_v")).transform(tracked_persist)
+    base = df.select(F.col("vec_id"), as_double_vec(_VEC_COL).alias("_v")).transform(tracked_persist)
     codebooks: list[list[list[float]]] = [
         [list(r["v"][j * subdim : (j + 1) * subdim]) for r in head]
         for j in range(m)
@@ -217,15 +214,10 @@ def pq_fit_codes(
             j, c = r["j"], r["c"]
             counts[j][c] += r["n"]
             acc[j][c] = [a + x for a, x in zip(acc[j][c], r["s"])]
-        movement = 0.0
         for j in range(m):
             for c in range(k):
                 if counts[j][c]:
-                    new = [s / counts[j][c] for s in acc[j][c]]
-                    movement = max(movement, math.dist(codebooks[j][c], new))
-                    codebooks[j][c] = new
-        if movement < tol:
-            break
+                    codebooks[j][c] = [s / counts[j][c] for s in acc[j][c]]
 
     coded = base
     for j in range(m):
@@ -243,7 +235,6 @@ def pq_adc_topk(
     codebooks: list[list[list[float]]],
     queries: DataFrame,
     *,
-    vec_col: str = "embedding",
     k_neighbors: int = 5,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes: the query stays
@@ -256,7 +247,7 @@ def pq_adc_topk(
     Output: (query_id, neighbor_id, approx_ip, rk)."""
     m = len(codebooks)
     q_rows = queries.select(
-        F.col("vec_id").alias("qid"), as_double_vec(vec_col).alias("v")
+        F.col("vec_id").alias("qid"), as_double_vec(_VEC_COL).alias("v")
     ).collect()
     spark = codes.sparkSession
     subdim = len(codebooks[0][0])

@@ -8,7 +8,6 @@ Layout:
       v=1/  v=2/  ...      immutable version directories (parquet)
         _schema.json        the committed frame's schema (read without inference)
         _manifest.json      optional per-file min/max (``stats_columns``)
-        col=value/          hive partition dirs when the table has ``partition_by``
       _VERSION              text file holding the current version number
 
 Writers stage a full new version directory, then flip ``_VERSION`` with
@@ -21,29 +20,18 @@ rows, so the first load reads (and merges into) an empty table instead
 of taking a code path of its own.  A table never created has no
 version: ``read`` returns ``None``, and ``merge`` creates it first.
 
-A partitioned table's MERGE reads only the partitions its source
-touches (an IN-list the scan turns into ``PartitionFilters``), writes
-the merged slice, and hardlinks every file of the base version's
-untouched partition dirs into the staged version before it publishes.
-A version therefore stays a self-contained directory — read, time
-travel, vacuum and conflict detection are the same as for an
-unpartitioned table — while the bytes a merge writes scale with the
-partitions it touches, not the table.
-
-Scale note: an unpartitioned MERGE rewrites the whole table as one new
-version, the same worst case as Delta's.  Vacuuming old versions is the
-retention knob; a hardlinked file's bytes are freed only when the last
-version holding it is vacuumed.
+Scale note: a MERGE rewrites the whole table as one new version, the
+same worst case as Delta's.  Vacuuming old versions is the retention
+knob.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import tempfile
 
-from pyspark.sql import Column, DataFrame, DataFrameReader, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -59,13 +47,11 @@ class ConcurrentWriteError(RuntimeError):
 
 
 class VersionedTable:
-    """A table of immutable version dirs under ``root``; ``partition_by``
-    names the hive partition columns every commit writes."""
+    """A table of immutable version dirs under ``root``."""
 
-    def __init__(self, spark: SparkSession, root: str, partition_by: tuple[str, ...] = ()):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.partition_by = list(partition_by)
         os.makedirs(root, exist_ok=True)
 
     @property
@@ -165,7 +151,6 @@ class VersionedTable:
         *,
         base_version: int | None = None,
         stats_columns: list[str] | None = None,
-        carry_from: str | None = None,
     ) -> int:
         """Commit a new version.  ``base_version`` enables optimistic
         concurrency: if another writer committed since the caller read
@@ -181,13 +166,7 @@ class VersionedTable:
         writers could interleave into the SAME directory; with
         rename-publish the loser's data never becomes visible and it
         gets ConcurrentWriteError instead.  A crashed writer leaves only
-        an invisible ``._staged_*`` dir (removed by ``vacuum``).
-
-        ``carry_from`` is a version dir whose partitions ``df`` does not
-        hold: their files are hardlinked into the staged version."""
-        if self.partition_by and stats_columns:
-            # manifests list a version dir's top-level files only
-            raise ValueError("stats_columns needs an unpartitioned table")
+        an invisible ``._staged_*`` dir (removed by ``vacuum``)."""
         cur = self.current_version()
         if base_version is not None and cur != base_version:
             raise ConcurrentWriteError(
@@ -215,14 +194,12 @@ class VersionedTable:
             prev_tt = self.spark.conf.get(tt_key, None)
             self.spark.conf.set(tt_key, "TIMESTAMP_MICROS")
             try:
-                df.write.mode("overwrite").partitionBy(*self.partition_by).parquet(staged)
+                df.write.mode("overwrite").parquet(staged)
             finally:
                 if prev_tt is None:
                     self.spark.conf.unset(tt_key)
                 else:
                     self.spark.conf.set(tt_key, prev_tt)
-            if carry_from is not None:
-                _link_untouched_partitions(carry_from, staged, len(self.partition_by))
             if stats_columns:
                 # footer-only stats for THIS commit's files, written
                 # inside the staged dir so the manifest publishes
@@ -286,31 +263,13 @@ class VersionedTable:
         so no version is published, and no separate job runs before it.
         A table never created is first created with ``source``'s schema,
         and the merge commits into that empty version 0, as a pipeline's
-        first load does.
-
-        On a partitioned table the merge reads, and rewrites, only the
-        partitions ``source`` touches; one collect of the source's
-        distinct partition values builds the target's partition filter.
-        The other partitions carry forward as hardlinks.  Every
-        partition column must be a merge key: otherwise a source row
-        could move a key to another partition while the untouched one
-        kept the old row."""
-        if not set(self.partition_by) <= set(keys):
-            raise ValueError(
-                f"partition columns {self.partition_by} must all be merge keys {keys}"
-            )
+        first load does."""
         base = self.current_version()
         target = self.read(base)
         if target is None:
             self.create(source.schema)
             target = self.read(base)
-        carry_from = None
-        if self.partition_by:
-            touched = source.select(*self.partition_by).distinct().collect()
-            target = target.filter(_in_partitions(self.partition_by, touched))
-            carry_from = self._vdir(base)
-        merged = merge_upsert(target, source, keys)
-        return self._commit(merged, base_version=base, carry_from=carry_from)
+        return self._commit(merge_upsert(target, source, keys), base_version=base)
 
     def vacuum(self, keep_last: int = 2) -> list[int]:
         """Drop version dirs older than the last ``keep_last``.  The
@@ -333,32 +292,3 @@ class VersionedTable:
                 shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
         return sorted(dropped)
 
-
-def _in_partitions(cols: list[str], touched: list) -> Column:
-    """Partition filter keeping every partition whose values appear in
-    the ``touched`` rows, column by column (a superset for several
-    columns; the merge rewrites whatever it reads).  A NULL partition
-    value matches ``IS NULL``: ``IN`` never matches it."""
-    cond = F.lit(True)
-    for i, c in enumerate(cols):
-        values = {row[i] for row in touched}
-        hit = F.col(c).isin([v for v in values if v is not None])
-        if None in values:
-            hit = hit | F.col(c).isNull()
-        cond = cond & hit
-    return cond
-
-
-def _link_untouched_partitions(base: str, staged: str, depth: int) -> None:
-    """Hardlink into ``staged`` every file of each leaf partition dir of
-    ``base`` that the staged write did not produce.  A partition the
-    merge read has at least one row, and keeps it, so it is always
-    rewritten: a leaf missing from ``staged`` is one the merge never
-    touched."""
-    for part in glob.glob(os.path.join(glob.escape(base), *["*=*"] * depth)):
-        dst = os.path.join(staged, os.path.relpath(part, base))
-        if not os.path.isdir(part) or os.path.isdir(dst):
-            continue
-        os.makedirs(dst)
-        for name in os.listdir(part):
-            os.link(os.path.join(part, name), os.path.join(dst, name))

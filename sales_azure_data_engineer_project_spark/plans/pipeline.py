@@ -23,7 +23,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import PathCatalog
 from ..io import read_csv, read_parquet, write_parquet
 from ..operators.dimensions import DimensionSpec, build_scd1_dimension
 from ..operators.fact import aggregate_to_grain
@@ -131,8 +130,7 @@ class SalesPipeline:
         self.bronze = os.path.join(root, "bronze")
         self.silver = os.path.join(root, "silver", "carsales")
         self.gold = os.path.join(root, "gold")
-        self.catalog = PathCatalog(spark, root)
-        self.catalog.create_schema("gold")  # S8 (`1_db_Notebook.py:24,29`)
+        os.makedirs(self.gold, exist_ok=True)  # S8 CREATE SCHEMA (`1_db_Notebook.py:24,29`)
 
     # -- zone paths -------------------------------------------------------
     def gold_path(self, table: str) -> str:
@@ -141,8 +139,8 @@ class SalesPipeline:
     def gold_table(self, table: str) -> VersionedTable:
         return VersionedTable(self.spark, self.gold_path(table))
 
-    def read_gold(self, table: str, version: int | None = None) -> DataFrame | None:
-        return self.gold_table(table).read(version)
+    def read_gold(self, table: str) -> DataFrame | None:
+        return self.gold_table(table).read()
 
     def _gold_to_write(self, table: str) -> VersionedTable:
         """Gold ``table``, created empty first (version 0) if it never
@@ -189,8 +187,10 @@ class SalesPipeline:
         silver = self.build_silver()
         dims = self.build_dimensions(silver)
         gold = {**dims, "factsales": self.build_fact(silver, dims)}
-        for t, df in gold.items():  # S3: SQL-addressable gold
-            df.createOrReplaceTempView(self.catalog.view_name("gold", t))
+        # S3: SQL-addressable gold; the reference's ``catalog.gold.<t>``
+        # is the temp view ``gold_<t>`` (one catalog, one schema)
+        for t, df in gold.items():
+            df.createOrReplaceTempView(f"gold_{t}")
         return {**gold, "silver": silver}
 
     # -- data-quality surface ---------------------------------------------
@@ -225,11 +225,10 @@ class SalesPipeline:
         return report
 
     # -- reference's one analytics query ---------------------------------
-    def units_by_branch_year(self, silver: DataFrame | None = None) -> DataFrame:
+    def units_by_branch_year(self) -> DataFrame:
         """`2_Silver_Notebook.py:63`: groupBy(BranchName, Year).sum(Units)
         sorted by Year asc, total desc (A1 + O1)."""
-        if silver is None:
-            silver = read_parquet(self.spark, self.silver, schema=SILVER_SALES_SCHEMA)
+        silver = read_parquet(self.spark, self.silver, schema=SILVER_SALES_SCHEMA)
         return (
             silver.groupBy("BranchName", "Year")
             .agg(F.sum("Units_Sold").alias("Total_Units_Sold"))

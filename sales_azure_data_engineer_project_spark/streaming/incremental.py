@@ -35,8 +35,6 @@ def stream_incremental_merge(
     keys: list[str],
     schema: T.StructType,
     checkpoint_dir: str,
-    *,
-    partition_by: tuple[str, ...] = (),
 ) -> None:
     """Drain all available files from ``source_dir`` into the
     ``VersionedTable`` at ``target_path`` with SCD-1 MERGE semantics,
@@ -44,10 +42,9 @@ def stream_incremental_merge(
     commits one table version; the first creates the table's empty
     version 0 before it (``VersionedTable.merge``), so it commits v1.
 
-    ``partition_by`` partitions the table: a micro-batch then rewrites
-    only the partitions it touches (``VersionedTable.merge``).  The
-    merge is idempotent on the keys, so a batch replayed after a crash
-    between its commit and the checkpoint converges to the same state.
+    The merge is idempotent on the keys, so a batch replayed after a
+    crash between its commit and the checkpoint converges to the same
+    state.
     A micro-batch holding two rows for one key fails the drain (the
     merge window's H4 check) and commits nothing.
 
@@ -60,7 +57,7 @@ def stream_incremental_merge(
     def upsert_batch(batch_df: DataFrame, _epoch: int) -> None:
         if batch_df.isEmpty():
             return
-        table = VersionedTable(batch_df.sparkSession, target_path, partition_by)
+        table = VersionedTable(batch_df.sparkSession, target_path)
         table.merge(batch_df, keys)
 
     (

@@ -8,21 +8,8 @@ import os
 import pytest
 from conftest import INITIAL_ROWS, SF_SMOKE, count_jobs, write_sales_csv
 
-from sales_azure_data_engineer_project_spark.catalog import PathCatalog
 from sales_azure_data_engineer_project_spark.plans import SalesPipeline
 from sales_azure_data_engineer_project_spark.schemas import TESTDATA_SCHEMAS, TESTDATA_TABLES
-
-
-def test_catalog_lifecycle(spark, tmp_path):
-    cat = PathCatalog(spark, str(tmp_path))
-    cat.create_schema("gold")
-    assert not cat.table_exists("gold", "t")
-    df = spark.createDataFrame([(1, "a")], ["k", "v"])
-    df.write.parquet(cat.path("gold", "t"))
-    assert cat.table_exists("gold", "t")
-    cat.register("gold", "t")
-    assert spark.sql("SELECT v FROM gold_t").first()["v"] == "a"
-    assert cat.read("gold", "missing") is None
 
 
 def test_pipeline_registers_gold_views(spark, tmp_path):

@@ -114,7 +114,7 @@ def test_gold_time_travel_across_runs(spark, tmp_path):
     assert cur["BR0001"] == "Chandler BMW RENAMED" and "XYZ9726" in cur
     # time travel: initial-load snapshot unchanged
     old = {r["Branch_ID"]: r["BranchName"] for r in
-           pipe.read_gold("dim_branch", version=v_before).collect()}
+           pipe.gold_table("dim_branch").read(v_before).collect()}
     assert old["BR0001"] == "Chandler BMW" and "XYZ9726" not in old
 
 

@@ -89,22 +89,6 @@ def test_quality_expectations(spark):
     assert report["unique(k)"] == 1
     assert report["references(k)"] == 2  # the two k=3 rows are orphans
 
-    with _raises_quality():
-        Q.check(df, [Q.not_null("branch")], fail=True)
-
-
-class _raises_quality:
-    def __enter__(self):
-        return self
-
-    def __exit__(self, exc_type, exc, tb):
-        from sales_azure_data_engineer_project_spark.operators.quality import (
-            QualityError,
-        )
-
-        assert exc_type is QualityError, "expected QualityError"
-        return True
-
 
 def test_kmeans_separates_obvious_clusters(spark):
     from sales_azure_data_engineer_project_spark.operators.kmeans import (

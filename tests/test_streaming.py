@@ -116,114 +116,6 @@ def test_windowed_event_counts_streaming(spark, tmp_path):
     assert rows[("2024-01-01 03:00:00", "click")] == 1
 
 
-def _partition_files(table: VersionedTable, version: int) -> dict[str, dict[str, int]]:
-    """Partition dir -> {parquet file name: inode} of one table version."""
-    vdir = table._vdir(version)
-    return {
-        part: {
-            f: os.stat(os.path.join(vdir, part, f)).st_ino
-            for f in os.listdir(os.path.join(vdir, part))
-            if f.endswith(".parquet")
-        }
-        for part in os.listdir(vdir)
-        if "=" in part
-    }
-
-
-def test_partitioned_merge_bounded_rewrite(spark, tmp_path):
-    """Partition-pruned MERGE: only partitions present in the source are
-    rewritten; the new version's untouched partition dirs hold the base
-    version's files (hardlinks: the same inodes)."""
-    table = VersionedTable(spark, str(tmp_path / "fact"), partition_by=("pday",))
-    schema = "k long, pday string, v string"
-    initial = spark.createDataFrame(
-        [(1, "A", "a1"), (2, "B", "b1"), (3, "C", "c1"), (5, None, "n1")], schema
-    )
-    v1 = table.merge(initial, ["k", "pday"])
-    files_before = _partition_files(table, v1)
-    null_part = "pday=__HIVE_DEFAULT_PARTITION__"
-    assert sorted(files_before) == ["pday=A", "pday=B", "pday=C", null_part]
-
-    # merge touches only B: update k=2, insert k=4
-    batch = spark.createDataFrame([(2, "B", "b2"), (4, "B", "b-new")], schema)
-    v2 = table.merge(batch, ["k", "pday"])
-    files_after = _partition_files(table, v2)
-    rewritten = sorted(p for p in files_after if files_after[p] != files_before[p])
-    assert rewritten == ["pday=B"]
-
-    got = {(r["k"], r["pday"]): r["v"] for r in table.read().collect()}
-    assert got == {
-        (1, "A"): "a1",
-        (2, "B"): "b2",
-        (3, "C"): "c1",
-        (4, "B"): "b-new",
-        (5, None): "n1",
-    }
-    # A and C were not rewritten (same physical files); B's files are new
-    for p in ("pday=A", "pday=C"):
-        assert files_after[p] == files_before[p] and files_after[p]
-    assert not set(files_after["pday=B"].values()) & set(files_before["pday=B"].values())
-
-    # a NULL partition value is touched like any other: the merge reads
-    # that partition too, so its old rows stay
-    table.merge(spark.createDataFrame([(6, None, "n2")], schema), ["k", "pday"])
-    got = {(r["k"], r["pday"]): r["v"] for r in table.read().collect()}
-    assert got[(5, None)] == "n1" and got[(6, None)] == "n2" and len(got) == 6
-
-
-def test_stream_incremental_merge_partitioned(spark, tmp_path):
-    """Streaming foreachBatch ingest into a partitioned gold table:
-    each drained batch rewrites only the partitions it touches, replays
-    converge (exactly-once via checkpoint + idempotent merge)."""
-    src = str(tmp_path / "pm_src")
-    tgt = str(tmp_path / "pm_tgt")
-    ckpt = str(tmp_path / "pm_ckpt")
-    os.makedirs(src)
-    schema = T.StructType(
-        [
-            T.StructField("k", T.LongType()),
-            T.StructField("pday", T.StringType()),
-            T.StructField("v", T.StringType()),
-        ]
-    )
-    table = VersionedTable(spark, tgt)
-
-    def run():
-        stream_incremental_merge(
-            spark, src, tgt, ["k", "pday"], schema, ckpt, partition_by=("pday",)
-        )
-
-    spark.createDataFrame(
-        [(1, "A", "a1"), (2, "B", "b1"), (3, "C", "c1")], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    run()
-    assert {
-        (r["k"], r["pday"], r["v"]) for r in table.read().collect()
-    } == {(1, "A", "a1"), (2, "B", "b1"), (3, "C", "c1")}
-
-    files_a = _partition_files(table, table.current_version())["pday=A"]
-
-    # second drop touches only B; A's physical files must survive
-    spark.createDataFrame([(2, "B", "b2"), (4, "B", "b-new")], schema).coalesce(
-        1
-    ).write.mode("append").parquet(src)
-    run()
-    got = {(r["k"], r["pday"]): r["v"] for r in table.read().collect()}
-    assert got == {
-        (1, "A"): "a1",
-        (2, "B"): "b2",
-        (3, "C"): "c1",
-        (4, "B"): "b-new",
-    }
-    assert _partition_files(table, table.current_version())["pday=A"] == files_a
-
-    # no new files: checkpoint makes the re-run a no-op
-    run()
-    assert {
-        (r["k"], r["pday"]): r["v"] for r in table.read().collect()
-    } == got
-
-
 def test_hopping_window_stream_equals_registered_batch_twin(spark, tmp_path):
     """The registered events_hopping_window_rate (batch, oracle-gated)
     and the streaming windowed_event_counts with the same 15m/5m

@@ -130,22 +130,6 @@ def test_read_raises_when_the_current_version_dir_is_gone(spark, tmp_path):
         vt.read_where("x", 0, 1)
     assert vt.read(version=1).first()["x"] == 0
 
-    # a partitioned merge hardlinks the base version's untouched
-    # partitions: dropping that version leaves every row readable, and
-    # the current version keeps the partition dirs
-    import os
-
-    pt = VersionedTable(spark, str(tmp_path / "p"), partition_by=("p",))
-    pt.merge(spark.createDataFrame([(1, "a"), (2, "b")], "k long, p string"), ["k", "p"])
-    pt.merge(spark.createDataFrame([(3, "b")], "k long, p string"), ["k", "p"])
-    assert pt.vacuum(keep_last=1) == [0, 1]
-    assert sorted(r["k"] for r in pt.read().collect()) == [1, 2, 3]
-    v = pt.current_version()
-    assert sorted(n for n in os.listdir(pt._vdir(v)) if "=" in n) == ["p=a", "p=b"]
-    assert sorted((r["k"], r["p"]) for r in pt.read().collect()) == [
-        (1, "a"), (2, "b"), (3, "b")
-    ]
-
 
 def test_partitioned_write_prunes_scan(spark, tmp_path):
     df = spark.createDataFrame(
@@ -237,56 +221,6 @@ def test_versioned_parallel_writers_serialize(spark, tmp_path):
         assert snap is not None and snap.count() >= 1
     # losers' staged dirs were cleaned up on the spot
     assert not [n for n in os.listdir(root) if n.startswith("._staged_")]
-
-
-def test_merge_partitioned_target_scan_is_pruned(spark, tmp_path, monkeypatch):
-    """The partition-pruned MERGE's target read carries the IN-list in
-    PartitionFilters — the scan physically skips untouched partitions."""
-    import re
-
-    vt = VersionedTable(spark, str(tmp_path / "pmfact"), partition_by=("pday",))
-    schema = "k long, pday string, v string"
-    initial = spark.createDataFrame(
-        [(i, d, f"{d}{i}") for d in "ABCDE" for i in range(20)], schema
-    )
-    vt.merge(initial, ["k", "pday"])
-
-    committed = {}
-    commit = VersionedTable._commit
-
-    def spy(self, df, **kw):
-        committed["merged"] = df
-        return commit(self, df, **kw)
-
-    monkeypatch.setattr(VersionedTable, "_commit", spy)
-    vt.merge(spark.createDataFrame([(0, "B", "B0-new")], schema), ["k", "pday"])
-    merged = committed["merged"]
-    plan = merged._jdf.queryExecution().executedPlan().toString()
-    assert re.search(r"PartitionFilters: \[[^\]]*pday", plan)
-    assert merged.count() == 20  # one partition's rows, not 100
-    assert vt.read().count() == 100
-
-
-def test_partitioned_merge_rejects_partition_column_outside_keys(spark, tmp_path):
-    """A partition column that is not a merge key would let a source row
-    move its key to another partition while the untouched partition kept
-    the old row: the merge refuses before it stages anything.  So does a
-    partitioned commit asked for file statistics."""
-    import os
-
-    import pytest
-
-    root = tmp_path / "fact"
-    vt = VersionedTable(spark, str(root), partition_by=("pday",))
-    schema = "k long, pday string, v string"
-    vt.merge(spark.createDataFrame([(1, "A", "a1")], schema), ["k", "pday"])
-    with pytest.raises(ValueError, match="must all be merge keys"):
-        vt.merge(spark.createDataFrame([(1, "B", "a2")], schema), ["k"])
-    # file manifests cover a version dir's top-level files only
-    with pytest.raises(ValueError, match="unpartitioned"):
-        vt.overwrite(spark.createDataFrame([(1, "B", "a2")], schema), stats_columns=["k"])
-    assert vt.current_version() == 1
-    assert sorted(os.listdir(root)) == ["_VERSION", "v=0", "v=1"]
 
 
 def test_versioned_commit_skips_orphaned_version_dir(spark, tmp_path):
